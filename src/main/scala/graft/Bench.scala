@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: times every declared query on SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. AQE is on (runtime coalescing + skew handling);
@@ -30,17 +31,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to every core (the target harness runs local[32]); shuffle
     // partitions sized to match so small-SF stages don't over-split
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(
+      Harness.cpus(Runtime.getRuntime.availableProcessors()))
 
     // warm-up (untimed): JVM, codegen, parquet footers
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -64,31 +56,15 @@ object Bench {
     // the one Verify actually writes.
     // Failures surface as a -1.0 "timing" in the artifact (a crashed query
     // must not masquerade as a fast one) plus a stderr line. After the
-    // run, any persistent blocks the query created are released (outside
-    // the timed window) so they cannot pollute the queries that follow —
-    // r6's recorded q46/q47/q48 were 6–60× their isolated times from
-    // exactly that accumulation.
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val t0 = System.nanoTime()
-      val dt =
-        try {
-          fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
-          (System.nanoTime() - t0) / 1e9
-        }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] query failed: ${e.getMessage}")
-            -1.0
-        }
-      try {
-        (sc.getPersistentRDDs.keySet.toSet -- before)
-          .foreach(id => sc.getPersistentRDDs.get(id)
-            .foreach(_.unpersist(blocking = false)))
-      } catch { case _: Throwable => }
-      dt
-    }
+    // run, the persistent blocks the query created are released outside
+    // the timed window (Harness.releasing).
+    def time(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      Harness.releasing(spark, s"[bench] $name") {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
+        (System.nanoTime() - t0) / 1e9
+      }.getOrElse(-1.0)
     // Fixed-work calibration: ~1G rows of hash+sum, pure CPU, no IO — its
     // cost on a given machine is a constant, so an inflated calibration
     // flags a contention-polluted window post-hoc (r5's recorded numbers
@@ -163,15 +139,26 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
       Thread.sleep(5000)
-    } catch { case _: Throwable => }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] cache reset failed: ${e.getMessage}")
+    }
+    // One probe cell: a clean block-manager state, then the cell's JSON
+    // line printed and kept for bench_out.json. A probe is diagnostics —
+    // a failure is logged and never takes down the bench line.
+    def probe(name: String)(line: => String): Unit =
+      if (probeOn(name)) {
+        dropCaches()
+        Harness.releasing(spark, s"[bench] probe $name")(line)
+          .foreach { l => println(l); extraLines += l }
+      }
 
     calPoint()
 
     // 100×-scale geometry probe (full runs only): the same BVH kernels on a
     // 1.2M-cell grid vs the 12k oracle grid — per-row ns should be ~flat
     // (linear total cost, shuffle-free fused scans) if the design scales.
-    if (probeOn("geometry")) try {
-      dropCaches()
+    probe("geometry") {
       val cells = for {
         factor <- Seq(1, 100)
         (name, df) <- SparkEntry.geometryProbe(spark, factor).toSeq.sortBy(_._1)
@@ -184,12 +171,7 @@ object Bench {
         s"\"$name\":{\"sec_12k\":$t1,\"sec_1200k\":$t100," +
           s"\"ns_per_row_12k\":${t1 * 1e9 / n1},\"ns_per_row_1200k\":${t100 * 1e9 / n100}}"
       }.mkString("{", ",", "}")
-      val l = s"""{"metric":"geometry_scale_probe","probes_isolated":true,"cells_small":12000,"cells_large":1200000,"kernels":$perRow}"""
-      println(l); extraLines += l
-    } catch {
-      // the probe is diagnostics — never let it take down the bench line
-      case e: Throwable =>
-        System.err.println(s"geometry_scale_probe failed: ${e.getMessage}")
+      s"""{"metric":"geometry_scale_probe","probes_isolated":true,"cells_small":12000,"cells_large":1200000,"kernels":$perRow}"""
     }
 
     // 16×-scale dedup probe (full runs only): the corpus replicated with
@@ -197,14 +179,13 @@ object Bench {
     // structure, no cross-copy collisions). ratio_16x ≈ 16 certifies the
     // LSH / prefix-filter paths stay linear in corpus size; a quadratic
     // candidate join would show ≫16.
-    if (probeOn("dedup")) try {
+    probe("dedup") {
       // One dropCaches up front, then BOTH factors' ops are built before
       // any timing (corpora localCheckpointed, stores written — all
       // outside the timed windows). No dropCaches between factors: it
       // would unpersist factor 1's localCheckpointed corpus, whose
       // truncated lineage cannot recompute. The matrix then times in two
       // interleaved passes (see interleavedTimes).
-      dropCaches()
       val built = Seq(1, 16).map { f =>
         f -> SparkEntry.dedupProbe(spark, sfDir, f)
       }
@@ -228,11 +209,7 @@ object Bench {
         s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
           s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}$cand}"
       }.mkString("{", ",", "}")
-      val l = s"""{"metric":"dedup_scale_probe","probes_isolated":true,"factor":16,"interleaved_passes":2,"ops":$lines}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"dedup_scale_probe failed: ${e.getMessage}")
+      s"""{"metric":"dedup_scale_probe","probes_isolated":true,"factor":16,"interleaved_passes":2,"ops":$lines}"""
     }
 
     // 16×-scale sketch probe (full runs only): heavy hitters (Misra-Gries
@@ -243,8 +220,7 @@ object Bench {
     // the way a pre-built DataFrame would hide them. ratio_16x ≈ 16
     // certifies the sketch passes stay linear (bounded sketch state, no
     // vocabulary shuffle) while the corpus grows 16×.
-    if (probeOn("sketch")) try {
-      dropCaches()
+    probe("sketch") {
       val corpora = Seq(1, 16).map { f =>
         f -> SparkEntry.probeCorpus(spark, sfDir, f)
       }
@@ -274,11 +250,7 @@ object Bench {
         s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
           s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}}"
       }.mkString("{", ",", "}")
-      val l = s"""{"metric":"sketch_scale_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,"ops":$lines}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"sketch_scale_probe failed: ${e.getMessage}")
+      s"""{"metric":"sketch_scale_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,"ops":$lines}"""
     }
 
     // 16×-scale eval probe (full runs only): the eval harness operators
@@ -288,8 +260,7 @@ object Bench {
     // constant-size. ratio_16x in [~1, ~16] certifies it empirically, the
     // way the dedup/sketch ops are certified. Two interleaved passes; the
     // per-cell min also absorbs first-use JIT.
-    if (probeOn("eval")) try {
-      dropCaches()
+    probe("eval") {
       import org.apache.spark.sql.functions.{col, length, round}
       val corpora = Seq(1, 16).map { f =>
         f -> SparkEntry.probeCorpus(spark, sfDir, f)._1
@@ -331,11 +302,7 @@ object Bench {
         s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
           s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}}"
       }.mkString("{", ",", "}")
-      val l = s"""{"metric":"eval_scale_probe","probes_isolated":true,"factor":16,"interleaved_passes":2,"ops":$lines}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"eval_scale_probe failed: ${e.getMessage}")
+      s"""{"metric":"eval_scale_probe","probes_isolated":true,"factor":16,"interleaved_passes":2,"ops":$lines}"""
     }
 
     // r9 text/cluster/GD probe at 16× corpus: vocabDivergence (vocab-sized
@@ -344,8 +311,7 @@ object Bench {
     // top-N), clusterQuality (O(n·k) broadcast-centroid scoring over 16×
     // embeddings), logisticTrain (5 GD scans + gradient reduces). Same
     // two-interleaved-pass min-per-cell discipline as the dedup probe.
-    if (probeOn("text9")) try {
-      dropCaches()
+    probe("text9") {
       import org.apache.spark.sql.functions.{col, max, lit}
       val corpora = Seq(1, 16).map { f =>
         f -> SparkEntry.probeCorpus(spark, sfDir, f)._1
@@ -460,11 +426,7 @@ object Bench {
         s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
           s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}}"
       }.mkString("{", ",", "}")
-      val l = s"""{"metric":"text9_scale_probe","probes_isolated":true,"factor":16,"interleaved_passes":2,"ops":$lines}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"text9_scale_probe failed: ${e.getMessage}")
+      s"""{"metric":"text9_scale_probe","probes_isolated":true,"factor":16,"interleaved_passes":2,"ops":$lines}"""
     }
 
     // BPE kernel probe (full runs only): q75_bpe_train drifted 1.17→2.22 s
@@ -475,8 +437,7 @@ object Bench {
     // flat here while the in-suite number drifts ⇒ suite-JVM pressure
     // (codegen-cache/block-manager accumulation), not a kernel
     // regression; kernel slow here too ⇒ a real regression to fix.
-    if (probeOn("bpe")) try {
-      dropCaches()
+    probe("bpe") {
       val docs = Tables.load(spark, sfDir, "documents")
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.col("text"))
@@ -496,11 +457,7 @@ object Bench {
       val lines = cells.map { case (name, _) =>
         s"\"$name\":${times(name)}"
       }.mkString("{", ",", "}")
-      val l = s"""{"metric":"bpe_kernel_probe","probes_isolated":true,"num_merges":8,"warmup":true,"interleaved_passes":2,"ops":$lines}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"bpe_kernel_probe failed: ${e.getMessage}")
+      s"""{"metric":"bpe_kernel_probe","probes_isolated":true,"num_merges":8,"warmup":true,"interleaved_passes":2,"ops":$lines}"""
     }
 
     // keep-best kernel probe: q154_keep_best drifted 1.18→2.32 s r10→r11
@@ -512,8 +469,7 @@ object Bench {
     // attributable separately from the LSH and scorer stages. Kernel flat
     // here while the in-suite number drifts ⇒ suite-JVM/calibration noise;
     // slow here too ⇒ a real regression.
-    if (probeOn("keepbest")) try {
-      dropCaches()
+    probe("keepbest") {
       import org.apache.spark.sql.functions.{col, round => sround}
       val built = Seq(1, 16).map { f =>
         val (docs, _) = SparkEntry.probeCorpus(spark, sfDir, f)
@@ -533,14 +489,10 @@ object Bench {
       val (times, _) = interleavedTimes(cells)
       val pairCounts = built.map { case (f, (p, _)) => f -> p.count() }.toMap
       val (t1, t16) = (times((1, "canonical_by_score")), times((16, "canonical_by_score")))
-      val l = s"""{"metric":"keepbest_kernel_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,""" +
+      s"""{"metric":"keepbest_kernel_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,""" +
         s""""sec_1x":$t1,"sec_16x":$t16,"ratio_16x":${t16 / math.max(t1, 1e-9)},""" +
         s""""pairs_1x":${pairCounts(1)},"pairs_16x":${pairCounts(16)},""" +
         s""""note":"canonicalByScore alone on the q154 pair set; pairs grow ~16x by construction (replicated corpus)"}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"keepbest_kernel_probe failed: ${e.getMessage}")
     }
 
     // vocab-divergence kernel probe: q129 drifted 0.54→0.79 s r11→r12
@@ -553,8 +505,7 @@ object Bench {
     // the parquet scan and lang filter the in-suite q129 also pays.
     // Kernel flat here while the in-suite number drifts ⇒
     // suite-JVM/calibration noise; slow here too ⇒ a real regression.
-    if (probeOn("vocabdiv")) try {
-      dropCaches()
+    probe("vocabdiv") {
       import org.apache.spark.sql.functions.col
       val built = Seq(1, 16).map { f =>
         val (docs, _) = SparkEntry.probeCorpus(spark, sfDir, f)
@@ -572,13 +523,9 @@ object Bench {
       val (times, _) = interleavedTimes(cells)
       val (t1, t16) =
         (times((1, "vocab_divergence")), times((16, "vocab_divergence")))
-      val l = s"""{"metric":"vocabdiv_kernel_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,""" +
+      s"""{"metric":"vocabdiv_kernel_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,""" +
         s""""sec_1x":$t1,"sec_16x":$t16,"ratio_16x":${t16 / math.max(t1, 1e-9)},""" +
         s""""note":"vocabDivergence alone on pre-checkpointed en/non-en projections; the q129 watch item's attribution cell"}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"vocabdiv_kernel_probe failed: ${e.getMessage}")
     }
 
     // drift-gate fusion probe: driftReportWindowed's one-pass claim,
@@ -587,8 +534,7 @@ object Bench {
     // same pinned stream. Batch understates the win (streaming adds one
     // checkpointed state store per member); this cell grounds the batch
     // share of it.
-    if (probeOn("gate")) try {
-      dropCaches()
+    probe("gate") {
       import org.apache.spark.sql.functions.{col, lit, round => sround}
       val ev = Tables.load(spark, sfDir, "events")
         .select(col("ts"), sround(col("value"), 2).as("v"),
@@ -616,14 +562,10 @@ object Bench {
         "members_four_passes" -> (() => members()))
       val (times, _) = interleavedTimes(cells)
       val (tg, tm) = (times("gate_one_pass"), times("members_four_passes"))
-      val l = s"""{"metric":"gate_fusion_probe","probes_isolated":true,"warmup":true,"interleaved_passes":2,""" +
+      s"""{"metric":"gate_fusion_probe","probes_isolated":true,"warmup":true,"interleaved_passes":2,""" +
         s""""gate_one_pass_sec":$tg,"members_four_passes_sec":$tm,""" +
         s""""speedup":${tm / math.max(tg, 1e-9)},""" +
         s""""note":"q201's one stateful aggregation vs the four windowed monitors separately (batch share of the win; streaming adds one checkpointed state store per member)"}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"gate_fusion_probe failed: ${e.getMessage}")
     }
 
     // text-gate fusion probe: q207's one-pass claim — the four document
@@ -637,8 +579,7 @@ object Bench {
     // explodes) — the fusion's claim is exactly that shared scan +
     // shared scoring + one state store, so the members side must not be
     // handed a precomputed score the standalone deployment wouldn't have.
-    if (probeOn("textgate")) try {
-      dropCaches()
+    probe("textgate") {
       import org.apache.spark.sql.functions.{col, lit, round => sround,
         timestamp_seconds}
       val built = Seq(1, 16).map { f =>
@@ -691,13 +632,9 @@ object Bench {
         s""""gate_sec":$tg,"members_sec":$tm,""" +
           s""""speedup":${tm / math.max(tg, 1e-9)}"""
       }
-      val l = s"""{"metric":"textgate_fusion_probe","probes_isolated":true,"warmup":true,"interleaved_passes":2,""" +
+      s"""{"metric":"textgate_fusion_probe","probes_isolated":true,"warmup":true,"interleaved_passes":2,""" +
         s""""1x":{${pair(1)}},"16x":{${pair(16)}},""" +
         s""""note":"q207's one stateful aggregation vs the four document monitors deployed separately, each side paying its own scoring from the same raw (ts,lang,text) pin — the gate scores/tokenizes once, the members pay the quality regex twice and re-tokenize (batch share; streaming adds one state store per member)"}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"textgate_fusion_probe failed: ${e.getMessage}")
     }
 
     // driftReport fusion probe (VERDICT r13 #2/#3): q193's one-pass claim
@@ -710,8 +647,7 @@ object Bench {
     // corpus passes saved" at 1× that GROWS toward it at 16× means the
     // saving is real but fixed-overhead-masked at sf0.1; ~1.0 at both
     // factors means the claim must be retracted.
-    if (probeOn("driftreport")) try {
-      dropCaches()
+    probe("driftreport") {
       import org.apache.spark.sql.functions.{col, round => sround}
       val built = Seq(1, 16).map { f =>
         val (docs0, _) = SparkEntry.probeCorpus(spark, sfDir, f)
@@ -758,14 +694,10 @@ object Bench {
         s""""one_call_sec":$to,"members_sec":$ts,""" +
           s""""speedup":${ts / math.max(to, 1e-9)}"""
       }
-      val l = s"""{"metric":"driftreport_fusion_probe","probes_isolated":true,"warmup":true,"interleaved_passes":2,""" +
+      s"""{"metric":"driftreport_fusion_probe","probes_isolated":true,"warmup":true,"interleaved_passes":2,""" +
         s""""report":{"1x":{${pair("report_one_call", "report_members_separate", 1)}},"16x":{${pair("report_one_call", "report_members_separate", 16)}}},""" +
         s""""report_by":{"1x":{${pair("report_by_one_call", "report_by_members_separate", 1)}},"16x":{${pair("report_by_one_call", "report_by_members_separate", 16)}}},""" +
         s""""note":"q193/q200 composed reports vs their members on the same pre-checkpointed scored projection; the scoring chain is outside every timed window"}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"driftreport_fusion_probe failed: ${e.getMessage}")
     }
 
     // 16×-scale paired-bootstrap probe (VERDICT r14 #8): q208/q209's
@@ -776,8 +708,7 @@ object Bench {
     // key on (salt, rep, id), so each copy draws fresh weights — the
     // honest scale shape); ratio_16x ≲ 16 certifies linearity like the
     // dedup/sketch/eval cells.
-    if (probeOn("pboot")) try {
-      dropCaches()
+    probe("pboot") {
       import org.apache.spark.sql.functions.{avg, col, lit, max,
         round => sround}
       val ev = Tables.load(spark, sfDir, "events")
@@ -786,7 +717,9 @@ object Bench {
       val b = ev.filter(col("event_type") === "click")
         .groupBy(col("user_id")).agg(sround(avg(col("value")), 6).as("b"))
       val pairs0 = a.join(b, "user_id")
-      val stride = pairs0.agg(max(col("user_id"))).first().getLong(0) + 1L
+      // an empty view/click join has a NULL max: stride 1, empty replicas
+      val maxId = pairs0.agg(max(col("user_id"))).first()
+      val stride = (if (maxId.isNullAt(0)) 0L else maxId.getLong(0)) + 1L
       val built = Seq(1, 16).map { f =>
         val rep = (0 until f).map(i => pairs0.select(
             (col("user_id") + lit(i * stride)).as("user_id"),
@@ -796,7 +729,7 @@ object Bench {
       }
       def drain(df: org.apache.spark.sql.DataFrame): Unit =
         df.foreach((_: org.apache.spark.sql.Row) => ())
-      locally { val d = built.head._2 // discard first-use codegen
+      built.foreach { case (_, d) => // discard first use at each factor
         drain(ext.Eval.pairedBootstrapTest(d, "user_id", "a", "b"))
         drain(ext.Eval.pairedBootstrapTestBy(
           d.withColumn("cohort", (col("user_id") % 4).cast("string")),
@@ -812,16 +745,13 @@ object Bench {
               "cohort", "user_id", "a", "b")); 0L }))
       } yield ((f, name), run)
       val (times, _) = interleavedTimes(cells)
+      built.foreach { case (_, d) => graft.util.Checkpoints.release(d) }
       val lines = Seq("paired_bootstrap", "paired_bootstrap_by").map { name =>
         val t1 = times((1, name)); val t16 = times((16, name))
         s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
           s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}}"
       }.mkString("{", ",", "}")
-      val l = s"""{"metric":"pboot_scale_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,"ops":$lines}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"pboot_scale_probe failed: ${e.getMessage}")
+      s"""{"metric":"pboot_scale_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,"ops":$lines}"""
     }
 
     // Graph DEPTH probe (full runs only): the text9 cell certifies node
@@ -831,8 +761,7 @@ object Bench {
     // checkpoint discipline (Checkpoints.pin + release per round) holds at
     // depth: a leaking loop shows super-linear growth as plans/blocks
     // accumulate (VERDICT r10 #4, r9 task 6).
-    if (probeOn("graphdepth")) try {
-      dropCaches()
+    probe("graphdepth") {
       import org.apache.spark.sql.functions.col
       val n = 20000L
       val ids = spark.range(n).select(col("id"))
@@ -852,15 +781,11 @@ object Bench {
           localThreshold = 0).count(); 0L }))
       val (times, _) = interleavedTimes(cells)
       val (p5, p20) = (times(5) / 5.0, times(20) / 20.0)
-      val l = s"""{"metric":"graph_depth_probe","probes_isolated":true,"nodes":$n,"warmup":true,"interleaved_passes":2,""" +
+      s"""{"metric":"graph_depth_probe","probes_isolated":true,"nodes":$n,"warmup":true,"interleaved_passes":2,""" +
         s""""sec_iters5":${times(5)},"sec_iters20":${times(20)},""" +
         s""""sec_per_round_5":$p5,"sec_per_round_20":$p20,""" +
         s""""per_round_ratio":${p20 / math.max(p5, 1e-9)},""" +
         s""""note":"per_round_ratio ~<= 1.5 certifies the per-round pin+release discipline holds at depth"}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"graph_depth_probe failed: ${e.getMessage}")
     }
 
     // 100×-row window/join probe (full runs only): q32's per-key running
@@ -870,8 +795,7 @@ object Bench {
     // (sort-based window, bounded join state). A wall-time ratio is
     // meaningless here — the 1× side runs in ~0.1 s of fixed overhead, so
     // overhead noise swings the quotient 10×.
-    if (probeOn("window")) try {
-      dropCaches()
+    probe("window") {
       val cells = for {
         f <- Seq(1, 100)
         (name, df) <- SparkEntry.windowProbe(spark, sfDir, f).toSeq.sortBy(_._1)
@@ -885,11 +809,7 @@ object Bench {
           s"\"rows_1x\":$n1,\"rows_100x\":$n100," +
           s"\"ns_per_row_1x\":${t1 * 1e9 / n1},\"ns_per_row_100x\":${t100 * 1e9 / n100}}"
       }.mkString("{", ",", "}")
-      val l = s"""{"metric":"window_scale_probe","probes_isolated":true,"factor":100,"ops":$lines}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"window_scale_probe failed: ${e.getMessage}")
+      s"""{"metric":"window_scale_probe","probes_isolated":true,"factor":100,"ops":$lines}"""
     }
 
     // ANN-store phase probe: q62's timed body serves from a MEMOIZED
@@ -898,8 +818,7 @@ object Bench {
     // IVF+PQ training, the partitioned store write, and the serve path
     // each timed separately (serve interleaved min-of-2; train/write are
     // one-shot by nature — a deployment pays them once).
-    if (probeOn("annstore")) try {
-      dropCaches()
+    probe("annstore") {
       import org.apache.spark.sql.functions.col
       val emb = Tables.load(spark, sfDir, "embeddings")
       val n = emb.count().toInt
@@ -925,13 +844,9 @@ object Bench {
       }
       serveOnce() // discard first-use codegen/classload
       val tServe = math.min(serveOnce(), serveOnce())
-      val l = s"""{"metric":"ann_store_phase_probe","probes_isolated":true,""" +
+      s"""{"metric":"ann_store_phase_probe","probes_isolated":true,""" +
         s""""train_sec":$tTrain,"write_sec":$tWrite,"serve_sec":$tServe,""" +
         s""""note":"q62's bench number is the serve path; train+write are one-time index builds"}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"ann_store_phase_probe failed: ${e.getMessage}")
     }
 
     // ANN recall probe (full runs only): the oracle queries run at
@@ -948,8 +863,7 @@ object Bench {
     // `unexplained_var` = Σ‖v−c(v)‖² / Σ‖v‖² makes that legible per
     // corpus: ≈1 ⇒ isotropic ⇒ residual ≈ plain PQ is the EXPECTED
     // outcome (r5 finding); ≪1 ⇒ clustered ⇒ residual should win.
-    if (probeOn("ann")) try {
-      dropCaches()
+    probe("ann") {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.DataFrame
       def recallLine(emb0: DataFrame): String = {
@@ -1011,15 +925,11 @@ object Bench {
         import spark.implicits._
         recallLine(rows.toDF("vec_id", "embedding", "label"))
       }
-      val l = s"""{"metric":"ann_recall_probe","probes_isolated":true,"k":10,"n_queries":20,""" +
+      s"""{"metric":"ann_recall_probe","probes_isolated":true,"k":10,"n_queries":20,""" +
         s""""budgets":{"nprobe":2,"of_k":8,"rerank":100},""" +
         s""""corpora":{"bench":$bench,"clustered_synthetic":$synthClustered},""" +
         s""""note":"residual>=plain expected only when unexplained_var<<1; """ +
         s"""bench embeddings are isotropic (unexplained_var~1) so residual~plain there"}"""
-      println(l); extraLines += l
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"ann_recall_probe failed: ${e.getMessage}")
     }
 
     // probes done — reset to a clean block-manager state, then run the
@@ -1030,10 +940,10 @@ object Bench {
     // query shares one contention window; passes minutes apart rarely do.
     if (wanted.nonEmpty && probeArgs.isEmpty && args.isEmpty) dropCaches()
     calPoint()
-    val pass1 = wanted.map { case (name, fn) => name -> time(fn) }
+    val pass1 = wanted.map { case (name, fn) => name -> time(name, fn) }
     calPoint()
     val pass2 = if (wanted.isEmpty) pass1
-      else wanted.map { case (name, fn) => name -> time(fn) }
+      else wanted.map { case (name, fn) => name -> time(name, fn) }
     calPoint()
     // min across passes; a -1 (failure) only wins if both passes failed
     val twoPass = pass1.zip(pass2).map { case ((name, a), (_, b)) =>
@@ -1050,7 +960,7 @@ object Bench {
     val pass3 =
       if (slowSet.isEmpty || wanted.isEmpty) Map.empty[String, Double]
       else wanted.filter(w => slowSet(w._1))
-        .map { case (name, fn) => name -> time(fn) }.toMap
+        .map { case (name, fn) => name -> time(name, fn) }.toMap
     calPoint()
     val results = twoPass.map { case (name, t) =>
       val t3 = pass3.getOrElse(name, -1.0)
@@ -1146,7 +1056,7 @@ object Bench {
         (compactLine +: mainLine +: extraLines.toSeq).mkString("", "\n", "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch {
-      case e: Throwable => System.err.println(s"bench_out.json write failed: ${e.getMessage}")
+      case NonFatal(e) => System.err.println(s"bench_out.json write failed: ${e.getMessage}")
     }
     spark.stop()
   }

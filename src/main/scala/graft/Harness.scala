@@ -1,0 +1,52 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+/** The session and release policy every main and the test suites share:
+  * one place builds the local SparkSession, one place scopes a query run
+  * so the persistent blocks it created cannot outlive it. */
+object Harness {
+  /** Core count: `SPARK_GRAFT_CPUS`, or `default` when it is unset. */
+  def cpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(default)
+
+  /** `local[cpus]` with shuffle partitions sized to the cores (local mode,
+    * no remote executors, so small stages do not over-split), AQE on,
+    * nanosecond parquet timestamps read as longs (normalized in
+    * [[Tables.load]]), UTC and no UI; logs at WARN. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Run `body`, then unpersist every persistent RDD that appeared while
+    * it ran (query bodies pin whole per-doc tables — pinSorted, curation
+    * features — that would otherwise stay resident and tax every later
+    * query; r6's q46/q47/q48 were 6–60× their isolated times from that
+    * accumulation). A non-fatal failure is logged to stderr under `label`
+    * and returned as `None`, so a crashed run cannot pass for a result;
+    * fatal errors propagate. The release runs either way. */
+  def releasing[A](spark: SparkSession, label: String)(body: => A): Option[A] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    try Some(body)
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"$label failed: ${e.getMessage}")
+        None
+    } finally {
+      (sc.getPersistentRDDs.keySet.toSet -- before)
+        .foreach(id => sc.getPersistentRDDs.get(id)
+          .foreach(_.unpersist(blocking = false)))
+    }
+  }
+}

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tooling: dump `.explain("formatted")` for declared
@@ -18,36 +17,17 @@ object Plans {
       if (args.length > 3) { val pats = args(3).split(',').toSeq
         name => pats.exists(name.contains)
       } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (only(name)) {
-        // the Verify delta-unpersist discipline (ADVICE r14): building a
-        // plan still executes the query body's eager pins
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
-          System.err.println(s"[plans] wrote $name")
-        } catch { case e: Throwable =>
-          System.err.println(s"[plans] $name failed: ${e.getMessage}")
-        }
-        try (sc.getPersistentRDDs.keySet.toSet -- before)
-          .foreach(id => sc.getPersistentRDDs.get(id)
-            .foreach(_.unpersist(blocking = false)))
-        catch { case _: Throwable => }
+      // released per query: building a plan still executes the query
+      // body's eager pins
+      if (only(name)) Harness.releasing(spark, s"[plans] $name") {
+        val df = fn(spark, sfDir)
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
+        System.err.println(s"[plans] wrote $name")
       }
     }
     spark.stop()

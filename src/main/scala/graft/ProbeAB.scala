@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Paired A/B probe for the flag-gated optimizations (r14 `pinSorted`,
-  * extended by r15 sites): times the named queries with
-  * `-Dgraft.pinsort.off` toggled INSIDE one JVM, interleaved
+/** Paired A/B probe for the r14 `pinSorted` pin (extended by r15 sites):
+  * times the named queries with `-Dgraft.pinsort.off` — read only by
+  * [[registry.QueryShared.pinSorted]], so the off arm measures that pin
+  * alone — toggled INSIDE one JVM, interleaved
   * (off, on, off, on), min per arm — so both arms share every warmup,
   * codegen cache and contention window. The bench itself cannot pair arms
   * (one flag per JVM), and this sandbox's shuffle-shaped drift (VERDICT
@@ -20,39 +21,28 @@ object ProbeAB {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(
+      Harness.cpus(Runtime.getRuntime.availableProcessors()))
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.exists(n.contains) }
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def time(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         off: Boolean): Double = {
       if (off) sys.props("graft.pinsort.off") = "true"
       else sys.props.remove("graft.pinsort.off")
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
-      val dt = (System.nanoTime() - t0) / 1e9
-      (sc.getPersistentRDDs.keySet.toSet -- before)
-        .foreach(id => sc.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false)))
-      dt
+      Harness.releasing(spark, s"[probeAB] $name off=$off") {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
+        (System.nanoTime() - t0) / 1e9
+      }.getOrElse(-1.0)
     }
     qs.foreach { case (name, fn) =>
       // warmup both arms once (codegen), then 2 interleaved timed passes
       // (off, on, off, on) so a contention window hits both arms alike
-      time(fn, off = true); time(fn, off = false)
-      val o1 = time(fn, off = true); val n1 = time(fn, off = false)
-      val o2 = time(fn, off = true); val n2 = time(fn, off = false)
+      time(name, fn, off = true); time(name, fn, off = false)
+      val o1 = time(name, fn, off = true); val n1 = time(name, fn, off = false)
+      val o2 = time(name, fn, off = true); val n2 = time(name, fn, off = false)
       val offs = Seq(o1, o2); val ons = Seq(n1, n2)
       println(s"""{"query":"$name","off_sec":${offs.min},"on_sec":${ons.min}}""")
     }

@@ -15,16 +15,8 @@ object ProbeJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(
+      Harness.cpus(Runtime.getRuntime.availableProcessors()))
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Tables.load(spark, sfDir, "lineitem").limit(1).collect()
 
@@ -47,29 +39,26 @@ object ProbeJobs {
 
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.exists(n.contains) }
+    def run(name: String, fn: (SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Option[Double] =
+      Harness.releasing(spark, s"[probeJobs] $name") {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
+        (System.nanoTime() - t0) / 1e9
+      }
     qs.foreach { case (name, fn) =>
-      val sc = spark.sparkContext
       // warmup (untimed) with block release, exactly the bench discipline
-      val before = sc.getPersistentRDDs.keySet.toSet
-      fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
-      (sc.getPersistentRDDs.keySet.toSet -- before)
-        .foreach(id => sc.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false)))
+      run(name, fn)
       Thread.sleep(500)
       done.clear()
-      val b2 = sc.getPersistentRDDs.keySet.toSet
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
-      val total = (System.nanoTime() - t0) / 1e9
-      (sc.getPersistentRDDs.keySet.toSet -- b2)
-        .foreach(id => sc.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false)))
-      Thread.sleep(300)
-      val rows = done.toArray(Array.empty[(Int, Long, String)]).sortBy(_._1)
-      val sum = rows.map(_._2).sum / 1e3
-      println(f"== $name total=$total%.3f s, jobs=${rows.length}, job-sum=$sum%.3f s")
-      rows.foreach { case (id, ms, site) =>
-        println(f"   job $id%4d  ${ms / 1e3}%7.3f s  $site")
+      run(name, fn).foreach { total =>
+        Thread.sleep(300)
+        val rows = done.toArray(Array.empty[(Int, Long, String)]).sortBy(_._1)
+        val sum = rows.map(_._2).sum / 1e3
+        println(f"== $name total=$total%.3f s, jobs=${rows.length}, job-sum=$sum%.3f s")
+        rows.foreach { case (id, ms, site) =>
+          println(f"   job $id%4d  ${ms / 1e3}%7.3f s  $site")
+        }
       }
     }
     spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-times each per-row text kernel on the documents table with the
@@ -11,15 +10,8 @@ import org.apache.spark.sql.functions._
 object ProbeKernels {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(
+      Harness.cpus(Runtime.getRuntime.availableProcessors()))
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val docs = Tables.load(spark, sfDir, "documents")
     val kernels = Seq(

@@ -25,15 +25,12 @@ object Tables {
   // within one JVM would silently read through the stale StructType
   // (wrong columns/nulls, no error). That shape cannot happen on the
   // bench data (the driver generates each sf once, read-only), and no
-  // code in this repo rewrites a Tables path mid-session; a future
-  // caller that does must clearSchemaCache() after the rewrite.
+  // code in this repo writes a Tables path; a writer added later must
+  // invalidate its entry, the way the ANN store writers do
+  // (util.StoreSchemas.invalidate).
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String),
       org.apache.spark.sql.types.StructType]()
-
-  /** Drop every cached schema — call after regenerating a table in
-    * place (tests, future rounds reusing a temp dir). */
-  def clearSchemaCache(): Unit = schemaCache.clear()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"

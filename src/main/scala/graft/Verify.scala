@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,33 +11,12 @@ object Verify {
       if (args.length > 2) { val pats = args(2).split(',').toSeq
         name => pats.exists(name.contains)
       } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
-      if (only(name)) {
-        // Bench.time's snapshot + delta-unpersist discipline (ADVICE
-        // r14): queries pin whole per-doc tables (pinSorted, curation
-        // features) that would otherwise stay resident in the block
-        // manager for the entire 209-query dump
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      if (only(name)) Harness.releasing(spark, s"[verify] $name") {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        try (sc.getPersistentRDDs.keySet.toSet -- before)
-          .foreach(id => sc.getPersistentRDDs.get(id)
-            .foreach(_.unpersist(blocking = false)))
-        catch { case _: Throwable => }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

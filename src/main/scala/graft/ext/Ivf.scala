@@ -188,6 +188,7 @@ object Ivf {
         "recommended_nprobe", "train_mean", "last_batch_cos")
       .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/$MetaDir")
+    graft.util.StoreSchemas.invalidate(s"$path/$MetaDir")
   }
 
   /** Read a store's serving metadata — None for a store written before
@@ -217,6 +218,7 @@ object Ivf {
     assign(corpus, centroids, vecCol)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("ivf_bkt").parquet(path)
+    graft.util.StoreSchemas.invalidate(path)
     val (r2, n2, n, mean) = residNormSums(corpus, centroids, vecCol)
     writeStoreMeta(corpus.sparkSession, path,
       metaOf(r2, n2, n, centroids.length, mean, None))
@@ -243,6 +245,7 @@ object Ivf {
     assign(batch, centroids, vecCol)
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy("ivf_bkt").parquet(path)
+    graft.util.StoreSchemas.invalidate(path)
     readStoreMeta(batch.sparkSession, path).foreach { m =>
       val (r2, n2, n, bMean) = residNormSums(batch, centroids, vecCol)
       writeStoreMeta(batch.sparkSession, path,

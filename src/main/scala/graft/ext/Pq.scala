@@ -249,6 +249,7 @@ object Pq {
             col(vecCol).cast("array<double>"), c).as("ivf_bkt")).toSeq: _*)
     val w = enc.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
     coarse.fold(w)(_ => w.partitionBy("ivf_bkt")).parquet(path)
+    graft.util.StoreSchemas.invalidate(path)
   }
 
   /** Search a [[writeStore]] store. With a coarse quantizer the query's

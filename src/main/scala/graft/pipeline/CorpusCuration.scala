@@ -94,18 +94,6 @@ object CorpusCuration {
       minQuality: Double = 0.55, maxBandBucket: Int = 10000): DataFrame = {
     val pairs = Dedup.minhashLsh(df, textCol, idCol, numHashes = 16,
       bands = 4, minJaccard = minJaccard, maxBandBucket = maxBandBucket)
-    if (sys.props.get("graft.pinsort.off").contains("true")) {
-      // A/B control arm: the pre-r15 shape — a full-corpus quality pass
-      // for the representative choice, then features over survivors
-      val scored = df.select(col(idCol),
-        round(TextAnalysis.qualityScore(textCol), 6).as("_q"))
-      val keepIds = Dedup.canonicalByScore(scored, idCol, pairs, "_q")
-        .filter(col("keep") === 1).select(col(idCol))
-      return graft.util.Checkpoints.pin(
-          curationFeatures(df.join(keepIds, Seq(idCol), "left_semi"),
-            textCol, idCol))
-        .filter(col("quality") >= minQuality)
-    }
     // r15: ONE full-corpus feature pin feeds BOTH the representative
     // choice (its `_q` is the same round(qualityScore, 6) expression the
     // old standalone `scored` projection computed, so canonicalByScore

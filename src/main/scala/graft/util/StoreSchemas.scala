@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.StructType
   * append reuses the write schema by construction. Metadata only;
   * every read still scans the parquet bytes.
   *
-  * WRITE-ONCE ASSUMPTION (the Tables note): a store REWRITTEN at the
-  * same path with a different schema within one JVM must
-  * [[clear]] first — no code in this repo does that (store paths are
-  * per-application, writers Overwrite with the same schema). */
+  * A store REWRITTEN at the same path with a different layout (IVF cells
+  * added or dropped, other corpus columns) would read through a stale
+  * schema — wrong or missing columns, no error — so every store writer
+  * calls [[invalidate]] after each Overwrite or append. */
 object StoreSchemas {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
@@ -29,7 +29,7 @@ object StoreSchemas {
     spark.read.schema(sch).parquet(path)
   }
 
-  /** Drop every cached schema (a path about to be rewritten with a
-    * different layout). */
-  def clear(): Unit = cache.clear()
+  /** Drop the cached schema of `path` — called by the store writers
+    * after every write to it. */
+  def invalidate(path: String): Unit = cache.remove(path)
 }

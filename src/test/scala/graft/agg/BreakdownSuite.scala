@@ -5,13 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTest {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Fixed at local[4] whatever SPARK_GRAFT_CPUS says: suite results must
+    * not depend on the host. */
+  lazy val spark: SparkSession = graft.Harness.session(4)
 }
 
 class BreakdownSpecSuite extends AnyFunSuite {
