@@ -908,8 +908,8 @@ object Eval {
     * count table (granularity-bounded — feed ROUNDED scores, the rank-op
     * discipline, ENFORCED at runtime by [[graft.util.GridGuard]]'s
     * default-on distinct-count pre-check); the cumulative window runs on
-    * that bounded table
-    * (pinned — two consumers), everything after is scalar. Returns one
+    * that bounded table, everything after is scalar, and the one-row
+    * result is pinned before the gate's table is released. Returns one
     * row: (n_a, n_b, d, d_crit, drifted). */
   def ksTest(a: DataFrame, b: DataFrame, valCol: String): DataFrame = {
     // runtime grid discipline (ON by default), gated exactly on the
@@ -918,7 +918,7 @@ object Eval {
     // before the single-partition cumulative sorts a corpus-sized table
     val perRaw = pairPerValueRaw(a, b, valCol)
     val per = graft.util.GridGuard.gateTable(perRaw, "ksTest", valCol)
-    val out = ksTestOnPer(per)
+    val out = graft.util.Checkpoints.pin(ksTestOnPer(per))
     if (per ne perRaw) graft.util.Checkpoints.release(per)
     out
   }
@@ -927,9 +927,8 @@ object Eval {
     * [[ksTest]], [[rankSumTest]] and (bucketed) [[Outliers.psiDrift]]
     * all collapse their inputs to — ONE tagged-union aggregation.
     * [[Outliers.driftReport]] builds it once, gates it once, and feeds
-    * every value-side member (r13: the report previously paid this
-    * corpus collapse once per member). Ungated and lazy — callers gate
-    * via [[graft.util.GridGuard.gateTable]]. */
+    * every value-side member. Ungated and lazy — callers gate via
+    * [[graft.util.GridGuard.gateTable]]. */
   private[ext] def pairPerValueRaw(a: DataFrame, b: DataFrame,
       valCol: String): DataFrame =
     a.select(col(valCol).as("_v"),
@@ -942,21 +941,18 @@ object Eval {
 
   /** [[ksTest]]'s statistic from an already-gated per-value table (the
     * [[pairPerValueRaw]] shape) — identical downstream arithmetic, does
-    * NOT release the caller's table. `pinOut = false` (r15, the
-    * [[Outliers.driftReport]] composition) returns the LAZY plan with no
-    * internal pins: the caller materializes one fused union instead of
-    * paying two eager checkpoint jobs per lens, and the tiny cumulative
-    * recomputes from the caller's pinned table (deterministic — the same
-    * sorted window over the same materialized rows, so bit-identical). */
-  private[ext] def ksTestOnPer(per: DataFrame,
-      pinOut: Boolean = true): DataFrame = {
+    * NOT release the caller's table. Returns the LAZY plan with no
+    * internal pins: the caller pins the result (or one fused union of
+    * several lenses, [[Outliers.driftReport]]), and the tiny cumulative
+    * recomputes from the caller's table (deterministic — the same sorted
+    * window over the same rows, so bit-identical). */
+  private[ext] def ksTestOnPer(per: DataFrame): DataFrame = {
     val w = Window.orderBy(col("_v").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cumRaw = per
+    val cum = per
       .withColumn("cna", sum(col("ca")).over(w))
       .withColumn("cnb", sum(col("cb")).over(w))
       .select(col("cna"), col("cnb"))
-    val cum = if (pinOut) cumRaw.pin() else cumRaw
     // the final cumulative IS the side total — no second corpus pass
     val tot = cum.agg(max(col("cna")).as("n_a"), max(col("cnb")).as("n_b"))
     val dnum = cum.crossJoin(broadcast(tot))
@@ -966,18 +962,9 @@ object Eval {
     val d = col("_dnum").cast("double") / nProd
     val dCrit = lit(1.358) *
       sqrt((col("n_a") + col("n_b")).cast("double") / nProd)
-    val outRaw = tot.crossJoin(dnum).select(col("n_a"), col("n_b"),
+    tot.crossJoin(dnum).select(col("n_a"), col("n_b"),
       d.as("d"), dCrit.as("d_crit"),
       when(d > dCrit, 1).otherwise(0).as("drifted"))
-    if (!pinOut) outRaw
-    else {
-      // materialize the one-row result, then release the internal pin —
-      // without this every reliable-mode call leaked one cumulative table
-      // onto graft.checkpoint.dir for the session lifetime (ADVICE r11)
-      val out = outRaw.pin()
-      graft.util.Checkpoints.release(cum)
-      out
-    }
   }
 
   /** [[ksTest]] PER GROUP — each slice's value distribution against the
@@ -1004,11 +991,11 @@ object Eval {
     // grid discipline: the dense grid is |groups| × |values| — both axes
     // must be bounded (rounded scores; slice keys, not row ids). Gated
     // EXACTLY on the pinned (group, value) table built above: one k-row
-    // collapse, no separate pre-check pass over the caller's projection
-    // (the r12 regression fix — q185 paid the scoring chain twice).
+    // collapse, no separate pre-check pass over the caller's projection.
     graft.util.GridGuard.gateAxes(pg, "ksTestBy",
       valCol -> "_v", groupCol -> "_g")
-    val out = ksTestByOnPg(pg, groupCol)
+    // the result is pinned before its input table is released
+    val out = graft.util.Checkpoints.pin(ksTestByOnPg(pg, groupCol))
     graft.util.Checkpoints.release(pg)
     out
   }
@@ -1017,12 +1004,10 @@ object Eval {
     * count table `(_g, _v, c)` — identical downstream arithmetic; rows
     * with a NULL `_v` are dropped here (the standalone path filters them
     * before aggregating; [[Outliers.driftReportBy]]'s shared table
-    * retains them for the psi lens's slice totals). Does NOT release the
-    * caller's table. `pinOut = false`: the lazy-composition contract of
-    * [[ksTestOnPer]] (r15 — [[Outliers.driftReportBy]] pins one fused
-    * union instead of one checkpoint per lens). */
-  private[ext] def ksTestByOnPg(pg0: DataFrame, groupCol: String,
-      pinOut: Boolean = true): DataFrame = {
+    * retains them for the psi lens's slice totals). Lazy and does NOT
+    * release the caller's table (the [[ksTestOnPer]] contract). */
+  private[ext] def ksTestByOnPg(pg0: DataFrame,
+      groupCol: String): DataFrame = {
     val pg = pg0.filter(col("_v").isNotNull)
     val wv = Window.orderBy(col("_v").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1048,12 +1033,9 @@ object Eval {
     val d = col("_dnum").cast("double") / nProd
     val dCrit = lit(1.358) *
       sqrt((col("n_a") + nbCol).cast("double") / nProd)
-    // |groups|-row result pinned, internal pin released (the ksTest
-    // reliable-checkpoint-leak fix applied per-slice)
-    val out = perG.select(col("_g").as(groupCol), col("n_a"),
+    perG.select(col("_g").as(groupCol), col("n_a"),
       nbCol.as("n_b"), d.as("d"), dCrit.as("d_crit"),
       when(d > dCrit, 1).otherwise(0).as("drifted"))
-    if (pinOut) out.pin() else out
   }
 
   /** [[ksDriftWindowed]]'s baseline inputs from the reference slice:
@@ -1075,124 +1057,68 @@ object Eval {
   }
 
   /** STREAMING-SHAPED [[ksTest]]: the KS drift statistic per EVENT-TIME
-    * window against a DRIVER-HELD baseline distribution (from
-    * [[ksBaseline]]) — the unbinned serving twin the drift family's
-    * completeness invariant demands next to [[Outliers.psiWindowed]] and
+    * window (and per `slice` value, when given) against a DRIVER-HELD
+    * baseline distribution (from [[ksBaseline]]) — the unbinned serving
+    * twin next to [[Outliers.psiWindowed]] and
     * [[Similarity.embeddingDriftWindowed]]. ONE stateful windowed
-    * aggregation ([[graft.agg.KsDriftAgg]]) whose per-window state is the
-    * window's per-distinct-value counts — bounded by score granularity
-    * and hard-capped at the [[graft.util.GridGuard]] ceiling, so an
+    * aggregation ([[graft.agg.KsDriftAgg]]) whose per-cell state is the
+    * cell's per-distinct-value counts — bounded by score granularity and
+    * hard-capped at the [[graft.util.GridGuard]] ceiling, so an
     * unrounded score column fails loudly instead of growing state without
-    * bound; the watermark expires old windows. The same plan runs batch
-    * or streaming (add `withWatermark` upstream); batch ≡ stream and
-    * per-window batch ≡ `ksTest(baseline, windowSlice)` are suite-pinned
-    * bit-for-bit (identical integer-gap arithmetic inside the aggregate).
+    * bound; the watermark expires old windows. Every slice compares
+    * against the same driver-held baseline, not against the rest: the
+    * serving analogue of [[ksTestBy]]'s rest side would need cross-slice
+    * state, and a deployed monitor alarms each source against the
+    * trained corpus instead. The same plan runs batch or streaming (add
+    * `withWatermark` upstream); batch ≡ stream and per-cell batch ≡
+    * `ksTest(baseline, cell)` are suite-pinned bit-for-bit (identical
+    * integer-gap arithmetic inside the aggregate).
     *
-    * Returns (ws, n_live, d, d_crit, drifted) per window. */
+    * Returns (ws, [slice,] n_live, d, d_crit, drifted) per cell. */
   def ksDriftWindowed(df: DataFrame, tsCol: String, valCol: String,
       baseVals: Array[Double], baseCum: Array[Long],
-      windowDur: String = "1 day"): DataFrame = {
+      windowDur: String = "1 day",
+      slice: Option[String] = None): DataFrame = {
     require(baseVals.length == baseCum.length && baseVals.nonEmpty,
       "ksDriftWindowed: empty or misaligned baseline")
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(valCol).cast("double").as("_v"))
-      .groupBy(col("_w"))
-      .agg(graft.agg.KsDriftAgg.column(col("_v"), baseVals, baseCum,
-        graft.util.GridGuard.streamStateCap(df.sparkSession)).as("_ks"))
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_ks").getField("n_live").as("n_live"),
-      col("_ks").getField("d").as("d"),
-      col("_ks").getField("d_crit").as("d_crit"),
-      col("_ks").getField("drifted").as("drifted"))
+    ksLens(col(valCol).cast("double"), baseVals, baseCum)
+      .cells(df, tsCol, windowDur, slice)
   }
 
-  /** [[ksDriftWindowed]] BY SLICE — the drift matrix's two lenses
-    * composed: "WHICH source drifted, PER day", the question the nightly
-    * gate ([[Outliers.driftReport]]'s audience) actually asks. Same ONE
-    * stateful aggregation ([[graft.agg.KsDriftAgg]]) with the slice key
-    * added to the grouping: per-(window, slice) state is the slice's
-    * per-distinct-value counts, each buffer hard-capped at the
-    * [[graft.util.GridGuard]] ceiling; the watermark expires whole
-    * windows. Every slice compares against the SAME driver-held global
-    * baseline (from [[ksBaseline]] on the reference snapshot) — the
-    * serving analogue of [[ksTestBy]]'s rest-side would require
-    * cross-slice state; a deployed monitor alarms each source against
-    * the trained corpus instead. Per-(window, slice) batch ≡
-    * `ksTest(baseline, slice-of-window)` bit-for-bit (same aggregate
-    * kernel), stream ≡ batch — suite-pinned like the unsliced twin.
-    * Returns (ws, sliceCol, n_live, d, d_crit, drifted). */
-  def ksDriftWindowedBy(df: DataFrame, tsCol: String, sliceCol: String,
-      valCol: String, baseVals: Array[Double], baseCum: Array[Long],
-      windowDur: String = "1 day"): DataFrame = {
-    require(baseVals.length == baseCum.length && baseVals.nonEmpty,
-      "ksDriftWindowedBy: empty or misaligned baseline")
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(sliceCol).as("_slice"),
-        col(valCol).cast("double").as("_v"))
-      .groupBy(col("_w"), col("_slice"))
-      .agg(graft.agg.KsDriftAgg.column(col("_v"), baseVals, baseCum,
-        graft.util.GridGuard.streamStateCap(df.sparkSession)).as("_ks"))
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_slice").as(sliceCol),
-      col("_ks").getField("n_live").as("n_live"),
-      col("_ks").getField("d").as("d"),
-      col("_ks").getField("d_crit").as("d_crit"),
-      col("_ks").getField("drifted").as("drifted"))
-  }
+  /** The KS member's windowed lens over the value column `v`. */
+  private[ext] def ksLens(v: Column, baseVals: Array[Double],
+      baseCum: Array[Long]): Outliers.CellLens =
+    Outliers.CellLens(Seq("_v" -> v),
+      cap => Seq(graft.agg.KsDriftAgg.column(col("_v"), baseVals, baseCum,
+        cap).as("_ks")),
+      Outliers.structFields("_ks", "n_live", "d", "d_crit", "drifted"))
 
-  /** [[rankSumDriftWindowed]] BY SLICE — each (window, slice)'s value
-    * LOCATION against the same driver-held global baseline (the
-    * [[ksDriftWindowedBy]] composition for the rank-sum member; one
-    * [[ksBaseline]] artifact serves both). Per-(window, slice) state is
-    * GridGuard-capped; per-cell batch ≡ `rankSumTest(baseline, slice)`
-    * bit-for-bit, stream ≡ batch. Returns
-    * (ws, sliceCol, n_live, u, z, drifted). */
-  def rankSumDriftWindowedBy(df: DataFrame, tsCol: String, sliceCol: String,
-      valCol: String, baseVals: Array[Double], baseCum: Array[Long],
-      windowDur: String = "1 day"): DataFrame = {
-    require(baseVals.length == baseCum.length && baseVals.nonEmpty,
-      "rankSumDriftWindowedBy: empty or misaligned baseline")
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(sliceCol).as("_slice"),
-        col(valCol).cast("double").as("_v"))
-      .groupBy(col("_w"), col("_slice"))
-      .agg(graft.agg.RankSumDriftAgg.column(col("_v"), baseVals, baseCum,
-        graft.util.GridGuard.streamStateCap(df.sparkSession)).as("_rs"))
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_slice").as(sliceCol),
-      col("_rs").getField("n_live").as("n_live"),
-      col("_rs").getField("u").as("u"),
-      col("_rs").getField("z").as("z"),
-      col("_rs").getField("drifted").as("drifted"))
-  }
+  /** The rank-sum member's windowed lens over the value column `v`. */
+  private[ext] def rankSumLens(v: Column, baseVals: Array[Double],
+      baseCum: Array[Long]): Outliers.CellLens =
+    Outliers.CellLens(Seq("_v" -> v),
+      cap => Seq(graft.agg.RankSumDriftAgg.column(col("_v"), baseVals,
+        baseCum, cap).as("_rs")),
+      Outliers.structFields("_rs", "n_live", "u", "z", "drifted"))
 
   /** STREAMING-SHAPED [[rankSumTest]]: the location-drift statistic per
-    * EVENT-TIME window against the SAME driver-held [[ksBaseline]]
-    * artifact the KS twin takes (one snapshot pass serves both monitors).
-    * Identical state/plan shape to [[ksDriftWindowed]]
-    * ([[graft.agg.RankSumDriftAgg]] — per-distinct-value counts,
-    * GridGuard-capped, watermark-expired); per-window batch ≡
-    * `rankSumTest(baseline, windowSlice)` bit-for-bit and stream ≡ batch
-    * are suite-pinned. Returns (ws, n_live, u, z, drifted) per window. */
+    * EVENT-TIME window (and per `slice` value, when given) against the
+    * SAME driver-held [[ksBaseline]] artifact the KS twin takes (one
+    * snapshot pass serves both monitors). Identical state/plan shape to
+    * [[ksDriftWindowed]] ([[graft.agg.RankSumDriftAgg]] — per-distinct-
+    * value counts, GridGuard-capped, watermark-expired); every slice
+    * compares against the same driver-held baseline, not against the
+    * rest. Per-cell batch ≡ `rankSumTest(baseline, cell)` bit-for-bit and
+    * stream ≡ batch are suite-pinned. Returns
+    * (ws, [slice,] n_live, u, z, drifted) per cell. */
   def rankSumDriftWindowed(df: DataFrame, tsCol: String, valCol: String,
       baseVals: Array[Double], baseCum: Array[Long],
-      windowDur: String = "1 day"): DataFrame = {
+      windowDur: String = "1 day",
+      slice: Option[String] = None): DataFrame = {
     require(baseVals.length == baseCum.length && baseVals.nonEmpty,
       "rankSumDriftWindowed: empty or misaligned baseline")
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(valCol).cast("double").as("_v"))
-      .groupBy(col("_w"))
-      .agg(graft.agg.RankSumDriftAgg.column(col("_v"), baseVals, baseCum,
-        graft.util.GridGuard.streamStateCap(df.sparkSession)).as("_rs"))
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_rs").getField("n_live").as("n_live"),
-      col("_rs").getField("u").as("u"),
-      col("_rs").getField("z").as("z"),
-      col("_rs").getField("drifted").as("drifted"))
+    rankSumLens(col(valCol).cast("double"), baseVals, baseCum)
+      .cells(df, tsCol, windowDur, slice)
   }
 
   /** MANN–WHITNEY / WILCOXON RANK-SUM drift test — the LOCATION-shift
@@ -1219,35 +1145,33 @@ object Eval {
     *
     * Shape at 100 TB: one pass collapses both sides to the per-distinct-
     * value count table (granularity-bounded, [[graft.util.GridGuard]]
-    * enforced); the rank window runs on that bounded table (pinned — two
-    * consumers), everything after is scalar.
-    * Returns one row: (n_a, n_b, u, z, drifted). */
+    * enforced); the rank window runs on that bounded table, everything
+    * after is scalar, and the one-row result is pinned before the gate's
+    * table is released. Returns one row: (n_a, n_b, u, z, drifted). */
   def rankSumTest(a: DataFrame, b: DataFrame, valCol: String): DataFrame = {
     // grid discipline, gated exactly on the per-value table built here
     // (the ksTest note)
     val perRaw = pairPerValueRaw(a, b, valCol)
     val per = graft.util.GridGuard.gateTable(perRaw, "rankSumTest", valCol)
-    val out = rankSumOnPer(per)
+    val out = graft.util.Checkpoints.pin(rankSumOnPer(per))
     if (per ne perRaw) graft.util.Checkpoints.release(per)
     out
   }
 
   /** [[rankSumTest]]'s statistic from an already-gated per-value table
     * (the [[pairPerValueRaw]] shape) — identical downstream arithmetic,
-    * does NOT release the caller's table. `pinOut = false` = the r15
-    * lazy-composition contract of [[ksTestOnPer]]. */
-  private[ext] def rankSumOnPer(per: DataFrame,
-      pinOut: Boolean = true): DataFrame = {
+    * lazy, does NOT release the caller's table (the [[ksTestOnPer]]
+    * contract). */
+  private[ext] def rankSumOnPer(per: DataFrame): DataFrame = {
     val w = Window.orderBy(col("_v").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val nv = col("ca") + col("cb")
-    val rankedRaw = per
+    val ranked = per
       .withColumn("_nv", nv)
       .withColumn("_cum", sum(nv).over(w))
       .withColumn("_avgrank",
         (col("_cum") - col("_nv")).cast("double") +
           (col("_nv") + lit(1L)).cast("double") / lit(2.0))
-    val ranked = if (pinOut) rankedRaw.pin() else rankedRaw
     val agg = ranked.agg(
       sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
       sum(col("cb").cast("double") * col("_avgrank")).as("_rb"),
@@ -1266,15 +1190,9 @@ object Eval {
       ((nT + lit(1.0)) - col("_ties").cast("double") /
         (nT * (nT - lit(1.0))))
     val z = (u - nA * nB / lit(2.0)) / sqrt(sigma2)
-    val outRaw = agg.select(col("n_a"), col("n_b"), u.as("u"),
+    agg.select(col("n_a"), col("n_b"), u.as("u"),
       when(sigma2 > 0, z).as("z"),
       when(sigma2 > 0 && abs(z) > 1.96, 1).otherwise(0).as("drifted"))
-    if (!pinOut) outRaw
-    else {
-      val out = outRaw.pin()
-      graft.util.Checkpoints.release(ranked)
-      out
-    }
   }
 
   /** [[rankSumTest]] PER GROUP — each slice's value LOCATION against the
@@ -1305,17 +1223,16 @@ object Eval {
     // (the ksTestBy note — no separate pass over the caller's projection)
     graft.util.GridGuard.gateAxes(pg, "rankSumTestBy",
       valCol -> "_v", groupCol -> "_g")
-    val out = rankSumByOnPg(pg, groupCol)
+    val out = graft.util.Checkpoints.pin(rankSumByOnPg(pg, groupCol))
     graft.util.Checkpoints.release(pg)
     out
   }
 
   /** [[rankSumTestBy]]'s statistics from an already-gated (group, value)
     * count table (the [[ksTestByOnPg]] contract: NULL `_v` rows dropped
-    * here, caller's table not released; `pinOut = false` = the r15
-    * lazy-composition contract). */
-  private[ext] def rankSumByOnPg(pg0: DataFrame, groupCol: String,
-      pinOut: Boolean = true): DataFrame = {
+    * here, lazy, caller's table not released). */
+  private[ext] def rankSumByOnPg(pg0: DataFrame,
+      groupCol: String): DataFrame = {
     val pg = pg0.filter(col("_v").isNotNull)
     val gv = pg.groupBy(col("_v")).agg(sum(col("c")).as("nv"))
     val w = Window.orderBy(col("_v").asc)
@@ -1341,12 +1258,11 @@ object Eval {
       ((nT + lit(1.0)) - col("_ties").cast("double") /
         (nT * (nT - lit(1.0))))
     val z = (u - nA * nB / lit(2.0)) / sqrt(sigma2)
-    val out = perG.crossJoin(broadcast(glob)).select(
+    perG.crossJoin(broadcast(glob)).select(
       col("_g").as(groupCol), col("n_g"),
       (col("n") - col("n_g")).as("n_rest"), u.as("u"),
       when(sigma2 > 0, z).as("z"),
       when(sigma2 > 0 && abs(z) > 1.96, 1).otherwise(0).as("drifted"))
-    if (pinOut) out.pin() else out
   }
 
   /** MUTUAL INFORMATION between two score columns over ECDF-decile bins

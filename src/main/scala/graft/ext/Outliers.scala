@@ -124,12 +124,9 @@ object Outliers {
   def psiDrift(base: DataFrame, live: DataFrame, valCol: String,
       nBuckets: Int = 10, lo: Double = 0.0, hi: Double = 1.0): DataFrame = {
     require(nBuckets > 0 && hi > lo)
-    def counts(df: DataFrame, name: String) = {
-      val b = least(greatest(
-        floor((col(valCol) - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-        lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
-      df.select(b.as("bucket")).groupBy("bucket").agg(count(lit(1)).as(name))
-    }
+    def counts(df: DataFrame, name: String) =
+      df.select(psiBucket(col(valCol), nBuckets, lo, hi).as("bucket"))
+        .groupBy("bucket").agg(count(lit(1)).as(name))
     val (tb, tl) = (base.count(), live.count())
     val session = base.sparkSession
     val all = session.range(nBuckets)
@@ -143,6 +140,15 @@ object Outliers {
       .withColumn("psi", round((col("p_live") - col("p_base")) *
         log(col("p_live") / col("p_base")), 6))
   }
+
+  /** The PSI family's one bucket expression: `nBuckets` fixed-width bins
+    * over [lo, hi], outside values clamped into the edge bins. `greatest`
+    * skips NULLs, so a NULL value lands in bucket 0 (the DuckDB oracles
+    * bucket the same way). */
+  private[ext] def psiBucket(v: Column, nBuckets: Int, lo: Double,
+      hi: Double): Column =
+    least(greatest(floor((v - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
+      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
 
   /** CHI-SQUARED CATEGORICAL drift test — the drift family's member for
     * CATEGORY columns (lang, source, event type, license class), where
@@ -184,8 +190,7 @@ object Outliers {
 
   /** [[chiSquareDrift]]'s two-sided per-category count table `(_c, cb,
     * cl)` — lazy and ungated; callers gate it themselves (the
-    * [[Eval.pairPerValueRaw]] convention, r15 for the [[driftReport]]
-    * composition). */
+    * [[Eval.pairPerValueRaw]] convention). */
   private[ext] def chiPerCategory(base: DataFrame, live: DataFrame,
       catCol: String): DataFrame =
     base.select(col(catCol).as("_c"),
@@ -266,7 +271,7 @@ object Outliers {
 
   /** [[chiSquareDriftBy]]'s statistics from an already-gated (slice,
     * category) count table `(_g, _c, cnt)` — identical downstream
-    * arithmetic, lazy, caller's table not released (the r15
+    * arithmetic, lazy, caller's table not released (the
     * lazy-composition contract of [[Eval.ksTestByOnPg]]). */
   private[ext] def chiSquareByOnPc(pg: DataFrame,
       groupCol: String): DataFrame = {
@@ -323,16 +328,14 @@ object Outliers {
   def psiDriftBy(df: DataFrame, groupCol: String, valCol: String,
       nBuckets: Int = 10, lo: Double = 0.0, hi: Double = 1.0): DataFrame = {
     require(nBuckets > 0 && hi > lo)
-    val b = least(greatest(
-      floor((col(valCol) - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
-    val pg = df.select(col(groupCol).as("_g"), b.as("bucket"))
+    val pg = df.select(col(groupCol).as("_g"),
+        psiBucket(col(valCol), nBuckets, lo, hi).as("bucket"))
       .filter(col("_g").isNotNull)
       .groupBy(col("_g"), col("bucket")).agg(count(lit(1)).as("cnt")).pin()
     // slice-axis guard on the pinned table (the bucket axis is
     // nBuckets-bounded by construction)
     graft.util.GridGuard.gateAxes(pg, "psiDriftBy", groupCol -> "_g")
-    val out = psiByOnPb(pg, groupCol, nBuckets)
+    val out = graft.util.Checkpoints.pin(psiByOnPb(pg, groupCol, nBuckets))
     graft.util.Checkpoints.release(pg)
     out
   }
@@ -341,9 +344,9 @@ object Outliers {
     * count table `(_g, bucket, cnt)` — [[driftReportBy]] derives that
     * table from its shared (slice, value) pin (integer-identical counts),
     * so the per-slice psi stays bit-identical to the standalone member.
-    * Does NOT release the caller's table. */
+    * Lazy; does NOT release the caller's table. */
   private[ext] def psiByOnPb(pg: DataFrame, groupCol: String,
-      nBuckets: Int, pinOut: Boolean = true): DataFrame = {
+      nBuckets: Int): DataFrame = {
     val gb = pg.groupBy(col("bucket")).agg(sum(col("cnt")).as("nb"))
     val groups = pg.groupBy(col("_g")).agg(sum(col("cnt")).as("n_g"))
     val tot = groups.agg(sum(col("n_g")).as("n"))
@@ -368,10 +371,9 @@ object Outliers {
         round((q - p) * log(q / p), 6).as("_term"))
       .groupBy(col("_g"), col("n_g"), col("n"))
       .agg(round(sum(col("_term")), 6).as("psi"))
-    val out = perG.select(col("_g").as(groupCol), col("n_g"),
+    perG.select(col("_g").as(groupCol), col("n_g"),
       (col("n") - col("n_g")).as("n_rest"), col("psi"),
       when(col("psi") > 0.25, 1).otherwise(0).as("drifted"))
-    if (pinOut) out.pin() else out
   }
 
   /** ONE-CALL DRIFT REPORT: every corpus-level drift statistic between a
@@ -391,11 +393,9 @@ object Outliers {
     * ordered by stat: chi2, ks, psi, rank_sum.
     *
     * Scale shape: each side's (valCol, catCol) projection is PINNED once
-    * and every member reads the pin — without this, the four members
-    * (plus psiDrift's row-count pulls) re-evaluated the caller's scoring
-    * projection ~6× per report (VERDICT r12 #4: q193 was the
-    * third-most-expensive query on exactly those re-scans). The 4-row
-    * result materializes before both pins release.
+    * and every member reads the pin, so the caller's scoring projection
+    * evaluates once per report, not once per member and count pull. The
+    * 4-row result materializes before both pins release.
     *
     * Cost, measured (`driftreport_fusion_probe`, sf0.1 at 1× and 16×):
     * sharing one per-value table across PSI/KS/rank-sum is wall-clock
@@ -412,35 +412,31 @@ object Outliers {
       hi: Double = 1.0): DataFrame = {
     val bp = base.select(col(valCol), col(catCol)).pin()
     val lp = live.select(col(valCol), col(catCol)).pin()
-    // ONE value-side corpus collapse (r13): PSI, KS and rank-sum all
-    // derive from the same per-distinct-value (ca, cb) table — build it
-    // once, gate it once, and run each member's (unchanged, bit-identical)
-    // downstream arithmetic on the bounded pin. Measured wall-clock
-    // parity with separate member calls at sf0.1 (see scaladoc): this
-    // buys fewer jobs over the pin, not batch seconds.
-    // pinned UNCONDITIONALLY (ADVICE r13): three lenses read this table,
-    // so the pin is the sharing mechanism, not a guard side-effect —
+    // PSI, KS and rank-sum all derive from the same per-distinct-value
+    // (ca, cb) table: built once, gated once, each member's downstream
+    // arithmetic unchanged. Pinned UNCONDITIONALLY: three lenses read
+    // it, so the pin is the sharing mechanism, not a guard side-effect —
     // with gateTable a guard-off session would hand each lens the lazy
     // frame and pay the corpus aggregation three times
     val per = graft.util.Checkpoints.pin(
       Eval.pairPerValueRaw(bp, lp, valCol))
     graft.util.GridGuard.gateCount(per, "driftReport", valCol)
-    // psiDrift's side totals count ALL rows (a NULL value lands in no
-    // bucket but still dilutes the proportions) — exactly the member's
-    // base.count()/live.count() pulls, fused into ONE job over the tiny
-    // pins (r15: was two count jobs)
-    val cnts = bp.agg(count(lit(1)).as("_tb"))
-      .crossJoin(lp.agg(count(lit(1)).as("_tl"))).head()
-    val psi = psiRowFromPer(per, cnts.getLong(0), cnts.getLong(1),
-      nBuckets, lo, hi)
-    // lenses composed LAZILY (pinOut = false, r15): the one union pin
-    // below materializes all four plans in a single job instead of each
-    // lens paying its own eager checkpoint — the members' arithmetic is
-    // untouched, so every row stays bit-identical to the standalone call
-    val ks = Eval.ksTestOnPer(per, pinOut = false)
+    // psiDrift's side totals count ALL rows, and its bucketing puts a
+    // NULL value in a bucket too; the per-value table drops NULLs, so
+    // each side's NULL count (total minus non-NULL) is pulled here, in
+    // one job over the small pins
+    val cnts = bp.agg(count(lit(1)), count(col(valCol)))
+      .crossJoin(lp.agg(count(lit(1)), count(col(valCol)))).head()
+    val (tb, tl) = (cnts.getLong(0), cnts.getLong(2))
+    val psi = psiRowFromPer(per, tb, tl, tb - cnts.getLong(1),
+      tl - cnts.getLong(3), nBuckets, lo, hi)
+    // lenses composed lazily: the one union pin below materializes all
+    // four plans in a single job, and every row stays bit-identical to
+    // the standalone member call
+    val ks = Eval.ksTestOnPer(per)
       .select(lit("ks").as("stat"), col("d").as("statistic"),
         col("d_crit").as("threshold"), col("drifted"))
-    val rs = Eval.rankSumOnPer(per, pinOut = false)
+    val rs = Eval.rankSumOnPer(per)
       .select(lit("rank_sum").as("stat"), abs(col("z")).as("statistic"),
         lit(1.96).as("threshold"), col("drifted"))
     // the chi lens's category table, gated exactly as the member gates
@@ -458,19 +454,23 @@ object Outliers {
   }
 
   /** [[driftReport]]'s psi row from the shared per-value table: bucket
-    * counts are sums of the table's integer counts (identical to
-    * [[psiDrift]]'s own bucket aggregation on the raw rows), and every
-    * downstream expression — the +0.5 smoothing, the 6 dp per-term
-    * round, the 6 dp total — is the member's own shape verbatim, so the
-    * row equals `round(psiDrift(base, live).agg(sum(psi)), 6)`
-    * bit-for-bit (Round12OpsSuite pins it). */
+    * counts are sums of the table's integer counts plus each side's
+    * NULL-value count (`nullB`/`nullL`, bucketed through the same
+    * [[psiBucket]] expression) — identical to [[psiDrift]]'s own bucket
+    * aggregation on the raw rows — and every downstream expression (the
+    * +0.5 smoothing, the 6 dp per-term round, the 6 dp total) is the
+    * member's own shape verbatim, so the row equals
+    * `round(psiDrift(base, live).agg(sum(psi)), 6)` bit-for-bit
+    * (DriftSuite pins it, NULL values included). */
   private def psiRowFromPer(per: DataFrame, tb: Long, tl: Long,
-      nBuckets: Int, lo: Double, hi: Double): DataFrame = {
+      nullB: Long, nullL: Long, nBuckets: Int, lo: Double,
+      hi: Double): DataFrame = {
     require(nBuckets > 0 && hi > lo)
-    val b = least(greatest(
-      floor((col("_v") - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
-    val counts = per.groupBy(b.as("bucket"))
+    val nulls = per.sparkSession.range(1).select(
+      lit(null).cast(per.schema("_v").dataType).as("_v"),
+      lit(nullB).as("ca"), lit(nullL).as("cb"))
+    val counts = per.select(col("_v"), col("ca"), col("cb")).unionAll(nulls)
+      .groupBy(psiBucket(col("_v"), nBuckets, lo, hi).as("bucket"))
       .agg(sum(col("ca")).as("n_base"), sum(col("cb")).as("n_live"))
     val all = per.sparkSession.range(nBuckets)
       .select(col("id").cast("int").as("bucket"))
@@ -526,26 +526,22 @@ object Outliers {
     graft.util.GridGuard.gateAxes(pg, "driftReportBy",
       valCol -> "_v", groupCol -> "_g")
     // psi lens: (slice, bucket) counts by summing the shared table's
-    // integer counts — a NULL value gets a NULL bucket row, exactly as
-    // the member's raw-row bucketing produces
-    val b = least(greatest(
-      floor((col("_v") - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
-    val pb = pg.select(col("_g"), b.as("bucket"), col("c"))
+    // integer counts — a NULL value's row buckets exactly as the
+    // member's raw-row bucketing does
+    val pb = pg.select(col("_g"), psiBucket(col("_v"), nBuckets, lo, hi)
+        .as("bucket"), col("c"))
       .groupBy(col("_g"), col("bucket")).agg(sum(col("c")).as("cnt"))
-    // lenses composed LAZILY (pinOut = false, r15): one union pin below
-    // materializes all four plans in a single job instead of four eager
-    // per-lens checkpoints — the members' arithmetic is untouched, so
-    // every row stays bit-identical to the standalone member call
-    val psi = psiByOnPb(pb, groupCol, nBuckets, pinOut = false)
+    // lenses composed lazily: one union pin below materializes all four
+    // plans in a single job, every row bit-identical to the member's
+    val psi = psiByOnPb(pb, groupCol, nBuckets)
       .select(col(groupCol), lit("psi").as("stat"),
         col("psi").as("statistic"), lit(0.25).as("threshold"),
         col("drifted"))
-    val ks = Eval.ksTestByOnPg(pg, groupCol, pinOut = false)
+    val ks = Eval.ksTestByOnPg(pg, groupCol)
       .select(col(groupCol), lit("ks").as("stat"),
         col("d").as("statistic"), col("d_crit").as("threshold"),
         col("drifted"))
-    val rs = Eval.rankSumByOnPg(pg, groupCol, pinOut = false)
+    val rs = Eval.rankSumByOnPg(pg, groupCol)
       .select(col(groupCol), lit("rank_sum").as("stat"),
         abs(col("z")).as("statistic"), lit(1.96).as("threshold"),
         col("drifted"))
@@ -584,248 +580,82 @@ object Outliers {
   }
 
   /** STREAMING-SHAPED [[chiSquareDrift]]: the categorical-mix drift
-    * statistic per EVENT-TIME window against a DRIVER-HELD baseline
-    * count table (from [[chiSquareBaseline]]) — the [[psiWindowed]] /
+    * statistic per EVENT-TIME window (and per `slice` value, when given)
+    * against a DRIVER-HELD baseline count table (from
+    * [[chiSquareBaseline]]) — the [[psiWindowed]] /
     * [[Eval.ksDriftWindowed]] shape for category columns. ONE stateful
     * windowed aggregation ([[graft.agg.ChiSquareDriftAgg]]) whose
-    * per-window state is the window's per-category counts,
-    * GridGuard-capped; the watermark expires old windows. Per-window
-    * batch ≡ [[chiSquareDrift]] on the window's slice up to float
-    * summation order (the aggregate sums the k terms in sorted category
-    * order, the batch plan in partition order; both round at 6 dp —
-    * suite-pinned at that grain, the [[psiWindowed]] convention); stream
-    * ≡ batch exactly. Returns (ws, n_live, k, chi2, chi2_crit, drifted)
-    * per window. */
+    * per-cell state is the cell's per-category counts, GridGuard-capped;
+    * the watermark expires old windows. Every slice compares against the
+    * same driver-held baseline, not against the rest. Per-cell batch ≡
+    * [[chiSquareDrift]] on the cell's rows up to float summation order
+    * (the aggregate sums the k terms in sorted category order, the batch
+    * plan in partition order; both round at 6 dp — suite-pinned at that
+    * grain, the [[psiWindowed]] convention); stream ≡ batch exactly.
+    * Returns (ws, [slice,] n_live, k, chi2, chi2_crit, drifted). */
   def chiSquareDriftWindowed(df: DataFrame, tsCol: String, catCol: String,
-      baseCounts: Map[String, Long],
-      windowDur: String = "1 day"): DataFrame = {
+      baseCounts: Map[String, Long], windowDur: String = "1 day",
+      slice: Option[String] = None): DataFrame = {
     require(baseCounts.nonEmpty, "chiSquareDriftWindowed: empty baseline")
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(catCol).cast("string").as("_c"))
-      .groupBy(col("_w"))
-      .agg(graft.agg.ChiSquareDriftAgg.column(col("_c"), baseCounts,
-        graft.util.GridGuard.streamStateCap(df.sparkSession)).as("_x"))
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_x").getField("n_live").as("n_live"),
-      col("_x").getField("k").as("k"),
-      col("_x").getField("chi2").as("chi2"),
-      col("_x").getField("chi2_crit").as("chi2_crit"),
-      col("_x").getField("drifted").as("drifted"))
+    chiSquareLens(catCol, baseCounts).cells(df, tsCol, windowDur, slice)
   }
 
-  /** [[chiSquareDriftWindowed]] BY SLICE — each (window, slice)'s
-    * category mix against the same driver-held global baseline count
-    * table (the [[Eval.ksDriftWindowedBy]] composition for the
-    * categorical member: "which source's language mix shifted, per
-    * day"). Slice key added to the grouping; per-(window, slice) state
-    * is the cell's per-category counts, GridGuard-capped; per-cell
-    * batch ≡ [[chiSquareDrift]] on that cell's slice at the 6 dp grain
-    * (the [[chiSquareDriftWindowed]] convention), stream ≡ batch.
-    * Returns (ws, sliceCol, n_live, k, chi2, chi2_crit, drifted). */
-  def chiSquareDriftWindowedBy(df: DataFrame, tsCol: String,
-      sliceCol: String, catCol: String, baseCounts: Map[String, Long],
-      windowDur: String = "1 day"): DataFrame = {
-    require(baseCounts.nonEmpty, "chiSquareDriftWindowedBy: empty baseline")
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(sliceCol).as("_slice"),
-        col(catCol).cast("string").as("_c"))
-      .groupBy(col("_w"), col("_slice"))
-      .agg(graft.agg.ChiSquareDriftAgg.column(col("_c"), baseCounts,
-        graft.util.GridGuard.streamStateCap(df.sparkSession)).as("_x"))
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_slice").as(sliceCol),
-      col("_x").getField("n_live").as("n_live"),
-      col("_x").getField("k").as("k"),
-      col("_x").getField("chi2").as("chi2"),
-      col("_x").getField("chi2_crit").as("chi2_crit"),
-      col("_x").getField("drifted").as("drifted"))
+  /** One windowed drift lens: its stateless input projection (named, so
+    * gate members reading the same input share one column), its
+    * aggregate kernels given the [[graft.util.GridGuard]] state cap, and
+    * its named output fields over one aggregated cell. */
+  private[ext] final case class CellLens(inputs: Seq[(String, Column)],
+      kernels: Long => Seq[Column], fields: Seq[(String, Column)]) {
+    def apply(name: String): Column = fields.find(_._1 == name).get._2
+
+    /** The lens on its own: every field under its own name. */
+    def cells(df: DataFrame, tsCol: String, windowDur: String,
+        slice: Option[String]): DataFrame =
+      windowedCells(df, tsCol, windowDur, slice, Seq(this),
+        fields.map { case (n, c) => c.as(n) })
   }
 
-  /** THE WHOLE NIGHTLY DRIFT GATE AS ONE STATEFUL PASS:
-    * [[Eval.ksDriftWindowed]] + [[Eval.rankSumDriftWindowed]] +
-    * [[chiSquareDriftWindowed]] + [[psiWindowed]] evaluated in a SINGLE
-    * windowed aggregation — one state store, one shuffle, one watermark,
-    * where running the four monitors separately costs four stateful
-    * operators over the same stream (and in Structured Streaming, four
-    * checkpointed state stores). Per-window state is the union of the
-    * members' states: per-distinct-value counts (KS and rank-sum each
-    * hold one, both hard-capped at the [[graft.util.GridGuard]]
-    * ceiling), per-category counts (capped), and nBuckets PSI counters.
-    * Every member keeps its own arithmetic against its own driver-held
-    * baseline artifact — one [[Eval.ksBaseline]] table serves both
-    * unbinned members, [[chiSquareBaseline]] the categorical,
-    * [[psiBaseline]] the binned — so each output field is bit-identical
-    * to the standalone windowed member (suite-pinned), which is in turn
-    * pinned ≡ its batch test.
-    *
-    * Output is WIDE — one row per window, the alert row a nightly gate
-    * actually pages on: (ws, n_live, ks_d, ks_d_crit, ks_drifted, rs_u,
-    * rs_z, rs_drifted, chi2_k, chi2, chi2_crit, chi2_drifted, psi,
-    * psi_drifted, any_drifted). The same plan runs batch or streaming
-    * (add `withWatermark` upstream); a long 4-rows-per-window reshape
-    * would re-aggregate the stream once per lens, defeating the point.
-    * Feed ROUNDED `valCol` scores (the members' grid discipline). */
-  def driftReportWindowed(df: DataFrame, tsCol: String, valCol: String,
-      catCol: String, baseVals: Array[Double], baseCum: Array[Long],
-      baseCats: Map[String, Long], baseBuckets: Map[Int, Long],
-      baseTotal: Long, nBuckets: Int = 10, lo: Double = 0.0,
-      hi: Double = 1.0, windowDur: String = "1 day"): DataFrame = {
-    require(baseVals.length == baseCum.length && baseVals.nonEmpty,
-      "driftReportWindowed: empty or misaligned ks baseline")
-    require(baseCats.nonEmpty, "driftReportWindowed: empty cat baseline")
-    require(nBuckets > 0 && hi > lo && baseTotal > 0)
+  /** The windowed drift family's one cell core: ONE stateful aggregation
+    * keyed by the event-time window plus an optional slice column,
+    * carrying every lens's kernels over the lenses' shared input
+    * projection, reading the GridGuard state cap once, and emitting
+    * `ws` (and the slice column) before `fields`. The same plan runs
+    * batch or streaming (add `withWatermark` upstream); the watermark
+    * expires whole windows. */
+  private[ext] def windowedCells(df: DataFrame, tsCol: String,
+      windowDur: String, slice: Option[String], lenses: Seq[CellLens],
+      fields: Seq[Column]): DataFrame = {
     val cap = graft.util.GridGuard.streamStateCap(df.sparkSession)
-    val b = least(greatest(
-      floor((col(valCol) - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
-    val psiAggs = (0 until nBuckets).map(k =>
-      sum(when(col("_b") === k, 1L).otherwise(0L)).as(s"_c$k"))
-    val aggs = Seq(
-      graft.agg.KsDriftAgg.column(col("_v"), baseVals, baseCum, cap)
-        .as("_ks"),
-      graft.agg.RankSumDriftAgg.column(col("_v"), baseVals, baseCum, cap)
-        .as("_rs"),
-      graft.agg.ChiSquareDriftAgg.column(col("_c"), baseCats, cap)
-        .as("_x")) ++ psiAggs
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(valCol).cast("double").as("_v"), b.as("_b"),
-        col(catCol).cast("string").as("_c"))
-      .groupBy(col("_w"))
+    val inputs = lenses.flatMap(_.inputs).distinctBy(_._1)
+      .map { case (n, c) => c.as(n) }
+    val aggs = lenses.flatMap(_.kernels(cap))
+    val key = slice.toSeq
+    df.select(window(col(tsCol), windowDur).as("_w") +:
+        (key.map(s => col(s).as("_slice")) ++ inputs): _*)
+      .groupBy(col("_w") +: key.map(_ => col("_slice")): _*)
       .agg(aggs.head, aggs.tail: _*)
-    // the psiWindowed term shapes verbatim (fixed left fold, 6 dp)
-    val twRaw = (0 until nBuckets).map(k => col(s"_c$k")).reduce(_ + _)
-    val denomL = lit(0.5 * nBuckets)
-    val pDen = lit(baseTotal + 0.5 * nBuckets)
-    val terms = (0 until nBuckets).map { k =>
-      val p = (lit(baseBuckets.getOrElse(k, 0L)) + lit(0.5)) / pDen
-      val q = (col(s"_c$k") + lit(0.5)) /
-        (twRaw.cast("double") + denomL)
-      (q - p) * log(q / p)
-    }
-    val psi = round(terms.reduce(_ + _), 6)
-    val ksDrifted = col("_ks").getField("drifted")
-    val rsDrifted = col("_rs").getField("drifted")
-    val chiDrifted = col("_x").getField("drifted")
-    val psiDrifted = when(psi > 0.25, 1).otherwise(0)
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_ks").getField("n_live").as("n_live"),
-      col("_ks").getField("d").as("ks_d"),
-      col("_ks").getField("d_crit").as("ks_d_crit"),
-      ksDrifted.as("ks_drifted"),
-      col("_rs").getField("u").as("rs_u"),
-      col("_rs").getField("z").as("rs_z"),
-      rsDrifted.as("rs_drifted"),
-      col("_x").getField("k").as("chi2_k"),
-      col("_x").getField("chi2").as("chi2"),
-      col("_x").getField("chi2_crit").as("chi2_crit"),
-      chiDrifted.as("chi2_drifted"),
-      psi.as("psi"), psiDrifted.as("psi_drifted"),
-      greatest(ksDrifted, rsDrifted, chiDrifted, psiDrifted)
-        .as("any_drifted"))
+      .select(col("_w").getField("start").as("ws") +:
+        (key.map(s => col("_slice").as(s)) ++ fields): _*)
   }
 
-  /** [[driftReportWindowed]] BY SLICE — the one-pass gate per
-    * (event-time window, slice): "WHICH source drifted TODAY, by every
-    * lens", still ONE stateful windowed aggregation (the slice key just
-    * joins the window in the grouping, the [[Eval.ksDriftWindowedBy]]
-    * composition applied to the whole gate). Per-(window, slice) state
-    * is the union of the members' capped states; every cell compares to
-    * the same driver-held baseline artifacts. Each cell's wide row ≡
-    * [[driftReportWindowed]] on that slice's substream bit-for-bit
-    * (identical aggregate kernels — suite-pinned), stream ≡ batch.
-    * Returns (ws, sliceCol, n_live, ks_d, ks_d_crit, ks_drifted, rs_u,
-    * rs_z, rs_drifted, chi2_k, chi2, chi2_crit, chi2_drifted, psi,
-    * psi_drifted, any_drifted). */
-  def driftReportWindowedBy(df: DataFrame, tsCol: String,
-      sliceCol: String, valCol: String, catCol: String,
-      baseVals: Array[Double], baseCum: Array[Long],
-      baseCats: Map[String, Long], baseBuckets: Map[Int, Long],
-      baseTotal: Long, nBuckets: Int = 10, lo: Double = 0.0,
-      hi: Double = 1.0, windowDur: String = "1 day"): DataFrame = {
-    require(baseVals.length == baseCum.length && baseVals.nonEmpty,
-      "driftReportWindowedBy: empty or misaligned ks baseline")
-    require(baseCats.nonEmpty, "driftReportWindowedBy: empty cat baseline")
-    require(nBuckets > 0 && hi > lo && baseTotal > 0)
-    val cap = graft.util.GridGuard.streamStateCap(df.sparkSession)
-    val b = least(greatest(
-      floor((col(valCol) - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
-    val psiAggs = (0 until nBuckets).map(k =>
-      sum(when(col("_b") === k, 1L).otherwise(0L)).as(s"_c$k"))
-    val aggs = Seq(
-      graft.agg.KsDriftAgg.column(col("_v"), baseVals, baseCum, cap)
-        .as("_ks"),
-      graft.agg.RankSumDriftAgg.column(col("_v"), baseVals, baseCum, cap)
-        .as("_rs"),
-      graft.agg.ChiSquareDriftAgg.column(col("_c"), baseCats, cap)
-        .as("_x")) ++ psiAggs
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(sliceCol).as("_slice"),
-        col(valCol).cast("double").as("_v"), b.as("_b"),
-        col(catCol).cast("string").as("_c"))
-      .groupBy(col("_w"), col("_slice"))
-      .agg(aggs.head, aggs.tail: _*)
-    val twRaw = (0 until nBuckets).map(k => col(s"_c$k")).reduce(_ + _)
-    val denomL = lit(0.5 * nBuckets)
-    val pDen = lit(baseTotal + 0.5 * nBuckets)
-    val terms = (0 until nBuckets).map { k =>
-      val p = (lit(baseBuckets.getOrElse(k, 0L)) + lit(0.5)) / pDen
-      val q = (col(s"_c$k") + lit(0.5)) /
-        (twRaw.cast("double") + denomL)
-      (q - p) * log(q / p)
-    }
-    val psi = round(terms.reduce(_ + _), 6)
-    val ksDrifted = col("_ks").getField("drifted")
-    val rsDrifted = col("_rs").getField("drifted")
-    val chiDrifted = col("_x").getField("drifted")
-    val psiDrifted = when(psi > 0.25, 1).otherwise(0)
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_slice").as(sliceCol),
-      col("_ks").getField("n_live").as("n_live"),
-      col("_ks").getField("d").as("ks_d"),
-      col("_ks").getField("d_crit").as("ks_d_crit"),
-      ksDrifted.as("ks_drifted"),
-      col("_rs").getField("u").as("rs_u"),
-      col("_rs").getField("z").as("rs_z"),
-      rsDrifted.as("rs_drifted"),
-      col("_x").getField("k").as("chi2_k"),
-      col("_x").getField("chi2").as("chi2"),
-      col("_x").getField("chi2_crit").as("chi2_crit"),
-      chiDrifted.as("chi2_drifted"),
-      psi.as("psi"), psiDrifted.as("psi_drifted"),
-      greatest(ksDrifted, rsDrifted, chiDrifted, psiDrifted)
-        .as("any_drifted"))
-  }
+  /** `names` as fields of the aggregated struct column `struct`. */
+  private[ext] def structFields(struct: String,
+      names: String*): Seq[(String, Column)] =
+    names.map(n => n -> col(struct).getField(n))
 
-  /** [[psiWindowed]] BY SLICE — PSI per (event-time window, slice)
-    * against the same driver-held baseline histogram ("which source's
-    * score distribution shifted, per day" — the binned member of the
-    * windowed-by-slice composition, [[Eval.ksDriftWindowedBy]]'s shape
-    * for PSI). Still ONE stateful windowed aggregation carrying nBuckets
-    * conditional counters per (window, slice) — state stays
-    * nBuckets longs per cell regardless of event rate; the watermark
-    * expires whole windows. Per-cell output ≡ [[psiWindowed]] on the
-    * slice's substream (identical fixed left-fold term shapes).
-    * Returns (ws, sliceCol, n, psi) per (window, slice). */
-  def psiWindowedBy(df: DataFrame, tsCol: String, sliceCol: String,
-      valCol: String, baseCounts: Map[Int, Long], baseTotal: Long,
-      nBuckets: Int = 10, lo: Double = 0.0, hi: Double = 1.0,
-      windowDur: String = "1 day"): DataFrame = {
+  /** The chi² member's windowed lens ([[graft.agg.ChiSquareDriftAgg]]). */
+  private[ext] def chiSquareLens(catCol: String,
+      baseCounts: Map[String, Long]): CellLens =
+    CellLens(Seq("_c" -> col(catCol).cast("string")),
+      cap => Seq(graft.agg.ChiSquareDriftAgg.column(col("_c"), baseCounts,
+        cap).as("_x")),
+      structFields("_x", "n_live", "k", "chi2", "chi2_crit", "drifted"))
+
+  /** The PSI member's windowed lens: nBuckets conditional counters per
+    * cell, and the smoothed-term sum as a fixed left fold at 6 dp. */
+  private[ext] def psiLens(valCol: String, baseCounts: Map[Int, Long],
+      baseTotal: Long, nBuckets: Int, lo: Double, hi: Double): CellLens = {
     require(nBuckets > 0 && hi > lo && baseTotal > 0)
-    val b = least(greatest(
-      floor((col(valCol) - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
-    val aggs = (0 until nBuckets).map(k =>
-      sum(when(col("_b") === k, 1L).otherwise(0L)).as(s"_c$k"))
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(sliceCol).as("_slice"), b.as("_b"))
-      .groupBy(col("_w"), col("_slice"))
-      .agg(aggs.head, aggs.tail: _*)
     val twRaw = (0 until nBuckets).map(k => col(s"_c$k")).reduce(_ + _)
     val denomL = lit(0.5 * nBuckets)
     val pDen = lit(baseTotal + 0.5 * nBuckets)
@@ -835,10 +665,71 @@ object Outliers {
         (twRaw.cast("double") + denomL)
       (q - p) * log(q / p)
     }
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_slice").as(sliceCol),
-      twRaw.as("n"),
-      round(terms.reduce(_ + _), 6).as("psi"))
+    CellLens(Seq("_b" -> psiBucket(col(valCol), nBuckets, lo, hi)),
+      _ => (0 until nBuckets).map(k =>
+        sum(when(col("_b") === k, 1L).otherwise(0L)).as(s"_c$k")),
+      Seq("n" -> twRaw, "psi" -> round(terms.reduce(_ + _), 6)))
+  }
+
+  /** The KS / rank-sum / chi² columns both one-pass gates emit, in
+    * order: (n_live, ks_d, ks_d_crit, ks_drifted, rs_u, rs_z,
+    * rs_drifted, chi2_k, chi2, chi2_crit, chi2_drifted). */
+  private[ext] def gateFields(ks: CellLens, rs: CellLens,
+      chi: CellLens): Seq[Column] = Seq(
+    ks("n_live").as("n_live"), ks("d").as("ks_d"),
+    ks("d_crit").as("ks_d_crit"), ks("drifted").as("ks_drifted"),
+    rs("u").as("rs_u"), rs("z").as("rs_z"),
+    rs("drifted").as("rs_drifted"),
+    chi("k").as("chi2_k"), chi("chi2").as("chi2"),
+    chi("chi2_crit").as("chi2_crit"), chi("drifted").as("chi2_drifted"))
+
+  /** THE WHOLE NIGHTLY DRIFT GATE AS ONE STATEFUL PASS:
+    * [[Eval.ksDriftWindowed]] + [[Eval.rankSumDriftWindowed]] +
+    * [[chiSquareDriftWindowed]] + [[psiWindowed]] evaluated in a SINGLE
+    * windowed aggregation — one state store, one shuffle, one watermark,
+    * where running the four monitors separately costs four stateful
+    * operators over the same stream (and in Structured Streaming, four
+    * checkpointed state stores). Per-cell state is the union of the
+    * members' states: per-distinct-value counts (KS and rank-sum each
+    * hold one, both hard-capped at the [[graft.util.GridGuard]]
+    * ceiling), per-category counts (capped), and nBuckets PSI counters.
+    * Every member keeps its own arithmetic against its own driver-held
+    * baseline artifact — one [[Eval.ksBaseline]] table serves both
+    * unbinned members, [[chiSquareBaseline]] the categorical,
+    * [[psiBaseline]] the binned — so each output field is bit-identical
+    * to the standalone windowed member (suite-pinned), which is in turn
+    * pinned ≡ its batch test. With `slice`, one row per (window, slice)
+    * cell: every slice compares against the same driver-held baselines,
+    * not against the rest.
+    *
+    * Output is WIDE — one row per cell, the alert row a nightly gate
+    * actually pages on: (ws, [slice,] n_live, ks_d, ks_d_crit,
+    * ks_drifted, rs_u, rs_z, rs_drifted, chi2_k, chi2, chi2_crit,
+    * chi2_drifted, psi, psi_drifted, any_drifted). The same plan runs
+    * batch or streaming (add `withWatermark` upstream); a long
+    * 4-rows-per-window reshape would re-aggregate the stream once per
+    * lens, defeating the point. Feed ROUNDED `valCol` scores (the
+    * members' grid discipline). */
+  def driftReportWindowed(df: DataFrame, tsCol: String, valCol: String,
+      catCol: String, baseVals: Array[Double], baseCum: Array[Long],
+      baseCats: Map[String, Long], baseBuckets: Map[Int, Long],
+      baseTotal: Long, nBuckets: Int = 10, lo: Double = 0.0,
+      hi: Double = 1.0, windowDur: String = "1 day",
+      slice: Option[String] = None): DataFrame = {
+    require(baseVals.length == baseCum.length && baseVals.nonEmpty,
+      "driftReportWindowed: empty or misaligned ks baseline")
+    require(baseCats.nonEmpty, "driftReportWindowed: empty cat baseline")
+    val v = col(valCol).cast("double")
+    val ks = Eval.ksLens(v, baseVals, baseCum)
+    val rs = Eval.rankSumLens(v, baseVals, baseCum)
+    val chi = chiSquareLens(catCol, baseCats)
+    val psi = psiLens(valCol, baseBuckets, baseTotal, nBuckets, lo, hi)
+    val psiDrifted = when(psi("psi") > 0.25, 1).otherwise(0)
+    windowedCells(df, tsCol, windowDur, slice, Seq(ks, rs, chi, psi),
+      gateFields(ks, rs, chi) ++ Seq(psi("psi").as("psi"),
+        psiDrifted.as("psi_drifted"),
+        greatest(ks("drifted"), rs("drifted"), chi("drifted"), psiDrifted)
+          .as("any_drifted")))
   }
 
   /** WINSORIZE: clamp `valCol` into its per-key exact-percentile
@@ -882,9 +773,7 @@ object Outliers {
       baseline: Column, nBuckets: Int = 10, lo: Double = 0.0,
       hi: Double = 1.0): DataFrame = {
     require(nBuckets > 0 && hi > lo)
-    val b = least(greatest(
-      floor((col(valCol) - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
+    val b = psiBucket(col(valCol), nBuckets, lo, hi)
     val baseCounts = df.filter(baseline).select(b.as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_base"))
     val tb = df.filter(baseline).count()
@@ -909,56 +798,37 @@ object Outliers {
       .select(col("ws"), col("tw").as("n"), col("psi"))
   }
 
-  /** STREAMING-SHAPED [[psiOverTime]]: drift per event-time window as ONE
-    * windowed aggregation carrying nBuckets conditional counters — the
-    * plan Structured Streaming runs as-is (single stateful operator,
-    * complete or append mode; no dense-grid join, no second aggregation)
-    * against a DRIVER-HELD baseline histogram — the standing reference a
-    * deployed drift monitor ships with, refreshed only when the baseline
-    * re-snapshots. Batch output equals [[psiOverTime]] on the same
+  /** STREAMING-SHAPED [[psiOverTime]]: drift per event-time window (and
+    * per `slice` value, when given) as ONE windowed aggregation carrying
+    * nBuckets conditional counters — the plan Structured Streaming runs
+    * as-is (single stateful operator, complete or append mode; no
+    * dense-grid join, no second aggregation) against a DRIVER-HELD
+    * baseline histogram — the standing reference a deployed drift
+    * monitor ships with, refreshed only when the baseline re-snapshots.
+    * Every slice compares against the same driver-held baseline, not
+    * against the rest. Batch output equals [[psiOverTime]] on the same
     * baseline slice up to float summation order (suite-pinned at 1e-9;
     * the k-term reduce here is a fixed left fold, the grid sum there is
-    * an aggregate).
+    * an aggregate); a sliced cell equals the unsliced form on the
+    * slice's substream.
     *
-    * State per window = nBuckets longs — bounded regardless of corpus
-    * rate, the watermark expires old windows. */
+    * State per cell = nBuckets longs — bounded regardless of corpus
+    * rate, the watermark expires old windows. Returns
+    * (ws, [slice,] n, psi). */
   def psiWindowed(df: DataFrame, tsCol: String, valCol: String,
       baseCounts: Map[Int, Long], baseTotal: Long, nBuckets: Int = 10,
-      lo: Double = 0.0, hi: Double = 1.0,
-      windowDur: String = "1 day"): DataFrame = {
-    require(nBuckets > 0 && hi > lo && baseTotal > 0)
-    val b = least(greatest(
-      floor((col(valCol) - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
-    val aggs = (0 until nBuckets).map(k =>
-      sum(when(col("_b") === k, 1L).otherwise(0L)).as(s"_c$k"))
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"), b.as("_b"))
-      .groupBy(col("_w"))
-      .agg(aggs.head, aggs.tail: _*)
-    val twRaw = (0 until nBuckets).map(k => col(s"_c$k")).reduce(_ + _)
-    val denomL = lit(0.5 * nBuckets)
-    val pDen = lit(baseTotal + 0.5 * nBuckets)
-    val terms = (0 until nBuckets).map { k =>
-      val p = (lit(baseCounts.getOrElse(k, 0L)) + lit(0.5)) / pDen
-      val q = (col(s"_c$k") + lit(0.5)) /
-        (twRaw.cast("double") + denomL)
-      (q - p) * log(q / p)
-    }
-    agged.select(col("_w").getField("start").as("ws"),
-      twRaw.as("n"),
-      round(terms.reduce(_ + _), 6).as("psi"))
-  }
+      lo: Double = 0.0, hi: Double = 1.0, windowDur: String = "1 day",
+      slice: Option[String] = None): DataFrame =
+    psiLens(valCol, baseCounts, baseTotal, nBuckets, lo, hi)
+      .cells(df, tsCol, windowDur, slice)
 
   /** [[psiWindowed]]'s baseline inputs from a slice: (bucket → count,
     * total) — run once against the reference snapshot, hold on the
     * driver / in the job config. */
   def psiBaseline(df: DataFrame, valCol: String, nBuckets: Int = 10,
       lo: Double = 0.0, hi: Double = 1.0): (Map[Int, Long], Long) = {
-    val b = least(greatest(
-      floor((col(valCol) - lit(lo)) / lit(hi - lo) * lit(nBuckets)),
-      lit(0.0)), lit((nBuckets - 1).toDouble)).cast("int")
-    val rows = df.select(b.as("bucket")).groupBy("bucket").count()
+    val rows = df.select(psiBucket(col(valCol), nBuckets, lo, hi)
+        .as("bucket")).groupBy("bucket").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     (rows, rows.values.sum)
   }

@@ -783,42 +783,39 @@ object Similarity {
     (embeddingMean(df, vecCol), df.count())
 
   /** STREAMING-SHAPED [[embeddingDrift]]: the live slice's mean vector
-    * per EVENT-TIME window, compared against a DRIVER-HELD baseline mean
-    * (from [[embeddingDriftBaseline]] on the store's training corpus) —
-    * the alarm that tells an incrementally-appended ANN store its
-    * centroids have gone stale, as a standing monitor instead of a batch
-    * audit. ONE stateful windowed aggregation whose per-window state is
-    * d+1 doubles ([[graft.agg.VectorMeanAgg]]'s buffer — bounded
-    * regardless of event rate; the watermark expires old windows), then
-    * a narrow per-window projection computing cosine/L2 against the
-    * baseline literal. The same plan runs batch or streaming (add
-    * `withWatermark` upstream); batch ≡ stream and per-window batch ≡
-    * [[embeddingDrift]] on the window's slice are suite-pinned.
+    * per EVENT-TIME window (and per `slice` value, when given), compared
+    * against a DRIVER-HELD baseline mean (from [[embeddingDriftBaseline]]
+    * on the store's training corpus) — the alarm that tells an
+    * incrementally-appended ANN store its centroids have gone stale, as a
+    * standing monitor instead of a batch audit. ONE stateful windowed
+    * aggregation whose per-cell state is d+1 doubles
+    * ([[graft.agg.VectorMeanAgg]]'s buffer — bounded regardless of event
+    * rate; the watermark expires old windows), then a narrow per-cell
+    * projection computing cosine/L2 against the baseline literal. Every
+    * slice compares against the same driver-held baseline, not against
+    * the rest ([[embeddingDriftBy]] is the rest-relative batch lens). The
+    * same plan runs batch or streaming (add `withWatermark` upstream);
+    * batch ≡ stream, per-window batch ≡ [[embeddingDrift]] on the
+    * window's rows, and a sliced cell ≡ the unsliced form on the slice
+    * substream are suite-pinned.
     *
-    * Returns (ws, n_live, mean_cos, mean_l2) per window, 6 dp-rounded;
-    * cos is NULL if either mean is the zero vector. */
+    * Returns (ws, [slice,] n_live, mean_cos, mean_l2) per cell,
+    * 6 dp-rounded; cos is NULL if either mean is the zero vector. */
   def embeddingDriftWindowed(df: DataFrame, tsCol: String,
-      vecCol: String, baseMean: Array[Double],
-      windowDur: String = "1 day"): DataFrame = {
+      vecCol: String, baseMean: Array[Double], windowDur: String = "1 day",
+      slice: Option[String] = None): DataFrame = {
     require(baseMean.nonEmpty, "embeddingDriftWindowed: empty baseline")
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(vecCol).cast("array<double>").as("_x"))
-      .groupBy(col("_w"))
-      .agg(count(lit(1)).as("n_live"),
-        graft.agg.VectorMeanAgg.column(col("_x")).as("_m"))
-    baselineDriftCols(agged, baseMean, "embeddingDriftWindowed")
-      .select(col("_w").getField("start").as("ws"), col("n_live"),
-        col("mean_cos"), col("mean_l2"))
+    Outliers.CellLens(Seq("_x" -> col(vecCol).cast("array<double>")),
+        _ => Seq(count(lit(1)).as("_n"),
+          graft.agg.VectorMeanAgg.column(col("_x")).as("_m")),
+        ("n_live" -> col("_n")) +: baselineDriftFields(baseMean))
+      .cells(df, tsCol, windowDur, slice)
   }
 
-  /** The windowed embedding-drift family's shared downstream: cosine/L2
-    * of each cell's mean `_m` against the driver-held baseline — a
-    * narrow per-cell projection after the stateful aggregation, the
-    * same expressions for the unsliced and BY-slice forms so the pinned
-    * "per-cell ≡ unsliced twin" property is structural. */
-  private def baselineDriftCols(agged: DataFrame, baseMean: Array[Double],
-      op: String): DataFrame = {
+  /** Cosine/L2 of a cell's mean `_m` against the driver-held baseline —
+    * the narrow per-cell projection after the stateful aggregation. */
+  private def baselineDriftFields(
+      baseMean: Array[Double]): Seq[(String, Column)] = {
     val mb = array(baseMean.map(lit(_)).toIndexedSeq: _*)
     val nb = math.sqrt(baseMean.map(z => z * z).sum)
     // a live dim that disagrees with the baseline fails LOUDLY (the
@@ -827,52 +824,16 @@ object Similarity {
     val m = when(col("_m").isNull || size(col("_m")) === baseMean.length,
         col("_m"))
       .otherwise(raise_error(concat(
-        lit(s"$op: live dim "),
+        lit("embeddingDriftWindowed: live dim "),
         size(col("_m")).cast("string"),
         lit(s" != baseline dim ${baseMean.length}"))))
     def fold(c: Column) = aggregate(c, lit(0.0), (acc, x) => acc + x)
     val dotAb = fold(zip_with(m, mb, (a, b) => a * b))
     val nl = sqrt(fold(transform(m, a => a * a)))
     val l2 = sqrt(fold(zip_with(m, mb, (a, b) => (a - b) * (a - b))))
-    agged
-      .withColumn("mean_cos",
-        round(when(nl > 0 && lit(nb) > 0, dotAb / (nl * lit(nb))), 6))
-      .withColumn("mean_l2", round(l2, 6))
-  }
-
-  /** [[embeddingDriftWindowed]] BY SLICE — the drift matrix's last cell
-    * (VERDICT r13 task 2): "WHICH source's embedding space moved, PER
-    * day". The same ONE stateful aggregation with the slice key joined
-    * into the grouping (the [[graft.ext.Eval.ksDriftWindowedBy]]
-    * composition); per-(window, slice) state is
-    * [[graft.agg.VectorMeanAgg]]'s d+1 doubles — bounded regardless of
-    * event rate, CHEAPER than the KS member's capped value table — and
-    * the watermark expires whole windows. Every cell compares against
-    * the SAME driver-held baseline mean (from
-    * [[embeddingDriftBaseline]] on the store's training corpus), the
-    * q196–q199 convention: a serving monitor alarms each slice against
-    * the trained corpus, not against the other slices (r12/r13's
-    * exclusion of this cell wrongly carried [[embeddingDriftBy]]'s
-    * rest-relative BATCH semantics over to the serving twin, which none
-    * of the windowed-BY members use). Per-(window, slice) cell ≡
-    * [[embeddingDriftWindowed]] on the slice substream and stream ≡
-    * batch are suite-pinned. Returns
-    * (ws, sliceCol, n_live, mean_cos, mean_l2), 6 dp-rounded. */
-  def embeddingDriftWindowedBy(df: DataFrame, tsCol: String,
-      sliceCol: String, vecCol: String, baseMean: Array[Double],
-      windowDur: String = "1 day"): DataFrame = {
-    require(baseMean.nonEmpty, "embeddingDriftWindowedBy: empty baseline")
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(sliceCol).as("_slice"),
-        col(vecCol).cast("array<double>").as("_x"))
-      .groupBy(col("_w"), col("_slice"))
-      .agg(count(lit(1)).as("n_live"),
-        graft.agg.VectorMeanAgg.column(col("_x")).as("_m"))
-    baselineDriftCols(agged, baseMean, "embeddingDriftWindowedBy")
-      .select(col("_w").getField("start").as("ws"),
-        col("_slice").as(sliceCol), col("n_live"),
-        col("mean_cos"), col("mean_l2"))
+    Seq("mean_cos" ->
+        round(when(nl > 0 && lit(nb) > 0, dotAb / (nl * lit(nb))), 6),
+      "mean_l2" -> round(l2, 6))
   }
 
   /** TOP PRINCIPAL COMPONENT of the embedding corpus by POWER ITERATION

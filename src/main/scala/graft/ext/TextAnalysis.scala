@@ -1439,73 +1439,43 @@ object TextAnalysis {
   }
 
   /** STREAMING-SHAPED [[vocabDivergence]]: each event-time window's
-    * token distribution vs a DRIVER-HELD baseline vocabulary (from
+    * (and, when `slice` is given, each (window, slice) cell's) token
+    * distribution vs a DRIVER-HELD baseline vocabulary (from
     * [[vocabBaseline]] on the reference snapshot) — the crawl-drift
     * monitor as a standing alarm ("when did this feed's vocabulary
     * move") instead of a batch audit, completing the text member's
     * windowed form in the drift matrix. ONE stateful windowed
     * aggregation ([[graft.agg.VocabDriftAgg]]): `update` projects each
     * token onto the baseline's top-K vocabulary (everything else folds
-    * into one OOV cell), so per-window state is hard-bounded at K+1
+    * into one OOV cell), so per-cell state is hard-bounded at K+1
     * counters BY CONSTRUCTION regardless of event rate or vocabulary
     * growth — the Misra–Gries posture applied to drift state; the
-    * watermark expires whole windows. The statistic is the member's
-    * α-smoothed KL/JS arithmetic over the FIXED K+1 serving categories
-    * (vocab = K+1 in the smoothing denominators) — the projected
-    * statistic a bounded monitor can carry, NOT the full-vocab batch
-    * number; for "which tokens moved" run the batch member on the
+    * watermark expires whole windows. Every slice compares against the
+    * same driver-held baseline, not against the rest (the batch
+    * [[vocabDivergenceBy]] is the rest-relative lens). The statistic is
+    * the member's α-smoothed KL/JS arithmetic over the FIXED K+1 serving
+    * categories (vocab = K+1 in the smoothing denominators) — the
+    * projected statistic a bounded monitor can carry, NOT the full-vocab
+    * batch number; for "which tokens moved" run the batch member on the
     * flagged window. Same plan batch or streaming (add `withWatermark`
-    * upstream); stream ≡ batch and the arithmetic ≡ a local replay are
+    * upstream); stream ≡ batch, the arithmetic ≡ a local replay, and a
+    * sliced cell ≡ the unsliced form on the slice substream are
     * suite-pinned.
     *
-    * Returns (ws, n_live, kl_ab, kl_ba, js) per window — kl_ab =
+    * Returns (ws, [slice,] n_live, kl_ab, kl_ba, js) per cell — kl_ab =
     * KL(baseline‖window), 6 dp. */
   def vocabDivergenceWindowed(df: org.apache.spark.sql.DataFrame,
       tsCol: String, textCol: String, baseCounts: Map[String, Long],
-      baseTotal: Long, alpha: Double = 0.5,
-      windowDur: String = "1 day"): org.apache.spark.sql.DataFrame = {
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        explode(wordTokens(textCol)).as("_tok"))
-      .groupBy(col("_w"))
-      .agg(graft.agg.VocabDriftAgg.column(col("_tok"), baseCounts,
-        baseTotal, alpha).as("_v"))
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_v").getField("n_live").as("n_live"),
-      col("_v").getField("kl_ab").as("kl_ab"),
-      col("_v").getField("kl_ba").as("kl_ba"),
-      col("_v").getField("js").as("js"))
-  }
+      baseTotal: Long, alpha: Double = 0.5, windowDur: String = "1 day",
+      slice: Option[String] = None): org.apache.spark.sql.DataFrame =
+    Outliers.CellLens(Seq("_tok" -> explode(wordTokens(textCol))),
+        _ => Seq(graft.agg.VocabDriftAgg.column(col("_tok"), baseCounts,
+          baseTotal, alpha).as("_vd")),
+        vocabFields)
+      .cells(df, tsCol, windowDur, slice)
 
-  /** [[vocabDivergenceWindowed]] BY SLICE — "WHICH feed's vocabulary
-    * moved, PER day", the text member's windowed-BY-slice cell (the
-    * [[graft.ext.Eval.ksDriftWindowedBy]] composition): the slice key
-    * joins the window in the grouping of the SAME stateful aggregation,
-    * so per-(window, slice) state stays K+1 counters by construction
-    * and every cell compares against the same driver-held top-K
-    * baseline vocabulary (the serving convention — not the batch
-    * [[vocabDivergenceBy]]'s rest-relative lens). Per-cell ≡
-    * [[vocabDivergenceWindowed]] on the slice substream (structural —
-    * same aggregate, same baseline) and stream ≡ batch are
-    * suite-pinned. Returns (ws, sliceCol, n_live, kl_ab, kl_ba, js). */
-  def vocabDivergenceWindowedBy(df: org.apache.spark.sql.DataFrame,
-      tsCol: String, sliceCol: String, textCol: String,
-      baseCounts: Map[String, Long], baseTotal: Long, alpha: Double = 0.5,
-      windowDur: String = "1 day"): org.apache.spark.sql.DataFrame = {
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        col(sliceCol).as("_slice"),
-        explode(wordTokens(textCol)).as("_tok"))
-      .groupBy(col("_w"), col("_slice"))
-      .agg(graft.agg.VocabDriftAgg.column(col("_tok"), baseCounts,
-        baseTotal, alpha).as("_v"))
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_slice").as(sliceCol),
-      col("_v").getField("n_live").as("n_live"),
-      col("_v").getField("kl_ab").as("kl_ab"),
-      col("_v").getField("kl_ba").as("kl_ba"),
-      col("_v").getField("js").as("js"))
-  }
+  private def vocabFields =
+    Outliers.structFields("_vd", "n_live", "kl_ab", "kl_ba", "js")
 
   /** THE TEXT-FEED GATE AS ONE STATEFUL PASS — the
     * [[graft.ext.Outliers.driftReportWindowed]] fusion applied to a
@@ -1544,42 +1514,23 @@ object TextAnalysis {
     require(baseVals.length == baseCum.length && baseVals.nonEmpty,
       "textGateWindowed: empty or misaligned ks baseline")
     require(baseCats.nonEmpty, "textGateWindowed: empty cat baseline")
-    val cap = graft.util.GridGuard.streamStateCap(df.sparkSession)
-    val agged = df
-      .select(window(col(tsCol), windowDur).as("_w"),
-        round(qualityScore(textCol), 6).as("_v"),
-        col(catCol).cast("string").as("_c"),
-        wordTokens(textCol).as("_toks"))
-      .groupBy(col("_w"))
-      .agg(
-        graft.agg.KsDriftAgg.column(col("_v"), baseVals, baseCum, cap)
-          .as("_ks"),
-        graft.agg.RankSumDriftAgg.column(col("_v"), baseVals, baseCum,
-          cap).as("_rs"),
-        graft.agg.ChiSquareDriftAgg.column(col("_c"), baseCats, cap)
-          .as("_x"),
-        graft.agg.VocabDriftAgg.columnTokens(col("_toks"), vocabCounts,
-          vocabTotal, alpha).as("_vd"))
-    val ksDrifted = col("_ks").getField("drifted")
-    val rsDrifted = col("_rs").getField("drifted")
-    val chiDrifted = col("_x").getField("drifted")
-    agged.select(col("_w").getField("start").as("ws"),
-      col("_ks").getField("n_live").as("n_live"),
-      col("_ks").getField("d").as("ks_d"),
-      col("_ks").getField("d_crit").as("ks_d_crit"),
-      ksDrifted.as("ks_drifted"),
-      col("_rs").getField("u").as("rs_u"),
-      col("_rs").getField("z").as("rs_z"),
-      rsDrifted.as("rs_drifted"),
-      col("_x").getField("k").as("chi2_k"),
-      col("_x").getField("chi2").as("chi2"),
-      col("_x").getField("chi2_crit").as("chi2_crit"),
-      chiDrifted.as("chi2_drifted"),
-      col("_vd").getField("n_live").as("vocab_n_tokens"),
-      col("_vd").getField("kl_ab").as("vocab_kl_ab"),
-      col("_vd").getField("kl_ba").as("vocab_kl_ba"),
-      col("_vd").getField("js").as("vocab_js"),
-      greatest(ksDrifted, rsDrifted, chiDrifted).as("any_drifted"))
+    val q = round(qualityScore(textCol), 6)
+    val ks = Eval.ksLens(q, baseVals, baseCum)
+    val rs = Eval.rankSumLens(q, baseVals, baseCum)
+    val chi = Outliers.chiSquareLens(catCol, baseCats)
+    // one token ARRAY per document: the row grain the sibling kernels need
+    val vocab = Outliers.CellLens(Seq("_toks" -> wordTokens(textCol)),
+      _ => Seq(graft.agg.VocabDriftAgg.columnTokens(col("_toks"),
+        vocabCounts, vocabTotal, alpha).as("_vd")),
+      vocabFields)
+    Outliers.windowedCells(df, tsCol, windowDur, None,
+      Seq(ks, rs, chi, vocab),
+      Outliers.gateFields(ks, rs, chi) ++ Seq(
+        vocab("n_live").as("vocab_n_tokens"),
+        vocab("kl_ab").as("vocab_kl_ab"), vocab("kl_ba").as("vocab_kl_ba"),
+        vocab("js").as("vocab_js"),
+        greatest(ks("drifted"), rs("drifted"), chi("drifted"))
+          .as("any_drifted")))
   }
 
   /** PER-DOCUMENT TOKEN ENTROPY: Shannon entropy (nats) of the document's

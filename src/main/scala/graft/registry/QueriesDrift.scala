@@ -94,10 +94,13 @@ object QueriesDrift {
       val docs = Tables.load(s, dir, "documents").select(col("source"),
           round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
         .localCheckpoint(true)
-      materializedWithout(
-        ext.Eval.ksTest(
-          docs.filter(col("source") =!= "src9"),
-          docs.filter(col("source") === "src9"), "q"), docs)
+      // the member returns its result already pinned: release the
+      // corpus pin after it instead of pinning the result again
+      val out = ext.Eval.ksTest(
+        docs.filter(col("source") =!= "src9"),
+        docs.filter(col("source") === "src9"), "q")
+      graft.util.Checkpoints.release(docs)
+      out
     }),
 
 
@@ -108,8 +111,9 @@ object QueriesDrift {
       val docs = Tables.load(s, dir, "documents").select(col("source"),
           round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
         .localCheckpoint(true)
-      materializedWithout(
-        ext.Eval.ksTestBy(docs, "source", "q").orderBy("source"), docs)
+      val out = ext.Eval.ksTestBy(docs, "source", "q").orderBy("source")
+      graft.util.Checkpoints.release(docs)
+      out
     }),
 
 
@@ -144,10 +148,11 @@ object QueriesDrift {
       val docs = Tables.load(s, dir, "documents").select(col("source"),
           round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
         .localCheckpoint(true)
-      materializedWithout(
-        ext.Eval.rankSumTest(
-          docs.filter(col("source") =!= "src9"),
-          docs.filter(col("source") === "src9"), "q"), docs)
+      val out = ext.Eval.rankSumTest(
+        docs.filter(col("source") =!= "src9"),
+        docs.filter(col("source") === "src9"), "q")
+      graft.util.Checkpoints.release(docs)
+      out
     }),
 
     // ext: WINDOWED chi-squared drift — each day's event-type mix vs the
@@ -179,9 +184,9 @@ object QueriesDrift {
       val docs = Tables.load(s, dir, "documents").select(col("source"),
           round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
         .localCheckpoint(true)
-      materializedWithout(
-        ext.Eval.rankSumTestBy(docs, "source", "q").orderBy("source"),
-        docs)
+      val out = ext.Eval.rankSumTestBy(docs, "source", "q").orderBy("source")
+      graft.util.Checkpoints.release(docs)
+      out
     }),
     // ext: per-source chi-squared drift — every source's LANGUAGE MIX vs
     // the rest (the categorical by-slice view; rest = global minus own,
@@ -199,9 +204,6 @@ object QueriesDrift {
           round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
           col("lang"))
         .localCheckpoint(true)
-      // driftReport hands back an already-pinned 4-row frame, so the
-      // corpus pin releases directly — materializedWithout's re-pin of
-      // a pinned result was one more eager checkpoint job (r15)
       val out = ext.Outliers.driftReport(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q", "lang")
@@ -217,9 +219,10 @@ object QueriesDrift {
       val docs = Tables.load(s, dir, "documents").select(col("source"),
           round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
         .localCheckpoint(true)
-      materializedWithout(
-        ext.Outliers.psiDriftBy(docs, "source", "q", 10, 0.0, 1.0)
-          .orderBy("source"), docs)
+      val out = ext.Outliers.psiDriftBy(docs, "source", "q", 10, 0.0, 1.0)
+        .orderBy("source")
+      graft.util.Checkpoints.release(docs)
+      out
     }),
 
     // ext: per-label embedding drift — each label cluster's mean
@@ -240,8 +243,8 @@ object QueriesDrift {
         .select(col("ts"), col("event_type"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
-      pinSorted(ext.Eval.ksDriftWindowedBy(ev, "ts", "event_type", "v",
-        bv, bc), "ws", "event_type")
+      pinSorted(ext.Eval.ksDriftWindowed(ev, "ts", "v", bv, bc,
+        slice = Some("event_type")), "ws", "event_type")
     }),
 
     // ext: WINDOWED rank-sum drift BY SLICE — q190's location monitor per
@@ -252,8 +255,8 @@ object QueriesDrift {
         .select(col("ts"), col("event_type"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
-      pinSorted(ext.Eval.rankSumDriftWindowedBy(ev, "ts", "event_type",
-        "v", bv, bc), "ws", "event_type")
+      pinSorted(ext.Eval.rankSumDriftWindowed(ev, "ts", "v", bv, bc,
+        slice = Some("event_type")), "ws", "event_type")
     }),
 
     // ext: WINDOWED chi-squared drift BY SLICE — each (day, user cohort)'s
@@ -266,8 +269,8 @@ object QueriesDrift {
       val (bcnt, _) = ext.Outliers.chiSquareBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")),
         "event_type")
-      pinSorted(ext.Outliers.chiSquareDriftWindowedBy(ev, "ts", "cohort",
-        "event_type", bcnt), "ws", "cohort")
+      pinSorted(ext.Outliers.chiSquareDriftWindowed(ev, "ts", "event_type",
+        bcnt, slice = Some("cohort")), "ws", "cohort")
     }),
 
     // ext: WINDOWED PSI drift BY SLICE — the binned member of the
@@ -278,8 +281,8 @@ object QueriesDrift {
       val (bcm, bt) = ext.Outliers.psiBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")),
         "value", 10, 0.0, 500.0)
-      pinSorted(ext.Outliers.psiWindowedBy(ev, "ts", "event_type",
-        "value", bcm, bt, 10, 0.0, 500.0), "ws", "event_type")
+      pinSorted(ext.Outliers.psiWindowed(ev, "ts", "value", bcm, bt, 10,
+        0.0, 500.0, slice = Some("event_type")), "ws", "event_type")
     }),
 
     // ext: ONE-CALL BY-SLICE drift report — every source through every
@@ -291,7 +294,6 @@ object QueriesDrift {
           round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
           col("lang"))
         .localCheckpoint(true)
-      // driftReportBy hands back an already-pinned frame (the q193 note)
       val out = ext.Outliers.driftReportBy(docs, "source", "q", "lang")
       graft.util.Checkpoints.release(docs)
       out
@@ -325,9 +327,9 @@ object QueriesDrift {
       val (bv, bc) = ext.Eval.ksBaseline(week, "v")
       val (bcats, _) = ext.Outliers.chiSquareBaseline(week, "event_type")
       val (bb, bt) = ext.Outliers.psiBaseline(week, "v", 10, 0.0, 500.0)
-      pinSorted(ext.Outliers.driftReportWindowedBy(ev, "ts", "cohort",
-        "v", "event_type", bv, bc, bcats, bb, bt, 10, 0.0, 500.0),
-        "ws", "cohort")
+      pinSorted(ext.Outliers.driftReportWindowed(ev, "ts", "v",
+        "event_type", bv, bc, bcats, bb, bt, 10, 0.0, 500.0,
+        slice = Some("cohort")), "ws", "cohort")
     }),
 
     // ext: WINDOWED embedding drift BY SLICE — the drift matrix's last
@@ -345,8 +347,8 @@ object QueriesDrift {
         timestamp_seconds(lit(1704067200L) + (col("vec_id") % 3) * 86400L)
           .as("ts"),
         col("label"), col("embedding"))
-      ext.Similarity.embeddingDriftWindowedBy(live, "ts", "label",
-          "embedding", bm)
+      ext.Similarity.embeddingDriftWindowed(live, "ts", "embedding", bm,
+          slice = Some("label"))
         .orderBy("ws", "label")
     }),
   )

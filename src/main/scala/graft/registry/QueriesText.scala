@@ -388,8 +388,8 @@ object QueriesText {
         timestamp_seconds(lit(1704067200L) + (col("doc_id") % 3) * 86400L)
           .as("ts"),
         col("source"), col("text"))
-      ext.TextAnalysis.vocabDivergenceWindowedBy(live, "ts", "source",
-          "text", bc, bt)
+      ext.TextAnalysis.vocabDivergenceWindowed(live, "ts", "text", bc, bt,
+          slice = Some("source"))
         .orderBy("ws", "source")
     }),
 

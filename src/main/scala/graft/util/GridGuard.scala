@@ -41,12 +41,8 @@ object GridGuard {
   /** The ceiling as a HARD CAP for windowed-drift aggregate state
     * ([[graft.agg.KsDriftAgg]] and siblings): unbounded when the guard is
     * conf'd off, else the conf'd (or default) distinct-value ceiling. */
-  def streamStateCap(spark: org.apache.spark.sql.SparkSession): Long = {
-    val conf = spark.conf
-    if (!conf.getOption(EnabledConf).forall(_.toBoolean)) Long.MaxValue
-    else conf.getOption(MaxDistinctConf).map(_.toLong)
-      .getOrElse(DefaultMaxDistinct)
-  }
+  def streamStateCap(spark: org.apache.spark.sql.SparkSession): Long =
+    ceiling(spark).getOrElse(Long.MaxValue)
 
   /** The active ceiling, or None when the guard is conf'd off. */
   def ceiling(spark: org.apache.spark.sql.SparkSession): Option[Long] = {

@@ -4,11 +4,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.SparkTest
+import graft.util.{Checkpoints, GridGuard}
 
-/** Round-12 drift additions: chi-squared categorical drift and the
-  * Mann–Whitney rank-sum test (hand-computed cases; the random-sample
-  * property pin lives in PropertySuite). */
-class Round12OpsSuite extends AnyFunSuite {
+/** The drift family by component: the batch members (KS, rank-sum, chi²,
+  * PSI), their by-slice forms and the one-call reports — hand-computed
+  * cases, report ≡ member pins, and pin ownership (every member releases
+  * what it pins; the caller releases the result). Random-sample property
+  * pins live in PropertySuite, the windowed forms in EventStreamSuite. */
+class DriftSuite extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
   import spark.implicits._
 
@@ -91,5 +94,57 @@ class Round12OpsSuite extends AnyFunSuite {
         Outliers.chiSquareDrift(freeText, freeText, "c"))
       assert(e.getMessage.contains("chiSquareDrift"))
     } finally spark.conf.unset(graft.util.GridGuard.MaxDistinctConf)
+  }
+
+  test("driftReport psi row follows psiDrift when values are NULL") {
+    // psiDrift buckets a NULL value (greatest skips NULLs → bucket 0);
+    // the report's per-value table drops NULLs, so its psi row must add
+    // each side's NULL count back through the same bucket expression
+    val base = Seq[Option[Double]](Some(0.15), Some(0.35), Some(0.55),
+      Some(0.75), Some(0.95), Some(0.45)).map(v => (v, "c")).toDF("q", "c")
+    val live = Seq[Option[Double]](Some(0.15), None, None, None, Some(0.55),
+      Some(0.95)).map(v => (v, "c")).toDF("q", "c")
+    val psiM = Outliers.psiDrift(base, live, "q")
+      .agg(round(sum($"psi"), 6)).first().getDouble(0)
+    assert(psiM == 0.830325)
+    val rep = Outliers.driftReport(base, live, "q", "c")
+      .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
+    assert(rep("psi") == Seq(psiM, 0.25, 1))
+  }
+
+  test("every standalone drift member pins its result and leaves 0 net persistent RDDs once it is released") {
+    val df = (0 until 240).map { i =>
+      val g = "g" + (i % 3)
+      val v = if (g == "g2") 0.8 + (i % 4) * 0.05 else (i % 10) / 10.0
+      (g, math.round(v * 1e6) / 1e6, if (i % 5 == 0) "x" else "y")
+    }.toDF("g", "v", "c")
+    val base = df.filter($"g" =!= "g2")
+    val live = df.filter($"g" === "g2")
+    val members: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "ksTest" -> (() => Eval.ksTest(base, live, "v")),
+      "rankSumTest" -> (() => Eval.rankSumTest(base, live, "v")),
+      "ksTestBy" -> (() => Eval.ksTestBy(df, "g", "v")),
+      "rankSumTestBy" -> (() => Eval.rankSumTestBy(df, "g", "v")),
+      "psiDriftBy" -> (() => Outliers.psiDriftBy(df, "g", "v")),
+      "chiSquareDriftBy" -> (() => Outliers.chiSquareDriftBy(df, "g", "c")),
+      "driftReport" -> (() => Outliers.driftReport(base, live, "v", "c")),
+      "driftReportBy" -> (() => Outliers.driftReportBy(df, "g", "v", "c")))
+    val sc = spark.sparkContext
+    def runAll(): Map[String, Seq[Seq[Any]]] = members.map { case (name, f) =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = f()
+      val rows = out.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+      assert(sc.getPersistentRDDs.keySet.toSet != before,
+        s"$name must hand back a pinned result")
+      Checkpoints.release(out)
+      val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(leaked.isEmpty, s"$name leaked persistent RDDs $leaked")
+      name -> rows
+    }.toMap
+    val on = runAll()
+    spark.conf.set(GridGuard.EnabledConf, "false")
+    val off = try runAll() finally spark.conf.unset(GridGuard.EnabledConf)
+    for ((name, _) <- members)
+      assert(off(name) == on(name), s"$name rows differ with the guard off")
   }
 }

@@ -9,9 +9,10 @@ import graft.agg.SparkTest
 
 /** Round-13 drift-matrix completions: the two by-slice cells the docs
   * advertised (psiDriftBy / embeddingDriftBy) and the windowed-BY-slice
-  * composition (ksDriftWindowedBy / rankSumDriftWindowedBy /
-  * chiSquareDriftWindowedBy / psiWindowedBy), each pinned ≡ the verified
-  * member it derives from — the house property for every by-slice view.
+  * composition (the `slice` forms of ksDriftWindowed /
+  * rankSumDriftWindowed / chiSquareDriftWindowed / psiWindowed), each
+  * pinned ≡ the verified member it derives from — the house property for
+  * every by-slice view.
   * Plus Ivf.recommendNprobe, the serving default made callable. */
 class Round13OpsSuite extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
@@ -108,7 +109,8 @@ class Round13OpsSuite extends AnyFunSuite {
     val base = (0 until 50).map(i => (i % 10).toDouble).toDF("v")
     val live = slicedEvents
     val (bv, bc) = Eval.ksBaseline(base, "v")
-    val cells = Eval.ksDriftWindowedBy(live, "ts", "g", "v", bv, bc)
+    val cells = Eval.ksDriftWindowed(live, "ts", "v", bv, bc,
+        slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap
@@ -129,7 +131,8 @@ class Round13OpsSuite extends AnyFunSuite {
     val base = (0 until 50).map(i => (i % 10).toDouble).toDF("v")
     val live = slicedEvents
     val (bv, bc) = Eval.ksBaseline(base, "v")
-    val cells = Eval.rankSumDriftWindowedBy(live, "ts", "g", "v", bv, bc)
+    val cells = Eval.rankSumDriftWindowed(live, "ts", "v", bv, bc,
+        slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap
@@ -161,7 +164,7 @@ class Round13OpsSuite extends AnyFunSuite {
     }.toDF("id", "ts", "g", "c")
     val (bcounts, _) = Outliers.chiSquareBaseline(base, "c")
     val cells = Outliers
-      .chiSquareDriftWindowedBy(live, "ts", "g", "c", bcounts)
+      .chiSquareDriftWindowed(live, "ts", "c", bcounts, slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap
@@ -189,7 +192,8 @@ class Round13OpsSuite extends AnyFunSuite {
       live.filter(col("ts") < lit("2024-01-02").cast("timestamp")),
       "v", 10, 0.0, 15.0)
     val cells = Outliers
-      .psiWindowedBy(live, "ts", "g", "v", bcm, bt, 10, 0.0, 15.0)
+      .psiWindowed(live, "ts", "v", bcm, bt, 10, 0.0, 15.0,
+        slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap

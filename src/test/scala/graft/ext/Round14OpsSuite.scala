@@ -133,7 +133,8 @@ class Round14OpsSuite extends AnyFunSuite {
       docs.filter(col("ts") < lit("2024-01-02").cast("timestamp")),
       "text", topK = 5)
     val by = TextAnalysis
-      .vocabDivergenceWindowedBy(docs, "ts", "g", "text", bc, bt)
+      .vocabDivergenceWindowed(docs, "ts", "text", bc, bt,
+        slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap

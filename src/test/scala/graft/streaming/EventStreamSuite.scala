@@ -748,7 +748,7 @@ class EventStreamSuite extends AnyFunSuite {
     }.toDF("id", "ts", "g", "v")
     val (bv, bc) = graft.ext.Eval.ksBaseline(base, "v")
     val batch = graft.ext.Eval
-      .ksDriftWindowedBy(live, "ts", "g", "v", bv, bc)
+      .ksDriftWindowed(live, "ts", "v", bv, bc, slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap
@@ -758,7 +758,7 @@ class EventStreamSuite extends AnyFunSuite {
     val stream = spark.readStream.schema(live.schema).parquet(dir)
       .withWatermark("ts", "1 hour")
     val q = graft.ext.Eval
-      .ksDriftWindowedBy(stream, "ts", "g", "v", bv, bc)
+      .ksDriftWindowed(stream, "ts", "v", bv, bc, slice = Some("g"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("ksby_out")
       .trigger(Trigger.AvailableNow()).start()
@@ -773,12 +773,14 @@ class EventStreamSuite extends AnyFunSuite {
       live.filter(col("ts") < lit("2024-01-02").cast("timestamp")),
       "v", 10, 0.0, 15.0)
     val pBatch = graft.ext.Outliers
-      .psiWindowedBy(live, "ts", "g", "v", bcm, bt, 10, 0.0, 15.0)
+      .psiWindowed(live, "ts", "v", bcm, bt, 10, 0.0, 15.0,
+        slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap
     val q2 = graft.ext.Outliers
-      .psiWindowedBy(stream, "ts", "g", "v", bcm, bt, 10, 0.0, 15.0)
+      .psiWindowed(stream, "ts", "v", bcm, bt, 10, 0.0, 15.0,
+        slice = Some("g"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("psiby_out")
       .trigger(Trigger.AvailableNow()).start()
@@ -814,7 +816,8 @@ class EventStreamSuite extends AnyFunSuite {
     val (bm, bn) = graft.ext.Similarity.embeddingDriftBaseline(base)
     assert(bn == 30L)
     val batch = graft.ext.Similarity
-      .embeddingDriftWindowedBy(live, "ts", "g", "embedding", bm)
+      .embeddingDriftWindowed(live, "ts", "embedding", bm,
+        slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap
@@ -845,7 +848,8 @@ class EventStreamSuite extends AnyFunSuite {
     val stream = spark.readStream.schema(live.schema).parquet(dir)
       .withWatermark("ts", "1 hour")
     val q = graft.ext.Similarity
-      .embeddingDriftWindowedBy(stream, "ts", "g", "embedding", bm)
+      .embeddingDriftWindowed(stream, "ts", "embedding", bm,
+        slice = Some("g"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("embby_out")
       .trigger(Trigger.AvailableNow()).start()
@@ -896,17 +900,18 @@ class EventStreamSuite extends AnyFunSuite {
     val docsBy = docs.withColumn("g",
       (col("doc_id") % 2).cast("string"))
     val batchBy = graft.ext.TextAnalysis
-      .vocabDivergenceWindowedBy(docsBy, "ts", "g", "text", bc, bt)
+      .vocabDivergenceWindowed(docsBy, "ts", "text", bc, bt,
+        slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap
     assert(batchBy.size == 4)
     val q2 = graft.ext.TextAnalysis
-      .vocabDivergenceWindowedBy(
+      .vocabDivergenceWindowed(
         spark.readStream.schema(docs.schema).parquet(dir)
           .withWatermark("ts", "1 hour")
           .withColumn("g", (col("doc_id") % 2).cast("string")),
-        "ts", "g", "text", bc, bt)
+        "ts", "text", bc, bt, slice = Some("g"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("vocabby_out")
       .trigger(Trigger.AvailableNow()).start()
@@ -1105,8 +1110,8 @@ class EventStreamSuite extends AnyFunSuite {
     val (bv, bc) = graft.ext.Eval.ksBaseline(baseV, "v")
     val (bcats, _) = graft.ext.Outliers.chiSquareBaseline(baseC, "c")
     val (bb, bt) = graft.ext.Outliers.psiBaseline(baseV, "v", 10, 0.0, 15.0)
-    val cells = graft.ext.Outliers.driftReportWindowedBy(live, "ts", "g",
-        "v", "c", bv, bc, bcats, bb, bt, 10, 0.0, 15.0)
+    val cells = graft.ext.Outliers.driftReportWindowed(live, "ts", "v",
+        "c", bv, bc, bcats, bb, bt, 10, 0.0, 15.0, slice = Some("g"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap
@@ -1131,8 +1136,8 @@ class EventStreamSuite extends AnyFunSuite {
     live.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(live.schema).parquet(dir)
       .withWatermark("ts", "1 hour")
-    val q = graft.ext.Outliers.driftReportWindowedBy(stream, "ts", "g",
-        "v", "c", bv, bc, bcats, bb, bt, 10, 0.0, 15.0)
+    val q = graft.ext.Outliers.driftReportWindowed(stream, "ts", "v",
+        "c", bv, bc, bcats, bb, bt, 10, 0.0, 15.0, slice = Some("g"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("gateby_out")
       .trigger(Trigger.AvailableNow()).start()
