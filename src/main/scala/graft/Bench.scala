@@ -34,9 +34,7 @@ object Bench {
     val spark = Harness.session(
       Harness.cpus(Runtime.getRuntime.availableProcessors()))
 
-    // warm-up (untimed): JVM, codegen, parquet footers
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.load(spark, sfDir, "lineitem").limit(1).collect()
+    Harness.warmUp(spark, sfDir)
 
     // optional args: substrings selecting a query subset (local iteration),
     // or `__probe_<name>` / `__probes` to run scale probes in isolation
@@ -46,25 +44,12 @@ object Bench {
         probeArgs.exists(a => a == "__probes" || a.stripPrefix("__probe_") == name)
     val wanted =
       if (probeArgs.nonEmpty) Seq.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => args.isEmpty || args.exists(n.contains) }
-    // The timed action MATERIALIZES every output row (foreach), not
-    // count(): under count() Catalyst legitimately prunes everything the
-    // row count doesn't need — q77's whole strip computation vanished via
-    // row-preserving-join elimination and recorded a phantom 0.24 s for a
-    // ~2.4 s query. foreach consumes every column, so the measured plan is
-    // the one Verify actually writes.
-    // Failures surface as a -1.0 "timing" in the artifact (a crashed query
-    // must not masquerade as a fast one) plus a stderr line. After the
-    // run, the persistent blocks the query created are released outside
-    // the timed window (Harness.releasing).
+      else SparkEntry.select(SparkEntry.queries, args.toSeq)
+    // A failure surfaces as a -1.0 "timing" in the artifact (a crashed
+    // query must not masquerade as a fast one) plus a stderr line.
     def time(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
-      Harness.releasing(spark, s"[bench] $name") {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
-        (System.nanoTime() - t0) / 1e9
-      }.getOrElse(-1.0)
+      Harness.timed(spark, s"[bench] $name")(fn(spark, sfDir)).getOrElse(-1.0)
     // Fixed-work calibration: ~1G rows of hash+sum, pure CPU, no IO — its
     // cost on a given machine is a constant, so an inflated calibration
     // flags a contention-polluted window post-hoc (r5's recorded numbers
@@ -108,27 +93,6 @@ object Bench {
       .mkString("[", ",", "]")
     val extraLines = scala.collection.mutable.ArrayBuffer.empty[String]
 
-    // INTERLEAVED two-pass timing for probes — the query loop's
-    // discipline applied to the probe matrices. r8 timed each probe op
-    // min-of-2 BACK-TO-BACK, and a single multi-second contention window
-    // poisoned both samples of whichever op it landed on: ngram_prefix
-    // recorded 121× at 16× in the artifact while isolated reruns measure
-    // ~4-5× — and across bench reruns the inflated op MOVES (one run
-    // spiked lsh_dedup_win/minhash_cross ~30× with ngram_prefix at 5×).
-    // Timing the whole (factor × op) matrix in two passes with a
-    // per-cell min means a window must recur at the same matrix cell
-    // minutes apart to survive into the artifact.
-    def interleavedTimes[K](cells: Seq[(K, () => Long)])
-        : (Map[K, Double], Map[K, Long]) = {
-      val rows = scala.collection.mutable.Map.empty[K, Long]
-      def pass(): Map[K, Double] = cells.map { case (k, run) =>
-        val t0 = System.nanoTime()
-        rows(k) = run()
-        k -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-      val p1 = pass(); val p2 = pass()
-      (p1.map { case (k, v) => k -> math.min(v, p2(k)) }, rows.toMap)
-    }
     // Probes run first, but each still resets to a clean block-manager
     // state: a probe's own previous factor leaves checkpointed corpora
     // behind, and the GC hands dead shuffle/broadcast ids to the ASYNC
@@ -143,674 +107,20 @@ object Bench {
       case NonFatal(e) =>
         System.err.println(s"[bench] cache reset failed: ${e.getMessage}")
     }
-    // One probe cell: a clean block-manager state, then the cell's JSON
-    // line printed and kept for bench_out.json. A probe is diagnostics —
-    // a failure is logged and never takes down the bench line.
+    // One probe line: a clean block-manager state, then the line's JSON
+    // printed and kept for bench_out.json, and its stores deleted. A probe
+    // is diagnostics — a failure is logged and never takes down the bench.
     def probe(name: String)(line: => String): Unit =
       if (probeOn(name)) {
         dropCaches()
-        Harness.releasing(spark, s"[bench] probe $name")(line)
+        try Harness.releasing(spark, s"[bench] probe $name")(line)
           .foreach { l => println(l); extraLines += l }
+        finally Ladder.dropStores(spark, name)
       }
 
     calPoint()
 
-    // 100×-scale geometry probe (full runs only): the same BVH kernels on a
-    // 1.2M-cell grid vs the 12k oracle grid — per-row ns should be ~flat
-    // (linear total cost, shuffle-free fused scans) if the design scales.
-    probe("geometry") {
-      val cells = for {
-        factor <- Seq(1, 100)
-        (name, df) <- SparkEntry.geometryProbe(spark, factor).toSeq.sortBy(_._1)
-      } yield ((factor, name), () => math.max(df.count(), 1L))
-      val (times, rows) = interleavedTimes(cells)
-      val names = cells.map(_._1._2).distinct.sorted
-      val perRow = names.map { name =>
-        val (t1, n1) = (times((1, name)), rows((1, name)))
-        val (t100, n100) = (times((100, name)), rows((100, name)))
-        s"\"$name\":{\"sec_12k\":$t1,\"sec_1200k\":$t100," +
-          s"\"ns_per_row_12k\":${t1 * 1e9 / n1},\"ns_per_row_1200k\":${t100 * 1e9 / n100}}"
-      }.mkString("{", ",", "}")
-      s"""{"metric":"geometry_scale_probe","probes_isolated":true,"cells_small":12000,"cells_large":1200000,"kernels":$perRow}"""
-    }
-
-    // 16×-scale dedup probe (full runs only): the corpus replicated with
-    // per-copy token suffixes (textually disjoint copies — same near-dup
-    // structure, no cross-copy collisions). ratio_16x ≈ 16 certifies the
-    // LSH / prefix-filter paths stay linear in corpus size; a quadratic
-    // candidate join would show ≫16.
-    probe("dedup") {
-      // One dropCaches up front, then BOTH factors' ops are built before
-      // any timing (corpora localCheckpointed, stores written — all
-      // outside the timed windows). No dropCaches between factors: it
-      // would unpersist factor 1's localCheckpointed corpus, whose
-      // truncated lineage cannot recompute. The matrix then times in two
-      // interleaved passes (see interleavedTimes).
-      val built = Seq(1, 16).map { f =>
-        f -> SparkEntry.dedupProbe(spark, sfDir, f)
-      }
-      val cells = for {
-        (f, (ops, _)) <- built
-        (name, df) <- ops.toSeq.sortBy(_._1)
-      } yield ((f, name), () => { df.count(); 0L })
-      val (times, _) = interleavedTimes(cells)
-      // untimed diagnostics: candidate-pair volume per op, so a bad ratio
-      // is attributable (candidate blowup vs fixed-cost overhead)
-      val counts = built.toMap.map { case (f, (_, diag)) =>
-        f -> diag.toSeq.sortBy(_._1)
-          .map { case (name, df) => (name, df.count()) }.toMap
-      }
-      val names = built.head._2._1.keys.toSeq.sorted
-      val lines = names.map { name =>
-        val t1 = times((1, name)); val t16 = times((16, name))
-        val cand = counts(1).get(name).map { c1 =>
-          s",\"cand_pairs_1x\":$c1,\"cand_pairs_16x\":${counts(16)(name)}"
-        }.getOrElse("")
-        s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
-          s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}$cand}"
-      }.mkString("{", ",", "}")
-      s"""{"metric":"dedup_scale_probe","probes_isolated":true,"factor":16,"interleaved_passes":2,"ops":$lines}"""
-    }
-
-    // 16×-scale sketch probe (full runs only): heavy hitters (Misra-Gries
-    // sketch + exact recount) and bloom decontamination on the replicated
-    // corpus. Both operators are built INSIDE the timed thunk — their
-    // driver-side steps (the sketch merge, the bloom build + collect) are
-    // part of the operator's cost and must not leak outside the window
-    // the way a pre-built DataFrame would hide them. ratio_16x ≈ 16
-    // certifies the sketch passes stay linear (bounded sketch state, no
-    // vocabulary shuffle) while the corpus grows 16×.
-    probe("sketch") {
-      val corpora = Seq(1, 16).map { f =>
-        f -> SparkEntry.probeCorpus(spark, sfDir, f)
-      }
-      // The operators build INSIDE the timed thunk — their driver-side
-      // steps (sketch merge, bloom build + collect) are part of the
-      // operator's cost. That makes the FIRST invocation carry the
-      // kernels' JIT/classload too: r8's artifact read heavy_hitters at
-      // 8.93 s for 1× vs 0.59 s for 16× (ratio 0.066), impossible as
-      // steady state. One discarded 1× warmup invocation absorbs it.
-      locally {
-        val (docs, bench) = corpora.head._2
-        ext.TextAnalysis.heavyHitters(docs, "text", 20).count()
-        ext.Dedup.decontaminateBloom(docs, bench, "text", "doc_id").count()
-      }
-      val cells = for {
-        (f, (docs, bench)) <- corpora
-        (name, mk) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
-          "heavy_hitters" ->
-            (() => ext.TextAnalysis.heavyHitters(docs, "text", 20)),
-          "decontam_bloom" ->
-            (() => ext.Dedup.decontaminateBloom(docs, bench, "text", "doc_id")))
-      } yield ((f, name), () => { mk().count(); 0L })
-      val (times, _) = interleavedTimes(cells)
-      val names = Seq("heavy_hitters", "decontam_bloom")
-      val lines = names.map { name =>
-        val t1 = times((1, name)); val t16 = times((16, name))
-        s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
-          s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}}"
-      }.mkString("{", ",", "}")
-      s"""{"metric":"sketch_scale_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,"ops":$lines}"""
-    }
-
-    // 16×-scale eval probe (full runs only): the eval harness operators
-    // collapse the corpus map-side by design (per-score tables bounded by
-    // score granularity, k²-row confusion matrices) — so wall time should
-    // grow ~linearly with the corpus while the windowed/final stages stay
-    // constant-size. ratio_16x in [~1, ~16] certifies it empirically, the
-    // way the dedup/sketch ops are certified. Two interleaved passes; the
-    // per-cell min also absorbs first-use JIT.
-    probe("eval") {
-      import org.apache.spark.sql.functions.{col, length, round}
-      val corpora = Seq(1, 16).map { f =>
-        f -> SparkEntry.probeCorpus(spark, sfDir, f)._1
-      }
-      // a CHEAP deterministic score (bounded granularity, like a real
-      // rounded quality signal) — scoring with the full quality kernel
-      // here measured the kernel's own thread scaling, not the eval
-      // operators under test
-      def scored(docs: org.apache.spark.sql.DataFrame) =
-        docs.select(col("doc_id"),
-          round((length(col("text")) % 1000).cast("double") / 1000.0, 3)
-            .as("score"),
-          (col("doc_id") % 2).cast("int").as("label"))
-      val cells = for {
-        (f, docs) <- corpora
-        (name, mk) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
-          "pr_curve" ->
-            (() => ext.Eval.prCurve(scored(docs), "score", "label")),
-          "auc_roc" ->
-            (() => ext.Eval.aucRoc(scored(docs), "score", "label")),
-          "ecdf" -> (() => ext.Eval.ecdf(scored(docs), "score")),
-          "class_metrics" -> (() => ext.Eval.classMetrics(
-            docs.select(col("lang").as("label"), col("source").as("pred")),
-            "label", "pred")),
-          // r12 drift additions: same per-distinct-value collapse, plus
-          // the GridGuard pre-check pass — certified at 16× like the rest
-          "ks_test" -> (() => ext.Eval.ksTest(
-            scored(docs).filter(col("label") === 1),
-            scored(docs).filter(col("label") === 0), "score")),
-          "rank_sum" -> (() => ext.Eval.rankSumTest(
-            scored(docs).filter(col("label") === 1),
-            scored(docs).filter(col("label") === 0), "score")))
-      } yield ((f, name), () => { mk().count(); 0L })
-      val (times, _) = interleavedTimes(cells)
-      val names = Seq("pr_curve", "auc_roc", "ecdf", "class_metrics",
-        "ks_test", "rank_sum")
-      val lines = names.map { name =>
-        val t1 = times((1, name)); val t16 = times((16, name))
-        s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
-          s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}}"
-      }.mkString("{", ",", "}")
-      s"""{"metric":"eval_scale_probe","probes_isolated":true,"factor":16,"interleaved_passes":2,"ops":$lines}"""
-    }
-
-    // r9 text/cluster/GD probe at 16× corpus: vocabDivergence (vocab-sized
-    // full-outer merge), tokenEntropy (per-row HOF map — foreach, count()
-    // would prune the whole projection), zipfFit (TakeOrderedAndProject
-    // top-N), clusterQuality (O(n·k) broadcast-centroid scoring over 16×
-    // embeddings), logisticTrain (5 GD scans + gradient reduces). Same
-    // two-interleaved-pass min-per-cell discipline as the dedup probe.
-    probe("text9") {
-      import org.apache.spark.sql.functions.{col, max, lit}
-      val corpora = Seq(1, 16).map { f =>
-        f -> SparkEntry.probeCorpus(spark, sfDir, f)._1
-      }
-      val embBase = Tables.load(spark, sfDir, "embeddings")
-      val embStride = embBase.agg(max(col("vec_id"))).first().getLong(0) + 1L
-      val embs = Seq(1, 16).map { f =>
-        val rep = (0 until f).map(i => embBase.select(
-            (col("vec_id") + lit(i * embStride)).as("vec_id"),
-            col("embedding"), col("label"))).reduce(_ union _)
-        val ck = rep.localCheckpoint(true)
-        f -> ck
-      }
-      // synthetic ring+chord graph (i → i±1, i+7 mod n) at 1× and 16×
-      // nodes: times the per-round join-aggregate machinery itself,
-      // independent of how the edges were mined
-      val graphs = Seq(1, 16).map { f =>
-        val n = 20000L * f
-        val ids = spark.range(n).select(col("id"))
-        val e = ids.select(col("id").as("src"),
-            ((col("id") + 1L) % n).as("dst"))
-          .union(ids.select(col("id").as("src"),
-            ((col("id") + n - 1L) % n).as("dst")))
-          .union(ids.select(col("id").as("src"),
-            ((col("id") + 7L) % n).as("dst")))
-          .localCheckpoint(true)
-        f -> e
-      }
-      val cells =
-        (for {
-          (f, e) <- graphs
-          (name, run) <- Seq[(String, () => Long)](
-            // localThreshold = 0: the probe certifies the DISTRIBUTED
-            // round machinery — the small-graph driver fast path (r14)
-            // must never absorb the scale measurement
-            "pagerank" -> (() =>
-              { ext.Graph.pageRank(e, "src", "dst", 3,
-                localThreshold = 0).count(); 0L }),
-            "label_prop" -> (() => { ext.Graph.labelPropagation(e,
-              e.select((col("src") * 20L).as("node"),
-                (col("src") % 5L).cast("string").as("lab")).limit(1000),
-              "src", "dst", "node", "lab", 3,
-              localThreshold = 0).count(); 0L }),
-            "triangles" -> (() =>
-              { ext.Graph.triangleCount(e, "src", "dst").count(); 0L }),
-            "bfs_hops" -> (() => { ext.Graph.bfsHops(e,
-              e.select(col("src").as("node"))
-                .filter(col("node") % 100L === 0L),
-              "src", "dst", "node", 3, localThreshold = 0).count(); 0L }))
-        } yield ((f, name), run)) ++
-        (for {
-          (f, docs) <- corpora
-          (name, run) <- Seq[(String, () => Long)](
-            "vocab_div" -> (() => { ext.TextAnalysis.vocabDivergence(
-              docs.filter(col("lang") === "en"),
-              docs.filter(col("lang") =!= "en"), "text").count(); 0L }),
-            "token_entropy" -> (() => { ext.TextAnalysis
-              .tokenEntropy(docs, "doc_id", "text")
-              .foreach((_: org.apache.spark.sql.Row) => ()); 0L }),
-            "zipf_fit" -> (() => { ext.TextAnalysis
-              .zipfFit(docs, "text", 200).count(); 0L }),
-            "cms_cells" -> (() => { ext.Cms.estimates(
-              ext.Cms.cells(docs.select(org.apache.spark.sql.functions
-                .explode(ext.TextAnalysis.wordTokens("text")).as("tok")),
-                "tok"),
-              docs.sparkSession.createDataFrame(
-                java.util.Arrays.asList(
-                  org.apache.spark.sql.Row("hash"),
-                  org.apache.spark.sql.Row("join")),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("tok",
-                    org.apache.spark.sql.types.StringType)))),
-              "tok").count(); 0L }),
-            "quantile_norm" -> (() => { ext.Eval.quantileNormalize(
-              docs.select(col("doc_id"), col("lang"),
-                (org.apache.spark.sql.functions.length(col("text")) % 997)
-                  .cast("double").as("x")),
-              "lang", "x").count(); 0L }),
-            "logistic_train" -> (() => { ext.TextAnalysis.logisticTrain(
-              docs.select(col("doc_id"),
-                (org.apache.spark.sql.functions.length(col("text")) % 97)
-                  .cast("double").divide(97.0).as("x1"),
-                (col("doc_id") % 7).cast("double").divide(7.0).as("x2"),
-                (col("doc_id") % 2).cast("double").as("y")),
-              Seq("x1", "x2"), "y"); 0L }),
-            // r14 vocab drift forms: by-slice (one (slice, token)
-            // aggregation + dense slice x vocab grid) and windowed
-            // (K+1 bounded counters per window) — ratio_16x ~<= 16
-            // certifies both stay linear in corpus size
-            "vocab_div_by" -> (() => { ext.TextAnalysis
-              .vocabDivergenceBy(docs, "source", "text").count(); 0L }),
-            "vocab_windowed" -> (() => {
-              val live = docs.select(
-                org.apache.spark.sql.functions.timestamp_seconds(
-                  org.apache.spark.sql.functions.lit(1704067200L) +
-                    (col("doc_id") % 3) * 86400L).as("ts"),
-                col("text"))
-              val (vc, vt) = ext.TextAnalysis.vocabBaseline(
-                docs.filter(col("doc_id") % 2 === 0), "text", 50)
-              ext.TextAnalysis.vocabDivergenceWindowed(live, "ts",
-                "text", vc, vt).count(); 0L }))
-        } yield ((f, name), run)) ++
-        (for ((f, emb) <- embs) yield ((f, "cluster_quality"),
-          () => { ext.Similarity.clusterQuality(emb, "label").count(); 0L }))
-      val (times, _) = interleavedTimes(cells)
-      val names = Seq("vocab_div", "vocab_div_by", "vocab_windowed",
-        "token_entropy", "zipf_fit",
-        "cms_cells", "quantile_norm", "logistic_train", "cluster_quality",
-        "pagerank", "label_prop", "triangles", "bfs_hops")
-      val lines = names.map { name =>
-        val t1 = times((1, name)); val t16 = times((16, name))
-        s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
-          s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}}"
-      }.mkString("{", ",", "}")
-      s"""{"metric":"text9_scale_probe","probes_isolated":true,"factor":16,"interleaved_passes":2,"ops":$lines}"""
-    }
-
-    // BPE kernel probe (full runs only): q75_bpe_train drifted 1.17→2.22 s
-    // r9→r10 with zero commits touching the kernel (VERDICT r10 #1, r9
-    // task 7). This cell times bpeTrain and bpeEncode ALONE — fixed
-    // numMerges=8, the q75/q83 workload — in a JVM state untouched by the
-    // 180-query passes, two interleaved passes with per-cell min. Kernel
-    // flat here while the in-suite number drifts ⇒ suite-JVM pressure
-    // (codegen-cache/block-manager accumulation), not a kernel
-    // regression; kernel slow here too ⇒ a real regression to fix.
-    probe("bpe") {
-      val docs = Tables.load(spark, sfDir, "documents")
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("text"))
-        .localCheckpoint(true) // time the kernel, not the parquet scan
-      // discard first use: the merge loop's codegen/classload
-      ext.TextAnalysis.bpeTrain(docs, "text", 8).count()
-      val cells = Seq[(String, () => Long)](
-        "bpe_train" ->
-          (() => { ext.TextAnalysis.bpeTrain(docs, "text", 8).count(); 0L }),
-        "bpe_encode" -> (() => { ext.TextAnalysis
-          .bpeEncode(docs, "doc_id", "text", 8)
-          .foreach((_: org.apache.spark.sql.Row) => ()); 0L }),
-        "lm_score" -> (() => { ext.TextAnalysis
-          .lmScore(docs, "doc_id", "text")
-          .foreach((_: org.apache.spark.sql.Row) => ()); 0L }))
-      val (times, _) = interleavedTimes(cells)
-      val lines = cells.map { case (name, _) =>
-        s"\"$name\":${times(name)}"
-      }.mkString("{", ",", "}")
-      s"""{"metric":"bpe_kernel_probe","probes_isolated":true,"num_merges":8,"warmup":true,"interleaved_passes":2,"ops":$lines}"""
-    }
-
-    // keep-best kernel probe: q154_keep_best drifted 1.18→2.32 s r10→r11
-    // with its plan (minhashLsh → qualityScore → canonicalByScore)
-    // unchanged (VERDICT r11 "What's wrong" #2 — one-round watch item).
-    // This cell times canonicalByScore ALONE: the pair list and the scored
-    // frame are pre-built and checkpointed OUTSIDE the timed window at
-    // 1×/16×, so the number is the component-solve + top-1-window kernel,
-    // attributable separately from the LSH and scorer stages. Kernel flat
-    // here while the in-suite number drifts ⇒ suite-JVM/calibration noise;
-    // slow here too ⇒ a real regression.
-    probe("keepbest") {
-      import org.apache.spark.sql.functions.{col, round => sround}
-      val built = Seq(1, 16).map { f =>
-        val (docs, _) = SparkEntry.probeCorpus(spark, sfDir, f)
-        val pairs = ext.Dedup.minhashLsh(docs, "text", "doc_id",
-          numHashes = 16, bands = 4, minJaccard = 0.3).localCheckpoint(true)
-        val scored = docs.select(col("doc_id"),
-            sround(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-          .localCheckpoint(true)
-        f -> ((pairs, scored))
-      }
-      // discard first use: the component solve + window codegen/classload
-      locally { val (p, sc0) = built.head._2
-        ext.Dedup.canonicalByScore(sc0, "doc_id", p, "q").count() }
-      val cells = for ((f, (p, sc0)) <- built) yield
-        ((f, "canonical_by_score"),
-          () => { ext.Dedup.canonicalByScore(sc0, "doc_id", p, "q").count(); 0L })
-      val (times, _) = interleavedTimes(cells)
-      val pairCounts = built.map { case (f, (p, _)) => f -> p.count() }.toMap
-      val (t1, t16) = (times((1, "canonical_by_score")), times((16, "canonical_by_score")))
-      s"""{"metric":"keepbest_kernel_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,""" +
-        s""""sec_1x":$t1,"sec_16x":$t16,"ratio_16x":${t16 / math.max(t1, 1e-9)},""" +
-        s""""pairs_1x":${pairCounts(1)},"pairs_16x":${pairCounts(16)},""" +
-        s""""note":"canonicalByScore alone on the q154 pair set; pairs grow ~16x by construction (replicated corpus)"}"""
-    }
-
-    // vocab-divergence kernel probe: q129 drifted 0.54→0.79 s r11→r12
-    // with no commits touching its code path (VERDICT r12 "What's wrong"
-    // #4 — a one-round watch item; it is NOT in the GridGuard family the
-    // round's attributed cluster belongs to). This cell times
-    // vocabDivergence ALONE: the en/non-en projections are pre-built and
-    // checkpointed OUTSIDE the timed window at 1×/16×, so the number is
-    // the token-histogram + KL/JS kernel, attributable separately from
-    // the parquet scan and lang filter the in-suite q129 also pays.
-    // Kernel flat here while the in-suite number drifts ⇒
-    // suite-JVM/calibration noise; slow here too ⇒ a real regression.
-    probe("vocabdiv") {
-      import org.apache.spark.sql.functions.col
-      val built = Seq(1, 16).map { f =>
-        val (docs, _) = SparkEntry.probeCorpus(spark, sfDir, f)
-        val en = docs.filter(col("lang") === "en").localCheckpoint(true)
-        val non = docs.filter(col("lang") =!= "en").localCheckpoint(true)
-        f -> ((en, non))
-      }
-      // discard first use: the HOF-chain codegen/classload
-      locally { val (en, non) = built.head._2
-        ext.TextAnalysis.vocabDivergence(en, non, "text").count() }
-      val cells = for ((f, (en, non)) <- built) yield
-        ((f, "vocab_divergence"),
-          () => { ext.TextAnalysis.vocabDivergence(en, non, "text")
-            .count(); 0L })
-      val (times, _) = interleavedTimes(cells)
-      val (t1, t16) =
-        (times((1, "vocab_divergence")), times((16, "vocab_divergence")))
-      s"""{"metric":"vocabdiv_kernel_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,""" +
-        s""""sec_1x":$t1,"sec_16x":$t16,"ratio_16x":${t16 / math.max(t1, 1e-9)},""" +
-        s""""note":"vocabDivergence alone on pre-checkpointed en/non-en projections; the q129 watch item's attribution cell"}"""
-    }
-
-    // drift-gate fusion probe: driftReportWindowed's one-pass claim,
-    // measured — the q201 gate (all four windowed drift monitors in ONE
-    // stateful aggregation) vs the four members run separately over the
-    // same pinned stream. Batch understates the win (streaming adds one
-    // checkpointed state store per member); this cell grounds the batch
-    // share of it.
-    probe("gate") {
-      import org.apache.spark.sql.functions.{col, lit, round => sround}
-      val ev = Tables.load(spark, sfDir, "events")
-        .select(col("ts"), sround(col("value"), 2).as("v"),
-          col("event_type"))
-        .localCheckpoint(true)
-      val week = ev.filter(col("ts") < lit("2024-01-08").cast("timestamp"))
-      val (bv, bc) = ext.Eval.ksBaseline(week, "v")
-      val (bcats, _) = ext.Outliers.chiSquareBaseline(week, "event_type")
-      val (bb, bt) = ext.Outliers.psiBaseline(week, "v", 10, 0.0, 500.0)
-      def drain(df: org.apache.spark.sql.DataFrame): Unit =
-        df.foreach((_: org.apache.spark.sql.Row) => ())
-      def gate(): Long = {
-        drain(ext.Outliers.driftReportWindowed(ev, "ts", "v",
-          "event_type", bv, bc, bcats, bb, bt, 10, 0.0, 500.0)); 0L }
-      def members(): Long = {
-        drain(ext.Eval.ksDriftWindowed(ev, "ts", "v", bv, bc))
-        drain(ext.Eval.rankSumDriftWindowed(ev, "ts", "v", bv, bc))
-        drain(ext.Outliers.chiSquareDriftWindowed(ev, "ts", "event_type",
-          bcats))
-        drain(ext.Outliers.psiWindowed(ev, "ts", "v", bb, bt, 10, 0.0,
-          500.0)); 0L }
-      gate(); members() // discard first-use codegen/classload
-      val cells = Seq[(String, () => Long)](
-        "gate_one_pass" -> (() => gate()),
-        "members_four_passes" -> (() => members()))
-      val (times, _) = interleavedTimes(cells)
-      val (tg, tm) = (times("gate_one_pass"), times("members_four_passes"))
-      s"""{"metric":"gate_fusion_probe","probes_isolated":true,"warmup":true,"interleaved_passes":2,""" +
-        s""""gate_one_pass_sec":$tg,"members_four_passes_sec":$tm,""" +
-        s""""speedup":${tm / math.max(tg, 1e-9)},""" +
-        s""""note":"q201's one stateful aggregation vs the four windowed monitors separately (batch share of the win; streaming adds one checkpointed state store per member)"}"""
-    }
-
-    // text-gate fusion probe: q207's one-pass claim — the four document
-    // monitors (quality KS, rank-sum, lang chi², vocabulary KL/JS) as
-    // ONE stateful aggregation vs called separately, at 1× and 16×
-    // corpus, from the same pre-checkpointed RAW (ts, lang, text) pin.
-    // Both sides pay their own scoring the way a user deploys them: the
-    // gate scores and tokenizes ONCE inside its single pre-projection;
-    // the members each project what they need (KS and rank-sum each run
-    // the quality-regex chain, the vocabulary monitor re-tokenizes and
-    // explodes) — the fusion's claim is exactly that shared scan +
-    // shared scoring + one state store, so the members side must not be
-    // handed a precomputed score the standalone deployment wouldn't have.
-    probe("textgate") {
-      import org.apache.spark.sql.functions.{col, lit, round => sround,
-        timestamp_seconds}
-      val built = Seq(1, 16).map { f =>
-        val (docs0, _) = SparkEntry.probeCorpus(spark, sfDir, f)
-        val docs = docs0.select(
-            timestamp_seconds(lit(1704067200L) +
-              (col("doc_id") % 3) * 86400L).as("ts"),
-            col("lang"), col("text"))
-          .localCheckpoint(true)
-        val week = docs.filter(
-          col("ts") < lit("2024-01-02").cast("timestamp"))
-        val (bv, bc) = ext.Eval.ksBaseline(
-          week.select(sround(ext.TextAnalysis.qualityScore("text"), 6)
-            .as("q")), "q")
-        val (bcats, _) = ext.Outliers.chiSquareBaseline(week, "lang")
-        val (vc, vt) = ext.TextAnalysis.vocabBaseline(week, "text", 50)
-        f -> ((docs, bv, bc, bcats, vc, vt))
-      }
-      def drain(df: org.apache.spark.sql.DataFrame): Unit =
-        df.foreach((_: org.apache.spark.sql.Row) => ())
-      def scoredOf(docs: org.apache.spark.sql.DataFrame) =
-        docs.select(col("ts"),
-          sround(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-      def gate(b: (org.apache.spark.sql.DataFrame, Array[Double],
-          Array[Long], Map[String, Long], Map[String, Long], Long)): Long = {
-        val (docs, bv, bc, bcats, vc, vt) = b
-        drain(ext.TextAnalysis.textGateWindowed(docs, "ts", "text",
-          "lang", bv, bc, bcats, vc, vt)); 0L }
-      def members(b: (org.apache.spark.sql.DataFrame, Array[Double],
-          Array[Long], Map[String, Long], Map[String, Long], Long)): Long = {
-        val (docs, bv, bc, bcats, vc, vt) = b
-        drain(ext.Eval.ksDriftWindowed(scoredOf(docs), "ts", "q", bv, bc))
-        drain(ext.Eval.rankSumDriftWindowed(scoredOf(docs), "ts", "q",
-          bv, bc))
-        drain(ext.Outliers.chiSquareDriftWindowed(docs, "ts", "lang",
-          bcats))
-        drain(ext.TextAnalysis.vocabDivergenceWindowed(docs, "ts",
-          "text", vc, vt)); 0L }
-      gate(built.head._2); members(built.head._2) // discard first use
-      val cells = for {
-        (f, b) <- built
-        (name, run) <- Seq[(String, () => Long)](
-          "gate_one_pass" -> (() => gate(b)),
-          "members_four_passes" -> (() => members(b)))
-      } yield ((f, name), run)
-      val (times, _) = interleavedTimes(cells)
-      def pair(f: Int): String = {
-        val tg = times((f, "gate_one_pass"))
-        val tm = times((f, "members_four_passes"))
-        s""""gate_sec":$tg,"members_sec":$tm,""" +
-          s""""speedup":${tm / math.max(tg, 1e-9)}"""
-      }
-      s"""{"metric":"textgate_fusion_probe","probes_isolated":true,"warmup":true,"interleaved_passes":2,""" +
-        s""""1x":{${pair(1)}},"16x":{${pair(16)}},""" +
-        s""""note":"q207's one stateful aggregation vs the four document monitors deployed separately, each side paying its own scoring from the same raw (ts,lang,text) pin — the gate scores/tokenizes once, the members pay the quality regex twice and re-tokenize (batch share; streaming adds one state store per member)"}"""
-    }
-
-    // driftReport fusion probe (VERDICT r13 #2/#3): q193's one-pass claim
-    // — ONE shared per-value table feeding PSI/KS/rank-sum vs the four
-    // members called separately — measured on the SAME pre-checkpointed
-    // scored projection (the quality-regex chain is paid outside every
-    // timed window, so the number is the composition cost alone), at 1×
-    // and 16× corpus. Ditto the by-slice sibling (q200's composition vs
-    // its four by-slice members). A speedup ≪ the scaladoc's "three
-    // corpus passes saved" at 1× that GROWS toward it at 16× means the
-    // saving is real but fixed-overhead-masked at sf0.1; ~1.0 at both
-    // factors means the claim must be retracted.
-    probe("driftreport") {
-      import org.apache.spark.sql.functions.{col, round => sround}
-      val built = Seq(1, 16).map { f =>
-        val (docs0, _) = SparkEntry.probeCorpus(spark, sfDir, f)
-        val docs = docs0.select(col("source"),
-            sround(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
-            col("lang"))
-          .localCheckpoint(true)
-        val base = docs.filter(col("source") =!= "src9").localCheckpoint(true)
-        val live = docs.filter(col("source") === "src9").localCheckpoint(true)
-        f -> ((docs, base, live))
-      }
-      def drain(df: org.apache.spark.sql.DataFrame): Unit =
-        df.foreach((_: org.apache.spark.sql.Row) => ())
-      def report(b: org.apache.spark.sql.DataFrame,
-          l: org.apache.spark.sql.DataFrame): Long = {
-        drain(ext.Outliers.driftReport(b, l, "q", "lang")); 0L }
-      def members(b: org.apache.spark.sql.DataFrame,
-          l: org.apache.spark.sql.DataFrame): Long = {
-        drain(ext.Outliers.psiDrift(b, l, "q"))
-        drain(ext.Eval.ksTest(b, l, "q"))
-        drain(ext.Eval.rankSumTest(b, l, "q"))
-        drain(ext.Outliers.chiSquareDrift(b, l, "lang")); 0L }
-      def reportBy(d: org.apache.spark.sql.DataFrame): Long = {
-        drain(ext.Outliers.driftReportBy(d, "source", "q", "lang")); 0L }
-      def membersBy(d: org.apache.spark.sql.DataFrame): Long = {
-        drain(ext.Outliers.psiDriftBy(d, "source", "q", 10, 0.0, 1.0))
-        drain(ext.Eval.ksTestBy(d, "source", "q"))
-        drain(ext.Eval.rankSumTestBy(d, "source", "q"))
-        drain(ext.Outliers.chiSquareDriftBy(
-          d.select(col("source"), col("lang")), "source", "lang")); 0L }
-      locally { val (d, b, l) = built.head._2 // discard first-use codegen
-        report(b, l); members(b, l); reportBy(d); membersBy(d) }
-      val cells = for {
-        (f, (d, b, l)) <- built
-        (name, run) <- Seq[(String, () => Long)](
-          "report_one_call" -> (() => report(b, l)),
-          "report_members_separate" -> (() => members(b, l)),
-          "report_by_one_call" -> (() => reportBy(d)),
-          "report_by_members_separate" -> (() => membersBy(d)))
-      } yield ((f, name), run)
-      val (times, _) = interleavedTimes(cells)
-      def pair(one: String, sep: String, f: Int): String = {
-        val to = times((f, one)); val ts = times((f, sep))
-        s""""one_call_sec":$to,"members_sec":$ts,""" +
-          s""""speedup":${ts / math.max(to, 1e-9)}"""
-      }
-      s"""{"metric":"driftreport_fusion_probe","probes_isolated":true,"warmup":true,"interleaved_passes":2,""" +
-        s""""report":{"1x":{${pair("report_one_call", "report_members_separate", 1)}},"16x":{${pair("report_one_call", "report_members_separate", 16)}}},""" +
-        s""""report_by":{"1x":{${pair("report_by_one_call", "report_by_members_separate", 1)}},"16x":{${pair("report_by_one_call", "report_by_members_separate", 16)}}},""" +
-        s""""note":"q193/q200 composed reports vs their members on the same pre-checkpointed scored projection; the scoring chain is outside every timed window"}"""
-    }
-
-    // 16×-scale paired-bootstrap probe (VERDICT r14 #8): q208/q209's
-    // ×reps replicate explode collapses map-side to reps (×slices) rows
-    // by design, so wall time should grow ~linearly with the unit count
-    // while the order-statistic tail stays constant-size. The per-unit
-    // (id, a, b) table is replicated with DISJOINT unit ids (md5 weights
-    // key on (salt, rep, id), so each copy draws fresh weights — the
-    // honest scale shape); ratio_16x ≲ 16 certifies linearity like the
-    // dedup/sketch/eval cells.
-    probe("pboot") {
-      import org.apache.spark.sql.functions.{avg, col, lit, max,
-        round => sround}
-      val ev = Tables.load(spark, sfDir, "events")
-      val a = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(sround(avg(col("value")), 6).as("a"))
-      val b = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id")).agg(sround(avg(col("value")), 6).as("b"))
-      val pairs0 = a.join(b, "user_id")
-      // an empty view/click join has a NULL max: stride 1, empty replicas
-      val maxId = pairs0.agg(max(col("user_id"))).first()
-      val stride = (if (maxId.isNullAt(0)) 0L else maxId.getLong(0)) + 1L
-      val built = Seq(1, 16).map { f =>
-        val rep = (0 until f).map(i => pairs0.select(
-            (col("user_id") + lit(i * stride)).as("user_id"),
-            col("a"), col("b"))).reduce(_ unionAll _)
-          .localCheckpoint(true)
-        f -> rep
-      }
-      def drain(df: org.apache.spark.sql.DataFrame): Unit =
-        df.foreach((_: org.apache.spark.sql.Row) => ())
-      built.foreach { case (_, d) => // discard first use at each factor
-        drain(ext.Eval.pairedBootstrapTest(d, "user_id", "a", "b"))
-        drain(ext.Eval.pairedBootstrapTestBy(
-          d.withColumn("cohort", (col("user_id") % 4).cast("string")),
-          "cohort", "user_id", "a", "b")) }
-      val cells = for {
-        (f, d) <- built
-        (name, run) <- Seq[(String, () => Long)](
-          "paired_bootstrap" -> (() =>
-            { drain(ext.Eval.pairedBootstrapTest(d, "user_id", "a", "b")); 0L }),
-          "paired_bootstrap_by" -> (() =>
-            { drain(ext.Eval.pairedBootstrapTestBy(
-              d.withColumn("cohort", (col("user_id") % 4).cast("string")),
-              "cohort", "user_id", "a", "b")); 0L }))
-      } yield ((f, name), run)
-      val (times, _) = interleavedTimes(cells)
-      built.foreach { case (_, d) => graft.util.Checkpoints.release(d) }
-      val lines = Seq("paired_bootstrap", "paired_bootstrap_by").map { name =>
-        val t1 = times((1, name)); val t16 = times((16, name))
-        s"\"$name\":{\"sec_1x\":$t1,\"sec_16x\":$t16," +
-          s"\"ratio_16x\":${t16 / math.max(t1, 1e-9)}}"
-      }.mkString("{", ",", "}")
-      s"""{"metric":"pboot_scale_probe","probes_isolated":true,"factor":16,"warmup":true,"interleaved_passes":2,"ops":$lines}"""
-    }
-
-    // Graph DEPTH probe (full runs only): the text9 cell certifies node
-    // scaling at 3 rounds; this one certifies ROUND scaling — sec/round at
-    // iters=20 vs iters=5 on the same synthetic graph must stay ~flat
-    // (within ~1.5×), the empirical proof that the materialize-and-rotate
-    // checkpoint discipline (Checkpoints.pin + release per round) holds at
-    // depth: a leaking loop shows super-linear growth as plans/blocks
-    // accumulate (VERDICT r10 #4, r9 task 6).
-    probe("graphdepth") {
-      import org.apache.spark.sql.functions.col
-      val n = 20000L
-      val ids = spark.range(n).select(col("id"))
-      val e = ids.select(col("id").as("src"), ((col("id") + 1L) % n).as("dst"))
-        .union(ids.select(col("id").as("src"), ((col("id") + n - 1L) % n).as("dst")))
-        .union(ids.select(col("id").as("src"), ((col("id") + 7L) % n).as("dst")))
-        .localCheckpoint(true)
-      // localThreshold = 0 everywhere: the depth probe certifies the
-      // distributed per-round pin+release discipline, not the r14 local
-      // fast path (which has no per-round distributed state at all)
-      ext.Graph.pageRank(e, "src", "dst", 2,
-        localThreshold = 0).count() // codegen warmup
-      val cells = Seq[(Int, () => Long)](
-        5 -> (() => { ext.Graph.pageRank(e, "src", "dst", 5,
-          localThreshold = 0).count(); 0L }),
-        20 -> (() => { ext.Graph.pageRank(e, "src", "dst", 20,
-          localThreshold = 0).count(); 0L }))
-      val (times, _) = interleavedTimes(cells)
-      val (p5, p20) = (times(5) / 5.0, times(20) / 20.0)
-      s"""{"metric":"graph_depth_probe","probes_isolated":true,"nodes":$n,"warmup":true,"interleaved_passes":2,""" +
-        s""""sec_iters5":${times(5)},"sec_iters20":${times(20)},""" +
-        s""""sec_per_round_5":$p5,"sec_per_round_20":$p20,""" +
-        s""""per_round_ratio":${p20 / math.max(p5, 1e-9)},""" +
-        s""""note":"per_round_ratio ~<= 1.5 certifies the per-round pin+release discipline holds at depth"}"""
-    }
-
-    // 100×-row window/join probe (full runs only): q32's per-key running
-    // window and q42's interval-join attribution with keys replicated
-    // disjointly. Certification is PER-ROW cost (like the geometry probe):
-    // ns_per_row_100x ≲ ns_per_row_1x means no per-key state surprise
-    // (sort-based window, bounded join state). A wall-time ratio is
-    // meaningless here — the 1× side runs in ~0.1 s of fixed overhead, so
-    // overhead noise swings the quotient 10×.
-    probe("window") {
-      val cells = for {
-        f <- Seq(1, 100)
-        (name, df) <- SparkEntry.windowProbe(spark, sfDir, f).toSeq.sortBy(_._1)
-      } yield ((f, name), () => math.max(df.count(), 1L))
-      val (times, rows) = interleavedTimes(cells)
-      val names = cells.map(_._1._2).distinct.sorted
-      val lines = names.map { name =>
-        val (t1, n1) = (times((1, name)), rows((1, name)))
-        val (t100, n100) = (times((100, name)), rows((100, name)))
-        s"\"$name\":{\"sec_1x\":$t1,\"sec_100x\":$t100," +
-          s"\"rows_1x\":$n1,\"rows_100x\":$n100," +
-          s"\"ns_per_row_1x\":${t1 * 1e9 / n1},\"ns_per_row_100x\":${t100 * 1e9 / n100}}"
-      }.mkString("{", ",", "}")
-      s"""{"metric":"window_scale_probe","probes_isolated":true,"factor":100,"ops":$lines}"""
-    }
+    Ladder.lines(spark, sfDir).foreach(l => probe(l.name)(Ladder.run(l)))
 
     // ANN-store phase probe: q62's timed body serves from a MEMOIZED
     // standing store (QueryShared.annStoreSetup), so the bench's q62
@@ -827,8 +137,7 @@ object Bench {
       }
       var coarse: Array[Array[Double]] = null
       var cb: ext.Pq.Codebooks = null
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_probe_annstore_${spark.sparkContext.applicationId}").toString
+      val path = Ladder.store(spark, "annstore", "ivfpq")
       val tTrain = t {
         coarse = ext.Ivf.train(emb, k = 8, iters = 2)
         cb = ext.Pq.trainResidual(emb, coarse, m = 8, ksub = 16, iters = 2)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import scala.util.control.NonFatal
 
 /** The session and release policy every main and the test suites share:
@@ -49,4 +49,24 @@ object Harness {
           .foreach(_.unpersist(blocking = false)))
     }
   }
+
+  /** Untimed first use before any timing: JVM, codegen and the parquet
+    * footers of `sfDir`. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    Tables.load(spark, sfDir, "lineitem").limit(1).collect()
+  }
+
+  /** Wall seconds to build `df` and MATERIALIZE every row, run under
+    * [[releasing]] (so `None` on failure). `foreach`, not `count()`: under
+    * count() Catalyst legitimately prunes whatever the row count does not
+    * need — q77's whole strip computation vanished via row-preserving-join
+    * elimination and read 0.24 s for a ~2.4 s query — so the timed plan is
+    * the one Verify writes. */
+  def timed(spark: SparkSession, label: String)(df: => DataFrame): Option[Double] =
+    releasing(spark, label) {
+      val t0 = System.nanoTime()
+      df.foreach((_: Row) => ())
+      (System.nanoTime() - t0) / 1e9
+    }
 }

@@ -13,16 +13,13 @@ import java.nio.file.{Files, Paths}
 object Plans {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, tag) = (args(0), args(1), args(2))
-    val only: String => Boolean =
-      if (args.length > 3) { val pats = args(3).split(',').toSeq
-        name => pats.exists(name.contains)
-      } else _ => true
+    val only = args.drop(3).headOption.toSeq.flatMap(_.split(',').toSeq)
     val spark = Harness.session(Harness.cpus(4))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.select(SparkEntry.queries, only).foreach { case (name, fn) =>
       // released per query: building a plan still executes the query
       // body's eager pins
-      if (only(name)) Harness.releasing(spark, s"[plans] $name") {
+      Harness.releasing(spark, s"[plans] $name") {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -20,24 +20,19 @@ import org.apache.spark.sql.SparkSession
 object ProbeAB {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args.drop(1)
+    val names = args.drop(1).toSeq
     val spark = Harness.session(
       Harness.cpus(Runtime.getRuntime.availableProcessors()))
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => names.exists(n.contains) }
+    Harness.warmUp(spark, sfDir)
     def time(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         off: Boolean): Double = {
       if (off) sys.props("graft.pinsort.off") = "true"
       else sys.props.remove("graft.pinsort.off")
-      Harness.releasing(spark, s"[probeAB] $name off=$off") {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
-        (System.nanoTime() - t0) / 1e9
-      }.getOrElse(-1.0)
+      Harness.timed(spark, s"[probeAB] $name off=$off")(fn(spark, sfDir))
+        .getOrElse(-1.0)
     }
-    qs.foreach { case (name, fn) =>
+    SparkEntry.select(SparkEntry.queries, names).foreach { case (name, fn) =>
       // warmup both arms once (codegen), then 2 interleaved timed passes
       // (off, on, off, on) so a contention window hits both arms alike
       time(name, fn, off = true); time(name, fn, off = false)

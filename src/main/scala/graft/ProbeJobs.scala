@@ -14,11 +14,10 @@ import org.apache.spark.sql.SparkSession
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args.drop(1)
+    val names = args.drop(1).toSeq
     val spark = Harness.session(
       Harness.cpus(Runtime.getRuntime.availableProcessors()))
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.load(spark, sfDir, "lineitem").limit(1).collect()
+    Harness.warmUp(spark, sfDir)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
@@ -37,16 +36,10 @@ object ProbeJobs {
       }
     })
 
-    val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => names.exists(n.contains) }
     def run(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Option[Double] =
-      Harness.releasing(spark, s"[probeJobs] $name") {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).foreach((_: org.apache.spark.sql.Row) => ())
-        (System.nanoTime() - t0) / 1e9
-      }
-    qs.foreach { case (name, fn) =>
+      Harness.timed(spark, s"[probeJobs] $name")(fn(spark, sfDir))
+    SparkEntry.select(SparkEntry.queries, names).foreach { case (name, fn) =>
       // warmup (untimed) with block release, exactly the bench discipline
       run(name, fn)
       Thread.sleep(500)

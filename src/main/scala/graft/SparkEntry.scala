@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, FlagRegions, GridOps, MineDepletion}
+import graft.model.TriMesh
+import graft.operators.GridOps
 import graft.QueryShared._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -35,175 +35,6 @@ object SparkEntry {
       Seq(Region2, Region3), Seq(Topo), Seq(pit))
   }
 
-  /** Bench-only geometry probe (no oracle): the region/mine/elevation
-    * kernels on the 12k-cell grid (`factor = 1`) or a 1.2M-cell grid
-    * (`factor = 100` — same spatial footprint at 10× x/y resolution, so
-    * the fixture meshes intersect identically). Certifies empirically that
-    * the BVH kernel cost stays ~linear per row and the fused scan plans
-    * stay shuffle-free at 100× the cell count. */
-  def geometryProbe(s: SparkSession, factor: Int): Map[String, DataFrame] = {
-    val g = if (factor <= 1) G
-      else GridSchema(1000, 2000, 100, 1, 1, 10, 300, 200, 20)
-    Map(
-      "flag_regions" -> FlagRegions(s, GridOps.generate(s, g), Seq(Region2, Region3)),
-      "mine_deplete" -> MineDepletion(s, GridOps.generate(s, g), Seq(Topo), Seq(Pit), g.sz),
-      "elevation" -> Elevation(GridOps.generate(s, g), Slope))
-  }
-
-  /** Bench-only dedup scale probe: the corpus replicated `factor`× with
-    * per-copy token tags, so copies are textually DISJOINT — each copy
-    * reproduces the base corpus's near-dup structure without cross-copy
-    * collisions. A scale-safe dedup path should cost ~factor× the base
-    * (flat per-doc cost); a quadratic one (bucket blowup, unpruned pair
-    * join) shows super-linear growth.
-    *
-    * The tag is FUSED into each alphanumeric run (`word` → `wordx3`) via
-    * regex so the shingle tokenizer (`[a-z0-9]+`) still sees one token per
-    * original token and per-copy shingle specificity equals the base
-    * corpus. (A separator-attached tag like `word_3` splits into `word` +
-    * `3` under that tokenizer: every 3-gram shingle collapses to ~1-word
-    * document frequency, and the measured "scale ratio" explodes ~100×
-    * from candidate volume the real corpus doesn't have — a probe
-    * artifact, verified empirically at sf0.1.) */
-  /** Replicated probe corpus (docs, benchSlice) shared by the dedup and
-    * sketch scale probes — factor× textually-disjoint copies, EAGERLY
-    * materialized so probes time the operator, not the corpus build. */
-  def probeCorpus(s: SparkSession, dir: String, factor: Int)
-      : (DataFrame, DataFrame) = {
-    val base = Tables.load(s, dir, "documents")
-    // id stride above the corpus maximum so replica id ranges are disjoint
-    // at any corpus scale (a fixed stride would collide past it)
-    val stride =
-      base.agg(max(col("doc_id"))).first().getLong(0) + 1L
-    // "$1x<i>": tag can't collide across copies (it is the only x+digits
-    // run at the end of a token, so equal tagged tokens imply equal copy
-    // index). The 1× side gets the SAME tagging (copy 0) so both probe
-    // sides run structurally identical text — and identical to the fixed
-    // decontamination benchmark slice below.
-    def copy(i: Int): DataFrame = base.select(
-      (col("doc_id") + lit(i * stride)).as("doc_id"),
-      regexp_replace(lower(col("text")), "([a-z0-9]+)", "$1x" + i)
-        .as("text"),
-      col("lang"), col("source"))
-    // EAGER checkpoint: the replicated corpus is a factor-wide union of
-    // per-branch regexp+kernel trees; un-materialized it would be
-    // re-planned AND re-executed on every side of every self-join and
-    // verify join (~4× work and super-linear Catalyst/codegen cost over
-    // 16×4 heavy scan branches — the r5 probe measured 45×/59× wall growth
-    // at 16× from exactly this). Materializing it once, OUTSIDE the timed
-    // region, makes the probe time the operator, not the corpus build.
-    val docs = (if (factor <= 1) copy(0)
-      else (0 until factor).map(copy).reduce(_ union _))
-      .localCheckpoint(true)
-    // fixed benchmark slice for decontamination: copy-0 text, so its
-    // contamination hits are constant while the corpus grows factor×
-    val bench = copy(0).filter(col("doc_id") % 100 === 0)
-      .localCheckpoint(true)
-    (docs, bench)
-  }
-
-  def dedupProbe(s: SparkSession, dir: String, factor: Int)
-      : (Map[String, DataFrame], Map[String, DataFrame]) = {
-    val (docs, bench) = probeCorpus(s, dir, factor)
-    val ops = Map(
-      "minhash_lsh" -> ext.Dedup.minhashLsh(docs, "text", "doc_id",
-        numHashes = 16, bands = 4, minJaccard = 0.3),
-      // incremental-ingest shape: a FIXED small batch (the bench slice)
-      // deduped against the standing corpus, which grows factor× — the
-      // inline shape re-runs the standing side's kernels every batch, so
-      // its ratio tracks corpus growth...
-      "minhash_cross" -> ext.Dedup.minhashLshCross(bench, docs,
-        "text", "doc_id", minJaccard = 0.3),
-      // ...while the store-served shape wrote the standing index ONCE
-      // (outside the timed window) and pays a columnar scan of the
-      // precomputed tables instead. Measured honestly: it wins at 1×
-      // (~0.25 s vs ~0.43 s) and is a wash at 16× — the shingle/band
-      // KERNELS are ns/row, so at bench scale recompute ≈ re-read; the
-      // store's real 100 TB case is when the standing side's raw text is
-      // wider than its shingle arrays or lives on colder storage
-      "minhash_cross_store" -> {
-        val path = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_probe_lsh_${s.sparkContext.applicationId}_$factor").toString
-        ext.Dedup.writeLshStore(docs, "text", "doc_id", path)
-        ext.Dedup.minhashLshCrossFromStore(bench, s, path,
-          "text", "doc_id", minJaccard = 0.3)
-      },
-      "lsh_dedup_win" -> ext.Dedup.lshDedupSurvivors(
-        docs.withColumn("ts", col("doc_id").cast("timestamp")),
-        "text", "doc_id", "ts", "100 seconds"),
-      "ngram_prefix" -> ext.Dedup.ngramJaccardPairsPrefix(docs, "text",
-        "doc_id", Seq("lang", "source"), 0.3),
-      // the prefix-join stage alone, timed as its own matrix cell so a
-      // bad ngram_prefix ratio attributes to candidate generation vs the
-      // verify join (r8's 121× reading could not be localized)
-      "ngram_prefix_cand" -> ext.Dedup.ngramPrefixCandidates(docs, "text",
-        "doc_id", Seq("lang", "source"), 0.3),
-      "decontam" -> ext.Dedup.decontaminate(docs, bench, "text", "doc_id"),
-      // single-line docs still drive the full line-dedup plan (explode →
-      // digest count → anti-join → ordered reassembly) at corpus volume
-      "line_dedup" -> ext.Dedup.dedupLines(docs, "text", "doc_id"),
-      // sources repeat across copies, so per-shard window rows grow
-      // factor× — certifies the sort-based window's n·log n per shard
-      "seq_pack" -> ext.TextAnalysis.packSequences(docs, "text", "doc_id", 512),
-      // the replicated corpus is EXACTLY what containment detects (every
-      // copy contains every other), so candidate pairs legitimately grow
-      // ~factor× per document — read the ratio against cand_pairs, and
-      // note the hot-posting cap is the production spam defense
-      "containment" -> ext.Dedup.containmentPairs(docs, "text", "doc_id",
-        minContainment = 0.5, maxPosting = 2000))
-    // untimed diagnostics: candidate-pair volume per op, so a bad ratio is
-    // attributable (candidate blowup vs fixed-cost overhead)
-    val diag = Map(
-      "minhash_lsh" -> ext.Dedup.minhashCandidates(docs, "text", "doc_id",
-        numHashes = 16, bands = 4),
-      "ngram_prefix" -> ext.Dedup.ngramPrefixCandidates(docs, "text",
-        "doc_id", Seq("lang", "source"), 0.3),
-      "containment" -> ext.Dedup.containmentCandidates(docs, "text",
-        "doc_id", maxPosting = 2000))
-    (ops, diag)
-  }
-
-  /** Bench-only window/join scale probe: the per-key window (q32 shape) and
-    * the interval-join attribution (q42 shape) at `factor`× the rows. Keys
-    * are replicated DISJOINTLY (id offsets) — the 100 TB growth model is
-    * more suppliers/users, not 100× history per key — so output volume and
-    * per-key state stay constant per key and total cost should scale
-    * ~linearly. A super-linear ratio would mean hidden per-key or
-    * cross-replica state. */
-  def windowProbe(s: SparkSession, dir: String, factor: Int): Map[String, DataFrame] = {
-    val li0 = Tables.load(s, dir, "lineitem").filter(col("l_suppkey") < 20)
-    val li = if (factor <= 1) li0 else
-      (0 until factor).map(i =>
-        li0.withColumn("l_suppkey", col("l_suppkey") + lit(i * 1000L)))
-        .reduce(_ union _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("l_suppkey"))
-      .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-    val running = li
-      .withColumn("rn", row_number().over(w))
-      .withColumn("running", round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-        .over(w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)), 4))
-      .select("l_suppkey", "rn", "running")
-    // subset of users (like the l_suppkey < 20 cut above): per-key event
-    // density is what the probe certifies, and 100× the subset already
-    // yields millions of rows — the full table would only add wall time
-    val ev0 = Tables.load(s, dir, "events").filter(col("user_id") < 400)
-    // getAs[Number]: schema width is only enforced by convention (Event
-    // writes long, but an int-written table must not kill the probe)
-    lazy val strides = ev0.agg(max(col("user_id")), max(col("event_id"))).first()
-    val ev = if (factor <= 1) ev0 else {
-      val (us, es) = (strides.getAs[Number](0).longValue() + 1L,
-        strides.getAs[Number](1).longValue() + 1L)
-      (0 until factor).map(i =>
-        ev0.withColumn("user_id", col("user_id") + lit(i * us))
-          .withColumn("event_id", col("event_id") + lit(i * es)))
-        .reduce(_ union _)
-    }
-    Map(
-      "window_running" -> running,
-      "attribution" -> streaming.EventStream.attribution(ev, "view", "purchase", 86400L))
-  }
-
   /** Dispatcher over the per-family registries (r12 split): each
     * family file owns its query lambdas AND their oracle SQL side by
     * side; this concatenation is the single driver-facing surface.
@@ -231,7 +62,6 @@ object SparkEntry {
     all
   }
 
-
   def oracleSql: Map[String, String] = {
     val fams = Seq(
       QueriesBreakdown.oracleSql,
@@ -254,4 +84,10 @@ object SparkEntry {
     all
   }
 
+  /** The entries of `named` whose name contains one of `patterns` — all of
+    * them when none is given — sorted by name: the query selection every
+    * main shares. */
+  def select[V](named: Map[String, V], patterns: Seq[String]): Seq[(String, V)] =
+    named.toSeq.sortBy(_._1)
+      .filter { case (n, _) => patterns.isEmpty || patterns.exists(n.contains) }
 }

@@ -7,14 +7,11 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated name filter (substring match) —
     // dump/compare just those queries for a fast local iteration loop
-    val only: String => Boolean =
-      if (args.length > 2) { val pats = args(2).split(',').toSeq
-        name => pats.exists(name.contains)
-      } else _ => true
+    val only = args.drop(2).headOption.toSeq.flatMap(_.split(',').toSeq)
     val spark = Harness.session(Harness.cpus(4))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only(name)) Harness.releasing(spark, s"[verify] $name") {
+    SparkEntry.select(SparkEntry.queries, only).foreach { case (name, fn) =>
+      Harness.releasing(spark, s"[verify] $name") {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       }
@@ -31,7 +28,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter { case (k, _) => only(k) }
+    val json = SparkEntry.select(SparkEntry.oracleSql, only)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

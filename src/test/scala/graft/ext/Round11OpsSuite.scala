@@ -111,39 +111,6 @@ class Round11OpsSuite extends AnyFunSuite {
     assert(viaDriver._1.nonEmpty)
   }
 
-  // ---- two-sample KS drift test -------------------------------------------
-
-  test("ksTest: hand-computed D on a small pair; zero on identical samples") {
-    // a = [1,2,3], b = [2,3,3,4]: at v=2 the integer gap |2*4 - 1*3| = 5
-    // is the max, so D = 5/12; d_crit = 1.358*sqrt(7/12) > D => no drift.
-    val a = Seq(1.0, 2.0, 3.0).toDF("v")
-    val b = Seq(2.0, 3.0, 3.0, 4.0).toDF("v")
-    val r = Eval.ksTest(a, b, "v").collect().head
-    assert(r.getLong(0) == 3L && r.getLong(1) == 4L)
-    assert(r.getDouble(2) == 5.0 / 12.0)
-    assert(r.getDouble(3) == 1.358 * math.sqrt(7.0 / 12.0))
-    assert(r.getInt(4) == 0)
-    val same = Eval.ksTest(a, a, "v").collect().head
-    assert(same.getDouble(2) == 0.0 && same.getInt(4) == 0)
-  }
-
-  test("ksTestBy: each group-vs-rest row equals the two-sample ksTest of the split") {
-    // with exactly two groups, "rest of A" IS B — every output field must
-    // match the pairwise test bit-for-bit (same integer gaps, same ratio
-    // shapes). The values are chosen so A's max gap sits at v=4, a value
-    // A never takes (the dense-grid property).
-    val df = Seq(("a", 1.0), ("a", 2.0), ("a", 2.0),
-      ("b", 2.0), ("b", 4.0), ("b", 4.0), ("b", 5.0)).toDF("g", "v")
-    val by = Eval.ksTestBy(df, "g", "v").collect()
-      .map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
-    val aVsB = Eval.ksTest(df.filter($"g" === "a"), df.filter($"g" === "b"),
-      "v").collect().head.toSeq
-    val bVsA = Eval.ksTest(df.filter($"g" === "b"), df.filter($"g" === "a"),
-      "v").collect().head.toSeq
-    assert(by("a") == aVsB, "group a vs rest must equal ksTest(a, b)")
-    assert(by("b") == bVsA, "group b vs rest must equal ksTest(b, a)")
-  }
-
   // ---- pre-tokenized NB variants == the raw-text operators ----------------
 
   test("nbMulticlassTokens / nbLabelIssuesTokens / nbQualityScoreTokens equal the raw-text paths") {
