@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Checkpoints.PinOps
+import graft.util.Checkpoints.{PinOps, scoped}
 
 /** Classifier-evaluation operators — the audit side of every model gate in
   * the curation pipelines ([[TextAnalysis.nbQualityScore]], the
@@ -19,10 +19,12 @@ import graft.util.Checkpoints.PinOps
   * globally sorts.
   *
   * Pin ownership: operators that checkpoint internally (ksTest family,
-  * mutualInfo, spearman) release their corpus-scale internal pins before
-  * returning and hand back a BOUNDED pinned frame (one row to |groups|
-  * rows) — a long-lived session that is done reading a result can
-  * reclaim even that via [[graft.util.Checkpoints.release]].
+  * aucRoc, mutualInfo, spearman) run under
+  * [[graft.util.Checkpoints.scoped]], which releases their corpus-scale
+  * internal pins on return or failure and hands back a BOUNDED pinned
+  * frame (one row to |groups| rows) — a long-lived session that is done
+  * reading a result can reclaim even that via
+  * [[graft.util.Checkpoints.release]].
   */
 object Eval {
 
@@ -354,15 +356,17 @@ object Eval {
     * (below 2⁵³), which makes the aggregation order-independent and the
     * unrounded result bit-identical across engines.
     * Returns one row: (auc, n_pos, n_neg). */
-  def aucRoc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
+  def aucRoc(df: DataFrame, scoreCol: String,
+      labelCol: String): DataFrame = scoped { sc =>
     // grid discipline, gated exactly on the per-score table this op
     // builds anyway (the prCurve note); the rank window is
     // single-partition over that bounded pinned table (aucRocBy instead
     // partitions by slice)
-    val perRaw = df.groupBy(col(scoreCol).as("s"))
-      .agg(sum(col(labelCol)).cast("long").as("npos"),
-        count(lit(1)).as("n"))
-    val perScore = graft.util.GridGuard.gateTable(perRaw, "aucRoc", scoreCol)
+    val perScore = sc.own(graft.util.GridGuard.gateTable(
+      df.groupBy(col(scoreCol).as("s"))
+        .agg(sum(col(labelCol)).cast("long").as("npos"),
+          count(lit(1)).as("n")),
+      "aucRoc", scoreCol))
     val w = Window.orderBy(col("s").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = perScore
@@ -370,7 +374,7 @@ object Eval {
       .withColumn("avg_rank",
         (col("cum") - col("n")).cast("double") +
           (col("n") + lit(1L)).cast("double") / lit(2.0))
-    val out = ranked.agg(
+    ranked.agg(
         sum(col("npos").cast("double") * col("avg_rank")).as("pos_rank_sum"),
         sum(col("npos")).cast("long").as("n_pos"),
         sum(col("n") - col("npos")).cast("long").as("n_neg"))
@@ -384,13 +388,6 @@ object Eval {
             (col("n_pos").cast("double") * col("n_neg").cast("double")))
           .as("auc"),
         col("n_pos"), col("n_neg"))
-    // one-row result: materialize it and release the gate pin (the
-    // ksTest pin-ownership convention)
-    if (perScore ne perRaw) {
-      val pinned = out.pin()
-      graft.util.Checkpoints.release(perScore)
-      pinned
-    } else out
   }
 
   /** ln 2 as one shared double so the nDCG discount `ln(r+1)/ln 2`
@@ -911,17 +908,13 @@ object Eval {
     * that bounded table, everything after is scalar, and the one-row
     * result is pinned before the gate's table is released. Returns one
     * row: (n_a, n_b, d, d_crit, drifted). */
-  def ksTest(a: DataFrame, b: DataFrame, valCol: String): DataFrame = {
+  def ksTest(a: DataFrame, b: DataFrame, valCol: String): DataFrame =
     // runtime grid discipline (ON by default), gated exactly on the
     // per-value table built here (the distributed groupBy is safe at any
     // cardinality; only the downstream one-task window is not): fail
     // before the single-partition cumulative sorts a corpus-sized table
-    val perRaw = pairPerValueRaw(a, b, valCol)
-    val per = graft.util.GridGuard.gateTable(perRaw, "ksTest", valCol)
-    val out = graft.util.Checkpoints.pin(ksTestOnPer(per))
-    if (per ne perRaw) graft.util.Checkpoints.release(per)
-    out
-  }
+    scoped(sc => ksTestOnPer(sc.own(graft.util.GridGuard.gateTable(
+      pairPerValueRaw(a, b, valCol), "ksTest", valCol))))
 
   /** The two-sided per-distinct-value count table `(_v, ca, cb)` that
     * [[ksTest]], [[rankSumTest]] and (bucketed) [[Outliers.psiDrift]]
@@ -983,21 +976,18 @@ object Eval {
     * Returns one row per group: (groupCol, n_a, n_b, d, d_crit,
     * drifted). */
   def ksTestBy(df: DataFrame, groupCol: String,
-      valCol: String): DataFrame = {
+      valCol: String): DataFrame = scoped { sc =>
     val base = df.select(col(groupCol).as("_g"), col(valCol).as("_v"))
       .filter(col("_v").isNotNull && col("_g").isNotNull)
-    val pg = base.groupBy(col("_g"), col("_v"))
-      .agg(count(lit(1)).as("c")).pin()
+    val pg = sc.pin(base.groupBy(col("_g"), col("_v"))
+      .agg(count(lit(1)).as("c")))
     // grid discipline: the dense grid is |groups| × |values| — both axes
     // must be bounded (rounded scores; slice keys, not row ids). Gated
     // EXACTLY on the pinned (group, value) table built above: one k-row
     // collapse, no separate pre-check pass over the caller's projection.
     graft.util.GridGuard.gateAxes(pg, "ksTestBy",
       valCol -> "_v", groupCol -> "_g")
-    // the result is pinned before its input table is released
-    val out = graft.util.Checkpoints.pin(ksTestByOnPg(pg, groupCol))
-    graft.util.Checkpoints.release(pg)
-    out
+    ksTestByOnPg(pg, groupCol)
   }
 
   /** [[ksTestBy]]'s statistics from an already-gated (group, value)
@@ -1148,15 +1138,11 @@ object Eval {
     * enforced); the rank window runs on that bounded table, everything
     * after is scalar, and the one-row result is pinned before the gate's
     * table is released. Returns one row: (n_a, n_b, u, z, drifted). */
-  def rankSumTest(a: DataFrame, b: DataFrame, valCol: String): DataFrame = {
+  def rankSumTest(a: DataFrame, b: DataFrame, valCol: String): DataFrame =
     // grid discipline, gated exactly on the per-value table built here
     // (the ksTest note)
-    val perRaw = pairPerValueRaw(a, b, valCol)
-    val per = graft.util.GridGuard.gateTable(perRaw, "rankSumTest", valCol)
-    val out = graft.util.Checkpoints.pin(rankSumOnPer(per))
-    if (per ne perRaw) graft.util.Checkpoints.release(per)
-    out
-  }
+    scoped(sc => rankSumOnPer(sc.own(graft.util.GridGuard.gateTable(
+      pairPerValueRaw(a, b, valCol), "rankSumTest", valCol))))
 
   /** [[rankSumTest]]'s statistic from an already-gated per-value table
     * (the [[pairPerValueRaw]] shape) — identical downstream arithmetic,
@@ -1214,18 +1200,16 @@ object Eval {
     * per-group collapse keys on the group. Returns one row per group:
     * (groupCol, n_g, n_rest, u, z, drifted); z NULL when σ = 0. */
   def rankSumTestBy(df: DataFrame, groupCol: String,
-      valCol: String): DataFrame = {
+      valCol: String): DataFrame = scoped { sc =>
     val base = df.select(col(groupCol).as("_g"), col(valCol).as("_v"))
       .filter(col("_v").isNotNull && col("_g").isNotNull)
-    val pg = base.groupBy(col("_g"), col("_v"))
-      .agg(count(lit(1)).as("c")).pin()
+    val pg = sc.pin(base.groupBy(col("_g"), col("_v"))
+      .agg(count(lit(1)).as("c")))
     // grid discipline gated exactly on the pinned (group, value) table
     // (the ksTestBy note — no separate pass over the caller's projection)
     graft.util.GridGuard.gateAxes(pg, "rankSumTestBy",
       valCol -> "_v", groupCol -> "_g")
-    val out = graft.util.Checkpoints.pin(rankSumByOnPg(pg, groupCol))
-    graft.util.Checkpoints.release(pg)
-    out
+    rankSumByOnPg(pg, groupCol)
   }
 
   /** [[rankSumTestBy]]'s statistics from an already-gated (group, value)
@@ -1284,11 +1268,10 @@ object Eval {
     * (costs exactness of the log argument, not of the counts). Returns
     * one row: (n, mi, h_a, h_b, nmi), mi/entropies rounded 6 dp. */
   def mutualInfo(df: DataFrame, aCol: String, bCol: String,
-      nBins: Int = 10): DataFrame = {
+      nBins: Int = 10): DataFrame = scoped { sc =>
     require(nBins > 1, s"nBins $nBins")
-    val base = df.select(col(aCol).as("a"), col(bCol).as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      .pin()
+    val base = sc.pin(df.select(col(aCol).as("a"), col(bCol).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull))
     // grid discipline — checked ONCE on the PINNED pair projection (the
     // pre-check scans 16 bytes/row, never the caller's scoring kernels);
     // the two internal ecdfTable calls skip their per-call gate (ADVICE
@@ -1319,13 +1302,11 @@ object Eval {
     val sb = mb.agg(clogc(col("cb")).as("_sb"))
     val hA = log(nD) - col("_sa") / nD
     val hB = log(nD) - col("_sb") / nD
-    val out = tot.crossJoin(stats).crossJoin(sa).crossJoin(sb)
+    tot.crossJoin(stats).crossJoin(sa).crossJoin(sb)
       .select(col("n"), round(col("_mi"), 6).as("mi"),
         round(hA, 6).as("h_a"), round(hB, 6).as("h_b"),
         round(when(hA > 0 && hB > 0,
-          col("_mi") / sqrt(hA * hB)), 6).as("nmi")).pin()
-    graft.util.Checkpoints.release(base)
-    out
+          col("_mi") / sqrt(hA * hB)), 6).as("nmi"))
   }
 
   /** SPEARMAN RANK CORRELATION between two score columns — "do these
@@ -1346,14 +1327,14 @@ object Eval {
     * [[graft.util.GridGuard]] enforces it)
     * joined back by value, one 6-number moment reduce.
     * Returns one row: (n, rho). */
-  def spearman(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+  def spearman(df: DataFrame, aCol: String,
+      bCol: String): DataFrame = scoped { sc =>
     // the (a, b) projection has THREE consumers (the pair join + both
     // rank tables) — materialize it once (16 bytes/row at any scale) or
     // a regex-heavy caller scoring projection evaluates 3× (the
     // ecdfTable lesson; measured 2.9 s → ~1 s on the q160 signals)
-    val base = df.select(col(aCol).as("a"), col(bCol).as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      .pin()
+    val base = sc.pin(df.select(col(aCol).as("a"), col(bCol).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull))
     // grid discipline on the pinned pair projection (the mutualInfo note)
     graft.util.GridGuard.check(base, "spearman", "a", "b")
     def rankTable(c: String, out: String) = {
@@ -1372,7 +1353,7 @@ object Eval {
     val num = n * col("sab") - col("sa") * col("sb")
     val da = n * col("saa") - col("sa") * col("sa")
     val db = n * col("sbb") - col("sb") * col("sb")
-    val out = ranked.agg(count(lit(1)).as("n"),
+    ranked.agg(count(lit(1)).as("n"),
         sum(col("ra")).as("sa"), sum(col("rb")).as("sb"),
         sum(col("ra") * col("ra")).as("saa"),
         sum(col("rb") * col("rb")).as("sbb"),
@@ -1381,8 +1362,6 @@ object Eval {
         // single sqrt of the exact product: perfect correlation lands on
         // EXACTLY ±1 (num² = da·db), where sqrt(da)·sqrt(db) is off by
         // an ulp
-        when(da > 0 && db > 0, num / sqrt(da * db)).as("rho")).pin()
-    graft.util.Checkpoints.release(base)
-    out
+        when(da > 0 && db > 0, num / sqrt(da * db)).as("rho"))
   }
 }

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.util.Checkpoints.PinOps
+import graft.util.Checkpoints.scoped
 
 /** Robust outlier detection over a keyed numeric stream — the data-quality
   * gate an event/metric pipeline runs before training on or alerting over
@@ -172,21 +172,12 @@ object Outliers {
     * category); everything after runs on k rows. Returns one row:
     * (n_base, n_live, k, chi2, chi2_crit, drifted). */
   def chiSquareDrift(base: DataFrame, live: DataFrame,
-      catCol: String): DataFrame = {
+      catCol: String): DataFrame =
     // grid discipline gated exactly on the category table built here
     // (the Eval.ksTest note — no separate pre-check pass; a free-text
     // column still fails loudly, now with the exact count)
-    val perRaw = chiPerCategory(base, live, catCol)
-    val per = graft.util.GridGuard.gateTable(perRaw, "chiSquareDrift", catCol)
-    val out = chiSquareOnPc(per)
-    // one-row result: materialize and release the gate pin (the
-    // Eval.ksTest pin-ownership convention)
-    if (per ne perRaw) {
-      val pinned = graft.util.Checkpoints.pin(out)
-      graft.util.Checkpoints.release(per)
-      pinned
-    } else out
-  }
+    scoped(sc => chiSquareOnPc(sc.own(graft.util.GridGuard.gateTable(
+      chiPerCategory(base, live, catCol), "chiSquareDrift", catCol))))
 
   /** [[chiSquareDrift]]'s two-sided per-category count table `(_c, cb,
     * cl)` — lazy and ungated; callers gate it themselves (the
@@ -254,19 +245,17 @@ object Outliers {
     * yields NaN χ². Returns one row per slice:
     * (groupCol, n_g, n_rest, k, chi2, chi2_crit, drifted). */
   def chiSquareDriftBy(df: DataFrame, groupCol: String,
-      catCol: String): DataFrame = {
+      catCol: String): DataFrame = scoped { sc =>
     val base = df.select(col(groupCol).as("_g"),
         col(catCol).cast("string").as("_c"))
       .filter(col("_g").isNotNull && col("_c").isNotNull)
-    val pg = base.groupBy(col("_g"), col("_c"))
-      .agg(count(lit(1)).as("cnt")).pin()
+    val pg = sc.pin(base.groupBy(col("_g"), col("_c"))
+      .agg(count(lit(1)).as("cnt")))
     // grid discipline gated exactly on the pinned (slice, category)
     // table (the Eval.ksTestBy note)
     graft.util.GridGuard.gateAxes(pg, "chiSquareDriftBy",
       catCol -> "_c", groupCol -> "_g")
-    val out = chiSquareByOnPc(pg, groupCol).pin()
-    graft.util.Checkpoints.release(pg)
-    out
+    chiSquareByOnPc(pg, groupCol)
   }
 
   /** [[chiSquareDriftBy]]'s statistics from an already-gated (slice,
@@ -326,18 +315,17 @@ object Outliers {
     * meaningless (n_rest = 0) — slice before calling. Returns one row
     * per slice: (groupCol, n_g, n_rest, psi, drifted). */
   def psiDriftBy(df: DataFrame, groupCol: String, valCol: String,
-      nBuckets: Int = 10, lo: Double = 0.0, hi: Double = 1.0): DataFrame = {
+      nBuckets: Int = 10, lo: Double = 0.0,
+      hi: Double = 1.0): DataFrame = scoped { sc =>
     require(nBuckets > 0 && hi > lo)
-    val pg = df.select(col(groupCol).as("_g"),
+    val pg = sc.pin(df.select(col(groupCol).as("_g"),
         psiBucket(col(valCol), nBuckets, lo, hi).as("bucket"))
       .filter(col("_g").isNotNull)
-      .groupBy(col("_g"), col("bucket")).agg(count(lit(1)).as("cnt")).pin()
+      .groupBy(col("_g"), col("bucket")).agg(count(lit(1)).as("cnt")))
     // slice-axis guard on the pinned table (the bucket axis is
     // nBuckets-bounded by construction)
     graft.util.GridGuard.gateAxes(pg, "psiDriftBy", groupCol -> "_g")
-    val out = graft.util.Checkpoints.pin(psiByOnPb(pg, groupCol, nBuckets))
-    graft.util.Checkpoints.release(pg)
-    out
+    psiByOnPb(pg, groupCol, nBuckets)
   }
 
   /** [[psiDriftBy]]'s statistics from an already-built (slice, bucket)
@@ -409,17 +397,16 @@ object Outliers {
     * measures an actual win (1.05×→1.22×, growing with corpus). */
   def driftReport(base: DataFrame, live: DataFrame, valCol: String,
       catCol: String, nBuckets: Int = 10, lo: Double = 0.0,
-      hi: Double = 1.0): DataFrame = {
-    val bp = base.select(col(valCol), col(catCol)).pin()
-    val lp = live.select(col(valCol), col(catCol)).pin()
+      hi: Double = 1.0): DataFrame = scoped { sc =>
+    val bp = sc.pin(base.select(col(valCol), col(catCol)))
+    val lp = sc.pin(live.select(col(valCol), col(catCol)))
     // PSI, KS and rank-sum all derive from the same per-distinct-value
     // (ca, cb) table: built once, gated once, each member's downstream
     // arithmetic unchanged. Pinned UNCONDITIONALLY: three lenses read
     // it, so the pin is the sharing mechanism, not a guard side-effect —
     // with gateTable a guard-off session would hand each lens the lazy
     // frame and pay the corpus aggregation three times
-    val per = graft.util.Checkpoints.pin(
-      Eval.pairPerValueRaw(bp, lp, valCol))
+    val per = sc.pin(Eval.pairPerValueRaw(bp, lp, valCol))
     graft.util.GridGuard.gateCount(per, "driftReport", valCol)
     // psiDrift's side totals count ALL rows, and its bucketing puts a
     // NULL value in a bucket too; the per-value table drops NULLs, so
@@ -441,16 +428,12 @@ object Outliers {
         lit(1.96).as("threshold"), col("drifted"))
     // the chi lens's category table, gated exactly as the member gates
     // its own (same exact-count guard, same failure shape)
-    val pcRaw = chiPerCategory(bp, lp, catCol)
-    val pc = graft.util.GridGuard.gateTable(pcRaw, "driftReport", catCol)
+    val pc = sc.own(graft.util.GridGuard.gateTable(
+      chiPerCategory(bp, lp, catCol), "driftReport", catCol))
     val chi = chiSquareOnPc(pc)
       .select(lit("chi2").as("stat"), col("chi2").as("statistic"),
         col("chi2_crit").as("threshold"), col("drifted"))
-    val out = graft.util.Checkpoints.pin(
-      psi.unionAll(ks).unionAll(rs).unionAll(chi).orderBy("stat"))
-    Seq(bp, lp, per).foreach(graft.util.Checkpoints.release)
-    if (pc ne pcRaw) graft.util.Checkpoints.release(pc)
-    out
+    psi.unionAll(ks).unionAll(rs).unionAll(chi).orderBy("stat")
   }
 
   /** [[driftReport]]'s psi row from the shared per-value table: bucket
@@ -517,12 +500,12 @@ object Outliers {
     * slice ordered by (groupCol, stat). */
   def driftReportBy(df: DataFrame, groupCol: String, valCol: String,
       catCol: String, nBuckets: Int = 10, lo: Double = 0.0,
-      hi: Double = 1.0): DataFrame = {
+      hi: Double = 1.0): DataFrame = scoped { sc =>
     require(nBuckets > 0 && hi > lo)
-    val proj = df.select(col(groupCol), col(valCol), col(catCol))
-      .filter(col(groupCol).isNotNull).pin()
-    val pg = proj.select(col(groupCol).as("_g"), col(valCol).as("_v"))
-      .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("c")).pin()
+    val proj = sc.pin(df.select(col(groupCol), col(valCol), col(catCol))
+      .filter(col(groupCol).isNotNull))
+    val pg = sc.pin(proj.select(col(groupCol).as("_g"), col(valCol).as("_v"))
+      .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("c")))
     graft.util.GridGuard.gateAxes(pg, "driftReportBy",
       valCol -> "_v", groupCol -> "_g")
     // psi lens: (slice, bucket) counts by summing the shared table's
@@ -548,21 +531,17 @@ object Outliers {
     // the chi lens's (slice, category) table, built and gated exactly as
     // the standalone member builds its own (same projection, same
     // axis guard), read lazily by the union
-    val pc = proj.select(col(groupCol).as("_g"),
+    val pc = sc.pin(proj.select(col(groupCol).as("_g"),
         col(catCol).cast("string").as("_c"))
       .filter(col("_g").isNotNull && col("_c").isNotNull)
-      .groupBy(col("_g"), col("_c")).agg(count(lit(1)).as("cnt")).pin()
+      .groupBy(col("_g"), col("_c")).agg(count(lit(1)).as("cnt")))
     graft.util.GridGuard.gateAxes(pc, "driftReportBy",
       catCol -> "_c", groupCol -> "_g")
     val chi = chiSquareByOnPc(pc, groupCol)
       .select(col(groupCol), lit("chi2").as("stat"),
         col("chi2").as("statistic"), col("chi2_crit").as("threshold"),
         col("drifted"))
-    val out = graft.util.Checkpoints.pin(
-      psi.unionAll(ks).unionAll(rs).unionAll(chi)
-        .orderBy(groupCol, "stat"))
-    Seq(pc, pg, proj).foreach(graft.util.Checkpoints.release)
-    out
+    psi.unionAll(ks).unionAll(rs).unionAll(chi).orderBy(groupCol, "stat")
   }
 
   /** [[chiSquareDriftWindowed]]'s baseline inputs from the reference

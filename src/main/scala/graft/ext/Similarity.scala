@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Checkpoints.scoped
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -735,15 +736,15 @@ object Similarity {
     * (guarded divisions, the ANSI discipline). Returns one row per
     * slice: (groupCol, n_g, n_rest, mean_cos, mean_l2), 6 dp-rounded. */
   def embeddingDriftBy(df: DataFrame, groupCol: String,
-      vecCol: String = "embedding"): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = scoped { sc =>
     val base = df.select(col(groupCol).as("_g"),
         col(vecCol).cast("array<double>").as("_x"))
       .filter(col("_g").isNotNull && col("_x").isNotNull)
-    val pm = graft.util.GridGuard.gateTable(
+    val pm = sc.own(graft.util.GridGuard.gateTable(
       base.groupBy(col("_g"))
         .agg(count(lit(1)).as("n_g"),
           graft.agg.VectorMeanAgg.column(col("_x")).as("_m")),
-      "embeddingDriftBy", groupCol)
+      "embeddingDriftBy", groupCol))
     val dims = pm.select(col("_g"), col("n_g"),
       posexplode(col("_m")).as(Seq("_j", "_mj")))
     val glob = dims.groupBy(col("_j"))
@@ -761,17 +762,12 @@ object Similarity {
         sum(col("_rj") * col("_rj")).as("_nb2"),
         sum((col("_mj") - col("_rj")) * (col("_mj") - col("_rj")))
           .as("_l22"))
-    val out = per.select(col("_g").as(groupCol), col("n_g"),
+    per.select(col("_g").as(groupCol), col("n_g"),
       (col("n") - col("n_g")).as("n_rest"),
       round(when(col("_na2") > 0 && col("_nb2") > 0,
         col("_dot") / sqrt(col("_na2") * col("_nb2"))), 6).as("mean_cos"),
       round(when(col("n") > col("n_g"), sqrt(col("_l22"))), 6)
         .as("mean_l2"))
-    // |slices|-row result: materialize and release the gate pin when the
-    // guard pinned it (the Eval.ksTest convention)
-    val pinned = graft.util.Checkpoints.pin(out)
-    graft.util.Checkpoints.release(pm)
-    pinned
   }
 
   /** [[embeddingDriftWindowed]]'s baseline inputs from the reference

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Checkpoints.PinOps
+import graft.util.Checkpoints.{PinOps, scoped}
 
 /** Text-analysis operators for large-scale training-data pipelines — all
   * pure Catalyst expressions (no UDFs): whole-stage-codegen'd, shuffle-free
@@ -1226,7 +1226,7 @@ object TextAnalysis {
     * once and join — this is the single-query serving shape. */
   def bm25(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, query: String, k1: Double = 1.2, b: Double = 0.75,
-      topN: Int = 10): org.apache.spark.sql.DataFrame = {
+      topN: Int = 10): org.apache.spark.sql.DataFrame = scoped { sc =>
     val qTerms = "[a-z0-9]+".r.findAllIn(query.toLowerCase).toSeq.distinct
     require(qTerms.nonEmpty, s"query '$query' has no terms")
     // pin the tokenized projection ONCE (r15, the raterBase lesson):
@@ -1234,9 +1234,8 @@ object TextAnalysis {
     // `hits`) re-ran the wordTokens regex three times; the pinned rows
     // are (id, toks, dl) — the same bytes-per-row the shared-scan bases
     // hold — and release after the bounded topN result materializes
-    val docs = df.select(col(idCol), wordTokens(textCol).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("double"))
-      .pin()
+    val docs = sc.pin(df.select(col(idCol), wordTokens(textCol).as("toks"))
+      .withColumn("dl", size(col("toks")).cast("double")))
     val stats = docs.agg(count(lit(1)).cast("double").as("_n"),
       avg(col("dl")).as("_avgdl"))
     val hits = docs
@@ -1246,7 +1245,7 @@ object TextAnalysis {
       .agg(count(lit(1)).cast("double").as("tf"))
     val dft = hits.select(col(idCol), col("tok")).distinct()
       .groupBy(col("tok")).agg(count(lit(1)).cast("double").as("_df"))
-    val out = tf.join(broadcast(dft), "tok")
+    tf.join(broadcast(dft), "tok")
       .crossJoin(broadcast(stats))
       .withColumn("_idf",
         log(lit(1.0) + (col("_n") - col("_df") + lit(0.5)) /
@@ -1258,9 +1257,6 @@ object TextAnalysis {
       .agg(round(sum(col("_s")), 6).as("score"))
       .orderBy(col("score").desc, col(idCol))
       .limit(topN)
-      .pin()
-    graft.util.Checkpoints.release(docs)
-    out
   }
 
   /** PMI COLLOCATIONS — corpus phrase mining: every adjacent word bigram
@@ -1374,12 +1370,11 @@ object TextAnalysis {
     * empty-rest smoothing (finite, no NULLs). */
   def vocabDivergenceBy(df: org.apache.spark.sql.DataFrame,
       groupCol: String, textCol: String,
-      alpha: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    val pg = df.select(col(groupCol).as("_g"),
+      alpha: Double = 0.5): org.apache.spark.sql.DataFrame = scoped { sc =>
+    val pg = sc.pin(df.select(col(groupCol).as("_g"),
         explode(wordTokens(textCol)).as("tok"))
       .filter(col("_g").isNotNull)
-      .groupBy(col("_g"), col("tok")).agg(count(lit(1)).as("c"))
-      .pin()
+      .groupBy(col("_g"), col("tok")).agg(count(lit(1)).as("c")))
     graft.util.GridGuard.gateAxes(pg, "vocabDivergenceBy",
       s"$textCol tokens" -> "tok", groupCol -> "_g")
     val glob = pg.groupBy(col("tok")).agg(sum(col("c")).as("ct"))
@@ -1395,7 +1390,7 @@ object TextAnalysis {
       (col("n_g").cast("double") + av)
     val pb = ((col("ct") - col("c")).cast("double") + lit(alpha)) /
       ((col("n") - col("n_g")).cast("double") + av)
-    val out = grid
+    grid
       .select(col("_g"), col("n_g"), col("n"), col("vocab"),
         (pa * log(pa / pb)).as("t_ab"), (pb * log(pb / pa)).as("t_ba"),
         (pa * log(pa * 2.0 / (pa + pb)) / 2.0 +
@@ -1407,11 +1402,6 @@ object TextAnalysis {
       .select(col("_g").as(groupCol), col("n_g"),
         (col("n") - col("n_g")).as("n_rest"), col("vocab"),
         col("kl_ab"), col("kl_ba"), col("js"))
-    // |slices|-row result: materialize, then reclaim the gate pin (the
-    // ksTest convention)
-    val pinned = graft.util.Checkpoints.pin(out)
-    graft.util.Checkpoints.release(pg)
-    pinned
   }
 
   /** [[vocabDivergenceWindowed]]'s driver-held baseline from the

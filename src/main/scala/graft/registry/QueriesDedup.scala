@@ -8,6 +8,7 @@ import graft.model.{GridSchema, TriMesh}
 import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
 import graft.sources.Ingest
 import graft.QueryShared._
+import graft.util.Checkpoints.scoped
 
 /** Query registry — LLM pipeline: exact/near dedup, decontamination, components, containment, snapshots.
   *
@@ -66,18 +67,15 @@ object QueriesDedup {
 
     // ext: hamming-space LSH — pigeonhole chunk banding over the 60-bit
     // simhash, exact popcount verify
-    "q44_simhash_pairs" -> ((s, dir) => {
+    "q44_simhash_pairs" -> ((s, dir) => scoped { sc =>
       // hammingNearDups reads its sketch frame three times (banding +
       // both verify sides) — pre-sketch through the decoupled API (the
       // aHash pattern) and pin the 16-byte/row frame so the SimHash
       // kernel runs once
-      val sk = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), ext.Dedup.simhash("text").as("sk"))
-        .localCheckpoint(true)
-      materializedWithout(
-        pinSorted(ext.Dedup.hammingNearDups(sk, "sk", "doc_id",
-          maxHamming = 2), "id_a", "id_b"), sk)
-    }),
+      val sk = sc.pin(Tables.load(s, dir, "documents")
+        .select(col("doc_id"), ext.Dedup.simhash("text").as("sk")))
+      ext.Dedup.hammingNearDups(sk, "sk", "doc_id", maxHamming = 2)
+    }.orderBy("id_a", "id_b")),
 
 
     // ext: windowed LSH dedup survivors (the streaming filter's batch twin;

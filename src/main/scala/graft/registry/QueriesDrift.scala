@@ -8,6 +8,7 @@ import graft.model.{GridSchema, TriMesh}
 import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
 import graft.sources.Ingest
 import graft.QueryShared._
+import graft.util.Checkpoints.scoped
 
 /** Query registry — LLM pipeline: the drift matrix, COMPLETE as of r14:
   * every one of {PSI, KS, rank-sum, chi², embedding} has all three
@@ -33,22 +34,26 @@ import graft.QueryShared._
   * fragments live in [[QueryShared]]. */
 object QueriesDrift {
 
+  /** `(source, q = 6 dp quality score, extra…)` over the documents — the
+    * scored projection every source-vs-rest drift query pins once. */
+  private def scoredSources(s: SparkSession, dir: String,
+      extra: org.apache.spark.sql.Column*): DataFrame =
+    Tables.load(s, dir, "documents").select(col("source") +:
+      round(ext.TextAnalysis.qualityScore("text"), 6).as("q") +: extra: _*)
+
   private[graft] val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ext: PSI drift monitor — src9's quality distribution vs everyone
     // else's, 10 fixed bins on the ROUNDED score (engine-stable edges)
-    "q103_psi_drift" -> ((s, dir) => {
+    "q103_psi_drift" -> ((s, dir) => scoped { sc =>
       // psiDrift evaluates each side twice (row count + bucket counts)
       // and both sides filter the SAME scored projection — pin it so the
       // quality regex runs once, not four times
-      val docs = Tables.load(s, dir, "documents").select(col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      materializedWithout(
-        ext.Outliers.psiDrift(
-          docs.filter(col("source") =!= "src9"),
-          docs.filter(col("source") === "src9"), "q", 10, 0.0, 1.0)
-          .orderBy("bucket"), docs)
+      val docs = sc.pin(scoredSources(s, dir))
+      ext.Outliers.psiDrift(
+        docs.filter(col("source") =!= "src9"),
+        docs.filter(col("source") === "src9"), "q", 10, 0.0, 1.0)
+        .orderBy("bucket")
     }),
 
 
@@ -90,31 +95,22 @@ object QueriesDrift {
     // ext: two-sample Kolmogorov–Smirnov drift test — src9's quality
     // distribution vs everyone else's, the unbinned twin of q103's PSI
     // monitor (integer-exact ECDF gaps; asymptotic 5% critical value)
-    "q184_ks_drift" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents").select(col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      // the member returns its result already pinned: release the
-      // corpus pin after it instead of pinning the result again
-      val out = ext.Eval.ksTest(
+    "q184_ks_drift" -> ((s, dir) => scoped { sc =>
+      // the member returns its result already pinned: the scope keeps it
+      // as the result and releases only the corpus pin
+      val docs = sc.pin(scoredSources(s, dir))
+      ext.Eval.ksTest(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q")
-      graft.util.Checkpoints.release(docs)
-      out
     }),
 
 
     // ext: per-source KS drift — every source's quality distribution vs
     // the rest of the corpus, the sliced view of q184 ("which source
     // drifted?"); one corpus pass, grids bounded by score granularity
-    "q185_ks_by_source" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents").select(col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      val out = ext.Eval.ksTestBy(docs, "source", "q").orderBy("source")
-      graft.util.Checkpoints.release(docs)
-      out
-    }),
+    "q185_ks_by_source" -> ((s, dir) => scoped { sc =>
+      ext.Eval.ksTestBy(sc.pin(scoredSources(s, dir)), "source", "q")
+    }.orderBy("source")),
 
 
     // ext: WINDOWED KS drift — q184's statistic as a per-day monitor
@@ -144,15 +140,11 @@ object QueriesDrift {
     // LOCATION-shift member beside q184's any-shape KS (same slice, so
     // the two statistics read together: KS fires on any change, rank-sum
     // says specifically "moved up/down")
-    "q188_rank_sum" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents").select(col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      val out = ext.Eval.rankSumTest(
+    "q188_rank_sum" -> ((s, dir) => scoped { sc =>
+      val docs = sc.pin(scoredSources(s, dir))
+      ext.Eval.rankSumTest(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q")
-      graft.util.Checkpoints.release(docs)
-      out
     }),
 
     // ext: WINDOWED chi-squared drift — each day's event-type mix vs the
@@ -180,14 +172,9 @@ object QueriesDrift {
     // ext: per-source rank-sum drift — every source's quality LOCATION vs
     // the rest (q185's sliced view for the rank-sum statistic; one global
     // mid-rank table serves every group, z > 0 = the source ranks higher)
-    "q191_rank_sum_by_source" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents").select(col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      val out = ext.Eval.rankSumTestBy(docs, "source", "q").orderBy("source")
-      graft.util.Checkpoints.release(docs)
-      out
-    }),
+    "q191_rank_sum_by_source" -> ((s, dir) => scoped { sc =>
+      ext.Eval.rankSumTestBy(sc.pin(scoredSources(s, dir)), "source", "q")
+    }.orderBy("source")),
     // ext: per-source chi-squared drift — every source's LANGUAGE MIX vs
     // the rest (the categorical by-slice view; rest = global minus own,
     // one (source, lang) aggregation serves every slice)
@@ -199,31 +186,21 @@ object QueriesDrift {
     // ext: ONE-CALL drift report — src9 vs the rest through every lens
     // (PSI / KS / rank-sum / chi2), each row bit-identical to the member
     // statistic it reshapes
-    "q193_drift_report" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents").select(col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
-          col("lang"))
-        .localCheckpoint(true)
-      val out = ext.Outliers.driftReport(
+    "q193_drift_report" -> ((s, dir) => scoped { sc =>
+      val docs = sc.pin(scoredSources(s, dir, col("lang")))
+      ext.Outliers.driftReport(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q", "lang")
-      graft.util.Checkpoints.release(docs)
-      out
     }),
 
     // ext: per-source PSI drift — every source's binned quality
     // distribution vs the rest (q103's sliced view, the binned member of
     // the by-slice family beside q185/q191/q192; rest-side bucket counts
     // derive as global − own, one (source, bucket) aggregation)
-    "q194_psi_by_source" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents").select(col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      val out = ext.Outliers.psiDriftBy(docs, "source", "q", 10, 0.0, 1.0)
-        .orderBy("source")
-      graft.util.Checkpoints.release(docs)
-      out
-    }),
+    "q194_psi_by_source" -> ((s, dir) => scoped { sc =>
+      ext.Outliers.psiDriftBy(sc.pin(scoredSources(s, dir)), "source", "q",
+        10, 0.0, 1.0)
+    }.orderBy("source")),
 
     // ext: per-label embedding drift — each label cluster's mean
     // embedding vs the rest of the corpus's (the embedding member of the
@@ -289,14 +266,9 @@ object QueriesDrift {
     // lens (PSI / KS / rank-sum / chi2 vs the rest of the corpus), the
     // per-slice sibling of q193; ONE (source, value) aggregation feeds
     // the three value lenses, each row ≡ the by-slice member it reshapes
-    "q200_drift_report_by" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents").select(col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
-          col("lang"))
-        .localCheckpoint(true)
-      val out = ext.Outliers.driftReportBy(docs, "source", "q", "lang")
-      graft.util.Checkpoints.release(docs)
-      out
+    "q200_drift_report_by" -> ((s, dir) => scoped { sc =>
+      ext.Outliers.driftReportBy(sc.pin(scoredSources(s, dir, col("lang"))),
+        "source", "q", "lang")
     }),
 
     // ext: THE NIGHTLY DRIFT GATE AS ONE STATEFUL PASS — q186 + q189 +

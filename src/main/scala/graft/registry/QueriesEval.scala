@@ -8,6 +8,7 @@ import graft.model.{GridSchema, TriMesh}
 import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
 import graft.sources.Ingest
 import graft.QueryShared._
+import graft.util.Checkpoints.scoped
 
 /** Query registry — LLM pipeline: classifier/agreement/calibration/CI audits and rank statistics.
   *
@@ -28,25 +29,23 @@ object QueriesEval {
 
 
     // ext: precision/recall threshold sweep of the q99 classifier gate
-    "q113_pr_curve" -> ((s, dir) => {
-      val base = raterBase(s, dir)
+    "q113_pr_curve" -> ((s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
       val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
         .join(base.select(col("doc_id"),
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
-      materializedWithout(
-        graft.util.Checkpoints.pin(ext.Eval.prCurve(scored, "score",
-          "label")).orderBy(col("threshold").desc), base)
-    }),
+      ext.Eval.prCurve(scored, "score", "label")
+    }.orderBy(col("threshold").desc)),
 
 
     // ext: exact Mann-Whitney ROC-AUC of the same gate (ties at half
     // credit via average ranks; all arithmetic exact in doubles)
-    "q114_auc" -> ((s, dir) => {
-      val base = raterBase(s, dir)
+    "q114_auc" -> ((s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
       val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
         .join(base.select(col("doc_id"),
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
-      materializedWithout(ext.Eval.aucRoc(scored, "score", "label"), base)
+      ext.Eval.aucRoc(scored, "score", "label")
     }),
 
 
@@ -63,15 +62,13 @@ object QueriesEval {
 
     // ext: ECDF percentile-rank transform of the quality score (mid-rank
     // ties; exact 0.5-multiples over an exact total — unrounded)
-    "q117_ecdf" -> ((s, dir) => {
+    "q117_ecdf" -> ((s, dir) => scoped { sc =>
       // ecdf reads its input twice (row side + rank table side); pin the
       // regex-scored projection (16 bytes/row) so the scorer runs once
-      val scored = Tables.load(s, dir, "documents")
+      val scored = sc.pin(Tables.load(s, dir, "documents")
         .select(col("doc_id"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      materializedWithout(
-        ext.Eval.ecdf(scored, "q").orderBy("doc_id"), scored)
+          round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
+      ext.Eval.ecdf(scored, "q").orderBy("doc_id")
     }),
 
 
@@ -79,57 +76,53 @@ object QueriesEval {
     // rank-normalized (ecdf) and blended 0.5/0.2/0.3; unit-free scoring.
     // blendKeyed = the shared-scan shape: the regex-heavy scoring
     // projection evaluates once, not once per signal table (r8 verdict)
-    "q118_quality_blend" -> ((s, dir) => {
+    "q118_quality_blend" -> ((s, dir) => scoped { sc =>
       // blendKeyed reads its exploded signal frame twice (rank table +
       // join-back) — pin the three-regex projection so each regex runs
       // once, not twice
-      val scored = Tables.load(s, dir, "documents").select(col("doc_id"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
-          round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"),
-          round(ext.TextAnalysis.alphaWordFraction(col("text")), 6).as("awf"))
-        .localCheckpoint(true)
-      materializedWithout(ext.Eval.blendKeyed(scored, "doc_id",
-        Seq("q" -> 0.5, "mwl" -> 0.2, "awf" -> 0.3)), scored)
-        .orderBy("doc_id")
-    }),
+      val scored = sc.pin(Tables.load(s, dir, "documents").select(
+        col("doc_id"),
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
+        round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"),
+        round(ext.TextAnalysis.alphaWordFraction(col("text")), 6).as("awf")))
+      ext.Eval.blendKeyed(scored, "doc_id",
+        Seq("q" -> 0.5, "mwl" -> 0.2, "awf" -> 0.3))
+    }.orderBy("doc_id")),
 
 
     // ext: per-class precision/recall/F1 of the q112 language classifier
     // (never-predicted classes carry NULL precision/F1, not zero)
-    "q119_class_metrics" -> ((s, dir) => {
+    "q119_class_metrics" -> ((s, dir) => scoped { sc =>
       // shares ONE pinned tokenized scan between the classifier and the
       // label side of the metrics join (the label column rides the same
       // pinned frame — no second corpus scan)
-      val base = nbLangBase(s, dir)
+      val base = sc.pin(nbLangBase(s, dir))
       val preds = ext.TextAnalysis
         .nbMulticlassTokens(base, "doc_id")
         .select(col("doc_id"), col("pred"))
         .join(base.select(col("doc_id"), col("cls").as("lang")), "doc_id")
-      materializedWithout(
-        pinSorted(ext.Eval.classMetrics(preds, "lang", "pred"), "cls"),
-        base)
-    }),
+      ext.Eval.classMetrics(preds, "lang", "pred")
+    }.orderBy("cls")),
 
 
     // ext: Cohen's kappa between the q99 NB gate and the quality>=0.5
     // gate — chance-corrected rater agreement, exact integer p_e
-    "q120_kappa" -> ((s, dir) => {
+    "q120_kappa" -> ((s, dir) => scoped { sc =>
       // both raters ride the pinned raterBase scan: the NB gate reads its
       // token column, the quality gate its pre-rounded qs column
-      val base = raterBase(s, dir)
+      val base = sc.pin(raterBase(s, dir))
       val nb = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
         .select(col("doc_id"), col("pred"))
       val gate = base.select(col("doc_id"),
         when(col("qs") >= 0.5, 1).otherwise(0).as("gate"))
-      materializedWithout(
-        ext.Eval.cohenKappa(nb.join(gate, "doc_id"), "pred", "gate"), base)
+      ext.Eval.cohenKappa(nb.join(gate, "doc_id"), "pred", "gate")
     }),
 
 
     // ext: per-language AUC of the q99 gate — the sliced fairness view
     // a single corpus-level AUC hides; every stage keys on the slice
-    "q121_auc_by_lang" -> ((s, dir) => {
-      val base = raterBase(s, dir)
+    "q121_auc_by_lang" -> ((s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
       // lang is not on the pinned base — a narrow (doc_id, lang) parquet
       // scan joins it in (no regex kernel on that branch)
       val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
@@ -137,23 +130,19 @@ object QueriesEval {
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
         .join(Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("lang")), "doc_id")
-      materializedWithout(
-        ext.Eval.aucRocBy(scored, "lang", "score", "label")
-          .orderBy("lang"), base)
+      ext.Eval.aucRocBy(scored, "lang", "score", "label").orderBy("lang")
     }),
 
 
     // ext: calibration bins of the q99 gate — observed positive rate vs
     // stated sigmoid confidence per rounded-probability decile
-    "q122_calibration" -> ((s, dir) => {
-      val base = raterBase(s, dir)
+    "q122_calibration" -> ((s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
       val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
         .join(base.select(col("doc_id"),
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
-      materializedWithout(
-        pinSorted(ext.Eval.calibrationBins(scored, "score", "label"),
-          "bin"), base)
-    }),
+      ext.Eval.calibrationBins(scored, "score", "label")
+    }.orderBy("bin")),
 
 
     // ext: Kaplan-Meier conversion curve — time from first event to
@@ -192,8 +181,8 @@ object QueriesEval {
     // nbScore ≡ nbQualityScore on the training corpus, suite-pinned),
     // unpivoted to long form: r9 paid three independent scans plus the
     // NB join shape for the same ratings (judge note, VERDICT r9 #3)
-    "q150_fleiss_kappa" -> ((s, dir) => {
-      val base = raterBase(s, dir)
+    "q150_fleiss_kappa" -> ((s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
       val wide = base.select(col("doc_id"),
         when(ext.TextAnalysis.nbScoreTokens(
           nbModelOnTokens(base), col("toks")) > 0, 1).otherwise(0).as("nb"),
@@ -201,31 +190,29 @@ object QueriesEval {
         when(col("n_chars") >= 300, 1).otherwise(0).as("len"))
       val long = wide.unpivot(Array(col("doc_id")),
         Array(col("nb"), col("gate"), col("len")), "rater", "vote")
-      materializedWithout(
-        ext.Eval.fleissKappa(long, "doc_id", "rater", "vote"), base)
+      ext.Eval.fleissKappa(long, "doc_id", "rater", "vote")
     }),
 
 
     // ext: Brier score + Murphy decomposition of the q99 NB gate — the
     // scalar probability audit next to q122's per-bin reliability view
-    "q151_brier" -> ((s, dir) => {
-      val base = raterBase(s, dir)
+    "q151_brier" -> ((s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
       val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
         .join(base.select(col("doc_id"),
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
-      materializedWithout(
-        ext.Eval.brierDecomposition(scored, "score", "label"), base)
+      ext.Eval.brierDecomposition(scored, "score", "label")
     }),
 
 
     // ext: Krippendorff's alpha with an ABSTAINING rater (the length
     // gate only votes outside n_chars [250,350]) — agreement that
     // tolerates missing ratings, unlike q150's Fleiss
-    "q157_krippendorff" -> ((s, dir) => {
+    "q157_krippendorff" -> ((s, dir) => scoped { sc =>
       // q150's shared-scan shape; the abstaining len rater emits NULL
       // inside [250,350] and the unpivoted row is dropped (abstention =
       // absent rating)
-      val base = raterBase(s, dir)
+      val base = sc.pin(raterBase(s, dir))
       val wide = base.select(col("doc_id"),
         when(ext.TextAnalysis.nbScoreTokens(
           nbModelOnTokens(base), col("toks")) > 0, 1).otherwise(0).as("nb"),
@@ -235,26 +222,22 @@ object QueriesEval {
       val long = wide.unpivot(Array(col("doc_id")),
         Array(col("nb"), col("gate"), col("len")), "rater", "vote")
         .filter(col("vote").isNotNull)
-      materializedWithout(
-        ext.Eval.krippendorffAlpha(long, "doc_id", "rater", "vote"), base)
+      ext.Eval.krippendorffAlpha(long, "doc_id", "rater", "vote")
     }),
 
 
     // ext: cross-source quantile normalization — each doc's quality maps
     // to the GLOBAL value at its within-source percentile (exact data
     // values, no interpolated cuts)
-    "q158_quantile_norm" -> ((s, dir) => {
+    "q158_quantile_norm" -> ((s, dir) => scoped { sc =>
       // quantileNormalize reads its input three times (per-group ranks,
       // global ranks, final join) — pin the regex-scored projection
-      val scored = Tables.load(s, dir, "documents").select(col("doc_id"),
-          col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      materializedWithout(
-        pinSorted(ext.Eval.quantileNormalize(scored, "source", "q")
-          .select(col("doc_id"), col("source"), col("q"), col("norm")),
-          "doc_id"), scored)
-    }),
+      val scored = sc.pin(Tables.load(s, dir, "documents").select(
+        col("doc_id"), col("source"),
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
+      ext.Eval.quantileNormalize(scored, "source", "q")
+        .select(col("doc_id"), col("source"), col("q"), col("norm"))
+    }.orderBy("doc_id")),
 
 
     // ext: Spearman rank correlation between the quality and
@@ -270,14 +253,13 @@ object QueriesEval {
 
     // ext: deterministic Poisson-bootstrap CI on the mean quality score —
     // error bars without resampling passes, one scan ×40 hash weights
-    "q165_bootstrap_ci" -> ((s, dir) => {
+    "q165_bootstrap_ci" -> ((s, dir) => scoped { sc =>
       // bootstrapCI reads its input twice (replicate branch + the n/mean
       // aggregate) — pin the regex-scored projection
-      val scored = Tables.load(s, dir, "documents").select(col("doc_id"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      materializedWithout(
-        ext.Eval.bootstrapCI(scored, "doc_id", "q"), scored)
+      val scored = sc.pin(Tables.load(s, dir, "documents").select(
+        col("doc_id"),
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
+      ext.Eval.bootstrapCI(scored, "doc_id", "q")
     }),
 
 
@@ -334,14 +316,12 @@ object QueriesEval {
 
     // ext: per-source bootstrap CI on mean quality — q165 sliced by
     // source; "are these two sources' qualities really different?"
-    "q174_bootstrap_by_source" -> ((s, dir) => {
-      val scored = Tables.load(s, dir, "documents").select(col("doc_id"),
-          col("source"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
-        .localCheckpoint(true)
-      materializedWithout(
-        ext.Eval.bootstrapCIBy(scored, "source", "doc_id", "q")
-          .orderBy("source"), scored)
+    "q174_bootstrap_by_source" -> ((s, dir) => scoped { sc =>
+      val scored = sc.pin(Tables.load(s, dir, "documents").select(
+        col("doc_id"), col("source"),
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
+      ext.Eval.bootstrapCIBy(scored, "source", "doc_id", "q")
+        .orderBy("source")
     }),
   )
 

@@ -8,6 +8,7 @@ import graft.model.{GridSchema, TriMesh}
 import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
 import graft.sources.Ingest
 import graft.QueryShared._
+import graft.util.Checkpoints.scoped
 
 /** Query registry — LLM pipeline: image/audio/video decode, hashes, FLAC, box walks.
   *
@@ -64,16 +65,15 @@ object QueriesMultimodal {
     // ext: perceptual image near-dups — REAL decode → 60-bit aHash →
     // pigeonhole Hamming banding; the oracle recomputes the hash from
     // the analytic synthetic raster
-    "q124_image_neardup" -> ((s, dir) => {
+    "q124_image_neardup" -> ((s, dir) => scoped { sc =>
       val media = ext.Multimodal.synthesizeImages(
         Tables.load(s, dir, "documents"), "doc_id")
       // hammingNearDups reads its sketch frame three times — pin the
       // aHash table (16 bytes/row) so the PNG decode + hash pipeline
       // runs once, not per consumer
-      val hashed = ext.Multimodal.aHash(media).localCheckpoint(true)
-      materializedWithout(
-        ext.Dedup.hammingNearDups(hashed, "ahash", "id", maxHamming = 2)
-          .orderBy("id_a", "id_b"), hashed)
+      val hashed = sc.pin(ext.Multimodal.aHash(media))
+      ext.Dedup.hammingNearDups(hashed, "ahash", "id", maxHamming = 2)
+        .orderBy("id_a", "id_b")
     }),
 
 

@@ -8,6 +8,7 @@ import graft.model.{GridSchema, TriMesh}
 import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
 import graft.sources.Ingest
 import graft.QueryShared._
+import graft.util.Checkpoints.scoped
 
 /** Query registry — LLM pipeline: ANN (brute/IVF/PQ/stores), embeddings/PCA, retrieval + fusion.
   *
@@ -289,35 +290,31 @@ object QueriesSimilarity {
 
     // ext: the harness audits its own retrieval stack — hit/MRR/nDCG of
     // the sparse, dense and RRF-fused runs against one judgment set
-    "q181_fusion_audit" -> ((s, dir) => {
+    "q181_fusion_audit" -> ((s, dir) => scoped { sc =>
       val emb = Tables.load(s, dir, "embeddings")
       val docs = Tables.load(s, dir, "documents")
       // the sparse run feeds its own audit AND the fusion (whose audit
-      // reads it again) — without a pin the corpus-scale BM25 scan runs
-      // three times; dense/qrels are bounded but re-read the same way
-      val sparse = ext.TextAnalysis.bm25(docs, "doc_id", "text",
-        "hash join filter").localCheckpoint(true)
-      val dense = ext.Similarity
+      // reads it again) — bm25 hands back its topN already pinned, so the
+      // corpus-scale BM25 scan runs once; dense/qrels are bounded but
+      // re-read the same way, so they are pinned here
+      val sparse = sc.own(ext.TextAnalysis.bm25(docs, "doc_id", "text",
+        "hash join filter"))
+      val dense = sc.pin(ext.Similarity
         .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 10)
-        .select(col("corpus_id").as("doc_id"), col("cos").as("score"))
-        .localCheckpoint(true)
+        .select(col("corpus_id").as("doc_id"), col("cos").as("score")))
       val fused = ext.Similarity.rrfFuse(sparse, dense, "doc_id")
         .select(col("doc_id"), col("rrf").as("score"))
-      val qrels = emb.as("q").filter(col("q.vec_id") === 0)
+      val qrels = sc.pin(emb.as("q").filter(col("q.vec_id") === 0)
         .join(emb.as("c"),
           col("q.label") === col("c.label") && col("c.vec_id") =!= 0)
-        .select(col("c.vec_id").as("doc_id"), lit(0L).as("qid"))
-        .localCheckpoint(true)
+        .select(col("c.vec_id").as("doc_id"), lit(0L).as("qid")))
       def audit(run: org.apache.spark.sql.DataFrame, name: String) =
         ext.Eval.retrievalMetrics(run.withColumn("qid", lit(0L)),
             qrels, "qid", "doc_id", "score", 10)
           .select(lit(name).as("run"), col("n_rel"), col("hit_k"),
             col("mrr"), col("ndcg"))
-      val out = audit(sparse, "sparse").unionByName(audit(dense, "dense"))
+      audit(sparse, "sparse").unionByName(audit(dense, "dense"))
         .unionByName(audit(fused, "fused")).orderBy("run")
-        .localCheckpoint(true)
-      Seq(sparse, dense, qrels).foreach(graft.util.Checkpoints.release(_))
-      out
     }),
 
 

@@ -8,6 +8,7 @@ import graft.model.{GridSchema, TriMesh}
 import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
 import graft.sources.Ingest
 import graft.QueryShared._
+import graft.util.Checkpoints.scoped
 
 /** Query registry — LLM pipeline: language/quality signals, BPE, LM scoring, DSIR, NB gates,
   * and (r14) the text member's drift family — per-source vocabulary
@@ -258,11 +259,9 @@ object QueriesText {
     // The classifier reads the token column three times, so the q99
     // family (q113/q114/q120/q121/q122/q151 too) runs on the pinned
     // raterBase projection — one tokenizer pass, released per query.
-    "q99_quality_classifier" -> ((s, dir) => {
-      val base = raterBase(s, dir)
-      materializedWithout(
-        ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
-          .orderBy("doc_id"), base)
+    "q99_quality_classifier" -> ((s, dir) => scoped { sc =>
+      ext.TextAnalysis.nbQualityScoreTokens(sc.pin(raterBase(s, dir)),
+        "doc_id").orderBy("doc_id")
     }),
 
 
@@ -278,11 +277,9 @@ object QueriesText {
     // The tokenized projection is pinned once (the score frame reads the
     // token column ~5x — the raterBase lesson), then released behind the
     // narrow per-doc result.
-    "q112_nb_multiclass" -> ((s, dir) => {
-      val base = nbLangBase(s, dir)
-      materializedWithout(
-        ext.TextAnalysis.nbMulticlassTokens(base, "doc_id")
-          .orderBy("doc_id"), base)
+    "q112_nb_multiclass" -> ((s, dir) => scoped { sc =>
+      ext.TextAnalysis.nbMulticlassTokens(sc.pin(nbLangBase(s, dir)),
+        "doc_id").orderBy("doc_id")
     }),
 
 
@@ -344,10 +341,9 @@ object QueriesText {
 
     // ext: label-issue mining — the 20 docs whose lang label the q112
     // NB margins reject most confidently (the human-audit queue)
-    "q173_label_issues" -> ((s, dir) => {
-      val base = nbLangBase(s, dir)
-      materializedWithout(
-        ext.TextAnalysis.nbLabelIssuesTokens(base, "doc_id"), base)
+    "q173_label_issues" -> ((s, dir) => scoped { sc =>
+      ext.TextAnalysis.nbLabelIssuesTokens(sc.pin(nbLangBase(s, dir)),
+        "doc_id")
     }),
 
     // ext: per-source vocabulary drift — each source's token
@@ -398,23 +394,21 @@ object QueriesText {
     // language-mix chi2 + vocabulary KL/JS in a single windowed
     // aggregation (one state store where four standing crawl monitors
     // ran before); every baseline from the day-1 snapshot
-    "q207_text_gate_windowed" -> ((s, dir) => {
+    "q207_text_gate_windowed" -> ((s, dir) => scoped { sc =>
       val docs = Tables.load(s, dir, "documents")
-      val live = docs.select(
-          timestamp_seconds(
-            lit(1704067200L) + (col("doc_id") % 3) * 86400L).as("ts"),
-          col("lang"), col("text"))
-        .localCheckpoint(true)
+      val live = sc.pin(docs.select(
+        timestamp_seconds(
+          lit(1704067200L) + (col("doc_id") % 3) * 86400L).as("ts"),
+        col("lang"), col("text")))
       val week = live.filter(col("ts") < lit("2024-01-02").cast("timestamp"))
       val (bv, bc) = ext.Eval.ksBaseline(
         week.select(round(ext.TextAnalysis.qualityScore("text"), 6)
           .as("q")), "q")
       val (bcats, _) = ext.Outliers.chiSquareBaseline(week, "lang")
       val (vc, vt) = ext.TextAnalysis.vocabBaseline(week, "text", 50)
-      materializedWithout(
-        pinSorted(ext.TextAnalysis.textGateWindowed(live, "ts", "text",
-          "lang", bv, bc, bcats, vc, vt), "ws"), live)
-    }),
+      ext.TextAnalysis.textGateWindowed(live, "ts", "text", "lang",
+        bv, bc, bcats, vc, vt)
+    }.orderBy("ws")),
   )
 
   private[graft] val oracleSql: Map[String, String] = Map(

@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.model.{GridSchema, TriMesh}
 
 /** Shared substrate of the per-family query registries (r12 split):
-  * the spatial fixtures + their analytic SQL, the pinned shared-scan
-  * bases ([[raterBase]]/[[nbLangBase]]) with their release discipline
-  * ([[materializedWithout]]), the memoized q62 ANN store, and every
-  * DuckDB oracle SQL fragment the registries interpolate. All members
-  * moved verbatim from SparkEntry; `private[graft]` so only the
-  * registries and SparkEntry see them. */
+  * the spatial fixtures + their analytic SQL, the shared-scan bases
+  * ([[raterBase]]/[[nbLangBase]], lazy — each query pins them in its
+  * [[graft.util.Checkpoints.scoped]] body, which releases them behind the
+  * query's result), [[pinSorted]], the memoized q62 ANN store, and every
+  * DuckDB oracle SQL fragment the registries interpolate.
+  * `private[graft]` so only the registries and SparkEntry see them. */
 object QueryShared {
   private[graft] def li(s: SparkSession, dir: String) = Tables.load(s, dir, "lineitem")
   private[graft] def ord(s: SparkSession, dir: String) = Tables.load(s, dir, "orders")
@@ -32,8 +32,7 @@ object QueryShared {
   //    the oracle) - results must be bit-identical, so the change is
   //    inadmissible even at a measured speedup.
   // The helper is deliberately NOT kept as dead code; this note is so
-  // the next round doesn't re-try it blind. (r15: ProbeAB's inert
-  // graft.spread.off arm was deleted too — VERDICT r14 #1.)
+  // the next round doesn't re-try it blind.
 
   /** Pin-then-sort for a query's FINAL deterministic `orderBy` (r14): a
     * global sort is a RANGE exchange whose partitioner SAMPLES its child —
@@ -46,16 +45,12 @@ object QueryShared {
     * per-doc feature rows) — the orderBy exists only to make output
     * deterministic, so this is exactly the guide §2.4 "orderBy used only
     * to make output deterministic" exchange, made cheap rather than
-    * removed (the driver hash-compare needs the order). The pin is
-    * released by the bench's per-query delta-unpersist. */
+    * removed (the oracle hash-compare needs the order). The pin stays
+    * embedded in the returned sorted frame: the query's caller owns it
+    * and reclaims it with `Checkpoints.release(result)`. */
   private[graft] def pinSorted(df: DataFrame, first: String,
-      rest: String*): DataFrame = {
-    // A/B escape hatch: the control arm for same-JVM paired measurement
-    // (graft.ProbeAB toggles it between interleaved passes)
-    if (sys.props.get("graft.pinsort.off").contains("true"))
-      return df.orderBy(first, rest: _*)
+      rest: String*): DataFrame =
     graft.util.Checkpoints.pin(df).orderBy(first, rest: _*)
-  }
 
   // ---- fixed spatial fixtures (mirrored analytically in the oracles) -----
   // 30×20×20 grid, 10 m cells, origin (1000, 2000, 100) — the reference
@@ -118,12 +113,12 @@ object QueryShared {
   /** Shared base for the NB-gate query family (q99/q113/q114/q120/q121/
     * q122/q151 via [[ext.TextAnalysis.nbQualityScoreTokens]]) and the
     * q150/q157 multi-rater agreement audits: ONE corpus scan paying the
-    * regex tokenizer and quality scorer exactly once, checkpointed
-    * because every consumer re-reads the token column several times
-    * (the classifier alone evaluates it 3×) — without the pin each
-    * consumer would re-run both regexes (the spearman lesson; r9 timed
-    * the per-rater-scan shape at 2.2–3.1 s, VERDICT r9 #3). Released per
-    * query via [[materializedWithout]]. */
+    * regex tokenizer and quality scorer exactly once. Lazy; every caller
+    * pins it in its scope (`sc.pin(raterBase(s, dir))`) because every
+    * consumer re-reads the token column several times (the classifier
+    * alone evaluates it 3×) — without the pin each consumer would re-run
+    * both regexes (the spearman lesson; r9 timed the per-rater-scan shape
+    * at 2.2–3.1 s, VERDICT r9 #3). */
   private[graft] def raterBase(s: SparkSession, dir: String): DataFrame =
     // NO spread here (r14, measured): paired A/B put the repartitioned
     // form 0.6-0.8 s SLOWER per consumer query (q99 1.75→2.60, q150
@@ -136,21 +131,18 @@ object QueryShared {
         col("source").isin("src0", "src1").as("pos"),
         round(ext.TextAnalysis.qualityScore("text"), 6).as("qs"),
         ext.TextAnalysis.wordTokens("text").as("toks"))
-      .localCheckpoint(true)
 
-  /** Pinned `(doc_id, cls=lang, toks)` projection for the k-way NB
-    * queries (q112/q119/q173): the multiclass score frame reads the
-    * token column ~5 times (token stream, class counts, doc counts,
-    * class totals, lengths), so one eager checkpoint pays the tokenizer
-    * regex exactly once — the [[raterBase]] lesson. Released via
-    * [[materializedWithout]] behind each query's narrow result. */
+  /** `(doc_id, cls=lang, toks)` projection for the k-way NB queries
+    * (q112/q119/q173), lazy like [[raterBase]] and pinned by each caller's
+    * scope: the multiclass score frame reads the token column ~5 times
+    * (token stream, class counts, doc counts, class totals, lengths), so
+    * one eager pin pays the tokenizer regex exactly once. */
   private[graft] def nbLangBase(s: SparkSession, dir: String): DataFrame =
     // no spread — same paired measurement as [[raterBase]] (q112
     // 2.07→2.69, q173 1.80→2.54 with it)
     Tables.load(s, dir, "documents").select(col("doc_id"),
         col("lang").as("cls"),
         ext.TextAnalysis.wordTokens("text").as("toks"))
-      .localCheckpoint(true)
 
   /** NB model trained from [[raterBase]]'s materialized token column —
     * same weights as `nbTrain(docs, "text", ...)` (the tokenizer is the
@@ -167,18 +159,6 @@ object QueryShared {
     * nbScoreWith ≡ nbQualityScore equivalence case. */
   private[graft] def nbModelOnTokens(base: DataFrame): ext.TextAnalysis.NbModel =
     ext.TextAnalysis.nbTrainTokens(base, col("toks"), col("pos"))
-
-  /** Eagerly materialize a BOUNDED result (the agreement statistics are
-    * one-row frames), then release `base`'s corpus-sized checkpoint
-    * blocks — without this the q150/q157 shared scan (full token arrays
-    * per doc) stays resident in the block manager for the session
-    * (ADVICE r10). The returned frame is backed by the tiny pinned
-    * result, so callers can read it any number of times. */
-  private[graft] def materializedWithout(result: DataFrame, base: DataFrame): DataFrame = {
-    val out = result.localCheckpoint(true)
-    graft.util.Checkpoints.release(base)
-    out
-  }
 
 
   // ---- DuckDB oracle fragments shared by the ext queries (single source

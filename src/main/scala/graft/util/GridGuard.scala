@@ -95,17 +95,21 @@ object GridGuard {
     * window is not), and exact where the HLL check was ~5% approximate.
     *
     * Returns the PINNED table when the guard is on (the caller's window
-    * then reads the materialized pin — callers with a one-row result
-    * should [[Checkpoints.release]] it after materializing; callers
-    * handing back a table-sized result leave the bounded pin embedded,
-    * reclaimable via `Checkpoints.release(result)`), or the original
-    * lazy frame when the guard is conf'd off. */
+    * then reads the materialized pin — callers with a bounded result
+    * adopt it with [[Checkpoints.Scope.own]]; callers handing back a
+    * table-sized result leave the bounded pin embedded, reclaimable via
+    * `Checkpoints.release(result)`), or the original lazy frame when the
+    * guard is conf'd off. A table over the ceiling is released before
+    * the failure is thrown. */
   def gateTable(per: DataFrame, op: String, colName: String): DataFrame =
     ceiling(per.sparkSession) match {
       case Some(cap) =>
         val p = Checkpoints.pin(per)
         val n = p.count()
-        if (n > cap) fail(op, colName, n.toString, cap)
+        if (n > cap) {
+          Checkpoints.release(p)
+          fail(op, colName, n.toString, cap)
+        }
         p
       case None => per
     }

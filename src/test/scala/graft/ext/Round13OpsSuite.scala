@@ -7,12 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.SparkTest
 
-/** Round-13 drift-matrix completions: the two by-slice cells the docs
-  * advertised (psiDriftBy / embeddingDriftBy) and the windowed-BY-slice
-  * composition (the `slice` forms of ksDriftWindowed /
-  * rankSumDriftWindowed / chiSquareDriftWindowed / psiWindowed), each
-  * pinned ≡ the verified member it derives from — the house property for
-  * every by-slice view.
+/** Round-13 drift-matrix completions: the windowed-BY-slice composition
+  * (the `slice` forms of ksDriftWindowed / rankSumDriftWindowed /
+  * chiSquareDriftWindowed / psiWindowed), each pinned ≡ the verified
+  * member it derives from — the house property for every by-slice view.
+  * (The by-slice psiDriftBy / embeddingDriftBy / driftReportBy cases live
+  * in DriftSuite.)
   * Plus Ivf.recommendNprobe, the serving default made callable. */
 class Round13OpsSuite extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
@@ -35,74 +35,6 @@ class Round13OpsSuite extends AnyFunSuite {
       ws: Timestamp, g: String) = {
     val dayEnd = new Timestamp(ws.getTime + 86400000L)
     df.filter(col("ts") >= ws && col("ts") < dayEnd && col("g") === g)
-  }
-
-  test("psiDriftBy rows equal round(sum(psiDrift(rest, own).psi), 6) per slice") {
-    // three sources: g0/g1 share the score shape, g2 shifted hard so the
-    // by-slice psi must flag exactly it
-    val df = (0 until 240).map { i =>
-      val g = "g" + (i % 3)
-      val v = if (g == "g2") 0.85 + (i % 3) * 0.05
-        else (i % 10) / 10.0
-      (g, math.round(v * 1e6) / 1e6)
-    }.toDF("g", "v")
-    val by = Outliers.psiDriftBy(df, "g", "v", 10, 0.0, 1.0)
-      .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
-    assert(by.keySet == Set("g0", "g1", "g2"))
-    for (g <- by.keySet) {
-      val own = df.filter(col("g") === g)
-      val rest = df.filter(col("g") =!= g)
-      val psi = Outliers.psiDrift(rest, own, "v", 10, 0.0, 1.0)
-        .agg(round(sum(col("psi")), 6)).first().getDouble(0)
-      val (nOwn, nRest) = (own.count(), rest.count())
-      assert(by(g) == Seq(nOwn, nRest, psi, if (psi > 0.25) 1 else 0),
-        s"slice $g: by ${by(g)} != member (n_g=$nOwn, n_rest=$nRest, psi=$psi)")
-    }
-    // the shifted source must flag (g0/g1 may too: their REST side
-    // contains g2's shifted third, which is itself a real drift — the
-    // by-slice view is rest-relative by design)
-    assert(by("g2")(3) == 1, "the shifted source must flag")
-    // GridGuard gates the slice axis of the pinned count table
-    spark.conf.set(graft.util.GridGuard.MaxDistinctConf, "2")
-    val e = intercept[IllegalArgumentException] {
-      Outliers.psiDriftBy(df, "g", "v", 10, 0.0, 1.0).collect()
-    }
-    assert(e.getMessage.contains("psiDriftBy"))
-    spark.conf.unset(graft.util.GridGuard.MaxDistinctConf)
-  }
-
-  test("embeddingDriftBy rows equal embeddingDrift(rest, own) per slice at 1e-6") {
-    val rnd = new scala.util.Random(97)
-    // three clusters at distinct centers so per-slice drift is real
-    val centers = Map("a" -> Array(1.0, 0.0, 0.0, 0.0),
-      "b" -> Array(0.0, 1.0, 0.0, 0.0), "c" -> Array(0.5, 0.5, 0.5, 0.0))
-    val df = (0 until 90).map { i =>
-      val g = Seq("a", "b", "c")(i % 3)
-      (i.toLong, g, centers(g).map(_ + rnd.nextGaussian() * 0.05).toSeq)
-    }.toDF("vec_id", "g", "embedding")
-    val by = Similarity.embeddingDriftBy(df, "g", "embedding")
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(by.keySet == Set("a", "b", "c"))
-    for (g <- by.keySet) {
-      val own = df.filter(col("g") === g)
-      val rest = df.filter(col("g") =!= g)
-      val m = Similarity.embeddingDrift(rest, own).collect().head
-      val r = by(g)
-      assert(r.getLong(1) == m.getLong(1) && r.getLong(2) == m.getLong(0),
-        s"slice $g: counts (${r.getLong(1)}, ${r.getLong(2)}) != member")
-      // the member averages rest ROWS; the by-op derives the rest mean
-      // from slice means — equal up to float summation order, inside
-      // the 6 dp emission grain (scaladoc contract)
-      assert(math.abs(r.getDouble(3) - m.getDouble(2)) <= 1.1e-6,
-        s"slice $g: mean_cos ${r.getDouble(3)} != ${m.getDouble(2)}")
-      assert(math.abs(r.getDouble(4) - m.getDouble(3)) <= 1.1e-6,
-        s"slice $g: mean_l2 ${r.getDouble(4)} != ${m.getDouble(3)}")
-    }
-    // single-slice input: empty rest side => NULL cos/l2, no crash
-    val one = Similarity
-      .embeddingDriftBy(df.filter(col("g") === "a"), "g", "embedding")
-      .collect().head
-    assert(one.isNullAt(3) && one.isNullAt(4) && one.getLong(2) == 0L)
   }
 
   test("ksDriftWindowedBy cells equal ksTest(baseline, cell) bit-for-bit; only the shifted cell flags") {
@@ -206,55 +138,6 @@ class Round13OpsSuite extends AnyFunSuite {
         assert(cells((ws, g)) == ref,
           s"cell ($ws, $g): ${cells((ws, g))} != substream $ref")
     }
-  }
-
-  test("driftReportBy rows equal the by-slice member statistics they reshape") {
-    // three sources with distinct value shapes AND category mixes so
-    // every lens has signal; values 6dp-rounded (the report's shared
-    // (slice, value) table carries the rank-op grid discipline)
-    val df = (0 until 300).map { i =>
-      val g = "g" + (i % 3)
-      val v = if (g == "g2") 0.8 + (i % 4) * 0.05 else (i % 10) / 10.0
-      val c = if (g == "g1") (if (i % 5 == 0) "x" else "y")
-        else (if (i % 2 == 0) "x" else "y")
-      (g, math.round(v * 1e6) / 1e6, c)
-    }.toDF("g", "v", "c")
-    val rep = Outliers.driftReportBy(df, "g", "v", "c")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.toSeq.drop(2)).toMap
-    assert(rep.size == 12, s"4 stats x 3 slices, got ${rep.size}")
-    val psiM = Outliers.psiDriftBy(df, "g", "v")
-      .collect().map(r => r.getString(0) -> r).toMap
-    val ksM = Eval.ksTestBy(df, "g", "v")
-      .collect().map(r => r.getString(0) -> r).toMap
-    val rsM = Eval.rankSumTestBy(df, "g", "v")
-      .collect().map(r => r.getString(0) -> r).toMap
-    val chiM = Outliers.chiSquareDriftBy(df.select("g", "c"), "g", "c")
-      .collect().map(r => r.getString(0) -> r).toMap
-    for (g <- Seq("g0", "g1", "g2")) {
-      assert(rep((g, "psi")) == Seq(psiM(g).getDouble(3), 0.25,
-        psiM(g).getInt(4)), s"$g psi")
-      assert(rep((g, "ks")) == Seq(ksM(g).getDouble(3),
-        ksM(g).getDouble(4), ksM(g).getInt(5)), s"$g ks")
-      assert(rep((g, "rank_sum")) == Seq(math.abs(rsM(g).getDouble(4)),
-        1.96, rsM(g).getInt(5)), s"$g rank_sum")
-      assert(rep((g, "chi2")) == Seq(chiM(g).getDouble(4),
-        chiM(g).getDouble(5), chiM(g).getInt(6)), s"$g chi2")
-    }
-    // the lenses disagree by design: g2's value shift registers on the
-    // value lenses, g1's category skew on the chi2 lens
-    assert(rep(("g2", "ks"))(2) == 1 && rep(("g1", "chi2"))(2) == 1)
-    // the shared (slice, value) table carries the rank-op grid
-    // discipline for the WHOLE report — an unrounded score column must
-    // fail loudly at the gate, naming the composed operator
-    spark.conf.set(graft.util.GridGuard.MaxDistinctConf, "50")
-    val raw = (0 until 200).map(i =>
-      ("g" + (i % 2), i * math.Pi % 1.0, "x")).toDF("g", "v", "c")
-    val e = intercept[IllegalArgumentException] {
-      Outliers.driftReportBy(raw, "g", "v", "c").collect()
-    }
-    assert(e.getMessage.contains("driftReportBy"))
-    spark.conf.unset(graft.util.GridGuard.MaxDistinctConf)
   }
 
   test("recommendNprobe: clustered corpus -> 2, isotropic -> k; knee logic edges") {

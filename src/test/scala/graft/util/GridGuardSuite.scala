@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.SparkTest
-import graft.ext.Eval
+import graft.ext.{Eval, Outliers}
 
 /** The rank/ECDF/KS grid family's "feed ROUNDED scores" 100 TB discipline,
   * enforced at runtime (VERDICT r11 #1): a default-on approx-distinct
@@ -42,12 +42,18 @@ class GridGuardSuite extends AnyFunSuite {
         "prCurve" -> (() => Eval.prCurve(
           df.withColumn("y", lit(1)), "v", "y")),
         "aucRoc" -> (() => Eval.aucRoc(
-          df.withColumn("y", ($"v" > 0.5).cast("int")), "v", "y")))
+          df.withColumn("y", ($"v" > 0.5).cast("int")), "v", "y")),
+        "chiSquareDrift" -> (() => Outliers.chiSquareDrift(half, df, "v")))
+      val sc = spark.sparkContext
       hits.foreach { case (name, run) =>
+        val before = sc.getPersistentRDDs.keySet.toSet
         val e = intercept[IllegalArgumentException](run())
         assert(e.getMessage.contains(name) &&
           e.getMessage.contains("ROUNDED"),
           s"$name must fail with the round-your-scores remedy: ${e.getMessage}")
+        // a failing guard releases every pin the member took before it
+        assert(sc.getPersistentRDDs.keySet.toSet == before,
+          s"$name leaked persistent RDDs on failure")
       }
     }
   }
