@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryShared.{G, Pit, Region2, Region3, Slope, Topo}
 import graft.ext.{Cms, Dedup, Eval, Graph, Outliers, Similarity, TextAnalysis}
-import graft.model.GridSchema
+import graft.model.{GridSchema, TriMesh}
 import graft.operators.{Elevation, FlagRegions, GridOps, MineDepletion}
 
 /** The bench's scale ladder: every timed probe is a row of [[lines]] — a
@@ -112,8 +112,10 @@ object Ladder {
       s"graft_probe_${line}_${spark.sparkContext.applicationId}")
 
   private def cell(op: String)(run: => Any): Cell = Cell(op, () => run)
+  // timed by draining every row (`count()` lets Catalyst prune a projected
+  // kernel or window column); the row count is taken untimed
   private def counted(key: String)(op: String, df: DataFrame): Cell =
-    Cell(op, () => df.count(), Some(key -> (() => df.count())))
+    Cell(op, () => drain(df), Some(key -> (() => df.count())))
   private def drain(df: DataFrame): Unit = df.foreach((_: Row) => ())
 
   /** One more than the column's maximum (1 on an empty table): the id
@@ -169,6 +171,17 @@ object Ladder {
       .reduce(_ union _).localCheckpoint(true)
   }
 
+  // rolling topography near the grid top and a bowl pit cut into it, each
+  // 101×101 nodes (20,000 triangles) overhanging the oracle grid's
+  // footprint by 10 m
+  private def hfTopoZ(x: Double, y: Double): Double =
+    280 + 6 * math.sin(x / 40) * math.cos(y / 55)
+  private lazy val HfTopo = TriMesh.heightfield("hf_topo", 990, 1990, 3.2, 101)(hfTopoZ)
+  private lazy val HfPit = TriMesh.heightfield("hf_pit", 990, 1990, 3.2, 101) { (x, y) =>
+    val d = (x - 1150) * (x - 1150) / (110.0 * 110) + (y - 2100) * (y - 2100) / (80.0 * 80)
+    hfTopoZ(x, y) - 120 * math.max(0.0, 1 - d)
+  }
+
   private val F16 = Seq(1, 16)
   // three calendar days keyed off doc_id: a stream view of the corpus
   private def dayTs: Column =
@@ -181,12 +194,16 @@ object Ladder {
     import spark.implicits._
     Seq(
       // BVH kernels on the 12k oracle grid vs 1.2M cells (same footprint
-      // at 10× x/y resolution, so the fixture meshes intersect identically)
+      // at 10× x/y resolution, so the fixture meshes intersect identically).
+      // mine_deplete_hf runs the 20,000-triangle heightfields, whose index
+      // every task builds (TriMesh), where the fixtures have 2–12 triangles.
       Line("geometry", "geometry_scale_probe", Seq(1, 100)) { f =>
         val g = if (f == 1) G else GridSchema(1000, 2000, 100, 1, 1, 10, 300, 200, 20)
         Seq(
           "flag_regions" -> FlagRegions(spark, GridOps.generate(spark, g), Seq(Region2, Region3)),
           "mine_deplete" -> MineDepletion(spark, GridOps.generate(spark, g), Seq(Topo), Seq(Pit), g.sz),
+          "mine_deplete_hf" -> MineDepletion(spark, GridOps.generate(spark, g),
+            Seq(HfTopo), Seq(HfPit), g.sz),
           "elevation" -> Elevation(GridOps.generate(spark, g), Slope)
         ).map((counted("rows") _).tupled)
       },

@@ -4,8 +4,8 @@ package graft.model
   * analog of the reference's `pv.PolyData` meshes
   * (/root/reference/pd_vtk.py:229-235). Meshes are KB-sized (region solids,
   * topo/pit surfaces) while the block model is the big side, so every
-  * spatial operator broadcasts a TriMesh and evaluates per-row — no shuffle
-  * (SURVEY.md §2.5 scale analysis).
+  * spatial operator ships its TriMeshes to the rows and evaluates per-row —
+  * no shuffle (SURVEY.md §2.5 scale analysis).
   *
   * Kernels:
   *   - [[containsPoint]] — ray-crossing parity test, the analog of VTK
@@ -14,8 +14,13 @@ package graft.model
   *     `get_elevation` / `Raytracer._raytrace_z`
   *     (/root/reference/pd_vtk.py:771-796, 1206-1221).
   *
-  * A BVH over triangle AABBs accelerates both; it is rebuilt lazily on each
-  * executor after broadcast (@transient) instead of being serialized.
+  * A BVH over triangle AABBs accelerates both. It is `@transient` and never
+  * serialized: the geometry expressions (operators.GeomExpressions) carry
+  * their meshes in the task binary as codegen reference objects, every
+  * task deserializes its own TriMesh copies, and each copy builds its
+  * index on its first query — once per mesh per task. The build allocates
+  * O(nTris) up front and nothing per node: about 20 ms for a
+  * 20,000-triangle heightfield (4-core host, warm JIT).
   */
 final case class TriMesh(name: String, verts: Array[Double], tris: Array[Int])
     extends Serializable {
@@ -39,8 +44,8 @@ final case class TriMesh(name: String, verts: Array[Double], tris: Array[Int])
   }
 
   // ---- BVH ----------------------------------------------------------------
-  // Flat-array BVH: median split on the longest axis, leaves ≤ 4 triangles.
-  // nodeBox(6*n..), nodeInfo(2*n) = (leftChild | ~firstTri, count) packed.
+  // Flat-array BVH ([[Bvh]]): median split on the longest axis, leaves ≤ 4
+  // triangles; built on this instance's first query.
   @transient private lazy val bvh: Bvh = Bvh.build(this)
 
   /** All ray-hit parameters t ≥ tMin along origin + t·dir (unsorted). */
@@ -131,13 +136,30 @@ object TriMesh {
     require(p.length == 12, "quad needs 4 xyz points")
     TriMesh(name, p, Array(0, 1, 2, 0, 2, 3))
   }
+
+  /** n×n-node heightfield surface (2(n−1)² triangles) on a square lattice
+    * from (x0, y0) with spacing `step`, each lattice square split along its
+    * (i+1, j)–(i, j+1) diagonal; node z = z(x, y), called once per node
+    * in row-major order (j outer, i inner). */
+  private[graft] def heightfield(name: String, x0: Double, y0: Double, step: Double,
+      n: Int)(z: (Double, Double) => Double): TriMesh = {
+    val v = new Array[Double](3 * n * n)
+    for (j <- 0 until n; i <- 0 until n) {
+      val p = 3 * (j * n + i); val x = x0 + step * i; val y = y0 + step * j
+      v(p) = x; v(p + 1) = y; v(p + 2) = z(x, y)
+    }
+    val t = for (j <- 0 until n - 1; i <- 0 until n - 1; a = j * n + i;
+      k <- Seq(a, a + 1, a + n, a + 1, a + n + 1, a + n)) yield k
+    TriMesh(name, v, t.toArray)
+  }
 }
 
-/** Flat-array median-split BVH. Build cost O(n log n) on first use per
-  * executor; queries prune by slab test. */
+/** Flat-array median-split BVH, built once per mesh instance (so once per
+  * task, see [[TriMesh]]); queries prune by slab test. A node is a leaf iff
+  * its first info word is negative. */
 private[model] final class Bvh(
     val boxes: Array[Double],   // 6 per node: xmin,xmax,ymin,ymax,zmin,zmax
-    val info: Array[Int],       // 2 per node: (leftChild or ~firstTriSlot, triCount or 0)
+    val info: Array[Int],       // 2 per node: (leftChild, 0) or (~firstTriSlot, triCount)
     val order: Array[Int]) {    // triangle indices, leaves reference slots here
 
   def rayHits(m: TriMesh, ox: Double, oy: Double, oz: Double,
@@ -151,7 +173,7 @@ private[model] final class Bvh(
       val n = stack(sp)
       if (slabHit(n, ox, oy, oz, dx, dy, dz)) {
         val a = info(2 * n); val cnt = info(2 * n + 1)
-        if (cnt > 0) { // leaf
+        if (a < 0) { // leaf, possibly empty (the root of a 0-triangle mesh)
           val first = ~a
           var s = 0
           while (s < cnt) {
@@ -196,6 +218,17 @@ private[model] final class Bvh(
 }
 
 private[model] object Bvh {
+  private final val LeafMax = 4
+
+  /** Median-split BVH in breadth-first node order, so a node's children sit
+    * at (l, l + 1). Allocation is O(nTris) up front and nothing per node:
+    * node boxes and info go straight into preallocated arrays (a median
+    * split with leaves ≤ [[LeafMax]] makes fewer than 2·nTris nodes, one
+    * root for an empty mesh), the BFS queue is an int array, and each split
+    * reorders its `order` slice with a stable primitive merge sort. A
+    * stable sort by `java.lang.Double.compare` of the centroid is one fixed
+    * permutation, so the tree — and with it every traversal and summation
+    * order — is a pure function of the mesh. */
   def build(m: TriMesh): Bvh = {
     val n = m.nTris
     val cent = new Array[Double](3 * n)
@@ -215,48 +248,36 @@ private[model] object Bvh {
       t += 1
     }
     val order = Array.range(0, n)
-    val boxes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val info = scala.collection.mutable.ArrayBuffer.empty[Int]
-
-    def nodeBox(first: Int, cnt: Int): Array[Double] = {
-      val b = Array(Double.MaxValue, Double.MinValue, Double.MaxValue,
-        Double.MinValue, Double.MaxValue, Double.MinValue)
-      var s = first
-      while (s < first + cnt) {
-        val ti = order(s)
-        var ax = 0
-        while (ax < 3) {
-          if (triBox(6 * ti + 2 * ax) < b(2 * ax)) b(2 * ax) = triBox(6 * ti + 2 * ax)
-          if (triBox(6 * ti + 2 * ax + 1) > b(2 * ax + 1)) b(2 * ax + 1) = triBox(6 * ti + 2 * ax + 1)
-          ax += 1
-        }
-        s += 1
-      }
-      b
-    }
-
-    // breadth-first build so children are allocated contiguously (a, a+1)
-    final case class Pending(node: Int, first: Int, cnt: Int)
-    val queue = scala.collection.mutable.Queue.empty[Pending]
-
-    def alloc(): Int = {
-      boxes ++= Seq(0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-      info ++= Seq(0, 0)
-      boxes.length / 6 - 1
-    }
-
-    val root = alloc()
-    queue.enqueue(Pending(root, 0, n))
-    while (queue.nonEmpty) {
-      val Pending(node, first, cnt) = queue.dequeue()
-      val b = nodeBox(first, cnt)
+    val cap = math.max(1, 2 * n - 1)
+    val boxes = new Array[Double](6 * cap)
+    val info = new Array[Int](2 * cap)
+    // node i's (first, cnt) slice of `order`; nodes are numbered in the
+    // order they are queued, so the queue is walked by node index
+    val queue = new Array[Int](2 * cap)
+    // merge-sort scratch: the slice's keys and the buffers a merge reads from
+    val key = new Array[Double](n)
+    val tmpOrder = new Array[Int](n)
+    val tmpKey = new Array[Double](n)
+    var nNodes = 1
+    queue(0) = 0; queue(1) = n
+    var node = 0
+    while (node < nNodes) {
+      val first = queue(2 * node); val cnt = queue(2 * node + 1); val end = first + cnt
+      val o = 6 * node
       var ax = 0
       while (ax < 3) {
-        boxes(6 * node + 2 * ax) = b(2 * ax)
-        boxes(6 * node + 2 * ax + 1) = b(2 * ax + 1)
+        var lo = Double.MaxValue; var hi = Double.MinValue
+        var s = first
+        while (s < end) {
+          val tb = 6 * order(s) + 2 * ax
+          if (triBox(tb) < lo) lo = triBox(tb)
+          if (triBox(tb + 1) > hi) hi = triBox(tb + 1)
+          s += 1
+        }
+        boxes(o + 2 * ax) = lo; boxes(o + 2 * ax + 1) = hi
         ax += 1
       }
-      if (cnt <= 4) {
+      if (cnt <= LeafMax) {
         info(2 * node) = ~first
         info(2 * node + 1) = cnt
       } else {
@@ -266,7 +287,7 @@ private[model] object Bvh {
         while (a2 < 3) {
           var lo = Double.MaxValue; var hi = Double.MinValue
           var s = first
-          while (s < first + cnt) {
+          while (s < end) {
             val c = cent(3 * order(s) + a2)
             if (c < lo) lo = c; if (c > hi) hi = c
             s += 1
@@ -274,17 +295,58 @@ private[model] object Bvh {
           if (hi - lo > bestExt) { bestExt = hi - lo; bestAx = a2 }
           a2 += 1
         }
-        val sorted = order.slice(first, first + cnt).sortBy(ti => cent(3 * ti + bestAx))
-        System.arraycopy(sorted, 0, order, first, cnt)
+        var s = first
+        while (s < end) { key(s) = cent(3 * order(s) + bestAx); s += 1 }
+        mergeSort(order, key, first, end, tmpOrder, tmpKey)
         val mid = cnt / 2
-        val l = alloc(); val r = alloc()
-        require(r == l + 1)
+        val l = nNodes
+        nNodes += 2
         info(2 * node) = l
         info(2 * node + 1) = 0
-        queue.enqueue(Pending(l, first, mid))
-        queue.enqueue(Pending(r, first + mid, cnt - mid))
+        queue(2 * l) = first; queue(2 * l + 1) = mid
+        queue(2 * l + 2) = first + mid; queue(2 * l + 3) = cnt - mid
+      }
+      node += 1
+    }
+    new Bvh(java.util.Arrays.copyOf(boxes, 6 * nNodes),
+      java.util.Arrays.copyOf(info, 2 * nNodes), order)
+  }
+
+  /** Stable ascending sort of `order[lo, hi)` by the parallel `key[lo, hi)`
+    * under `java.lang.Double.compare`: insertion sort on short runs, merges
+    * above them, reading from `tmpOrder`/`tmpKey`. */
+  private def mergeSort(order: Array[Int], key: Array[Double], lo: Int, hi: Int,
+      tmpOrder: Array[Int], tmpKey: Array[Double]): Unit =
+    if (hi - lo <= 16) {
+      var i = lo + 1
+      while (i < hi) {
+        val oi = order(i); val ki = key(i)
+        var j = i - 1
+        while (j >= lo && java.lang.Double.compare(key(j), ki) > 0) {
+          order(j + 1) = order(j); key(j + 1) = key(j)
+          j -= 1
+        }
+        order(j + 1) = oi; key(j + 1) = ki
+        i += 1
+      }
+    } else {
+      val mid = (lo + hi) >>> 1
+      mergeSort(order, key, lo, mid, tmpOrder, tmpKey)
+      mergeSort(order, key, mid, hi, tmpOrder, tmpKey)
+      if (java.lang.Double.compare(key(mid - 1), key(mid)) > 0) {
+        // merge back into [lo, hi); once the left run is spent the rest of
+        // the right run is already in place
+        System.arraycopy(order, lo, tmpOrder, lo, mid - lo)
+        System.arraycopy(key, lo, tmpKey, lo, mid - lo)
+        var i = lo; var j = mid; var d = lo
+        while (i < mid) {
+          if (j < hi && java.lang.Double.compare(key(j), tmpKey(i)) < 0) {
+            order(d) = order(j); key(d) = key(j); j += 1
+          } else {
+            order(d) = tmpOrder(i); key(d) = tmpKey(i); i += 1
+          }
+          d += 1
+        }
       }
     }
-    new Bvh(boxes.toArray, info.toArray, order)
-  }
 }

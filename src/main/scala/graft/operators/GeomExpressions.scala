@@ -14,9 +14,10 @@ import graft.model.TriMesh
 /** Native Catalyst expressions for the geometry kernels — the codegen v2 of
   * the UDF path (SURVEY.md §4: custom Expression beats UDF): the call stays
   * inside whole-stage codegen (no ScalaUDF boundary, no extra null-handling
-  * projection), invoking the broadcast-style kernel object directly via a
-  * plan reference. Meshes are KB-scale; they ride the serialized expression
-  * exactly once per stage.
+  * projection), invoking the kernel object directly via a plan reference.
+  * Meshes are KB-scale; they ride the serialized expression in the stage's
+  * task binary, so every task deserializes its own copies and builds their
+  * BVHs on first use (see [[graft.model.TriMesh]]).
   */
 
 /** Shared evaluation helpers so interpreted + codegen paths agree. */

@@ -164,9 +164,12 @@ object GridOps {
 
 /** Point-in-solid region flagging — the reference's only "join": every cell
   * against a list of small closed meshes, last mesh wins on overlap,
-  * unflagged cells carry '' (`vtk_flag_region`,
-  * /root/reference/vtk_flag_regions.py:54-79). A broadcast containment
-  * predicate folded into a map — no shuffle on the block side.
+  * unflagged cells carry '' (`vtk_flag_region`, the reference's
+  * vtk_flag_regions.py:54-79). A containment predicate
+  * folded into a map — no shuffle on the block side. The meshes ride the
+  * task binary as a codegen reference object; each task builds its own
+  * mesh indexes ([[graft.model.TriMesh]]). A solid with no triangles flags
+  * no cell.
   */
 object FlagRegions {
   def apply(spark: SparkSession, df: DataFrame, meshes: Seq[TriMesh],

@@ -272,6 +272,23 @@ class ElevationSuite extends AnyFunSuite {
   }
 }
 
+class FlagRegionsSuite extends AnyFunSuite {
+  test("a region solid with vertices but no triangles flags no cell") {
+    val g = GridSchema(0, 0, 0, 10, 10, 10, 4, 4, 4)
+    val solid = TriMesh.box("s", 4, 26, 4, 26, 4, 26)
+    val empty = TriMesh("e", Array(0.0, 0, 0, 40, 40, 40), Array())
+    val flags = FlagRegions(SparkTest.spark, GridOps.generate(SparkTest.spark, g),
+        Seq(solid, empty))
+      .select("x", "y", "z", "region").collect()
+    assert(flags.length == 64)
+    flags.foreach { r =>
+      val in = Seq(r.getDouble(0), r.getDouble(1), r.getDouble(2)).forall(c => c > 4 && c < 26)
+      assert(r.getString(3) == (if (in) "s" else ""), r)
+    }
+    assert(flags.count(_.getString(3) == "s") == 27)
+  }
+}
+
 class BlockModelStoreSuite extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
 
