@@ -35,54 +35,40 @@ object SparkEntry {
       Seq(Region2, Region3), Seq(Topo), Seq(pit))
   }
 
-  /** Dispatcher over the per-family registries (r12 split): each
-    * family file owns its query lambdas AND their oracle SQL side by
-    * side; this concatenation is the single driver-facing surface.
-    * Key disjointness is asserted — a duplicated qNN across families
-    * would otherwise silently shadow. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val fams = Seq(
-      QueriesBreakdown.queries,
-      QueriesSpatial.queries,
-      QueriesRelational.queries,
-      QueriesDedup.queries,
-      QueriesText.queries,
-      QueriesSimilarity.queries,
-      QueriesEval.queries,
-      QueriesDrift.queries,
-      QueriesSampling.queries,
-      QueriesSketch.queries,
-      QueriesGraph.queries,
-      QueriesMultimodal.queries,
-      QueriesStreaming.queries,
-      QueriesPipeline.queries)
-    val all = fams.reduce(_ ++ _)
-    require(all.size == fams.map(_.size).sum,
-      "duplicate query name across family registries")
+  /** The family registries, listed once. */
+  private def families: Seq[Seq[Query]] = Seq(
+    QueriesBreakdown.queries,
+    QueriesSpatial.queries,
+    QueriesRelational.queries,
+    QueriesDedup.queries,
+    QueriesText.queries,
+    QueriesSimilarity.queries,
+    QueriesEval.queries,
+    QueriesDrift.queries,
+    QueriesSampling.queries,
+    QueriesSketch.queries,
+    QueriesGraph.queries,
+    QueriesMultimodal.queries,
+    QueriesStreaming.queries,
+    QueriesPipeline.queries)
+
+  /** The queries of `families` in one list. A name declared twice would
+    * otherwise silently shadow, so it is rejected. */
+  private[graft] def declared(families: Seq[Seq[Query]]): Seq[Query] = {
+    val all = families.flatten
+    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, "duplicate query name across family registries: " +
+      dups.toSeq.sorted.mkString(", "))
     all
   }
 
-  def oracleSql: Map[String, String] = {
-    val fams = Seq(
-      QueriesBreakdown.oracleSql,
-      QueriesSpatial.oracleSql,
-      QueriesRelational.oracleSql,
-      QueriesDedup.oracleSql,
-      QueriesText.oracleSql,
-      QueriesSimilarity.oracleSql,
-      QueriesEval.oracleSql,
-      QueriesDrift.oracleSql,
-      QueriesSampling.oracleSql,
-      QueriesSketch.oracleSql,
-      QueriesGraph.oracleSql,
-      QueriesMultimodal.oracleSql,
-      QueriesStreaming.oracleSql,
-      QueriesPipeline.oracleSql)
-    val all = fams.reduce(_ ++ _)
-    require(all.size == fams.map(_.size).sum,
-      "duplicate oracle name across family registries")
-    all
-  }
+  /** Each declared query's Spark body, by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared(families).map(q => q.name -> q.body).toMap
+
+  /** Each declared query's DuckDB oracle SQL, by name. */
+  def oracleSql: Map[String, String] =
+    declared(families).map(q => q.name -> q.oracle).toMap
 
   /** The entries of `named` whose name contains one of `patterns` — all of
     * them when none is given — sorted by name: the query selection every

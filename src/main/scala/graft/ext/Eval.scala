@@ -316,9 +316,11 @@ object Eval {
         p.groupBy(col("_sig")).agg(count(lit(1)).as("_nv")).collect()
           .foreach { r =>
             val nv = r.getLong(1)
-            if (nv > cap)
+            if (nv > cap) {
+              graft.util.Checkpoints.release(p)
               graft.util.GridGuard.fail("blendKeyed", sigs(r.getInt(0)),
                 nv.toString, cap)
+            }
           }
         p
       case None => perRaw

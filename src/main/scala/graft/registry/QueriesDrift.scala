@@ -27,11 +27,7 @@ import graft.util.Checkpoints.scoped
   * (one wide alert row per day) and q202 (per (day, slice) — "which
   * cohort drifted today, by every lens").
   *
-  * Pre-r12 entries (and their DuckDB oracle SQL beside them) moved
-  * verbatim from SparkEntry in the r12 per-family split; q186–q193 were
-  * born here, q194–q202 in r13. [[SparkEntry.queries]] is the dispatcher
-  * that concatenates the families; shared fixtures/helpers and oracle SQL
-  * fragments live in [[QueryShared]]. */
+  * Each entry is one [[Query]]; shared fixtures and oracle fragments live in [[QueryShared]]. */
 object QueriesDrift {
 
   /** `(source, q = 6 dp quality score, extra…)` over the documents — the
@@ -41,11 +37,11 @@ object QueriesDrift {
     Tables.load(s, dir, "documents").select(col("source") +:
       round(ext.TextAnalysis.qualityScore("text"), 6).as("q") +: extra: _*)
 
-  private[graft] val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] val queries: Seq[Query] = Seq(
 
     // ext: PSI drift monitor — src9's quality distribution vs everyone
     // else's, 10 fixed bins on the ROUNDED score (engine-stable edges)
-    "q103_psi_drift" -> ((s, dir) => scoped { sc =>
+    Query("q103_psi_drift", (s, dir) => scoped { sc =>
       // psiDrift evaluates each side twice (row count + bucket counts)
       // and both sides filter the SAME scored projection — pin it so the
       // quality regex runs once, not four times
@@ -54,31 +50,95 @@ object QueriesDrift {
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q", 10, 0.0, 1.0)
         .orderBy("bucket")
-    }),
+    },
+      PsiDriftSql),
 
 
     // ext: embedding drift between the even/odd halves — the alarm that
     // tells the appended store its centroids went stale
-    "q164_embedding_drift" -> ((s, dir) => {
+    Query("q164_embedding_drift", (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       ext.Similarity.embeddingDrift(
         emb.filter(col("vec_id") % 2 === 0),
         emb.filter(col("vec_id") % 2 === 1))
-    }),
+    },
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x
+             FROM embeddings),
+         na AS (SELECT CAST(count(*) AS BIGINT) AS n_base FROM e
+                WHERE vec_id % 2 = 0),
+         nb AS (SELECT CAST(count(*) AS BIGINT) AS n_live FROM e
+                WHERE vec_id % 2 = 1),
+         ma AS (SELECT list(m ORDER BY j) AS m FROM (
+           SELECT g.j AS j, avg(x[g.j]) AS m
+           FROM e, generate_series(1, 64) AS g(j)
+           WHERE vec_id % 2 = 0 GROUP BY g.j)),
+         mb AS (SELECT list(m ORDER BY j) AS m FROM (
+           SELECT g.j AS j, avg(x[g.j]) AS m
+           FROM e, generate_series(1, 64) AS g(j)
+           WHERE vec_id % 2 = 1 GROUP BY g.j)),
+         c AS (SELECT
+             list_sum(list_transform(generate_series(1, 64),
+               j -> ma.m[j] * mb.m[j])) AS ab,
+             sqrt(list_sum(list_transform(generate_series(1, 64),
+               j -> ma.m[j] * ma.m[j]))) AS nrm_a,
+             sqrt(list_sum(list_transform(generate_series(1, 64),
+               j -> mb.m[j] * mb.m[j]))) AS nrm_b,
+             sqrt(list_sum(list_transform(generate_series(1, 64),
+               j -> (ma.m[j] - mb.m[j]) * (ma.m[j] - mb.m[j])))) AS l2
+           FROM ma, mb)
+         SELECT n_base, n_live,
+           round(CASE WHEN nrm_a > 0 AND nrm_b > 0
+             THEN ab / (nrm_a * nrm_b) END, 6) AS mean_cos,
+           round(l2, 6) AS mean_l2
+         FROM na, nb, c"""),
 
 
     // ext: daily PSI sweep of the event value vs the first-week baseline
     // — the drift monitor form of q103 ("when did it drift, how fast")
-    "q168_psi_over_time" -> ((s, dir) =>
+    Query("q168_psi_over_time", (s, dir) =>
       ext.Outliers.psiOverTime(Tables.load(s, dir, "events"), "ts",
           "value", col("ts") < lit("2024-01-08").cast("timestamp"),
           nBuckets = 10, lo = 0.0, hi = 500.0)
-        .orderBy("ws")),
+        .orderBy("ws"),
+      // same fixed-range bucketing + 0.5 smoothing as q103's psi; per-day
+      // totals replace the single live total
+      """WITH bb AS (SELECT ts,
+             CAST(least(greatest(
+               floor((value - 0.0) / 500.0 * 10), 0.0), 9.0) AS INT)
+               AS bucket
+           FROM events),
+         base AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_base
+                  FROM bb WHERE ts < TIMESTAMP '2024-01-08'
+                  GROUP BY bucket),
+         tbl AS (SELECT CAST(count(*) AS BIGINT) AS tb FROM bb
+                 WHERE ts < TIMESTAMP '2024-01-08'),
+         live AS (SELECT date_trunc('day', ts) AS ws, bucket,
+                    CAST(count(*) AS BIGINT) AS n_live
+                  FROM bb GROUP BY ws, bucket),
+         tw AS (SELECT ws, CAST(sum(n_live) AS BIGINT) AS tw
+                FROM live GROUP BY ws),
+         grid AS (SELECT tw.ws, tw.tw, g.b AS bucket
+                  FROM tw, generate_series(0, 9) AS g(b)),
+         terms AS (SELECT grid.ws, grid.tw,
+             ((coalesce(l.n_live, 0) + 0.5)
+                / (CAST(grid.tw AS DOUBLE) + 5.0)
+              - (coalesce(base.n_base, 0) + 0.5)
+                / (CAST(tbl.tb AS DOUBLE) + 5.0))
+             * ln(((coalesce(l.n_live, 0) + 0.5)
+                  / (CAST(grid.tw AS DOUBLE) + 5.0))
+                / ((coalesce(base.n_base, 0) + 0.5)
+                  / (CAST(tbl.tb AS DOUBLE) + 5.0))) AS term
+           FROM grid
+           LEFT JOIN base ON base.bucket = grid.bucket
+           LEFT JOIN live l ON l.ws = grid.ws AND l.bucket = grid.bucket,
+             tbl)
+         SELECT ws, tw AS n, round(sum(term), 6) AS psi
+         FROM terms GROUP BY ws, tw ORDER BY ws"""),
 
 
     // ext: Theil–Sen robust trend of the daily mean value per event type
     // — median of pairwise slopes over the (tiny) pre-aggregated series
-    "q169_theil_sen" -> ((s, dir) => {
+    Query("q169_theil_sen", (s, dir) => {
       val daily = Tables.load(s, dir, "events")
         .groupBy(col("event_type"),
           window(col("ts"), "1 day").getField("start").as("d"))
@@ -89,158 +149,264 @@ object QueriesDrift {
           col("y"))
       ext.Outliers.trendTheilSen(daily, "event_type", "x", "y")
         .orderBy("event_type")
-    }),
+    },
+      // slopes are ratios of rounded daily means (identical doubles both
+      // engines); quantile_cont ≡ Spark percentile bit-for-bit (q116 pin)
+      """WITH daily AS (SELECT event_type, date_trunc('day', ts) AS d,
+             round(avg(value), 6) AS y
+           FROM events GROUP BY event_type, d),
+         pts AS (SELECT event_type,
+             CAST(epoch_us(d) // 86400000000 AS DOUBLE) AS x, y
+           FROM daily),
+         pr AS (SELECT a.event_type,
+             (b.y - a.y) / (b.x - a.x) AS slope
+           FROM pts a JOIN pts b
+             ON a.event_type = b.event_type AND a.x < b.x)
+         SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
+           quantile_cont(slope, 0.5) AS slope
+         FROM pr GROUP BY event_type ORDER BY event_type"""),
 
 
     // ext: two-sample Kolmogorov–Smirnov drift test — src9's quality
     // distribution vs everyone else's, the unbinned twin of q103's PSI
     // monitor (integer-exact ECDF gaps; asymptotic 5% critical value)
-    "q184_ks_drift" -> ((s, dir) => scoped { sc =>
+    Query("q184_ks_drift", (s, dir) => scoped { sc =>
       // the member returns its result already pinned: the scope keeps it
       // as the result and releases only the corpus pin
       val docs = sc.pin(scoredSources(s, dir))
       ext.Eval.ksTest(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q")
-    }),
+    },
+      // same smoothing arithmetic ORDER as the Spark side: (cnt + 0.5) /
+      // (total + 0.5 * n); psi rounds at 6 dp over the ln
+      // integer-exact ECDF gaps: D's argmax runs on |cna·n_b − cnb·n_a|
+      // (pure int64); only the final d / d_crit ratios touch doubles, with
+      // the SAME arithmetic shape as Eval.ksTest
+      KsDriftSql),
 
 
     // ext: per-source KS drift — every source's quality distribution vs
     // the rest of the corpus, the sliced view of q184 ("which source
     // drifted?"); one corpus pass, grids bounded by score granularity
-    "q185_ks_by_source" -> ((s, dir) => scoped { sc =>
+    Query("q185_ks_by_source", (s, dir) => scoped { sc =>
       ext.Eval.ksTestBy(sc.pin(scoredSources(s, dir)), "source", "q")
-    }.orderBy("source")),
+    }.orderBy("source"),
+      // the q184 integer-gap machinery sliced per source: the dense
+      // (source × value) grid evaluates every group's ECDF at every global
+      // jump point; rest-side cumulatives derive as (global − own)
+      KsBySql),
 
 
     // ext: WINDOWED KS drift — q184's statistic as a per-day monitor
     // against the first-week baseline (the drift family's serving twin:
     // one stateful windowed aggregation, granularity-capped state; the
     // same plan runs under Structured Streaming, suite-pinned)
-    "q186_ks_drift_windowed" -> ((s, dir) => {
+    Query("q186_ks_drift_windowed", (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("ts"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
       ext.Eval.ksDriftWindowed(ev, "ts", "v", bv, bc).orderBy("ws")
-    }),
+    },
+      // the q184 integer-gap machinery per day against the first-week
+      // baseline: the dense (window × value) grid evaluates each window's
+      // ECDF at every jump point of either side
+      KsWinSql),
 
     // ext: chi-squared CATEGORICAL drift — src9's language mix vs the
     // rest of the corpus (the drift member for category columns, where
     // PSI's numeric bins and KS's ordering don't apply)
-    "q187_chi2_drift" -> ((s, dir) => {
+    Query("q187_chi2_drift", (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
         .select(col("source"), col("lang"))
       ext.Outliers.chiSquareDrift(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "lang")
-    }),
+    },
+      // Pearson chi2 over the 2×k (slice, lang) table; expected counts in
+      // doubles with the exact same multiply-then-divide shape; chi2/crit
+      // rounded 6 dp (k-term sum order), flag compares the rounded values
+      Chi2DriftSql),
 
     // ext: Mann–Whitney rank-sum drift — src9's quality vs the rest, the
     // LOCATION-shift member beside q184's any-shape KS (same slice, so
     // the two statistics read together: KS fires on any change, rank-sum
     // says specifically "moved up/down")
-    "q188_rank_sum" -> ((s, dir) => scoped { sc =>
+    Query("q188_rank_sum", (s, dir) => scoped { sc =>
       val docs = sc.pin(scoredSources(s, dir))
       ext.Eval.rankSumTest(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q")
-    }),
+    },
+      // mid-rank machinery over the per-value table (the q184 shape); U
+      // and the tie term are exact (0.5-multiples / integer sums), z is
+      // one fixed expression both engines replay
+      RankSumSql),
 
     // ext: WINDOWED chi-squared drift — each day's event-type mix vs the
     // first-week baseline (q187's statistic as a serving monitor; one
     // stateful windowed aggregation, category-capped state)
-    "q189_chi2_windowed" -> ((s, dir) => {
+    Query("q189_chi2_windowed", (s, dir) => {
       val ev = Tables.load(s, dir, "events")
       val (bcnt, _) = ext.Outliers.chiSquareBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")),
         "event_type")
       ext.Outliers.chiSquareDriftWindowed(ev, "ts", "event_type", bcnt)
         .orderBy("ws")
-    }),
+    },
+      // q187's chi2 per day vs the first-week baseline; cells with a count
+      // on either side only (an absent category is not part of that
+      // window's 2xk table); chi2/crit rounded 6 dp like the batch op
+      Chi2WinSql),
 
     // ext: WINDOWED rank-sum drift — each day's value location vs the
     // first-week baseline, sharing q186's ksBaseline artifact (one
     // snapshot pass serves both unbinned monitors)
-    "q190_rank_sum_windowed" -> ((s, dir) => {
+    Query("q190_rank_sum_windowed", (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("ts"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
       ext.Eval.rankSumDriftWindowed(ev, "ts", "v", bv, bc).orderBy("ws")
-    }),
+    },
+      // q188's rank machinery per day against the first-week baseline on
+      // the dense (window x value) grid; zero-count grid cells contribute
+      // nothing to rb/ties so the per-window sums equal the merged walk
+      RsWinSql),
     // ext: per-source rank-sum drift — every source's quality LOCATION vs
     // the rest (q185's sliced view for the rank-sum statistic; one global
     // mid-rank table serves every group, z > 0 = the source ranks higher)
-    "q191_rank_sum_by_source" -> ((s, dir) => scoped { sc =>
+    Query("q191_rank_sum_by_source", (s, dir) => scoped { sc =>
       ext.Eval.rankSumTestBy(sc.pin(scoredSources(s, dir)), "source", "q")
-    }.orderBy("source")),
+    }.orderBy("source"),
+      // one global mid-rank table (the q188 machinery), per-source weighted
+      // sums; rest side = global minus own, same fixed u/z shapes
+      RankSumBySql),
     // ext: per-source chi-squared drift — every source's LANGUAGE MIX vs
     // the rest (the categorical by-slice view; rest = global minus own,
     // one (source, lang) aggregation serves every slice)
-    "q192_chi2_by_source" -> ((s, dir) =>
+    Query("q192_chi2_by_source", (s, dir) =>
       ext.Outliers.chiSquareDriftBy(
         Tables.load(s, dir, "documents").select(col("source"), col("lang")),
-        "source", "lang").orderBy("source")),
+        "source", "lang").orderBy("source"),
+      // the q187 2xk machinery per slice: rest-side counts = global - own
+      // on the dense (source x lang) grid; chi2/crit rounded 6 dp
+      Chi2BySql),
 
     // ext: ONE-CALL drift report — src9 vs the rest through every lens
     // (PSI / KS / rank-sum / chi2), each row bit-identical to the member
     // statistic it reshapes
-    "q193_drift_report" -> ((s, dir) => scoped { sc =>
+    Query("q193_drift_report", (s, dir) => scoped { sc =>
       val docs = sc.pin(scoredSources(s, dir, col("lang")))
       ext.Outliers.driftReport(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q", "lang")
-    }),
+    },
+      // composes the four VERIFIED member oracles as subqueries — a report
+      // row is definitionally the member's own number reshaped
+      s"""SELECT 'psi' AS stat, round(sum(psi), 6) AS statistic,
+           CAST(0.25 AS DOUBLE) AS threshold,
+           CASE WHEN round(sum(psi), 6) > 0.25 THEN 1 ELSE 0 END
+             AS drifted
+         FROM ($PsiDriftSql)
+         UNION ALL
+         SELECT 'ks', d, d_crit, drifted FROM ($KsDriftSql)
+         UNION ALL
+         SELECT 'rank_sum', abs(z), CAST(1.96 AS DOUBLE), drifted
+         FROM ($RankSumSql)
+         UNION ALL
+         SELECT 'chi2', chi2, chi2_crit, drifted FROM ($Chi2DriftSql)
+         ORDER BY stat"""),
 
     // ext: per-source PSI drift — every source's binned quality
     // distribution vs the rest (q103's sliced view, the binned member of
     // the by-slice family beside q185/q191/q192; rest-side bucket counts
     // derive as global − own, one (source, bucket) aggregation)
-    "q194_psi_by_source" -> ((s, dir) => scoped { sc =>
+    Query("q194_psi_by_source", (s, dir) => scoped { sc =>
       ext.Outliers.psiDriftBy(sc.pin(scoredSources(s, dir)), "source", "q",
         10, 0.0, 1.0)
-    }.orderBy("source")),
+    }.orderBy("source"),
+      // q103's psi machinery per slice on the dense (source x bucket) grid:
+      // rest-side counts = global - own; per-term round 6 dp then the sum
+      // rounds 6 dp, the exact shapes psiDriftBy emits
+      PsiBySql),
 
     // ext: per-label embedding drift — each label cluster's mean
     // embedding vs the rest of the corpus's (the embedding member of the
     // by-slice family: "which source's embedding space moved?"); rest
     // means derive from the per-slice (mean, count) table, one corpus pass
-    "q195_embedding_drift_by" -> ((s, dir) =>
+    Query("q195_embedding_drift_by", (s, dir) =>
       ext.Similarity.embeddingDriftBy(
         Tables.load(s, dir, "embeddings"), "label", "embedding")
-        .orderBy("label")),
+        .orderBy("label"),
+      // the q164 mean-vector machinery per slice: per-label per-dim means,
+      // rest mean derived per dim as (sum_g n_g*m_g - n_g*m_g) / (n - n_g)
+      // — the same global-minus-own arithmetic embeddingDriftBy runs
+      """WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS x
+             FROM embeddings
+             WHERE label IS NOT NULL AND embedding IS NOT NULL),
+         dims AS (SELECT label, g.j AS j, avg(x[g.j]) AS mj,
+                    CAST(count(*) AS BIGINT) AS n_g
+                  FROM e, generate_series(1, 64) AS g(j)
+                  GROUP BY label, g.j),
+         gsum AS (SELECT j, sum(mj * CAST(n_g AS DOUBLE)) AS sj
+                  FROM dims GROUP BY j),
+         tot AS (SELECT CAST(sum(n_g) AS BIGINT) AS n
+                 FROM (SELECT label, any_value(n_g) AS n_g
+                       FROM dims GROUP BY label)),
+         rest AS (SELECT d.label, d.n_g, n, d.mj,
+                    CASE WHEN n > d.n_g
+                      THEN (gl.sj - d.mj * CAST(d.n_g AS DOUBLE)) /
+                        CAST(n - d.n_g AS DOUBLE) END AS rj
+                  FROM dims d JOIN gsum gl ON gl.j = d.j, tot),
+         per AS (SELECT label, n_g, n,
+                   sum(mj * rj) AS dot, sum(mj * mj) AS na2,
+                   sum(rj * rj) AS nb2,
+                   sum((mj - rj) * (mj - rj)) AS l22
+                 FROM rest GROUP BY label, n_g, n)
+         SELECT label, n_g, CAST(n - n_g AS BIGINT) AS n_rest,
+           round(CASE WHEN na2 > 0 AND nb2 > 0
+             THEN dot / sqrt(na2 * nb2) END, 6) AS mean_cos,
+           round(CASE WHEN n > n_g THEN sqrt(l22) END, 6) AS mean_l2
+         FROM per ORDER BY label"""),
 
     // ext: WINDOWED KS drift BY SLICE — q186's per-day monitor with the
     // event type in the grouping ("which event type's value distribution
     // drifted, per day"); same stateful aggregate, per-(window, slice)
     // capped state, every cell vs the same first-week baseline
-    "q196_ks_windowed_by" -> ((s, dir) => {
+    Query("q196_ks_windowed_by", (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("ts"), col("event_type"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
       pinSorted(ext.Eval.ksDriftWindowed(ev, "ts", "v", bv, bc,
         slice = Some("event_type")), "ws", "event_type")
-    }),
+    },
+      // q186's dense-grid machinery with the slice in the window key: each
+      // (day, event type) cell's ECDF vs the shared first-week baseline
+      ksWinBySqlF("event_type", "event_type")),
 
     // ext: WINDOWED rank-sum drift BY SLICE — q190's location monitor per
     // (day, event type), sharing the same ksBaseline artifact (one
     // snapshot pass serves both unbinned windowed-by monitors)
-    "q197_rank_sum_windowed_by" -> ((s, dir) => {
+    Query("q197_rank_sum_windowed_by", (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("ts"), col("event_type"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
       pinSorted(ext.Eval.rankSumDriftWindowed(ev, "ts", "v", bv, bc,
         slice = Some("event_type")), "ws", "event_type")
-    }),
+    },
+      // q190's rank machinery per (day, event type) against the first-week
+      // baseline on the dense (window x slice x value) grid
+      rsWinBySqlF("event_type", "event_type")),
 
     // ext: WINDOWED chi-squared drift BY SLICE — each (day, user cohort)'s
     // event-type mix vs the first-week global baseline ("which cohort's
     // behavior mix shifted, per day"); cohort = user_id % 4, the
     // categorical slice the events table affords
-    "q198_chi2_windowed_by" -> ((s, dir) => {
+    Query("q198_chi2_windowed_by", (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .withColumn("cohort", (col("user_id") % 4).cast("string"))
       val (bcnt, _) = ext.Outliers.chiSquareBaseline(
@@ -248,35 +414,56 @@ object QueriesDrift {
         "event_type")
       pinSorted(ext.Outliers.chiSquareDriftWindowed(ev, "ts", "event_type",
         bcnt, slice = Some("cohort")), "ws", "cohort")
-    }),
+    },
+      // q189's chi2 machinery per (day, user cohort) vs the first-week
+      // baseline; cells with a count on either side only, chi2/crit 6 dp
+      chi2WinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort")),
 
     // ext: WINDOWED PSI drift BY SLICE — the binned member of the
     // windowed-by composition: each (day, event type)'s value histogram
     // vs the first-week baseline, nBuckets counters per cell
-    "q199_psi_windowed_by" -> ((s, dir) => {
+    Query("q199_psi_windowed_by", (s, dir) => {
       val ev = Tables.load(s, dir, "events")
       val (bcm, bt) = ext.Outliers.psiBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")),
         "value", 10, 0.0, 500.0)
       pinSorted(ext.Outliers.psiWindowed(ev, "ts", "value", bcm, bt, 10,
         0.0, 500.0, slice = Some("event_type")), "ws", "event_type")
-    }),
+    },
+      // q168's smoothing arithmetic per (day, event type) cell against the
+      // shared first-week baseline histogram; psi rounds 6 dp over the sum
+      psiWinBySqlF("event_type", "event_type", "value")),
 
     // ext: ONE-CALL BY-SLICE drift report — every source through every
     // lens (PSI / KS / rank-sum / chi2 vs the rest of the corpus), the
     // per-slice sibling of q193; ONE (source, value) aggregation feeds
     // the three value lenses, each row ≡ the by-slice member it reshapes
-    "q200_drift_report_by" -> ((s, dir) => scoped { sc =>
+    Query("q200_drift_report_by", (s, dir) => scoped { sc =>
       ext.Outliers.driftReportBy(sc.pin(scoredSources(s, dir, col("lang"))),
         "source", "q", "lang")
-    }),
+    },
+      // composes the four VERIFIED by-slice member oracles as subqueries —
+      // a report row is definitionally the member's own number reshaped
+      // (the q193 pattern per slice)
+      s"""SELECT source, 'psi' AS stat, CAST(psi AS DOUBLE) AS statistic,
+           CAST(0.25 AS DOUBLE) AS threshold, drifted
+         FROM ($PsiBySql)
+         UNION ALL
+         SELECT source, 'ks', d, d_crit, drifted FROM ($KsBySql)
+         UNION ALL
+         SELECT source, 'rank_sum', abs(z), CAST(1.96 AS DOUBLE), drifted
+         FROM ($RankSumBySql)
+         UNION ALL
+         SELECT source, 'chi2', chi2, chi2_crit, drifted
+         FROM ($Chi2BySql)
+         ORDER BY source, stat"""),
 
     // ext: THE NIGHTLY DRIFT GATE AS ONE STATEFUL PASS — q186 + q189 +
     // q190 + windowed PSI evaluated in a single windowed aggregation
     // (one state store / shuffle / watermark instead of four monitors
     // over the same stream); one wide alert row per day, every field
     // bit-identical to the standalone windowed member
-    "q201_drift_gate_windowed" -> ((s, dir) => {
+    Query("q201_drift_gate_windowed", (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("ts"), round(col("value"), 2).as("v"),
           col("event_type"))
@@ -286,12 +473,63 @@ object QueriesDrift {
       val (bb, bt) = ext.Outliers.psiBaseline(week, "v", 10, 0.0, 500.0)
       pinSorted(ext.Outliers.driftReportWindowed(ev, "ts", "v",
         "event_type", bv, bc, bcats, bb, bt, 10, 0.0, 500.0), "ws")
-    }),
+    },
+      // joins the three VERIFIED windowed-member oracles on ws plus the
+      // windowed-psi arithmetic (the q168/q199 smoothing shapes on the
+      // rounded value) — a gate row is definitionally the members' own
+      // numbers side by side
+      s"""WITH psibb AS (SELECT ts,
+             CAST(least(greatest(
+               floor((round(value, 2) - 0.0) / 500.0 * 10), 0.0), 9.0)
+               AS INT) AS bucket
+           FROM events),
+         psibase AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_base
+                     FROM psibb WHERE ts < TIMESTAMP '2024-01-08'
+                     GROUP BY bucket),
+         psitbl AS (SELECT CAST(count(*) AS BIGINT) AS tb FROM psibb
+                    WHERE ts < TIMESTAMP '2024-01-08'),
+         psilive AS (SELECT date_trunc('day', ts) AS ws, bucket,
+                       CAST(count(*) AS BIGINT) AS n_live
+                     FROM psibb GROUP BY ws, bucket),
+         psitw AS (SELECT ws, CAST(sum(n_live) AS BIGINT) AS tw
+                   FROM psilive GROUP BY ws),
+         psigrid AS (SELECT psitw.ws, psitw.tw, g.b AS bucket
+                     FROM psitw, generate_series(0, 9) AS g(b)),
+         psiterms AS (SELECT psigrid.ws,
+             ((coalesce(l.n_live, 0) + 0.5)
+                / (CAST(psigrid.tw AS DOUBLE) + 5.0)
+              - (coalesce(psibase.n_base, 0) + 0.5)
+                / (CAST(psitbl.tb AS DOUBLE) + 5.0))
+             * ln(((coalesce(l.n_live, 0) + 0.5)
+                  / (CAST(psigrid.tw AS DOUBLE) + 5.0))
+                / ((coalesce(psibase.n_base, 0) + 0.5)
+                  / (CAST(psitbl.tb AS DOUBLE) + 5.0))) AS term
+           FROM psigrid
+           LEFT JOIN psibase ON psibase.bucket = psigrid.bucket
+           LEFT JOIN psilive l ON l.ws = psigrid.ws
+             AND l.bucket = psigrid.bucket,
+             psitbl),
+         psiw AS (SELECT ws, round(sum(term), 6) AS psi
+                  FROM psiterms GROUP BY ws)
+         SELECT k.ws, k.n_live,
+           k.d AS ks_d, k.d_crit AS ks_d_crit, k.drifted AS ks_drifted,
+           r.u AS rs_u, r.z AS rs_z, r.drifted AS rs_drifted,
+           c.k AS chi2_k, c.chi2, c.chi2_crit,
+           c.drifted AS chi2_drifted,
+           p.psi,
+           CASE WHEN p.psi > 0.25 THEN 1 ELSE 0 END AS psi_drifted,
+           greatest(k.drifted, r.drifted, c.drifted,
+             CASE WHEN p.psi > 0.25 THEN 1 ELSE 0 END) AS any_drifted
+         FROM ($KsWinSql) k
+           JOIN ($RsWinSql) r ON r.ws = k.ws
+           JOIN ($Chi2WinSql) c ON c.ws = k.ws
+           JOIN psiw p ON p.ws = k.ws
+         ORDER BY k.ws"""),
 
     // ext: the q201 gate PER SLICE — "which user cohort drifted today,
     // by every lens": still ONE stateful aggregation, the slice key
     // joined into the grouping; one wide alert row per (day, cohort)
-    "q202_drift_gate_windowed_by" -> ((s, dir) => {
+    Query("q202_drift_gate_windowed_by", (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("ts"), (col("user_id") % 4).cast("string").as("cohort"),
           round(col("value"), 2).as("v"), col("event_type"))
@@ -302,7 +540,28 @@ object QueriesDrift {
       pinSorted(ext.Outliers.driftReportWindowed(ev, "ts", "v",
         "event_type", bv, bc, bcats, bb, bt, 10, 0.0, 500.0,
         slice = Some("cohort")), "ws", "cohort")
-    }),
+    },
+      // joins the slice-parameterized windowed-BY member builders on
+      // (ws, cohort) — every lens sliced by the same user cohort, each
+      // cell's fields the members' own numbers side by side
+      s"""SELECT k.ws, k.cohort, k.n_live,
+           k.d AS ks_d, k.d_crit AS ks_d_crit, k.drifted AS ks_drifted,
+           r.u AS rs_u, r.z AS rs_z, r.drifted AS rs_drifted,
+           c.k AS chi2_k, c.chi2, c.chi2_crit,
+           c.drifted AS chi2_drifted,
+           p.psi,
+           CASE WHEN p.psi > 0.25 THEN 1 ELSE 0 END AS psi_drifted,
+           greatest(k.drifted, r.drifted, c.drifted,
+             CASE WHEN p.psi > 0.25 THEN 1 ELSE 0 END) AS any_drifted
+         FROM (${ksWinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort")}) k
+           JOIN (${rsWinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort")})
+             r ON r.ws = k.ws AND r.cohort = k.cohort
+           JOIN (${chi2WinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort")})
+             c ON c.ws = k.ws AND c.cohort = k.cohort
+           JOIN (${psiWinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort",
+             "round(value, 2)")})
+             p ON p.ws = k.ws AND p.cohort = k.cohort
+         ORDER BY k.ws, k.cohort"""),
 
     // ext: WINDOWED embedding drift BY SLICE — the drift matrix's last
     // cell (r14): each (day, label cluster)'s mean embedding vs the
@@ -311,7 +570,7 @@ object QueriesDrift {
     // point at, sliced). d+1 doubles of state per (window, slice) cell;
     // day = vec_id % 3 synthesizes the event time the embeddings table
     // doesn't carry, baseline = the even half (the q164 split)
-    "q203_embedding_windowed_by" -> ((s, dir) => {
+    Query("q203_embedding_windowed_by", (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val (bm, _) = ext.Similarity.embeddingDriftBaseline(
         emb.filter(col("vec_id") % 2 === 0))
@@ -322,12 +581,42 @@ object QueriesDrift {
       ext.Similarity.embeddingDriftWindowed(live, "ts", "embedding", bm,
           slice = Some("label"))
         .orderBy("ws", "label")
-    }),
+    },
+      // q164's mean-vector machinery per (day, label) cell against the
+      // even-half baseline mean: per-dim avgs, then cos/L2 of the cell
+      // mean vs the baseline mean, 6 dp — the q195 arithmetic with the
+      // driver-held-baseline convention instead of rest-relative
+      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS x
+             FROM embeddings),
+         bm AS (SELECT g.j AS j, avg(x[g.j]) AS bj
+                FROM e, generate_series(1, 64) AS g(j)
+                WHERE vec_id % 2 = 0 GROUP BY g.j),
+         bn AS (SELECT sqrt(sum(bj * bj)) AS nb FROM bm),
+         live AS (SELECT TIMESTAMP '2024-01-01'
+                    + (vec_id % 3) * INTERVAL 1 DAY AS ws, label, x
+                  FROM e),
+         dims AS (SELECT ws, label, g.j AS j, avg(x[g.j]) AS mj
+                  FROM live, generate_series(1, 64) AS g(j)
+                  GROUP BY ws, label, g.j),
+         cnt AS (SELECT ws, label, CAST(count(*) AS BIGINT) AS n_live
+                 FROM live GROUP BY ws, label),
+         per AS (SELECT d.ws, d.label,
+                   sum(d.mj * bm.bj) AS dot, sum(d.mj * d.mj) AS na2,
+                   sum((d.mj - bm.bj) * (d.mj - bm.bj)) AS l22
+                 FROM dims d JOIN bm ON bm.j = d.j
+                 GROUP BY d.ws, d.label)
+         SELECT per.ws, per.label, cnt.n_live,
+           round(CASE WHEN sqrt(na2) > 0 AND nb > 0
+             THEN dot / (sqrt(na2) * nb) END, 6) AS mean_cos,
+           round(sqrt(l22), 6) AS mean_l2
+         FROM per JOIN cnt ON cnt.ws = per.ws AND cnt.label = per.label,
+           bn
+         ORDER BY per.ws, per.label"""),
   )
 
-  // single source of truth: the q103_psi_drift map entry AND the q193 drift-
+  // single source of truth: the q103_psi_drift oracle AND the q193 drift-
   // report oracle (which composes it as a subquery) share this text
-  private val PsiDriftSql: String =
+  private lazy val PsiDriftSql: String =
     s"""$QualityCtesSql,
            sc AS (SELECT source, $QualityValSql AS q FROM s),
            bb AS (SELECT CAST(least(greatest(floor((q - 0.0) / 1.0 * 10),
@@ -354,9 +643,9 @@ object QueriesDrift {
                ln(((n_live + 0.5) / tl) / ((n_base + 0.5) / tb)), 6) AS psi
            FROM j, tt ORDER BY bucket"""
 
-  // single source of truth: the q184_ks_drift map entry AND the q193 drift-
+  // single source of truth: the q184_ks_drift oracle AND the q193 drift-
   // report oracle (which composes it as a subquery) share this text
-  private val KsDriftSql: String =
+  private lazy val KsDriftSql: String =
     s"""$QualityCtesSql,
            sc AS (SELECT CASE WHEN source = 'src9' THEN 1 ELSE 0 END AS is_b,
                     $QualityValSql AS q FROM s),
@@ -385,9 +674,9 @@ object QueriesDrift {
                THEN 1 ELSE 0 END AS drifted
            FROM tot, dn"""
 
-  // single source of truth: the q187_chi2_drift map entry AND the q193 drift-
+  // single source of truth: the q187_chi2_drift oracle AND the q193 drift-
   // report oracle (which composes it as a subquery) share this text
-  private val Chi2DriftSql: String =
+  private lazy val Chi2DriftSql: String =
     """WITH t AS (SELECT lang AS c,
                CASE WHEN source <> 'src9' THEN 1 ELSE 0 END AS ib,
                CASE WHEN source = 'src9' THEN 1 ELSE 0 END AS il
@@ -421,9 +710,9 @@ object QueriesDrift {
                AS drifted
            FROM ag, x, crit"""
 
-  // single source of truth: the q188_rank_sum map entry AND the q193 drift-
+  // single source of truth: the q188_rank_sum oracle AND the q193 drift-
   // report oracle (which composes it as a subquery) share this text
-  private val RankSumSql: String =
+  private lazy val RankSumSql: String =
     s"""$QualityCtesSql,
            sc AS (SELECT CASE WHEN source = 'src9' THEN 1 ELSE 0 END AS is_b,
                     $QualityValSql AS q FROM s),
@@ -474,10 +763,10 @@ object QueriesDrift {
 
 
 
-  // single sources of truth: each by-slice map entry AND the q200
+  // single sources of truth: each by-slice oracle AND the q200
   // drift-report-by oracle (which composes them as subqueries) share
   // these texts - the q193 pattern applied per slice
-  private val KsBySql: String =
+  private lazy val KsBySql: String =
     s"""$QualityCtesSql,
          sc AS (SELECT source, $QualityValSql AS q FROM s),
          pg AS MATERIALIZED (SELECT source, q,
@@ -514,7 +803,7 @@ object QueriesDrift {
              THEN 1 ELSE 0 END AS drifted
          FROM perg ORDER BY source"""
 
-  private val RankSumBySql: String =
+  private lazy val RankSumBySql: String =
     s"""$QualityCtesSql,
          sc AS (SELECT source, $QualityValSql AS q FROM s),
          pg AS MATERIALIZED (SELECT source, q,
@@ -563,7 +852,7 @@ object QueriesDrift {
              THEN 1 ELSE 0 END AS drifted
          FROM per, gstat ORDER BY source"""
 
-  private val Chi2BySql: String =
+  private lazy val Chi2BySql: String =
     """WITH base AS (SELECT source AS g, lang AS c FROM documents
                        WHERE source IS NOT NULL AND lang IS NOT NULL),
          pg AS (SELECT g, c, CAST(count(*) AS BIGINT) AS cnt
@@ -602,7 +891,7 @@ object QueriesDrift {
              AS drifted
          FROM x, crit ORDER BY source"""
 
-  private val PsiBySql: String =
+  private lazy val PsiBySql: String =
     s"""$QualityCtesSql,
          sc AS (SELECT source, $QualityValSql AS q FROM s),
          pb AS (SELECT source AS g,
@@ -637,10 +926,10 @@ object QueriesDrift {
 
 
 
-  // single sources of truth: each windowed-member map entry AND the
+  // single sources of truth: each windowed-member oracle AND the
   // q201 one-pass windowed gate oracle (which joins them on ws) share
   // these texts
-  private val KsWinSql: String =
+  private lazy val KsWinSql: String =
     """WITH e AS (SELECT date_trunc('day', ts) AS ws,
                   round(value, 2) AS v FROM events),
          b AS (SELECT round(value, 2) AS v FROM events
@@ -683,7 +972,7 @@ object QueriesDrift {
              THEN 1 ELSE 0 END AS drifted
          FROM per, nb ORDER BY ws"""
 
-  private val Chi2WinSql: String =
+  private lazy val Chi2WinSql: String =
     """WITH e AS (SELECT date_trunc('day', ts) AS ws, event_type AS c
                     FROM events),
          b AS (SELECT event_type AS c FROM events
@@ -730,7 +1019,7 @@ object QueriesDrift {
            LEFT JOIN crit ON crit.ws = ag.ws
          ORDER BY ag.ws"""
 
-  private val RsWinSql: String =
+  private lazy val RsWinSql: String =
     """WITH e AS (SELECT date_trunc('day', ts) AS ws,
                   round(value, 2) AS v FROM events),
          b AS (SELECT round(value, 2) AS v FROM events
@@ -979,350 +1268,4 @@ object QueriesDrift {
              tbl)
          SELECT ws, g AS $name, tw AS n, round(sum(term), 6) AS psi
          FROM terms GROUP BY ws, g, tw ORDER BY ws, $name"""
-
-  private[graft] val oracleSql: Map[String, String] = Map(
-
-    "q103_psi_drift" -> PsiDriftSql,
-
-
-    "q164_embedding_drift" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x
-             FROM embeddings),
-         na AS (SELECT CAST(count(*) AS BIGINT) AS n_base FROM e
-                WHERE vec_id % 2 = 0),
-         nb AS (SELECT CAST(count(*) AS BIGINT) AS n_live FROM e
-                WHERE vec_id % 2 = 1),
-         ma AS (SELECT list(m ORDER BY j) AS m FROM (
-           SELECT g.j AS j, avg(x[g.j]) AS m
-           FROM e, generate_series(1, 64) AS g(j)
-           WHERE vec_id % 2 = 0 GROUP BY g.j)),
-         mb AS (SELECT list(m ORDER BY j) AS m FROM (
-           SELECT g.j AS j, avg(x[g.j]) AS m
-           FROM e, generate_series(1, 64) AS g(j)
-           WHERE vec_id % 2 = 1 GROUP BY g.j)),
-         c AS (SELECT
-             list_sum(list_transform(generate_series(1, 64),
-               j -> ma.m[j] * mb.m[j])) AS ab,
-             sqrt(list_sum(list_transform(generate_series(1, 64),
-               j -> ma.m[j] * ma.m[j]))) AS nrm_a,
-             sqrt(list_sum(list_transform(generate_series(1, 64),
-               j -> mb.m[j] * mb.m[j]))) AS nrm_b,
-             sqrt(list_sum(list_transform(generate_series(1, 64),
-               j -> (ma.m[j] - mb.m[j]) * (ma.m[j] - mb.m[j])))) AS l2
-           FROM ma, mb)
-         SELECT n_base, n_live,
-           round(CASE WHEN nrm_a > 0 AND nrm_b > 0
-             THEN ab / (nrm_a * nrm_b) END, 6) AS mean_cos,
-           round(l2, 6) AS mean_l2
-         FROM na, nb, c""",
-
-
-    // same fixed-range bucketing + 0.5 smoothing as q103's psi; per-day
-    // totals replace the single live total
-    "q168_psi_over_time" ->
-      """WITH bb AS (SELECT ts,
-             CAST(least(greatest(
-               floor((value - 0.0) / 500.0 * 10), 0.0), 9.0) AS INT)
-               AS bucket
-           FROM events),
-         base AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_base
-                  FROM bb WHERE ts < TIMESTAMP '2024-01-08'
-                  GROUP BY bucket),
-         tbl AS (SELECT CAST(count(*) AS BIGINT) AS tb FROM bb
-                 WHERE ts < TIMESTAMP '2024-01-08'),
-         live AS (SELECT date_trunc('day', ts) AS ws, bucket,
-                    CAST(count(*) AS BIGINT) AS n_live
-                  FROM bb GROUP BY ws, bucket),
-         tw AS (SELECT ws, CAST(sum(n_live) AS BIGINT) AS tw
-                FROM live GROUP BY ws),
-         grid AS (SELECT tw.ws, tw.tw, g.b AS bucket
-                  FROM tw, generate_series(0, 9) AS g(b)),
-         terms AS (SELECT grid.ws, grid.tw,
-             ((coalesce(l.n_live, 0) + 0.5)
-                / (CAST(grid.tw AS DOUBLE) + 5.0)
-              - (coalesce(base.n_base, 0) + 0.5)
-                / (CAST(tbl.tb AS DOUBLE) + 5.0))
-             * ln(((coalesce(l.n_live, 0) + 0.5)
-                  / (CAST(grid.tw AS DOUBLE) + 5.0))
-                / ((coalesce(base.n_base, 0) + 0.5)
-                  / (CAST(tbl.tb AS DOUBLE) + 5.0))) AS term
-           FROM grid
-           LEFT JOIN base ON base.bucket = grid.bucket
-           LEFT JOIN live l ON l.ws = grid.ws AND l.bucket = grid.bucket,
-             tbl)
-         SELECT ws, tw AS n, round(sum(term), 6) AS psi
-         FROM terms GROUP BY ws, tw ORDER BY ws""",
-
-
-    // slopes are ratios of rounded daily means (identical doubles both
-    // engines); quantile_cont ≡ Spark percentile bit-for-bit (q116 pin)
-    "q169_theil_sen" ->
-      """WITH daily AS (SELECT event_type, date_trunc('day', ts) AS d,
-             round(avg(value), 6) AS y
-           FROM events GROUP BY event_type, d),
-         pts AS (SELECT event_type,
-             CAST(epoch_us(d) // 86400000000 AS DOUBLE) AS x, y
-           FROM daily),
-         pr AS (SELECT a.event_type,
-             (b.y - a.y) / (b.x - a.x) AS slope
-           FROM pts a JOIN pts b
-             ON a.event_type = b.event_type AND a.x < b.x)
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
-           quantile_cont(slope, 0.5) AS slope
-         FROM pr GROUP BY event_type ORDER BY event_type""",
-
-
-    // same smoothing arithmetic ORDER as the Spark side: (cnt + 0.5) /
-    // (total + 0.5 * n); psi rounds at 6 dp over the ln
-    // integer-exact ECDF gaps: D's argmax runs on |cna·n_b − cnb·n_a|
-    // (pure int64); only the final d / d_crit ratios touch doubles, with
-    // the SAME arithmetic shape as Eval.ksTest
-    "q184_ks_drift" -> KsDriftSql,
-
-
-    // the q184 integer-gap machinery sliced per source: the dense
-    // (source × value) grid evaluates every group's ECDF at every global
-    // jump point; rest-side cumulatives derive as (global − own)
-    "q185_ks_by_source" ->
-      KsBySql,
-
-
-    // the q184 integer-gap machinery per day against the first-week
-    // baseline: the dense (window × value) grid evaluates each window's
-    // ECDF at every jump point of either side
-    "q186_ks_drift_windowed" ->
-      KsWinSql,
-
-    // Pearson chi2 over the 2×k (slice, lang) table; expected counts in
-    // doubles with the exact same multiply-then-divide shape; chi2/crit
-    // rounded 6 dp (k-term sum order), flag compares the rounded values
-    "q187_chi2_drift" -> Chi2DriftSql,
-
-    // mid-rank machinery over the per-value table (the q184 shape); U
-    // and the tie term are exact (0.5-multiples / integer sums), z is
-    // one fixed expression both engines replay
-    "q188_rank_sum" -> RankSumSql,
-
-    // q187's chi2 per day vs the first-week baseline; cells with a count
-    // on either side only (an absent category is not part of that
-    // window's 2xk table); chi2/crit rounded 6 dp like the batch op
-    "q189_chi2_windowed" ->
-      Chi2WinSql,
-
-    // q188's rank machinery per day against the first-week baseline on
-    // the dense (window x value) grid; zero-count grid cells contribute
-    // nothing to rb/ties so the per-window sums equal the merged walk
-    "q190_rank_sum_windowed" ->
-      RsWinSql,
-
-    // one global mid-rank table (the q188 machinery), per-source weighted
-    // sums; rest side = global minus own, same fixed u/z shapes
-    "q191_rank_sum_by_source" ->
-      RankSumBySql,
-
-    // the q187 2xk machinery per slice: rest-side counts = global - own
-    // on the dense (source x lang) grid; chi2/crit rounded 6 dp
-    "q192_chi2_by_source" ->
-      Chi2BySql,
-
-    // composes the four VERIFIED member oracles as subqueries — a report
-    // row is definitionally the member's own number reshaped
-    "q193_drift_report" ->
-      s"""SELECT 'psi' AS stat, round(sum(psi), 6) AS statistic,
-           CAST(0.25 AS DOUBLE) AS threshold,
-           CASE WHEN round(sum(psi), 6) > 0.25 THEN 1 ELSE 0 END
-             AS drifted
-         FROM ($PsiDriftSql)
-         UNION ALL
-         SELECT 'ks', d, d_crit, drifted FROM ($KsDriftSql)
-         UNION ALL
-         SELECT 'rank_sum', abs(z), CAST(1.96 AS DOUBLE), drifted
-         FROM ($RankSumSql)
-         UNION ALL
-         SELECT 'chi2', chi2, chi2_crit, drifted FROM ($Chi2DriftSql)
-         ORDER BY stat""",
-
-    // q103's psi machinery per slice on the dense (source x bucket) grid:
-    // rest-side counts = global - own; per-term round 6 dp then the sum
-    // rounds 6 dp, the exact shapes psiDriftBy emits
-    "q194_psi_by_source" ->
-      PsiBySql,
-
-    // the q164 mean-vector machinery per slice: per-label per-dim means,
-    // rest mean derived per dim as (sum_g n_g*m_g - n_g*m_g) / (n - n_g)
-    // — the same global-minus-own arithmetic embeddingDriftBy runs
-    "q195_embedding_drift_by" ->
-      """WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS x
-             FROM embeddings
-             WHERE label IS NOT NULL AND embedding IS NOT NULL),
-         dims AS (SELECT label, g.j AS j, avg(x[g.j]) AS mj,
-                    CAST(count(*) AS BIGINT) AS n_g
-                  FROM e, generate_series(1, 64) AS g(j)
-                  GROUP BY label, g.j),
-         gsum AS (SELECT j, sum(mj * CAST(n_g AS DOUBLE)) AS sj
-                  FROM dims GROUP BY j),
-         tot AS (SELECT CAST(sum(n_g) AS BIGINT) AS n
-                 FROM (SELECT label, any_value(n_g) AS n_g
-                       FROM dims GROUP BY label)),
-         rest AS (SELECT d.label, d.n_g, n, d.mj,
-                    CASE WHEN n > d.n_g
-                      THEN (gl.sj - d.mj * CAST(d.n_g AS DOUBLE)) /
-                        CAST(n - d.n_g AS DOUBLE) END AS rj
-                  FROM dims d JOIN gsum gl ON gl.j = d.j, tot),
-         per AS (SELECT label, n_g, n,
-                   sum(mj * rj) AS dot, sum(mj * mj) AS na2,
-                   sum(rj * rj) AS nb2,
-                   sum((mj - rj) * (mj - rj)) AS l22
-                 FROM rest GROUP BY label, n_g, n)
-         SELECT label, n_g, CAST(n - n_g AS BIGINT) AS n_rest,
-           round(CASE WHEN na2 > 0 AND nb2 > 0
-             THEN dot / sqrt(na2 * nb2) END, 6) AS mean_cos,
-           round(CASE WHEN n > n_g THEN sqrt(l22) END, 6) AS mean_l2
-         FROM per ORDER BY label""",
-
-    // q186's dense-grid machinery with the slice in the window key: each
-    // (day, event type) cell's ECDF vs the shared first-week baseline
-    "q196_ks_windowed_by" ->
-      ksWinBySqlF("event_type", "event_type"),
-
-    // q190's rank machinery per (day, event type) against the first-week
-    // baseline on the dense (window x slice x value) grid
-    "q197_rank_sum_windowed_by" ->
-      rsWinBySqlF("event_type", "event_type"),
-
-    // q189's chi2 machinery per (day, user cohort) vs the first-week
-    // baseline; cells with a count on either side only, chi2/crit 6 dp
-    "q198_chi2_windowed_by" ->
-      chi2WinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort"),
-
-    // q168's smoothing arithmetic per (day, event type) cell against the
-    // shared first-week baseline histogram; psi rounds 6 dp over the sum
-    "q199_psi_windowed_by" ->
-      psiWinBySqlF("event_type", "event_type", "value"),
-
-    // composes the four VERIFIED by-slice member oracles as subqueries —
-    // a report row is definitionally the member's own number reshaped
-    // (the q193 pattern per slice)
-    "q200_drift_report_by" ->
-      s"""SELECT source, 'psi' AS stat, CAST(psi AS DOUBLE) AS statistic,
-           CAST(0.25 AS DOUBLE) AS threshold, drifted
-         FROM ($PsiBySql)
-         UNION ALL
-         SELECT source, 'ks', d, d_crit, drifted FROM ($KsBySql)
-         UNION ALL
-         SELECT source, 'rank_sum', abs(z), CAST(1.96 AS DOUBLE), drifted
-         FROM ($RankSumBySql)
-         UNION ALL
-         SELECT source, 'chi2', chi2, chi2_crit, drifted
-         FROM ($Chi2BySql)
-         ORDER BY source, stat""",
-
-    // joins the three VERIFIED windowed-member oracles on ws plus the
-    // windowed-psi arithmetic (the q168/q199 smoothing shapes on the
-    // rounded value) — a gate row is definitionally the members' own
-    // numbers side by side
-    "q201_drift_gate_windowed" ->
-      s"""WITH psibb AS (SELECT ts,
-             CAST(least(greatest(
-               floor((round(value, 2) - 0.0) / 500.0 * 10), 0.0), 9.0)
-               AS INT) AS bucket
-           FROM events),
-         psibase AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_base
-                     FROM psibb WHERE ts < TIMESTAMP '2024-01-08'
-                     GROUP BY bucket),
-         psitbl AS (SELECT CAST(count(*) AS BIGINT) AS tb FROM psibb
-                    WHERE ts < TIMESTAMP '2024-01-08'),
-         psilive AS (SELECT date_trunc('day', ts) AS ws, bucket,
-                       CAST(count(*) AS BIGINT) AS n_live
-                     FROM psibb GROUP BY ws, bucket),
-         psitw AS (SELECT ws, CAST(sum(n_live) AS BIGINT) AS tw
-                   FROM psilive GROUP BY ws),
-         psigrid AS (SELECT psitw.ws, psitw.tw, g.b AS bucket
-                     FROM psitw, generate_series(0, 9) AS g(b)),
-         psiterms AS (SELECT psigrid.ws,
-             ((coalesce(l.n_live, 0) + 0.5)
-                / (CAST(psigrid.tw AS DOUBLE) + 5.0)
-              - (coalesce(psibase.n_base, 0) + 0.5)
-                / (CAST(psitbl.tb AS DOUBLE) + 5.0))
-             * ln(((coalesce(l.n_live, 0) + 0.5)
-                  / (CAST(psigrid.tw AS DOUBLE) + 5.0))
-                / ((coalesce(psibase.n_base, 0) + 0.5)
-                  / (CAST(psitbl.tb AS DOUBLE) + 5.0))) AS term
-           FROM psigrid
-           LEFT JOIN psibase ON psibase.bucket = psigrid.bucket
-           LEFT JOIN psilive l ON l.ws = psigrid.ws
-             AND l.bucket = psigrid.bucket,
-             psitbl),
-         psiw AS (SELECT ws, round(sum(term), 6) AS psi
-                  FROM psiterms GROUP BY ws)
-         SELECT k.ws, k.n_live,
-           k.d AS ks_d, k.d_crit AS ks_d_crit, k.drifted AS ks_drifted,
-           r.u AS rs_u, r.z AS rs_z, r.drifted AS rs_drifted,
-           c.k AS chi2_k, c.chi2, c.chi2_crit,
-           c.drifted AS chi2_drifted,
-           p.psi,
-           CASE WHEN p.psi > 0.25 THEN 1 ELSE 0 END AS psi_drifted,
-           greatest(k.drifted, r.drifted, c.drifted,
-             CASE WHEN p.psi > 0.25 THEN 1 ELSE 0 END) AS any_drifted
-         FROM ($KsWinSql) k
-           JOIN ($RsWinSql) r ON r.ws = k.ws
-           JOIN ($Chi2WinSql) c ON c.ws = k.ws
-           JOIN psiw p ON p.ws = k.ws
-         ORDER BY k.ws""",
-
-    // joins the slice-parameterized windowed-BY member builders on
-    // (ws, cohort) — every lens sliced by the same user cohort, each
-    // cell's fields the members' own numbers side by side
-    "q202_drift_gate_windowed_by" ->
-      s"""SELECT k.ws, k.cohort, k.n_live,
-           k.d AS ks_d, k.d_crit AS ks_d_crit, k.drifted AS ks_drifted,
-           r.u AS rs_u, r.z AS rs_z, r.drifted AS rs_drifted,
-           c.k AS chi2_k, c.chi2, c.chi2_crit,
-           c.drifted AS chi2_drifted,
-           p.psi,
-           CASE WHEN p.psi > 0.25 THEN 1 ELSE 0 END AS psi_drifted,
-           greatest(k.drifted, r.drifted, c.drifted,
-             CASE WHEN p.psi > 0.25 THEN 1 ELSE 0 END) AS any_drifted
-         FROM (${ksWinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort")}) k
-           JOIN (${rsWinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort")})
-             r ON r.ws = k.ws AND r.cohort = k.cohort
-           JOIN (${chi2WinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort")})
-             c ON c.ws = k.ws AND c.cohort = k.cohort
-           JOIN (${psiWinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort",
-             "round(value, 2)")})
-             p ON p.ws = k.ws AND p.cohort = k.cohort
-         ORDER BY k.ws, k.cohort""",
-
-    // q164's mean-vector machinery per (day, label) cell against the
-    // even-half baseline mean: per-dim avgs, then cos/L2 of the cell
-    // mean vs the baseline mean, 6 dp — the q195 arithmetic with the
-    // driver-held-baseline convention instead of rest-relative
-    "q203_embedding_windowed_by" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS x
-             FROM embeddings),
-         bm AS (SELECT g.j AS j, avg(x[g.j]) AS bj
-                FROM e, generate_series(1, 64) AS g(j)
-                WHERE vec_id % 2 = 0 GROUP BY g.j),
-         bn AS (SELECT sqrt(sum(bj * bj)) AS nb FROM bm),
-         live AS (SELECT TIMESTAMP '2024-01-01'
-                    + (vec_id % 3) * INTERVAL 1 DAY AS ws, label, x
-                  FROM e),
-         dims AS (SELECT ws, label, g.j AS j, avg(x[g.j]) AS mj
-                  FROM live, generate_series(1, 64) AS g(j)
-                  GROUP BY ws, label, g.j),
-         cnt AS (SELECT ws, label, CAST(count(*) AS BIGINT) AS n_live
-                 FROM live GROUP BY ws, label),
-         per AS (SELECT d.ws, d.label,
-                   sum(d.mj * bm.bj) AS dot, sum(d.mj * d.mj) AS na2,
-                   sum((d.mj - bm.bj) * (d.mj - bm.bj)) AS l22
-                 FROM dims d JOIN bm ON bm.j = d.j
-                 GROUP BY d.ws, d.label)
-         SELECT per.ws, per.label, cnt.n_live,
-           round(CASE WHEN sqrt(na2) > 0 AND nb > 0
-             THEN dot / (sqrt(na2) * nb) END, 6) AS mean_cos,
-           round(sqrt(l22), 6) AS mean_l2
-         FROM per JOIN cnt ON cnt.ws = per.ws AND cnt.label = per.label,
-           bn
-         ORDER BY per.ws, per.label""",
-  )
 }

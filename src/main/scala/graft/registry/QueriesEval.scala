@@ -12,322 +12,17 @@ import graft.util.Checkpoints.scoped
 
 /** Query registry — LLM pipeline: classifier/agreement/calibration/CI audits and rank statistics.
   *
-  * Entries (and their DuckDB oracle SQL beside them) moved verbatim from
-  * SparkEntry in the r12 per-family split; [[SparkEntry.queries]] is the
-  * dispatcher that concatenates the families. Shared fixtures/helpers and
-  * oracle SQL fragments live in [[QueryShared]]. */
+  * Each entry is one [[Query]]; shared fixtures and oracle fragments live in [[QueryShared]]. */
 object QueriesEval {
 
-  private[graft] val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] val queries: Seq[Query] = Seq(
 
     // ext: robust outlier flags — modified z-score against per-type
     // median/MAD, |M| > 3.5; the mean-free gate outliers can't drag
-    "q90_robust_outliers" -> ((s, dir) =>
+    Query("q90_robust_outliers", (s, dir) =>
       ext.Outliers.robustFlags(
         Tables.load(s, dir, "events"), "event_type", "event_id", "value")
-        .orderBy("event_type", "event_id")),
-
-
-    // ext: precision/recall threshold sweep of the q99 classifier gate
-    "q113_pr_curve" -> ((s, dir) => scoped { sc =>
-      val base = sc.pin(raterBase(s, dir))
-      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
-        .join(base.select(col("doc_id"),
-          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
-      ext.Eval.prCurve(scored, "score", "label")
-    }.orderBy(col("threshold").desc)),
-
-
-    // ext: exact Mann-Whitney ROC-AUC of the same gate (ties at half
-    // credit via average ranks; all arithmetic exact in doubles)
-    "q114_auc" -> ((s, dir) => scoped { sc =>
-      val base = sc.pin(raterBase(s, dir))
-      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
-        .join(base.select(col("doc_id"),
-          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
-      ext.Eval.aucRoc(scored, "score", "label")
-    }),
-
-
-    // ext: per-type winsorization — event values clamped into the exact
-    // [p05, p95] percentile band (unrounded: clamps are data values or
-    // exact interpolations, the q90 order-statistic discipline)
-    "q116_winsorize" -> ((s, dir) =>
-      ext.Outliers.winsorize(
-        Tables.load(s, dir, "events")
-          .select(col("event_id"), col("event_type"), col("value")),
-        "event_type", "value")
-        .orderBy("event_id")),
-
-
-    // ext: ECDF percentile-rank transform of the quality score (mid-rank
-    // ties; exact 0.5-multiples over an exact total — unrounded)
-    "q117_ecdf" -> ((s, dir) => scoped { sc =>
-      // ecdf reads its input twice (row side + rank table side); pin the
-      // regex-scored projection (16 bytes/row) so the scorer runs once
-      val scored = sc.pin(Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
-      ext.Eval.ecdf(scored, "q").orderBy("doc_id")
-    }),
-
-
-    // ext: composite quality ranking — three heterogeneous signals
-    // rank-normalized (ecdf) and blended 0.5/0.2/0.3; unit-free scoring.
-    // blendKeyed = the shared-scan shape: the regex-heavy scoring
-    // projection evaluates once, not once per signal table (r8 verdict)
-    "q118_quality_blend" -> ((s, dir) => scoped { sc =>
-      // blendKeyed reads its exploded signal frame twice (rank table +
-      // join-back) — pin the three-regex projection so each regex runs
-      // once, not twice
-      val scored = sc.pin(Tables.load(s, dir, "documents").select(
-        col("doc_id"),
-        round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
-        round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"),
-        round(ext.TextAnalysis.alphaWordFraction(col("text")), 6).as("awf")))
-      ext.Eval.blendKeyed(scored, "doc_id",
-        Seq("q" -> 0.5, "mwl" -> 0.2, "awf" -> 0.3))
-    }.orderBy("doc_id")),
-
-
-    // ext: per-class precision/recall/F1 of the q112 language classifier
-    // (never-predicted classes carry NULL precision/F1, not zero)
-    "q119_class_metrics" -> ((s, dir) => scoped { sc =>
-      // shares ONE pinned tokenized scan between the classifier and the
-      // label side of the metrics join (the label column rides the same
-      // pinned frame — no second corpus scan)
-      val base = sc.pin(nbLangBase(s, dir))
-      val preds = ext.TextAnalysis
-        .nbMulticlassTokens(base, "doc_id")
-        .select(col("doc_id"), col("pred"))
-        .join(base.select(col("doc_id"), col("cls").as("lang")), "doc_id")
-      ext.Eval.classMetrics(preds, "lang", "pred")
-    }.orderBy("cls")),
-
-
-    // ext: Cohen's kappa between the q99 NB gate and the quality>=0.5
-    // gate — chance-corrected rater agreement, exact integer p_e
-    "q120_kappa" -> ((s, dir) => scoped { sc =>
-      // both raters ride the pinned raterBase scan: the NB gate reads its
-      // token column, the quality gate its pre-rounded qs column
-      val base = sc.pin(raterBase(s, dir))
-      val nb = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
-        .select(col("doc_id"), col("pred"))
-      val gate = base.select(col("doc_id"),
-        when(col("qs") >= 0.5, 1).otherwise(0).as("gate"))
-      ext.Eval.cohenKappa(nb.join(gate, "doc_id"), "pred", "gate")
-    }),
-
-
-    // ext: per-language AUC of the q99 gate — the sliced fairness view
-    // a single corpus-level AUC hides; every stage keys on the slice
-    "q121_auc_by_lang" -> ((s, dir) => scoped { sc =>
-      val base = sc.pin(raterBase(s, dir))
-      // lang is not on the pinned base — a narrow (doc_id, lang) parquet
-      // scan joins it in (no regex kernel on that branch)
-      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
-        .join(base.select(col("doc_id"),
-          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
-        .join(Tables.load(s, dir, "documents")
-          .select(col("doc_id"), col("lang")), "doc_id")
-      ext.Eval.aucRocBy(scored, "lang", "score", "label").orderBy("lang")
-    }),
-
-
-    // ext: calibration bins of the q99 gate — observed positive rate vs
-    // stated sigmoid confidence per rounded-probability decile
-    "q122_calibration" -> ((s, dir) => scoped { sc =>
-      val base = sc.pin(raterBase(s, dir))
-      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
-        .join(base.select(col("doc_id"),
-          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
-      ext.Eval.calibrationBins(scored, "score", "label")
-    }.orderBy("bin")),
-
-
-    // ext: Kaplan-Meier conversion curve — time from first event to
-    // first purchase, right-censored at last observation; product-limit
-    // survival replayed as exp(sum ln) down the duration window
-    "q123_kaplan_meier" -> ((s, dir) =>
-      streaming.EventStream.kaplanMeier(
-        Tables.load(s, dir, "events"), "purchase")
-        .orderBy("dur")),
-
-
-    // ext: robust scaling — every event's modified z-score vs its type's
-    // median/MAD (NULL for zero-MAD keys); unrounded order statistics
-    "q125_robust_scale" -> ((s, dir) =>
-      ext.Outliers.robustScale(
-        Tables.load(s, dir, "events")
-          .select(col("event_id"), col("event_type"), col("value")),
-        "event_type", "event_id", "value")
-        .orderBy("event_id")),
-
-
-    // ext: equal-frequency discretization — event values into 8
-    // value-threshold bins at exact k/8 percentiles
-    "q126_discretize" -> ((s, dir) =>
-      ext.Outliers.discretize(
-        Tables.load(s, dir, "events").select(col("event_id"), col("value")),
-        "value", 8)
-        .orderBy("event_id")),
-
-
-    // ext: Fleiss' kappa across THREE quality raters (NB gate, heuristic
-    // quality gate, length gate) — the n-rater agreement audit; ratings
-    // collapse map-side to per-item counts. One NB training pass, then
-    // ONE shared corpus scan emits all three votes as columns (the NB
-    // score is a narrow codegen lookup against the driver model —
-    // nbScore ≡ nbQualityScore on the training corpus, suite-pinned),
-    // unpivoted to long form: r9 paid three independent scans plus the
-    // NB join shape for the same ratings (judge note, VERDICT r9 #3)
-    "q150_fleiss_kappa" -> ((s, dir) => scoped { sc =>
-      val base = sc.pin(raterBase(s, dir))
-      val wide = base.select(col("doc_id"),
-        when(ext.TextAnalysis.nbScoreTokens(
-          nbModelOnTokens(base), col("toks")) > 0, 1).otherwise(0).as("nb"),
-        when(col("qs") >= 0.5, 1).otherwise(0).as("gate"),
-        when(col("n_chars") >= 300, 1).otherwise(0).as("len"))
-      val long = wide.unpivot(Array(col("doc_id")),
-        Array(col("nb"), col("gate"), col("len")), "rater", "vote")
-      ext.Eval.fleissKappa(long, "doc_id", "rater", "vote")
-    }),
-
-
-    // ext: Brier score + Murphy decomposition of the q99 NB gate — the
-    // scalar probability audit next to q122's per-bin reliability view
-    "q151_brier" -> ((s, dir) => scoped { sc =>
-      val base = sc.pin(raterBase(s, dir))
-      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
-        .join(base.select(col("doc_id"),
-          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
-      ext.Eval.brierDecomposition(scored, "score", "label")
-    }),
-
-
-    // ext: Krippendorff's alpha with an ABSTAINING rater (the length
-    // gate only votes outside n_chars [250,350]) — agreement that
-    // tolerates missing ratings, unlike q150's Fleiss
-    "q157_krippendorff" -> ((s, dir) => scoped { sc =>
-      // q150's shared-scan shape; the abstaining len rater emits NULL
-      // inside [250,350] and the unpivoted row is dropped (abstention =
-      // absent rating)
-      val base = sc.pin(raterBase(s, dir))
-      val wide = base.select(col("doc_id"),
-        when(ext.TextAnalysis.nbScoreTokens(
-          nbModelOnTokens(base), col("toks")) > 0, 1).otherwise(0).as("nb"),
-        when(col("qs") >= 0.5, 1).otherwise(0).as("gate"),
-        when(col("n_chars") < 250 || col("n_chars") > 350,
-          when(col("n_chars") >= 300, 1).otherwise(0)).as("len"))
-      val long = wide.unpivot(Array(col("doc_id")),
-        Array(col("nb"), col("gate"), col("len")), "rater", "vote")
-        .filter(col("vote").isNotNull)
-      ext.Eval.krippendorffAlpha(long, "doc_id", "rater", "vote")
-    }),
-
-
-    // ext: cross-source quantile normalization — each doc's quality maps
-    // to the GLOBAL value at its within-source percentile (exact data
-    // values, no interpolated cuts)
-    "q158_quantile_norm" -> ((s, dir) => scoped { sc =>
-      // quantileNormalize reads its input three times (per-group ranks,
-      // global ranks, final join) — pin the regex-scored projection
-      val scored = sc.pin(Tables.load(s, dir, "documents").select(
-        col("doc_id"), col("source"),
-        round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
-      ext.Eval.quantileNormalize(scored, "source", "q")
-        .select(col("doc_id"), col("source"), col("q"), col("norm"))
-    }.orderBy("doc_id")),
-
-
-    // ext: Spearman rank correlation between the quality and
-    // mean-word-length signals — the monotone-agreement audit before
-    // blending; exact 0.5-multiple ranks, unrounded rho
-    "q160_spearman" -> ((s, dir) => {
-      val scored = Tables.load(s, dir, "documents").select(
-        round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
-        round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"))
-      ext.Eval.spearman(scored, "q", "mwl")
-    }),
-
-
-    // ext: deterministic Poisson-bootstrap CI on the mean quality score —
-    // error bars without resampling passes, one scan ×40 hash weights
-    "q165_bootstrap_ci" -> ((s, dir) => scoped { sc =>
-      // bootstrapCI reads its input twice (replicate branch + the n/mean
-      // aggregate) — pin the regex-scored projection
-      val scored = sc.pin(Tables.load(s, dir, "documents").select(
-        col("doc_id"),
-        round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
-      ext.Eval.bootstrapCI(scored, "doc_id", "q")
-    }),
-
-
-    // ext: key-skew report on the events user key — the pre-join
-    // diagnostic that picks plain vs broadcast vs salted (q141) joins
-    "q166_skew_report" -> ((s, dir) =>
-      ext.Eval.skewReport(Tables.load(s, dir, "events"), "user_id")),
-
-
-    // ext: mutual information between the quality and mean-word-length
-    // signals over ECDF-decile bins — the nonlinear-redundancy audit
-    // next to q160's monotone one
-    "q170_mutual_info" -> ((s, dir) => {
-      val scored = Tables.load(s, dir, "documents").select(
-        round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
-        round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"))
-      ext.Eval.mutualInfo(scored, "q", "mwl")
-    }),
-
-
-    // ext: PAIRED bootstrap significance — per-user click-vs-view mean
-    // value deltas ("do clicks really carry higher value than views for
-    // the same user?"); whole users reweight per replicate, so the
-    // per-user correlation cancels — the A/B readout a pair of
-    // independent CIs gets wrong
-    "q208_paired_bootstrap" -> ((s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-      val a = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"))
-        .agg(round(avg(col("value")), 6).as("a"))
-      val b = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"))
-        .agg(round(avg(col("value")), 6).as("b"))
-      ext.Eval.pairedBootstrapTest(a.join(b, "user_id"), "user_id",
-        "a", "b")
-    }),
-
-    // ext: the paired test PER COHORT — "which user cohort's
-    // click-vs-view delta is real"; one grouped replicate aggregation,
-    // same deterministic weights per (rep, user)
-    "q209_paired_bootstrap_by" -> ((s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-      val a = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"))
-        .agg(round(avg(col("value")), 6).as("a"))
-      val b = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"))
-        .agg(round(avg(col("value")), 6).as("b"))
-      ext.Eval.pairedBootstrapTestBy(
-        a.join(b, "user_id")
-          .withColumn("cohort", (col("user_id") % 4).cast("string")),
-        "cohort", "user_id", "a", "b").orderBy("cohort")
-    }),
-
-    // ext: per-source bootstrap CI on mean quality — q165 sliced by
-    // source; "are these two sources' qualities really different?"
-    "q174_bootstrap_by_source" -> ((s, dir) => scoped { sc =>
-      val scored = sc.pin(Tables.load(s, dir, "documents").select(
-        col("doc_id"), col("source"),
-        round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
-      ext.Eval.bootstrapCIBy(scored, "source", "doc_id", "q")
-        .orderBy("source")
-    }),
-  )
-
-  private[graft] val oracleSql: Map[String, String] = Map(
-
-    "q90_robust_outliers" ->
+        .orderBy("event_type", "event_id"),
       """WITH s AS (SELECT event_type, quantile_cont(value, 0.5) AS med
              FROM events GROUP BY event_type),
          m AS (SELECT e.event_type,
@@ -337,13 +32,19 @@ object QueriesEval {
            0.6745 * (e.value - s.med) / m.mad AS mz
          FROM events e JOIN s USING (event_type) JOIN m USING (event_type)
          WHERE m.mad > 0 AND abs(0.6745 * (e.value - s.med) / m.mad) > 3.5
-         ORDER BY event_type, event_id""",
+         ORDER BY event_type, event_id"""),
 
 
-
-    // threshold sweep over the per-score aggregate (never the corpus);
-    // window sums CAST to BIGINT (DuckDB windowed sum is HUGEINT)
-    "q113_pr_curve" ->
+    // ext: precision/recall threshold sweep of the q99 classifier gate
+    Query("q113_pr_curve", (s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
+      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
+        .join(base.select(col("doc_id"),
+          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
+      ext.Eval.prCurve(scored, "score", "label")
+    }.orderBy(col("threshold").desc),
+      // threshold sweep over the per-score aggregate (never the corpus);
+      // window sums CAST to BIGINT (DuckDB windowed sum is HUGEINT)
       s"""WITH scored AS ($NbScoredSql),
          per AS (SELECT score AS threshold,
                    CAST(sum(pos) AS BIGINT) AS npos,
@@ -361,12 +62,20 @@ object QueriesEval {
          SELECT threshold, tp, fp,
            CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) AS precision,
            CAST(tp AS DOUBLE) / CAST(p_total AS DOUBLE) AS recall
-         FROM cum, tot ORDER BY threshold DESC""",
+         FROM cum, tot ORDER BY threshold DESC"""),
 
 
-    // Mann-Whitney rank form: every npos·avgRank term is an exact
-    // multiple of 0.5, so the sums are order-independent and unrounded
-    "q114_auc" ->
+    // ext: exact Mann-Whitney ROC-AUC of the same gate (ties at half
+    // credit via average ranks; all arithmetic exact in doubles)
+    Query("q114_auc", (s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
+      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
+        .join(base.select(col("doc_id"),
+          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
+      ext.Eval.aucRoc(scored, "score", "label")
+    },
+      // Mann-Whitney rank form: every npos·avgRank term is an exact
+      // multiple of 0.5, so the sums are order-independent and unrounded
       s"""WITH scored AS ($NbScoredSql),
          per AS (SELECT score AS s, CAST(sum(pos) AS BIGINT) AS npos,
                    CAST(count(*) AS BIGINT) AS n
@@ -386,10 +95,18 @@ object QueriesEval {
                / 2.0) /
              (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) AS auc,
            n_pos, n_neg
-         FROM ag""",
+         FROM ag"""),
 
 
-    "q116_winsorize" ->
+    // ext: per-type winsorization — event values clamped into the exact
+    // [p05, p95] percentile band (unrounded: clamps are data values or
+    // exact interpolations, the q90 order-statistic discipline)
+    Query("q116_winsorize", (s, dir) =>
+      ext.Outliers.winsorize(
+        Tables.load(s, dir, "events")
+          .select(col("event_id"), col("event_type"), col("value")),
+        "event_type", "value")
+        .orderBy("event_id"),
       s"""WITH c AS (SELECT event_type,
              quantile_cont(value, 0.05) AS lo,
              quantile_cont(value, 0.95) AS hi
@@ -397,10 +114,19 @@ object QueriesEval {
          SELECT e.event_type, e.event_id, e.value,
            least(greatest(e.value, c.lo), c.hi) AS winsorized
          FROM events e JOIN c USING (event_type)
-         ORDER BY e.event_id""",
+         ORDER BY e.event_id"""),
 
 
-    "q117_ecdf" ->
+    // ext: ECDF percentile-rank transform of the quality score (mid-rank
+    // ties; exact 0.5-multiples over an exact total — unrounded)
+    Query("q117_ecdf", (s, dir) => scoped { sc =>
+      // ecdf reads its input twice (row side + rank table side); pin the
+      // regex-scored projection (16 bytes/row) so the scorer runs once
+      val scored = sc.pin(Tables.load(s, dir, "documents")
+        .select(col("doc_id"),
+          round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
+      ext.Eval.ecdf(scored, "q").orderBy("doc_id")
+    },
       s"""$QualityCtesSql,
          qd AS (SELECT doc_id, $QualityValSql AS q FROM s),
          per AS (SELECT q, CAST(count(*) AS BIGINT) AS n
@@ -414,11 +140,26 @@ object QueriesEval {
          SELECT d.doc_id, d.q,
            (CAST(cum - n AS DOUBLE) + CAST(n AS DOUBLE) / 2.0)
              / CAST(tot AS DOUBLE) AS pct
-         FROM qd d JOIN cum USING (q), tot ORDER BY d.doc_id""",
+         FROM qd d JOIN cum USING (q), tot ORDER BY d.doc_id"""),
 
 
-    // three generated ecdf chains + the same left-assoc weighted sum
-    "q118_quality_blend" -> {
+    // ext: composite quality ranking — three heterogeneous signals
+    // rank-normalized (ecdf) and blended 0.5/0.2/0.3; unit-free scoring.
+    // blendKeyed = the shared-scan shape: the regex-heavy scoring
+    // projection evaluates once, not once per signal table (r8 verdict)
+    Query("q118_quality_blend", (s, dir) => scoped { sc =>
+      // blendKeyed reads its exploded signal frame twice (rank table +
+      // join-back) — pin the three-regex projection so each regex runs
+      // once, not twice
+      val scored = sc.pin(Tables.load(s, dir, "documents").select(
+        col("doc_id"),
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
+        round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"),
+        round(ext.TextAnalysis.alphaWordFraction(col("text")), 6).as("awf")))
+      ext.Eval.blendKeyed(scored, "doc_id",
+        Seq("q" -> 0.5, "mwl" -> 0.2, "awf" -> 0.3))
+    }.orderBy("doc_id"), {
+      // three generated ecdf chains + the same left-assoc weighted sum
       def ecdfCte(valCol: String, i: Int) =
         s"""per$i AS (SELECT $valCol AS v$i, CAST(count(*) AS BIGINT) AS n
                FROM base GROUP BY $valCol),
@@ -458,12 +199,24 @@ object QueriesEval {
            JOIN pct1 ON pct1.v1 = b.mwl
            JOIN pct2 ON pct2.v2 = b.awf
          ORDER BY b.doc_id"""
-    },
+    }),
 
 
-    // per-class P/R/F1 over the q112 confusion matrix; never-predicted
-    // classes carry NULL precision/F1 (undefined, not zero)
-    "q119_class_metrics" ->
+    // ext: per-class precision/recall/F1 of the q112 language classifier
+    // (never-predicted classes carry NULL precision/F1, not zero)
+    Query("q119_class_metrics", (s, dir) => scoped { sc =>
+      // shares ONE pinned tokenized scan between the classifier and the
+      // label side of the metrics join (the label column rides the same
+      // pinned frame — no second corpus scan)
+      val base = sc.pin(nbLangBase(s, dir))
+      val preds = ext.TextAnalysis
+        .nbMulticlassTokens(base, "doc_id")
+        .select(col("doc_id"), col("pred"))
+        .join(base.select(col("doc_id"), col("cls").as("lang")), "doc_id")
+      ext.Eval.classMetrics(preds, "lang", "pred")
+    }.orderBy("cls"),
+      // per-class P/R/F1 over the q112 confusion matrix; never-predicted
+      // classes carry NULL precision/F1 (undefined, not zero)
       s"""WITH prd AS ($NbMulticlassSql),
          j AS (SELECT d.lang AS label, prd.pred
                FROM prd JOIN documents d USING (doc_id)),
@@ -488,12 +241,23 @@ object QueriesEval {
          SELECT cls, n_label, n_pred, tp, precision, recall,
            CASE WHEN n_pred > 0 AND (precision + recall) > 0
              THEN 2.0 * precision * recall / (precision + recall) END AS f1
-         FROM pr ORDER BY cls""",
+         FROM pr ORDER BY cls"""),
 
 
-    // kappa between the q99 NB pred and the quality>=0.5 gate; p_e from
-    // the EXACT integer marginal product sum over N^2
-    "q120_kappa" ->
+    // ext: Cohen's kappa between the q99 NB gate and the quality>=0.5
+    // gate — chance-corrected rater agreement, exact integer p_e
+    Query("q120_kappa", (s, dir) => scoped { sc =>
+      // both raters ride the pinned raterBase scan: the NB gate reads its
+      // token column, the quality gate its pre-rounded qs column
+      val base = sc.pin(raterBase(s, dir))
+      val nb = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
+        .select(col("doc_id"), col("pred"))
+      val gate = base.select(col("doc_id"),
+        when(col("qs") >= 0.5, 1).otherwise(0).as("gate"))
+      ext.Eval.cohenKappa(nb.join(gate, "doc_id"), "pred", "gate")
+    },
+      // kappa between the q99 NB pred and the quality>=0.5 gate; p_e from
+      // the EXACT integer marginal product sum over N^2
       s"""$QualityCtesSql,
          gt AS (SELECT doc_id,
                   CASE WHEN $QualityValSql >= 0.5 THEN 1 ELSE 0 END
@@ -521,12 +285,24 @@ object QueriesEval {
            / (1.0 - CAST(prod AS DOUBLE)
                / (CAST(n_total AS DOUBLE) * CAST(n_total AS DOUBLE)))
              AS kappa
-         FROM ag, tt, prd""",
+         FROM ag, tt, prd"""),
 
 
-    // q114's rank arithmetic with every window/agg PARTITIONED BY lang;
-    // the label joins back from documents
-    "q121_auc_by_lang" ->
+    // ext: per-language AUC of the q99 gate — the sliced fairness view
+    // a single corpus-level AUC hides; every stage keys on the slice
+    Query("q121_auc_by_lang", (s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
+      // lang is not on the pinned base — a narrow (doc_id, lang) parquet
+      // scan joins it in (no regex kernel on that branch)
+      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
+        .join(base.select(col("doc_id"),
+          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
+        .join(Tables.load(s, dir, "documents")
+          .select(col("doc_id"), col("lang")), "doc_id")
+      ext.Eval.aucRocBy(scored, "lang", "score", "label").orderBy("lang")
+    },
+      // q114's rank arithmetic with every window/agg PARTITIONED BY lang;
+      // the label joins back from documents
       s"""WITH scored AS ($NbScoredSql),
          lb AS (SELECT scored.doc_id, scored.score, scored.pos AS label,
                   d.lang
@@ -552,12 +328,20 @@ object QueriesEval {
                / 2.0) /
              (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) END AS auc,
            n_pos, n_neg
-         FROM ag ORDER BY lang""",
+         FROM ag ORDER BY lang"""),
 
 
-    // sigmoid probs bin on the ROUNDED value (engine-stable edges);
-    // pos_rate stays an exact unrounded integer ratio
-    "q122_calibration" ->
+    // ext: calibration bins of the q99 gate — observed positive rate vs
+    // stated sigmoid confidence per rounded-probability decile
+    Query("q122_calibration", (s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
+      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
+        .join(base.select(col("doc_id"),
+          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
+      ext.Eval.calibrationBins(scored, "score", "label")
+    }.orderBy("bin"),
+      // sigmoid probs bin on the ROUNDED value (engine-stable edges);
+      // pos_rate stays an exact unrounded integer ratio
       s"""WITH scored AS ($NbScoredSql),
          pb AS (SELECT round(1.0 / (1.0 + exp(-score)), 6) AS p,
                   pos AS y
@@ -567,12 +351,18 @@ object QueriesEval {
          SELECT bin, CAST(count(*) AS BIGINT) AS n,
            round(avg(p), 6) AS mean_conf,
            CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS pos_rate
-         FROM b GROUP BY bin ORDER BY bin""",
+         FROM b GROUP BY bin ORDER BY bin"""),
 
 
-    // product-limit estimator; the fully-converting terminal row (d =
-    // n_risk) pins survival 0 explicitly — ln(0) faults in DuckDB
-    "q123_kaplan_meier" ->
+    // ext: Kaplan-Meier conversion curve — time from first event to
+    // first purchase, right-censored at last observation; product-limit
+    // survival replayed as exp(sum ln) down the duration window
+    Query("q123_kaplan_meier", (s, dir) =>
+      streaming.EventStream.kaplanMeier(
+        Tables.load(s, dir, "events"), "purchase")
+        .orderBy("dur"),
+      // product-limit estimator; the fully-converting terminal row (d =
+      // n_risk) pins survival 0 explicitly — ln(0) faults in DuckDB
       s"""WITH pu AS (SELECT user_id, min(epoch_us(ts)) AS t0,
              max(epoch_us(ts)) AS tmax,
              min(CASE WHEN event_type = 'purchase'
@@ -606,11 +396,18 @@ object QueriesEval {
              ELSE round(exp(sum(lnf) OVER (ORDER BY dur ASC
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6)
              END AS survival
-         FROM f ORDER BY dur""",
+         FROM f ORDER BY dur"""),
 
 
-    // q90's med/MAD machinery without the cut; same left-assoc mz form
-    "q125_robust_scale" ->
+    // ext: robust scaling — every event's modified z-score vs its type's
+    // median/MAD (NULL for zero-MAD keys); unrounded order statistics
+    Query("q125_robust_scale", (s, dir) =>
+      ext.Outliers.robustScale(
+        Tables.load(s, dir, "events")
+          .select(col("event_id"), col("event_type"), col("value")),
+        "event_type", "event_id", "value")
+        .orderBy("event_id"),
+      // q90's med/MAD machinery without the cut; same left-assoc mz form
       s"""WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
              FROM events GROUP BY event_type),
          d AS (SELECT e.event_type, e.event_id, e.value, m.med
@@ -621,12 +418,18 @@ object QueriesEval {
          SELECT d.event_type, d.event_id, d.value,
            CASE WHEN s.mad > 0
              THEN 0.6745 * (d.value - d.med) / s.mad END AS mz
-         FROM d JOIN s USING (event_type) ORDER BY d.event_id""",
+         FROM d JOIN s USING (event_type) ORDER BY d.event_id"""),
 
 
-    // mid-rank ecdf bins — exact 0.5-multiple arithmetic, NO interpolated
-    // thresholds (those flip tie-groups on 1-ulp cut divergence)
-    "q126_discretize" ->
+    // ext: equal-frequency discretization — event values into 8
+    // value-threshold bins at exact k/8 percentiles
+    Query("q126_discretize", (s, dir) =>
+      ext.Outliers.discretize(
+        Tables.load(s, dir, "events").select(col("event_id"), col("value")),
+        "value", 8)
+        .orderBy("event_id"),
+      // mid-rank ecdf bins — exact 0.5-multiple arithmetic, NO interpolated
+      // thresholds (those flip tie-groups on 1-ulp cut divergence)
       s"""WITH per AS (SELECT value AS v, CAST(count(*) AS BIGINT) AS n
              FROM events GROUP BY value),
          tot AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM per),
@@ -642,13 +445,31 @@ object QueriesEval {
          SELECT e.event_id, e.value,
            least(CAST(floor(p * 8) AS INT), 7) AS bin
          FROM events e JOIN pct ON pct.v = e.value
-         ORDER BY e.event_id""",
+         ORDER BY e.event_id"""),
 
 
-    // Fleiss over three deterministic raters: the q99 NB pred, the q120
-    // quality gate, and an n_chars >= 300 length gate; all-integer
-    // counts into the final ratios
-    "q150_fleiss_kappa" ->
+    // ext: Fleiss' kappa across THREE quality raters (NB gate, heuristic
+    // quality gate, length gate) — the n-rater agreement audit; ratings
+    // collapse map-side to per-item counts. One NB training pass, then
+    // ONE shared corpus scan emits all three votes as columns (the NB
+    // score is a narrow codegen lookup against the driver model —
+    // nbScore ≡ nbQualityScore on the training corpus, suite-pinned),
+    // unpivoted to long form: r9 paid three independent scans plus the
+    // NB join shape for the same ratings (judge note, VERDICT r9 #3)
+    Query("q150_fleiss_kappa", (s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
+      val wide = base.select(col("doc_id"),
+        when(ext.TextAnalysis.nbScoreTokens(
+          nbModelOnTokens(base), col("toks")) > 0, 1).otherwise(0).as("nb"),
+        when(col("qs") >= 0.5, 1).otherwise(0).as("gate"),
+        when(col("n_chars") >= 300, 1).otherwise(0).as("len"))
+      val long = wide.unpivot(Array(col("doc_id")),
+        Array(col("nb"), col("gate"), col("len")), "rater", "vote")
+      ext.Eval.fleissKappa(long, "doc_id", "rater", "vote")
+    },
+      // Fleiss over three deterministic raters: the q99 NB pred, the q120
+      // quality gate, and an n_chars >= 300 length gate; all-integer
+      // counts into the final ratios
       s"""$QualityCtesSql,
          nb AS ($NbScoredSql),
          votes AS (
@@ -685,12 +506,20 @@ object QueriesEval {
            round(p_e, 6) AS p_e,
            round(CASE WHEN p_e < 1.0
              THEN (p_bar - p_e) / (1.0 - p_e) END, 6) AS kappa
-         FROM g, pe""",
+         FROM g, pe"""),
 
 
-    // Murphy decomposition over the q122 sigmoid bins; every divisor is
-    // a bin count >= 1, the global ratios replay Spark's exact shapes
-    "q151_brier" ->
+    // ext: Brier score + Murphy decomposition of the q99 NB gate — the
+    // scalar probability audit next to q122's per-bin reliability view
+    Query("q151_brier", (s, dir) => scoped { sc =>
+      val base = sc.pin(raterBase(s, dir))
+      val scored = ext.TextAnalysis.nbQualityScoreTokens(base, "doc_id")
+        .join(base.select(col("doc_id"),
+          when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
+      ext.Eval.brierDecomposition(scored, "score", "label")
+    },
+      // Murphy decomposition over the q122 sigmoid bins; every divisor is
+      // a bin count >= 1, the global ratios replay Spark's exact shapes
       s"""WITH scored AS ($NbScoredSql),
          pb AS (SELECT round(1.0 / (1.0 + exp(-score)), 6) AS p,
                   CAST(pos AS DOUBLE) AS y
@@ -719,12 +548,30 @@ object QueriesEval {
            round(trel / CAST(n AS DOUBLE), 6) AS reliability,
            round(tres / CAST(n AS DOUBLE), 6) AS resolution,
            round(ybar * (1.0 - ybar), 6) AS uncertainty
-         FROM dec""",
+         FROM dec"""),
 
 
-    // nominal-metric alpha over pairable items only (HAVING r > 1);
-    // canonical D_o/D_e normalization, shapes replayed exactly
-    "q157_krippendorff" ->
+    // ext: Krippendorff's alpha with an ABSTAINING rater (the length
+    // gate only votes outside n_chars [250,350]) — agreement that
+    // tolerates missing ratings, unlike q150's Fleiss
+    Query("q157_krippendorff", (s, dir) => scoped { sc =>
+      // q150's shared-scan shape; the abstaining len rater emits NULL
+      // inside [250,350] and the unpivoted row is dropped (abstention =
+      // absent rating)
+      val base = sc.pin(raterBase(s, dir))
+      val wide = base.select(col("doc_id"),
+        when(ext.TextAnalysis.nbScoreTokens(
+          nbModelOnTokens(base), col("toks")) > 0, 1).otherwise(0).as("nb"),
+        when(col("qs") >= 0.5, 1).otherwise(0).as("gate"),
+        when(col("n_chars") < 250 || col("n_chars") > 350,
+          when(col("n_chars") >= 300, 1).otherwise(0)).as("len"))
+      val long = wide.unpivot(Array(col("doc_id")),
+        Array(col("nb"), col("gate"), col("len")), "rater", "vote")
+        .filter(col("vote").isNotNull)
+      ext.Eval.krippendorffAlpha(long, "doc_id", "rater", "vote")
+    },
+      // nominal-metric alpha over pairable items only (HAVING r > 1);
+      // canonical D_o/D_e normalization, shapes replayed exactly
       s"""$QualityCtesSql,
          nb AS ($NbScoredSql),
          votes AS (
@@ -763,12 +610,23 @@ object QueriesEval {
            round(d_o_raw, 6) AS d_o, round(d_e_raw, 6) AS d_e,
            round(CASE WHEN d_e_raw > 0
              THEN 1.0 - d_o_raw / d_e_raw END, 6) AS alpha
-         FROM fin""",
+         FROM fin"""),
 
 
-    // mid-rank per-source percentile → min global value covering it;
-    // every float is an identical integer division or a data value
-    "q158_quantile_norm" ->
+    // ext: cross-source quantile normalization — each doc's quality maps
+    // to the GLOBAL value at its within-source percentile (exact data
+    // values, no interpolated cuts)
+    Query("q158_quantile_norm", (s, dir) => scoped { sc =>
+      // quantileNormalize reads its input three times (per-group ranks,
+      // global ranks, final join) — pin the regex-scored projection
+      val scored = sc.pin(Tables.load(s, dir, "documents").select(
+        col("doc_id"), col("source"),
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
+      ext.Eval.quantileNormalize(scored, "source", "q")
+        .select(col("doc_id"), col("source"), col("q"), col("norm"))
+    }.orderBy("doc_id"),
+      // mid-rank per-source percentile → min global value covering it;
+      // every float is an identical integer division or a data value
       s"""$QualityCtesSql,
          sc AS (SELECT doc_id, source, $QualityValSql AS q FROM s),
          pg AS (SELECT source, q, CAST(count(*) AS BIGINT) AS n
@@ -794,12 +652,20 @@ object QueriesEval {
                 GROUP BY gp.source, gp.q)
          SELECT sc.doc_id, sc.source, sc.q, mp.norm
          FROM sc JOIN mp USING (source, q)
-         ORDER BY sc.doc_id""",
+         ORDER BY sc.doc_id"""),
 
 
-    // mid-rank tables per signal, exact quarter-multiple moment sums —
-    // rho crosses engines unrounded
-    "q160_spearman" ->
+    // ext: Spearman rank correlation between the quality and
+    // mean-word-length signals — the monotone-agreement audit before
+    // blending; exact 0.5-multiple ranks, unrounded rho
+    Query("q160_spearman", (s, dir) => {
+      val scored = Tables.load(s, dir, "documents").select(
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
+        round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"))
+      ext.Eval.spearman(scored, "q", "mwl")
+    },
+      // mid-rank tables per signal, exact quarter-multiple moment sums —
+      // rho crosses engines unrounded
       s"""WITH t AS (
            SELECT doc_id, source, text, $ToksSql AS toks,
              CASE WHEN len(trim(text)) = 0 THEN 0
@@ -842,98 +708,19 @@ object QueriesEval {
            THEN (CAST(n AS DOUBLE) * sab - sa * sb)
              / sqrt((CAST(n AS DOUBLE) * saa - sa * sa)
                 * (CAST(n AS DOUBLE) * sbb - sb * sb)) END AS rho
-         FROM m""",
+         FROM m"""),
 
 
-    // Poisson(1) weights from the same md5 bucket space + thresholds the
-    // Spark side interpolates; fixed order-statistic CI convention
-    // the q165 replicate machinery over per-user deltas: 6dp-rounded
-    // per-side means, delta = b - a, Poisson weights keyed by
-    // ('pboot', rep, user_id) so whole users reweight together
-    "q208_paired_bootstrap" -> {
-      val th = ext.Eval.PoissonThresholds
-      val bucket =
-        """CAST(CAST(concat('0x', substr(md5(concat('pboot:',
-           CAST(rep AS VARCHAR), ':', CAST(user_id AS VARCHAR))), 1, 15))
-           AS UBIGINT) AS BIGINT)"""
-      val caseW = th.zipWithIndex
-        .map { case (t, k) => s"WHEN $bucket < $t THEN $k" }
-        .mkString("CASE ", " ", s" ELSE ${th.size} END")
-      s"""WITH a AS (SELECT user_id, round(avg(value), 6) AS a
-             FROM events WHERE event_type = 'view' GROUP BY user_id),
-         b AS (SELECT user_id, round(avg(value), 6) AS b
-               FROM events WHERE event_type = 'click' GROUP BY user_id),
-         d AS (SELECT a.user_id, b.b - a.a AS x
-               FROM a JOIN b USING (user_id)),
-         ex AS (SELECT user_id, x, unnest(generate_series(0, 39)) AS rep
-                FROM d),
-         wb AS (SELECT rep, x, $caseW AS w FROM ex),
-         pr AS (SELECT rep,
-                  CASE WHEN sum(w) > 0
-                    THEN sum(w * x) / CAST(sum(w) AS DOUBLE) END AS m
-                FROM wb GROUP BY rep),
-         rk AS (SELECT m, row_number() OVER (ORDER BY m ASC) AS rn
-                FROM pr WHERE m IS NOT NULL),
-         ci AS (SELECT round(min(CASE WHEN rn = 1 THEN m END), 6) AS lo,
-                  round(min(CASE WHEN rn = 39 THEN m END), 6) AS hi
-                FROM rk)
-         SELECT (SELECT CAST(count(*) AS BIGINT) FROM d) AS n,
-           round((SELECT avg(x) FROM d), 6) AS mean_delta,
-           lo AS ci_lo, hi AS ci_hi,
-           CASE WHEN lo > 0 THEN 1 ELSE 0 END AS b_better,
-           CASE WHEN hi < 0 THEN 1 ELSE 0 END AS a_better,
-           CASE WHEN lo > 0 OR hi < 0 THEN 1 ELSE 0 END AS significant
-         FROM ci"""
-    },
-
-    // q208's machinery with the cohort in every grouping (replicate
-    // means, rank window, order-statistic indices — all per cohort)
-    "q209_paired_bootstrap_by" -> {
-      val th = ext.Eval.PoissonThresholds
-      val bucket =
-        """CAST(CAST(concat('0x', substr(md5(concat('pboot:',
-           CAST(rep AS VARCHAR), ':', CAST(user_id AS VARCHAR))), 1, 15))
-           AS UBIGINT) AS BIGINT)"""
-      val caseW = th.zipWithIndex
-        .map { case (t, k) => s"WHEN $bucket < $t THEN $k" }
-        .mkString("CASE ", " ", s" ELSE ${th.size} END")
-      s"""WITH a AS (SELECT user_id, round(avg(value), 6) AS a
-             FROM events WHERE event_type = 'view' GROUP BY user_id),
-         b AS (SELECT user_id, round(avg(value), 6) AS b
-               FROM events WHERE event_type = 'click' GROUP BY user_id),
-         d AS (SELECT a.user_id,
-                 CAST(a.user_id % 4 AS VARCHAR) AS cohort,
-                 b.b - a.a AS x
-               FROM a JOIN b USING (user_id)),
-         ex AS (SELECT user_id, cohort, x,
-                  unnest(generate_series(0, 39)) AS rep
-                FROM d),
-         wb AS (SELECT cohort, rep, x, $caseW AS w FROM ex),
-         pr AS (SELECT cohort, rep,
-                  CASE WHEN sum(w) > 0
-                    THEN sum(w * x) / CAST(sum(w) AS DOUBLE) END AS m
-                FROM wb GROUP BY cohort, rep),
-         rk AS (SELECT cohort, m,
-                  row_number() OVER (PARTITION BY cohort
-                    ORDER BY m ASC) AS rn
-                FROM pr WHERE m IS NOT NULL),
-         ci AS (SELECT cohort,
-                  round(min(CASE WHEN rn = 1 THEN m END), 6) AS lo,
-                  round(min(CASE WHEN rn = 39 THEN m END), 6) AS hi
-                FROM rk GROUP BY cohort),
-         st AS (SELECT cohort, CAST(count(*) AS BIGINT) AS n,
-                  round(avg(x), 6) AS mean_delta
-                FROM d GROUP BY cohort)
-         SELECT st.cohort, st.n, st.mean_delta,
-           ci.lo AS ci_lo, ci.hi AS ci_hi,
-           CASE WHEN ci.lo > 0 THEN 1 ELSE 0 END AS b_better,
-           CASE WHEN ci.hi < 0 THEN 1 ELSE 0 END AS a_better,
-           CASE WHEN ci.lo > 0 OR ci.hi < 0 THEN 1 ELSE 0 END
-             AS significant
-         FROM st JOIN ci USING (cohort) ORDER BY st.cohort"""
-    },
-
-    "q165_bootstrap_ci" -> {
+    // ext: deterministic Poisson-bootstrap CI on the mean quality score —
+    // error bars without resampling passes, one scan ×40 hash weights
+    Query("q165_bootstrap_ci", (s, dir) => scoped { sc =>
+      // bootstrapCI reads its input twice (replicate branch + the n/mean
+      // aggregate) — pin the regex-scored projection
+      val scored = sc.pin(Tables.load(s, dir, "documents").select(
+        col("doc_id"),
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
+      ext.Eval.bootstrapCI(scored, "doc_id", "q")
+    }, {
       val th = ext.Eval.PoissonThresholds
       val bucket =
         """CAST(CAST(concat('0x', substr(md5(concat('boot:',
@@ -959,12 +746,15 @@ object QueriesEval {
            round((SELECT avg(x) FROM sc), 6) AS mean,
            round(lo, 6) AS ci_lo, round(hi, 6) AS ci_hi
          FROM ci"""
-    },
+    }),
 
 
-    // exact integer max-share/gini ratios, ln-shape entropy (see
-    // Eval.skewReport); keys sort by (count, key) for the Gini rank
-    "q166_skew_report" ->
+    // ext: key-skew report on the events user key — the pre-join
+    // diagnostic that picks plain vs broadcast vs salted (q141) joins
+    Query("q166_skew_report", (s, dir) =>
+      ext.Eval.skewReport(Tables.load(s, dir, "events"), "user_id"),
+      // exact integer max-share/gini ratios, ln-shape entropy (see
+      // Eval.skewReport); keys sort by (count, key) for the Gini rank
       """WITH per AS (SELECT CAST(user_id AS VARCHAR) AS k,
              CAST(count(*) AS BIGINT) AS c
            FROM events GROUP BY 1),
@@ -986,11 +776,19 @@ object QueriesEval {
              AS entropy,
            CAST(gsum - keys * n AS DOUBLE) / CAST(keys * n AS DOUBLE)
              AS gini
-         FROM ag""",
+         FROM ag"""),
 
 
-    // ECDF-decile joint/marginal counts; one fixed MI/entropy shape
-    "q170_mutual_info" ->
+    // ext: mutual information between the quality and mean-word-length
+    // signals over ECDF-decile bins — the nonlinear-redundancy audit
+    // next to q160's monotone one
+    Query("q170_mutual_info", (s, dir) => {
+      val scored = Tables.load(s, dir, "documents").select(
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
+        round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"))
+      ext.Eval.mutualInfo(scored, "q", "mwl")
+    },
+      // ECDF-decile joint/marginal counts; one fixed MI/entropy shape
       s"""WITH t AS (
            SELECT doc_id, source, text, $ToksSql AS toks,
              CASE WHEN len(trim(text)) = 0 THEN 0
@@ -1057,11 +855,137 @@ object QueriesEval {
                  - sa / CAST(n AS DOUBLE))
                * (ln(CAST(n AS DOUBLE)) - sb / CAST(n AS DOUBLE))) END,
              6) AS nmi
-         FROM nn, mi, sa2, sb2""",
+         FROM nn, mi, sa2, sb2"""),
 
 
-    // the q165 machinery with every stage keyed on source
-    "q174_bootstrap_by_source" -> {
+    // ext: PAIRED bootstrap significance — per-user click-vs-view mean
+    // value deltas ("do clicks really carry higher value than views for
+    // the same user?"); whole users reweight per replicate, so the
+    // per-user correlation cancels — the A/B readout a pair of
+    // independent CIs gets wrong
+    Query("q208_paired_bootstrap", (s, dir) => {
+      val ev = Tables.load(s, dir, "events")
+      val a = ev.filter(col("event_type") === "view")
+        .groupBy(col("user_id"))
+        .agg(round(avg(col("value")), 6).as("a"))
+      val b = ev.filter(col("event_type") === "click")
+        .groupBy(col("user_id"))
+        .agg(round(avg(col("value")), 6).as("b"))
+      ext.Eval.pairedBootstrapTest(a.join(b, "user_id"), "user_id",
+        "a", "b")
+    }, {
+      // Poisson(1) weights from the same md5 bucket space + thresholds the
+      // Spark side interpolates; fixed order-statistic CI convention
+      // the q165 replicate machinery over per-user deltas: 6dp-rounded
+      // per-side means, delta = b - a, Poisson weights keyed by
+      // ('pboot', rep, user_id) so whole users reweight together
+      val th = ext.Eval.PoissonThresholds
+      val bucket =
+        """CAST(CAST(concat('0x', substr(md5(concat('pboot:',
+           CAST(rep AS VARCHAR), ':', CAST(user_id AS VARCHAR))), 1, 15))
+           AS UBIGINT) AS BIGINT)"""
+      val caseW = th.zipWithIndex
+        .map { case (t, k) => s"WHEN $bucket < $t THEN $k" }
+        .mkString("CASE ", " ", s" ELSE ${th.size} END")
+      s"""WITH a AS (SELECT user_id, round(avg(value), 6) AS a
+             FROM events WHERE event_type = 'view' GROUP BY user_id),
+         b AS (SELECT user_id, round(avg(value), 6) AS b
+               FROM events WHERE event_type = 'click' GROUP BY user_id),
+         d AS (SELECT a.user_id, b.b - a.a AS x
+               FROM a JOIN b USING (user_id)),
+         ex AS (SELECT user_id, x, unnest(generate_series(0, 39)) AS rep
+                FROM d),
+         wb AS (SELECT rep, x, $caseW AS w FROM ex),
+         pr AS (SELECT rep,
+                  CASE WHEN sum(w) > 0
+                    THEN sum(w * x) / CAST(sum(w) AS DOUBLE) END AS m
+                FROM wb GROUP BY rep),
+         rk AS (SELECT m, row_number() OVER (ORDER BY m ASC) AS rn
+                FROM pr WHERE m IS NOT NULL),
+         ci AS (SELECT round(min(CASE WHEN rn = 1 THEN m END), 6) AS lo,
+                  round(min(CASE WHEN rn = 39 THEN m END), 6) AS hi
+                FROM rk)
+         SELECT (SELECT CAST(count(*) AS BIGINT) FROM d) AS n,
+           round((SELECT avg(x) FROM d), 6) AS mean_delta,
+           lo AS ci_lo, hi AS ci_hi,
+           CASE WHEN lo > 0 THEN 1 ELSE 0 END AS b_better,
+           CASE WHEN hi < 0 THEN 1 ELSE 0 END AS a_better,
+           CASE WHEN lo > 0 OR hi < 0 THEN 1 ELSE 0 END AS significant
+         FROM ci"""
+    }),
+
+    // ext: the paired test PER COHORT — "which user cohort's
+    // click-vs-view delta is real"; one grouped replicate aggregation,
+    // same deterministic weights per (rep, user)
+    Query("q209_paired_bootstrap_by", (s, dir) => {
+      val ev = Tables.load(s, dir, "events")
+      val a = ev.filter(col("event_type") === "view")
+        .groupBy(col("user_id"))
+        .agg(round(avg(col("value")), 6).as("a"))
+      val b = ev.filter(col("event_type") === "click")
+        .groupBy(col("user_id"))
+        .agg(round(avg(col("value")), 6).as("b"))
+      ext.Eval.pairedBootstrapTestBy(
+        a.join(b, "user_id")
+          .withColumn("cohort", (col("user_id") % 4).cast("string")),
+        "cohort", "user_id", "a", "b").orderBy("cohort")
+    }, {
+      // q208's machinery with the cohort in every grouping (replicate
+      // means, rank window, order-statistic indices — all per cohort)
+      val th = ext.Eval.PoissonThresholds
+      val bucket =
+        """CAST(CAST(concat('0x', substr(md5(concat('pboot:',
+           CAST(rep AS VARCHAR), ':', CAST(user_id AS VARCHAR))), 1, 15))
+           AS UBIGINT) AS BIGINT)"""
+      val caseW = th.zipWithIndex
+        .map { case (t, k) => s"WHEN $bucket < $t THEN $k" }
+        .mkString("CASE ", " ", s" ELSE ${th.size} END")
+      s"""WITH a AS (SELECT user_id, round(avg(value), 6) AS a
+             FROM events WHERE event_type = 'view' GROUP BY user_id),
+         b AS (SELECT user_id, round(avg(value), 6) AS b
+               FROM events WHERE event_type = 'click' GROUP BY user_id),
+         d AS (SELECT a.user_id,
+                 CAST(a.user_id % 4 AS VARCHAR) AS cohort,
+                 b.b - a.a AS x
+               FROM a JOIN b USING (user_id)),
+         ex AS (SELECT user_id, cohort, x,
+                  unnest(generate_series(0, 39)) AS rep
+                FROM d),
+         wb AS (SELECT cohort, rep, x, $caseW AS w FROM ex),
+         pr AS (SELECT cohort, rep,
+                  CASE WHEN sum(w) > 0
+                    THEN sum(w * x) / CAST(sum(w) AS DOUBLE) END AS m
+                FROM wb GROUP BY cohort, rep),
+         rk AS (SELECT cohort, m,
+                  row_number() OVER (PARTITION BY cohort
+                    ORDER BY m ASC) AS rn
+                FROM pr WHERE m IS NOT NULL),
+         ci AS (SELECT cohort,
+                  round(min(CASE WHEN rn = 1 THEN m END), 6) AS lo,
+                  round(min(CASE WHEN rn = 39 THEN m END), 6) AS hi
+                FROM rk GROUP BY cohort),
+         st AS (SELECT cohort, CAST(count(*) AS BIGINT) AS n,
+                  round(avg(x), 6) AS mean_delta
+                FROM d GROUP BY cohort)
+         SELECT st.cohort, st.n, st.mean_delta,
+           ci.lo AS ci_lo, ci.hi AS ci_hi,
+           CASE WHEN ci.lo > 0 THEN 1 ELSE 0 END AS b_better,
+           CASE WHEN ci.hi < 0 THEN 1 ELSE 0 END AS a_better,
+           CASE WHEN ci.lo > 0 OR ci.hi < 0 THEN 1 ELSE 0 END
+             AS significant
+         FROM st JOIN ci USING (cohort) ORDER BY st.cohort"""
+    }),
+
+    // ext: per-source bootstrap CI on mean quality — q165 sliced by
+    // source; "are these two sources' qualities really different?"
+    Query("q174_bootstrap_by_source", (s, dir) => scoped { sc =>
+      val scored = sc.pin(Tables.load(s, dir, "documents").select(
+        col("doc_id"), col("source"),
+        round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
+      ext.Eval.bootstrapCIBy(scored, "source", "doc_id", "q")
+        .orderBy("source")
+    }, {
+      // the q165 machinery with every stage keyed on source
       val th = ext.Eval.PoissonThresholds
       val bucket =
         """CAST(CAST(concat('0x', substr(md5(concat('boot:',
@@ -1095,6 +1019,6 @@ object QueriesEval {
            round(ci.lo, 6) AS ci_lo, round(ci.hi, 6) AS ci_hi
          FROM mg JOIN ci ON ci.source = mg.source
          ORDER BY mg.source"""
-    },
+    }),
   )
 }

@@ -11,18 +11,15 @@ import graft.QueryShared._
 
 /** Query registry — LLM pipeline: PageRank, label propagation, triangles, multi-source BFS.
   *
-  * Entries (and their DuckDB oracle SQL beside them) moved verbatim from
-  * SparkEntry in the r12 per-family split; [[SparkEntry.queries]] is the
-  * dispatcher that concatenates the families. Shared fixtures/helpers and
-  * oracle SQL fragments live in [[QueryShared]]. */
+  * Each entry is one [[Query]]; shared fixtures and oracle fragments live in [[QueryShared]]. */
 object QueriesGraph {
 
-  private[graft] val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] val queries: Seq[Query] = Seq(
 
     // ext: PageRank over the symmetrized q21 near-dup graph — template
     // hubs rank high; 5 damped power-iteration rounds, each one
     // edges⋈rank join + map-side contribution sum
-    "q139_pagerank" -> ((s, dir) => {
+    Query("q139_pagerank", (s, dir) => {
       val pairs = ext.Dedup.minhashLsh(Tables.load(s, dir, "documents"),
         "text", "doc_id", numHashes = 16, bands = 4, minJaccard = 0.3)
       val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -30,61 +27,11 @@ object QueriesGraph {
       ext.Graph.pageRank(edges, "src", "dst", 5)
         .select(col("node").as("doc_id"), round(col("pr"), 6).as("pr"))
         .orderBy("doc_id")
-    }),
-
-
-    // ext: label propagation over the near-dup graph — every 5th doc
-    // seeds its lang; plurality vote per round, seeds clamped; exact
-    // integer arithmetic (no float grain at all)
-    "q142_label_prop" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val pairs = ext.Dedup.minhashLsh(docs, "text", "doc_id",
-        numHashes = 16, bands = 4, minJaccard = 0.3)
-      val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      val seeds = docs.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("lang"))
-      ext.Graph.labelPropagation(edges, seeds, "src", "dst",
-        "doc_id", "lang", 5)
-        .select(col("node").as("doc_id"), col("label"))
-        .orderBy("doc_id")
-    }),
-
-
-    // ext: per-node triangle counts over the near-dup graph — dense
-    // duplication cliques vs bridging hubs; oriented-wedge join (i<j<k)
-    "q148_triangles" -> ((s, dir) => {
-      val pairs = ext.Dedup.minhashLsh(Tables.load(s, dir, "documents"),
-        "text", "doc_id", numHashes = 16, bands = 4, minJaccard = 0.3)
-      ext.Graph.triangleCount(pairs, "id_a", "id_b")
-        .select(col("node").as("doc_id"), col("triangles"))
-        .orderBy("doc_id")
-    }),
-
-
-    // ext: multi-source BFS over the near-dup graph — hop distance from
-    // every 50th doc as the trusted seed set ("k hops from known-good");
-    // frontier rounds, NULL = unreached within 5
-    "q152_bfs_hops" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val pairs = ext.Dedup.minhashLsh(docs, "text", "doc_id",
-        numHashes = 16, bands = 4, minJaccard = 0.3)
-      val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      val seeds = docs.filter(col("doc_id") % 50 === 0).select(col("doc_id"))
-      ext.Graph.bfsHops(edges, seeds, "src", "dst", "doc_id", 5)
-        .select(col("node").as("doc_id"), col("hops"))
-        .orderBy("doc_id")
-    }),
-  )
-
-  private[graft] val oracleSql: Map[String, String] = Map(
-
-    // 5 generated MATERIALIZED power-iteration rounds over the q21 pair
-    // CTEs; per-round: dangling-mass scalar (left-join null test = the
-    // anti-join), contribution sum, rank refresh — the damping factor
-    // contracts the sum-order float divergence every round
-    "q139_pagerank" -> {
+    }, {
+      // 5 generated MATERIALIZED power-iteration rounds over the q21 pair
+      // CTEs; per-round: dangling-mass scalar (left-join null test = the
+      // anti-join), contribution sum, rank refresh — the damping factor
+      // contracts the sum-order float divergence every round
       val (damping, iters) = (0.85, 5)
       val resid = 1.0 - damping
       val rounds = (1 to iters).map { i =>
@@ -115,12 +62,27 @@ object QueriesGraph {
          $rounds
          SELECT node AS doc_id, round(pr, 6) AS pr FROM pr$iters
          ORDER BY doc_id"""
-    },
+    }),
 
 
-    // 5 generated MATERIALIZED plurality-vote rounds over the q21 pair
-    // CTEs; all-integer — no rounding grain anywhere
-    "q142_label_prop" -> {
+    // ext: label propagation over the near-dup graph — every 5th doc
+    // seeds its lang; plurality vote per round, seeds clamped; exact
+    // integer arithmetic (no float grain at all)
+    Query("q142_label_prop", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val pairs = ext.Dedup.minhashLsh(docs, "text", "doc_id",
+        numHashes = 16, bands = 4, minJaccard = 0.3)
+      val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      val seeds = docs.filter(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("lang"))
+      ext.Graph.labelPropagation(edges, seeds, "src", "dst",
+        "doc_id", "lang", 5)
+        .select(col("node").as("doc_id"), col("label"))
+        .orderBy("doc_id")
+    }, {
+      // 5 generated MATERIALIZED plurality-vote rounds over the q21 pair
+      // CTEs; all-integer — no rounding grain anywhere
       val iters = 5
       val rounds = (1 to iters).map { i =>
         s"""v$i AS MATERIALIZED (SELECT e.dst AS node, l.label,
@@ -148,12 +110,20 @@ object QueriesGraph {
            FROM nd LEFT JOIN sd ON sd.node = nd.node),
          $rounds
          SELECT node AS doc_id, label FROM lb$iters ORDER BY doc_id"""
+    }),
+
+
+    // ext: per-node triangle counts over the near-dup graph — dense
+    // duplication cliques vs bridging hubs; oriented-wedge join (i<j<k)
+    Query("q148_triangles", (s, dir) => {
+      val pairs = ext.Dedup.minhashLsh(Tables.load(s, dir, "documents"),
+        "text", "doc_id", numHashes = 16, bands = 4, minJaccard = 0.3)
+      ext.Graph.triangleCount(pairs, "id_a", "id_b")
+        .select(col("node").as("doc_id"), col("triangles"))
+        .orderBy("doc_id")
     },
-
-
-    // oriented-wedge triangle count over the q21 pairs (already lo<hi
-    // and distinct); all-integer
-    "q148_triangles" ->
+      // oriented-wedge triangle count over the q21 pairs (already lo<hi
+      // and distinct); all-integer
       s"""$MinhashPairsSql,
          und AS MATERIALIZED (SELECT id_a AS lo, id_b AS hi FROM j
            WHERE jaccard >= 0.3),
@@ -170,12 +140,25 @@ object QueriesGraph {
                 GROUP BY node)
          SELECT nd.node AS doc_id, coalesce(pn.t, 0) AS triangles
          FROM nd LEFT JOIN pn ON pn.node = nd.node
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
 
-    // 5 generated MATERIALIZED min-propagation rounds ≡ BFS settled set
-    // after 5 frontiers; all-integer
-    "q152_bfs_hops" -> {
+    // ext: multi-source BFS over the near-dup graph — hop distance from
+    // every 50th doc as the trusted seed set ("k hops from known-good");
+    // frontier rounds, NULL = unreached within 5
+    Query("q152_bfs_hops", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val pairs = ext.Dedup.minhashLsh(docs, "text", "doc_id",
+        numHashes = 16, bands = 4, minJaccard = 0.3)
+      val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      val seeds = docs.filter(col("doc_id") % 50 === 0).select(col("doc_id"))
+      ext.Graph.bfsHops(edges, seeds, "src", "dst", "doc_id", 5)
+        .select(col("node").as("doc_id"), col("hops"))
+        .orderBy("doc_id")
+    }, {
+      // 5 generated MATERIALIZED min-propagation rounds ≡ BFS settled set
+      // after 5 frontiers; all-integer
       val rounds = (1 to 5).map { i =>
         s"""d$i AS MATERIALIZED (SELECT node, min(d) AS d FROM (
              SELECT node, d FROM d${i - 1}
@@ -199,6 +182,6 @@ object QueriesGraph {
          SELECT nd.node AS doc_id, CAST(d5.d AS INT) AS hops
          FROM nd LEFT JOIN d5 ON d5.node = nd.node
          ORDER BY doc_id"""
-    },
+    }),
   )
 }

@@ -11,37 +11,21 @@ import graft.QueryShared._
 
 /** Query registry — end-to-end corpus curation compositions.
   *
-  * Entries (and their DuckDB oracle SQL beside them) moved verbatim from
-  * SparkEntry in the r12 per-family split; [[SparkEntry.queries]] is the
-  * dispatcher that concatenates the families. Shared fixtures/helpers and
-  * oracle SQL fragments live in [[QueryShared]]. */
+  * Each entry is one [[Query]]; shared fixtures and oracle fragments live in [[QueryShared]]. */
 object QueriesPipeline {
 
-  private[graft] val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] val queries: Seq[Query] = Seq(
 
     // pipeline: end-to-end corpus curation (near-dup canonical filter →
     // langid/quality/token features → quality gate)
     // no spread on the input (r14, paired probe: +0.67 s with it — the
     // curation win is the feature-table pin in curateBody, not extra
     // scan parallelism)
-    "q46_corpus_curate" -> ((s, dir) =>
+    Query("q46_corpus_curate", (s, dir) =>
       pipeline.CorpusCuration.curate(Tables.load(s, dir, "documents"))
-        .orderBy("doc_id")),
-
-
-    // pipeline: quality-aware curation — q46's pipeline keeping the BEST
-    // member per near-dup cluster instead of the min-id one
-    "q180_curate_keep_best" -> ((s, dir) =>
-      pipeline.CorpusCuration.curateKeepBest(
-        Tables.load(s, dir, "documents"))
-        .orderBy("doc_id")),
-  )
-
-  private[graft] val oracleSql: Map[String, String] = Map(
-
-    // composed from the tested q21/q43/q17/q18 fragments: near-dup
-    // canonical filter (recursive closure), then features + quality gate
-    "q46_corpus_curate" ->
+        .orderBy("doc_id"),
+      // composed from the tested q21/q43/q17/q18 fragments: near-dup
+      // canonical filter (recursive closure), then features + quality gate
       s"""WITH RECURSIVE pairs AS (
            $MinhashPairsSql
            SELECT id_a, id_b FROM j WHERE jaccard >= 0.3),
@@ -69,11 +53,16 @@ object QueriesPipeline {
                  CAST(tok_cnt AS BIGINT) AS tok_cnt
                FROM s)
          SELECT doc_id, lang_id, quality, tok_cnt FROM f
-         WHERE quality >= 0.55 ORDER BY doc_id""",
+         WHERE quality >= 0.55 ORDER BY doc_id"""),
 
 
-    // q46's composed chain with the q154 argmax replacing min-id
-    "q180_curate_keep_best" ->
+    // pipeline: quality-aware curation — q46's pipeline keeping the BEST
+    // member per near-dup cluster instead of the min-id one
+    Query("q180_curate_keep_best", (s, dir) =>
+      pipeline.CorpusCuration.curateKeepBest(
+        Tables.load(s, dir, "documents"))
+        .orderBy("doc_id"),
+      // q46's composed chain with the q154 argmax replacing min-id
       s"""WITH RECURSIVE pairs AS (
            $MinhashPairsSql
            SELECT id_a, id_b FROM j WHERE jaccard >= 0.3),
@@ -112,6 +101,6 @@ object QueriesPipeline {
                  CAST(tok_cnt AS BIGINT) AS tok_cnt
                FROM s2)
          SELECT doc_id, lang_id, quality, tok_cnt FROM f
-         WHERE quality >= 0.55 ORDER BY doc_id""",
+         WHERE quality >= 0.55 ORDER BY doc_id"""),
   )
 }

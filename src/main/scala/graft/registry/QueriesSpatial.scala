@@ -11,130 +11,26 @@ import graft.QueryShared._
 
 /** Query registry — §2.5 — grids, region flags, depletion, elevation, shells, meshes.
   *
-  * Entries (and their DuckDB oracle SQL beside them) moved verbatim from
-  * SparkEntry in the r12 per-family split; [[SparkEntry.queries]] is the
-  * dispatcher that concatenates the families. Shared fixtures/helpers and
-  * oracle SQL fragments live in [[QueryShared]]. */
+  * Each entry is one [[Query]]; shared fixtures and oracle fragments live in [[QueryShared]]. */
 object QueriesSpatial {
 
-  private[graft] val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] val queries: Seq[Query] = Seq(
 
     // §2.5 grid synthesis from schema + per-cell volume (pure arithmetic,
     // shuffle-free)
-    "q11_grid_generate" -> ((s, _) =>
+    Query("q11_grid_generate", (s, _) =>
       GridOps.cellsVolume(GridOps.generate(s, G), G)
         .select("id", "i", "j", "k", "x", "y", "z", "volume")
-        .orderBy("id")),
+        .orderBy("id"),
+      s"""WITH $GridSql
+         SELECT id, i, j, k, x, y, z, 1000.0 AS volume FROM g ORDER BY id"""),
 
 
     // §2.5 point-in-solid region flagging (broadcast BVH ray-parity kernel,
     // last mesh wins, '' default)
-    "q12_flag_regions" -> ((s, _) =>
+    Query("q12_flag_regions", (s, _) =>
       FlagRegions(s, GridOps.generate(s, G), Seq(Region2, Region3))
-        .select("id", "region").orderBy("id")),
-
-
-    // §2.5 mine-up/mine-down depletion fractions (vertical-ray surface
-    // elevation vs analytic plane algebra)
-    "q13_mine_deplete" -> ((s, _) =>
-      MineDepletion(s, GridOps.generate(s, G), Seq(Topo), Seq(Pit), G.sz)
-        .select(col("id"), round(col("mine"), 6).as("mine"))
-        .orderBy("id")),
-
-
-    // §2.5 nearest-cell assignment: arbitrary points → ijk by floor
-    // arithmetic, −1 outside the grid
-    "q14_nearest_cell" -> ((s, _) => {
-      val pts = s.range(500)
-        .withColumn("x", lit(995.0) + (col("id") * 7.3) % 310.0)
-        .withColumn("y", lit(1995.0) + (col("id") * 11.7) % 210.0)
-        .withColumn("z", lit(95.0) + (col("id") * 3.9) % 210.0)
-      GridOps.nearestCell(pts, G).select("id", "i", "j", "k").orderBy("id")
-    }),
-
-
-    // §2.5 heatmap2d: reduce the grid along the z axis
-    "q15_heatmap2d" -> ((s, _) =>
-      GridOps.heatmap2d(
-        GridOps.generate(s, G)
-          .withColumn("v", (col("i") * 7 + col("j") * 13 + col("k") * 17) % 97),
-        "k", "v", "mean")
-        .withColumnRenamed("v mean", "v_mean")
-        .orderBy("i", "j")),
-
-
-    // §2.5 surface elevation (get_elevation): sloped plane, null off-footprint
-    "q16_elevation" -> ((s, _) =>
-      Elevation(GridOps.generate(s, G), Slope)
-        .select(col("id"), round(col("elevation"), 6).as("elev"))
-        .orderBy("id")),
-
-
-    // §2.5 vertical-footprint (2D) region flagging
-    "q36_flag2d" -> ((s, _) =>
-      FlagRegions(s, GridOps.generate(s, G), Seq(Slope), flagVar = "flag2d",
-        footprint2d = true)
-        .select("id", "flag2d").orderBy("id")),
-
-
-    // §2.5 grade shells: threshold the grid into value bands
-    "q37_grade_shells" -> ((s, _) =>
-      GridOps.generate(s, G)
-        .withColumn("grade", (col("i") * 7 + col("j") * 13 + col("k") * 17) % 97)
-        .withColumn("band", floor(col("grade") / 20).cast("int"))
-        .groupBy("band")
-        .agg(count(lit(1)).as("n"), min("grade").as("lo"), max("grade").as("hi"))
-        .orderBy("band")),
-
-
-    // §2.5 flat ijk key encoding (vtk_grid_flag_ijk)
-    "q38_ijk_key" -> ((s, _) =>
-      GridOps.generate(s, G)
-        .select(col("id"),
-          (col("i").cast("long") * 1000000L + col("j").cast("long") * 1000L +
-            col("k").cast("long")).as("ijk"))
-        .orderBy("id")),
-
-
-    // §2.5 rotated grid (bearing ≠ 90): lattice stays integer, world xyz
-    // materialized through the z-rotation
-    "q39_rotated_grid" -> ((s, _) =>
-      GridOps.generate(s, G.copy(bearing = 45.0, rotX = 1000.0, rotY = 2000.0))
-        .select(col("id"), round(col("x"), 6).as("x"), round(col("y"), 6).as("y"),
-          col("z"))
-        .orderBy("id")),
-
-
-    // operators: range join as a broadcast band lookup — the join node
-    // disappears into one binary search per row (BandJoin.bandOf)
-    "q47_range_band" -> ((s, dir) =>
-      li(s, dir)
-        .withColumn("qty_band", coalesce(
-          operators.BandJoin.bandOf(col("l_quantity"),
-            Seq(("low", 0.0, 10.0), ("mid", 10.0, 25.0), ("high", 25.0, 45.0))),
-          lit("other")))
-        .groupBy("qty_band")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("l_extendedprice")), 2).as("sum_price"))
-        .orderBy("qty_band")),
-
-
-    // §2.5 Raytracer tridist: |z − surface| along the vertical ray over
-    // the sloped plane, null off-footprint (pd_vtk.py:1205-1218)
-    "q128_tridist" -> ((s, _) =>
-      Tridist(GridOps.generate(s, G), Slope)
-        .select(col("id"), round(col("tridist"), 6).as("tridist"))
-        .orderBy("id")),
-  )
-
-  private[graft] val oracleSql: Map[String, String] = Map(
-
-    "q11_grid_generate" ->
-      s"""WITH $GridSql
-         SELECT id, i, j, k, x, y, z, 1000.0 AS volume FROM g ORDER BY id""",
-
-
-    "q12_flag_regions" ->
+        .select("id", "region").orderBy("id"),
       s"""WITH $GridSql
          SELECT id,
            CASE WHEN x BETWEEN 1151.2 AND 1248.8 AND y BETWEEN 2101.1 AND 2199.9
@@ -142,20 +38,33 @@ object QueriesSpatial {
                 WHEN x BETWEEN 1097.3 AND 1203.7 AND y BETWEEN 2051.3 AND 2148.8
                      AND z BETWEEN 141.2 AND 198.9 THEN 'region2'
                 ELSE '' END AS region
-         FROM g ORDER BY id""",
+         FROM g ORDER BY id"""),
 
 
-    "q13_mine_deplete" ->
+    // §2.5 mine-up/mine-down depletion fractions (vertical-ray surface
+    // elevation vs analytic plane algebra)
+    Query("q13_mine_deplete", (s, _) =>
+      MineDepletion(s, GridOps.generate(s, G), Seq(Topo), Seq(Pit), G.sz)
+        .select(col("id"), round(col("mine"), 6).as("mine"))
+        .orderBy("id"),
       s"""WITH $GridSql
          SELECT id,
            round(least(1, greatest(0, (152.3 - (z - 5)) / 10)) *
              (CASE WHEN x BETWEEN 1100.3 AND 1300.7 AND y BETWEEN 2050.1 AND 2250.9
                    THEN 1 - least(1, greatest(0, (173.456 - (z - 5)) / 10))
                    ELSE 1 END), 6) AS mine
-         FROM g ORDER BY id""",
+         FROM g ORDER BY id"""),
 
 
-    "q14_nearest_cell" ->
+    // §2.5 nearest-cell assignment: arbitrary points → ijk by floor
+    // arithmetic, −1 outside the grid
+    Query("q14_nearest_cell", (s, _) => {
+      val pts = s.range(500)
+        .withColumn("x", lit(995.0) + (col("id") * 7.3) % 310.0)
+        .withColumn("y", lit(1995.0) + (col("id") * 11.7) % 210.0)
+        .withColumn("z", lit(95.0) + (col("id") * 3.9) % 210.0)
+      GridOps.nearestCell(pts, G).select("id", "i", "j", "k").orderBy("id")
+    },
       """WITH p AS (
            SELECT range AS id,
              995.0 + (range * CAST(7.3 AS DOUBLE)) % 310.0 AS x,
@@ -172,47 +81,81 @@ object QueriesSpatial {
            CAST(CASE WHEN ci BETWEEN 0 AND 29 AND cj BETWEEN 0 AND 19 AND ck BETWEEN 0 AND 19 THEN ci ELSE -1 END AS INT) AS i,
            CAST(CASE WHEN ci BETWEEN 0 AND 29 AND cj BETWEEN 0 AND 19 AND ck BETWEEN 0 AND 19 THEN cj ELSE -1 END AS INT) AS j,
            CAST(CASE WHEN ci BETWEEN 0 AND 29 AND cj BETWEEN 0 AND 19 AND ck BETWEEN 0 AND 19 THEN ck ELSE -1 END AS INT) AS k
-         FROM c ORDER BY id""",
+         FROM c ORDER BY id"""),
 
 
-    "q15_heatmap2d" ->
+    // §2.5 heatmap2d: reduce the grid along the z axis
+    Query("q15_heatmap2d", (s, _) =>
+      GridOps.heatmap2d(
+        GridOps.generate(s, G)
+          .withColumn("v", (col("i") * 7 + col("j") * 13 + col("k") * 17) % 97),
+        "k", "v", "mean")
+        .withColumnRenamed("v mean", "v_mean")
+        .orderBy("i", "j"),
       s"""WITH $GridSql
          SELECT i, j, avg((i * 7 + j * 13 + k * 17) % 97) AS v_mean
-         FROM g GROUP BY i, j ORDER BY i, j""",
+         FROM g GROUP BY i, j ORDER BY i, j"""),
 
 
-    "q16_elevation" ->
+    // §2.5 surface elevation (get_elevation): sloped plane, null off-footprint
+    Query("q16_elevation", (s, _) =>
+      Elevation(GridOps.generate(s, G), Slope)
+        .select(col("id"), round(col("elevation"), 6).as("elev"))
+        .orderBy("id"),
       s"""WITH $GridSql
          SELECT id,
            CASE WHEN x BETWEEN 1001 AND 1289.5 AND y BETWEEN 1900 AND 2350
                 THEN round(50 + 0.01 * x + 0.02 * y, 6) END AS elev
-         FROM g ORDER BY id""",
+         FROM g ORDER BY id"""),
 
 
-    "q36_flag2d" ->
+    // §2.5 vertical-footprint (2D) region flagging
+    Query("q36_flag2d", (s, _) =>
+      FlagRegions(s, GridOps.generate(s, G), Seq(Slope), flagVar = "flag2d",
+        footprint2d = true)
+        .select("id", "flag2d").orderBy("id"),
       s"""WITH $GridSql
          SELECT id,
            CASE WHEN x BETWEEN 1001 AND 1289.5 AND y BETWEEN 1900 AND 2350
                 THEN 'slope' ELSE '' END AS flag2d
-         FROM g ORDER BY id""",
+         FROM g ORDER BY id"""),
 
 
-    "q37_grade_shells" ->
+    // §2.5 grade shells: threshold the grid into value bands
+    Query("q37_grade_shells", (s, _) =>
+      GridOps.generate(s, G)
+        .withColumn("grade", (col("i") * 7 + col("j") * 13 + col("k") * 17) % 97)
+        .withColumn("band", floor(col("grade") / 20).cast("int"))
+        .groupBy("band")
+        .agg(count(lit(1)).as("n"), min("grade").as("lo"), max("grade").as("hi"))
+        .orderBy("band"),
       s"""WITH $GridSql
          SELECT CAST(floor(((i * 7 + j * 13 + k * 17) % 97) / 20) AS INT) AS band,
            count(*) AS n,
            min((i * 7 + j * 13 + k * 17) % 97) AS lo,
            max((i * 7 + j * 13 + k * 17) % 97) AS hi
-         FROM g GROUP BY band ORDER BY band""",
+         FROM g GROUP BY band ORDER BY band"""),
 
 
-    "q38_ijk_key" ->
+    // §2.5 flat ijk key encoding (vtk_grid_flag_ijk)
+    Query("q38_ijk_key", (s, _) =>
+      GridOps.generate(s, G)
+        .select(col("id"),
+          (col("i").cast("long") * 1000000L + col("j").cast("long") * 1000L +
+            col("k").cast("long")).as("ijk"))
+        .orderBy("id"),
       s"""WITH $GridSql
          SELECT id, CAST(i AS BIGINT) * 1000000 + CAST(j AS BIGINT) * 1000 + CAST(k AS BIGINT) AS ijk
-         FROM g ORDER BY id""",
+         FROM g ORDER BY id"""),
 
 
-    "q39_rotated_grid" -> {
+    // §2.5 rotated grid (bearing ≠ 90): lattice stays integer, world xyz
+    // materialized through the z-rotation
+    Query("q39_rotated_grid", (s, _) =>
+      GridOps.generate(s, G.copy(bearing = 45.0, rotX = 1000.0, rotY = 2000.0))
+        .select(col("id"), round(col("x"), 6).as("x"), round(col("y"), 6).as("y"),
+          col("z"))
+        .orderBy("id"), {
       // embed the exact rotation constants the Scala side uses
       val a = math.toRadians(-(45.0 - 90.0))
       val c = math.cos(a); val sn = math.sin(a)
@@ -222,28 +165,44 @@ object QueriesSpatial {
            round(2000.0 + ($sn) * (x - 1000.0) + ($c) * (y - 2000.0), 6) AS y,
            z
          FROM g ORDER BY id"""
-    },
+    }),
 
 
-    // range join spelled relationally: LEFT JOIN on the interval condition
-    "q47_range_band" ->
+    // operators: range join as a broadcast band lookup — the join node
+    // disappears into one binary search per row (BandJoin.bandOf)
+    Query("q47_range_band", (s, dir) =>
+      li(s, dir)
+        .withColumn("qty_band", coalesce(
+          operators.BandJoin.bandOf(col("l_quantity"),
+            Seq(("low", 0.0, 10.0), ("mid", 10.0, 25.0), ("high", 25.0, 45.0))),
+          lit("other")))
+        .groupBy("qty_band")
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("l_extendedprice")), 2).as("sum_price"))
+        .orderBy("qty_band"),
+      // range join spelled relationally: LEFT JOIN on the interval condition
       """WITH bands(name, lo, hi) AS (VALUES
            ('low', 0.0, 10.0), ('mid', 10.0, 25.0), ('high', 25.0, 45.0)),
          j AS (SELECT coalesce(b.name, 'other') AS qty_band, l.l_extendedprice
                FROM lineitem l LEFT JOIN bands b
                  ON l.l_quantity >= b.lo AND l.l_quantity < b.hi)
          SELECT qty_band, count(*) AS n, round(sum(l_extendedprice), 2) AS sum_price
-         FROM j GROUP BY qty_band ORDER BY qty_band""",
+         FROM j GROUP BY qty_band ORDER BY qty_band"""),
 
 
-    // tridist = |z − (analytic slope plane)| inside the footprint; the
-    // ray-trace surfaceZ diverges from the plane algebra only in the last
-    // ulps, absorbed by the shared 6 dp grain (the q16 discipline)
-    "q128_tridist" ->
+    // §2.5 Raytracer tridist: |z − surface| along the vertical ray over
+    // the sloped plane, null off-footprint (pd_vtk.py:1205-1218)
+    Query("q128_tridist", (s, _) =>
+      Tridist(GridOps.generate(s, G), Slope)
+        .select(col("id"), round(col("tridist"), 6).as("tridist"))
+        .orderBy("id"),
+      // tridist = |z − (analytic slope plane)| inside the footprint; the
+      // ray-trace surfaceZ diverges from the plane algebra only in the last
+      // ulps, absorbed by the shared 6 dp grain (the q16 discipline)
       s"""WITH $GridSql
          SELECT id,
            CASE WHEN x BETWEEN 1001 AND 1289.5 AND y BETWEEN 1900 AND 2350
                 THEN round(abs(z - (50 + 0.01 * x + 0.02 * y)), 6) END AS tridist
-         FROM g ORDER BY id""",
+         FROM g ORDER BY id"""),
   )
 }

@@ -15,429 +15,56 @@ import graft.util.Checkpoints.scoped
   * divergence (q204), its windowed serving twin and by-slice form
   * (q205/q206), and the one-pass text-feed gate (q207).
   *
-  * Entries (and their DuckDB oracle SQL beside them) moved verbatim from
-  * SparkEntry in the r12 per-family split; [[SparkEntry.queries]] is the
-  * dispatcher that concatenates the families. Shared fixtures/helpers and
-  * oracle SQL fragments live in [[QueryShared]]. */
+  * Each entry is one [[Query]]; shared fixtures and oracle fragments live in [[QueryShared]]. */
 object QueriesText {
 
-  private[graft] val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] val queries: Seq[Query] = Seq(
 
     // ext: token counting (whitespace tokenizer)
-    "q17_token_count" -> ((s, dir) =>
+    Query("q17_token_count", (s, dir) =>
       Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           ext.TextAnalysis.tokenCount("text").cast("long").as("tok_cnt"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """SELECT doc_id,
+         CAST(CASE WHEN len(trim(text)) = 0 THEN 0
+              ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS tok_cnt
+         FROM documents ORDER BY doc_id"""),
 
 
     // ext: language-ID heuristic + quality scoring (pure expressions)
-    "q18_langid_quality" -> ((s, dir) =>
+    Query("q18_langid_quality", (s, dir) =>
       pinSorted(Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           ext.TextAnalysis.langId("text").as("lang_id"),
           round(ext.TextAnalysis.qualityScore("text"), 6).as("quality")),
-        "doc_id")),
-
-
-    // ext: rolling-hash document fingerprint (min md5 over char 8-grams)
-    "q19_fingerprint" -> ((s, dir) =>
-      pinSorted(Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          ext.TextAnalysis.fingerprint("text").as("fp")), "doc_id")),
-
-
-    // ext: characteristic terms per document (rational idf — see
-    // TextAnalysis.tfidfTopTerms for the cross-engine rationale)
-    "q45_tfidf" -> ((s, dir) =>
-      ext.TextAnalysis.tfidfTopTerms(
-        Tables.load(s, dir, "documents"), "text", "doc_id", 3)
-        .orderBy("doc_id", "rank")),
-
-
-    // ext: sliding token-window chunking (training/RAG prep) — pure
-    // codegen narrow ops, no shuffle
-    "q49_chunk" -> ((s, dir) =>
-      ext.TextAnalysis.chunk(Tables.load(s, dir, "documents"),
-          "text", "doc_id", 32, 8)
-        .withColumn("chunk_id", col("chunk_id").cast("long"))
-        .withColumn("n_tokens", col("n_tokens").cast("long"))
-        .orderBy("doc_id", "chunk_id")),
-
-
-    // ext: PII redaction over deterministically-synthesized addresses
-    // (the corpus is PII-free, so both engines inject the same patterns)
-    "q50_redact" -> ((s, dir) => {
-      val doc = Tables.load(s, dir, "documents")
-        .withColumn("aug", concat(substring(col("text"), 1, 80),
-          lit(" mail user"), col("doc_id").cast("string"),
-          lit("@ex.org or 555-123-4567 bye")))
-      doc.select(col("doc_id"),
-          ext.TextAnalysis.redactPii("aug").as("red"),
-          ext.TextAnalysis.piiCounts("aug")._1.cast("long").as("n_email"),
-          ext.TextAnalysis.piiCounts("aug")._2.cast("long").as("n_phone"))
-        .orderBy("doc_id")
-    }),
-
-
-    // ext: vocabulary building — per-token corpus frequency and document
-    // frequency, top 50 by tf. The tokenizer-training / stopword-mining
-    // prep step: explode → one groupBy on the token (the vocabulary
-    // shuffle AQE also drives in q45), deterministic (tf desc, term) cut
-    "q58_vocab" -> ((s, dir) =>
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(ext.TextAnalysis.wordTokens("text")).as("term"))
-        .groupBy("term")
-        .agg(count(lit(1)).as("tf"), count_distinct(col("doc_id")).as("df"))
-        .orderBy(col("tf").desc, col("term"))
-        .limit(50)),
-
-
-    // ext: text normalization — the canonical lowercase/alnum form fed to
-    // tokenizers and hashers; escape-free regex, pure narrow op
-    "q59_normalize" -> ((s, dir) =>
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          ext.TextAnalysis.normalize("text").as("norm"),
-          length(ext.TextAnalysis.normalize("text")).cast("long").as("n_chars"))
-        .orderBy("doc_id")),
-
-
-    // ext: GPT-style sequence packing — concatenate per source shard, cut
-    // every 512 tokens, one row per (doc, overlapped training sequence)
-    "q64_seq_pack" -> ((s, dir) =>
-      ext.TextAnalysis.packSequences(
-        Tables.load(s, dir, "documents"), "text", "doc_id", 512)
-        .orderBy("source", "seq_id", "doc_id")),
-
-
-    // ext: Gopher-style quality signals (mean word length, symbol/word,
-    // alpha-word fraction, duplicate-3-gram repetition) — the mechanical
-    // per-document filters production pipelines threshold on
-    "q65_quality_signals" -> ((s, dir) =>
-      pinSorted(Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mean_wlen"),
-          round(ext.TextAnalysis.symbolWordRatio(col("text")), 6).as("sym_ratio"),
-          round(ext.TextAnalysis.alphaWordFraction(col("text")), 6).as("alpha_frac"),
-          round(ext.TextAnalysis.dupShingleFraction(col("text")), 6).as("dup3_frac")),
-        "doc_id")),
-
-
-    // ext: token-budget corpus selection — per-source quality-ranked
-    // greedy cut under a 2000-token budget; the oracle replays the q18
-    // quality formula and the running window sum (CAST to BIGINT — the
-    // q64 HUGEINT lesson)
-    "q69_token_budget" -> ((s, dir) =>
-      ext.TextAnalysis.selectByTokenBudget(
-        Tables.load(s, dir, "documents"), "text", "doc_id", 2000L)
-        .orderBy("source", "doc_id")),
-
-
-    // ext: Gopher repetition signals over deterministically-synthesized
-    // structure (corpus docs are single-line, so both engines inject the
-    // same duplicate lines/paragraphs before measuring)
-    "q70_repetition" -> ((s, dir) => {
-      val a = substring(col("text"), 1, 30)
-      val b = substring(col("text"), 31, 30)
-      val c = substring(col("text"), 61, 30)
-      val aug = concat(a, lit("\n"), a, lit("\n\n"), b, lit("\n\n"), b,
-        lit("\n\n"), c)
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          round(ext.TextAnalysis.dupLineFraction(aug), 6).as("dup_line"),
-          round(ext.TextAnalysis.dupParaFraction(aug), 6).as("dup_para"))
-        .orderBy("doc_id")
-    }),
-
-
-    // ext: corpus-trained bigram LM scoring (CCNet-style perplexity
-    // filter) — per-doc length-normalized negative log likelihood under
-    // add-1-smoothed corpus transition counts
-    "q74_lm_score" -> ((s, dir) =>
-      ext.TextAnalysis.lmScore(
-        Tables.load(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-
-    // ext: distributed BPE merge learning — the 8 highest-frequency
-    // symbol-pair merges over the corpus vocabulary, from characters
-    "q75_bpe_train" -> ((s, dir) =>
-      ext.TextAnalysis.bpeTrain(
-        Tables.load(s, dir, "documents"), "text", 8)
-        .orderBy("rank")),
-
-
-    // ext: the learned tokenizer's vocabulary — corpus subword
-    // frequencies after the q75 merge schedule
-    "q76_bpe_vocab" -> ((s, dir) =>
-      ext.TextAnalysis.bpeSubwords(
-        Tables.load(s, dir, "documents"), "text", 8)
-        .orderBy("subword")),
-
-
-    // ext: cross-source shingle containment — the dataset-overlap audit
-    // run before mixing corpora
-    "q78_source_overlap" -> ((s, dir) =>
-      ext.Dedup.sourceOverlap(
-        Tables.load(s, dir, "documents"), "source", "text")
-        .orderBy("src_a", "src_b")),
-
-
-    // ext: feature-hashing document embedding (hashing trick) — signed
-    // token counts in 16 hashed slots, long format
-    "q79_feature_hash" -> ((s, dir) =>
-      ext.TextAnalysis.featureHash(
-        Tables.load(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id", "slot")),
-
-
-    // ext: CCNet perplexity bucketing — head/middle/tail terciles of the
-    // corpus-trained bigram-LM nll, thresholds broadcast (no global rank)
-    "q80_ppl_buckets" -> ((s, dir) =>
-      ext.TextAnalysis.pplBuckets(
-        Tables.load(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-
-    // ext: DSIR importance weights — hashed unigram+bigram log
-    // target/raw likelihood ratio, target = src0+src1
-    "q81_dsir" -> ((s, dir) =>
-      ext.TextAnalysis.dsirWeights(
-        Tables.load(s, dir, "documents"), "doc_id", "text",
-        org.apache.spark.sql.functions.col("source").isin("src0", "src1"))
-        .orderBy("doc_id")),
-
-
-    // ext: corpus datasheet — per-source volume, dup ratio, length
-    // percentiles, language spread in one aggregation pass
-    "q82_corpus_report" -> ((s, dir) =>
-      ext.TextAnalysis.corpusReport(
-        Tables.load(s, dir, "documents"))
-        .orderBy("source")),
-
-
-    // ext: real token counts under the corpus-trained BPE tokenizer —
-    // the 8-merge schedule folded as literal replaces over distinct words
-    "q83_bpe_encode" -> ((s, dir) =>
-      ext.TextAnalysis.bpeEncode(
-        Tables.load(s, dir, "documents"), "doc_id", "text", 8)
-        .orderBy("doc_id")),
-
-
-    // ext: DSIR Gumbel top-k — reproducible importance draw of the 200
-    // most target-like candidates, noise keyed on (salt, doc_id)
-    "q84_dsir_select" -> ((s, dir) =>
-      ext.TextAnalysis.dsirSelect(
-        Tables.load(s, dir, "documents"), "doc_id", "text",
-        org.apache.spark.sql.functions.col("source").isin("src0", "src1"),
-        200)
-        .orderBy(org.apache.spark.sql.functions.col("key").desc,
-          org.apache.spark.sql.functions.col("doc_id"))),
-
-
-    // ext: lexical diversity per source — cross-document distinct-shingle
-    // ratio; slice-level companion of the q94 per-document novelty
-    "q96_diversity" -> ((s, dir) =>
-      ext.TextAnalysis.diversityReport(
-        Tables.load(s, dir, "documents"), "source", "text")
-        .orderBy("source")),
-
-
-    // ext: tokenizer fertility by language under the corpus-trained
-    // 8-merge BPE schedule — chars per token, the tokenizer-fit audit
-    "q97_fertility" -> ((s, dir) =>
-      ext.TextAnalysis.tokenizerFertility(
-        Tables.load(s, dir, "documents"), "doc_id", "text",
-        "lang", "n_chars", 8)
-        .orderBy("lang")),
-
-
-    // ext: GPT-3-style supervised quality filter — NB log-odds of the
-    // "curated slice" label (src0/src1), trained on the corpus itself.
-    // The classifier reads the token column three times, so the q99
-    // family (q113/q114/q120/q121/q122/q151 too) runs on the pinned
-    // raterBase projection — one tokenizer pass, released per query.
-    "q99_quality_classifier" -> ((s, dir) => scoped { sc =>
-      ext.TextAnalysis.nbQualityScoreTokens(sc.pin(raterBase(s, dir)),
-        "doc_id").orderBy("doc_id")
-    }),
-
-
-    // ext: PMI collocations — adjacent-bigram phrase mining over the
-    // corpus (c12 >= 5), PMI from exact-integer probability ratios
-    "q108_pmi_collocations" -> ((s, dir) =>
-      pinSorted(ext.TextAnalysis.pmiCollocations(
-        Tables.load(s, dir, "documents"), "text", 5L), "w1", "w2")),
-
-
-    // ext: multiclass NB — the k-way nbQualityScore (supervised language
-    // classifier trained on the lang labels; argmax on rounded scores).
-    // The tokenized projection is pinned once (the score frame reads the
-    // token column ~5x — the raterBase lesson), then released behind the
-    // narrow per-doc result.
-    "q112_nb_multiclass" -> ((s, dir) => scoped { sc =>
-      ext.TextAnalysis.nbMulticlassTokens(sc.pin(nbLangBase(s, dir)),
-        "doc_id").orderBy("doc_id")
-    }),
-
-
-    // ext: corpus vocabulary drift — KL/JS divergence between the English
-    // and non-English token distributions (the PSI analogue for text)
-    "q129_vocab_divergence" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      ext.TextAnalysis.vocabDivergence(
-        docs.filter(col("lang") === "en"),
-        docs.filter(col("lang") =!= "en"), "text")
-    }),
-
-
-    // ext: per-doc token Shannon entropy — repetition/diversity signal;
-    // the whole histogram lives in one per-row HOF chain (no shuffle)
-    "q130_token_entropy" -> ((s, dir) =>
-      pinSorted(ext.TextAnalysis.tokenEntropy(
-        Tables.load(s, dir, "documents"), "doc_id", "text"), "doc_id")),
-
-
-    // ext: Zipf rank-frequency OLS over the top-200 tokens — corpus-health
-    // slope/r² (natural text ≈ −1); top-N via TakeOrderedAndProject
-    "q131_zipf" -> ((s, dir) =>
-      ext.TextAnalysis.zipfFit(
-        Tables.load(s, dir, "documents"), "text", 200)),
-
-
-    // ext: logistic-regression quality gate — 5 rounds of full-batch GD
-    // (one scan + one VectorMeanAgg gradient reduce per round, d+1-double
-    // driver update); the convex complement to the q99 NB gate
-    "q134_logistic_train" -> ((s, dir) => {
-      import s.implicits._
-      val w = ext.TextAnalysis.logisticTrain(
-        logitFeatures(Tables.load(s, dir, "documents")),
-        Seq("x1", "x2"), "y")
-      w.toIndexedSeq.zipWithIndex.map { case (wi, j) => (j, wi) }
-        .toDF("j", "w")
-        .select(col("j"), round(col("w"), 6).as("weight"))
-        .orderBy("j")
-    }),
-
-
-    // ext: per-doc sigmoid scores + 0.5-gate under the q134 model — the
-    // scoring pass is a pure codegen map over the scan
-    "q135_logistic_scores" -> ((s, dir) => {
-      val f = logitFeatures(Tables.load(s, dir, "documents"))
-      val w = ext.TextAnalysis.logisticTrain(f, Seq("x1", "x2"), "y")
-      pinSorted(ext.TextAnalysis.logisticScoreWith(f, "doc_id",
-        Seq("x1", "x2"), w), "doc_id")
-    }),
-
-
-    // ext: context-length sizing study — truncation cost at candidate
-    // token budgets; kept_frac is an exact integer ratio
-    "q156_length_budget" -> ((s, dir) =>
-      ext.TextAnalysis.lengthBudgetReport(
-        Tables.load(s, dir, "documents"), "text", Seq(16, 32, 64, 128))),
-
-
-    // ext: label-issue mining — the 20 docs whose lang label the q112
-    // NB margins reject most confidently (the human-audit queue)
-    "q173_label_issues" -> ((s, dir) => scoped { sc =>
-      ext.TextAnalysis.nbLabelIssuesTokens(sc.pin(nbLangBase(s, dir)),
-        "doc_id")
-    }),
-
-    // ext: per-source vocabulary drift — each source's token
-    // distribution vs the rest of the corpus (q129's by-slice view,
-    // "which source's vocabulary moved?"); one (source, token)
-    // aggregation, rest = global − own, each row ≡ the pairwise member
-    "q204_vocab_div_by_source" -> ((s, dir) =>
-      ext.TextAnalysis.vocabDivergenceBy(
-        Tables.load(s, dir, "documents"), "source", "text")
-        .orderBy("source")),
-
-    // ext: WINDOWED vocabulary drift — each day's token mix vs a
-    // driver-held top-50 baseline vocabulary from the even half
-    // (q129's serving twin: K+1 bounded counters per window, the OOV
-    // cell carries the tail); day = doc_id % 3 synthesizes the event
-    // time the documents table doesn't carry
-    "q205_vocab_windowed" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val (bc, bt) = ext.TextAnalysis.vocabBaseline(
-        docs.filter(col("doc_id") % 2 === 0), "text", 50)
-      val live = docs.select(
-        timestamp_seconds(lit(1704067200L) + (col("doc_id") % 3) * 86400L)
-          .as("ts"),
-        col("text"))
-      ext.TextAnalysis.vocabDivergenceWindowed(live, "ts", "text", bc, bt)
-        .orderBy("ws")
-    }),
-
-    // ext: WINDOWED vocabulary drift BY SLICE — "which feed's
-    // vocabulary moved, per day": q205's monitor with the source in the
-    // grouping, every (day, source) cell vs the same driver-held top-50
-    // baseline vocabulary, K+1 counters per cell by construction
-    "q206_vocab_windowed_by" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val (bc, bt) = ext.TextAnalysis.vocabBaseline(
-        docs.filter(col("doc_id") % 2 === 0), "text", 50)
-      val live = docs.select(
-        timestamp_seconds(lit(1704067200L) + (col("doc_id") % 3) * 86400L)
-          .as("ts"),
-        col("source"), col("text"))
-      ext.TextAnalysis.vocabDivergenceWindowed(live, "ts", "text", bc, bt,
-          slice = Some("source"))
-        .orderBy("ws", "source")
-    }),
-
-    // ext: THE TEXT-FEED GATE AS ONE STATEFUL PASS — q201's fusion
-    // applied to a document stream: per day, quality KS + rank-sum +
-    // language-mix chi2 + vocabulary KL/JS in a single windowed
-    // aggregation (one state store where four standing crawl monitors
-    // ran before); every baseline from the day-1 snapshot
-    "q207_text_gate_windowed" -> ((s, dir) => scoped { sc =>
-      val docs = Tables.load(s, dir, "documents")
-      val live = sc.pin(docs.select(
-        timestamp_seconds(
-          lit(1704067200L) + (col("doc_id") % 3) * 86400L).as("ts"),
-        col("lang"), col("text")))
-      val week = live.filter(col("ts") < lit("2024-01-02").cast("timestamp"))
-      val (bv, bc) = ext.Eval.ksBaseline(
-        week.select(round(ext.TextAnalysis.qualityScore("text"), 6)
-          .as("q")), "q")
-      val (bcats, _) = ext.Outliers.chiSquareBaseline(week, "lang")
-      val (vc, vt) = ext.TextAnalysis.vocabBaseline(week, "text", 50)
-      ext.TextAnalysis.textGateWindowed(live, "ts", "text", "lang",
-        bv, bc, bcats, vc, vt)
-    }.orderBy("ws")),
-  )
-
-  private[graft] val oracleSql: Map[String, String] = Map(
-
-    "q17_token_count" ->
-      """SELECT doc_id,
-         CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS tok_cnt
-         FROM documents ORDER BY doc_id""",
-
-
-    "q18_langid_quality" ->
+        "doc_id"),
       s"""$QualityCtesSql
          SELECT doc_id,
            $LangCaseSql AS lang_id,
            $QualityValSql AS quality
-         FROM s ORDER BY doc_id""",
+         FROM s ORDER BY doc_id"""),
 
 
-    "q19_fingerprint" ->
+    // ext: rolling-hash document fingerprint (min md5 over char 8-grams)
+    Query("q19_fingerprint", (s, dir) =>
+      pinSorted(Tables.load(s, dir, "documents")
+        .select(col("doc_id"),
+          ext.TextAnalysis.fingerprint("text").as("fp")), "doc_id"),
       """SELECT doc_id,
          list_min(list_transform(generate_series(1, greatest(len(text) - 7, 1)),
            i -> md5(substr(text, i, 8)))) AS fp
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
 
-    // identical rational-idf arithmetic: tf * ((N+1)/(df+1)), both exact
-    // IEEE ops, rounded at 6dp on both sides
-    "q45_tfidf" ->
+    // ext: characteristic terms per document (rational idf — see
+    // TextAnalysis.tfidfTopTerms for the cross-engine rationale)
+    Query("q45_tfidf", (s, dir) =>
+      ext.TextAnalysis.tfidfTopTerms(
+        Tables.load(s, dir, "documents"), "text", "doc_id", 3)
+        .orderBy("doc_id", "rank"),
+      // identical rational-idf arithmetic: tf * ((N+1)/(df+1)), both exact
+      // IEEE ops, rounded at 6dp on both sides
       s"""WITH n AS (SELECT count(*) AS n FROM documents),
          tt AS (SELECT doc_id, unnest($ToksSql) AS term FROM documents),
          tf AS (SELECT doc_id, term, count(*) AS tf FROM tt GROUP BY doc_id, term),
@@ -451,10 +78,17 @@ object QueriesText {
                    ORDER BY score DESC, term) AS INT) AS rank
                FROM sc)
          SELECT doc_id, rank, term, score FROM r
-         WHERE rank <= 3 ORDER BY doc_id, rank""",
+         WHERE rank <= 3 ORDER BY doc_id, rank"""),
 
 
-    "q49_chunk" ->
+    // ext: sliding token-window chunking (training/RAG prep) — pure
+    // codegen narrow ops, no shuffle
+    Query("q49_chunk", (s, dir) =>
+      ext.TextAnalysis.chunk(Tables.load(s, dir, "documents"),
+          "text", "doc_id", 32, 8)
+        .withColumn("chunk_id", col("chunk_id").cast("long"))
+        .withColumn("n_tokens", col("n_tokens").cast("long"))
+        .orderBy("doc_id", "chunk_id"),
       """WITH t AS (
            SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
            FROM documents
@@ -470,10 +104,22 @@ object QueriesText {
            FROM t)
          SELECT doc_id, c.chunk_id AS chunk_id, c.n_tokens AS n_tokens,
                 c.chunk AS chunk
-         FROM u ORDER BY doc_id, chunk_id""",
+         FROM u ORDER BY doc_id, chunk_id"""),
 
 
-    "q50_redact" ->
+    // ext: PII redaction over deterministically-synthesized addresses
+    // (the corpus is PII-free, so both engines inject the same patterns)
+    Query("q50_redact", (s, dir) => {
+      val doc = Tables.load(s, dir, "documents")
+        .withColumn("aug", concat(substring(col("text"), 1, 80),
+          lit(" mail user"), col("doc_id").cast("string"),
+          lit("@ex.org or 555-123-4567 bye")))
+      doc.select(col("doc_id"),
+          ext.TextAnalysis.redactPii("aug").as("red"),
+          ext.TextAnalysis.piiCounts("aug")._1.cast("long").as("n_email"),
+          ext.TextAnalysis.piiCounts("aug")._2.cast("long").as("n_phone"))
+        .orderBy("doc_id")
+    },
       """WITH a AS (
            SELECT doc_id, substr(text, 1, 80) || ' mail user' ||
              CAST(doc_id AS VARCHAR) || '@ex.org or 555-123-4567 bye' AS aug
@@ -487,26 +133,49 @@ object QueriesText {
              '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z][A-Za-z]+')) AS n_email,
            len(regexp_extract_all(aug,
              '[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}')) AS n_phone
-         FROM a ORDER BY doc_id""",
+         FROM a ORDER BY doc_id"""),
 
 
-    "q58_vocab" ->
+    // ext: vocabulary building — per-token corpus frequency and document
+    // frequency, top 50 by tf. The tokenizer-training / stopword-mining
+    // prep step: explode → one groupBy on the token (the vocabulary
+    // shuffle AQE also drives in q45), deterministic (tf desc, term) cut
+    Query("q58_vocab", (s, dir) =>
+      Tables.load(s, dir, "documents")
+        .select(col("doc_id"),
+          explode(ext.TextAnalysis.wordTokens("text")).as("term"))
+        .groupBy("term")
+        .agg(count(lit(1)).as("tf"), count_distinct(col("doc_id")).as("df"))
+        .orderBy(col("tf").desc, col("term"))
+        .limit(50),
       s"""WITH tt AS (SELECT doc_id, unnest($ToksSql) AS term FROM documents)
          SELECT term, count(*) AS tf, count(DISTINCT doc_id) AS df
          FROM tt GROUP BY term
-         ORDER BY tf DESC, term LIMIT 50""",
+         ORDER BY tf DESC, term LIMIT 50"""),
 
 
-    "q59_normalize" ->
+    // ext: text normalization — the canonical lowercase/alnum form fed to
+    // tokenizers and hashers; escape-free regex, pure narrow op
+    Query("q59_normalize", (s, dir) =>
+      Tables.load(s, dir, "documents")
+        .select(col("doc_id"),
+          ext.TextAnalysis.normalize("text").as("norm"),
+          length(ext.TextAnalysis.normalize("text")).cast("long").as("n_chars"))
+        .orderBy("doc_id"),
       """SELECT doc_id,
            trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm,
            CAST(length(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS BIGINT) AS n_chars
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
 
-    // packing replay: whitespace token counts (q17 semantics), per-source
-    // running offset, one row per ctx=512 sequence a doc overlaps
-    "q64_seq_pack" ->
+    // ext: GPT-style sequence packing — concatenate per source shard, cut
+    // every 512 tokens, one row per (doc, overlapped training sequence)
+    Query("q64_seq_pack", (s, dir) =>
+      ext.TextAnalysis.packSequences(
+        Tables.load(s, dir, "documents"), "text", "doc_id", 512)
+        .orderBy("source", "seq_id", "doc_id"),
+      // packing replay: whitespace token counts (q17 semantics), per-source
+      // running offset, one row per ctx=512 sequence a doc overlaps
       """WITH t AS (SELECT source, doc_id,
              CAST(CASE WHEN len(trim(text)) = 0 THEN 0
                   ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS ntok
@@ -519,13 +188,23 @@ object QueriesText {
                 unnest(generate_series(CAST(start_tok // 512 AS BIGINT),
                                        CAST((start_tok + ntok - 1) // 512 AS BIGINT))) AS seq_id,
                 doc_id, start_tok, ntok
-         FROM w ORDER BY source, seq_id, doc_id""",
+         FROM w ORDER BY source, seq_id, doc_id"""),
 
 
-    // Gopher signals replayed in rational arithmetic: alnum-char totals /
-    // token counts, symbol counts per whitespace word, letter-bearing word
-    // fraction, 1 - distinct/total word 3-grams
-    "q65_quality_signals" ->
+    // ext: Gopher-style quality signals (mean word length, symbol/word,
+    // alpha-word fraction, duplicate-3-gram repetition) — the mechanical
+    // per-document filters production pipelines threshold on
+    Query("q65_quality_signals", (s, dir) =>
+      pinSorted(Tables.load(s, dir, "documents")
+        .select(col("doc_id"),
+          round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mean_wlen"),
+          round(ext.TextAnalysis.symbolWordRatio(col("text")), 6).as("sym_ratio"),
+          round(ext.TextAnalysis.alphaWordFraction(col("text")), 6).as("alpha_frac"),
+          round(ext.TextAnalysis.dupShingleFraction(col("text")), 6).as("dup3_frac")),
+        "doc_id"),
+      // Gopher signals replayed in rational arithmetic: alnum-char totals /
+      // token counts, symbol counts per whitespace word, letter-bearing word
+      // fraction, 1 - distinct/total word 3-grams
       s"""WITH t AS (SELECT doc_id, text,
              regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
              CASE WHEN len(trim(text)) = 0 THEN 0
@@ -545,12 +224,19 @@ object QueriesText {
            round(CASE WHEN len(toks) >= 3 THEN
              1 - CAST(len($ShinglesSql) AS DOUBLE) / (len(toks) - 2)
              ELSE 0 END, 6) AS dup3_frac
-         FROM t ORDER BY doc_id""",
+         FROM t ORDER BY doc_id"""),
 
 
-    // q18's quality replay ranked per source, running token sum under a
-    // 2000-token budget; windowed sum CAST — DuckDB returns HUGEINT
-    "q69_token_budget" ->
+    // ext: token-budget corpus selection — per-source quality-ranked
+    // greedy cut under a 2000-token budget; the oracle replays the q18
+    // quality formula and the running window sum (CAST to BIGINT — the
+    // q64 HUGEINT lesson)
+    Query("q69_token_budget", (s, dir) =>
+      ext.TextAnalysis.selectByTokenBudget(
+        Tables.load(s, dir, "documents"), "text", "doc_id", 2000L)
+        .orderBy("source", "doc_id"),
+      // q18's quality replay ranked per source, running token sum under a
+      // 2000-token budget; windowed sum CAST — DuckDB returns HUGEINT
       s"""WITH t AS (SELECT source, doc_id, text, $ToksSql AS toks,
              CASE WHEN len(trim(text)) = 0 THEN 0
                   ELSE len(string_split_regex(trim(text), '\\s+')) END AS tok_cnt
@@ -570,11 +256,25 @@ object QueriesText {
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tok
            FROM q)
          SELECT source, doc_id, ntok, quality, cum_tok FROM w
-         WHERE cum_tok <= 2000 ORDER BY source, doc_id""",
+         WHERE cum_tok <= 2000 ORDER BY source, doc_id"""),
 
 
-    // repetition signals over the same synthesized line/paragraph layout
-    "q70_repetition" ->
+    // ext: Gopher repetition signals over deterministically-synthesized
+    // structure (corpus docs are single-line, so both engines inject the
+    // same duplicate lines/paragraphs before measuring)
+    Query("q70_repetition", (s, dir) => {
+      val a = substring(col("text"), 1, 30)
+      val b = substring(col("text"), 31, 30)
+      val c = substring(col("text"), 61, 30)
+      val aug = concat(a, lit("\n"), a, lit("\n\n"), b, lit("\n\n"), b,
+        lit("\n\n"), c)
+      Tables.load(s, dir, "documents")
+        .select(col("doc_id"),
+          round(ext.TextAnalysis.dupLineFraction(aug), 6).as("dup_line"),
+          round(ext.TextAnalysis.dupParaFraction(aug), 6).as("dup_para"))
+        .orderBy("doc_id")
+    },
+      // repetition signals over the same synthesized line/paragraph layout
       s"""WITH t AS (SELECT doc_id,
              concat(substr(text, 1, 30), chr(10), substr(text, 1, 30),
                chr(10), chr(10), substr(text, 31, 30),
@@ -594,12 +294,18 @@ object QueriesText {
            round(CASE WHEN len(ps) > 0
              THEN 1 - CAST(len(list_distinct(ps)) AS DOUBLE) / len(ps)
              ELSE 0 END, 6) AS dup_para
-         FROM l ORDER BY doc_id""",
+         FROM l ORDER BY doc_id"""),
 
 
-    // bigram LM scoring: add-1-smoothed corpus transition counts, context
-    // count = occurrences as bigram head, V = corpus vocabulary
-    "q74_lm_score" ->
+    // ext: corpus-trained bigram LM scoring (CCNet-style perplexity
+    // filter) — per-doc length-normalized negative log likelihood under
+    // add-1-smoothed corpus transition counts
+    Query("q74_lm_score", (s, dir) =>
+      ext.TextAnalysis.lmScore(
+        Tables.load(s, dir, "documents"), "doc_id", "text")
+        .orderBy("doc_id"),
+      // bigram LM scoring: add-1-smoothed corpus transition counts, context
+      // count = occurrences as bigram head, V = corpus vocabulary
       s"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents
              WHERE len($ToksSql) >= 2),
          gs AS (SELECT doc_id, t, unnest(generate_series(2, len(t))) AS g
@@ -613,22 +319,39 @@ object QueriesText {
                 round(-avg(ln((c2.c2 + 1.0) / (c1.c1 + 1.0 * v.v))), 6)
                   AS nll
          FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
-         GROUP BY doc_id ORDER BY doc_id""",
+         GROUP BY doc_id ORDER BY doc_id"""),
 
 
-    // BPE merge learning: 8 generated rounds — pair counts over the
-    // previous round's vocab, 1-row argmax (count desc, lhs, rhs), then a
-    // literal [lhs][rhs] replace (greedy left-to-right, both engines)
-    "q75_bpe_train" -> BpeTrainSql(8),
+    // ext: distributed BPE merge learning — the 8 highest-frequency
+    // symbol-pair merges over the corpus vocabulary, from characters
+    Query("q75_bpe_train", (s, dir) =>
+      ext.TextAnalysis.bpeTrain(
+        Tables.load(s, dir, "documents"), "text", 8)
+        .orderBy("rank"),
+      // BPE merge learning: 8 generated rounds — pair counts over the
+      // previous round's vocab, 1-row argmax (count desc, lhs, rhs), then a
+      // literal [lhs][rhs] replace (greedy left-to-right, both engines)
+      BpeTrainSql(8)),
 
 
-    // BPE vocabulary: final-round subword frequencies (same CTE chain)
-    "q76_bpe_vocab" -> BpeSubwordsSql(8),
+    // ext: the learned tokenizer's vocabulary — corpus subword
+    // frequencies after the q75 merge schedule
+    Query("q76_bpe_vocab", (s, dir) =>
+      ext.TextAnalysis.bpeSubwords(
+        Tables.load(s, dir, "documents"), "text", 8)
+        .orderBy("subword"),
+      // BPE vocabulary: final-round subword frequencies (same CTE chain)
+      BpeSubwordsSql(8)),
 
 
-    // cross-source containment: per-source distinct shingle sets, shared
-    // shingles joined, containment = n_common / |sh(src_a)|
-    "q78_source_overlap" ->
+    // ext: cross-source shingle containment — the dataset-overlap audit
+    // run before mixing corpora
+    Query("q78_source_overlap", (s, dir) =>
+      ext.Dedup.sourceOverlap(
+        Tables.load(s, dir, "documents"), "source", "text")
+        .orderBy("src_a", "src_b"),
+      // cross-source containment: per-source distinct shingle sets, shared
+      // shingles joined, containment = n_common / |sh(src_a)|
       s"""WITH s AS (SELECT DISTINCT src, sh FROM
              (SELECT source AS src, unnest($ShinglesSql) AS sh
               FROM documents)),
@@ -639,12 +362,17 @@ object QueriesText {
                GROUP BY 1, 2)
          SELECT src_a, src_b, n_common,
                 round(n_common / CAST(t.n_sh AS DOUBLE), 6) AS containment
-         FROM c JOIN t ON t.src = c.src_a ORDER BY src_a, src_b""",
+         FROM c JOIN t ON t.src = c.src_a ORDER BY src_a, src_b"""),
 
 
-    // feature hashing: 60-bit md5-prefix token hash, slot = h mod 16,
-    // sign = bit 8; signed counts per (doc, slot)
-    "q79_feature_hash" ->
+    // ext: feature-hashing document embedding (hashing trick) — signed
+    // token counts in 16 hashed slots, long format
+    Query("q79_feature_hash", (s, dir) =>
+      ext.TextAnalysis.featureHash(
+        Tables.load(s, dir, "documents"), "doc_id", "text")
+        .orderBy("doc_id", "slot"),
+      // feature hashing: 60-bit md5-prefix token hash, slot = h mod 16,
+      // sign = bit 8; signed counts per (doc, slot)
       s"""WITH tok AS (SELECT doc_id, unnest($ToksSql) AS t FROM documents),
          h AS (SELECT doc_id,
                  CAST(CAST(concat('0x', substr(md5(t), 1, 15))
@@ -652,12 +380,17 @@ object QueriesText {
                FROM tok)
          SELECT doc_id, CAST(h % 16 AS BIGINT) AS slot,
                 CAST(sum(((h // 256) % 2) * 2 - 1) AS BIGINT) AS val
-         FROM h GROUP BY doc_id, slot ORDER BY doc_id, slot""",
+         FROM h GROUP BY doc_id, slot ORDER BY doc_id, slot"""),
 
 
-    // CCNet perplexity buckets: q74's scoring CTE + exact tercile value
-    // thresholds (quantile_cont ≡ Spark percentile, pos = (n−1)·q)
-    "q80_ppl_buckets" ->
+    // ext: CCNet perplexity bucketing — head/middle/tail terciles of the
+    // corpus-trained bigram-LM nll, thresholds broadcast (no global rank)
+    Query("q80_ppl_buckets", (s, dir) =>
+      ext.TextAnalysis.pplBuckets(
+        Tables.load(s, dir, "documents"), "doc_id", "text")
+        .orderBy("doc_id"),
+      // CCNet perplexity buckets: q74's scoring CTE + exact tercile value
+      // thresholds (quantile_cont ≡ Spark percentile, pos = (n−1)·q)
       s"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents
              WHERE len($ToksSql) >= 2),
          gs AS (SELECT doc_id, t, unnest(generate_series(2, len(t))) AS g
@@ -678,12 +411,18 @@ object QueriesText {
          SELECT doc_id, n_bigrams, nll,
            CASE WHEN nll <= t1 THEN 'head'
                 WHEN nll <= t2 THEN 'middle' ELSE 'tail' END AS bucket
-         FROM sc CROSS JOIN thr ORDER BY doc_id""",
+         FROM sc CROSS JOIN thr ORDER BY doc_id"""),
 
 
-    // DSIR importance weights: hashed unigram+bigram features (60-bit md5
-    // prefix, 64 slots), add-1-smoothed log target/raw rate ratio
-    "q81_dsir" ->
+    // ext: DSIR importance weights — hashed unigram+bigram log
+    // target/raw likelihood ratio, target = src0+src1
+    Query("q81_dsir", (s, dir) =>
+      ext.TextAnalysis.dsirWeights(
+        Tables.load(s, dir, "documents"), "doc_id", "text",
+        org.apache.spark.sql.functions.col("source").isin("src0", "src1"))
+        .orderBy("doc_id"),
+      // DSIR importance weights: hashed unigram+bigram features (60-bit md5
+      // prefix, 64 slots), add-1-smoothed log target/raw rate ratio
       s"""WITH toks AS (SELECT doc_id, source IN ('src0', 'src1') AS tgt,
              $ToksSql AS t FROM documents),
          uni AS (SELECT doc_id, tgt, unnest(t) AS f FROM toks),
@@ -707,12 +446,17 @@ object QueriesText {
                 WHERE NOT tgt GROUP BY doc_id, slot)
          SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_feats,
                 round(sum(n * lr), 6) AS logw
-         FROM dc JOIN lr USING (slot) GROUP BY doc_id ORDER BY doc_id""",
+         FROM dc JOIN lr USING (slot) GROUP BY doc_id ORDER BY doc_id"""),
 
 
-    // corpus datasheet: per-source volume, exact-dup ratio via md5
-    // digests, length percentiles, language spread
-    "q82_corpus_report" ->
+    // ext: corpus datasheet — per-source volume, dup ratio, length
+    // percentiles, language spread in one aggregation pass
+    Query("q82_corpus_report", (s, dir) =>
+      ext.TextAnalysis.corpusReport(
+        Tables.load(s, dir, "documents"))
+        .orderBy("source"),
+      // corpus datasheet: per-source volume, exact-dup ratio via md5
+      // digests, length percentiles, language spread
       s"""WITH t AS (SELECT source, lang, text,
              CASE WHEN len(trim(text)) = 0 THEN 0
                   ELSE len(string_split_regex(trim(text), '\\s+')) END AS tok
@@ -725,17 +469,31 @@ object QueriesText {
            quantile_cont(CAST(len(text) AS DOUBLE), 0.5) AS p50_chars,
            quantile_cont(CAST(len(text) AS DOUBLE), 0.9) AS p90_chars,
            CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-         FROM t GROUP BY source ORDER BY source""",
+         FROM t GROUP BY source ORDER BY source"""),
 
 
-    // BPE encoding: the generated training chain + rule fold over the
-    // distinct-word table, joined back per document
-    "q83_bpe_encode" -> BpeEncodeSql(8),
+    // ext: real token counts under the corpus-trained BPE tokenizer —
+    // the 8-merge schedule folded as literal replaces over distinct words
+    Query("q83_bpe_encode", (s, dir) =>
+      ext.TextAnalysis.bpeEncode(
+        Tables.load(s, dir, "documents"), "doc_id", "text", 8)
+        .orderBy("doc_id"),
+      // BPE encoding: the generated training chain + rule fold over the
+      // distinct-word table, joined back per document
+      BpeEncodeSql(8)),
 
 
-    // DSIR Gumbel top-k: q81's weight CTE + deterministic (salt, id)-keyed
-    // Gumbel perturbation, top 200 by perturbed weight
-    "q84_dsir_select" ->
+    // ext: DSIR Gumbel top-k — reproducible importance draw of the 200
+    // most target-like candidates, noise keyed on (salt, doc_id)
+    Query("q84_dsir_select", (s, dir) =>
+      ext.TextAnalysis.dsirSelect(
+        Tables.load(s, dir, "documents"), "doc_id", "text",
+        org.apache.spark.sql.functions.col("source").isin("src0", "src1"),
+        200)
+        .orderBy(org.apache.spark.sql.functions.col("key").desc,
+          org.apache.spark.sql.functions.col("doc_id")),
+      // DSIR Gumbel top-k: q81's weight CTE + deterministic (salt, id)-keyed
+      // Gumbel perturbation, top 200 by perturbed weight
       s"""WITH toks AS (SELECT doc_id, source IN ('src0', 'src1') AS tgt,
              $ToksSql AS t FROM documents),
          uni AS (SELECT doc_id, tgt, unnest(t) AS f FROM toks),
@@ -765,12 +523,17 @@ object QueriesText {
                    AS BIGINT) % 1048576 + 0.5) / 1048576.0 AS u
                FROM dw)
          SELECT doc_id, logw, round(logw - ln(-ln(u)), 6) AS key
-         FROM g ORDER BY key DESC, doc_id LIMIT 200""",
+         FROM g ORDER BY key DESC, doc_id LIMIT 200"""),
 
 
-    // hashed shingles mirror the Spark side exactly, so even a 60-bit
-    // collision changes both engines' distinct counts identically
-    "q96_diversity" ->
+    // ext: lexical diversity per source — cross-document distinct-shingle
+    // ratio; slice-level companion of the q94 per-document novelty
+    Query("q96_diversity", (s, dir) =>
+      ext.TextAnalysis.diversityReport(
+        Tables.load(s, dir, "documents"), "source", "text")
+        .orderBy("source"),
+      // hashed shingles mirror the Spark side exactly, so even a 60-bit
+      // collision changes both engines' distinct counts identically
       s"""WITH d AS (SELECT source, $ShinglesSql AS sh FROM documents),
          u AS (SELECT source, unnest(list_transform(sh,
                  s -> ${baseHashSql("s")})) AS h FROM d),
@@ -782,10 +545,16 @@ object QueriesText {
          SELECT source, n_docs, sh_total, sh_distinct,
            CAST(sh_distinct AS DOUBLE) / CAST(sh_total AS DOUBLE)
              AS diversity
-         FROM n JOIN a USING (source) ORDER BY source""",
+         FROM n JOIN a USING (source) ORDER BY source"""),
 
 
-    "q97_fertility" ->
+    // ext: tokenizer fertility by language under the corpus-trained
+    // 8-merge BPE schedule — chars per token, the tokenizer-fit audit
+    Query("q97_fertility", (s, dir) =>
+      ext.TextAnalysis.tokenizerFertility(
+        Tables.load(s, dir, "documents"), "doc_id", "text",
+        "lang", "n_chars", 8)
+        .orderBy("lang"),
       s"""${BpeDocTokensSql(8)}
          SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS n_chars,
@@ -793,19 +562,31 @@ object QueriesText {
            CAST(sum(n_chars) AS DOUBLE) / CAST(sum(n_tokens) AS DOUBLE)
              AS fertility
          FROM documents JOIN enc USING (doc_id)
-         GROUP BY lang ORDER BY lang""",
+         GROUP BY lang ORDER BY lang"""),
 
 
-    // multinomial NB with add-one smoothing; pred compares the ROUNDED
-    // score so both engines decide the boundary on the same double
-    "q99_quality_classifier" ->
+    // ext: GPT-3-style supervised quality filter — NB log-odds of the
+    // "curated slice" label (src0/src1), trained on the corpus itself.
+    // The classifier reads the token column three times, so the q99
+    // family (q113/q114/q120/q121/q122/q151 too) runs on the pinned
+    // raterBase projection — one tokenizer pass, released per query.
+    Query("q99_quality_classifier", (s, dir) => scoped { sc =>
+      ext.TextAnalysis.nbQualityScoreTokens(sc.pin(raterBase(s, dir)),
+        "doc_id").orderBy("doc_id")
+    },
+      // multinomial NB with add-one smoothing; pred compares the ROUNDED
+      // score so both engines decide the boundary on the same double
       s"""SELECT doc_id, n_tokens, score, pred FROM ($NbScoredSql)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
 
-    // PMI argument formed as the same left-assoc double product in both
-    // engines (exact below 2^53); ln output rounds at 6 dp
-    "q108_pmi_collocations" ->
+    // ext: PMI collocations — adjacent-bigram phrase mining over the
+    // corpus (c12 >= 5), PMI from exact-integer probability ratios
+    Query("q108_pmi_collocations", (s, dir) =>
+      pinSorted(ext.TextAnalysis.pmiCollocations(
+        Tables.load(s, dir, "documents"), "text", 5L), "w1", "w2"),
+      // PMI argument formed as the same left-assoc double product in both
+      // engines (exact below 2^53); ln output rounds at 6 dp
       s"""WITH tk AS (SELECT $ToksSql AS toks FROM documents),
          u AS (SELECT unnest(toks) AS w FROM tk),
          uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY w),
@@ -822,18 +603,34 @@ object QueriesText {
              (t2 * CAST(ua.c AS DOUBLE) * CAST(ub.c AS DOUBLE))), 6) AS pmi
          FROM bi JOIN uni ua ON ua.w = bi.w1
            JOIN uni ub ON ub.w = bi.w2, tot
-         WHERE c12 >= 5 ORDER BY w1, w2""",
+         WHERE c12 >= 5 ORDER BY w1, w2"""),
 
 
-    // k-way NB: score_c = prior_c + Σ ln(cnt+1) − n_doc·ln(T_c+V) — only
-    // OBSERVED (token, class) rows join (unseen tokens add ln(1) = 0)
-    "q112_nb_multiclass" -> s"$NbMulticlassSql ORDER BY doc_id",
+    // ext: multiclass NB — the k-way nbQualityScore (supervised language
+    // classifier trained on the lang labels; argmax on rounded scores).
+    // The tokenized projection is pinned once (the score frame reads the
+    // token column ~5x — the raterBase lesson), then released behind the
+    // narrow per-doc result.
+    Query("q112_nb_multiclass", (s, dir) => scoped { sc =>
+      ext.TextAnalysis.nbMulticlassTokens(sc.pin(nbLangBase(s, dir)),
+        "doc_id").orderBy("doc_id")
+    },
+      // k-way NB: score_c = prior_c + Σ ln(cnt+1) − n_doc·ln(T_c+V) — only
+      // OBSERVED (token, class) rows join (unseen tokens add ln(1) = 0)
+      s"$NbMulticlassSql ORDER BY doc_id"),
 
 
-    // Laplace-smoothed KL/JS over the union vocabulary; the smoothed
-    // probabilities replay the same double arithmetic in both engines and
-    // the order-dependent sums are absorbed by the 6 dp grain
-    "q129_vocab_divergence" ->
+    // ext: corpus vocabulary drift — KL/JS divergence between the English
+    // and non-English token distributions (the PSI analogue for text)
+    Query("q129_vocab_divergence", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      ext.TextAnalysis.vocabDivergence(
+        docs.filter(col("lang") === "en"),
+        docs.filter(col("lang") =!= "en"), "text")
+    },
+      // Laplace-smoothed KL/JS over the union vocabulary; the smoothed
+      // probabilities replay the same double arithmetic in both engines and
+      // the order-dependent sums are absorbed by the 6 dp grain
       s"""WITH ta AS (SELECT unnest($ToksSql) AS tok FROM documents
                 WHERE lang = 'en'),
          tb AS (SELECT unnest($ToksSql) AS tok FROM documents
@@ -856,12 +653,16 @@ object QueriesText {
            round(sum(pb * ln(pb / pa)), 6) AS kl_ba,
            round(sum(pa * ln(pa * 2.0 / (pa + pb)) / 2.0 +
                      pb * ln(pb * 2.0 / (pa + pb)) / 2.0), 6) AS js
-         FROM p GROUP BY n_a, n_b, vocab""",
+         FROM p GROUP BY n_a, n_b, vocab"""),
 
 
-    // per-doc histogram entropy: -(c/n)·ln(c/n) summed over distinct
-    // tokens; empty docs NULL, single-token docs 0 with NULL norm
-    "q130_token_entropy" ->
+    // ext: per-doc token Shannon entropy — repetition/diversity signal;
+    // the whole histogram lives in one per-row HOF chain (no shuffle)
+    Query("q130_token_entropy", (s, dir) =>
+      pinSorted(ext.TextAnalysis.tokenEntropy(
+        Tables.load(s, dir, "documents"), "doc_id", "text"), "doc_id"),
+      // per-doc histogram entropy: -(c/n)·ln(c/n) summed over distinct
+      // tokens; empty docs NULL, single-token docs 0 with NULL norm
       s"""WITH d AS (SELECT doc_id, $ToksSql AS toks FROM documents),
          base AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
                     CAST(len(list_distinct(toks)) AS INT) AS n_distinct
@@ -878,13 +679,17 @@ object QueriesText {
            CASE WHEN n_distinct > 1
              THEN round(hh / ln(CAST(n_distinct AS DOUBLE)), 6)
              END AS norm_entropy
-         FROM base LEFT JOIN ent USING (doc_id) ORDER BY doc_id""",
+         FROM base LEFT JOIN ent USING (doc_id) ORDER BY doc_id"""),
 
 
-    // OLS of ln(freq) on ln(rank) over the deterministic (count desc,
-    // token) top-200; the 5 sums fold on <=200 rows so the 6 dp grain
-    // absorbs order effects
-    "q131_zipf" ->
+    // ext: Zipf rank-frequency OLS over the top-200 tokens — corpus-health
+    // slope/r² (natural text ≈ −1); top-N via TakeOrderedAndProject
+    Query("q131_zipf", (s, dir) =>
+      ext.TextAnalysis.zipfFit(
+        Tables.load(s, dir, "documents"), "text", 200),
+      // OLS of ln(freq) on ln(rank) over the deterministic (count desc,
+      // token) top-200; the 5 sums fold on <=200 rows so the 6 dp grain
+      // absorbs order effects
       s"""WITH h AS (SELECT unnest($ToksSql) AS tok FROM documents),
          c AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM h
                GROUP BY tok ORDER BY c DESC, tok LIMIT 200),
@@ -900,32 +705,55 @@ object QueriesText {
              ((sxx - sx * sx / n_terms) * (syy - sy * sy / n_terms)), 6)
              AS r2
          FROM (SELECT *, (sxy - sx * sy / n_terms)
-                 / (sxx - sx * sx / n_terms) AS m FROM sums)""",
+                 / (sxx - sx * sx / n_terms) AS m FROM sums)"""),
 
 
-    // 5 generated GD rounds (MATERIALIZED — the chain is re-referenced);
-    // the only cross-engine divergence is gradient-avg summation order,
-    // ~1e-13 after amplification vs the 6 dp grain
-    "q134_logistic_train" ->
+    // ext: logistic-regression quality gate — 5 rounds of full-batch GD
+    // (one scan + one VectorMeanAgg gradient reduce per round, d+1-double
+    // driver update); the convex complement to the q99 NB gate
+    Query("q134_logistic_train", (s, dir) => {
+      import s.implicits._
+      val w = ext.TextAnalysis.logisticTrain(
+        logitFeatures(Tables.load(s, dir, "documents")),
+        Seq("x1", "x2"), "y")
+      w.toIndexedSeq.zipWithIndex.map { case (wi, j) => (j, wi) }
+        .toDF("j", "w")
+        .select(col("j"), round(col("w"), 6).as("weight"))
+        .orderBy("j")
+    },
+      // 5 generated GD rounds (MATERIALIZED — the chain is re-referenced);
+      // the only cross-engine divergence is gradient-avg summation order,
+      // ~1e-13 after amplification vs the 6 dp grain
       s"""$LogitChainSql
          SELECT j, round(w, 6) AS weight
          FROM (SELECT unnest([w0, w1, w2]) AS w, unnest([0, 1, 2]) AS j
                FROM it5)
-         ORDER BY j""",
+         ORDER BY j"""),
 
 
-    // sigmoid scores under the it5 weights; pred gates on the ROUNDED
-    // score so both engines compare the same double against 0.5
-    "q135_logistic_scores" ->
+    // ext: per-doc sigmoid scores + 0.5-gate under the q134 model — the
+    // scoring pass is a pure codegen map over the scan
+    Query("q135_logistic_scores", (s, dir) => {
+      val f = logitFeatures(Tables.load(s, dir, "documents"))
+      val w = ext.TextAnalysis.logisticTrain(f, Seq("x1", "x2"), "y")
+      pinSorted(ext.TextAnalysis.logisticScoreWith(f, "doc_id",
+        Seq("x1", "x2"), w), "doc_id")
+    },
+      // sigmoid scores under the it5 weights; pred gates on the ROUNDED
+      // score so both engines compare the same double against 0.5
       s"""$LogitChainSql
          SELECT doc_id,
            round(1.0 / (1.0 + exp(-$LogitDotSql)), 6) AS score,
            CASE WHEN round(1.0 / (1.0 + exp(-$LogitDotSql)), 6) >= 0.5
              THEN 1 ELSE 0 END AS pred
-         FROM f, it5 ORDER BY doc_id""",
+         FROM f, it5 ORDER BY doc_id"""),
 
 
-    "q156_length_budget" ->
+    // ext: context-length sizing study — truncation cost at candidate
+    // token budgets; kept_frac is an exact integer ratio
+    Query("q156_length_budget", (s, dir) =>
+      ext.TextAnalysis.lengthBudgetReport(
+        Tables.load(s, dir, "documents"), "text", Seq(16, 32, 64, 128)),
       s"""WITH tk AS (SELECT CAST(len($ToksSql) AS BIGINT) AS t
              FROM documents),
          x AS (SELECT t, unnest([16, 32, 64, 128]) AS budget FROM tk)
@@ -936,12 +764,17 @@ object QueriesText {
            CAST(sum(greatest(t - budget, 0)) AS BIGINT) AS tokens_lost,
            CAST(sum(least(t, budget)) AS DOUBLE)
              / CAST(sum(t) AS DOUBLE) AS kept_frac
-         FROM x GROUP BY budget ORDER BY budget""",
+         FROM x GROUP BY budget ORDER BY budget"""),
 
 
-    // per-(doc, class) NB scores shared with q112; margin = difference
-    // of the two 6 dp-rounded scores
-    "q173_label_issues" ->
+    // ext: label-issue mining — the 20 docs whose lang label the q112
+    // NB margins reject most confidently (the human-audit queue)
+    Query("q173_label_issues", (s, dir) => scoped { sc =>
+      ext.TextAnalysis.nbLabelIssuesTokens(sc.pin(nbLangBase(s, dir)),
+        "doc_id")
+    },
+      // per-(doc, class) NB scores shared with q112; margin = difference
+      // of the two 6 dp-rounded scores
       s"""$NbMulticlassCtesSql,
          r AS (SELECT doc_id, cls, score,
                  row_number() OVER (PARTITION BY doc_id
@@ -956,12 +789,19 @@ object QueriesText {
            round(top.ps - own.ls, 6) AS margin
          FROM top JOIN own ON own.doc_id = top.doc_id
          WHERE top.pred <> own.label
-         ORDER BY margin DESC, top.doc_id LIMIT 20""",
+         ORDER BY margin DESC, top.doc_id LIMIT 20"""),
 
-    // q129's smoothing arithmetic per slice on the dense
-    // (source x global token) grid: rest counts = global − own, the
-    // union vocabulary IS the global one (own ∪ rest = corpus)
-    "q204_vocab_div_by_source" ->
+    // ext: per-source vocabulary drift — each source's token
+    // distribution vs the rest of the corpus (q129's by-slice view,
+    // "which source's vocabulary moved?"); one (source, token)
+    // aggregation, rest = global − own, each row ≡ the pairwise member
+    Query("q204_vocab_div_by_source", (s, dir) =>
+      ext.TextAnalysis.vocabDivergenceBy(
+        Tables.load(s, dir, "documents"), "source", "text")
+        .orderBy("source"),
+      // q129's smoothing arithmetic per slice on the dense
+      // (source x global token) grid: rest counts = global − own, the
+      // union vocabulary IS the global one (own ∪ rest = corpus)
       s"""WITH h AS (SELECT source AS g, unnest($ToksSql) AS tok
              FROM documents WHERE source IS NOT NULL),
          pg AS (SELECT g, tok, CAST(count(*) AS BIGINT) AS c
@@ -989,13 +829,28 @@ object QueriesText {
            round(sum(pb * ln(pb / pa)), 6) AS kl_ba,
            round(sum(pa * ln(pa * 2.0 / (pa + pb)) / 2.0 +
                      pb * ln(pb * 2.0 / (pa + pb)) / 2.0), 6) AS js
-         FROM p GROUP BY g, n_g, n, vocab ORDER BY source""",
+         FROM p GROUP BY g, n_g, n, vocab ORDER BY source"""),
 
-    // the VocabDriftAgg replay: top-50 baseline vocabulary (count desc,
-    // token asc) from the even half, live tokens projected onto it with
-    // the tail in the ' ' OOV cell, q129's smoothing over the FIXED
-    // K+1 serving categories
-    "q205_vocab_windowed" ->
+    // ext: WINDOWED vocabulary drift — each day's token mix vs a
+    // driver-held top-50 baseline vocabulary from the even half
+    // (q129's serving twin: K+1 bounded counters per window, the OOV
+    // cell carries the tail); day = doc_id % 3 synthesizes the event
+    // time the documents table doesn't carry
+    Query("q205_vocab_windowed", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val (bc, bt) = ext.TextAnalysis.vocabBaseline(
+        docs.filter(col("doc_id") % 2 === 0), "text", 50)
+      val live = docs.select(
+        timestamp_seconds(lit(1704067200L) + (col("doc_id") % 3) * 86400L)
+          .as("ts"),
+        col("text"))
+      ext.TextAnalysis.vocabDivergenceWindowed(live, "ts", "text", bc, bt)
+        .orderBy("ws")
+    },
+      // the VocabDriftAgg replay: top-50 baseline vocabulary (count desc,
+      // token asc) from the even half, live tokens projected onto it with
+      // the tail in the ' ' OOV cell, q129's smoothing over the FIXED
+      // K+1 serving categories
       s"""WITH h0 AS (SELECT doc_id, unnest($ToksSql) AS tok
              FROM documents),
          base AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM h0
@@ -1033,11 +888,26 @@ object QueriesText {
            round(sum(pb * ln(pb / pa)), 6) AS kl_ba,
            round(sum(pa * ln(pa * 2.0 / (pa + pb)) / 2.0 +
                      pb * ln(pb * 2.0 / (pa + pb)) / 2.0), 6) AS js
-         FROM p GROUP BY ws, n_live ORDER BY ws""",
+         FROM p GROUP BY ws, n_live ORDER BY ws"""),
 
-    // the q205 replay with source joined into the live groupings —
-    // same top-50 baseline, same K+1 smoothing, per (day, source) cell
-    "q206_vocab_windowed_by" ->
+    // ext: WINDOWED vocabulary drift BY SLICE — "which feed's
+    // vocabulary moved, per day": q205's monitor with the source in the
+    // grouping, every (day, source) cell vs the same driver-held top-50
+    // baseline vocabulary, K+1 counters per cell by construction
+    Query("q206_vocab_windowed_by", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val (bc, bt) = ext.TextAnalysis.vocabBaseline(
+        docs.filter(col("doc_id") % 2 === 0), "text", 50)
+      val live = docs.select(
+        timestamp_seconds(lit(1704067200L) + (col("doc_id") % 3) * 86400L)
+          .as("ts"),
+        col("source"), col("text"))
+      ext.TextAnalysis.vocabDivergenceWindowed(live, "ts", "text", bc, bt,
+          slice = Some("source"))
+        .orderBy("ws", "source")
+    },
+      // the q205 replay with source joined into the live groupings —
+      // same top-50 baseline, same K+1 smoothing, per (day, source) cell
       s"""WITH h0 AS (SELECT doc_id, source, unnest($ToksSql) AS tok
              FROM documents),
          base AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM h0
@@ -1076,13 +946,32 @@ object QueriesText {
            round(sum(pb * ln(pb / pa)), 6) AS kl_ba,
            round(sum(pa * ln(pa * 2.0 / (pa + pb)) / 2.0 +
                      pb * ln(pb * 2.0 / (pa + pb)) / 2.0), 6) AS js
-         FROM p GROUP BY ws, source, n_live ORDER BY ws, source""",
+         FROM p GROUP BY ws, source, n_live ORDER BY ws, source"""),
 
-    // composes the windowed-member replays on the scored document
-    // stream, joined on ws: one shared per-value cumulative table feeds
-    // KS and rank-sum (the gate's own shape), chi2 on the lang mix,
-    // the q205 vocabulary replay — every baseline from the day-1 slice
-    "q207_text_gate_windowed" ->
+    // ext: THE TEXT-FEED GATE AS ONE STATEFUL PASS — q201's fusion
+    // applied to a document stream: per day, quality KS + rank-sum +
+    // language-mix chi2 + vocabulary KL/JS in a single windowed
+    // aggregation (one state store where four standing crawl monitors
+    // ran before); every baseline from the day-1 snapshot
+    Query("q207_text_gate_windowed", (s, dir) => scoped { sc =>
+      val docs = Tables.load(s, dir, "documents")
+      val live = sc.pin(docs.select(
+        timestamp_seconds(
+          lit(1704067200L) + (col("doc_id") % 3) * 86400L).as("ts"),
+        col("lang"), col("text")))
+      val week = live.filter(col("ts") < lit("2024-01-02").cast("timestamp"))
+      val (bv, bc) = ext.Eval.ksBaseline(
+        week.select(round(ext.TextAnalysis.qualityScore("text"), 6)
+          .as("q")), "q")
+      val (bcats, _) = ext.Outliers.chiSquareBaseline(week, "lang")
+      val (vc, vt) = ext.TextAnalysis.vocabBaseline(week, "text", 50)
+      ext.TextAnalysis.textGateWindowed(live, "ts", "text", "lang",
+        bv, bc, bcats, vc, vt)
+    }.orderBy("ws"),
+      // composes the windowed-member replays on the scored document
+      // stream, joined on ws: one shared per-value cumulative table feeds
+      // KS and rank-sum (the gate's own shape), chi2 on the lang mix,
+      // the q205 vocabulary replay — every baseline from the day-1 slice
       s"""$QualityCtesSql,
          d0 AS (SELECT doc_id,
              TIMESTAMP '2024-01-01' + (doc_id % 3) * INTERVAL 1 DAY
@@ -1253,6 +1142,6 @@ object QueriesText {
            JOIN x2 ON x2.ws = ks.ws
            LEFT JOIN crit2 ON crit2.ws = ks.ws
            JOIN vagg ON vagg.ws = ks.ws
-         ORDER BY ks.ws""",
+         ORDER BY ks.ws"""),
   )
 }

@@ -614,8 +614,6 @@ object QueryShared {
                  / CAST(len(list_distinct(list_concat(da.sh, db.sh))) AS DOUBLE) AS jaccard
              FROM cand c JOIN d da ON da.doc_id = c.id_a JOIN d db ON db.doc_id = c.id_b)"""
 
-  /** DuckDB-equivalent SQL per query (same column names, same rounding). */
-
   // shared by q95 (inline sides) and q100 (store-served reference side):
   // the two shapes are pinned to pair-identical output
   private[graft] lazy val CrossDedupSql =
@@ -643,7 +641,4 @@ object QueryShared {
                  JOIN d db ON db.doc_id = c.id_ref)
          SELECT id_new, id_ref, round(jaccard, 6) AS jaccard
          FROM j WHERE jaccard >= 0.3 ORDER BY id_new, id_ref"""
-
-  /** Continuation of [[oracleSql]] (the map literal splits around
-    * [[CrossDedupSql]]). */
 }

@@ -43,7 +43,10 @@ class GridGuardSuite extends AnyFunSuite {
           df.withColumn("y", lit(1)), "v", "y")),
         "aucRoc" -> (() => Eval.aucRoc(
           df.withColumn("y", ($"v" > 0.5).cast("int")), "v", "y")),
-        "chiSquareDrift" -> (() => Outliers.chiSquareDrift(half, df, "v")))
+        "chiSquareDrift" -> (() => Outliers.chiSquareDrift(half, df, "v")),
+        "blendKeyed" -> (() => Eval.blendKeyed(
+          df.withColumn("id", monotonically_increasing_id()), "id",
+          Seq("v" -> 1.0))))
       val sc = spark.sparkContext
       hits.foreach { case (name, run) =>
         val before = sc.getPersistentRDDs.keySet.toSet

@@ -3,13 +3,36 @@
 (sbt "runMain graft.Verify <sfDir> <outDir>"), then this script compares each
 <outDir>/<name> parquet against the DuckDB oracle in <outDir>/oracle_sql.json.
 
-Usage: python3 tools/local_verify.py [sfDir] [outDir]
+Usage: python3 tools/local_verify.py [sfDir] [outDir] [--hashes FILE]
+
+--hashes FILE also writes one line per query, "<name> <sha256>", hashing the
+query's output in written order (part files sorted by name, rows in file
+order), and a last line with the sha256 of oracle_sql.json. Two checkouts
+produced identical outputs iff their hash files are equal (`diff`).
 """
-import json, sys, glob, math
+import hashlib, json, sys, glob, math
 import duckdb
 
+hashes = None
+if "--hashes" in sys.argv:
+    i = sys.argv.index("--hashes")
+    hashes = sys.argv[i + 1]
+    del sys.argv[i:i + 2]
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+
+
+def output_sha256(name):
+    """sha256 of <out>/<name>'s schema and rows, in written order."""
+    import pyarrow.parquet as pq
+    h = hashlib.sha256()
+    for f in sorted(glob.glob(f"{out}/{name}/*.parquet")):
+        t = pq.read_table(f)
+        h.update(repr([(fl.name, str(fl.type)) for fl in t.schema]).encode())
+        for row in t.to_pylist():
+            h.update(repr(row).encode())
+    return h.hexdigest()
+
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
@@ -58,4 +81,10 @@ for name, sql in sorted(oracle.items()):
     else:
         print(f"PASS {name} ({len(got)} rows)")
 print(f"{'ALL PASS' if fail == 0 else f'{fail} FAILURES'} / {len(oracle)} queries")
+if hashes:
+    with open(hashes, "w") as fh:
+        for name in sorted(oracle):
+            fh.write(f"{name} {output_sha256(name)}\n")
+        with open(f"{out}/oracle_sql.json", "rb") as oj:
+            fh.write(f"oracle_sql.json {hashlib.sha256(oj.read()).hexdigest()}\n")
 sys.exit(1 if fail else 0)
