@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * UI-less sandbox edition): a SparkListener records every job's duration
   * and call site while the query runs once (after one untimed warmup), so
   * "2.6 s" attributes to the pins / collects / aggregate jobs that spend
-  * it. Diagnostics only — not part of the driver contract.
+  * it. The last line, `== suite queries=N jobs=J`, totals the jobs of the
+  * queries that ran. Diagnostics only — not part of the driver contract.
   *
   * Usage: runMain graft.ProbeJobs <sfDir> <nameSubstr...>
   */
@@ -39,12 +40,12 @@ object ProbeJobs {
     def run(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Option[Double] =
       Harness.timed(spark, s"[probeJobs] $name")(fn(spark, sfDir))
-    SparkEntry.select(SparkEntry.queries, names).foreach { case (name, fn) =>
+    val perQuery = SparkEntry.select(SparkEntry.queries, names).flatMap { case (name, fn) =>
       // warmup (untimed) with block release, exactly the bench discipline
       run(name, fn)
       Thread.sleep(500)
       done.clear()
-      run(name, fn).foreach { total =>
+      run(name, fn).map { total =>
         Thread.sleep(300)
         val rows = done.toArray(Array.empty[(Int, Long, String)]).sortBy(_._1)
         val sum = rows.map(_._2).sum / 1e3
@@ -52,8 +53,10 @@ object ProbeJobs {
         rows.foreach { case (id, ms, site) =>
           println(f"   job $id%4d  ${ms / 1e3}%7.3f s  $site")
         }
+        rows.length
       }
     }
+    println(s"== suite queries=${perQuery.size} jobs=${perQuery.sum}")
     spark.stop()
   }
 }

@@ -62,9 +62,9 @@ object SparkEntry {
     all
   }
 
-  /** Each declared query's Spark body, by name. */
+  /** Each declared query's Spark body in its declared order, by name. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    declared(families).map(q => q.name -> q.body).toMap
+    declared(families).map(q => q.name -> (q.run _)).toMap
 
   /** Each declared query's DuckDB oracle SQL, by name. */
   def oracleSql: Map[String, String] =

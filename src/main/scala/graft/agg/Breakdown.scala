@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.agg.BreakdownSpec.{Row => SpecRow, Spec}
+import graft.util.OutputOrder
 
 /** The breakdown aggregation engine: compiles a variable-spec into ONE
   * `groupBy(keys).agg(exprs…)` — a single shuffle on low-cardinality
@@ -32,7 +33,10 @@ import graft.agg.BreakdownSpec.{Row => SpecRow, Spec}
   *   - `count` stays integral (the reference casts to float);
   *   - `pNN` skips nulls (the reference's np.percentile lets NaN poison the
   *     result — a bug we do not replicate);
-  *   - output rows are sorted by the group keys (pandas groupby sorts).
+  *   - output rows are sorted by the group keys (pandas groupby sorts),
+  *     by [[graft.util.OutputOrder.sorted]]: a report has one row per
+  *     classificatory group, so it is sorted in one partition with no
+  *     range-sampling job re-running the aggregation.
   */
 object Breakdown {
 
@@ -42,12 +46,11 @@ object Breakdown {
   def run(df: DataFrame, spec: Spec): DataFrame = {
     val keys = spec.keys
     val aggs0 = spec.aggs
+    val keyCols = keys.map(r => keyCol(df, r).as(r.outName))
+    val byKeys = keys.map(r => col(r.outName))
     if (keys.nonEmpty && aggs0.isEmpty) {
       // keys-only degenerate: the distinct groups (bm_breakdown.py:102-104)
-      return df
-        .select(keys.map(r => keyCol(df, r).as(r.outName)): _*)
-        .distinct()
-        .orderBy(keys.map(r => col(r.outName)): _*)
+      return OutputOrder.sorted(df.select(keyCols: _*).distinct(), byKeys)
     }
     // FUSION: n unweighted exact-quantile ops on the same variable become
     // ONE percentile(x, array(q…)) aggregate. Spark's Percentile is a
@@ -99,16 +102,10 @@ object Breakdown {
           case None => col(r.outName)
         }
       }
-    val out =
-      if (keys.isEmpty) df.agg(aggCols.head, aggCols.tail: _*).select(finalCols: _*)
-      else {
-        val keyCols = keys.map(r => keyCol(df, r).as(r.outName))
-        df.groupBy(keyCols: _*)
-          .agg(aggCols.head, aggCols.tail: _*)
-          .select(finalCols: _*)
-          .orderBy(keys.map(r => col(r.outName)): _*)
-      }
-    out
+    // no keys: groupBy() is the global aggregate and byKeys is Nil
+    OutputOrder.sorted(df.groupBy(keyCols: _*)
+      .agg(aggCols.head, aggCols.tail: _*)
+      .select(finalCols: _*), byKeys)
   }
 
   /** Group key with nulls (and NaN) rendered as −99, merging with literal
@@ -123,9 +120,6 @@ object Breakdown {
       case _ => c
     }
   }
-
-  private val pandasOps =
-    Set("count", "sum", "mean", "min", "max", "var", "std", "sem")
 
   private def aggCol(df: DataFrame, r: SpecRow): Column = {
     val cols = df.columns.toSet

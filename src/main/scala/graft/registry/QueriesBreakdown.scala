@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
+import graft.operators.Factorize
 import graft.sources.Ingest
 import graft.QueryShared._
 
@@ -22,6 +20,7 @@ object QueriesBreakdown {
           "l_returnflag;l_linestatus;l_quantity=sum_qty,sum;" +
           "l_extendedprice=avg_price,mean;l_discount=cnt_disc,count;" +
           "l_quantity=min_qty,min;l_quantity=max_qty,max"), 4),
+      Nil,
       """SELECT l_returnflag, l_linestatus,
          round(coalesce(sum(l_quantity),0),4) AS sum_qty,
          round(avg(l_extendedprice),4) AS avg_price,
@@ -39,6 +38,7 @@ object QueriesBreakdown {
           "l_returnflag;l_quantity=wavg_qty,mean,l_discount;" +
           "l_extendedprice=wsum_rev,sum,l_discount"),
         "wavg_qty" -> 6, "wsum_rev" -> 4),
+      Nil,
       """SELECT l_returnflag,
          round(CASE WHEN sum(CASE WHEN l_quantity IS NOT NULL THEN coalesce(l_discount,0) ELSE 0 END) <> 0
            THEN sum(CASE WHEN l_quantity IS NOT NULL THEN l_quantity*coalesce(l_discount,0) ELSE 0 END)
@@ -54,6 +54,7 @@ object QueriesBreakdown {
         Breakdown(li(s, dir),
           "l_returnflag;l_quantity=var_qty,var;l_quantity=std_qty,std;" +
           "l_quantity=sem_qty,sem;l_quantity=cnt_qty,count"), 6),
+      Nil,
       """SELECT l_returnflag,
          round(var_samp(l_quantity),6) AS var_qty,
          round(stddev_samp(l_quantity),6) AS std_qty,
@@ -69,6 +70,7 @@ object QueriesBreakdown {
           "l_returnflag;l_extendedprice=q1_price,q1;" +
           "l_extendedprice=q2_price,q2;l_extendedprice=q3_price,q3;" +
           "l_extendedprice=p10_price,p10;l_extendedprice=p90_price,p90"), 4),
+      Nil,
       """SELECT l_returnflag,
          round(quantile_cont(l_extendedprice, 0.25),4) AS q1_price,
          round(quantile_cont(l_extendedprice, 0.50),4) AS q2_price,
@@ -83,6 +85,7 @@ object QueriesBreakdown {
       Breakdown(ord(s, dir),
         "o_orderstatus;o_orderpriority=major_prio,major;" +
         "o_orderpriority=prio_list,list;o_orderkey=cnt,count"),
+      Nil,
       """WITH base AS (
            SELECT o_orderstatus,
              string_agg(DISTINCT o_orderpriority, ',' ORDER BY o_orderpriority) AS prio_list,
@@ -111,6 +114,7 @@ object QueriesBreakdown {
           "l_returnflag;l_quantity=wq1_qty,q1,l_linenumber;" +
           "l_quantity=wq2_qty,q2,l_linenumber;" +
           "l_quantity=wq3_qty,q3,l_linenumber"), 6),
+      Nil,
       """WITH v AS (
            SELECT l_returnflag AS k, l_quantity AS a,
                   CAST(l_linenumber AS DOUBLE) AS w
@@ -155,6 +159,7 @@ object QueriesBreakdown {
           li(s, dir).withColumn("rf_masked",
             when(col("l_returnflag") === "N", lit(null)).otherwise(col("l_returnflag"))),
           "rf_masked;l_quantity=sum_qty,sum"), 4),
+      Nil,
       """SELECT coalesce(nullif(l_returnflag,'N'),'-99') AS rf_masked,
          round(coalesce(sum(l_quantity),0),4) AS sum_qty
          FROM lineitem GROUP BY 1 ORDER BY 1"""),
@@ -168,7 +173,7 @@ object QueriesBreakdown {
       Util.roundDoubles(
         Breakdown(Ingest.maskSentinel(withSentinel),
           "q99=n_notnull,count;q99=sum_q,sum;l_orderkey=n_rows,count"), 4)
-    },
+    }, Nil,
       """WITH m AS (
            SELECT l_orderkey,
              nullif(CASE WHEN l_quantity <= 2 THEN -99.0 ELSE l_quantity END, -99.0) AS q99
@@ -187,6 +192,7 @@ object QueriesBreakdown {
             "l_discount > 0.05 AND l_returnflag = 'R'"),
           "l_linestatus;l_extendedprice=sum_price,sum;l_orderkey=cnt,count"),
         "sum_price" -> 4),
+      Nil,
       """SELECT l_linestatus,
          round(coalesce(sum(l_extendedprice),0),4) AS sum_price,
          count(l_orderkey) AS cnt
@@ -199,8 +205,8 @@ object QueriesBreakdown {
     Query("q10_factorize", (s, dir) =>
       Factorize(li(s, dir), "l_returnflag", "rf_idx")
         .groupBy(col("l_returnflag"), col("rf_idx"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("l_returnflag")),
+        .agg(count(lit(1)).as("cnt")),
+      Seq(col("l_returnflag")),
       """WITH g AS (
            SELECT l_returnflag, count(*) AS cnt FROM lineitem GROUP BY l_returnflag)
          SELECT l_returnflag,
@@ -214,6 +220,7 @@ object QueriesBreakdown {
     Query("q48_list_capped", (s, dir) =>
       Breakdown(ord(s, dir),
         "o_orderstatus;o_orderpriority=prio_l,list3;o_custkey=cust_l,list2"),
+      Nil,
       """SELECT o_orderstatus,
            array_to_string(list_slice(
              list_sort(list(DISTINCT o_orderpriority)
@@ -235,6 +242,7 @@ object QueriesBreakdown {
       Breakdown(ord(s, dir),
         "o_orderstatus;o_custkey=nuniq_cust,nunique;" +
         "o_orderpriority=nuniq_prio,nunique"),
+      Nil,
       """SELECT o_orderstatus,
            count(DISTINCT o_custkey) AS nuniq_cust,
            count(DISTINCT o_orderpriority) AS nuniq_prio

@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 import graft.util.Checkpoints.scoped
 
@@ -22,8 +17,8 @@ object QueriesDedup {
     Query("q20_dedup_exact", (s, dir) =>
       ext.Dedup.exact(
         Tables.load(s, dir, "documents").withColumn("pfx", expr("substr(text, 1, 20)")),
-        "pfx", "doc_id")
-        .orderBy("content_hash"),
+        "pfx", "doc_id"),
+      Seq(col("content_hash")),
       """WITH m AS (SELECT md5(substr(text, 1, 20)) AS content_hash, doc_id FROM documents)
          SELECT content_hash, min(doc_id) AS canonical_id, count(*) AS n_copies
          FROM m GROUP BY content_hash HAVING count(*) > 1
@@ -34,8 +29,8 @@ object QueriesDedup {
     Query("q21_minhash_lsh", (s, dir) =>
       ext.Dedup.minhashLsh(Tables.load(s, dir, "documents"), "text", "doc_id",
         numHashes = 16, bands = 4, minJaccard = 0.3)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b"),
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard")),
+      Seq(col("id_a"), col("id_b")),
       s"""$MinhashPairsSql
          SELECT id_a, id_b, round(jaccard, 6) AS jaccard
          FROM j WHERE jaccard >= 0.3 ORDER BY id_a, id_b"""),
@@ -44,8 +39,8 @@ object QueriesDedup {
     // ext: 60-bit SimHash sketch per document (expression-only bit fold)
     Query("q22_simhash", (s, dir) =>
       Tables.load(s, dir, "documents")
-        .select(col("doc_id"), ext.Dedup.simhash("text").as("sketch"))
-        .orderBy("doc_id"),
+        .select(col("doc_id"), ext.Dedup.simhash("text").as("sketch")),
+      Seq(col("doc_id")),
       s"""WITH t AS (SELECT doc_id, list_distinct($ToksSql) AS toks FROM documents)
          SELECT doc_id, $SimhashSketchSql AS sketch
          FROM t ORDER BY doc_id"""),
@@ -56,11 +51,10 @@ object QueriesDedup {
     // (ExtSuite proves output-identical) and the shape that survives
     // blocks of millions of documents; cross-block recall is q21's LSH job
     Query("q23_ngram_jaccard", (s, dir) =>
-      pinSorted(
-        ext.Dedup.ngramJaccardPairsPrefix(Tables.load(s, dir, "documents"),
+      ext.Dedup.ngramJaccardPairsPrefix(Tables.load(s, dir, "documents"),
           "text", "doc_id", Seq("lang", "source"), 0.3)
           .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard")),
-        "id_a", "id_b"),
+      Seq(col("id_a"), col("id_b")),
       s"""WITH d AS (SELECT doc_id, concat(lang, source) AS blk, $ShinglesSql AS sh FROM documents),
          j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                  (CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE))
@@ -75,8 +69,8 @@ object QueriesDedup {
     Query("q43_dup_components", (s, dir) => {
       val pairs = ext.Dedup.minhashLsh(Tables.load(s, dir, "documents"),
         "text", "doc_id", numHashes = 16, bands = 4, minJaccard = 0.3)
-      ext.Dedup.connectedComponents(pairs).orderBy("doc_id")
-    },
+      ext.Dedup.connectedComponents(pairs)
+    }, Seq(col("doc_id")),
       // transitive closure over the verified pair list (undirected), then
       // min reachable id per member — DuckDB's recursive CTE as the oracle
       // for the label-propagation connected components
@@ -101,7 +95,7 @@ object QueriesDedup {
       val sk = sc.pin(Tables.load(s, dir, "documents")
         .select(col("doc_id"), ext.Dedup.simhash("text").as("sk")))
       ext.Dedup.hammingNearDups(sk, "sk", "doc_id", maxHamming = 2)
-    }.orderBy("id_a", "id_b"),
+    }, Seq(col("id_a"), col("id_b")),
       // pigeonhole banding: 3 chunks of 20 bits; hamming ≤ 2 ⇒ some chunk equal
       s"""WITH tk AS (SELECT doc_id, list_distinct($ToksSql) AS toks FROM documents),
          t AS (SELECT doc_id, $SimhashSketchSql AS sk FROM tk),
@@ -123,8 +117,7 @@ object QueriesDedup {
         .withColumn("ts", col("doc_id").cast("timestamp"))
       ext.Dedup.lshDedupSurvivors(docs, "text", "doc_id", "ts", "100 seconds")
         .select(col("ws").cast("long").as("ws"), col("doc_id"))
-        .orderBy("ws", "doc_id")
-    },
+    }, Seq(col("ws"), col("doc_id")),
       // windowed LSH dedup survivors: min-id wins each (window, band, bucket);
       // a doc survives iff it wins all `bands` of its buckets
       s"""WITH d AS (SELECT doc_id, $ShinglesSql AS sh FROM documents),
@@ -148,8 +141,8 @@ object QueriesDedup {
         docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0),
         "text", "doc_id")
-        .select("doc_id").orderBy("doc_id")
-    },
+        .select("doc_id")
+    }, Seq(col("doc_id")),
       s"""WITH b AS (SELECT DISTINCT unnest($ShinglesSql) AS sh
              FROM documents WHERE doc_id % 97 = 0),
          ce AS (SELECT doc_id, unnest($ShinglesSql) AS sh
@@ -173,8 +166,7 @@ object QueriesDedup {
         .select(col("doc_id"),
           concat_ws("\n", col("text"), col("ltext")).as("text"))
       ext.Dedup.dedupLines(multi, "text", "doc_id", maxOccurrences = 2)
-        .orderBy("doc_id")
-    },
+    }, Seq(col("doc_id")),
       // corpus-level line dedup on the synthesized 2-line docs: lines
       // occurring more than twice across the corpus are dropped everywhere,
       // remaining lines reassemble in order (docs may empty to '')
@@ -205,8 +197,8 @@ object QueriesDedup {
         docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0),
         "text", "doc_id")
-        .select("doc_id").orderBy("doc_id")
-    },
+        .select("doc_id")
+    }, Seq(col("doc_id")),
       // identical semantics to q60 — the broadcast kernel must agree with
       // the join shape exactly
       s"""WITH b AS (SELECT DISTINCT unnest($ShinglesSql) AS sh
@@ -224,7 +216,8 @@ object QueriesDedup {
     Query("q67_semantic_dedup", (s, dir) =>
       ext.Similarity.semanticDedup(
         Tables.load(s, dir, "embeddings"), 0.3, "label")
-        .select("vec_id").orderBy("vec_id"),
+        .select("vec_id"),
+      Seq(col("vec_id")),
       // SemDeDup replay: label-bucket cosine pairs (q24 shape) → recursive
       // closure (q43 shape) → drop non-canonical members
       s"""WITH RECURSIVE
@@ -251,8 +244,7 @@ object QueriesDedup {
         docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0),
         "text", "doc_id")
-        .orderBy("doc_id")
-    },
+    }, Seq(col("doc_id")),
       // decontamination audit: q60's corpus/bench split with the hit count
       // kept instead of collapsed into the anti-join
       s"""WITH b AS (SELECT DISTINCT unnest($ShinglesSql) AS sh
@@ -275,8 +267,7 @@ object QueriesDedup {
         .select(col("doc_id"),
           concat_ws("\n", col("text"), col("ltext")).as("text"))
       ext.Dedup.boilerplateReport(multi, "text", maxOccurrences = 2)
-        .orderBy("line")
-    },
+    }, Seq(col("line")),
       // boilerplate audit: q63's synthesized corpus, hot lines + counts
       """WITH multi AS (
            SELECT a.doc_id AS doc_id,
@@ -300,9 +291,8 @@ object QueriesDedup {
           "lid")
         .select(col("doc_id"),
           concat_ws("\n", col("text"), col("ltext")).as("text"))
-      pinSorted(ext.Dedup.duplicatedSpans(multi, "doc_id", "text"),
-        "doc_id", "span_start")
-    },
+      ext.Dedup.duplicatedSpans(multi, "doc_id", "text")
+    }, Seq(col("doc_id"), col("span_start")),
       // substring-duplication spans: q72's synthesized corpus; duplicated
       // 8-token windows counted corpus-wide, consecutive starts merged into
       // maximal spans (islands by pos - row_number)
@@ -343,9 +333,8 @@ object QueriesDedup {
           "lid")
         .select(col("doc_id"),
           concat_ws("\n", col("text"), col("ltext")).as("text"))
-      pinSorted(ext.Dedup.stripDuplicatedSpans(multi, "doc_id", "text"),
-        "doc_id")
-    },
+      ext.Dedup.stripDuplicatedSpans(multi, "doc_id", "text")
+    }, Seq(col("doc_id")),
       // span removal: q73's spans anti-applied to the token stream; rows
       // preserved (fully-duplicated docs rebuild to '')
       """WITH multi AS (
@@ -393,8 +382,8 @@ object QueriesDedup {
         docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0),
         "text", "doc_id")
-        .select("doc_id").orderBy("doc_id")
-    },
+        .select("doc_id")
+    }, Seq(col("doc_id")),
       // same semantics (and SQL) as q60 — the bloom prune is an internal
       // optimization the exact confirm join erases
       s"""WITH b AS (SELECT DISTINCT unnest($ShinglesSql) AS sh
@@ -419,8 +408,7 @@ object QueriesDedup {
           concat(col("text"), lit(" v2"))).otherwise(col("text")))
       val newSnap = docs.filter(bucket("rm") >= cut(0.03))
       ext.Dedup.snapshotDiff(oldSnap, newSnap, "doc_id", "text")
-        .orderBy("doc_id")
-    }, {
+    }, Seq(col("doc_id")), {
       val cut05 = (0.05 * ext.Sampling.Space).toLong
       val cut10 = (0.10 * ext.Sampling.Space).toLong
       val cut03 = (0.03 * ext.Sampling.Space).toLong
@@ -445,8 +433,8 @@ object QueriesDedup {
     // of pairwise dedup
     Query("q94_novelty", (s, dir) =>
       ext.TextAnalysis.noveltyScore(
-        Tables.load(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id"),
+        Tables.load(s, dir, "documents"), "doc_id", "text"),
+      Seq(col("doc_id")),
       // novelty over the same 60-bit shingle-hash convention the dedup
       // stack uses (first 15 md5 hex digits)
       s"""WITH d AS (SELECT doc_id, unnest(list_transform($ShinglesSql,
@@ -472,8 +460,7 @@ object QueriesDedup {
         docs.filter(isNew), docs.filter(!isNew), "text", "doc_id",
         minJaccard = 0.3)
         .withColumn("jaccard", round(col("jaccard"), 6))
-        .orderBy("id_new", "id_ref")
-    },
+    }, Seq(col("id_new"), col("id_ref")),
       // q21's minhash machinery with a side column: candidates pair only
       // across the hash-half split (side 0 = "new crawl", side 1 = corpus)
       CrossDedupSql),
@@ -490,11 +477,10 @@ object QueriesDedup {
       val path = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_q100_store_${s.sparkContext.applicationId}").toString
       ext.Dedup.writeLshStore(docs.filter(!isNew), "text", "doc_id", path)
-      pinSorted(ext.Dedup.minhashLshCrossFromStore(docs.filter(isNew),
+      ext.Dedup.minhashLshCrossFromStore(docs.filter(isNew),
         s, path, "text", "doc_id", minJaccard = 0.3)
-        .withColumn("jaccard", round(col("jaccard"), 6)),
-        "id_new", "id_ref")
-    },
+        .withColumn("jaccard", round(col("jaccard"), 6))
+    }, Seq(col("id_new"), col("id_ref")),
       // the store-served path is pinned to the SAME oracle: serving the
       // reference side from its persisted index must not change one pair
       CrossDedupSql),
@@ -511,9 +497,9 @@ object QueriesDedup {
           "lid")
         .select(col("doc_id"),
           concat_ws("\n\n", col("text"), col("ltext")).as("text"))
-      pinSorted(ext.Dedup.dedupParagraphs(multi, "text", "doc_id",
-        maxOccurrences = 2), "doc_id")
-    },
+      ext.Dedup.dedupParagraphs(multi, "text", "doc_id",
+        maxOccurrences = 2)
+    }, Seq(col("doc_id")),
       // q63's CTE shape with the paragraph splitter and joiner
       """WITH multi AS (
            SELECT a.doc_id AS doc_id,
@@ -547,13 +533,12 @@ object QueriesDedup {
           "lid")
         .select(col("doc_id"),
           concat_ws(" ", col("text"), col("ltext")).as("text"))
-      // pinSorted: the containment plan runs the shingle kernel 4× by
-      // design; without the pin the final orderBy's range-sampling pass
-      // ran ALL of it a second time (r14 job profile: duplicated
-      // equal-cost jobs)
-      pinSorted(ext.Dedup.containmentPairs(multi, "text", "doc_id",
-        minContainment = 0.5), "id_a", "id_b")
-    },
+      // the containment plan runs the shingle kernel 4× by design; the
+      // declared order sorts its pairs in one partition, so no
+      // range-sampling pass runs all of it a second time
+      ext.Dedup.containmentPairs(multi, "text", "doc_id",
+        minContainment = 0.5)
+    }, Seq(col("id_a"), col("id_b")),
       // bottom-k sampled-membership candidates (the 8 smallest shingle
       // hashes probe the full inverted index) + exact containment verify;
       // integer-ratio containments stay unrounded (exact divisions)
@@ -589,8 +574,8 @@ object QueriesDedup {
     Query("q115_decontam_split", (s, dir) =>
       pipeline.CorpusCuration.decontaminatedSplit(
         Tables.load(s, dir, "documents"), "text", "doc_id",
-        testFrac = 0.2, minJaccard = 0.3, salt = "ds")
-        .orderBy("doc_id"), {
+        testFrac = 0.2, minJaccard = 0.3, salt = "ds"),
+      Seq(col("doc_id")), {
       // q95's cross-LSH machinery pointed at the split boundary (side =
       // hashSplit bucket vs the interpolated 80% threshold); leaky train
       // docs anti-join away, test survives intact
@@ -631,10 +616,10 @@ object QueriesDedup {
     // dedup policy (threshold form band-limits the DP; length prefilter)
     Query("q136_edit_verify", (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      pinSorted(ext.Dedup.editDistanceVerify(
+      ext.Dedup.editDistanceVerify(
         ext.Dedup.minhashCandidates(docs, "text", "doc_id"),
-        docs, "doc_id", "text", 50), "id_a", "id_b")
-    },
+        docs, "doc_id", "text", 50)
+    }, Seq(col("id_a"), col("id_b")),
       // candidate CTEs shared with q21; byte-level DuckDB levenshtein ==
       // codepoint-level Spark levenshtein on the ASCII test corpus
       s"""$MinhashPairsSql
@@ -652,10 +637,10 @@ object QueriesDedup {
       val docs = Tables.load(s, dir, "documents")
       val pairs = ext.Dedup.minhashLsh(docs, "text", "doc_id",
         numHashes = 16, bands = 4, minJaccard = 0.3)
-      pinSorted(ext.Sampling.leakageSafeSplit(docs, "doc_id", pairs,
+      ext.Sampling.leakageSafeSplit(docs, "doc_id", pairs,
           Seq(0.8, 0.1, 0.1), "lk")
-        .select(col("doc_id"), col("group_id"), col("split")), "doc_id")
-    }, {
+        .select(col("doc_id"), col("group_id"), col("split"))
+    }, Seq(col("doc_id")), {
       // q43's recursive component closure + q55's bucket CASE, keyed on
       // the component canonical (singletons group as themselves)
       val th = ext.Sampling.thresholds(Seq(0.8, 0.1, 0.1))
@@ -689,8 +674,7 @@ object QueriesDedup {
         round(ext.TextAnalysis.qualityScore("text"), 6).as("q"))
       ext.Dedup.canonicalByScore(scored, "doc_id", pairs, "q")
         .select(col("doc_id"), col("group_id"), col("rep_id"), col("keep"))
-        .orderBy("doc_id")
-    },
+    }, Seq(col("doc_id")),
       // q43's closure + quality argmax per component (score desc, id asc —
       // scores rounded 6 dp on both sides so the tie set is identical)
       s"""WITH RECURSIVE pairs AS (
@@ -723,8 +707,7 @@ object QueriesDedup {
       val pairs = ext.Dedup.minhashLsh(docs, "text", "doc_id",
         numHashes = 16, bands = 4, minJaccard = 0.3)
       ext.Dedup.dupRateBySlice(docs, "doc_id", "source", pairs)
-        .orderBy("source")
-    },
+    }, Seq(col("source")),
       // q43's closure; a duplicate = a non-canonical component member
       s"""WITH RECURSIVE pairs AS (
            $MinhashPairsSql
@@ -753,8 +736,7 @@ object QueriesDedup {
       val pairs = ext.Dedup.minhashLsh(docs, "text", "doc_id",
         numHashes = 16, bands = 4, minJaccard = 0.3)
       ext.Dedup.crossSliceDupMatrix(docs, "doc_id", "source", pairs)
-        .orderBy("slice_a", "slice_b")
-    },
+    }, Seq(col("slice_a"), col("slice_b")),
       s"""$MinhashPairsSql,
          und AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.3),
          m AS (SELECT least(da.source, db.source) AS slice_a,
@@ -780,8 +762,8 @@ object QueriesDedup {
         .join(comp.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .agg(count(lit(1)).as("n_components"))
         .select(lit(1L).as("sz"), col("n_components"))
-      singles.unionByName(multi).orderBy("sz")
-    },
+      singles.unionByName(multi)
+    }, Seq(col("sz")),
       s"""WITH RECURSIVE pairs AS (
            $MinhashPairsSql
            SELECT id_a, id_b FROM j WHERE jaccard >= 0.3),

@@ -3,10 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 import graft.util.Checkpoints.scoped
 
@@ -49,8 +45,7 @@ object QueriesDrift {
       ext.Outliers.psiDrift(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q", 10, 0.0, 1.0)
-        .orderBy("bucket")
-    },
+    }, Seq(col("bucket")),
       PsiDriftSql),
 
 
@@ -61,7 +56,7 @@ object QueriesDrift {
       ext.Similarity.embeddingDrift(
         emb.filter(col("vec_id") % 2 === 0),
         emb.filter(col("vec_id") % 2 === 1))
-    },
+    }, Nil,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x
              FROM embeddings),
          na AS (SELECT CAST(count(*) AS BIGINT) AS n_base FROM e
@@ -98,8 +93,8 @@ object QueriesDrift {
     Query("q168_psi_over_time", (s, dir) =>
       ext.Outliers.psiOverTime(Tables.load(s, dir, "events"), "ts",
           "value", col("ts") < lit("2024-01-08").cast("timestamp"),
-          nBuckets = 10, lo = 0.0, hi = 500.0)
-        .orderBy("ws"),
+          nBuckets = 10, lo = 0.0, hi = 500.0),
+      Seq(col("ws")),
       // same fixed-range bucketing + 0.5 smoothing as q103's psi; per-day
       // totals replace the single live total
       """WITH bb AS (SELECT ts,
@@ -148,8 +143,7 @@ object QueriesDrift {
             .as("x"),
           col("y"))
       ext.Outliers.trendTheilSen(daily, "event_type", "x", "y")
-        .orderBy("event_type")
-    },
+    }, Seq(col("event_type")),
       // slopes are ratios of rounded daily means (identical doubles both
       // engines); quantile_cont ≡ Spark percentile bit-for-bit (q116 pin)
       """WITH daily AS (SELECT event_type, date_trunc('day', ts) AS d,
@@ -177,7 +171,7 @@ object QueriesDrift {
       ext.Eval.ksTest(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q")
-    },
+    }, Nil,
       // same smoothing arithmetic ORDER as the Spark side: (cnt + 0.5) /
       // (total + 0.5 * n); psi rounds at 6 dp over the ln
       // integer-exact ECDF gaps: D's argmax runs on |cna·n_b − cnb·n_a|
@@ -191,7 +185,7 @@ object QueriesDrift {
     // drifted?"); one corpus pass, grids bounded by score granularity
     Query("q185_ks_by_source", (s, dir) => scoped { sc =>
       ext.Eval.ksTestBy(sc.pin(scoredSources(s, dir)), "source", "q")
-    }.orderBy("source"),
+    }, Seq(col("source")),
       // the q184 integer-gap machinery sliced per source: the dense
       // (source × value) grid evaluates every group's ECDF at every global
       // jump point; rest-side cumulatives derive as (global − own)
@@ -207,8 +201,8 @@ object QueriesDrift {
         .select(col("ts"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
-      ext.Eval.ksDriftWindowed(ev, "ts", "v", bv, bc).orderBy("ws")
-    },
+      ext.Eval.ksDriftWindowed(ev, "ts", "v", bv, bc)
+    }, Seq(col("ws")),
       // the q184 integer-gap machinery per day against the first-week
       // baseline: the dense (window × value) grid evaluates each window's
       // ECDF at every jump point of either side
@@ -223,7 +217,7 @@ object QueriesDrift {
       ext.Outliers.chiSquareDrift(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "lang")
-    },
+    }, Nil,
       // Pearson chi2 over the 2×k (slice, lang) table; expected counts in
       // doubles with the exact same multiply-then-divide shape; chi2/crit
       // rounded 6 dp (k-term sum order), flag compares the rounded values
@@ -238,7 +232,7 @@ object QueriesDrift {
       ext.Eval.rankSumTest(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q")
-    },
+    }, Nil,
       // mid-rank machinery over the per-value table (the q184 shape); U
       // and the tie term are exact (0.5-multiples / integer sums), z is
       // one fixed expression both engines replay
@@ -253,8 +247,7 @@ object QueriesDrift {
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")),
         "event_type")
       ext.Outliers.chiSquareDriftWindowed(ev, "ts", "event_type", bcnt)
-        .orderBy("ws")
-    },
+    }, Seq(col("ws")),
       // q187's chi2 per day vs the first-week baseline; cells with a count
       // on either side only (an absent category is not part of that
       // window's 2xk table); chi2/crit rounded 6 dp like the batch op
@@ -268,8 +261,8 @@ object QueriesDrift {
         .select(col("ts"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
-      ext.Eval.rankSumDriftWindowed(ev, "ts", "v", bv, bc).orderBy("ws")
-    },
+      ext.Eval.rankSumDriftWindowed(ev, "ts", "v", bv, bc)
+    }, Seq(col("ws")),
       // q188's rank machinery per day against the first-week baseline on
       // the dense (window x value) grid; zero-count grid cells contribute
       // nothing to rb/ties so the per-window sums equal the merged walk
@@ -279,7 +272,7 @@ object QueriesDrift {
     // mid-rank table serves every group, z > 0 = the source ranks higher)
     Query("q191_rank_sum_by_source", (s, dir) => scoped { sc =>
       ext.Eval.rankSumTestBy(sc.pin(scoredSources(s, dir)), "source", "q")
-    }.orderBy("source"),
+    }, Seq(col("source")),
       // one global mid-rank table (the q188 machinery), per-source weighted
       // sums; rest side = global minus own, same fixed u/z shapes
       RankSumBySql),
@@ -289,7 +282,8 @@ object QueriesDrift {
     Query("q192_chi2_by_source", (s, dir) =>
       ext.Outliers.chiSquareDriftBy(
         Tables.load(s, dir, "documents").select(col("source"), col("lang")),
-        "source", "lang").orderBy("source"),
+        "source", "lang"),
+      Seq(col("source")),
       // the q187 2xk machinery per slice: rest-side counts = global - own
       // on the dense (source x lang) grid; chi2/crit rounded 6 dp
       Chi2BySql),
@@ -302,7 +296,7 @@ object QueriesDrift {
       ext.Outliers.driftReport(
         docs.filter(col("source") =!= "src9"),
         docs.filter(col("source") === "src9"), "q", "lang")
-    },
+    }, Nil,
       // composes the four VERIFIED member oracles as subqueries — a report
       // row is definitionally the member's own number reshaped
       s"""SELECT 'psi' AS stat, round(sum(psi), 6) AS statistic,
@@ -326,7 +320,7 @@ object QueriesDrift {
     Query("q194_psi_by_source", (s, dir) => scoped { sc =>
       ext.Outliers.psiDriftBy(sc.pin(scoredSources(s, dir)), "source", "q",
         10, 0.0, 1.0)
-    }.orderBy("source"),
+    }, Seq(col("source")),
       // q103's psi machinery per slice on the dense (source x bucket) grid:
       // rest-side counts = global - own; per-term round 6 dp then the sum
       // rounds 6 dp, the exact shapes psiDriftBy emits
@@ -338,8 +332,8 @@ object QueriesDrift {
     // means derive from the per-slice (mean, count) table, one corpus pass
     Query("q195_embedding_drift_by", (s, dir) =>
       ext.Similarity.embeddingDriftBy(
-        Tables.load(s, dir, "embeddings"), "label", "embedding")
-        .orderBy("label"),
+        Tables.load(s, dir, "embeddings"), "label", "embedding"),
+      Seq(col("label")),
       // the q164 mean-vector machinery per slice: per-label per-dim means,
       // rest mean derived per dim as (sum_g n_g*m_g - n_g*m_g) / (n - n_g)
       // — the same global-minus-own arithmetic embeddingDriftBy runs
@@ -380,9 +374,9 @@ object QueriesDrift {
         .select(col("ts"), col("event_type"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
-      pinSorted(ext.Eval.ksDriftWindowed(ev, "ts", "v", bv, bc,
-        slice = Some("event_type")), "ws", "event_type")
-    },
+      ext.Eval.ksDriftWindowed(ev, "ts", "v", bv, bc,
+        slice = Some("event_type"))
+    }, Seq(col("ws"), col("event_type")),
       // q186's dense-grid machinery with the slice in the window key: each
       // (day, event type) cell's ECDF vs the shared first-week baseline
       ksWinBySqlF("event_type", "event_type")),
@@ -395,9 +389,9 @@ object QueriesDrift {
         .select(col("ts"), col("event_type"), round(col("value"), 2).as("v"))
       val (bv, bc) = ext.Eval.ksBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")), "v")
-      pinSorted(ext.Eval.rankSumDriftWindowed(ev, "ts", "v", bv, bc,
-        slice = Some("event_type")), "ws", "event_type")
-    },
+      ext.Eval.rankSumDriftWindowed(ev, "ts", "v", bv, bc,
+        slice = Some("event_type"))
+    }, Seq(col("ws"), col("event_type")),
       // q190's rank machinery per (day, event type) against the first-week
       // baseline on the dense (window x slice x value) grid
       rsWinBySqlF("event_type", "event_type")),
@@ -412,9 +406,9 @@ object QueriesDrift {
       val (bcnt, _) = ext.Outliers.chiSquareBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")),
         "event_type")
-      pinSorted(ext.Outliers.chiSquareDriftWindowed(ev, "ts", "event_type",
-        bcnt, slice = Some("cohort")), "ws", "cohort")
-    },
+      ext.Outliers.chiSquareDriftWindowed(ev, "ts", "event_type",
+        bcnt, slice = Some("cohort"))
+    }, Seq(col("ws"), col("cohort")),
       // q189's chi2 machinery per (day, user cohort) vs the first-week
       // baseline; cells with a count on either side only, chi2/crit 6 dp
       chi2WinBySqlF("CAST(user_id % 4 AS VARCHAR)", "cohort")),
@@ -427,9 +421,9 @@ object QueriesDrift {
       val (bcm, bt) = ext.Outliers.psiBaseline(
         ev.filter(col("ts") < lit("2024-01-08").cast("timestamp")),
         "value", 10, 0.0, 500.0)
-      pinSorted(ext.Outliers.psiWindowed(ev, "ts", "value", bcm, bt, 10,
-        0.0, 500.0, slice = Some("event_type")), "ws", "event_type")
-    },
+      ext.Outliers.psiWindowed(ev, "ts", "value", bcm, bt, 10,
+        0.0, 500.0, slice = Some("event_type"))
+    }, Seq(col("ws"), col("event_type")),
       // q168's smoothing arithmetic per (day, event type) cell against the
       // shared first-week baseline histogram; psi rounds 6 dp over the sum
       psiWinBySqlF("event_type", "event_type", "value")),
@@ -441,7 +435,7 @@ object QueriesDrift {
     Query("q200_drift_report_by", (s, dir) => scoped { sc =>
       ext.Outliers.driftReportBy(sc.pin(scoredSources(s, dir, col("lang"))),
         "source", "q", "lang")
-    },
+    }, Nil,
       // composes the four VERIFIED by-slice member oracles as subqueries —
       // a report row is definitionally the member's own number reshaped
       // (the q193 pattern per slice)
@@ -471,9 +465,9 @@ object QueriesDrift {
       val (bv, bc) = ext.Eval.ksBaseline(week, "v")
       val (bcats, _) = ext.Outliers.chiSquareBaseline(week, "event_type")
       val (bb, bt) = ext.Outliers.psiBaseline(week, "v", 10, 0.0, 500.0)
-      pinSorted(ext.Outliers.driftReportWindowed(ev, "ts", "v",
-        "event_type", bv, bc, bcats, bb, bt, 10, 0.0, 500.0), "ws")
-    },
+      ext.Outliers.driftReportWindowed(ev, "ts", "v",
+        "event_type", bv, bc, bcats, bb, bt, 10, 0.0, 500.0)
+    }, Seq(col("ws")),
       // joins the three VERIFIED windowed-member oracles on ws plus the
       // windowed-psi arithmetic (the q168/q199 smoothing shapes on the
       // rounded value) — a gate row is definitionally the members' own
@@ -537,10 +531,10 @@ object QueriesDrift {
       val (bv, bc) = ext.Eval.ksBaseline(week, "v")
       val (bcats, _) = ext.Outliers.chiSquareBaseline(week, "event_type")
       val (bb, bt) = ext.Outliers.psiBaseline(week, "v", 10, 0.0, 500.0)
-      pinSorted(ext.Outliers.driftReportWindowed(ev, "ts", "v",
+      ext.Outliers.driftReportWindowed(ev, "ts", "v",
         "event_type", bv, bc, bcats, bb, bt, 10, 0.0, 500.0,
-        slice = Some("cohort")), "ws", "cohort")
-    },
+        slice = Some("cohort"))
+    }, Seq(col("ws"), col("cohort")),
       // joins the slice-parameterized windowed-BY member builders on
       // (ws, cohort) — every lens sliced by the same user cohort, each
       // cell's fields the members' own numbers side by side
@@ -580,8 +574,7 @@ object QueriesDrift {
         col("label"), col("embedding"))
       ext.Similarity.embeddingDriftWindowed(live, "ts", "embedding", bm,
           slice = Some("label"))
-        .orderBy("ws", "label")
-    },
+    }, Seq(col("ws"), col("label")),
       // q164's mean-vector machinery per (day, label) cell against the
       // even-half baseline mean: per-dim avgs, then cos/L2 of the cell
       // mean vs the baseline mean, 6 dp — the q195 arithmetic with the

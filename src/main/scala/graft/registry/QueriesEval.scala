@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 import graft.util.Checkpoints.scoped
 
@@ -21,8 +16,8 @@ object QueriesEval {
     // median/MAD, |M| > 3.5; the mean-free gate outliers can't drag
     Query("q90_robust_outliers", (s, dir) =>
       ext.Outliers.robustFlags(
-        Tables.load(s, dir, "events"), "event_type", "event_id", "value")
-        .orderBy("event_type", "event_id"),
+        Tables.load(s, dir, "events"), "event_type", "event_id", "value"),
+      Seq(col("event_type"), col("event_id")),
       """WITH s AS (SELECT event_type, quantile_cont(value, 0.5) AS med
              FROM events GROUP BY event_type),
          m AS (SELECT e.event_type,
@@ -42,7 +37,7 @@ object QueriesEval {
         .join(base.select(col("doc_id"),
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
       ext.Eval.prCurve(scored, "score", "label")
-    }.orderBy(col("threshold").desc),
+    }, Seq(col("threshold").desc),
       // threshold sweep over the per-score aggregate (never the corpus);
       // window sums CAST to BIGINT (DuckDB windowed sum is HUGEINT)
       s"""WITH scored AS ($NbScoredSql),
@@ -73,7 +68,7 @@ object QueriesEval {
         .join(base.select(col("doc_id"),
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
       ext.Eval.aucRoc(scored, "score", "label")
-    },
+    }, Nil,
       // Mann-Whitney rank form: every npos·avgRank term is an exact
       // multiple of 0.5, so the sums are order-independent and unrounded
       s"""WITH scored AS ($NbScoredSql),
@@ -105,8 +100,8 @@ object QueriesEval {
       ext.Outliers.winsorize(
         Tables.load(s, dir, "events")
           .select(col("event_id"), col("event_type"), col("value")),
-        "event_type", "value")
-        .orderBy("event_id"),
+        "event_type", "value"),
+      Seq(col("event_id")),
       s"""WITH c AS (SELECT event_type,
              quantile_cont(value, 0.05) AS lo,
              quantile_cont(value, 0.95) AS hi
@@ -125,8 +120,8 @@ object QueriesEval {
       val scored = sc.pin(Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
-      ext.Eval.ecdf(scored, "q").orderBy("doc_id")
-    },
+      ext.Eval.ecdf(scored, "q")
+    }, Seq(col("doc_id")),
       s"""$QualityCtesSql,
          qd AS (SELECT doc_id, $QualityValSql AS q FROM s),
          per AS (SELECT q, CAST(count(*) AS BIGINT) AS n
@@ -158,7 +153,7 @@ object QueriesEval {
         round(ext.TextAnalysis.alphaWordFraction(col("text")), 6).as("awf")))
       ext.Eval.blendKeyed(scored, "doc_id",
         Seq("q" -> 0.5, "mwl" -> 0.2, "awf" -> 0.3))
-    }.orderBy("doc_id"), {
+    }, Seq(col("doc_id")), {
       // three generated ecdf chains + the same left-assoc weighted sum
       def ecdfCte(valCol: String, i: Int) =
         s"""per$i AS (SELECT $valCol AS v$i, CAST(count(*) AS BIGINT) AS n
@@ -214,7 +209,7 @@ object QueriesEval {
         .select(col("doc_id"), col("pred"))
         .join(base.select(col("doc_id"), col("cls").as("lang")), "doc_id")
       ext.Eval.classMetrics(preds, "lang", "pred")
-    }.orderBy("cls"),
+    }, Seq(col("cls")),
       // per-class P/R/F1 over the q112 confusion matrix; never-predicted
       // classes carry NULL precision/F1 (undefined, not zero)
       s"""WITH prd AS ($NbMulticlassSql),
@@ -255,7 +250,7 @@ object QueriesEval {
       val gate = base.select(col("doc_id"),
         when(col("qs") >= 0.5, 1).otherwise(0).as("gate"))
       ext.Eval.cohenKappa(nb.join(gate, "doc_id"), "pred", "gate")
-    },
+    }, Nil,
       // kappa between the q99 NB pred and the quality>=0.5 gate; p_e from
       // the EXACT integer marginal product sum over N^2
       s"""$QualityCtesSql,
@@ -299,8 +294,8 @@ object QueriesEval {
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
         .join(Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("lang")), "doc_id")
-      ext.Eval.aucRocBy(scored, "lang", "score", "label").orderBy("lang")
-    },
+      ext.Eval.aucRocBy(scored, "lang", "score", "label")
+    }, Seq(col("lang")),
       // q114's rank arithmetic with every window/agg PARTITIONED BY lang;
       // the label joins back from documents
       s"""WITH scored AS ($NbScoredSql),
@@ -339,7 +334,7 @@ object QueriesEval {
         .join(base.select(col("doc_id"),
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
       ext.Eval.calibrationBins(scored, "score", "label")
-    }.orderBy("bin"),
+    }, Seq(col("bin")),
       // sigmoid probs bin on the ROUNDED value (engine-stable edges);
       // pos_rate stays an exact unrounded integer ratio
       s"""WITH scored AS ($NbScoredSql),
@@ -359,8 +354,8 @@ object QueriesEval {
     // survival replayed as exp(sum ln) down the duration window
     Query("q123_kaplan_meier", (s, dir) =>
       streaming.EventStream.kaplanMeier(
-        Tables.load(s, dir, "events"), "purchase")
-        .orderBy("dur"),
+        Tables.load(s, dir, "events"), "purchase"),
+      Seq(col("dur")),
       // product-limit estimator; the fully-converting terminal row (d =
       // n_risk) pins survival 0 explicitly — ln(0) faults in DuckDB
       s"""WITH pu AS (SELECT user_id, min(epoch_us(ts)) AS t0,
@@ -405,8 +400,8 @@ object QueriesEval {
       ext.Outliers.robustScale(
         Tables.load(s, dir, "events")
           .select(col("event_id"), col("event_type"), col("value")),
-        "event_type", "event_id", "value")
-        .orderBy("event_id"),
+        "event_type", "event_id", "value"),
+      Seq(col("event_id")),
       // q90's med/MAD machinery without the cut; same left-assoc mz form
       s"""WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
              FROM events GROUP BY event_type),
@@ -426,8 +421,8 @@ object QueriesEval {
     Query("q126_discretize", (s, dir) =>
       ext.Outliers.discretize(
         Tables.load(s, dir, "events").select(col("event_id"), col("value")),
-        "value", 8)
-        .orderBy("event_id"),
+        "value", 8),
+      Seq(col("event_id")),
       // mid-rank ecdf bins — exact 0.5-multiple arithmetic, NO interpolated
       // thresholds (those flip tie-groups on 1-ulp cut divergence)
       s"""WITH per AS (SELECT value AS v, CAST(count(*) AS BIGINT) AS n
@@ -466,7 +461,7 @@ object QueriesEval {
       val long = wide.unpivot(Array(col("doc_id")),
         Array(col("nb"), col("gate"), col("len")), "rater", "vote")
       ext.Eval.fleissKappa(long, "doc_id", "rater", "vote")
-    },
+    }, Nil,
       // Fleiss over three deterministic raters: the q99 NB pred, the q120
       // quality gate, and an n_chars >= 300 length gate; all-integer
       // counts into the final ratios
@@ -517,7 +512,7 @@ object QueriesEval {
         .join(base.select(col("doc_id"),
           when(col("pos"), 1).otherwise(0).as("label")), "doc_id")
       ext.Eval.brierDecomposition(scored, "score", "label")
-    },
+    }, Nil,
       // Murphy decomposition over the q122 sigmoid bins; every divisor is
       // a bin count >= 1, the global ratios replay Spark's exact shapes
       s"""WITH scored AS ($NbScoredSql),
@@ -569,7 +564,7 @@ object QueriesEval {
         Array(col("nb"), col("gate"), col("len")), "rater", "vote")
         .filter(col("vote").isNotNull)
       ext.Eval.krippendorffAlpha(long, "doc_id", "rater", "vote")
-    },
+    }, Nil,
       // nominal-metric alpha over pairable items only (HAVING r > 1);
       // canonical D_o/D_e normalization, shapes replayed exactly
       s"""$QualityCtesSql,
@@ -624,7 +619,7 @@ object QueriesEval {
         round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
       ext.Eval.quantileNormalize(scored, "source", "q")
         .select(col("doc_id"), col("source"), col("q"), col("norm"))
-    }.orderBy("doc_id"),
+    }, Seq(col("doc_id")),
       // mid-rank per-source percentile → min global value covering it;
       // every float is an identical integer division or a data value
       s"""$QualityCtesSql,
@@ -663,7 +658,7 @@ object QueriesEval {
         round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
         round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"))
       ext.Eval.spearman(scored, "q", "mwl")
-    },
+    }, Nil,
       // mid-rank tables per signal, exact quarter-multiple moment sums —
       // rho crosses engines unrounded
       s"""WITH t AS (
@@ -720,7 +715,7 @@ object QueriesEval {
         col("doc_id"),
         round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
       ext.Eval.bootstrapCI(scored, "doc_id", "q")
-    }, {
+    }, Nil, {
       val th = ext.Eval.PoissonThresholds
       val bucket =
         """CAST(CAST(concat('0x', substr(md5(concat('boot:',
@@ -753,6 +748,7 @@ object QueriesEval {
     // diagnostic that picks plain vs broadcast vs salted (q141) joins
     Query("q166_skew_report", (s, dir) =>
       ext.Eval.skewReport(Tables.load(s, dir, "events"), "user_id"),
+      Nil,
       // exact integer max-share/gini ratios, ln-shape entropy (see
       // Eval.skewReport); keys sort by (count, key) for the Gini rank
       """WITH per AS (SELECT CAST(user_id AS VARCHAR) AS k,
@@ -787,7 +783,7 @@ object QueriesEval {
         round(ext.TextAnalysis.qualityScore("text"), 6).as("q"),
         round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mwl"))
       ext.Eval.mutualInfo(scored, "q", "mwl")
-    },
+    }, Nil,
       // ECDF-decile joint/marginal counts; one fixed MI/entropy shape
       s"""WITH t AS (
            SELECT doc_id, source, text, $ToksSql AS toks,
@@ -873,7 +869,7 @@ object QueriesEval {
         .agg(round(avg(col("value")), 6).as("b"))
       ext.Eval.pairedBootstrapTest(a.join(b, "user_id"), "user_id",
         "a", "b")
-    }, {
+    }, Nil, {
       // Poisson(1) weights from the same md5 bucket space + thresholds the
       // Spark side interpolates; fixed order-statistic CI convention
       // the q165 replicate machinery over per-user deltas: 6dp-rounded
@@ -928,8 +924,8 @@ object QueriesEval {
       ext.Eval.pairedBootstrapTestBy(
         a.join(b, "user_id")
           .withColumn("cohort", (col("user_id") % 4).cast("string")),
-        "cohort", "user_id", "a", "b").orderBy("cohort")
-    }, {
+        "cohort", "user_id", "a", "b")
+    }, Seq(col("cohort")), {
       // q208's machinery with the cohort in every grouping (replicate
       // means, rank window, order-statistic indices — all per cohort)
       val th = ext.Eval.PoissonThresholds
@@ -983,8 +979,7 @@ object QueriesEval {
         col("doc_id"), col("source"),
         round(ext.TextAnalysis.qualityScore("text"), 6).as("q")))
       ext.Eval.bootstrapCIBy(scored, "source", "doc_id", "q")
-        .orderBy("source")
-    }, {
+    }, Seq(col("source")), {
       // the q165 machinery with every stage keyed on source
       val th = ext.Eval.PoissonThresholds
       val bucket =

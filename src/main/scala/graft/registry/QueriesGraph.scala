@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 
 /** Query registry — LLM pipeline: PageRank, label propagation, triangles, multi-source BFS.
@@ -26,8 +21,7 @@ object QueriesGraph {
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       ext.Graph.pageRank(edges, "src", "dst", 5)
         .select(col("node").as("doc_id"), round(col("pr"), 6).as("pr"))
-        .orderBy("doc_id")
-    }, {
+    }, Seq(col("doc_id")), {
       // 5 generated MATERIALIZED power-iteration rounds over the q21 pair
       // CTEs; per-round: dangling-mass scalar (left-join null test = the
       // anti-join), contribution sum, rank refresh — the damping factor
@@ -79,8 +73,7 @@ object QueriesGraph {
       ext.Graph.labelPropagation(edges, seeds, "src", "dst",
         "doc_id", "lang", 5)
         .select(col("node").as("doc_id"), col("label"))
-        .orderBy("doc_id")
-    }, {
+    }, Seq(col("doc_id")), {
       // 5 generated MATERIALIZED plurality-vote rounds over the q21 pair
       // CTEs; all-integer — no rounding grain anywhere
       val iters = 5
@@ -120,8 +113,7 @@ object QueriesGraph {
         "text", "doc_id", numHashes = 16, bands = 4, minJaccard = 0.3)
       ext.Graph.triangleCount(pairs, "id_a", "id_b")
         .select(col("node").as("doc_id"), col("triangles"))
-        .orderBy("doc_id")
-    },
+    }, Seq(col("doc_id")),
       // oriented-wedge triangle count over the q21 pairs (already lo<hi
       // and distinct); all-integer
       s"""$MinhashPairsSql,
@@ -155,8 +147,7 @@ object QueriesGraph {
       val seeds = docs.filter(col("doc_id") % 50 === 0).select(col("doc_id"))
       ext.Graph.bfsHops(edges, seeds, "src", "dst", "doc_id", 5)
         .select(col("node").as("doc_id"), col("hops"))
-        .orderBy("doc_id")
-    }, {
+    }, Seq(col("doc_id")), {
       // 5 generated MATERIALIZED min-propagation rounds ≡ BFS settled set
       // after 5 frontiers; all-integer
       val rounds = (1 to 5).map { i =>

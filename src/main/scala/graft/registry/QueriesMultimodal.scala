@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 import graft.util.Checkpoints.scoped
 
@@ -27,8 +22,7 @@ object QueriesMultimodal {
       ext.Multimodal.decodeFeatures(media).toDF()
         .select(col("id"), col("nBytes"), col("digest"),
           round(col("brightness"), 6).as("brightness"))
-        .orderBy("id")
-    },
+    }, Seq(col("id")),
       """SELECT doc_id AS id,
          CAST(len(text) AS INT) AS nBytes,
          md5(text) AS digest,
@@ -47,8 +41,7 @@ object QueriesMultimodal {
       ext.Multimodal.decodeFeatures(media).toDF()
         .select(col("id"), col("width"), col("height"),
           round(col("brightness"), 6).as("brightness"))
-        .orderBy("id")
-    },
+    }, Seq(col("id")),
       // decoded-image features: the synthesized PNG's pixel (x, y) is
       // (id*31 + x*7 + y*13) mod 256 over a (id%13+3) x (id%7+2) raster, so
       // the decoded mean luminance is this exact double-precision average
@@ -72,8 +65,7 @@ object QueriesMultimodal {
         ext.Multimodal.resizeNearest(media, 2, 2)).toDF()
         .select(col("id"), col("width"), col("height"),
           round(col("brightness"), 6).as("brightness"))
-        .orderBy("id")
-    },
+    }, Seq(col("id")),
       // stride-2 nearest-neighbor subsample of the q61 synthetic raster:
       // output pixel (x, y) = source pixel (2x, 2y)
       """SELECT doc_id AS id,
@@ -99,8 +91,7 @@ object QueriesMultimodal {
       // runs once, not per consumer
       val hashed = sc.pin(ext.Multimodal.aHash(media))
       ext.Dedup.hammingNearDups(hashed, "ahash", "id", maxHamming = 2)
-        .orderBy("id_a", "id_b")
-    },
+    }, Seq(col("id_a"), col("id_b")),
       // analytic raster → 10x6 nearest samples → integer-exact mean
       // threshold → 60-bit hash → 3-chunk pigeonhole at maxHamming 2
       s"""WITH g AS (SELECT doc_id, CAST(doc_id % 13 + 3 AS BIGINT) AS w,
@@ -141,8 +132,7 @@ object QueriesMultimodal {
           col("channels"), col("nSamples").as("n_samples"),
           col("durationMs").as("duration_ms"),
           round(col("rms"), 6).as("rms"))
-        .orderBy("id")
-    },
+    }, Seq(col("id")),
       // analytic waveform replay: s(t) = (id·31 + t·7) mod 2048 − 1024,
       // exact integers — the sum of squares is order-free in doubles.
       // q183 decodes the SAME waveform from a real FLAC encoding (vs q178's
@@ -160,8 +150,7 @@ object QueriesMultimodal {
         .select(col("id"), col("brand"), col("timescale"),
           col("duration"), col("durationMs").as("duration_ms"),
           col("nTracks").as("n_tracks"))
-        .orderBy("id")
-    },
+    }, Seq(col("id")),
       // analytic container replay: the parser must recover exactly the
       // id-derived mvhd/trak structure the synthesizer wrote
       """SELECT doc_id AS id, 'isom' AS brand, 600 AS timescale,
@@ -184,8 +173,7 @@ object QueriesMultimodal {
           col("channels"), col("nSamples").as("n_samples"),
           col("durationMs").as("duration_ms"),
           round(col("rms"), 6).as("rms"))
-        .orderBy("id")
-    },
+    }, Seq(col("id")),
       oracleSqlAudioAnalytic),
   )
 }

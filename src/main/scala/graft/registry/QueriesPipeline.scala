@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 
 /** Query registry — end-to-end corpus curation compositions.
@@ -22,8 +17,8 @@ object QueriesPipeline {
     // curation win is the feature-table pin in curateBody, not extra
     // scan parallelism)
     Query("q46_corpus_curate", (s, dir) =>
-      pipeline.CorpusCuration.curate(Tables.load(s, dir, "documents"))
-        .orderBy("doc_id"),
+      pipeline.CorpusCuration.curate(Tables.load(s, dir, "documents")),
+      Seq(col("doc_id")),
       // composed from the tested q21/q43/q17/q18 fragments: near-dup
       // canonical filter (recursive closure), then features + quality gate
       s"""WITH RECURSIVE pairs AS (
@@ -60,8 +55,8 @@ object QueriesPipeline {
     // member per near-dup cluster instead of the min-id one
     Query("q180_curate_keep_best", (s, dir) =>
       pipeline.CorpusCuration.curateKeepBest(
-        Tables.load(s, dir, "documents"))
-        .orderBy("doc_id"),
+        Tables.load(s, dir, "documents")),
+      Seq(col("doc_id")),
       // q46's composed chain with the q154 argmax replacing min-id
       s"""WITH RECURSIVE pairs AS (
            $MinhashPairsSql

@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 
 /** Query registry — §2.6 beyond-reference relational — joins, windows, set ops, pivot, time buckets.
@@ -26,8 +21,7 @@ object QueriesRelational {
         .groupBy(col("c_mktsegment"))
         .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("revenue"),
           count(lit(1)).as("n"))
-        .orderBy("c_mktsegment")
-    },
+    }, Seq(col("c_mktsegment")),
       """SELECT c_mktsegment,
          round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
          count(*) AS n
@@ -40,6 +34,7 @@ object QueriesRelational {
     Query("q30_topk", (s, dir) =>
       ord(s, dir).select("o_orderkey", "o_totalprice")
         .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(10),
+      Nil,
       """SELECT o_orderkey, o_totalprice FROM orders
          ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"""),
 
@@ -53,8 +48,8 @@ object QueriesRelational {
       f.intersect(p).agg(count(lit(1)).as("n")).withColumn("tag", lit("both"))
         .union(f.except(p).agg(count(lit(1)).as("n")).withColumn("tag", lit("only_f")))
         .union(f.union(p).distinct().agg(count(lit(1)).as("n")).withColumn("tag", lit("either")))
-        .select("tag", "n").orderBy("tag")
-    },
+        .select("tag", "n")
+    }, Seq(col("tag")),
       """SELECT 'both' AS tag, count(*) AS n FROM (
            SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'
            INTERSECT
@@ -82,8 +77,7 @@ object QueriesRelational {
         .withColumn("running", round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))
           .over(w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)), 4))
         .select("l_suppkey", "rn", "running")
-        .orderBy("l_suppkey", "rn")
-    },
+    }, Seq(col("l_suppkey"), col("rn")),
       """SELECT l_suppkey,
          CAST(row_number() OVER w AS INT) AS rn,
          round(sum(l_extendedprice * (1 - l_discount)) OVER (PARTITION BY l_suppkey
@@ -102,8 +96,8 @@ object QueriesRelational {
         .select(
           when(col("g_rf") === 1, "ALL").otherwise(col("l_returnflag")).as("rf"),
           when(col("g_ls") === 1, "ALL").otherwise(col("l_linestatus")).as("ls"),
-          col("n"), col("sum_qty"))
-        .orderBy("rf", "ls"),
+          col("n"), col("sum_qty")),
+      Seq(col("rf"), col("ls")),
       """SELECT
          CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS rf,
          CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL' ELSE l_linestatus END AS ls,
@@ -118,8 +112,8 @@ object QueriesRelational {
         .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
         .groupBy(col("event_type"))
         .agg(count(col("k")).as("n"), round(avg(col("k")), 6).as("avg_k"),
-          max(col("k")).as("max_k"))
-        .orderBy("event_type"),
+          max(col("k")).as("max_k")),
+      Seq(col("event_type")),
       """WITH t AS (SELECT event_type, CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events)
          SELECT event_type, count(k) AS n, round(avg(k), 6) AS avg_k, max(k) AS max_k
          FROM t GROUP BY event_type ORDER BY event_type"""),
@@ -129,8 +123,8 @@ object QueriesRelational {
     Query("q35_time_buckets", (s, dir) =>
       Tables.load(s, dir, "events")
         .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("v"))
-        .orderBy("day", "event_type"),
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("v")),
+      Seq(col("day"), col("event_type")),
       """SELECT time_bucket(INTERVAL '1 day', ts) AS day, event_type,
          count(*) AS n, round(sum(value), 4) AS v
          FROM events GROUP BY day, event_type ORDER BY day, event_type"""),
@@ -153,8 +147,7 @@ object QueriesRelational {
         .agg(count(col("o_orderkey")).as("n_matched"),
           sum(when(col("o_orderkey").isNull, 1).otherwise(0)).as("n_unmatched"),
           round(sum(col("o_totalprice")), 2).as("sum_price"))
-        .orderBy("event_type")
-    },
+    }, Seq(col("event_type")),
       """WITH o1 AS (
            SELECT o_custkey, o_orderdate, o_orderkey, o_totalprice,
              row_number() OVER (PARTITION BY o_custkey, o_orderdate
@@ -182,8 +175,7 @@ object QueriesRelational {
         .groupBy(col("o_orderpriority"))
         .agg(round(sum(col("l_extendedprice")), 2).as("revenue"),
           count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")
-    },
+    }, Seq(col("o_orderpriority")),
       // the salted join is semantically the plain join — 2 dp money grain
       // (summands on the 0.01 grid never land on a .005 tie)
       """SELECT o_orderpriority,
@@ -199,8 +191,8 @@ object QueriesRelational {
       Tables.load(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(sum(lit(1L)))
-        .orderBy("o_orderpriority"),
+        .agg(sum(lit(1L))),
+      Seq(col("o_orderpriority")),
       // sum-CASE pivot: absent (priority, status) combos are NULL under
       // sum in both engines (count would give 0 in SQL but NULL in pivot)
       """SELECT o_orderpriority,
@@ -217,8 +209,8 @@ object QueriesRelational {
         .unpivot(Array(col("p_partkey")),
           Array(col("p_size").cast("double").as("p_size"),
             col("p_retailprice").cast("double").as("p_retailprice")),
-          "attr", "val")
-        .orderBy("p_partkey", "attr"),
+          "attr", "val"),
+      Seq(col("p_partkey"), col("attr")),
       """SELECT p_partkey, 'p_size' AS attr, CAST(p_size AS DOUBLE) AS val
          FROM part WHERE p_partkey <= 50
          UNION ALL
@@ -231,8 +223,8 @@ object QueriesRelational {
     // to a dense model-ready state table; fill is an exact data value
     Query("q145_resample_fill", (s, dir) =>
       streaming.EventStream.resampleFill(
-        Tables.load(s, dir, "events").filter(col("user_id") < 10))
-        .orderBy("user_id", "bucket"),
+        Tables.load(s, dir, "events").filter(col("user_id") < 10)),
+      Seq(col("user_id"), col("bucket")),
       // dense per-user daily grid + forward fill; the filled value is the
       // day's LAST observation by (ts, event_id) — exact, no rounding
       """WITH f AS (SELECT * FROM events WHERE user_id < 10),

@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 
 /** Query registry — LLM pipeline: deterministic hash splits, stratified/weighted sampling, mixtures.
@@ -21,8 +16,8 @@ object QueriesSampling {
     Query("q55_hash_split", (s, dir) =>
       ext.Sampling.hashSplit(Tables.load(s, dir, "documents"),
           "doc_id", Seq(0.8, 0.1, 0.1), "v0")
-        .select(col("doc_id"), col("split"))
-        .orderBy("doc_id"), {
+        .select(col("doc_id"), col("split")),
+      Seq(col("doc_id")), {
       val th = ext.Sampling.thresholds(Seq(0.8, 0.1, 0.1))
       s"""SELECT doc_id,
            CASE WHEN ${BucketSql("v0", "doc_id")} < ${th(0)} THEN 0
@@ -37,8 +32,8 @@ object QueriesSampling {
     Query("q56_stratified_sample", (s, dir) =>
       ext.Sampling.stratifiedSampleN(Tables.load(s, dir, "documents"),
           Seq("lang"), 5, "doc_id", "s")
-        .select(col("lang"), col("doc_id"))
-        .orderBy("lang", "doc_id"),
+        .select(col("lang"), col("doc_id")),
+      Seq(col("lang"), col("doc_id")),
       s"""SELECT lang, doc_id FROM documents
          QUALIFY row_number() OVER (PARTITION BY lang
            ORDER BY ${BucketSql("s", "doc_id")}, doc_id) <= 5
@@ -50,8 +45,8 @@ object QueriesSampling {
     Query("q57_mixture", (s, dir) =>
       ext.Sampling.mixture(Tables.load(s, dir, "documents"), "source",
           Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2), 60L, "doc_id", "m1")
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id"), {
+        .select(col("doc_id"), col("source")),
+      Seq(col("doc_id")), {
       // mixture: the rate formula replays Sampling.mixture's IEEE-double
       // steps exactly — (w/Σw interpolated) * totalRows / count, floor into
       // the bucket space
@@ -79,8 +74,8 @@ object QueriesSampling {
     Query("q68_shuffle_shards", (s, dir) =>
       ext.Sampling.shuffleShards(
         Tables.load(s, dir, "documents").select("doc_id"),
-        "doc_id", 8, salt = "s7")
-        .orderBy("doc_id"),
+        "doc_id", 8, salt = "s7"),
+      Seq(col("doc_id")),
       // deterministic sharding: bucket mod n + an independent second bucket
       s"""SELECT doc_id,
            CAST(${BucketSql("s7", "doc_id")} % 8 AS INT) AS shard,
@@ -93,8 +88,8 @@ object QueriesSampling {
     Query("q85_domain_cap", (s, dir) =>
       ext.Sampling.capPerGroupByScore(
         Tables.load(s, dir, "documents").select("doc_id", "source", "n_chars"),
-        "source", "n_chars", "doc_id", 10)
-        .orderBy("source", "doc_id"),
+        "source", "n_chars", "doc_id", 10),
+      Seq(col("source"), col("doc_id")),
       """SELECT doc_id, source, n_chars FROM documents
          QUALIFY row_number() OVER (PARTITION BY source
            ORDER BY n_chars DESC, doc_id) <= 10
@@ -106,8 +101,8 @@ object QueriesSampling {
     Query("q89_weighted_sample", (s, dir) =>
       ext.Sampling.weightedSampleK(
         Tables.load(s, dir, "documents").select("doc_id", "source", "n_chars"),
-        "doc_id", "n_chars", 100, salt = "ws")
-        .orderBy("doc_id"),
+        "doc_id", "n_chars", 100, salt = "ws"),
+      Seq(col("doc_id")),
       // the A-ES key replays weightedSampleK's IEEE steps exactly:
       // u = (bucket + 0.5) / 2^60, key = -ln(u) / weight
       s"""SELECT doc_id, source, n_chars FROM documents
@@ -123,8 +118,8 @@ object QueriesSampling {
     Query("q111_temperature_mix", (s, dir) =>
       ext.Sampling.temperatureMixture(Tables.load(s, dir, "documents"),
           "source", 0.5, 3.0, "doc_id", "tm")
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id"),
+        .select(col("doc_id"), col("source")),
+      Seq(col("doc_id")),
       // rate = least(3.0 * (1.0 / sqrt(cnt)), 1.0) — the exact form the
       // Scala side evaluates (x * (1/s), not x/s; sqrt is IEEE-exact)
       s"""WITH c AS (SELECT source, CAST(count(*) AS DOUBLE) AS cnt

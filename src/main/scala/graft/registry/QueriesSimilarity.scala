@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 import graft.util.Checkpoints.scoped
 
@@ -19,8 +14,9 @@ object QueriesSimilarity {
 
     // ext: embedding-cosine similar pairs within label buckets
     Query("q24_embed_pairs", (s, dir) =>
-      pinSorted(ext.Similarity.embeddingNearDups(
-        Tables.load(s, dir, "embeddings"), 0.3, "label"), "id_a", "id_b"),
+      ext.Similarity.embeddingNearDups(
+        Tables.load(s, dir, "embeddings"), 0.3, "label"),
+      Seq(col("id_a"), col("id_b")),
       s"""WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, round($CosSql, 6) AS cos
                FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
@@ -31,8 +27,7 @@ object QueriesSimilarity {
     Query("q25_ann_topk", (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       ext.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 3), 10)
-        .orderBy("query_id", "rank")
-    },
+    }, Seq(col("query_id"), col("rank")),
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          scored AS (SELECT b.vec_id AS query_id, a.vec_id AS corpus_id,
                       round($CosSql, 6) AS cos
@@ -51,9 +46,9 @@ object QueriesSimilarity {
     Query("q41_ivf_topk", (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val centroids = ext.Ivf.train(emb, k = 8, iters = 2)
-      pinSorted(ext.Ivf.topK(emb, emb.filter(col("vec_id") < 3), 10,
-        centroids, nprobe = 8), "query_id", "rank")
-    },
+      ext.Ivf.topK(emb, emb.filter(col("vec_id") < 3), 10,
+        centroids, nprobe = 8)
+    }, Seq(col("query_id"), col("rank")),
       // nprobe == k scans every IVF cell → exact brute-force top-k,
       // independent of where k-means put the centroids
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -77,8 +72,7 @@ object QueriesSimilarity {
       val emb = Tables.load(s, dir, "embeddings")
       val cb = ext.Pq.train(emb, m = 8, ksub = 16, iters = 2)
       ext.Pq.topK(emb, emb.filter(col("vec_id") < 3), 10, cb, rerank = 10000)
-        .orderBy("query_id", "rank")
-    },
+    }, Seq(col("query_id"), col("rank")),
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          scored AS (SELECT b.vec_id AS query_id, a.vec_id AS corpus_id,
                       round($CosSql, 6) AS cos
@@ -100,9 +94,9 @@ object QueriesSimilarity {
       val emb = Tables.load(s, dir, "embeddings")
       val coarse = ext.Ivf.train(emb, k = 4, iters = 2)
       val cb = ext.Pq.trainResidual(emb, coarse, m = 8, ksub = 16, iters = 2)
-      pinSorted(ext.Pq.topKResidual(emb, emb.filter(col("vec_id") < 3), 10,
-        coarse, cb, rerank = 1000000, nprobe = 4), "query_id", "rank")
-    },
+      ext.Pq.topKResidual(emb, emb.filter(col("vec_id") < 3), 10,
+        coarse, cb, rerank = 1000000, nprobe = 4)
+    }, Seq(col("query_id"), col("rank")),
       // residual IVFPQ at nprobe = k_coarse and rerank >= |corpus| is exact,
       // so the oracle is the same brute-force top-k as q25/q51
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -131,11 +125,10 @@ object QueriesSimilarity {
     Query("q62_ann_store", (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val (coarse, cb, path, n) = annStoreSetup(s, dir)
-      pinSorted(ext.Pq.topKFromStore(s, path, emb,
+      ext.Pq.topKFromStore(s, path, emb,
         emb.filter(col("vec_id") < 3), 10, cb, rerank = n,
-        coarse = Some(coarse), nprobe = 8, residual = true),
-        "query_id", "rank")
-    },
+        coarse = Some(coarse), nprobe = 8, residual = true)
+    }, Seq(col("query_id"), col("rank")),
       // store-served ANN at exactness budgets (nprobe = every cell, rerank =
       // whole corpus) == exact brute-force top-k, independent of k-means —
       // same oracle as q41
@@ -156,8 +149,8 @@ object QueriesSimilarity {
     // coherence; the balance audit behind cluster-aware pruning
     Query("q98_cluster_map", (s, dir) =>
       ext.Similarity.clusterMap(
-        Tables.load(s, dir, "embeddings"), 8)
-        .orderBy("cluster"),
+        Tables.load(s, dir, "embeddings"), 8),
+      Seq(col("cluster")),
       // seed centroids = the 8 lowest vec_ids; assignment replicated as an
       // argmin over the cross join (L2 ties toward the lower cluster index)
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -185,8 +178,8 @@ object QueriesSimilarity {
     // across engines)
     Query("q101_jl_projection", (s, dir) =>
       ext.Similarity.randomProjection(
-        Tables.load(s, dir, "embeddings"), 8)
-        .orderBy("vec_id"), {
+        Tables.load(s, dir, "embeddings"), 8),
+      Seq(col("vec_id")), {
       // the hyperplane literals interpolate from Similarity.jlPlane — ONE
       // source of truth for the weights in both engines
       val planes = (0 until 8).map { i =>
@@ -206,8 +199,7 @@ object QueriesSimilarity {
       val emb = Tables.load(s, dir, "embeddings")
       ext.Similarity.projectedTopK(emb, emb.filter(col("vec_id") < 3),
         10, 8, 50)
-        .orderBy("query_id", "rank")
-    }, {
+    }, Seq(col("query_id"), col("rank")), {
       // same projections as q101; shortlist ranked on the UNROUNDED pcos
       // (bit-identical both engines), exact stage ranked on the rounded cos
       val comps = (0 until 8).map { i =>
@@ -247,9 +239,9 @@ object QueriesSimilarity {
     // before the JL shortlist so the candidate budget is all cross-label
     Query("q105_hard_negatives", (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
-      pinSorted(ext.Similarity.hardNegatives(emb,
-        emb.filter(col("vec_id") < 5), 10, 8, 50), "query_id", "rank")
-    }, {
+      ext.Similarity.hardNegatives(emb,
+        emb.filter(col("vec_id") < 5), 10, 8, 50)
+    }, Seq(col("query_id"), col("rank")), {
       // q102's two-stage replay with the label predicate pushed under the
       // shortlist (hyperplane literals again interpolate from jlPlane)
       val comps = (0 until 8).map { i =>
@@ -289,8 +281,8 @@ object QueriesSimilarity {
     // within-cluster rank, top-25% drop flag (the diversify cut)
     Query("q106_prototypicality", (s, dir) =>
       ext.Similarity.prototypicality(
-        Tables.load(s, dir, "embeddings"), 8, 0.25)
-        .orderBy("vec_id"),
+        Tables.load(s, dir, "embeddings"), 8, 0.25),
+      Seq(col("vec_id")),
       // q98's seed-centroid assignment + within-cluster prototype rank;
       // NULL cosines (zero vectors) rank last via the -2 sentinel
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -327,8 +319,7 @@ object QueriesSimilarity {
       val emb = Tables.load(s, dir, "embeddings")
       ext.Similarity.mmrTopK(emb, emb.filter(col("vec_id") < 3),
         8, 0.7, 20)
-        .orderBy("query_id", "mmr_rank")
-    },
+    }, Seq(col("query_id"), col("mmr_rank")),
       MmrChainSql(8, 0.7, 20, 3)),
 
 
@@ -336,8 +327,8 @@ object QueriesSimilarity {
     // stack; top-10 docs for a three-term query
     Query("q127_bm25", (s, dir) =>
       ext.TextAnalysis.bm25(Tables.load(s, dir, "documents"),
-        "doc_id", "text", "hash join filter")
-        .orderBy(col("score").desc, col("doc_id")), {
+        "doc_id", "text", "hash join filter"),
+      Seq(col("score").desc, col("doc_id")), {
       // Lucene-form BM25; k1/b-derived literals interpolate from the SAME
       // Scala doubles so the score arithmetic replays bit-for-bit
       val (k1, b) = (1.2, 0.75)
@@ -369,8 +360,8 @@ object QueriesSimilarity {
     // O(n·k) centroid form, broadcast k×d centroid table
     Query("q132_cluster_quality", (s, dir) =>
       ext.Similarity.clusterQuality(
-        Tables.load(s, dir, "embeddings"), "label")
-        .orderBy("cluster"),
+        Tables.load(s, dir, "embeddings"), "label"),
+      Seq(col("cluster")),
       // simplified silhouette vs per-(cluster,dim) centroid means; the
       // point-centroid distances round at 6 dp BEFORE the a/b compare so
       // both engines pick the same argmin
@@ -411,7 +402,7 @@ object QueriesSimilarity {
         .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 10)
         .select(col("corpus_id").as("doc_id"), col("cos").as("score"))
       ext.Similarity.rrfFuse(sparse, dense, "doc_id")
-    }, {
+    }, Nil, {
       // RRF = 1/(60+rank_sparse) + 1/(60+rank_dense) over the q127 BM25
       // top-10 and the dense cosine top-10 for query vector 0; both ranks
       // order by (6 dp score desc, id) so the fusion is engine-portable
@@ -463,7 +454,8 @@ object QueriesSimilarity {
     // audit before a 4× store compression ships)
     Query("q140_int8_quant", (s, dir) =>
       ext.Similarity.scalarQuantize(Tables.load(s, dir, "embeddings"))
-        .select(col("vec_id"), col("mse")).orderBy("vec_id"),
+        .select(col("vec_id"), col("mse")),
+      Seq(col("vec_id")),
       // same affine form left-associated; round() sees only non-negative
       // arguments so HALF_UP and half-away agree; (qv+128) == round(...)
       // exactly on integers, so the reconstruction skips the offset
@@ -497,8 +489,7 @@ object QueriesSimilarity {
         .select("query_id", "corpus_id")
       ext.Eval.retrievalMetrics(runs, qrels, "query_id", "corpus_id",
           "cos", 10)
-        .orderBy("query_id")
-    }, {
+    }, Seq(col("query_id")), {
       // ln-ratio discount (ln(r+1)/ln 2) interpolated from the SAME Scala
       // Ln2 double the Spark side uses — library log2's differ in the last
       // ulp between engines, a fixed ln-ratio does not
@@ -552,7 +543,7 @@ object QueriesSimilarity {
         .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 10)
         .select(col("corpus_id").as("doc_id"), col("cos").as("score"))
       ext.Similarity.rbo(sparse, dense, "doc_id")
-    }, {
+    }, Nil, {
       // q133's bm25 + dense rank CTEs, then the per-doc suffix-weight
       // regrouping; the weights interpolate rboWeights' exact doubles
       val (k1, b) = (1.2, 0.75)
@@ -613,8 +604,7 @@ object QueriesSimilarity {
       v.toIndexedSeq.zipWithIndex.map { case (vj, j) => (j + 1, vj) }
         .toDF("dim", "loading")
         .select(col("dim"), round(col("loading"), 6).as("loading"))
-        .orderBy("dim")
-    },
+    }, Seq(col("dim")),
       s"""WITH $PcaRoundsSql
          SELECT CAST(g.j AS INT) AS dim, round(v5.v[g.j], 6) AS loading
          FROM v5, generate_series(1, 64) AS g(j)
@@ -626,6 +616,7 @@ object QueriesSimilarity {
     // projection beats JL?" quantified
     Query("q162_pca_variance", (s, dir) =>
       ext.Similarity.pcaVarianceReport(Tables.load(s, dir, "embeddings")),
+      Nil,
       s"""WITH $PcaRoundsSql,
          sc5 AS (SELECT list_sum(list_transform(generate_series(1, 64),
                   j2 -> (e.x[j2] - mu.mu[j2]) * v5.v[j2])) AS s,
@@ -651,10 +642,9 @@ object QueriesSimilarity {
       ext.Ivf.writeStore(emb.filter(col("vec_id") % 2 === 0), path, coarse)
       ext.Ivf.appendToStore(emb.filter(col("vec_id") % 2 === 1), path,
         coarse)
-      pinSorted(ext.Ivf.topKFromStore(s, path,
-        emb.filter(col("vec_id") < 3), 10, coarse, nprobe = 8),
-        "query_id", "rank")
-    },
+      ext.Ivf.topKFromStore(s, path,
+        emb.filter(col("vec_id") < 3), 10, coarse, nprobe = 8)
+    }, Seq(col("query_id"), col("rank")),
       // nprobe = k ⇒ exact: the same brute-force oracle as q25/q41 —
       // centroid quality affects only the partitioning, never the result
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -674,8 +664,8 @@ object QueriesSimilarity {
     // ext: per-row projection onto the q161 component — the dominant-
     // axis coordinate as a scalar feature (shuffle-free scoring map)
     Query("q167_pca_project", (s, dir) =>
-      ext.Similarity.pcaProject(Tables.load(s, dir, "embeddings"))
-        .orderBy("vec_id"),
+      ext.Similarity.pcaProject(Tables.load(s, dir, "embeddings")),
+      Seq(col("vec_id")),
       s"""WITH $PcaRoundsSql
          SELECT e.vec_id,
            round(list_sum(list_transform(generate_series(1, 64),
@@ -693,8 +683,7 @@ object QueriesSimilarity {
       v.toIndexedSeq.zipWithIndex.map { case (vj, j) => (j + 1, vj) }
         .toDF("dim", "loading2")
         .select(col("dim"), round(col("loading2"), 6).as("loading2"))
-        .orderBy("dim")
-    },
+    }, Seq(col("dim")),
       s"""WITH $Pca2RoundsSql
          SELECT CAST(g.j AS INT) AS dim, round(u5.v[g.j], 6) AS loading2
          FROM u5, generate_series(1, 64) AS g(j)
@@ -707,6 +696,7 @@ object QueriesSimilarity {
     Query("q172_embedding_outliers", (s, dir) =>
       ext.Similarity.embeddingOutliers(
         Tables.load(s, dir, "embeddings")),
+      Nil,
       // per-dim mean/std as driver-shape arithmetic ((E[x²]−μ²)·n/(n−1));
       // zero-variance dims contribute 0 via a 0-multiplier
       """WITH e AS MATERIALIZED (SELECT vec_id,
@@ -761,8 +751,8 @@ object QueriesSimilarity {
           .select(lit(name).as("run"), col("n_rel"), col("hit_k"),
             col("mrr"), col("ndcg"))
       audit(sparse, "sparse").unionByName(audit(dense, "dense"))
-        .unionByName(audit(fused, "fused")).orderBy("run")
-    }, {
+        .unionByName(audit(fused, "fused"))
+    }, Seq(col("run")), {
       // q133's three runs + q149's metric arithmetic over one judgment set
       val (k1, b) = (1.2, 0.75)
       val ln2 = ext.Eval.Ln2
@@ -863,8 +853,7 @@ object QueriesSimilarity {
           col("c.vec_id").as("corpus_id"))
       ext.Eval.retrievalMetricsMacro(fused, qrels, "query_id",
           "corpus_id", "score", 10)
-        .orderBy(col("scope"), col("query_id"))
-    }, {
+    }, Seq(col("scope"), col("query_id")), {
       // q181 generalized to 8 judged queries: full-dim and truncated-32-dim
       // cosine runs fused per query, then per-query metrics + a macro row
       val ln2 = ext.Eval.Ln2

@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 
 /** Query registry — LLM pipeline: Misra-Gries heavy hitters, count-min estimates and join sizing.
@@ -21,6 +16,7 @@ object QueriesSketch {
     Query("q86_heavy_hitters", (s, dir) =>
       ext.TextAnalysis.heavyHitters(
         Tables.load(s, dir, "documents"), "text", 20),
+      Nil,
       s"""SELECT word AS token, CAST(count(*) AS BIGINT) AS cnt
          FROM (SELECT unnest($ToksSql) AS word FROM documents)
          GROUP BY word ORDER BY cnt DESC, token LIMIT 20"""),
@@ -36,8 +32,7 @@ object QueriesSketch {
       val probes = Seq("hash", "join", "filter", "data", "the", "zzznope")
         .toDF("tok")
       ext.Cms.estimates(ext.Cms.cells(toks, "tok"), probes, "tok")
-        .orderBy("tok")
-    },
+    }, Seq(col("tok")),
       // same md5-prefix hash family; min over the 4 rows' cells, absent
       // cell = 0
       s"""WITH h AS (SELECT unnest($ToksSql) AS tok FROM documents),
@@ -63,7 +58,7 @@ object QueriesSketch {
       ext.Cms.innerProduct(
         ext.Cms.cells(toks(col("source").isin("src0", "src1")), "tok"),
         ext.Cms.cells(toks(col("lang") === "zh"), "tok"))
-    },
+    }, Nil,
       // CMS inner product: min over j of sum_b cellA*cellB
       s"""WITH ha AS (SELECT unnest($ToksSql) AS tok FROM documents
                 WHERE source IN ('src0', 'src1')),

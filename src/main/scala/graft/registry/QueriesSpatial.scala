@@ -1,12 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
+import graft.operators.{Elevation, FlagRegions, GridOps, MineDepletion, Tridist}
 import graft.QueryShared._
 
 /** Query registry — §2.5 — grids, region flags, depletion, elevation, shells, meshes.
@@ -20,8 +16,8 @@ object QueriesSpatial {
     // shuffle-free)
     Query("q11_grid_generate", (s, _) =>
       GridOps.cellsVolume(GridOps.generate(s, G), G)
-        .select("id", "i", "j", "k", "x", "y", "z", "volume")
-        .orderBy("id"),
+        .select("id", "i", "j", "k", "x", "y", "z", "volume"),
+      Seq(col("id")),
       s"""WITH $GridSql
          SELECT id, i, j, k, x, y, z, 1000.0 AS volume FROM g ORDER BY id"""),
 
@@ -30,7 +26,8 @@ object QueriesSpatial {
     // last mesh wins, '' default)
     Query("q12_flag_regions", (s, _) =>
       FlagRegions(s, GridOps.generate(s, G), Seq(Region2, Region3))
-        .select("id", "region").orderBy("id"),
+        .select("id", "region"),
+      Seq(col("id")),
       s"""WITH $GridSql
          SELECT id,
            CASE WHEN x BETWEEN 1151.2 AND 1248.8 AND y BETWEEN 2101.1 AND 2199.9
@@ -45,8 +42,8 @@ object QueriesSpatial {
     // elevation vs analytic plane algebra)
     Query("q13_mine_deplete", (s, _) =>
       MineDepletion(s, GridOps.generate(s, G), Seq(Topo), Seq(Pit), G.sz)
-        .select(col("id"), round(col("mine"), 6).as("mine"))
-        .orderBy("id"),
+        .select(col("id"), round(col("mine"), 6).as("mine")),
+      Seq(col("id")),
       s"""WITH $GridSql
          SELECT id,
            round(least(1, greatest(0, (152.3 - (z - 5)) / 10)) *
@@ -63,8 +60,8 @@ object QueriesSpatial {
         .withColumn("x", lit(995.0) + (col("id") * 7.3) % 310.0)
         .withColumn("y", lit(1995.0) + (col("id") * 11.7) % 210.0)
         .withColumn("z", lit(95.0) + (col("id") * 3.9) % 210.0)
-      GridOps.nearestCell(pts, G).select("id", "i", "j", "k").orderBy("id")
-    },
+      GridOps.nearestCell(pts, G).select("id", "i", "j", "k")
+    }, Seq(col("id")),
       """WITH p AS (
            SELECT range AS id,
              995.0 + (range * CAST(7.3 AS DOUBLE)) % 310.0 AS x,
@@ -90,8 +87,8 @@ object QueriesSpatial {
         GridOps.generate(s, G)
           .withColumn("v", (col("i") * 7 + col("j") * 13 + col("k") * 17) % 97),
         "k", "v", "mean")
-        .withColumnRenamed("v mean", "v_mean")
-        .orderBy("i", "j"),
+        .withColumnRenamed("v mean", "v_mean"),
+      Seq(col("i"), col("j")),
       s"""WITH $GridSql
          SELECT i, j, avg((i * 7 + j * 13 + k * 17) % 97) AS v_mean
          FROM g GROUP BY i, j ORDER BY i, j"""),
@@ -100,8 +97,8 @@ object QueriesSpatial {
     // §2.5 surface elevation (get_elevation): sloped plane, null off-footprint
     Query("q16_elevation", (s, _) =>
       Elevation(GridOps.generate(s, G), Slope)
-        .select(col("id"), round(col("elevation"), 6).as("elev"))
-        .orderBy("id"),
+        .select(col("id"), round(col("elevation"), 6).as("elev")),
+      Seq(col("id")),
       s"""WITH $GridSql
          SELECT id,
            CASE WHEN x BETWEEN 1001 AND 1289.5 AND y BETWEEN 1900 AND 2350
@@ -113,7 +110,8 @@ object QueriesSpatial {
     Query("q36_flag2d", (s, _) =>
       FlagRegions(s, GridOps.generate(s, G), Seq(Slope), flagVar = "flag2d",
         footprint2d = true)
-        .select("id", "flag2d").orderBy("id"),
+        .select("id", "flag2d"),
+      Seq(col("id")),
       s"""WITH $GridSql
          SELECT id,
            CASE WHEN x BETWEEN 1001 AND 1289.5 AND y BETWEEN 1900 AND 2350
@@ -127,8 +125,8 @@ object QueriesSpatial {
         .withColumn("grade", (col("i") * 7 + col("j") * 13 + col("k") * 17) % 97)
         .withColumn("band", floor(col("grade") / 20).cast("int"))
         .groupBy("band")
-        .agg(count(lit(1)).as("n"), min("grade").as("lo"), max("grade").as("hi"))
-        .orderBy("band"),
+        .agg(count(lit(1)).as("n"), min("grade").as("lo"), max("grade").as("hi")),
+      Seq(col("band")),
       s"""WITH $GridSql
          SELECT CAST(floor(((i * 7 + j * 13 + k * 17) % 97) / 20) AS INT) AS band,
            count(*) AS n,
@@ -142,8 +140,8 @@ object QueriesSpatial {
       GridOps.generate(s, G)
         .select(col("id"),
           (col("i").cast("long") * 1000000L + col("j").cast("long") * 1000L +
-            col("k").cast("long")).as("ijk"))
-        .orderBy("id"),
+            col("k").cast("long")).as("ijk")),
+      Seq(col("id")),
       s"""WITH $GridSql
          SELECT id, CAST(i AS BIGINT) * 1000000 + CAST(j AS BIGINT) * 1000 + CAST(k AS BIGINT) AS ijk
          FROM g ORDER BY id"""),
@@ -154,8 +152,8 @@ object QueriesSpatial {
     Query("q39_rotated_grid", (s, _) =>
       GridOps.generate(s, G.copy(bearing = 45.0, rotX = 1000.0, rotY = 2000.0))
         .select(col("id"), round(col("x"), 6).as("x"), round(col("y"), 6).as("y"),
-          col("z"))
-        .orderBy("id"), {
+          col("z")),
+      Seq(col("id")), {
       // embed the exact rotation constants the Scala side uses
       val a = math.toRadians(-(45.0 - 90.0))
       val c = math.cos(a); val sn = math.sin(a)
@@ -178,8 +176,8 @@ object QueriesSpatial {
           lit("other")))
         .groupBy("qty_band")
         .agg(count(lit(1)).as("n"),
-          round(sum(col("l_extendedprice")), 2).as("sum_price"))
-        .orderBy("qty_band"),
+          round(sum(col("l_extendedprice")), 2).as("sum_price")),
+      Seq(col("qty_band")),
       // range join spelled relationally: LEFT JOIN on the interval condition
       """WITH bands(name, lo, hi) AS (VALUES
            ('low', 0.0, 10.0), ('mid', 10.0, 25.0), ('high', 25.0, 45.0)),
@@ -194,8 +192,8 @@ object QueriesSpatial {
     // the sloped plane, null off-footprint (pd_vtk.py:1205-1218)
     Query("q128_tridist", (s, _) =>
       Tridist(GridOps.generate(s, G), Slope)
-        .select(col("id"), round(col("tridist"), 6).as("tridist"))
-        .orderBy("id"),
+        .select(col("id"), round(col("tridist"), 6).as("tridist")),
+      Seq(col("id")),
       // tridist = |z − (analytic slope plane)| inside the footprint; the
       // ray-trace surfaceZ diverges from the plane algebra only in the last
       // ulps, absorbed by the shared 6 dp grain (the q16 discipline)

@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 
 /** Query registry — event analytics: windows, sessions, attribution, funnels, chat transcripts.
@@ -19,8 +14,8 @@ object QueriesStreaming {
     // streaming twin: tumbling-window aggregation (batch plan == stream plan)
     Query("q27_event_windows", (s, dir) =>
       streaming.EventStream.windowedCounts(Tables.load(s, dir, "events"))
-        .select(col("ws"), col("event_type"), col("n"), round(col("v"), 4).as("v"))
-        .orderBy("ws", "event_type"),
+        .select(col("ws"), col("event_type"), col("n"), round(col("v"), 4).as("v")),
+      Seq(col("ws"), col("event_type")),
       """SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, event_type,
          count(*) AS n, round(sum(value), 4) AS v
          FROM events GROUP BY ws, event_type ORDER BY ws, event_type"""),
@@ -28,8 +23,8 @@ object QueriesStreaming {
 
     // streaming twin: gap-based sessionization (window-function batch form)
     Query("q28_sessionize", (s, dir) =>
-      streaming.EventStream.sessionizeBatch(Tables.load(s, dir, "events"), 1800)
-        .orderBy("user_id", "session_idx"),
+      streaming.EventStream.sessionizeBatch(Tables.load(s, dir, "events"), 1800),
+      Seq(col("user_id"), col("session_idx")),
       """WITH o AS (
            SELECT user_id, ts, event_id,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -55,8 +50,8 @@ object QueriesStreaming {
         Tables.load(s, dir, "events"), "view", "purchase", 86400L)
         .select(col("user_id"), col("from_id"), col("to_id"),
           unix_micros(col("from_ts")).as("from_us"),
-          unix_micros(col("to_ts")).as("to_us"))
-        .orderBy("user_id", "from_id", "to_id"),
+          unix_micros(col("to_ts")).as("to_us")),
+      Seq(col("user_id"), col("from_id"), col("to_id")),
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us FROM events)
          SELECT a.user_id AS user_id, a.event_id AS from_id, b.event_id AS to_id,
            a.us AS from_us, b.us AS to_us
@@ -71,8 +66,8 @@ object QueriesStreaming {
     Query("q91_funnel", (s, dir) =>
       streaming.EventStream.funnel(
         Tables.load(s, dir, "events"),
-        Seq("view", "click", "purchase"), 7L * 86400L)
-        .orderBy("user_id"),
+        Seq("view", "click", "purchase"), 7L * 86400L),
+      Seq(col("user_id")),
       // greedy earliest chain per user — each step is a min over events
       // strictly after the previous step's timestamp
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
@@ -93,8 +88,8 @@ object QueriesStreaming {
 
     // weekly cohort retention — integer epoch weeks, no calendar math
     Query("q92_retention", (s, dir) =>
-      streaming.EventStream.cohortRetention(Tables.load(s, dir, "events"))
-        .orderBy("cohort_week", "week_offset"),
+      streaming.EventStream.cohortRetention(Tables.load(s, dir, "events")),
+      Seq(col("cohort_week"), col("week_offset")),
       """WITH w AS (SELECT user_id, epoch_us(ts) // 604800000000 AS week
              FROM events),
          c AS (SELECT user_id, min(week) AS cohort_week FROM w GROUP BY user_id),
@@ -110,8 +105,8 @@ object QueriesStreaming {
     // sequences ((ts, event_id) order; unrounded integer-ratio P(to|from))
     Query("q109_transitions", (s, dir) =>
       streaming.EventStream.transitionMatrix(
-        Tables.load(s, dir, "events"))
-        .orderBy("from_type", "to_type"),
+        Tables.load(s, dir, "events")),
+      Seq(col("from_type"), col("to_type")),
       s"""WITH a AS (SELECT event_type AS from_type,
                  lead(event_type) OVER (PARTITION BY user_id
                    ORDER BY ts, event_id) AS to_type
@@ -131,8 +126,8 @@ object QueriesStreaming {
     Query("q146_chat_validate", (s, dir) =>
       ext.Chat.validateTurns(chatTurns(
           Tables.load(s, dir, "events").filter(col("user_id") < 50)),
-        "conv_id", "turn_idx", "role")
-        .orderBy("conv_id"),
+        "conv_id", "turn_idx", "role"),
+      Seq(col("conv_id")),
       // all-integer structural flags over the shared turn CTE
       s"""WITH $ChatTurnsSql
          SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
@@ -158,8 +153,8 @@ object QueriesStreaming {
     Query("q147_chat_flatten", (s, dir) =>
       ext.Chat.flatten(chatTurns(
           Tables.load(s, dir, "events").filter(col("user_id") < 50)),
-        "conv_id", "turn_idx", "role", "content")
-        .orderBy("conv_id"),
+        "conv_id", "turn_idx", "role", "content"),
+      Seq(col("conv_id")),
       s"""WITH $ChatTurnsSql
          SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
            string_agg(concat('<|', role, '|>', content), ''
@@ -171,8 +166,8 @@ object QueriesStreaming {
     // per user (decay is a shuffle-free projection + one combine)
     Query("q155_time_decay", (s, dir) =>
       streaming.EventStream.timeDecayedValue(
-        Tables.load(s, dir, "events"), 7.0)
-        .orderBy("user_id"), {
+        Tables.load(s, dir, "events"), 7.0),
+      Seq(col("user_id")), {
       // decay weight interpolates the SAME Ln2 double the Spark side uses;
       // identical (-ln2 * days / halflife) shape both engines
       val ln2 = ext.Eval.Ln2

@@ -1,12 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.Breakdown
-import graft.model.{GridSchema, TriMesh}
-import graft.operators.{Elevation, Factorize, FlagRegions, GridOps, MineDepletion, Tridist}
-import graft.sources.Ingest
 import graft.QueryShared._
 import graft.util.Checkpoints.scoped
 
@@ -24,8 +19,8 @@ object QueriesText {
     Query("q17_token_count", (s, dir) =>
       Tables.load(s, dir, "documents")
         .select(col("doc_id"),
-          ext.TextAnalysis.tokenCount("text").cast("long").as("tok_cnt"))
-        .orderBy("doc_id"),
+          ext.TextAnalysis.tokenCount("text").cast("long").as("tok_cnt")),
+      Seq(col("doc_id")),
       """SELECT doc_id,
          CAST(CASE WHEN len(trim(text)) = 0 THEN 0
               ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS tok_cnt
@@ -34,11 +29,11 @@ object QueriesText {
 
     // ext: language-ID heuristic + quality scoring (pure expressions)
     Query("q18_langid_quality", (s, dir) =>
-      pinSorted(Tables.load(s, dir, "documents")
+      Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           ext.TextAnalysis.langId("text").as("lang_id"),
           round(ext.TextAnalysis.qualityScore("text"), 6).as("quality")),
-        "doc_id"),
+      Seq(col("doc_id")),
       s"""$QualityCtesSql
          SELECT doc_id,
            $LangCaseSql AS lang_id,
@@ -48,9 +43,10 @@ object QueriesText {
 
     // ext: rolling-hash document fingerprint (min md5 over char 8-grams)
     Query("q19_fingerprint", (s, dir) =>
-      pinSorted(Tables.load(s, dir, "documents")
+      Tables.load(s, dir, "documents")
         .select(col("doc_id"),
-          ext.TextAnalysis.fingerprint("text").as("fp")), "doc_id"),
+          ext.TextAnalysis.fingerprint("text").as("fp")),
+      Seq(col("doc_id")),
       """SELECT doc_id,
          list_min(list_transform(generate_series(1, greatest(len(text) - 7, 1)),
            i -> md5(substr(text, i, 8)))) AS fp
@@ -61,8 +57,8 @@ object QueriesText {
     // TextAnalysis.tfidfTopTerms for the cross-engine rationale)
     Query("q45_tfidf", (s, dir) =>
       ext.TextAnalysis.tfidfTopTerms(
-        Tables.load(s, dir, "documents"), "text", "doc_id", 3)
-        .orderBy("doc_id", "rank"),
+        Tables.load(s, dir, "documents"), "text", "doc_id", 3),
+      Seq(col("doc_id"), col("rank")),
       // identical rational-idf arithmetic: tf * ((N+1)/(df+1)), both exact
       // IEEE ops, rounded at 6dp on both sides
       s"""WITH n AS (SELECT count(*) AS n FROM documents),
@@ -87,8 +83,8 @@ object QueriesText {
       ext.TextAnalysis.chunk(Tables.load(s, dir, "documents"),
           "text", "doc_id", 32, 8)
         .withColumn("chunk_id", col("chunk_id").cast("long"))
-        .withColumn("n_tokens", col("n_tokens").cast("long"))
-        .orderBy("doc_id", "chunk_id"),
+        .withColumn("n_tokens", col("n_tokens").cast("long")),
+      Seq(col("doc_id"), col("chunk_id")),
       """WITH t AS (
            SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
            FROM documents
@@ -118,8 +114,7 @@ object QueriesText {
           ext.TextAnalysis.redactPii("aug").as("red"),
           ext.TextAnalysis.piiCounts("aug")._1.cast("long").as("n_email"),
           ext.TextAnalysis.piiCounts("aug")._2.cast("long").as("n_phone"))
-        .orderBy("doc_id")
-    },
+    }, Seq(col("doc_id")),
       """WITH a AS (
            SELECT doc_id, substr(text, 1, 80) || ' mail user' ||
              CAST(doc_id AS VARCHAR) || '@ex.org or 555-123-4567 bye' AS aug
@@ -148,6 +143,7 @@ object QueriesText {
         .agg(count(lit(1)).as("tf"), count_distinct(col("doc_id")).as("df"))
         .orderBy(col("tf").desc, col("term"))
         .limit(50),
+      Nil,
       s"""WITH tt AS (SELECT doc_id, unnest($ToksSql) AS term FROM documents)
          SELECT term, count(*) AS tf, count(DISTINCT doc_id) AS df
          FROM tt GROUP BY term
@@ -160,8 +156,8 @@ object QueriesText {
       Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           ext.TextAnalysis.normalize("text").as("norm"),
-          length(ext.TextAnalysis.normalize("text")).cast("long").as("n_chars"))
-        .orderBy("doc_id"),
+          length(ext.TextAnalysis.normalize("text")).cast("long").as("n_chars")),
+      Seq(col("doc_id")),
       """SELECT doc_id,
            trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm,
            CAST(length(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS BIGINT) AS n_chars
@@ -172,8 +168,8 @@ object QueriesText {
     // every 512 tokens, one row per (doc, overlapped training sequence)
     Query("q64_seq_pack", (s, dir) =>
       ext.TextAnalysis.packSequences(
-        Tables.load(s, dir, "documents"), "text", "doc_id", 512)
-        .orderBy("source", "seq_id", "doc_id"),
+        Tables.load(s, dir, "documents"), "text", "doc_id", 512),
+      Seq(col("source"), col("seq_id"), col("doc_id")),
       // packing replay: whitespace token counts (q17 semantics), per-source
       // running offset, one row per ctx=512 sequence a doc overlaps
       """WITH t AS (SELECT source, doc_id,
@@ -195,13 +191,13 @@ object QueriesText {
     // alpha-word fraction, duplicate-3-gram repetition) — the mechanical
     // per-document filters production pipelines threshold on
     Query("q65_quality_signals", (s, dir) =>
-      pinSorted(Tables.load(s, dir, "documents")
+      Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           round(ext.TextAnalysis.meanWordLength(col("text")), 6).as("mean_wlen"),
           round(ext.TextAnalysis.symbolWordRatio(col("text")), 6).as("sym_ratio"),
           round(ext.TextAnalysis.alphaWordFraction(col("text")), 6).as("alpha_frac"),
           round(ext.TextAnalysis.dupShingleFraction(col("text")), 6).as("dup3_frac")),
-        "doc_id"),
+      Seq(col("doc_id")),
       // Gopher signals replayed in rational arithmetic: alnum-char totals /
       // token counts, symbol counts per whitespace word, letter-bearing word
       // fraction, 1 - distinct/total word 3-grams
@@ -233,8 +229,8 @@ object QueriesText {
     // q64 HUGEINT lesson)
     Query("q69_token_budget", (s, dir) =>
       ext.TextAnalysis.selectByTokenBudget(
-        Tables.load(s, dir, "documents"), "text", "doc_id", 2000L)
-        .orderBy("source", "doc_id"),
+        Tables.load(s, dir, "documents"), "text", "doc_id", 2000L),
+      Seq(col("source"), col("doc_id")),
       // q18's quality replay ranked per source, running token sum under a
       // 2000-token budget; windowed sum CAST — DuckDB returns HUGEINT
       s"""WITH t AS (SELECT source, doc_id, text, $ToksSql AS toks,
@@ -272,8 +268,7 @@ object QueriesText {
         .select(col("doc_id"),
           round(ext.TextAnalysis.dupLineFraction(aug), 6).as("dup_line"),
           round(ext.TextAnalysis.dupParaFraction(aug), 6).as("dup_para"))
-        .orderBy("doc_id")
-    },
+    }, Seq(col("doc_id")),
       // repetition signals over the same synthesized line/paragraph layout
       s"""WITH t AS (SELECT doc_id,
              concat(substr(text, 1, 30), chr(10), substr(text, 1, 30),
@@ -302,8 +297,8 @@ object QueriesText {
     // add-1-smoothed corpus transition counts
     Query("q74_lm_score", (s, dir) =>
       ext.TextAnalysis.lmScore(
-        Tables.load(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id"),
+        Tables.load(s, dir, "documents"), "doc_id", "text"),
+      Seq(col("doc_id")),
       // bigram LM scoring: add-1-smoothed corpus transition counts, context
       // count = occurrences as bigram head, V = corpus vocabulary
       s"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents
@@ -326,8 +321,8 @@ object QueriesText {
     // symbol-pair merges over the corpus vocabulary, from characters
     Query("q75_bpe_train", (s, dir) =>
       ext.TextAnalysis.bpeTrain(
-        Tables.load(s, dir, "documents"), "text", 8)
-        .orderBy("rank"),
+        Tables.load(s, dir, "documents"), "text", 8),
+      Seq(col("rank")),
       // BPE merge learning: 8 generated rounds — pair counts over the
       // previous round's vocab, 1-row argmax (count desc, lhs, rhs), then a
       // literal [lhs][rhs] replace (greedy left-to-right, both engines)
@@ -338,8 +333,8 @@ object QueriesText {
     // frequencies after the q75 merge schedule
     Query("q76_bpe_vocab", (s, dir) =>
       ext.TextAnalysis.bpeSubwords(
-        Tables.load(s, dir, "documents"), "text", 8)
-        .orderBy("subword"),
+        Tables.load(s, dir, "documents"), "text", 8),
+      Seq(col("subword")),
       // BPE vocabulary: final-round subword frequencies (same CTE chain)
       BpeSubwordsSql(8)),
 
@@ -348,8 +343,8 @@ object QueriesText {
     // run before mixing corpora
     Query("q78_source_overlap", (s, dir) =>
       ext.Dedup.sourceOverlap(
-        Tables.load(s, dir, "documents"), "source", "text")
-        .orderBy("src_a", "src_b"),
+        Tables.load(s, dir, "documents"), "source", "text"),
+      Seq(col("src_a"), col("src_b")),
       // cross-source containment: per-source distinct shingle sets, shared
       // shingles joined, containment = n_common / |sh(src_a)|
       s"""WITH s AS (SELECT DISTINCT src, sh FROM
@@ -369,8 +364,8 @@ object QueriesText {
     // token counts in 16 hashed slots, long format
     Query("q79_feature_hash", (s, dir) =>
       ext.TextAnalysis.featureHash(
-        Tables.load(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id", "slot"),
+        Tables.load(s, dir, "documents"), "doc_id", "text"),
+      Seq(col("doc_id"), col("slot")),
       // feature hashing: 60-bit md5-prefix token hash, slot = h mod 16,
       // sign = bit 8; signed counts per (doc, slot)
       s"""WITH tok AS (SELECT doc_id, unnest($ToksSql) AS t FROM documents),
@@ -387,8 +382,8 @@ object QueriesText {
     // corpus-trained bigram-LM nll, thresholds broadcast (no global rank)
     Query("q80_ppl_buckets", (s, dir) =>
       ext.TextAnalysis.pplBuckets(
-        Tables.load(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id"),
+        Tables.load(s, dir, "documents"), "doc_id", "text"),
+      Seq(col("doc_id")),
       // CCNet perplexity buckets: q74's scoring CTE + exact tercile value
       // thresholds (quantile_cont ≡ Spark percentile, pos = (n−1)·q)
       s"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents
@@ -419,8 +414,8 @@ object QueriesText {
     Query("q81_dsir", (s, dir) =>
       ext.TextAnalysis.dsirWeights(
         Tables.load(s, dir, "documents"), "doc_id", "text",
-        org.apache.spark.sql.functions.col("source").isin("src0", "src1"))
-        .orderBy("doc_id"),
+        org.apache.spark.sql.functions.col("source").isin("src0", "src1")),
+      Seq(col("doc_id")),
       // DSIR importance weights: hashed unigram+bigram features (60-bit md5
       // prefix, 64 slots), add-1-smoothed log target/raw rate ratio
       s"""WITH toks AS (SELECT doc_id, source IN ('src0', 'src1') AS tgt,
@@ -453,8 +448,8 @@ object QueriesText {
     // percentiles, language spread in one aggregation pass
     Query("q82_corpus_report", (s, dir) =>
       ext.TextAnalysis.corpusReport(
-        Tables.load(s, dir, "documents"))
-        .orderBy("source"),
+        Tables.load(s, dir, "documents")),
+      Seq(col("source")),
       // corpus datasheet: per-source volume, exact-dup ratio via md5
       // digests, length percentiles, language spread
       s"""WITH t AS (SELECT source, lang, text,
@@ -476,8 +471,8 @@ object QueriesText {
     // the 8-merge schedule folded as literal replaces over distinct words
     Query("q83_bpe_encode", (s, dir) =>
       ext.TextAnalysis.bpeEncode(
-        Tables.load(s, dir, "documents"), "doc_id", "text", 8)
-        .orderBy("doc_id"),
+        Tables.load(s, dir, "documents"), "doc_id", "text", 8),
+      Seq(col("doc_id")),
       // BPE encoding: the generated training chain + rule fold over the
       // distinct-word table, joined back per document
       BpeEncodeSql(8)),
@@ -489,9 +484,8 @@ object QueriesText {
       ext.TextAnalysis.dsirSelect(
         Tables.load(s, dir, "documents"), "doc_id", "text",
         org.apache.spark.sql.functions.col("source").isin("src0", "src1"),
-        200)
-        .orderBy(org.apache.spark.sql.functions.col("key").desc,
-          org.apache.spark.sql.functions.col("doc_id")),
+        200),
+      Seq(col("key").desc, col("doc_id")),
       // DSIR Gumbel top-k: q81's weight CTE + deterministic (salt, id)-keyed
       // Gumbel perturbation, top 200 by perturbed weight
       s"""WITH toks AS (SELECT doc_id, source IN ('src0', 'src1') AS tgt,
@@ -530,8 +524,8 @@ object QueriesText {
     // ratio; slice-level companion of the q94 per-document novelty
     Query("q96_diversity", (s, dir) =>
       ext.TextAnalysis.diversityReport(
-        Tables.load(s, dir, "documents"), "source", "text")
-        .orderBy("source"),
+        Tables.load(s, dir, "documents"), "source", "text"),
+      Seq(col("source")),
       // hashed shingles mirror the Spark side exactly, so even a 60-bit
       // collision changes both engines' distinct counts identically
       s"""WITH d AS (SELECT source, $ShinglesSql AS sh FROM documents),
@@ -553,8 +547,8 @@ object QueriesText {
     Query("q97_fertility", (s, dir) =>
       ext.TextAnalysis.tokenizerFertility(
         Tables.load(s, dir, "documents"), "doc_id", "text",
-        "lang", "n_chars", 8)
-        .orderBy("lang"),
+        "lang", "n_chars", 8),
+      Seq(col("lang")),
       s"""${BpeDocTokensSql(8)}
          SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS n_chars,
@@ -572,8 +566,8 @@ object QueriesText {
     // raterBase projection — one tokenizer pass, released per query.
     Query("q99_quality_classifier", (s, dir) => scoped { sc =>
       ext.TextAnalysis.nbQualityScoreTokens(sc.pin(raterBase(s, dir)),
-        "doc_id").orderBy("doc_id")
-    },
+        "doc_id")
+    }, Seq(col("doc_id")),
       // multinomial NB with add-one smoothing; pred compares the ROUNDED
       // score so both engines decide the boundary on the same double
       s"""SELECT doc_id, n_tokens, score, pred FROM ($NbScoredSql)
@@ -583,8 +577,9 @@ object QueriesText {
     // ext: PMI collocations — adjacent-bigram phrase mining over the
     // corpus (c12 >= 5), PMI from exact-integer probability ratios
     Query("q108_pmi_collocations", (s, dir) =>
-      pinSorted(ext.TextAnalysis.pmiCollocations(
-        Tables.load(s, dir, "documents"), "text", 5L), "w1", "w2"),
+      ext.TextAnalysis.pmiCollocations(
+        Tables.load(s, dir, "documents"), "text", 5L),
+      Seq(col("w1"), col("w2")),
       // PMI argument formed as the same left-assoc double product in both
       // engines (exact below 2^53); ln output rounds at 6 dp
       s"""WITH tk AS (SELECT $ToksSql AS toks FROM documents),
@@ -613,8 +608,8 @@ object QueriesText {
     // narrow per-doc result.
     Query("q112_nb_multiclass", (s, dir) => scoped { sc =>
       ext.TextAnalysis.nbMulticlassTokens(sc.pin(nbLangBase(s, dir)),
-        "doc_id").orderBy("doc_id")
-    },
+        "doc_id")
+    }, Seq(col("doc_id")),
       // k-way NB: score_c = prior_c + Σ ln(cnt+1) − n_doc·ln(T_c+V) — only
       // OBSERVED (token, class) rows join (unseen tokens add ln(1) = 0)
       s"$NbMulticlassSql ORDER BY doc_id"),
@@ -627,7 +622,7 @@ object QueriesText {
       ext.TextAnalysis.vocabDivergence(
         docs.filter(col("lang") === "en"),
         docs.filter(col("lang") =!= "en"), "text")
-    },
+    }, Nil,
       // Laplace-smoothed KL/JS over the union vocabulary; the smoothed
       // probabilities replay the same double arithmetic in both engines and
       // the order-dependent sums are absorbed by the 6 dp grain
@@ -659,8 +654,9 @@ object QueriesText {
     // ext: per-doc token Shannon entropy — repetition/diversity signal;
     // the whole histogram lives in one per-row HOF chain (no shuffle)
     Query("q130_token_entropy", (s, dir) =>
-      pinSorted(ext.TextAnalysis.tokenEntropy(
-        Tables.load(s, dir, "documents"), "doc_id", "text"), "doc_id"),
+      ext.TextAnalysis.tokenEntropy(
+        Tables.load(s, dir, "documents"), "doc_id", "text"),
+      Seq(col("doc_id")),
       // per-doc histogram entropy: -(c/n)·ln(c/n) summed over distinct
       // tokens; empty docs NULL, single-token docs 0 with NULL norm
       s"""WITH d AS (SELECT doc_id, $ToksSql AS toks FROM documents),
@@ -687,6 +683,7 @@ object QueriesText {
     Query("q131_zipf", (s, dir) =>
       ext.TextAnalysis.zipfFit(
         Tables.load(s, dir, "documents"), "text", 200),
+      Nil,
       // OLS of ln(freq) on ln(rank) over the deterministic (count desc,
       // token) top-200; the 5 sums fold on <=200 rows so the 6 dp grain
       // absorbs order effects
@@ -719,8 +716,7 @@ object QueriesText {
       w.toIndexedSeq.zipWithIndex.map { case (wi, j) => (j, wi) }
         .toDF("j", "w")
         .select(col("j"), round(col("w"), 6).as("weight"))
-        .orderBy("j")
-    },
+    }, Seq(col("j")),
       // 5 generated GD rounds (MATERIALIZED — the chain is re-referenced);
       // the only cross-engine divergence is gradient-avg summation order,
       // ~1e-13 after amplification vs the 6 dp grain
@@ -736,9 +732,9 @@ object QueriesText {
     Query("q135_logistic_scores", (s, dir) => {
       val f = logitFeatures(Tables.load(s, dir, "documents"))
       val w = ext.TextAnalysis.logisticTrain(f, Seq("x1", "x2"), "y")
-      pinSorted(ext.TextAnalysis.logisticScoreWith(f, "doc_id",
-        Seq("x1", "x2"), w), "doc_id")
-    },
+      ext.TextAnalysis.logisticScoreWith(f, "doc_id",
+        Seq("x1", "x2"), w)
+    }, Seq(col("doc_id")),
       // sigmoid scores under the it5 weights; pred gates on the ROUNDED
       // score so both engines compare the same double against 0.5
       s"""$LogitChainSql
@@ -754,6 +750,7 @@ object QueriesText {
     Query("q156_length_budget", (s, dir) =>
       ext.TextAnalysis.lengthBudgetReport(
         Tables.load(s, dir, "documents"), "text", Seq(16, 32, 64, 128)),
+      Nil,
       s"""WITH tk AS (SELECT CAST(len($ToksSql) AS BIGINT) AS t
              FROM documents),
          x AS (SELECT t, unnest([16, 32, 64, 128]) AS budget FROM tk)
@@ -772,7 +769,7 @@ object QueriesText {
     Query("q173_label_issues", (s, dir) => scoped { sc =>
       ext.TextAnalysis.nbLabelIssuesTokens(sc.pin(nbLangBase(s, dir)),
         "doc_id")
-    },
+    }, Nil,
       // per-(doc, class) NB scores shared with q112; margin = difference
       // of the two 6 dp-rounded scores
       s"""$NbMulticlassCtesSql,
@@ -797,8 +794,8 @@ object QueriesText {
     // aggregation, rest = global − own, each row ≡ the pairwise member
     Query("q204_vocab_div_by_source", (s, dir) =>
       ext.TextAnalysis.vocabDivergenceBy(
-        Tables.load(s, dir, "documents"), "source", "text")
-        .orderBy("source"),
+        Tables.load(s, dir, "documents"), "source", "text"),
+      Seq(col("source")),
       // q129's smoothing arithmetic per slice on the dense
       // (source x global token) grid: rest counts = global − own, the
       // union vocabulary IS the global one (own ∪ rest = corpus)
@@ -845,8 +842,7 @@ object QueriesText {
           .as("ts"),
         col("text"))
       ext.TextAnalysis.vocabDivergenceWindowed(live, "ts", "text", bc, bt)
-        .orderBy("ws")
-    },
+    }, Seq(col("ws")),
       // the VocabDriftAgg replay: top-50 baseline vocabulary (count desc,
       // token asc) from the even half, live tokens projected onto it with
       // the tail in the ' ' OOV cell, q129's smoothing over the FIXED
@@ -904,8 +900,7 @@ object QueriesText {
         col("source"), col("text"))
       ext.TextAnalysis.vocabDivergenceWindowed(live, "ts", "text", bc, bt,
           slice = Some("source"))
-        .orderBy("ws", "source")
-    },
+    }, Seq(col("ws"), col("source")),
       // the q205 replay with source joined into the live groupings —
       // same top-50 baseline, same K+1 smoothing, per (day, source) cell
       s"""WITH h0 AS (SELECT doc_id, source, unnest($ToksSql) AS tok
@@ -967,7 +962,7 @@ object QueriesText {
       val (vc, vt) = ext.TextAnalysis.vocabBaseline(week, "text", 50)
       ext.TextAnalysis.textGateWindowed(live, "ts", "text", "lang",
         bv, bc, bcats, vc, vt)
-    }.orderBy("ws"),
+    }, Seq(col("ws")),
       // composes the windowed-member replays on the scored document
       // stream, joined on ws: one shared per-value cumulative table feeds
       // KS and rank-sum (the gate's own shape), chi2 on the lang mix,

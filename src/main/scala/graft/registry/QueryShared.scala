@@ -9,8 +9,8 @@ import graft.model.{GridSchema, TriMesh}
   * the spatial fixtures + their analytic SQL, the shared-scan bases
   * ([[raterBase]]/[[nbLangBase]], lazy — each query pins them in its
   * [[graft.util.Checkpoints.scoped]] body, which releases them behind the
-  * query's result), [[pinSorted]], the memoized q62 ANN store, and every
-  * DuckDB oracle SQL fragment the registries interpolate.
+  * query's result), the memoized q62 ANN store, and every DuckDB oracle
+  * SQL fragment the registries interpolate.
   * `private[graft]` so only the registries and SparkEntry see them. */
 object QueryShared {
   private[graft] def li(s: SparkSession, dir: String) = Tables.load(s, dir, "lineitem")
@@ -33,24 +33,6 @@ object QueryShared {
   //    inadmissible even at a measured speedup.
   // The helper is deliberately NOT kept as dead code; this note is so
   // the next round doesn't re-try it blind.
-
-  /** Pin-then-sort for a query's FINAL deterministic `orderBy` (r14): a
-    * global sort is a RANGE exchange whose partitioner SAMPLES its child —
-    * one full execution for the sample pass, another for the exchange
-    * itself. On an unpinned child the entire query DAG (kernel passes,
-    * joins) runs TWICE; q107's job profile showed the duplication as
-    * equal-cost job pairs (0.767 s / 0.766 s). Pinning the result first
-    * bounds both passes to a re-scan of the materialized blocks. Apply
-    * where the child is expensive and its output bounded (pair lists,
-    * per-doc feature rows) — the orderBy exists only to make output
-    * deterministic, so this is exactly the guide §2.4 "orderBy used only
-    * to make output deterministic" exchange, made cheap rather than
-    * removed (the oracle hash-compare needs the order). The pin stays
-    * embedded in the returned sorted frame: the query's caller owns it
-    * and reclaims it with `Checkpoints.release(result)`. */
-  private[graft] def pinSorted(df: DataFrame, first: String,
-      rest: String*): DataFrame =
-    graft.util.Checkpoints.pin(df).orderBy(first, rest: _*)
 
   // ---- fixed spatial fixtures (mirrored analytically in the oracles) -----
   // 30×20×20 grid, 10 m cells, origin (1000, 2000, 100) — the reference

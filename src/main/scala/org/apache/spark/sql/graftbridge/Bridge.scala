@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -21,4 +22,8 @@ object Bridge {
     * then resolves like any SQL-parsed call). */
   def expressionEager(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** The column names `c` refers to, as written: `col("k").desc` → k. */
+  def columnNames(c: Column): Seq[String] =
+    expressionEager(c).collect { case a: UnresolvedAttribute => a.name }
 }

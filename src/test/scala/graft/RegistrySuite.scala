@@ -1,14 +1,15 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The query declarations themselves: one [[Query]] per name, and the two
-  * driver-facing maps derived from them. Needs no testdata and no session —
-  * bodies are declared, never run. */
+/** The query declarations themselves: one [[Query]] per name, the two
+  * driver-facing maps derived from them, and [[Query.run]]'s declared
+  * order. Needs no testdata; only the order case runs a body. */
 class RegistrySuite extends AnyFunSuite {
 
   private def q(name: String) =
-    Query(name, (s, _) => s.emptyDataFrame, "SELECT 1 AS one")
+    Query(name, (s, _) => s.emptyDataFrame, Nil, "SELECT 1 AS one")
 
   test("a name declared by two families is rejected, naming it") {
     val e = intercept[IllegalArgumentException](SparkEntry.declared(Seq(
@@ -26,5 +27,15 @@ class RegistrySuite extends AnyFunSuite {
     assert(bodies.keySet == oracles.keySet)
     val blank = oracles.collect { case (n, sql) if sql.trim.isEmpty => n }
     assert(blank.isEmpty, s"blank oracle SQL: ${blank.toSeq.sorted}")
+  }
+
+  test("run writes a multi-partition body in its declared order") {
+    val spark = graft.agg.SparkTest.spark
+    val query = Query("qo", (s, _) =>
+      s.range(0, 1000, 1, 8).select((col("id") % 7).as("k"), col("id")),
+      Seq(col("k"), col("id").desc), "SELECT 1 AS one")
+    val got = query.run(spark, "").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == 1000)
+    assert(got.toSeq == got.sortBy { case (k, id) => (k, -id) }.toSeq)
   }
 }

@@ -151,6 +151,15 @@ class BreakdownSuite extends AnyFunSuite {
     assert(out(0).getLong(0) == 4L)
     assert(out(0).getDouble(1) == 42.0)
   }
+
+  test("keyed and keys-only reports sort by key with no range-sampling exchange") {
+    for (spec <- Seq("lito;grade=g,mean;grade=q,q2", "lito")) {
+      val out = Breakdown(df, spec)
+      assert(out.collect().map(_.getString(0)).toSeq == Seq("high", "low"))
+      val plan = out.queryExecution.executedPlan.toString.toLowerCase
+      assert(!plan.contains("rangepartitioning"), s"$spec:\n$plan")
+    }
+  }
 }
 
 class WeightedQuantileSuite extends AnyFunSuite {

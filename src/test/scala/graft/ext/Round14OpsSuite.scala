@@ -5,155 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.SparkTest
 
-/** Round-14 additions: the text member's drift-matrix extension
-  * (vocabDivergenceBy pinned ≡ the pairwise member per slice — the
-  * house property for every by-slice view; vocabDivergenceWindowed
-  * pinned ≡ a local replay of the projected K+1-category statistic),
-  * plus the ADVICE r13 fixes (nprobeFor clamp order, unexplainedVar's
-  * loud empty-corpus failure, driftReport's guard-off pin). */
+/** Round-14 additions: the IVF store's persisted serving recommendation
+  * (topKFromStoreAuto, the metadata sidecar and its incremental append),
+  * the paired bootstrap test and its by-slice form, plus the ADVICE r13
+  * fixes (nprobeFor clamp order, unexplainedVar's loud empty-corpus
+  * failure). Its drift cases live in DriftSuite. */
 class Round14OpsSuite extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
   import spark.implicits._
-
-  // three sources with deliberately different token mixes: g2's
-  // vocabulary is disjoint from g0/g1's shared one, so the by-slice
-  // divergence must rank g2 far above the others
-  private def corpus = (0 until 90).map { i =>
-    val g = "g" + (i % 3)
-    val text = g match {
-      case "g2" => s"zeta yotta xenon w${i % 4}"
-      case _    => s"alpha beta gamma d${i % 5}"
-    }
-    (i.toLong, g, text)
-  }.toDF("doc_id", "source", "text")
-
-  test("vocabDivergenceBy rows equal vocabDivergence(own, rest) per slice") {
-    val by = TextAnalysis.vocabDivergenceBy(corpus, "source", "text")
-      .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
-    assert(by.size == 3)
-    for (g <- Seq("g0", "g1", "g2")) {
-      val m = TextAnalysis.vocabDivergence(
-        corpus.filter(col("source") === g),
-        corpus.filter(col("source") =!= g), "text").head()
-      // member: (n_a, n_b, vocab, kl_ab, kl_ba, js); by-slice renames
-      // the sides but the numbers must be the member's own
-      assert(by(g) == m.toSeq,
-        s"slice $g must equal the pairwise member")
-    }
-    // the alarm ranks: the disjoint-vocabulary slice scores highest
-    // (g0/g1's rest is HALF disjoint-g2, so their divergence is real
-    // too — only the ordering is a sound assertion, not a margin)
-    def js(g: String) = by(g)(5).asInstanceOf[Double]
-    assert(js("g2") > js("g0") && js("g2") > js("g1"),
-      "disjoint-vocabulary slice must rank above the shared-mix slices")
-  }
-
-  test("vocabDivergenceBy single-slice corpus degrades like the member (finite, no NULLs)") {
-    val one = corpus.filter(col("source") === "g0")
-    val by = TextAnalysis.vocabDivergenceBy(one, "source", "text").head()
-    val m = TextAnalysis.vocabDivergence(one,
-      one.filter(lit(false)), "text").head()
-    assert(by.toSeq.drop(1) == m.toSeq)
-    assert(!by.isNullAt(4) && !by.isNullAt(5) && !by.isNullAt(6))
-  }
-
-  test("vocabDivergenceWindowed equals a local replay of the projected K+1-category statistic; drift registers") {
-    import java.sql.Timestamp
-    // day 1 speaks the baseline vocabulary, day 2 a disjoint one
-    val docs = (0 until 60).map { i =>
-      val day = i / 30 + 1
-      val text = if (day == 1) s"alpha beta gamma d${i % 5}"
-        else s"zeta yotta xenon w${i % 4}"
-      (i.toLong, new Timestamp(
-        Timestamp.valueOf(f"2024-01-0$day 00:00:00").getTime + i * 60000L),
-        text)
-    }.toDF("doc_id", "ts", "text")
-    val baseDf = docs.filter(col("ts") <
-      lit("2024-01-02").cast("timestamp"))
-    val (bc, bt) = TextAnalysis.vocabBaseline(baseDf, "text", topK = 5)
-    assert(bc.size == 5 && bt == 120L) // 4 tokens x 30 docs
-    val out = TextAnalysis
-      .vocabDivergenceWindowed(docs, "ts", "text", bc, bt)
-      .collect().map(r => r.getTimestamp(0) ->
-        (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-      .toMap
-    assert(out.size == 2)
-    // local replay: project each window's tokens onto the 5+OOV serving
-    // vocabulary and run the member's smoothing arithmetic
-    val toks = "[a-z0-9]+".r
-    val winToks = docs.collect().map { r =>
-      (r.getTimestamp(1).getTime / 86400000L,
-        toks.findAllIn(r.getString(2).toLowerCase).toSeq)
-    }.groupBy(_._1).view.mapValues(_.flatMap(_._2)).toMap
-    val cats = bc.keys.toArray.sorted :+ " "
-    val topMass = bc.values.sum
-    for ((day, tks) <- winToks) {
-      val ws = new Timestamp(day * 86400000L)
-      val live = tks.groupBy(t => if (bc.contains(t)) t else " ")
-        .view.mapValues(_.size.toLong).toMap
-      val nL = tks.size.toLong
-      val v = cats.length.toDouble
-      var klAb = 0.0; var klBa = 0.0; var jsv = 0.0
-      cats.foreach { c =>
-        val cb = if (c == " ") bt - topMass else bc(c)
-        val cl = live.getOrElse(c, 0L)
-        val pa = (cb + 0.5) / (bt + 0.5 * v)
-        val pb = (cl + 0.5) / (nL + 0.5 * v)
-        klAb += pa * math.log(pa / pb)
-        klBa += pb * math.log(pb / pa)
-        jsv += pa * math.log(pa * 2.0 / (pa + pb)) / 2.0 +
-          pb * math.log(pb * 2.0 / (pa + pb)) / 2.0
-      }
-      def r6(x: Double) = BigDecimal(x)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(out(ws) == ((nL, r6(klAb), r6(klBa), r6(jsv))),
-        s"window $ws must equal the local replay")
-    }
-    // drift registers: the disjoint day scores far above the aligned one
-    val byTime = out.toSeq.sortBy(_._1.getTime).map(_._2)
-    assert(byTime.last._4 > 10 * byTime.head._4,
-      "disjoint-vocabulary window must dominate the JS divergence")
-  }
-
-  test("vocabDivergenceWindowedBy: per-cell equals the unsliced twin on the slice substream, alarm localizes") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.functions.col
-    // slice a speaks the baseline vocabulary both days; slice b switches
-    // to a disjoint one on day 2 — exactly one (day, slice) cell drifts
-    val docs = (0 until 80).map { i =>
-      val day = i / 40 + 1
-      val g = if (i % 2 == 0) "a" else "b"
-      val text = if (g == "b" && day == 2) s"zeta yotta xenon w${i % 4}"
-        else s"alpha beta gamma d${i % 5}"
-      (i.toLong, new Timestamp(
-        Timestamp.valueOf(f"2024-01-0$day 00:00:00").getTime + i * 60000L),
-        g, text)
-    }.toDF("doc_id", "ts", "g", "text")
-    val (bc, bt) = TextAnalysis.vocabBaseline(
-      docs.filter(col("ts") < lit("2024-01-02").cast("timestamp")),
-      "text", topK = 5)
-    val by = TextAnalysis
-      .vocabDivergenceWindowed(docs, "ts", "text", bc, bt,
-        slice = Some("g"))
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getString(1)) -> r.toSeq.drop(2))
-      .toMap
-    assert(by.size == 4)
-    for (g <- Seq("a", "b")) {
-      val sub = TextAnalysis
-        .vocabDivergenceWindowed(docs.filter(col("g") === g), "ts",
-          "text", bc, bt)
-        .collect()
-        .map(r => (r.getTimestamp(0), g) -> r.toSeq.drop(1)).toMap
-      sub.foreach { case (k, v) =>
-        assert(by(k) == v, s"cell $k must equal the unsliced twin")
-      }
-    }
-    val day2 = Timestamp.valueOf("2024-01-02 00:00:00")
-    def js(k: (Timestamp, String)) = by(k)(3).asInstanceOf[Double]
-    assert(js((day2, "b")) > 10 * js((day2, "a")),
-      "the alarm must localize to the slice that switched vocabulary")
-  }
 
   test("topKFromStoreAuto serves with the store's persisted recommendation") {
     val rnd = new java.util.Random(11)
@@ -314,22 +173,4 @@ class Round14OpsSuite extends AnyFunSuite {
       "the mirrored batch must flip the staleness cosine")
   }
 
-  test("driftReport with the grid guard conf'd OFF still pins the shared table and matches guard-on rows (ADVICE r13)") {
-    val docs = (0 until 200).map { i =>
-      val src = if (i % 4 == 0) "live" else "base"
-      (i.toLong, src, (i % 10) / 10.0 + (if (src == "live") 0.3 else 0.0),
-        if (i % 3 == 0) "en" else "de")
-    }.toDF("id", "src", "q", "lang")
-    val base = docs.filter(col("src") === "base")
-    val live = docs.filter(col("src") === "live")
-    val on = Outliers.driftReport(base, live, "q", "lang")
-      .collect().map(_.toSeq)
-    val key = graft.util.GridGuard.EnabledConf
-    spark.conf.set(key, "false")
-    try {
-      val off = Outliers.driftReport(base, live, "q", "lang")
-        .collect().map(_.toSeq)
-      assert(off.toSeq == on.toSeq)
-    } finally spark.conf.set(key, "true")
-  }
 }
