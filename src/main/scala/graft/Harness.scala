@@ -29,10 +29,12 @@ object Harness {
   }
 
   /** Run `body`, then unpersist every persistent RDD that appeared while
-    * it ran: the `Checkpoints.scoped` result pin a query's caller owns and
-    * the curation pins nothing releases would otherwise stay resident and
+    * it ran. Every library pin is released by its scope except the ones
+    * the result reads, which pass to the result's caller — here the
+    * harness, which owns them: they would otherwise stay resident and
     * tax every later query (r6's q46/q47/q48 were 6–60× their isolated
-    * times from that accumulation). A non-fatal failure is logged to stderr under `label`
+    * times from that accumulation). `Verify` reports any other leftover
+    * as a leak before this sweep. A non-fatal failure is logged to stderr under `label`
     * and returned as `None`, so a crashed run cannot pass for a result;
     * fatal errors propagate. The release runs either way. */
   def releasing[A](spark: SparkSession, label: String)(body: => A): Option[A] = {

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.util.Checkpoints.PinOps
+import graft.util.Checkpoints.owning
 import graft.functions.SetSimilarity
 
 /** Deduplication operators for training-data pipelines. Each is designed
@@ -266,23 +266,19 @@ object Dedup {
     * edge sets solve on the driver (union-find); larger ones run
     * min-label propagation with path halving — O(log diameter) rounds,
     * one job barrier per round, [[graft.util.Checkpoints.pin]] truncating the growing
-    * lineage. Output: (doc_id, canonical_id) for every id in a pair. */
+    * lineage. The edge pin and every superseded round are released; the
+    * caller owns the last round the result reads. Output:
+    * (doc_id, canonical_id) for every id in a pair. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIters: Int = 50,
-      localThreshold: Long = 1L << 20): DataFrame = {
+      localThreshold: Long = 1L << 20): DataFrame = owning { sc =>
     // ids normalize to long up front: the driver fast path reads Long and
     // both paths must emit one schema regardless of the input's int/long
-    val edges = pairs
+    val edges = sc.pin(pairs
       .select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
       .union(pairs
         .select(col(idB).cast("long").as("src"), col(idA).cast("long").as("dst")))
-      .distinct().pin()
-    // every localCheckpoint in this function gets an explicit release below
-    // (edges once consumed; each propagation round when the next round has
-    // materialized) — block-manager usage stays bounded by TWO rounds of
-    // labels instead of growing linearly with rounds for the session's
-    // lifetime. Only the FINAL round's checkpoint survives: it backs the
-    // returned frame (freed by the ContextCleaner when the frame is GC'd).
+      .distinct())
     // Small graphs (≤ localThreshold directed edges ≈ 16 MB of id pairs)
     // solve on the driver: union-find with path compression is
     // microseconds, where the distributed loop pays several full job
@@ -292,7 +288,6 @@ object Dedup {
     // owns it. Same fixpoint either way (min id per component).
     if (edges.count() <= localThreshold) {
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      unpersistCheckpoint(edges)
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -315,9 +310,14 @@ object Dedup {
       }
       val session = pairs.sparkSession
       import session.implicits._
-      return ids.toSeq.map(id => (id, compMin(find(id))))
-        .toDF("doc_id", "canonical_id")
-    }
+      ids.toSeq.map(id => (id, compMin(find(id)))).toDF("doc_id", "canonical_id")
+    } else componentRounds(sc, edges, maxIters)
+  }
+
+  /** [[connectedComponents]]' distributed min-label propagation over the
+    * pinned, symmetric edge list. */
+  private def componentRounds(sc: graft.util.Checkpoints.Scope,
+      edges: DataFrame, maxIters: Int): DataFrame = {
     var labels = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("canonical_id", col("doc_id"))
     var changed = 1L
@@ -339,23 +339,23 @@ object Dedup {
       // The checkpoint is LAZY so the convergence count below is the
       // action that materializes it — one job barrier per round; next
       // round's joins read the stored blocks instead of the lineage.
-      val next = stepped.as("x")
+      val next = sc.pin(stepped.as("x")
         .join(labels.select(col("doc_id").as("_ld"),
           col("canonical_id").as("_lc")).as("y"),
           col("x.canonical_id") === col("_ld"), "left")
         .select(col("x.doc_id").as("doc_id"), col("x.old").as("old"),
           least(col("x.canonical_id"),
-            coalesce(col("_lc"), col("x.canonical_id"))).as("canonical_id"))
-        .pin(eager = false)
+            coalesce(col("_lc"), col("x.canonical_id"))).as("canonical_id")),
+        eager = false)
       changed = next.filter(col("canonical_id") =!= col("old")).count()
       // the count materialized `next` with truncated lineage — the prior
-      // round's blocks are unreachable from here on; release them now
-      prevRound.foreach(unpersistCheckpoint)
+      // round's blocks are unreachable from here on; release them now, so
+      // block-manager usage stays bounded by TWO rounds of labels
+      prevRound.foreach(sc.release)
       prevRound = Some(next)
       labels = next.drop("old")
       it += 1
     }
-    unpersistCheckpoint(edges)
     // non-convergence must fail loudly: intermediate labels look valid but
     // split one dup cluster into several "canonicals"
     if (changed > 0) throw new IllegalStateException(
@@ -449,9 +449,6 @@ object Dedup {
       .groupBy(col("slice_a"), col("slice_b"))
       .agg(count(lit(1)).as("n_pairs"))
   }
-
-  private def unpersistCheckpoint(ds: DataFrame): Unit =
-    graft.util.Checkpoints.release(ds)
 
   /** Exact Jaccard of two distinct-element arrays. */
   def jaccardArr(a: Column, b: Column): Column =

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Checkpoints.{PinOps, scoped}
+import graft.util.Checkpoints.{owning, scoped}
 
 /** Classifier-evaluation operators — the audit side of every model gate in
   * the curation pipelines ([[TextAnalysis.nbQualityScore]], the
@@ -24,7 +24,9 @@ import graft.util.Checkpoints.{PinOps, scoped}
   * internal pins on return or failure and hands back a BOUNDED pinned
   * frame (one row to |groups| rows) — a long-lived session that is done
   * reading a result can reclaim even that via
-  * [[graft.util.Checkpoints.release]].
+  * [[graft.util.Checkpoints.release]]. Operators whose result is
+  * table-sized (prCurve, ecdf, blendKeyed, retrievalMetricsMacro) hand
+  * back a lazy frame over their bounded pin, which the caller owns.
   */
 object Eval {
 
@@ -297,7 +299,7 @@ object Eval {
     * columns join back on the id. */
   def blendKeyed(df: DataFrame, idCol: String,
       weights: Seq[(String, Double)],
-      outCol: String = "blended"): DataFrame = {
+      outCol: String = "blended"): DataFrame = owning { sc =>
     require(weights.nonEmpty, "need at least one (scoreCol, weight)")
     val sigs = weights.map(_._1)
     val exploded = df.select(col(idCol).as("_id"),
@@ -309,18 +311,16 @@ object Eval {
     // (signal, value) table built above (no separate multi-column HLL
     // pass over the caller's scoring projection — the r12 regression
     // fix): pin it, then one k-row collapse yields each signal's exact
-    // distinct-value count
+    // distinct-value count; the result reads the pin, so the caller owns
+    // it, and a failing gate releases it on the way out
     val per = graft.util.GridGuard.ceiling(df.sparkSession) match {
       case Some(cap) =>
-        val p = perRaw.pin()
+        val p = sc.pin(perRaw)
         p.groupBy(col("_sig")).agg(count(lit(1)).as("_nv")).collect()
           .foreach { r =>
             val nv = r.getLong(1)
-            if (nv > cap) {
-              graft.util.Checkpoints.release(p)
-              graft.util.GridGuard.fail("blendKeyed", sigs(r.getInt(0)),
-                nv.toString, cap)
-            }
+            if (nv > cap) graft.util.GridGuard.fail("blendKeyed",
+              sigs(r.getInt(0)), nv.toString, cap)
           }
         p
       case None => perRaw
@@ -364,11 +364,11 @@ object Eval {
     // builds anyway (the prCurve note); the rank window is
     // single-partition over that bounded pinned table (aucRocBy instead
     // partitions by slice)
-    val perScore = sc.own(graft.util.GridGuard.gateTable(
+    val perScore = graft.util.GridGuard.gateTable(
       df.groupBy(col(scoreCol).as("s"))
         .agg(sum(col(labelCol)).cast("long").as("npos"),
           count(lit(1)).as("n")),
-      "aucRoc", scoreCol))
+      "aucRoc", scoreCol)
     val w = Window.orderBy(col("s").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = perScore
@@ -480,12 +480,13 @@ object Eval {
     *
     * The per-query table is checkpointed before the two consumers read
     * it (it is bounded by query count; without the pin the whole run
-    * pipeline would execute twice). */
+    * pipeline would execute twice); the result reads it, so the caller
+    * owns it. */
   def retrievalMetricsMacro(runs: DataFrame, qrels: DataFrame,
       queryCol: String, docCol: String, scoreCol: String,
-      k: Int = 10): DataFrame = {
-    val per = retrievalMetrics(runs, qrels, queryCol, docCol, scoreCol, k)
-      .pin()
+      k: Int = 10): DataFrame = owning { sc =>
+    val per = sc.pin(
+      retrievalMetrics(runs, qrels, queryCol, docCol, scoreCol, k))
     val perRows = per.select(lit("query").as("scope"), col(queryCol),
       col("n_rel"), col("hit_k").cast("double").as("hit_k"),
       col("mrr"), col("ndcg"))
@@ -915,8 +916,8 @@ object Eval {
     // per-value table built here (the distributed groupBy is safe at any
     // cardinality; only the downstream one-task window is not): fail
     // before the single-partition cumulative sorts a corpus-sized table
-    scoped(sc => ksTestOnPer(sc.own(graft.util.GridGuard.gateTable(
-      pairPerValueRaw(a, b, valCol), "ksTest", valCol))))
+    scoped(_ => ksTestOnPer(graft.util.GridGuard.gateTable(
+      pairPerValueRaw(a, b, valCol), "ksTest", valCol)))
 
   /** The two-sided per-distinct-value count table `(_v, ca, cb)` that
     * [[ksTest]], [[rankSumTest]] and (bucketed) [[Outliers.psiDrift]]
@@ -1143,8 +1144,8 @@ object Eval {
   def rankSumTest(a: DataFrame, b: DataFrame, valCol: String): DataFrame =
     // grid discipline, gated exactly on the per-value table built here
     // (the ksTest note)
-    scoped(sc => rankSumOnPer(sc.own(graft.util.GridGuard.gateTable(
-      pairPerValueRaw(a, b, valCol), "rankSumTest", valCol))))
+    scoped(_ => rankSumOnPer(graft.util.GridGuard.gateTable(
+      pairPerValueRaw(a, b, valCol), "rankSumTest", valCol)))
 
   /** [[rankSumTest]]'s statistic from an already-gated per-value table
     * (the [[pairPerValueRaw]] shape) — identical downstream arithmetic,

@@ -58,8 +58,6 @@ object Flac {
 
   private final class BitReader(val data: Array[Byte], var pos: Int) {
     private var bit = 0
-    def atByteBoundary: Boolean = bit == 0
-    def bytesRemaining: Int = data.length - pos
     def readBit(): Int = {
       require(pos < data.length, "flac: unexpected end of stream")
       val b = (data(pos) >> (7 - bit)) & 1

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Checkpoints.PinOps
+import graft.util.Checkpoints.owning
 
 /** Iterative graph analytics over plain edge DataFrames — the category the
   * rest of the engine reaches with [[Dedup.connectedComponents]] (label
@@ -78,7 +78,9 @@ object Graph {
     * session sets `graft.checkpoint.dir` — the cluster-safe mode, since
     * executor loss makes local checkpoints non-recomputable) so the
     * lineage — and the work — stays LINEAR in `iters` instead of
-    * re-deriving round t−1 under both of round t's consumers.
+    * re-deriving round t−1 under both of round t's consumers. Each
+    * superseded round is released once the next materializes, the edge,
+    * node and degree pins on return; the caller owns the last round.
     *
     * Determinism: contribution sums are the only order-dependent doubles
     * and the damping factor contracts their divergence every round; the
@@ -86,12 +88,11 @@ object Graph {
     * Output: (node, pr), Σpr = 1 up to float error. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, damping: Double = 0.85,
-      localThreshold: Long = 1L << 20): DataFrame = {
+      localThreshold: Long = 1L << 20): DataFrame = owning { sc =>
     // materialize the edge list ONCE: the caller's edges are often a
     // pipeline (LSH pair extraction) that must not re-run inside
     // every round's contribution join
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .pin()
+    val e = sc.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     // Small-graph fast path (r14) — the [[Dedup.connectedComponents]]
     // discipline extended to the power iteration: ≤ localThreshold
     // directed long-id edges (≈16 MB of pairs) solve on the driver in
@@ -108,9 +109,7 @@ object Graph {
     // localThreshold = 0 so they keep certifying the distributed loop.
     val esOpt = if (isLongPair(e) && e.count() <= localThreshold)
       collectNonNullPairs(e) else None
-    if (esOpt.isDefined) {
-      val es = esOpt.get
-      graft.util.Checkpoints.release(e)
+    esOpt.fold(pageRankRounds(sc, e, iters, damping)) { es =>
       val nodesArr = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
       require(nodesArr.nonEmpty, "pageRank: empty edge set")
       val n = nodesArr.length.toDouble
@@ -135,21 +134,23 @@ object Graph {
       }
       val session = edges.sparkSession
       import session.implicits._
-      return nodesArr.indices.map(i => (nodesArr(i), pr(i)))
-        .toDF("node", "pr")
+      nodesArr.indices.map(i => (nodesArr(i), pr(i))).toDF("node", "pr")
     }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .pin()
+  }
+
+  /** [[pageRank]]'s distributed rounds over the pinned edge list `e`. */
+  private def pageRankRounds(sc: graft.util.Checkpoints.Scope, e: DataFrame,
+      iters: Int, damping: Double): DataFrame = {
+    val nodes = sc.pin(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count().toDouble
     // empty-graph guard: n = 0 would constant-fold 1/0 at ANALYSIS time
     // (ANSI) — fail loudly instead of with an optimizer-phase fault
     require(n > 0, "pageRank: empty edge set")
     val resid = 1.0 - damping
-    val deg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg")).pin()
-    var pr = nodes.select(col("node"), (lit(1.0) / lit(n)).as("pr"))
-      .pin()
+    val deg = sc.pin(e.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg")))
+    var pr = sc.pin(nodes.select(col("node"), (lit(1.0) / lit(n)).as("pr")))
     for (_ <- 1 to iters) {
       // dangling mass as a broadcast 1-row frame, NOT a driver pull —
       // pr is checkpointed, so its two consumers (dangling sum and the
@@ -162,13 +163,14 @@ object Graph {
         .join(deg.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("pr") / col("outdeg")).as("s"))
-      pr = nodes.join(contribs, Seq("node"), "left")
+      val next = sc.pin(nodes.join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(dang))
         .select(col("node"),
           (lit(resid) / lit(n) + lit(damping) *
             (coalesce(col("s"), lit(0.0)) + col("_dang") / lit(n)))
-            .as("pr"))
-        .pin()
+            .as("pr")))
+      sc.release(pr)
+      pr = next
     }
     pr
   }
@@ -189,12 +191,12 @@ object Graph {
     * on node/edge keys. All-integer. Output: (node, triangles) for every
     * node of the graph, 0 included. */
   def triangleCount(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      dstCol: String): DataFrame = owning { sc =>
+    val und = sc.pin(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("lo"),
         greatest(col("a"), col("b")).as("hi"))
-      .distinct().pin()
+      .distinct())
     val nodes = und.select(col("lo").as("node"))
       .union(und.select(col("hi").as("node"))).distinct()
     val wedges = und.as("e1").join(und.as("e2"),
@@ -223,16 +225,17 @@ object Graph {
     *
     * Shape at 100 TB: each round is one edges⋈labels hash join, one
     * (node, label) count collapse (map-side combined) and one
-    * WindowGroupLimit-able top-1 per node; rounds pin (localCheckpoint / reliable checkpoint) like
-    * [[pageRank]] so lineage stays linear. All-integer arithmetic — the
-    * operator is exactly replayable cross-engine with no float grain. */
+    * WindowGroupLimit-able top-1 per node; rounds pin (localCheckpoint /
+    * reliable checkpoint) and rotate like [[pageRank]], so lineage stays
+    * linear and the caller owns only the last round. All-integer
+    * arithmetic — the operator is exactly replayable cross-engine with no
+    * float grain. */
   def labelPropagation(edges: DataFrame, seeds: DataFrame, srcCol: String,
       dstCol: String, nodeCol: String, labelCol: String,
-      iters: Int = 5, localThreshold: Long = 1L << 20): DataFrame = {
+      iters: Int = 5, localThreshold: Long = 1L << 20): DataFrame = owning { sc =>
     // same edge-list materialization as pageRank — rounds must join a
     // table, not re-run the caller's mining pipeline
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .pin()
+    val e = sc.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     // Small-graph fast path (r14), pageRank's twin: all-integer
     // plurality arithmetic with the SAME tie-break (count desc, then
     // label asc in UTF-8 byte order — Spark's string sort), so the
@@ -251,14 +254,15 @@ object Graph {
       collectBoundedSeeds(seeds.select(col(nodeCol), col(labelCol)),
         localThreshold)
     else None
-    if (sdOpt.isDefined) {
-      val sd = sdOpt.get
+    val local = sdOpt.flatMap { rows =>
+      val sd = rows
         .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
-      val esOpt = if (sd.map(_._1).distinct.length == sd.length)
-        collectNonNullPairs(e) else None
-      if (esOpt.isDefined) {
-        val es = esOpt.get
-        graft.util.Checkpoints.release(e)
+      (if (sd.map(_._1).distinct.length == sd.length)
+        collectNonNullPairs(e) else None).map(es => (sd, es))
+    }
+    local.fold(labelPropagationRounds(sc, e, seeds.select(
+        col(nodeCol).as("node"), col(labelCol).as("seed")), iters)) {
+      case (sd, es) =>
         val nodesArr = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
         // NULL-labeled seed rows behave like no seed (coalesce skips
         // them in the distributed round) — drop them from the clamp map
@@ -287,16 +291,18 @@ object Graph {
         }
         val session = edges.sparkSession
         import session.implicits._
-        return nodesArr.map(nd => (nd, Option(lab(nd)))).toSeq
-          .toDF("node", "label")
-      }
+        nodesArr.map(nd => (nd, Option(lab(nd)))).toSeq.toDF("node", "label")
     }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .pin()
-    val sd = seeds.select(col(nodeCol).as("node"), col(labelCol).as("seed"))
-    var lab = nodes.join(sd, Seq("node"), "left")
-      .select(col("node"), col("seed").as("label")).pin()
+  }
+
+  /** [[labelPropagation]]'s distributed rounds over the pinned edge list
+    * `e` and the (node, seed) frame `sd`. */
+  private def labelPropagationRounds(sc: graft.util.Checkpoints.Scope,
+      e: DataFrame, sd: DataFrame, iters: Int): DataFrame = {
+    val nodes = sc.pin(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
+    var lab = sc.pin(nodes.join(sd, Seq("node"), "left")
+      .select(col("node"), col("seed").as("label")))
     for (_ <- 1 to iters) {
       val votes = e.join(lab.withColumnRenamed("node", "src"), "src")
         .filter(col("label").isNotNull)
@@ -306,10 +312,11 @@ object Graph {
         .orderBy(col("c").desc, col("label").asc)
       val top = votes.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).select(col("node"), col("label").as("vote"))
-      lab = nodes.join(sd, Seq("node"), "left")
+      val next = sc.pin(nodes.join(sd, Seq("node"), "left")
         .join(top, Seq("node"), "left")
-        .select(col("node"), coalesce(col("seed"), col("vote")).as("label"))
-        .pin()
+        .select(col("node"), coalesce(col("seed"), col("vote")).as("label")))
+      sc.release(lab)
+      lab = next
     }
     lab
   }
@@ -327,19 +334,20 @@ object Graph {
     * shuffle is proportional to the frontier's edge neighbourhood — on
     * a high-diameter graph far cheaper than re-propagating every
     * settled distance (and identical in result: BFS settles each node
-    * the first time it is reached). Rounds pin (localCheckpoint / reliable checkpoint) like
-    * [[pageRank]] so lineage stays linear; all-integer, exactly
-    * replayable cross-engine.
+    * the first time it is reached). Rounds pin (localCheckpoint /
+    * reliable checkpoint) and rotate like [[pageRank]], so lineage stays
+    * linear and the caller owns the node table and the last distance
+    * table the result reads; all-integer, exactly replayable
+    * cross-engine.
     *
     * Output: (node, hops) for every node of the graph and every seed —
     * NULL hops = unreached within `maxHops` (distinguishable from
     * hop-maxHops, unlike a sentinel). */
   def bfsHops(edges: DataFrame, seeds: DataFrame, srcCol: String,
       dstCol: String, nodeCol: String, maxHops: Int = 5,
-      localThreshold: Long = 1L << 20): DataFrame = {
+      localThreshold: Long = 1L << 20): DataFrame = owning { sc =>
     require(maxHops >= 0, s"maxHops $maxHops")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .pin()
+    val e = sc.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     // Small-graph fast path (r14), pageRank's twin: BFS is all-integer
     // and settles each node at its first reach — the local frontier walk
     // is bit-identical to the distributed rounds (suite-pinned on both
@@ -352,9 +360,8 @@ object Graph {
         localThreshold)
     else None
     val esOpt = if (seedsOpt.isDefined) collectNonNullPairs(e) else None
-    if (esOpt.isDefined) {
-      val es = esOpt.get
-      graft.util.Checkpoints.release(e)
+    esOpt.fold(bfsHopsRounds(sc, e,
+        seeds.select(col(nodeCol).cast("long").as("node")), maxHops)) { es =>
       val seedArr = seedsOpt.get.map(_.getLong(0)).distinct
       val nodesArr =
         (es.map(_._1) ++ es.map(_._2) ++ seedArr).distinct.sorted
@@ -371,24 +378,32 @@ object Graph {
       }
       val session = edges.sparkSession
       import session.implicits._
-      return nodesArr.map(nd => (nd, dist.get(nd))).toSeq
-        .toDF("node", "hops")
+      nodesArr.map(nd => (nd, dist.get(nd))).toSeq.toDF("node", "hops")
     }
-    val nodes = e.select(col("src").as("node"))
+  }
+
+  /** [[bfsHops]]'s distributed frontier rounds over the pinned edge list
+    * `e` and the long-cast (node) seed frame. */
+  private def bfsHopsRounds(sc: graft.util.Checkpoints.Scope, e: DataFrame,
+      seeds: DataFrame, maxHops: Int): DataFrame = {
+    val nodes = sc.pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .union(seeds.select(col(nodeCol).cast("long").as("node")))
-      .distinct().pin()
-    var frontier = seeds.select(col(nodeCol).cast("long").as("node"))
-      .distinct().withColumn("hops", lit(0)).pin()
+      .union(seeds).distinct())
+    var frontier = sc.pin(seeds.distinct().withColumn("hops", lit(0)))
     var dist = frontier
     for (i <- 1 to maxHops) {
-      frontier = e
+      val nextFrontier = sc.pin(e
         .join(frontier.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
-        .withColumn("hops", lit(i))
-        .pin()
-      dist = dist.union(frontier).pin()
+        .withColumn("hops", lit(i)))
+      val nextDist = sc.pin(dist.union(nextFrontier))
+      // round 0's frontier IS its distance table: the second release
+      // finds it already dropped and leaves it alone
+      sc.release(frontier)
+      sc.release(dist)
+      frontier = nextFrontier
+      dist = nextDist
     }
     nodes.join(dist, Seq("node"), "left")
   }

@@ -176,8 +176,8 @@ object Outliers {
     // grid discipline gated exactly on the category table built here
     // (the Eval.ksTest note — no separate pre-check pass; a free-text
     // column still fails loudly, now with the exact count)
-    scoped(sc => chiSquareOnPc(sc.own(graft.util.GridGuard.gateTable(
-      chiPerCategory(base, live, catCol), "chiSquareDrift", catCol))))
+    scoped(_ => chiSquareOnPc(graft.util.GridGuard.gateTable(
+      chiPerCategory(base, live, catCol), "chiSquareDrift", catCol)))
 
   /** [[chiSquareDrift]]'s two-sided per-category count table `(_c, cb,
     * cl)` — lazy and ungated; callers gate it themselves (the
@@ -428,8 +428,8 @@ object Outliers {
         lit(1.96).as("threshold"), col("drifted"))
     // the chi lens's category table, gated exactly as the member gates
     // its own (same exact-count guard, same failure shape)
-    val pc = sc.own(graft.util.GridGuard.gateTable(
-      chiPerCategory(bp, lp, catCol), "driftReport", catCol))
+    val pc = graft.util.GridGuard.gateTable(
+      chiPerCategory(bp, lp, catCol), "driftReport", catCol)
     val chi = chiSquareOnPc(pc)
       .select(lit("chi2").as("stat"), col("chi2").as("statistic"),
         col("chi2_crit").as("threshold"), col("drifted"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NearestCentroid, PqAdc}
-import graft.util.Checkpoints.PinOps
+import graft.util.Checkpoints.owning
 
 /** Product quantization for embedding compression + two-stage ANN — the
   * FAISS-style IVFPQ construction from public literature (Jégou et al.,
@@ -37,17 +37,18 @@ object Pq {
     * Same deterministic hash-init as [[Ivf.train]]. Requires dim % m == 0.
     */
   def train(df: DataFrame, m: Int, ksub: Int, iters: Int = 5,
-      vecCol: String = "embedding", idCol: String = "vec_id"): Codebooks = {
+      vecCol: String = "embedding",
+      idCol: String = "vec_id"): Codebooks = owning { sc =>
     val dim = df.select(size(col(vecCol))).first().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val dsub = dim / m
-    // (s, id, subvector) — one narrow explode, reused every iteration
-    val sub = df.select(col(idCol).as("id"),
+    // (s, id, subvector) — one narrow explode, reused every iteration;
+    // the centroids end on the driver, so the scope releases it on return
+    val sub = sc.pin(df.select(col(idCol).as("id"),
         posexplode(array((0 until m).map { s =>
           slice(col(vecCol).cast("array<double>"), s * dsub + 1, dsub)
         }: _*)))
-      .withColumnRenamed("pos", "s").withColumnRenamed("col", "v")
-      .pin() // explode once, not once per iteration
+      .withColumnRenamed("pos", "s").withColumnRenamed("col", "v"))
     def recompute(assigned: DataFrame,
         prev: Array[Array[Array[Double]]]): Array[Array[Array[Double]]] = {
       val got = assigned.groupBy(col("s"), col("b"))
@@ -73,9 +74,6 @@ object Pq {
       cbs = recompute(assign(cbs), cbs)
       it += 1
     }
-    // training is complete (centroids live on the driver) — release the
-    // exploded training table's checkpoint blocks
-    graft.util.Checkpoints.release(sub)
     Codebooks(m, dsub, cbs)
   }
 

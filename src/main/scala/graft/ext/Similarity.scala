@@ -740,11 +740,11 @@ object Similarity {
     val base = df.select(col(groupCol).as("_g"),
         col(vecCol).cast("array<double>").as("_x"))
       .filter(col("_g").isNotNull && col("_x").isNotNull)
-    val pm = sc.own(graft.util.GridGuard.gateTable(
+    val pm = graft.util.GridGuard.gateTable(
       base.groupBy(col("_g"))
         .agg(count(lit(1)).as("n_g"),
           graft.agg.VectorMeanAgg.column(col("_x")).as("_m")),
-      "embeddingDriftBy", groupCol))
+      "embeddingDriftBy", groupCol)
     val dims = pm.select(col("_g"), col("n_g"),
       posexplode(col("_m")).as(Seq("_j", "_mj")))
     val glob = dims.groupBy(col("_j"))

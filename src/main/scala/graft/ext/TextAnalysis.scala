@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Checkpoints.{PinOps, scoped}
+import graft.util.Checkpoints.{owning, scoped}
 
 /** Text-analysis operators for large-scale training-data pipelines — all
   * pure Catalyst expressions (no UDFs): whole-stage-codegen'd, shuffle-free
@@ -176,12 +176,10 @@ object TextAnalysis {
     * Output: (rank, lhs, rhs, n) — the merge table, rank ascending; stops
     * early (shorter output) if the vocabulary fully merges. */
   def bpeTrain(df: org.apache.spark.sql.DataFrame, textCol: String,
-      numMerges: Int): org.apache.spark.sql.DataFrame = {
+      numMerges: Int): org.apache.spark.sql.DataFrame = owning { sc =>
     val spark = df.sparkSession
     import spark.implicits._
-    val (rules, _, cp) = bpeMerge(df, textCol, numMerges)
-    cp.foreach(graft.util.Checkpoints.release)
-    rules.toDF("rank", "lhs", "rhs", "n")
+    bpeMerge(sc, df, textCol, numMerges)._1.toDF("rank", "lhs", "rhs", "n")
   }
 
   /** Corpus subword frequency table after [[bpeTrain]]'s merge schedule —
@@ -190,13 +188,11 @@ object TextAnalysis {
     * structure as the trainer; the final vocabulary's symbols explode
     * weighted by word frequency. Output: (subword, n).
     * On the distributed path (vocab > `graft.bpe.driver.max`) the
-    * returned frame is backed by the loop's last lineage checkpoint,
-    * which lives until the session drops it — materialize and release
-    * promptly in long-lived sessions; on the driver fast-path the
-    * vocabulary is a local frame with no checkpoint behind it. */
+    * returned frame reads the loop's last lineage checkpoint, which the
+    * caller owns; the driver fast-path returns a local frame. */
   def bpeSubwords(df: org.apache.spark.sql.DataFrame, textCol: String,
-      numMerges: Int): org.apache.spark.sql.DataFrame = {
-    val (_, vocab, _) = bpeMerge(df, textCol, numMerges)
+      numMerges: Int): org.apache.spark.sql.DataFrame = owning { sc =>
+    val (_, vocab) = bpeMerge(sc, df, textCol, numMerges)
     vocab.select(col("cnt"), explode(bpeSyms).as("subword"))
       .groupBy(col("subword")).agg(sum(col("cnt")).as("n"))
   }
@@ -221,8 +217,7 @@ object TextAnalysis {
     * documents emit no rows. */
   def bpeEncode(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, numMerges: Int): org.apache.spark.sql.DataFrame = {
-    val (rules, _, cp) = bpeMerge(df, textCol, numMerges)
-    cp.foreach(graft.util.Checkpoints.release)
+    val rules = owning(sc => bpeMerge(sc, df, textCol, numMerges)._1)
     val chars = call_function("regexp_extract_all",
       col("word"), lit("."), lit(0))
     val enc = rules.foldLeft(
@@ -253,16 +248,15 @@ object TextAnalysis {
     spark.conf.getOption("graft.bpe.driver.max").map(_.toLong)
       .getOrElse(1L << 20)
 
-  /** Shared BPE merge loop: (rules, final vocabulary (cnt, seq), the live
-    * lineage checkpoint backing the vocabulary — present only on the
-    * DISTRIBUTED path (vocab > `graft.bpe.driver.max`); the driver
-    * fast-path releases its corpus-pass checkpoint before the loop and
-    * returns None with a driver-local vocabulary. Callers that do not
-    * return the vocabulary must release the checkpoint when present). */
-  private def bpeMerge(df: org.apache.spark.sql.DataFrame, textCol: String,
+  /** Shared BPE merge loop: (rules, final vocabulary (cnt, seq)). Its
+    * lineage cuts are pins of the caller's scope `sc`: on the DISTRIBUTED
+    * path (vocab > `graft.bpe.driver.max`) the vocabulary reads the last
+    * one, on the driver fast-path it is a driver-local frame that reads
+    * none. */
+  private def bpeMerge(sc: graft.util.Checkpoints.Scope,
+      df: org.apache.spark.sql.DataFrame, textCol: String,
       numMerges: Int): (Seq[(Long, String, String, Long)],
-      org.apache.spark.sql.DataFrame,
-      Option[org.apache.spark.sql.DataFrame]) = {
+      org.apache.spark.sql.DataFrame) = {
     val chars = call_function("regexp_extract_all",
       col("word"), lit("."), lit(0))
     // The vocabulary is DISTINCT WORDS — bounded by language (millions of
@@ -278,13 +272,13 @@ object TextAnalysis {
       .select(col("cnt"), concat(lit("["),
         array_join(chars, "]["), lit("]")).as("seq"))
       .coalesce(roundSlots)
-    var prev: Option[org.apache.spark.sql.DataFrame] = None
     // materialize-and-rotate: each cut releases the previous checkpoint's
-    // blocks (the new one is eager, so the old lineage is never re-read)
+    // blocks, the pin the lazy vocabulary reads (the new one is eager, so
+    // the old lineage is never re-read)
     def cut(): Unit = {
-      val cp = vocab.pin()
-      prev.foreach(graft.util.Checkpoints.release)
-      prev = Some(cp); vocab = cp
+      val cp = sc.pin(vocab)
+      sc.release(vocab)
+      vocab = cp
     }
     // THE corpus pass: without this cut every round's pair-count action
     // would re-scan the corpus through the groupBy lineage — N corpus
@@ -305,7 +299,7 @@ object TextAnalysis {
     // the distributed rounds below own it.
     if (vocab.count() <= bpeDriverVocabMax(df.sparkSession)) {
       var seqs = vocab.collect().map(r => (r.getLong(0), r.getString(1)))
-      prev.foreach(graft.util.Checkpoints.release)
+      sc.release(vocab)
       val rules = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
       var exhausted = false
       for (r <- 1 to numMerges if !exhausted) {
@@ -334,7 +328,7 @@ object TextAnalysis {
       }
       val spark = df.sparkSession
       import spark.implicits._
-      return (rules.toSeq, seqs.toSeq.toDF("cnt", "seq"), None)
+      return (rules.toSeq, seqs.toSeq.toDF("cnt", "seq"))
     }
     val rules = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     var exhausted = false
@@ -360,7 +354,7 @@ object TextAnalysis {
         if (r % 16 == 0) cut()
       }
     }
-    (rules.toSeq, vocab, prev)
+    (rules.toSeq, vocab)
   }
 
   /** Feature-hashing document embedding (the "hashing trick", Weinberger
@@ -1412,11 +1406,10 @@ object TextAnalysis {
     * once against the snapshot, hold on the driver / in the job config
     * — the [[Outliers.psiBaseline]] convention. */
   def vocabBaseline(df: org.apache.spark.sql.DataFrame, textCol: String,
-      topK: Int = 200): (Map[String, Long], Long) = {
+      topK: Int = 200): (Map[String, Long], Long) = owning { sc =>
     require(topK > 0, "vocabBaseline: topK must be positive")
-    val cnts = df.select(explode(wordTokens(textCol)).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .pin()
+    val cnts = sc.pin(df.select(explode(wordTokens(textCol)).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).as("c")))
     val top = cnts.orderBy(col("c").desc, col("tok"))
       .limit(topK).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1424,7 +1417,6 @@ object TextAnalysis {
       case r if r.isNullAt(0) => 0L
       case r => r.getLong(0)
     }
-    graft.util.Checkpoints.release(cnts)
     (top, total)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{GridSchema, TriMesh}
-import graft.util.Checkpoints.PinOps
+import graft.util.Checkpoints.owning
 
 /** Grid generation + per-cell geometry columns.
   *
@@ -88,6 +88,33 @@ object GridOps {
     df.groupBy(keep.map(col): _*).agg(agg.as(s"$valueCol $op"))
   }
 
+  /** The in-band cells' out-of-band faces (i, j, k, dir), collected; the
+    * in-band set is pinned for its two readers and released on return. */
+  private def shellFaces(df: DataFrame, valueCol: String, lo: Double,
+      hi: Double): Seq[(Int, Int, Int, Int)] = owning { sc =>
+    val in = sc.pin(df.filter(col(valueCol) >= lo && col(valueCol) < hi)
+      .select(col("i").cast("int"), col("j").cast("int"), col("k").cast("int"))
+      .distinct())
+    // (di, dj, dk) → the face of the cell toward that neighbor
+    val dirs = Seq((-1, 0, 0), (1, 0, 0), (0, -1, 0), (0, 1, 0),
+      (0, 0, -1), (0, 0, 1))
+    // ONE job: explode every in-band cell into its six (neighbor, dir)
+    // candidates, anti-join the neighbor keys against the in-band set —
+    // survivors are exactly the faces whose neighbor is out of band
+    val cand = in.select(col("i").as("ci"), col("j").as("cj"),
+        col("k").as("ck"),
+        explode(array(dirs.zipWithIndex.map { case ((di, dj, dk), d) =>
+          struct((col("i") + di).as("i"), (col("j") + dj).as("j"),
+            (col("k") + dk).as("k"), lit(d).as("d"))
+        }: _*)).as("n"))
+      .select(col("ci"), col("cj"), col("ck"),
+        col("n.i"), col("n.j"), col("n.k"), col("n.d"))
+    cand.join(in, Seq("i", "j", "k"), "left_anti")
+      .select("ci", "cj", "ck", "d")
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)))
+      .toSeq
+  }
+
   /** Grade-shell mesh: the blocky iso-surface of the cells whose value
     * falls in `[lo, hi)` — the engine's `vtk_grid_to_mesh`
     * (/root/reference/pd_vtk.py:1093-1111, which thresholds + extracts the
@@ -109,30 +136,7 @@ object GridOps {
       val flat = gradeShellMesh(df, g.copy(bearing = 90.0), valueCol, lo, hi, name)
       return RotatedRectFit.rotateMesh(flat, g.bearing, g.rotX, g.rotY)
     }
-    val in = df.filter(col(valueCol) >= lo && col(valueCol) < hi)
-      .select(col("i").cast("int"), col("j").cast("int"), col("k").cast("int"))
-      .distinct()
-      .pin() // candidate explode + anti-join reuse it
-    // (di, dj, dk) → the face of the cell toward that neighbor
-    val dirs = Seq((-1, 0, 0), (1, 0, 0), (0, -1, 0), (0, 1, 0),
-      (0, 0, -1), (0, 0, 1))
-    // ONE job: explode every in-band cell into its six (neighbor, dir)
-    // candidates, anti-join the neighbor keys against the in-band set —
-    // survivors are exactly the faces whose neighbor is out of band
-    val cand = in.select(col("i").as("ci"), col("j").as("cj"),
-        col("k").as("ck"),
-        explode(array(dirs.zipWithIndex.map { case ((di, dj, dk), d) =>
-          struct((col("i") + di).as("i"), (col("j") + dj).as("j"),
-            (col("k") + dk).as("k"), lit(d).as("d"))
-        }: _*)).as("n"))
-      .select(col("ci"), col("cj"), col("ck"),
-        col("n.i"), col("n.j"), col("n.k"), col("n.d"))
-    val faces: Seq[(Int, Int, Int, Int)] =
-      cand.join(in, Seq("i", "j", "k"), "left_anti")
-        .select("ci", "cj", "ck", "d")
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)))
-        .toSeq
-    graft.util.Checkpoints.release(in) // faces are on the driver now
+    val faces = shellFaces(df, valueCol, lo, hi)
     // quads at cell boundaries, both triangles wound outward
     val verts = scala.collection.mutable.ArrayBuffer.empty[Double]
     val tris = scala.collection.mutable.ArrayBuffer.empty[Int]

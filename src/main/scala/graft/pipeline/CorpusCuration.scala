@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Sampling, TextAnalysis}
+import graft.util.Checkpoints.owning
 
 /** End-to-end corpus curation — the composed training-data pipeline the
   * extension operators exist for:
@@ -56,7 +57,7 @@ object CorpusCuration {
 
   private def curateBody(df: DataFrame, textCol: String, idCol: String,
       minJaccard: Double, minQuality: Double,
-      maxBandBucket: Int): DataFrame = {
+      maxBandBucket: Int): DataFrame = owning { sc =>
     val pairs = Dedup.minhashLsh(df, textCol, idCol, numHashes = 16,
       bands = 4, minJaccard = minJaccard, maxBandBucket = maxBandBucket)
     val dropIds = Dedup.connectedComponents(pairs)
@@ -73,11 +74,10 @@ object CorpusCuration {
     // and the gate + any caller orderBy (whose range-sampling pass
     // re-executes its child) read the tiny (id, lang, quality, tok_cnt)
     // rows — bytes-per-row bounded at any corpus scale (the q160-lesson
-    // pin shape). Blocks are reclaimed by the session's release
-    // discipline once the result is consumed.
-    graft.util.Checkpoints.pin(
-        curationFeatures(df.join(dropIds, Seq(idCol), "left_anti"),
-          textCol, idCol))
+    // pin shape). The result reads the pin, so the caller owns it and
+    // frees it with `Checkpoints.release` on the result.
+    sc.pin(curationFeatures(df.join(dropIds, Seq(idCol), "left_anti"),
+        textCol, idCol))
       .filter(col("quality") >= minQuality)
   }
 
@@ -91,7 +91,8 @@ object CorpusCuration {
     * and a per-cluster top-1 window next to [[curate]]'s plain min. */
   def curateKeepBest(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", minJaccard: Double = 0.3,
-      minQuality: Double = 0.55, maxBandBucket: Int = 10000): DataFrame = {
+      minQuality: Double = 0.55,
+      maxBandBucket: Int = 10000): DataFrame = owning { sc =>
     val pairs = Dedup.minhashLsh(df, textCol, idCol, numHashes = 16,
       bands = 4, minJaccard = minJaccard, maxBandBucket = maxBandBucket)
     // r15: ONE full-corpus feature pin feeds BOTH the representative
@@ -102,8 +103,7 @@ object CorpusCuration {
     // twice (full-corpus scored pass + survivor features). Costs
     // langId/tokenCount over dropped duplicates too; measured net-win
     // (the features are row-local, so survivor rows are bit-identical).
-    val feats = graft.util.Checkpoints.pin(
-      curationFeatures(df, textCol, idCol))
+    val feats = sc.pin(curationFeatures(df, textCol, idCol))
     val keepIds = Dedup.canonicalByScore(
         feats.select(col(idCol), col("quality").as("_q")), idCol, pairs,
         "_q")

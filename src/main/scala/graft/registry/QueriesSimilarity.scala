@@ -734,8 +734,8 @@ object QueriesSimilarity {
       // reads it again) — bm25 hands back its topN already pinned, so the
       // corpus-scale BM25 scan runs once; dense/qrels are bounded but
       // re-read the same way, so they are pinned here
-      val sparse = sc.own(ext.TextAnalysis.bm25(docs, "doc_id", "text",
-        "hash join filter"))
+      val sparse = ext.TextAnalysis.bm25(docs, "doc_id", "text",
+        "hash join filter")
       val dense = sc.pin(ext.Similarity
         .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 10)
         .select(col("corpus_id").as("doc_id"), col("cos").as("score")))

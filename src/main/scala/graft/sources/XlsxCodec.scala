@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedOutputStream, ByteArrayOutputStream, FileOutputStream}
+import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 

@@ -11,19 +11,24 @@ import org.apache.spark.sql.execution.LogicalRDD
   * explicit release they pin block-manager storage until the frame is
   * garbage-collected, which in a long-lived 100 TB pipeline session means
   * unbounded accumulation (and, in the bench, cleanup storms that landed on
-  * unrelated queries). Query bodies and operators that pin intermediate
-  * frames run under [[scoped]], the one owner that releases them on return
-  * and on failure; per-round rotations (Graph, the BPE cut) call
-  * [[Checkpoints.release]] at their natural completion point. */
+  * unrelated queries). Library code takes every pin through a [[Scope]] of
+  * [[owning]] (or [[scoped]]), and one close rule frees them: when the
+  * scope ends, normally or by a throw, it releases every pin it owns that
+  * its result does not read. Pins the result reads pass to the caller —
+  * the enclosing scope when there is one, else whoever called, who may
+  * [[release]] the result; a driver-side result reads none. Iterative
+  * rounds drop a superseded round early with [[Scope.release]]. Library
+  * code calls [[pin]] only through a scope; the bench-side `graft.Ladder`
+  * and external callers (tests, the benchmark) may pin and release bare. */
 object Checkpoints {
   /** Session conf key: when set to a path (HDFS/S3/local dir), iterative
     * operators pin each round with a RELIABLE `checkpoint()` against it
     * instead of `localCheckpoint`. */
   val DirConf = "graft.checkpoint.dir"
 
-  /** Truncate lineage for an iterative round — the per-round fixpoint of
+  /** Truncate lineage: an iterative round (the per-round fixpoint of
     * pageRank / labelPropagation / bfsHops / distributed
-    * connected-components.
+    * connected-components), or a frame several consumers read.
     *
     * `localCheckpoint` (the default) materializes to EXECUTOR storage:
     * fastest, but on a real cluster an executor loss makes the truncated
@@ -36,7 +41,7 @@ object Checkpoints {
     * paths produce identical results (suite-pinned). */
   def pin[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
     val spark = ds.sparkSession
-    spark.conf.getOption(DirConf).filter(_.nonEmpty) match {
+    val p = spark.conf.getOption(DirConf).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
         // `setCheckpointDir(root)` materializes rounds under a fresh
@@ -55,12 +60,22 @@ object Checkpoints {
         ds.checkpoint(eager = eager)
       case None => ds.localCheckpoint(eager = eager)
     }
+    retained.get.foreach(_ ++= pins(p))
+    p
   }
 
-  /** `ds.pin()` syntax for [[pin]] — reads like the `localCheckpoint`
-    * call it replaces at every iterative round site. */
-  implicit class PinOps[T](private val ds: Dataset[T]) {
-    def pin(eager: Boolean = true): Dataset[T] = Checkpoints.pin(ds, eager)
+  /** Pins taken on this thread inside [[retaining]]. */
+  private val retained =
+    ThreadLocal.withInitial[Option[collection.mutable.Buffer[RDD[_]]]](() => None)
+
+  /** Run `body` keeping every pin taken on this thread reachable until it
+    * returns. A pin no owner released then stays persisted, so a leak
+    * check inside `body` sees it rather than racing Spark's
+    * ContextCleaner, which unpersists an unreachable RDD on a GC. */
+  def retaining[T](body: => T): T = {
+    val outer = retained.get
+    retained.set(Some(collection.mutable.Buffer.empty))
+    try body finally retained.set(outer)
   }
 
   /** Drop the storage behind every checkpointed leaf of `ds`'s plan. Safe
@@ -70,14 +85,15 @@ object Checkpoints {
     * `graft.checkpoint.dir` as well as unpersisting blocks — Spark's
     * ContextCleaner does not reclaim reliable checkpoint files unless
     * `spark.cleaner.referenceTracking.cleanCheckpoints` is set (default
-    * false), so without this a long PageRank keeps one full rank table
-    * per round on shared storage for the job's lifetime. The
-    * materialize-and-rotate loops (Graph rounds, the BPE cut) therefore
-    * bound reliable-dir residency to ~2 rounds' worth. */
-  def release(ds: Dataset[_]): Unit =
-    ds.queryExecution.analyzed.collectLeaves().foreach {
-      case l: LogicalRDD => releaseRdd(l.rdd)
-      case _ => ()
+    * false), so without this a long PageRank would keep one full rank
+    * table per round on shared storage for the job's lifetime. */
+  def release(ds: Dataset[_]): Unit = pins(ds).foreach(releaseRdd)
+
+  /** The checkpointed RDDs `ds`'s plan reads: its `LogicalRDD` leaves —
+    * what [[release]] frees and what a scope's result keeps. */
+  def pins(ds: Dataset[_]): Seq[RDD[_]] =
+    ds.queryExecution.analyzed.collectLeaves().collect {
+      case l: LogicalRDD => l.rdd
     }
 
   private def releaseRdd(rdd: RDD[_]): Unit = {
@@ -97,53 +113,82 @@ object Checkpoints {
     rdd.unpersist(blocking = false)
   }
 
-  /** The checkpointed RDD behind `ds` when `ds` IS a materialized pin (its
-    * whole plan is the checkpointed leaf), None for any lazy frame —
-    * including one that merely reads a pin. */
-  private def pinnedRdd(ds: Dataset[_]): Option[RDD[_]] =
-    ds.queryExecution.analyzed match {
-      case l: LogicalRDD if l.rdd.isCheckpointed => Some(l.rdd)
-      case _ => None
-    }
+  /** Whether `ds` IS a materialized pin (its whole plan is the
+    * checkpointed leaf) — false for any lazy frame, including one that
+    * merely reads a pin. */
+  def isPin(ds: Dataset[_]): Boolean = ds.queryExecution.analyzed match {
+    case l: LogicalRDD => l.rdd.isCheckpointed
+    case _ => false
+  }
 
-  /** Whether `ds` is itself a materialized pin (see [[pinnedRdd]]). */
-  def isPin(ds: Dataset[_]): Boolean = pinnedRdd(ds).isDefined
-
-  /** The pins one [[scoped]] body owns. It records only what it pins or
-    * adopts and never walks a lazy frame's leaves, so a lazy frame over
-    * another owner's pin passes through it intact. */
+  /** The pins one [[owning]] body owns. It records only what it pins and
+    * what a nested scope hands up, and never walks a lazy frame's leaves,
+    * so a lazy frame over another owner's pin passes through it intact. */
   final class Scope private[Checkpoints] {
     private var owned = List.empty[RDD[_]]
 
-    /** [[Checkpoints.pin]] (so `graft.checkpoint.dir` applies), released
-      * when the scope ends unless it is the scope's result. */
-    def pin(df: DataFrame): DataFrame = own(Checkpoints.pin(df))
+    private def add(rs: Seq[RDD[_]]): Unit =
+      rs.foreach(r => if (!owned.exists(_ eq r)) owned ::= r)
 
-    /** Adopt `df` when it is itself a pin — a table
-      * [[GridGuard.gateTable]] pinned, a member's pinned result — and
-      * pass any lazy frame through unrecorded. */
-    def own(df: DataFrame): DataFrame = {
-      pinnedRdd(df).foreach(r => owned ::= r)
-      df
+    /** [[Checkpoints.pin]] (so `graft.checkpoint.dir` applies), owned by
+      * this scope. `eager = false` defers the materialization to the
+      * frame's first action. */
+    def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
+      val p = Checkpoints.pin(df, eager)
+      add(pins(p))
+      p
     }
 
-    private[Checkpoints] def close(keep: Option[RDD[_]]): Unit =
-      owned.filterNot(keep.contains).foreach(releaseRdd)
+    /** Release now the pins of `df` this scope owns — a rotation's
+      * superseded round, once the next round has materialized. Pins it
+      * does not own, or has already released, are left alone. */
+    def release(df: DataFrame): Unit = {
+      val ps = pins(df)
+      val (drop, keep) = owned.partition(r => ps.exists(_ eq r))
+      owned = keep
+      drop.foreach(releaseRdd)
+    }
+
+    /** The close rule: release every owned pin not in `keep`, and hand
+      * the kept ones to `caller` when the scope is nested in another. */
+    private[Checkpoints] def close(keep: Seq[RDD[_]], caller: Option[Scope]): Unit = {
+      val (kept, drop) = owned.partition(r => keep.exists(_ eq r))
+      drop.foreach(releaseRdd)
+      caller.foreach(_.add(kept))
+    }
   }
 
-  /** Run `body` as the owner of every pin it takes through its [[Scope]].
-    * On return the result is pinned (unless it already is a pin) and
-    * every other recorded pin is released; the caller owns the result
-    * and may [[release]] it. On a throw every recorded pin is released
-    * and the exception propagates. */
-  def scoped(body: Scope => DataFrame): DataFrame = {
+  /** The scopes open on this thread, innermost first. */
+  private val open = ThreadLocal.withInitial[List[Scope]](() => Nil)
+
+  /** Run `body` as the owner of every pin it takes through its [[Scope]],
+    * under the one close rule: when the body returns or throws, every
+    * owned pin its result does not read ([[pins]]) is released. The pins
+    * a frame result reads pass to the caller — to the enclosing scope
+    * when the call runs inside one, so a query body owns what its members
+    * hand back; a driver-side result (a `Map`, a mesh, a local frame)
+    * reads none, so nothing outlives the call. A throw propagates after
+    * the release. */
+  def owning[T](body: Scope => T): T = {
+    val caller = open.get.headOption
     val scope = new Scope
-    var kept: Option[RDD[_]] = None
+    open.set(scope :: open.get)
+    var keep: Seq[RDD[_]] = Nil
     try {
       val r = body(scope)
-      val out = if (isPin(r)) r else pin(r)
-      kept = pinnedRdd(out)
-      out
-    } finally scope.close(kept)
+      r match { case ds: Dataset[_] => keep = pins(ds); case _ => () }
+      r
+    } finally {
+      open.set(open.get.tail)
+      scope.close(keep, caller)
+    }
+  }
+
+  /** [[owning]] over a pinned result: the body's frame is pinned (unless
+    * it already is a pin), so the caller owns exactly that one bounded
+    * pin and every input pin is released. */
+  def scoped(body: Scope => DataFrame): DataFrame = owning { sc =>
+    val r = body(sc)
+    if (isPin(r)) r else sc.pin(r)
   }
 }

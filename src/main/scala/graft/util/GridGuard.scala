@@ -94,23 +94,21 @@ object GridGuard {
     * is safe at ANY cardinality — only the downstream one-task rank
     * window is not), and exact where the HLL check was ~5% approximate.
     *
-    * Returns the PINNED table when the guard is on (the caller's window
-    * then reads the materialized pin — callers with a bounded result
-    * adopt it with [[Checkpoints.Scope.own]]; callers handing back a
-    * table-sized result leave the bounded pin embedded, reclaimable via
-    * `Checkpoints.release(result)`), or the original lazy frame when the
-    * guard is conf'd off. A table over the ceiling is released before
-    * the failure is thrown. */
+    * Returns the PINNED table when the guard is on, or the original lazy
+    * frame when the guard is conf'd off. The pin is taken in its own
+    * [[Checkpoints.owning]] scope: a table over the ceiling is released
+    * as the failure propagates, and otherwise the pin passes to the
+    * caller — to the enclosing scope when there is one (a bounded member
+    * result releases it there), or embedded in a table-sized result,
+    * reclaimable by [[Checkpoints.release]] on that result. */
   def gateTable(per: DataFrame, op: String, colName: String): DataFrame =
     ceiling(per.sparkSession) match {
-      case Some(cap) =>
-        val p = Checkpoints.pin(per)
+      case Some(cap) => Checkpoints.owning { sc =>
+        val p = sc.pin(per)
         val n = p.count()
-        if (n > cap) {
-          Checkpoints.release(p)
-          fail(op, colName, n.toString, cap)
-        }
+        if (n > cap) fail(op, colName, n.toString, cap)
         p
+      }
       case None => per
     }
 

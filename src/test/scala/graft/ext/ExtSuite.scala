@@ -309,7 +309,6 @@ class TextAnalysisSuite extends AnyFunSuite {
 
   test("packSequencesStream: one batch ≡ packSequences; shard offsets " +
       "persist across checkpoint restarts") {
-    import org.apache.spark.sql.functions.col
     val docs = Seq(
       (0L, "a", (1 to 6).map(_ => "w").mkString(" ")),
       (1L, "a", (1 to 3).map(_ => "w").mkString(" ")),
@@ -386,6 +385,70 @@ class TextAnalysisSuite extends AnyFunSuite {
     assert(got(0) == (("write <EMAIL> or <EMAIL> now", 2, 0)))
     assert(got(1) == (("call <PHONE> or <PHONE>", 0, 2)))
     assert(got(2) == (("clean text", 0, 0)))
+  }
+
+  // ---- BPE driver fast-path == distributed rounds ------------------------
+
+  test("bpeTrain/bpeSubwords: driver fast-path equals the distributed merge rounds") {
+    // The driver loop (vocab <= graft.bpe.driver.max) must replay the
+    // distributed rounds exactly: same tie-break (count desc, lhs/rhs
+    // ASCII), same left-to-right non-overlapping literal replace. The
+    // corpus has a deliberate count TIE (ab vs bc) and a self-overlap
+    // word (ababab) to exercise both.
+    val docs = Seq(
+      "abab abc", "ababab cab", "abc bcbc", "cab abab").toDF("text")
+    def run(): (Seq[(Long, String, String, Long)], Set[(String, Long)]) = (
+      TextAnalysis.bpeTrain(docs, "text", 5)
+        .collect().map(r => (r.getLong(0), r.getString(1),
+          r.getString(2), r.getLong(3))).toSeq,
+      TextAnalysis.bpeSubwords(docs, "text", 5)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSet)
+    val viaDriver = run()
+    spark.conf.set("graft.bpe.driver.max", "0")
+    try {
+      val viaRounds = run()
+      assert(viaDriver._1 == viaRounds._1,
+        "merge schedules must be identical across paths")
+      assert(viaDriver._2 == viaRounds._2,
+        "final subword vocabularies must be identical across paths")
+    } finally spark.conf.unset("graft.bpe.driver.max")
+    assert(viaDriver._1.nonEmpty)
+  }
+
+  // ---- pre-tokenized NB variants == the raw-text operators ----------------
+
+  test("nbMulticlassTokens / nbLabelIssuesTokens / nbQualityScoreTokens equal the raw-text paths") {
+    // The shared-scan variants take a (id, cls|pos, toks) frame a caller
+    // pinned; on an UNPINNED frame built with the same wordTokens
+    // expression they must be bit-identical to the raw-text operators —
+    // the refactor moved the tokenize site, not the math.
+    val docs = Seq(
+      (1L, "en", "the quick brown fox jumps over the lazy dog"),
+      (2L, "en", "a quick brown dog naps in the sun all day"),
+      (3L, "de", "der schnelle braune fuchs springt sehr hoch"),
+      (4L, "de", "ein brauner hund schlaeft in der warmen sonne"),
+      (5L, "en", "der quick fox und the dog"), // mixed: a likely issue row
+      (6L, "fr", "le renard brun rapide saute par dessus le chien"))
+      .toDF("doc_id", "lang", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id").collect().toSeq.map(_.toSeq)
+
+    val mcTok = docs.select(col("doc_id"), col("lang").as("cls"),
+      TextAnalysis.wordTokens("text").as("toks"))
+    assert(rows(TextAnalysis.nbMulticlassTokens(mcTok, "doc_id")) ==
+      rows(TextAnalysis.nbMulticlass(docs, "doc_id", "text", "lang")))
+    assert(
+      TextAnalysis.nbLabelIssuesTokens(mcTok, "doc_id", 3)
+        .collect().toSeq.map(_.toSeq) ==
+      TextAnalysis.nbLabelIssues(docs, "doc_id", "text", "lang", 3)
+        .collect().toSeq.map(_.toSeq))
+
+    val posTok = docs.select(col("doc_id"),
+      (col("lang") === "en").as("pos"),
+      TextAnalysis.wordTokens("text").as("toks"))
+    assert(rows(TextAnalysis.nbQualityScoreTokens(posTok, "doc_id")) ==
+      rows(TextAnalysis.nbQualityScore(docs, "doc_id", "text",
+        col("lang") === "en")))
   }
 }
 
@@ -899,7 +962,6 @@ class CorpusCurationSuite extends AnyFunSuite {
 
   test("trainingMix: curate → decontaminate → budget → shard → pack, " +
       "composed invariants hold and the output is layout-invariant") {
-    import org.apache.spark.sql.functions.col
     val good = "the quick brown fox jumps over the lazy dog and it is fine " * 3
     val clean2 = "another clean english document that is long enough to pass the gate " * 3
     val leaky = "a quick brown fox benchmark question appears here today " * 3
@@ -942,7 +1004,6 @@ class CorpusCurationSuite extends AnyFunSuite {
   }
 
   test("new-op plan shapes: shuffleShards narrow, token budget one window exchange") {
-    import org.apache.spark.sql.functions.col
     val docs = (0L until 100L)
       .map(i => (i, "s" + i % 2, "w x y z " * (i % 5 + 1).toInt))
       .toDF("doc_id", "source", "text")

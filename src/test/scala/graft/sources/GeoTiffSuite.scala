@@ -161,7 +161,6 @@ class GeoTiffSuite extends AnyFunSuite {
     // the band value to the sentinel then re-reading with a nodata tag is
     // not expressible through the public writer — assert the read-side
     // contract directly on NaN instead (writer emits NaN for nulls).
-    import spark.implicits._
     val withNull = pixelDf().withColumn("0",
       org.apache.spark.sql.functions.when(
         org.apache.spark.sql.functions.col("xc") === 0.0, null)

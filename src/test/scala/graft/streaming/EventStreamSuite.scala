@@ -1017,7 +1017,6 @@ class EventStreamSuite extends AnyFunSuite {
   }
 
   test("driftReportWindowed: one pass equals the four windowed members field-for-field, stream equals batch") {
-    import org.apache.spark.sql.functions.col
     // values 0..9 day 1, shifted +5 day 2; categories invert on day 2 —
     // every lens has signal in exactly one window
     val live = (0 until 120).map { i =>
