@@ -15,12 +15,15 @@ package graft.model
   *     (/root/reference/pd_vtk.py:771-796, 1206-1221).
   *
   * A BVH over triangle AABBs accelerates both. It is `@transient` and never
-  * serialized: the geometry expressions (operators.GeomExpressions) carry
-  * their meshes in the task binary as codegen reference objects, every
-  * task deserializes its own TriMesh copies, and each copy builds its
-  * index on its first query — once per mesh per task. The build allocates
+  * serialized; each instance builds it on its first query. The geometry
+  * expressions (operators.GeomExpressions) ship their meshes as one Spark
+  * broadcast, so all tasks on an executor share one deserialized instance
+  * per mesh and the index is built once per executor per broadcast (in
+  * local mode the broadcast value is the caller's own instance, so a
+  * caller that reuses a mesh builds its index once). The build allocates
   * O(nTris) up front and nothing per node: about 20 ms for a
-  * 20,000-triangle heightfield (4-core host, warm JIT).
+  * 20,000-triangle heightfield (4-core host, warm JIT). Queries allocate
+  * their own traversal state, so concurrent tasks may share an instance.
   */
 final case class TriMesh(name: String, verts: Array[Double], tris: Array[Int])
     extends Serializable {
@@ -155,7 +158,7 @@ object TriMesh {
 }
 
 /** Flat-array median-split BVH, built once per mesh instance (so once per
-  * task, see [[TriMesh]]); queries prune by slab test. A node is a leaf iff
+  * executor per broadcast, see [[TriMesh]]); queries prune by slab test. A node is a leaf iff
   * its first info word is negative. */
 private[model] final class Bvh(
     val boxes: Array[Double],   // 6 per node: xmin,xmax,ymin,ymax,zmin,zmax

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
@@ -15,14 +17,19 @@ import graft.model.TriMesh
   * the UDF path (SURVEY.md §4: custom Expression beats UDF): the call stays
   * inside whole-stage codegen (no ScalaUDF boundary, no extra null-handling
   * projection), invoking the kernel object directly via a plan reference.
-  * Meshes are KB-scale; they ride the serialized expression in the stage's
-  * task binary, so every task deserializes its own copies and builds their
-  * BVHs on first use (see [[graft.model.TriMesh]]).
+  * Each kernel holds its meshes as ONE Spark broadcast, so the task binary
+  * carries only the broadcast handle: every task on an executor reads the
+  * same deserialized [[TriMesh]] instances, whose BVHs are built once per
+  * executor per broadcast (see [[graft.model.TriMesh]]). In local mode the
+  * broadcast hands back the caller's own instances, so a caller that reuses
+  * its meshes across requests builds each index once.
   */
 
 /** Shared evaluation helpers so interpreted + codegen paths agree. */
-final class RegionFlagKernel(val meshes: Array[TriMesh], val footprint2d: Boolean)
+final class RegionFlagKernel(meshesB: Broadcast[Array[TriMesh]], val footprint2d: Boolean)
     extends Serializable {
+  @transient private lazy val meshes = meshesB.value
+
   def flag(x: Double, y: Double, z: Double): UTF8String = {
     var n = meshes.length - 1
     while (n >= 0) { // reference iterates forward overwriting → reverse first-match
@@ -78,18 +85,21 @@ case class RegionFlagExpr(
 }
 
 object RegionFlagExpr {
-  def column(x: Column, y: Column, z: Column, meshes: Seq[TriMesh],
+  def column(sc: SparkContext, x: Column, y: Column, z: Column, meshes: Seq[TriMesh],
       footprint2d: Boolean = false): Column =
     ExpressionUtils.column(RegionFlagExpr(
       ExpressionUtils.expression(x), ExpressionUtils.expression(y),
       ExpressionUtils.expression(z),
-      new RegionFlagKernel(meshes.toArray, footprint2d)))
+      new RegionFlagKernel(sc.broadcast(meshes.toArray), footprint2d)))
 }
 
-/** Depletion kernel holder (continuous + sub-block variants). */
-final class MineKernel(val includes: Array[TriMesh], val excludes: Array[TriMesh],
+/** Depletion kernel holder (continuous + sub-block variants); the broadcast
+  * holds the include surfaces followed by the exclude surfaces. */
+final class MineKernel(meshesB: Broadcast[Array[TriMesh]], nIncludes: Int,
     val dz: Double, val subBlocks: Int, val sx: Double, val sy: Double)
     extends Serializable {
+  @transient private lazy val includes = meshesB.value.take(nIncludes)
+  @transient private lazy val excludes = meshesB.value.drop(nIncludes)
 
   def mine(x: Double, y: Double, z: Double): Double =
     if (subBlocks <= 0) continuous(x, y, z) else subblock(x, y, z)
@@ -182,20 +192,28 @@ case class MineExpr(
 }
 
 object MineExpr {
-  def column(x: Column, y: Column, z: Column, includes: Seq[TriMesh],
+  def column(sc: SparkContext, x: Column, y: Column, z: Column, includes: Seq[TriMesh],
       excludes: Seq[TriMesh], dz: Double, subBlocks: Int, sx: Double,
       sy: Double): Column =
     ExpressionUtils.column(MineExpr(
       ExpressionUtils.expression(x), ExpressionUtils.expression(y),
       ExpressionUtils.expression(z),
-      new MineKernel(includes.toArray, excludes.toArray, dz, subBlocks, sx, sy)))
+      new MineKernel(sc.broadcast((includes ++ excludes).toArray), includes.size,
+        dz, subBlocks, sx, sy)))
+}
+
+/** Elevation kernel holder: one surface, broadcast like the others. */
+final class ElevationKernel(meshB: Broadcast[TriMesh]) extends Serializable {
+  @transient private lazy val mesh = meshB.value
+
+  def surfaceZ(x: Double, y: Double): Double = mesh.surfaceZ(x, y)
 }
 
 /** `elevation` column: mean z of the vertical-ray surface hits, null on
   * miss (`get_elevation`, /root/reference/pd_vtk.py:771-796). The codegen
   * sibling of [[MineExpr]] — the ScalaUDF version boxed an Option per row
   * and broke the fused scan at an expression boundary. */
-case class ElevationExpr(left: Expression, right: Expression, mesh: TriMesh)
+case class ElevationExpr(left: Expression, right: Expression, kernel: ElevationKernel)
   extends BinaryExpression {
 
   override def prettyName: String = "surface_elevation"
@@ -203,12 +221,12 @@ case class ElevationExpr(left: Expression, right: Expression, mesh: TriMesh)
   override def nullable: Boolean = true
 
   override def nullSafeEval(x: Any, y: Any): Any = {
-    val z = mesh.surfaceZ(x.asInstanceOf[Double], y.asInstanceOf[Double])
+    val z = kernel.surfaceZ(x.asInstanceOf[Double], y.asInstanceOf[Double])
     if (z.isNaN) null else java.lang.Double.valueOf(z)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("elevMesh", mesh, classOf[TriMesh].getName)
+    val ref = ctx.addReferenceObj("elevKernel", kernel, classOf[ElevationKernel].getName)
     val z = ctx.freshName("graftElev")
     nullSafeCodeGen(ctx, ev, (x, y) =>
       s"""
@@ -223,7 +241,8 @@ case class ElevationExpr(left: Expression, right: Expression, mesh: TriMesh)
 }
 
 object ElevationExpr {
-  def column(x: Column, y: Column, mesh: TriMesh): Column =
+  def column(sc: SparkContext, x: Column, y: Column, mesh: TriMesh): Column =
     ExpressionUtils.column(ElevationExpr(
-      ExpressionUtils.expression(x), ExpressionUtils.expression(y), mesh))
+      ExpressionUtils.expression(x), ExpressionUtils.expression(y),
+      new ElevationKernel(sc.broadcast(mesh))))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.{GridSchema, TriMesh}
 import graft.util.Checkpoints.owning
+import graft.util.StoreSchemas
 
 /** Grid generation + per-cell geometry columns.
   *
@@ -170,18 +171,18 @@ object GridOps {
   * against a list of small closed meshes, last mesh wins on overlap,
   * unflagged cells carry '' (`vtk_flag_region`, the reference's
   * vtk_flag_regions.py:54-79). A containment predicate
-  * folded into a map — no shuffle on the block side. The meshes ride the
-  * task binary as a codegen reference object; each task builds its own
-  * mesh indexes ([[graft.model.TriMesh]]). A solid with no triangles flags
-  * no cell.
+  * folded into a map — no shuffle on the block side. The meshes ship as
+  * one Spark broadcast, so each executor builds each mesh's index once
+  * ([[RegionFlagExpr]], [[graft.model.TriMesh]]). A solid with no triangles
+  * flags no cell.
   */
 object FlagRegions {
   def apply(spark: SparkSession, df: DataFrame, meshes: Seq[TriMesh],
       flagVar: String = "region", xCol: String = "x", yCol: String = "y",
       zCol: String = "z", footprint2d: Boolean = false): DataFrame =
     // native codegen Expression — stays inside whole-stage codegen
-    // (operators.RegionFlagExpr); the mesh kernel rides the plan once
-    df.withColumn(flagVar, RegionFlagExpr.column(
+    // (operators.RegionFlagExpr); the meshes are broadcast once per call
+    df.withColumn(flagVar, RegionFlagExpr.column(df.sparkSession.sparkContext,
       col(xCol).cast("double"), col(yCol).cast("double"),
       col(zCol).cast("double"), meshes, footprint2d))
 
@@ -198,15 +199,15 @@ object FlagRegions {
       g: GridSchema, meshes: Seq[TriMesh],
       flagVar: String = "region"): DataFrame = {
     if (meshes.isEmpty)
-      return spark.read.parquet(path).withColumn(flagVar, lit(""))
+      return StoreSchemas.read(spark, path).withColumn(flagVar, lit(""))
     // slab size comes from the store's own metadata — a re-defaulted
     // parameter would prune the wrong window and flag in-solid cells ''
-    val slabCells = graft.sources.BlockModelStore.slabCells(path)
+    val slabCells = graft.sources.BlockModelStore.slabCells(path, spark)
     val zMin = meshes.map(_.bounds(4)).min
     val zMax = meshes.map(_.bounds(5)).max
     val kLo = math.floor((zMin - g.oz) / g.sz).toInt / slabCells
     val kHi = math.floor((zMax - g.oz) / g.sz).toInt / slabCells
-    val full = spark.read.parquet(path)
+    val full = StoreSchemas.read(spark, path)
     val hot = apply(spark,
       full.filter(col("kslab") >= kLo && col("kslab") <= kHi),
       meshes, flagVar)
@@ -254,7 +255,7 @@ object MineDepletion {
       require(cellSizeXY._1 > 0 && cellSizeXY._2 > 0,
         "subBlocks kernel needs cellSizeXY")
     // native codegen Expression (operators.MineExpr)
-    df.withColumn(out, MineExpr.column(
+    df.withColumn(out, MineExpr.column(df.sparkSession.sparkContext,
       col(xCol).cast("double"), col(yCol).cast("double"),
       col(zCol).cast("double"), includes, excludes, dz, subBlocks,
       cellSizeXY._1, cellSizeXY._2))
@@ -265,13 +266,13 @@ object MineDepletion {
   * (/root/reference/pd_vtk.py:771-796): mean z of the vertical-ray hits,
   * null on miss. */
 object Elevation {
-  // no SparkSession parameter: the mesh ships as a plan reference object
-  // inside ElevationExpr (same pattern as MineDepletion), not a broadcast
+  // no SparkSession parameter: the mesh is broadcast on the context of
+  // `df`'s own session (same pattern as MineDepletion)
   def apply(df: DataFrame, mesh: TriMesh,
       out: String = "elevation", xCol: String = "x", yCol: String = "y"): DataFrame =
     // native codegen Expression (operators.ElevationExpr) — same pattern as
     // RegionFlagExpr/MineExpr, no ScalaUDF boundary in the fused scan
-    df.withColumn(out, ElevationExpr.column(
+    df.withColumn(out, ElevationExpr.column(df.sparkSession.sparkContext,
       col(xCol).cast("double"), col(yCol).cast("double"), mesh))
 }
 
@@ -281,11 +282,11 @@ object Elevation {
   * the norm reduces to `|z − surfaceZ(x, y)|`; null when the ray misses
   * the mesh footprint (the reference leaves its null fill in place).
   * Composes the [[ElevationExpr]] codegen kernel with `abs` — one fused
-  * shuffle-free scan, the mesh ships once as a plan reference object. */
+  * shuffle-free scan, the mesh ships once as a broadcast. */
 object Tridist {
   def apply(df: DataFrame, mesh: TriMesh, out: String = "tridist",
       xCol: String = "x", yCol: String = "y", zCol: String = "z"): DataFrame =
     df.withColumn(out, abs(col(zCol).cast("double") -
-      ElevationExpr.column(
+      ElevationExpr.column(df.sparkSession.sparkContext,
         col(xCol).cast("double"), col(yCol).cast("double"), mesh)))
 }

@@ -1,9 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.GridSchema
+import graft.util.StoreSchemas
 
 /** Partitioned Parquet layout for block models — the 100 TB storage story
   * (ARCHITECTURE.md): cells are written partitioned by z-slab
@@ -13,8 +15,20 @@ import graft.model.GridSchema
   * 100 TB and filtering. This is the engine-side realization of the
   * reference's `-X -t solid.00t` bounding-solid pushdown idea
   * (/root/reference/_gui.py:160-162, SURVEY.md §4).
+  *
+  * Reads go through [[StoreSchemas]]: the store's schema is inferred once
+  * per path and JVM, and [[write]] invalidates it. The slab metadata file
+  * is written and read through the Hadoop `FileSystem` of the store path,
+  * the one Spark writes the Parquet to, so a URI (`file://`, `hdfs://`)
+  * works like a bare local path.
   */
 object BlockModelStore {
+  private val SlabFile = "_graft_slab_cells"
+
+  private def slabFile(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path, SlabFile)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
 
   def write(df: DataFrame, path: String, slabCells: Int = 4): Unit = {
     df.withColumn("kslab", (col("k") / slabCells).cast("int"))
@@ -24,27 +38,28 @@ object BlockModelStore {
     // persist the partitioning parameter WITH the store: a reader that
     // re-defaulted it would compute wrong slab windows and silently prune
     // in-range cells
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "_graft_slab_cells"),
-      slabCells.toString.getBytes("UTF-8"))
+    val (fs, p) = slabFile(df.sparkSession, path)
+    val out = fs.create(p, true)
+    try out.write(slabCells.toString.getBytes("UTF-8")) finally out.close()
+    StoreSchemas.invalidate(path)
   }
 
   /** The store's slab size, read back from its metadata file. */
-  def slabCells(path: String): Int = {
-    val p = java.nio.file.Paths.get(path, "_graft_slab_cells")
-    require(java.nio.file.Files.exists(p),
-      s"$path is not a BlockModelStore (missing _graft_slab_cells)")
-    new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toInt
+  def slabCells(path: String, spark: SparkSession = SparkSession.active): Int = {
+    val (fs, p) = slabFile(spark, path)
+    require(fs.exists(p), s"$path is not a BlockModelStore (missing $SlabFile)")
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
   }
 
   /** Read only the z-slabs intersecting [zMin, zMax] — a partition-pruned
     * scan (`PartitionFilters` in the plan, zero I/O on other slabs). */
   def readZRange(spark: SparkSession, path: String, g: GridSchema,
       zMin: Double, zMax: Double): DataFrame = {
-    val sc = slabCells(path)
+    val sc = slabCells(path, spark)
     val kLo = math.floor((zMin - g.oz) / g.sz).toInt / sc
     val kHi = math.floor((zMax - g.oz) / g.sz).toInt / sc
-    spark.read.parquet(path)
+    StoreSchemas.read(spark, path)
       .filter(col("kslab") >= kLo && col("kslab") <= kHi)
   }
 

@@ -3,8 +3,9 @@ package graft.util
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Schema cache for the ANN store directories (r15) — the
-  * [[graft.Tables]] discipline applied to the IVF/PQ stores: a bare
+/** Schema cache for the store directories — the IVF/PQ stores (r15) and
+  * the block-model store ([[graft.sources.BlockModelStore]]) — the
+  * [[graft.Tables]] discipline applied to the stores: a bare
   * `spark.read.parquet(store)` infers the schema with a footer-reading
   * job before the real scan, so every serve call (and every bench pass
   * of the store queries) paid a fixed inference job for a schema that
@@ -21,8 +22,8 @@ object StoreSchemas {
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** Read a store directory with its cached (first read: inferred)
-    * schema — partition columns (`ivf_bkt`) ride the cached schema, so
-    * partition pruning is unaffected. */
+    * schema — partition columns (`ivf_bkt`, `kslab`) ride the cached
+    * schema, so partition pruning is unaffected. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val sch = cache.computeIfAbsent(path,
       _ => spark.read.parquet(path).schema)

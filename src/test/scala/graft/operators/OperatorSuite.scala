@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -289,6 +290,68 @@ class FlagRegionsSuite extends AnyFunSuite {
   }
 }
 
+/** The geometry kernels ship their meshes by broadcast: the expressions a
+  * task binary carries stay small, and concurrent tasks that share one mesh
+  * instance (and its one index) answer exactly as direct kernel calls. */
+class GeomExpressionsSuite extends AnyFunSuite {
+  private lazy val spark = SparkTest.spark
+
+  // 101 × 101 nodes = 20,000 triangles, ~0.5 MB of vertex and index arrays
+  private def topo = TriMesh.heightfield("topo", 0, 0, 1.0, 101)(
+    (x, y) => 60 + 8 * math.sin(x / 13) * math.cos(y / 17))
+  private def pit = TriMesh.heightfield("pit", 0, 0, 1.0, 101)(
+    (x, y) => 30 + 0.004 * ((x - 50) * (x - 50) + (y - 50) * (y - 50)))
+
+  test("the geometry expressions carry no mesh arrays into the task binary") {
+    val hf = topo
+    val grid = GridOps.generate(spark, GridSchema(0, 0, 0, 10, 10, 10, 4, 4, 4))
+    val exprs = Seq(
+      MineDepletion(spark, grid, Seq(hf), Seq.empty, 10.0),
+      FlagRegions(spark, grid, Seq(hf)),
+      Elevation(grid, hf))
+      .flatMap(_.queryExecution.executedPlan.collect { case p => p.expressions }.flatten)
+      .flatMap(_.collect {
+        case e @ (_: MineExpr | _: RegionFlagExpr | _: ElevationExpr) => e
+      })
+    assert(exprs.map(_.getClass) ==
+      Seq(classOf[MineExpr], classOf[RegionFlagExpr], classOf[ElevationExpr]))
+    val ser = SparkEnv.get.closureSerializer.newInstance()
+    exprs.foreach { e =>
+      val bytes = ser.serialize(e).remaining()
+      assert(bytes < 16 * 1024, s"${e.prettyName} serializes to $bytes bytes")
+    }
+  }
+
+  test("tasks sharing one mesh instance answer exactly as direct kernel calls") {
+    val (t, p) = (topo, pit)
+    val solids = Seq(TriMesh.box("a", 10, 60, 10, 60, 20, 70),
+      TriMesh.box("b", 40, 95, 30, 80, 5, 45))
+    val g = GridSchema(0, 0, 0, 5, 5, 5, 20, 20, 16)
+    val grid = GridOps.generate(spark, g, numPartitions = 8)
+    assert(grid.rdd.getNumPartitions >= 8)
+    val out = Elevation(MineDepletion(spark, FlagRegions(spark, grid, solids),
+        Seq(t), Seq(p), g.sz), t)
+      .select("x", "y", "z", "region", "mine", "elevation").collect()
+    assert(out.length == g.nCells)
+    def orNull(v: Double): Any = if (v.isNaN) null else v
+    def frac(m: TriMesh, x: Double, y: Double, z: Double): Double = {
+      val zs = m.surfaceZ(x, y)
+      if (zs.isNaN) Double.NaN
+      else math.min(1.0, math.max(0.0, (zs - (z - g.sz / 2)) / g.sz))
+    }
+    out.foreach { r =>
+      val (x, y, z) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
+      val region = solids.reverse.find(_.containsPoint(x, y, z)).fold("")(_.name)
+      val e = frac(p, x, y, z)
+      val mine = if (e.isNaN) frac(t, x, y, z) else frac(t, x, y, z) * (1.0 - e)
+      assert(r.getString(3) == region, r)
+      assert(r.get(4) == orNull(mine), r)
+      assert(r.get(5) == orNull(t.surfaceZ(x, y)), r)
+    }
+    assert(out.map(_.getString(3)).distinct.length == 3) // "", a, b
+  }
+}
+
 class BlockModelStoreSuite extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
 
@@ -323,6 +386,31 @@ class BlockModelStoreSuite extends AnyFunSuite {
     assert(viaStore.values.count(_ == "s") > 0) // solid actually flags cells
     // cold branch really skipped the kernel: all flags outside the z-range are ''
     assert(viaStore.filter(_._2 == "s").nonEmpty)
+  }
+
+  test("a store written to a file:// URI reads back pruned") {
+    val g = GridSchema(0, 0, 0, 10, 10, 10, 4, 4, 16)
+    val path = "file://" + Files.createTempDirectory("graft_store_uri") + "/bm"
+    BlockModelStore.write(GridOps.generate(spark, g), path, slabCells = 4)
+    assert(BlockModelStore.slabCells(path, spark) == 4)
+    val solid = TriMesh.box("s", 1, 39, 1, 39, 52.3, 77.7)
+    assert(BlockModelStore.readForSolid(spark, path, g, solid).count() == 4L * 4 * 4)
+  }
+
+  test("readZRange follows a store rewritten with another schema and slab size") {
+    val g = GridSchema(0, 0, 0, 10, 10, 10, 4, 4, 16)
+    val path = Files.createTempDirectory("graft_store_rewrite").toString + "/bm"
+    val (zMin, zMax) = (52.3, 77.7) // k 5..7
+    BlockModelStore.write(GridOps.generate(spark, g), path, slabCells = 4)
+    val first = BlockModelStore.readZRange(spark, path, g, zMin, zMax)
+    assert(!first.columns.contains("grade"))
+    assert(first.count() == 4L * 4 * 4) // slab 1 = k 4..7
+    BlockModelStore.write(GridOps.generate(spark, g)
+      .withColumn("grade", col("k") * 0.5), path, slabCells = 8)
+    val second = BlockModelStore.readZRange(spark, path, g, zMin, zMax)
+    assert(second.columns.contains("grade"))
+    assert(second.count() == 4L * 4 * 8) // slab 0 = k 0..7
+    assert(second.agg(max("grade")).head().getDouble(0) == 3.5)
   }
 
   test("gradeShellMesh: closed boundary surface of a value band") {
