@@ -34,9 +34,11 @@ import graft.util.OutputOrder
   *   - `pNN` skips nulls (the reference's np.percentile lets NaN poison the
   *     result — a bug we do not replicate);
   *   - output rows are sorted by the group keys (pandas groupby sorts),
-  *     by [[graft.util.OutputOrder.sorted]]: a report has one row per
-  *     classificatory group, so it is sorted in one partition with no
-  *     range-sampling job re-running the aggregation.
+  *     by [[graft.util.OutputOrder.merged]]: a report has one row per
+  *     classificatory group, so the final merge and the sort run in the
+  *     one task that reads the aggregation's exchange — one shuffle per
+  *     report, no range-sampling job (`merged` says why reports meet its
+  *     precondition).
   */
 object Breakdown {
 
@@ -44,13 +46,20 @@ object Breakdown {
     run(df, BreakdownSpec.parse(spec))
 
   def run(df: DataFrame, spec: Spec): DataFrame = {
+    val (agg, byKeys) = aggregate(df, spec)
+    OutputOrder.merged(agg, byKeys)
+  }
+
+  /** The report's aggregate before its final order, and that order: the
+    * group keys (`Nil` for the global aggregate). */
+  private[agg] def aggregate(df: DataFrame, spec: Spec): (DataFrame, Seq[Column]) = {
     val keys = spec.keys
     val aggs0 = spec.aggs
     val keyCols = keys.map(r => keyCol(df, r).as(r.outName))
     val byKeys = keys.map(r => col(r.outName))
     if (keys.nonEmpty && aggs0.isEmpty) {
       // keys-only degenerate: the distinct groups (bm_breakdown.py:102-104)
-      return OutputOrder.sorted(df.select(keyCols: _*).distinct(), byKeys)
+      return (df.select(keyCols: _*).distinct(), byKeys)
     }
     // FUSION: n unweighted exact-quantile ops on the same variable become
     // ONE percentile(x, array(q…)) aggregate. Spark's Percentile is a
@@ -103,8 +112,7 @@ object Breakdown {
         }
       }
     // no keys: groupBy() is the global aggregate and byKeys is Nil
-    OutputOrder.sorted(df.groupBy(keyCols: _*)
-      .agg(aggCols.head, aggCols.tail: _*)
+    (df.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
       .select(finalCols: _*), byKeys)
   }
 

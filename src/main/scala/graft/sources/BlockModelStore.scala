@@ -16,8 +16,9 @@ import graft.util.StoreSchemas
   * reference's `-X -t solid.00t` bounding-solid pushdown idea
   * (/root/reference/_gui.py:160-162, SURVEY.md §4).
   *
-  * Reads go through [[StoreSchemas]]: the store's schema is inferred once
-  * per path and JVM, and [[write]] invalidates it. The slab metadata file
+  * Reads go through [[StoreSchemas]]: the store's schema is inferred and
+  * its directory listed once per path and write ([[write]] invalidates
+  * both); each read still scans the listed files. The slab metadata file
   * is written and read through the Hadoop `FileSystem` of the store path,
   * the one Spark writes the Parquet to, so a URI (`file://`, `hdfs://`)
   * works like a bare local path.

@@ -1,6 +1,6 @@
 package graft.agg
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +8,22 @@ object SparkTest {
   /** Fixed at local[4] whatever SPARK_GRAFT_CPUS says: suite results must
     * not depend on the host. */
   lazy val spark: SparkSession = graft.Harness.session(4)
+
+  /** Collect `df` under its own job group and count that group's jobs.
+    * Status events arrive asynchronously but in order, so once a later
+    * marker job is visible every job of the group is too. */
+  def rowsAndJobs(df: DataFrame, group: String): (Seq[Row], Int) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    val rows = try df.collect().toSeq finally sc.clearJobGroup()
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, marker)
+    try spark.range(1).collect() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30e9.toLong
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    (rows, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 }
 
 class BreakdownSpecSuite extends AnyFunSuite {
@@ -158,6 +174,27 @@ class BreakdownSuite extends AnyFunSuite {
       assert(out.collect().map(_.getString(0)).toSeq == Seq("high", "low"))
       val plan = out.queryExecution.executedPlan.toString.toLowerCase
       assert(!plan.contains("rangepartitioning"), s"$spec:\n$plan")
+    }
+    // the merge and the sort share the task that reads the aggregation's
+    // own exchange: one hash exchange, two jobs, the rows of orderBy(keys)
+    val specs = Seq(
+      "weighted mean and sum" -> "lito;grade=g,mean,mine;grade=m,sum,density,mine",
+      "fused q1/q3" -> "lito;grade=a,q1;grade=c,q3;volume=v,sum",
+      "weighted q2" -> "lito;grade=w,q2,density",
+      "major" -> "lito;grade=mj,major",
+      "list" -> "lito;density=l,list",
+      "keys-only" -> "lito;mine")
+    for ((name, spec) <- specs) {
+      val out = Breakdown(df, spec)
+      val plan = out.queryExecution.executedPlan.toString.toLowerCase
+      assert("exchange ".r.findAllMatchIn(plan).size == 1 &&
+        plan.contains("exchange hashpartitioning"), s"$name:\n$plan")
+      for (form <- Seq("repartition_by_num", "rangepartitioning", "singlepartition"))
+        assert(!plan.contains(form), s"$name has $form:\n$plan")
+      val (got, jobs) = SparkTest.rowsAndJobs(out, s"breakdown-$name")
+      assert(jobs == 2, s"$name ran $jobs jobs")
+      val (agg, keys) = Breakdown.aggregate(df, BreakdownSpec.parse(spec))
+      assert(got.nonEmpty && got == agg.orderBy(keys: _*).collect().toSeq, name)
     }
   }
 }

@@ -411,6 +411,15 @@ class BlockModelStoreSuite extends AnyFunSuite {
     assert(second.columns.contains("grade"))
     assert(second.count() == 4L * 4 * 8) // slab 0 = k 0..7
     assert(second.agg(max("grade")).head().getDouble(0) == 3.5)
+    // 6 layers from z 40 in slabs of 2: the window z 52.3..97 is k 1..5,
+    // so slabs 0..2 hold every new cell, and no old file is read
+    val g2 = GridSchema(0, 0, 40, 10, 10, 10, 4, 4, 6)
+    val cells = GridOps.generate(spark, g2)
+    BlockModelStore.write(cells, path, slabCells = 2)
+    def idz(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "k", "z").collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
+    val third = idz(BlockModelStore.readZRange(spark, path, g2, 52.3, 97.0))
+    assert(third.size == 4 * 4 * 6 && third == idz(cells))
   }
 
   test("gradeShellMesh: closed boundary surface of a value band") {

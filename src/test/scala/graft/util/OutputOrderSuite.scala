@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.SparkTest
+import graft.agg.SparkTest.rowsAndJobs
 
-/** [[OutputOrder.sorted]], the one final-order rule: the same rows in the
+/** [[OutputOrder.sorted]], the declared queries' final-order rule: the same rows in the
   * same key order as `orderBy` — across directions, null keys and ties —
   * with one job fewer and no range exchange, or `orderBy`'s own plan when
   * the child already meets the order; loud on a key that is not an output
@@ -20,22 +21,6 @@ class OutputOrderSuite extends AnyFunSuite {
     .select(when(col("id") % 11 === 0, lit(null)).otherwise(col("id") % 23)
       .as("k"), (col("id") % 5).as("g"), col("id"))
     .groupBy("k", "g").agg(count(lit(1)).as("n"), sum("id").as("s"))
-
-  /** Collect `df` under its own job group and count that group's jobs.
-    * Status events arrive asynchronously but in order, so once a later
-    * marker job is visible every job of the group is too. */
-  private def rowsAndJobs(df: DataFrame, group: String): (Seq[Row], Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    val rows = try df.collect().toSeq finally sc.clearJobGroup()
-    val marker = s"$group-marker"
-    sc.setJobGroup(marker, marker)
-    try spark.range(1).collect() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30e9.toLong
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(20)
-    (rows, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString.toLowerCase
