@@ -10,33 +10,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // SCHEMA cache per (dir, table) — metadata, not data (r14): a bare
-  // spark.read.parquet infers the schema by reading footers in a small
-  // job BEFORE the real scan, so every one of the ~209 bench queries paid
-  // a fixed footer-inference job per table load (30-50 ms each, job-count
-  // overhead on top). A catalog/table format (Hive, Iceberg, Delta) holds
-  // exactly this metadata so readers never re-infer — this cache is that,
-  // scoped per (dir, name). Results are unchanged: the cached StructType
-  // IS the inferred one, and the driver generates each sf's tables once
-  // (read-only test data). Queries still compute from the parquet bytes
-  // on every run.
-  // WRITE-ONCE ASSUMPTION (ADVICE r14): the cache is never invalidated,
-  // so a table REGENERATED at the same path with a different schema
-  // within one JVM would silently read through the stale StructType
-  // (wrong columns/nulls, no error). That shape cannot happen on the
-  // bench data (the driver generates each sf once, read-only), and no
-  // code in this repo writes a Tables path; a writer added later must
-  // invalidate its entry, the way the ANN store writers do
-  // (util.StoreSchemas.invalidate).
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      org.apache.spark.sql.types.StructType]()
-
+  /** Read one table through [[graft.util.StoreSchemas]]: its schema is
+    * inferred and its file listed once per path, so a query does not pay
+    * a footer-inference job per table load; every read still scans the
+    * parquet bytes. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent((dir, name),
-      _ => spark.read.parquet(path).schema)
-    val df = spark.read.schema(schema).parquet(path)
+    val df = graft.util.StoreSchemas.read(spark, s"$dir/$name.parquet")
     // events.ts arrives in whatever physical form the generator used:
     //  - TIMESTAMP(NANOS), which Spark only reads as a long
     //    (spark.sql.legacy.parquet.nanosAsLong) → floor to micros;

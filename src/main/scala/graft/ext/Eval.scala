@@ -41,10 +41,7 @@ object Eval {
     // scoring projection — the r12 regression fix); the sweep window is
     // single-partition over that bounded pinned table
     val perScore = graft.util.GridGuard.gateTable(
-      df.groupBy(col(scoreCol).as("threshold"))
-        .agg(sum(col(labelCol)).cast("long").as("npos"),
-          count(lit(1)).as("n")),
-      "prCurve", scoreCol)
+      prCurvePerScore(df, scoreCol, labelCol), "prCurve", scoreCol)
     val totPos = sum(col("npos")).over(Window.partitionBy())
     val w = Window.orderBy(col("threshold").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -61,6 +58,13 @@ object Eval {
           col("tp").cast("double") / col("p_total").cast("double"))
           .as("recall"))
   }
+
+  /** [[prCurve]]'s per-score table: the frame its gate pins, and the
+    * op's one keyed shuffle. */
+  private[ext] def prCurvePerScore(df: DataFrame, scoreCol: String,
+      labelCol: String): DataFrame =
+    df.groupBy(col(scoreCol).as("threshold"))
+      .agg(sum(col(labelCol)).cast("long").as("npos"), count(lit(1)).as("n"))
 
   /** Empirical-CDF (percentile-rank) TRANSFORM with the mid-rank tie
     * convention: `ecdf(x) = (#below + #equal/2) / N` — the rank
@@ -313,18 +317,14 @@ object Eval {
     // fix): pin it, then one k-row collapse yields each signal's exact
     // distinct-value count; the result reads the pin, so the caller owns
     // it, and a failing gate releases it on the way out
-    val per = graft.util.GridGuard.ceiling(df.sparkSession) match {
-      case Some(cap) =>
-        val p = sc.pin(perRaw)
-        p.groupBy(col("_sig")).agg(count(lit(1)).as("_nv")).collect()
-          .foreach { r =>
-            val nv = r.getLong(1)
-            if (nv > cap) graft.util.GridGuard.fail("blendKeyed",
-              sigs(r.getInt(0)), nv.toString, cap)
-          }
-        p
-      case None => perRaw
-    }
+    val cap = graft.util.GridGuard.cap(df.sparkSession)
+    val per = sc.pin(perRaw)
+    per.groupBy(col("_sig")).agg(count(lit(1)).as("_nv")).collect()
+      .foreach { r =>
+        val nv = r.getLong(1)
+        if (nv > cap) graft.util.GridGuard.fail("blendKeyed",
+          sigs(r.getInt(0)), nv.toString, cap)
+      }
     val w = Window.partitionBy(col("_sig")).orderBy(col("_v").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val table = per

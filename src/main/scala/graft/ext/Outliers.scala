@@ -402,12 +402,10 @@ object Outliers {
     val lp = sc.pin(live.select(col(valCol), col(catCol)))
     // PSI, KS and rank-sum all derive from the same per-distinct-value
     // (ca, cb) table: built once, gated once, each member's downstream
-    // arithmetic unchanged. Pinned UNCONDITIONALLY: three lenses read
-    // it, so the pin is the sharing mechanism, not a guard side-effect —
-    // with gateTable a guard-off session would hand each lens the lazy
-    // frame and pay the corpus aggregation three times
-    val per = sc.pin(Eval.pairPerValueRaw(bp, lp, valCol))
-    graft.util.GridGuard.gateCount(per, "driftReport", valCol)
+    // arithmetic unchanged. The gate's pin passes to this scope, so the
+    // three lenses share it and the corpus aggregation runs once
+    val per = graft.util.GridGuard.gateTable(
+      Eval.pairPerValueRaw(bp, lp, valCol), "driftReport", valCol)
     // psiDrift's side totals count ALL rows, and its bucketing puts a
     // NULL value in a bucket too; the per-value table drops NULLs, so
     // each side's NULL count (total minus non-NULL) is pulled here, in
@@ -604,7 +602,7 @@ object Outliers {
   private[ext] def windowedCells(df: DataFrame, tsCol: String,
       windowDur: String, slice: Option[String], lenses: Seq[CellLens],
       fields: Seq[Column]): DataFrame = {
-    val cap = graft.util.GridGuard.streamStateCap(df.sparkSession)
+    val cap = graft.util.GridGuard.cap(df.sparkSession)
     val inputs = lenses.flatMap(_.inputs).distinctBy(_._1)
       .map { case (n, c) => c.as(n) }
     val aggs = lenses.flatMap(_.kernels(cap))

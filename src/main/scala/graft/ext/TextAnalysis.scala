@@ -173,13 +173,18 @@ object TextAnalysis {
     * between engines. The word table is materialized (localCheckpoint) up
     * front — the rounds never re-scan the corpus — and lineage is re-cut
     * every 16 rounds so deep schedules don't accumulate a 2·N-deep plan.
+    * A vocabulary of at most `localThreshold` distinct words (2²⁰ by
+    * default; 0 forces the distributed rounds) runs the same merge loop on
+    * the driver instead, with identical rules.
     * Output: (rank, lhs, rhs, n) — the merge table, rank ascending; stops
     * early (shorter output) if the vocabulary fully merges. */
   def bpeTrain(df: org.apache.spark.sql.DataFrame, textCol: String,
-      numMerges: Int): org.apache.spark.sql.DataFrame = owning { sc =>
+      numMerges: Int, localThreshold: Long = 1L << 20)
+      : org.apache.spark.sql.DataFrame = owning { sc =>
     val spark = df.sparkSession
     import spark.implicits._
-    bpeMerge(sc, df, textCol, numMerges)._1.toDF("rank", "lhs", "rhs", "n")
+    bpeMerge(sc, df, textCol, numMerges, localThreshold)._1
+      .toDF("rank", "lhs", "rhs", "n")
   }
 
   /** Corpus subword frequency table after [[bpeTrain]]'s merge schedule —
@@ -187,12 +192,13 @@ object TextAnalysis {
     * artifact a real pipeline ships next to the merge rules). Same round
     * structure as the trainer; the final vocabulary's symbols explode
     * weighted by word frequency. Output: (subword, n).
-    * On the distributed path (vocab > `graft.bpe.driver.max`) the
-    * returned frame reads the loop's last lineage checkpoint, which the
-    * caller owns; the driver fast-path returns a local frame. */
+    * On the distributed path (vocab > `localThreshold` distinct words)
+    * the returned frame reads the loop's last lineage checkpoint, which
+    * the caller owns; the driver fast-path returns a local frame. */
   def bpeSubwords(df: org.apache.spark.sql.DataFrame, textCol: String,
-      numMerges: Int): org.apache.spark.sql.DataFrame = owning { sc =>
-    val (_, vocab) = bpeMerge(sc, df, textCol, numMerges)
+      numMerges: Int, localThreshold: Long = 1L << 20)
+      : org.apache.spark.sql.DataFrame = owning { sc =>
+    val (_, vocab) = bpeMerge(sc, df, textCol, numMerges, localThreshold)
     vocab.select(col("cnt"), explode(bpeSyms).as("subword"))
       .groupBy(col("subword")).agg(sum(col("cnt")).as("n"))
   }
@@ -211,13 +217,16 @@ object TextAnalysis {
     * and the corpus-scale pass pre-aggregates per-document word counts
     * map-side before joining the small word→count map (AQE broadcasts
     * it). No corpus-scale shuffle beyond the per-doc word count.
+    * `localThreshold` is [[bpeTrain]]'s driver fast-path bound.
     *
     * Output: (idCol, n_words, n_tokens) — n_words = word occurrences,
     * n_tokens = BPE subword count after `numMerges` merges; zero-word
     * documents emit no rows. */
   def bpeEncode(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, numMerges: Int): org.apache.spark.sql.DataFrame = {
-    val rules = owning(sc => bpeMerge(sc, df, textCol, numMerges)._1)
+      textCol: String, numMerges: Int, localThreshold: Long = 1L << 20)
+      : org.apache.spark.sql.DataFrame = {
+    val rules = owning(sc =>
+      bpeMerge(sc, df, textCol, numMerges, localThreshold)._1)
     val chars = call_function("regexp_extract_all",
       col("word"), lit("."), lit(0))
     val enc = rules.foldLeft(
@@ -239,23 +248,14 @@ object TextAnalysis {
   private def bpeSyms: Column = call_function("regexp_extract_all",
     col("seq"), lit("\\[([^\\]]*)\\]"), lit(1))
 
-  /** Distinct-word ceiling for [[bpeMerge]]'s driver fast-path — ~2²⁰
-    * rows of (cnt, bracketed-seq) ≈ tens of MB collected, the
-    * [[Dedup]] union-find threshold posture. Overridable per session via
-    * `graft.bpe.driver.max` (0 forces the distributed rounds — how the
-    * suite pins path equivalence). */
-  private def bpeDriverVocabMax(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.bpe.driver.max").map(_.toLong)
-      .getOrElse(1L << 20)
-
   /** Shared BPE merge loop: (rules, final vocabulary (cnt, seq)). Its
     * lineage cuts are pins of the caller's scope `sc`: on the DISTRIBUTED
-    * path (vocab > `graft.bpe.driver.max`) the vocabulary reads the last
-    * one, on the driver fast-path it is a driver-local frame that reads
-    * none. */
+    * path (vocab > `localThreshold` distinct words) the vocabulary reads
+    * the last one, on the driver fast-path it is a driver-local frame
+    * that reads none. */
   private def bpeMerge(sc: graft.util.Checkpoints.Scope,
       df: org.apache.spark.sql.DataFrame, textCol: String,
-      numMerges: Int): (Seq[(Long, String, String, Long)],
+      numMerges: Int, localThreshold: Long): (Seq[(Long, String, String, Long)],
       org.apache.spark.sql.DataFrame) = {
     val chars = call_function("regexp_extract_all",
       col("word"), lit("."), lit(0))
@@ -284,8 +284,9 @@ object TextAnalysis {
     // would re-scan the corpus through the groupBy lineage — N corpus
     // passes instead of one, which at 100 TB is the whole cost
     cut()
-    // Small vocabularies (≤ BpeDriverVocabMax distinct words — the common
-    // case even at 100 TB: the table is bounded by language, and natural
+    // Small vocabularies (≤ localThreshold distinct words, 2²⁰ by default
+    // ≈ tens of MB of (cnt, bracketed-seq) collected — the common case
+    // even at 100 TB: the table is bounded by language, and natural
     // corpora sit well under 2²⁰ distinct [a-z0-9]+ tokens) run the merge
     // loop ON THE DRIVER: pair counting over the collected word table is
     // microseconds per round, where the distributed loop pays a full
@@ -297,7 +298,7 @@ object TextAnalysis {
     // the SAME left-to-right non-overlapping literal replace
     // (java.lang.String.replace ≡ Spark's `replace`). Past the threshold
     // the distributed rounds below own it.
-    if (vocab.count() <= bpeDriverVocabMax(df.sparkSession)) {
+    if (vocab.count() <= localThreshold) {
       var seqs = vocab.collect().map(r => (r.getLong(0), r.getString(1)))
       sc.release(vocab)
       val rules = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()

@@ -200,13 +200,8 @@ object FlagRegions {
       flagVar: String = "region"): DataFrame = {
     if (meshes.isEmpty)
       return StoreSchemas.read(spark, path).withColumn(flagVar, lit(""))
-    // slab size comes from the store's own metadata — a re-defaulted
-    // parameter would prune the wrong window and flag in-solid cells ''
-    val slabCells = graft.sources.BlockModelStore.slabCells(path, spark)
-    val zMin = meshes.map(_.bounds(4)).min
-    val zMax = meshes.map(_.bounds(5)).max
-    val kLo = math.floor((zMin - g.oz) / g.sz).toInt / slabCells
-    val kHi = math.floor((zMax - g.oz) / g.sz).toInt / slabCells
+    val (kLo, kHi) = graft.sources.BlockModelStore.slabWindow(spark, path,
+      g, meshes.map(_.bounds(4)).min, meshes.map(_.bounds(5)).max)
     val full = StoreSchemas.read(spark, path)
     val hot = apply(spark,
       full.filter(col("kslab") >= kLo && col("kslab") <= kHi),

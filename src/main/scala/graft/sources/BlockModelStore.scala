@@ -53,13 +53,21 @@ object BlockModelStore {
     try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
   }
 
+  /** The slabs `(kLo, kHi)` whose cells intersect [zMin, zMax], from the
+    * store's own slab size — a re-defaulted size would prune the wrong
+    * window. */
+  def slabWindow(spark: SparkSession, path: String, g: GridSchema,
+      zMin: Double, zMax: Double): (Int, Int) = {
+    val sc = slabCells(path, spark)
+    (math.floor((zMin - g.oz) / g.sz).toInt / sc,
+      math.floor((zMax - g.oz) / g.sz).toInt / sc)
+  }
+
   /** Read only the z-slabs intersecting [zMin, zMax] — a partition-pruned
     * scan (`PartitionFilters` in the plan, zero I/O on other slabs). */
   def readZRange(spark: SparkSession, path: String, g: GridSchema,
       zMin: Double, zMax: Double): DataFrame = {
-    val sc = slabCells(path, spark)
-    val kLo = math.floor((zMin - g.oz) / g.sz).toInt / sc
-    val kHi = math.floor((zMax - g.oz) / g.sz).toInt / sc
+    val (kLo, kHi) = slabWindow(spark, path, g, zMin, zMax)
     StoreSchemas.read(spark, path)
       .filter(col("kslab") >= kLo && col("kslab") <= kHi)
   }

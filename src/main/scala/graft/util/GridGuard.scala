@@ -18,39 +18,28 @@ import org.apache.spark.sql.functions.{approx_count_distinct, col, count_distinc
   * becomes a one-task sort of the corpus — a real scale-killer that, before
   * this guard, was prevented only by a doc comment.
   *
-  * The guard is ON by default (the [[graft.ext.Dedup]] hot-bucket-cap
-  * posture: scale protections default-on, opt-out by conf): a cheap
-  * `approx_count_distinct` pre-check (map-side HLL, one column-pruned pass;
-  * ~5% relative error, fine for a threshold comparison) runs against
-  * `graft.grid.maxDistinct` (default 10⁶ — the grain of a 6 dp-rounded
-  * [0, 1] score) and FAILS LOUDLY with a "round your scores" remedy before
-  * any corpus-sized grid is built. Cost note: the pre-check re-evaluates
-  * the guarded column's projection once — operators whose input is already
-  * pinned run it on the materialized pin, others pay one narrow scan;
-  * sessions that have validated their scorer's grain can switch the guard
-  * off (`graft.grid.guard=false`) or raise the ceiling. */
+  * The guard always runs: a cheap `approx_count_distinct` pre-check
+  * (map-side HLL, one column-pruned pass; ~5% relative error, fine for a
+  * threshold comparison), or an exact count of a per-value table the
+  * operator builds anyway, runs against `graft.grid.maxDistinct`
+  * (default 10⁶ — the grain of a 6 dp-rounded [0, 1] score) and FAILS
+  * LOUDLY with a "round your scores" remedy before any corpus-sized grid
+  * is built. Cost note: the pre-check re-evaluates the guarded column's
+  * projection once — operators whose input is already pinned run it on
+  * the materialized pin, others pay one narrow scan; a session whose
+  * scorer has a finer validated grain raises the ceiling. */
 object GridGuard {
   /** Session conf: distinct-value ceiling per guarded column (long). */
   val MaxDistinctConf = "graft.grid.maxDistinct"
 
-  /** Session conf: set "false" to skip the pre-check entirely. */
-  val EnabledConf = "graft.grid.guard"
-
   val DefaultMaxDistinct = 1000000L
 
-  /** The ceiling as a HARD CAP for windowed-drift aggregate state
-    * ([[graft.agg.KsDriftAgg]] and siblings): unbounded when the guard is
-    * conf'd off, else the conf'd (or default) distinct-value ceiling. */
-  def streamStateCap(spark: org.apache.spark.sql.SparkSession): Long =
-    ceiling(spark).getOrElse(Long.MaxValue)
-
-  /** The active ceiling, or None when the guard is conf'd off. */
-  def ceiling(spark: org.apache.spark.sql.SparkSession): Option[Long] = {
-    val conf = spark.conf
-    if (!conf.getOption(EnabledConf).forall(_.toBoolean)) None
-    else Some(conf.getOption(MaxDistinctConf).map(_.toLong)
-      .getOrElse(DefaultMaxDistinct))
-  }
+  /** The distinct-value ceiling: the conf'd value, else the default. It
+    * is also the HARD CAP on windowed-drift aggregate state
+    * ([[graft.agg.KsDriftAgg]] and siblings). */
+  def cap(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.getOption(MaxDistinctConf).map(_.toLong)
+      .getOrElse(DefaultMaxDistinct)
 
   /** The "round your scores" failure, shared by every guard form so the
     * remedy reads the same whether the estimate was approximate (HLL
@@ -61,9 +50,8 @@ object GridGuard {
         s"$MaxDistinctConf=$cap. The per-value grid would approach " +
         "corpus size and its single-partition rank window would become " +
         "a one-task sort of the corpus. Feed scores ROUNDED to a " +
-        "bounded granularity (e.g. round(score, 6)), raise " +
-        s"$MaxDistinctConf, or set $EnabledConf=false if the grain is " +
-        "already validated.")
+        "bounded granularity (e.g. round(score, 6)), or raise " +
+        s"$MaxDistinctConf if a finer grain is already validated.")
 
   /** Pre-check `cols`' approximate distinct counts on `df`; throws
     * `IllegalArgumentException` naming the operator, column, estimate and
@@ -74,15 +62,15 @@ object GridGuard {
     * for ops whose guarded projection is already pinned (a narrow
     * re-scan) or never materializes a per-value table at all
     * (baseline collects, the streaming monitors' setup). */
-  def check(df: DataFrame, op: String, cols: String*): Unit =
-    ceiling(df.sparkSession).foreach { cap =>
-      val aggs = cols.map(c => approx_count_distinct(col(c)).as(s"_g_$c"))
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      cols.zipWithIndex.foreach { case (c, i) =>
-        val est = row.getLong(i)
-        if (est > cap) fail(op, c, s"~$est", cap)
-      }
+  def check(df: DataFrame, op: String, cols: String*): Unit = {
+    val max = cap(df.sparkSession)
+    val aggs = cols.map(c => approx_count_distinct(col(c)).as(s"_g_$c"))
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    cols.zipWithIndex.foreach { case (c, i) =>
+      val est = row.getLong(i)
+      if (est > max) fail(op, c, s"~$est", max)
     }
+  }
 
   /** EXACT guard over an ALREADY-BUILT per-distinct-value table — the
     * r12-regression fix (VERDICT r12 #1): instead of a separate
@@ -94,34 +82,20 @@ object GridGuard {
     * is safe at ANY cardinality — only the downstream one-task rank
     * window is not), and exact where the HLL check was ~5% approximate.
     *
-    * Returns the PINNED table when the guard is on, or the original lazy
-    * frame when the guard is conf'd off. The pin is taken in its own
+    * Returns the PINNED table. The pin is taken in its own
     * [[Checkpoints.owning]] scope: a table over the ceiling is released
     * as the failure propagates, and otherwise the pin passes to the
     * caller — to the enclosing scope when there is one (a bounded member
-    * result releases it there), or embedded in a table-sized result,
-    * reclaimable by [[Checkpoints.release]] on that result. */
+    * result releases it there, and several lenses of one report can
+    * share it), or embedded in a table-sized result, reclaimable by
+    * [[Checkpoints.release]] on that result. */
   def gateTable(per: DataFrame, op: String, colName: String): DataFrame =
-    ceiling(per.sparkSession) match {
-      case Some(cap) => Checkpoints.owning { sc =>
-        val p = sc.pin(per)
-        val n = p.count()
-        if (n > cap) fail(op, colName, n.toString, cap)
-        p
-      }
-      case None => per
-    }
-
-  /** [[gateTable]]'s form for an ALREADY-PINNED per-distinct-value table:
-    * exact row-count gate, no re-pin. For callers that pin the table
-    * UNCONDITIONALLY because several lenses share it (e.g.
-    * [[graft.ext.Outliers.driftReport]]) — with [[gateTable]] those
-    * callers would lose the pin when the guard is conf'd off and each
-    * lens would silently recompute the corpus aggregation. */
-  def gateCount(pinned: DataFrame, op: String, colName: String): Unit =
-    ceiling(pinned.sparkSession).foreach { cap =>
-      val n = pinned.count()
-      if (n > cap) fail(op, colName, n.toString, cap)
+    Checkpoints.owning { sc =>
+      val max = cap(per.sparkSession)
+      val p = sc.pin(per)
+      val n = p.count()
+      if (n > max) fail(op, colName, n.toString, max)
+      p
     }
 
   /** [[gateTable]]'s form for the by-slice ops whose first aggregation
@@ -130,14 +104,14 @@ object GridGuard {
     * the user-facing column name (for the error) to the internal column
     * in the pinned table. */
   def gateAxes(pinned: DataFrame, op: String,
-      axes: (String, String)*): Unit =
-    ceiling(pinned.sparkSession).foreach { cap =>
-      val aggs = axes.map { case (_, c) =>
-        count_distinct(col(c)).as(s"_g_$c") }
-      val row = pinned.agg(aggs.head, aggs.tail: _*).head()
-      axes.zipWithIndex.foreach { case ((name, _), i) =>
-        val n = row.getLong(i)
-        if (n > cap) fail(op, name, n.toString, cap)
-      }
+      axes: (String, String)*): Unit = {
+    val max = cap(pinned.sparkSession)
+    val aggs = axes.map { case (_, c) =>
+      count_distinct(col(c)).as(s"_g_$c") }
+    val row = pinned.agg(aggs.head, aggs.tail: _*).head()
+    axes.zipWithIndex.foreach { case ((name, _), i) =>
+      val n = row.getLong(i)
+      if (n > max) fail(op, name, n.toString, max)
     }
+  }
 }

@@ -5,16 +5,17 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 
-/** Schema and listing cache for the store directories — the IVF/PQ stores
-  * (r15) and the block-model store ([[graft.sources.BlockModelStore]]) —
-  * the [[graft.Tables]] discipline applied to the stores: a bare
-  * `spark.read.parquet(store)` infers the schema with a footer-reading
-  * job before the real scan, and every read lists the store directory
-  * (globbing, partition discovery) while the frame is built, so every
-  * serve call and every reserves request paid a fixed inference job and a
-  * listing for a layout that never changes between writes — the store is
-  * written by our own writers, and an append reuses the write schema by
-  * construction. So a path keeps its schema and the relation it listed;
+/** Schema and listing cache for the parquet paths the engine reads — the
+  * test tables ([[graft.Tables]]), the IVF/PQ stores (r15) and the
+  * block-model store ([[graft.sources.BlockModelStore]]): a bare
+  * `spark.read.parquet(path)` infers the schema with a footer-reading
+  * job before the real scan, and every read lists the path (globbing,
+  * partition discovery) while the frame is built, so every table load,
+  * serve call and reserves request paid a fixed inference job and a
+  * listing for a layout that never changes between writes — the stores
+  * are written by our own writers, an append reuses the write schema by
+  * construction, and no code writes a table path. So a path keeps its
+  * schema and the relation it listed;
   * each [[read]] is a frame over that relation with fresh attribute ids.
   * Metadata only: every read still scans the parquet bytes, and no rows
   * are held.

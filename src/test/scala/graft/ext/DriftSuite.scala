@@ -12,8 +12,8 @@ import graft.util.{Checkpoints, GridGuard}
   * PSI, embedding, vocabulary), their by-slice forms and the one-call
   * reports — hand-computed cases, by-slice ≡ member and report ≡ member
   * pins, and pin ownership (every member releases what it pins; the
-  * caller releases the result, and driftReport pins with the grid guard
-  * off) — plus the windowed-by-slice forms and the vocabulary's windowed
+  * caller releases the result, and the old guard-off key switches
+  * nothing) — plus the windowed-by-slice forms and the vocabulary's windowed
   * lens, each cell ≡ its member or a local replay. Random-sample property
   * pins live in PropertySuite, the other windowed forms in
   * EventStreamSuite. */
@@ -142,22 +142,16 @@ class DriftSuite extends AnyFunSuite {
       "driftReport" -> (() => Outliers.driftReport(base, live, "v", "c")),
       "driftReportBy" -> (() => Outliers.driftReportBy(df, "g", "v", "c")))
     val sc = spark.sparkContext
-    def runAll(): Map[String, Seq[Seq[Any]]] = members.map { case (name, f) =>
+    members.foreach { case (name, f) =>
       val before = sc.getPersistentRDDs.keySet.toSet
       val out = f()
-      val rows = out.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+      out.collect()
       assert(sc.getPersistentRDDs.keySet.toSet != before,
         s"$name must hand back a pinned result")
       Checkpoints.release(out)
       val leaked = sc.getPersistentRDDs.keySet.toSet -- before
       assert(leaked.isEmpty, s"$name leaked persistent RDDs $leaked")
-      name -> rows
-    }.toMap
-    val on = runAll()
-    spark.conf.set(GridGuard.EnabledConf, "false")
-    val off = try runAll() finally spark.conf.unset(GridGuard.EnabledConf)
-    for ((name, _) <- members)
-      assert(off(name) == on(name), s"$name rows differ with the guard off")
+    }
   }
 
   test("ksTest: hand-computed D on a small pair; zero on identical samples") {
@@ -570,7 +564,7 @@ class DriftSuite extends AnyFunSuite {
       "the alarm must localize to the slice that switched vocabulary")
   }
 
-  test("driftReport with the grid guard conf'd OFF still pins the shared table and matches guard-on rows (ADVICE r13)") {
+  test("driftReport: a session that still sets graft.grid.guard=false gets the guard") {
     val docs = (0 until 200).map { i =>
       val src = if (i % 4 == 0) "live" else "base"
       (i.toLong, src, (i % 10) / 10.0 + (if (src == "live") 0.3 else 0.0),
@@ -578,14 +572,23 @@ class DriftSuite extends AnyFunSuite {
     }.toDF("id", "src", "q", "lang")
     val base = docs.filter(col("src") === "base")
     val live = docs.filter(col("src") === "live")
-    val on = Outliers.driftReport(base, live, "q", "lang")
-      .collect().map(_.toSeq)
-    val key = graft.util.GridGuard.EnabledConf
-    spark.conf.set(key, "false")
+    val sc = spark.sparkContext
+    // the key no longer switches anything: more than ten distinct q
+    // values over a ceiling of 5 fail the report's gate and release its
+    // pins
+    spark.conf.set("graft.grid.guard", "false")
+    spark.conf.set(GridGuard.MaxDistinctConf, "5")
     try {
-      val off = Outliers.driftReport(base, live, "q", "lang")
-        .collect().map(_.toSeq)
-      assert(off.toSeq == on.toSeq)
-    } finally spark.conf.set(key, "true")
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val e = intercept[IllegalArgumentException](
+        Outliers.driftReport(base, live, "q", "lang"))
+      assert(e.getMessage.contains("driftReport") &&
+        e.getMessage.contains("ROUNDED"), e.getMessage)
+      assert(sc.getPersistentRDDs.keySet.toSet == before,
+        "a failing gate must release the report's pins")
+    } finally {
+      spark.conf.unset("graft.grid.guard")
+      spark.conf.unset(GridGuard.MaxDistinctConf)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -390,28 +391,26 @@ class TextAnalysisSuite extends AnyFunSuite {
   // ---- BPE driver fast-path == distributed rounds ------------------------
 
   test("bpeTrain/bpeSubwords: driver fast-path equals the distributed merge rounds") {
-    // The driver loop (vocab <= graft.bpe.driver.max) must replay the
+    // The driver loop (vocab <= localThreshold) must replay the
     // distributed rounds exactly: same tie-break (count desc, lhs/rhs
     // ASCII), same left-to-right non-overlapping literal replace. The
     // corpus has a deliberate count TIE (ab vs bc) and a self-overlap
     // word (ababab) to exercise both.
     val docs = Seq(
       "abab abc", "ababab cab", "abc bcbc", "cab abab").toDF("text")
-    def run(): (Seq[(Long, String, String, Long)], Set[(String, Long)]) = (
-      TextAnalysis.bpeTrain(docs, "text", 5)
+    def run(localThreshold: Long)
+        : (Seq[(Long, String, String, Long)], Set[(String, Long)]) = (
+      TextAnalysis.bpeTrain(docs, "text", 5, localThreshold)
         .collect().map(r => (r.getLong(0), r.getString(1),
           r.getString(2), r.getLong(3))).toSeq,
-      TextAnalysis.bpeSubwords(docs, "text", 5)
+      TextAnalysis.bpeSubwords(docs, "text", 5, localThreshold)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet)
-    val viaDriver = run()
-    spark.conf.set("graft.bpe.driver.max", "0")
-    try {
-      val viaRounds = run()
-      assert(viaDriver._1 == viaRounds._1,
-        "merge schedules must be identical across paths")
-      assert(viaDriver._2 == viaRounds._2,
-        "final subword vocabularies must be identical across paths")
-    } finally spark.conf.unset("graft.bpe.driver.max")
+    val viaDriver = run(1L << 20)
+    val viaRounds = run(0)
+    assert(viaDriver._1 == viaRounds._1,
+      "merge schedules must be identical across paths")
+    assert(viaDriver._2 == viaRounds._2,
+      "final subword vocabularies must be identical across paths")
     assert(viaDriver._1.nonEmpty)
   }
 
@@ -449,6 +448,74 @@ class TextAnalysisSuite extends AnyFunSuite {
     assert(rows(TextAnalysis.nbQualityScoreTokens(posTok, "doc_id")) ==
       rows(TextAnalysis.nbQualityScore(docs, "doc_id", "text",
         col("lang") === "en")))
+  }
+
+  /** The pre-r15 window-argmax form, kept here as the reference. */
+  private def windowArgmax(scored: org.apache.spark.sql.DataFrame,
+      idCol: String): org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy(col(idCol))
+      .orderBy(col("score").desc, col("cls").asc)
+    scored.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col(idCol), col("n_tokens"), col("cls").as("pred"),
+        col("score"))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.collect().map(_.toString).toSet
+
+  test("nbArgmax == window argmax on random score grids with forced ties") {
+    val rnd = new scala.util.Random(151)
+    // scores drawn from a TINY rounded set so most docs carry several
+    // exact ties; classes include ordering-sensitive names (prefix pairs,
+    // digits vs letters) so the cls-asc tie-break is actually exercised
+    val classes = Seq("a", "aa", "b", "de", "en", "z0", "z1")
+    for (trial <- 0 until 3) {
+      val grid = for {
+        doc <- 0 until 200
+        cls <- classes
+      } yield (doc.toLong, cls,
+        math.round(rnd.nextInt(5) * 0.25 * 1e6 - 5e5) / 1e6,
+        (doc % 7).toLong)
+      val scored = grid.toDF("doc_id", "cls", "score", "n_tokens")
+      val got = rows(TextAnalysis.nbArgmax(scored, "doc_id")
+        .select(col("doc_id"), col("n_tokens"), col("pred"), col("score")))
+      val want = rows(windowArgmax(scored, "doc_id"))
+      assert(got == want, s"trial $trial")
+    }
+  }
+
+  test("nbArgmax tie-break matches the window at the ±0.0 boundary") {
+    // -0.0 and 0.0 must compare EQUAL (Spark's SQLOrderingUtil double
+    // ordering) on both paths, so the tie falls through to cls asc
+    val scored = Seq(
+      (1L, "b", 0.0, 3L), (1L, "a", -0.0, 3L),
+      (2L, "b", -0.0, 4L), (2L, "a", 0.0, 4L),
+      (3L, "z", -1.5, 2L), (3L, "y", -1.5, 2L)
+    ).toDF("doc_id", "cls", "score", "n_tokens")
+    val got = TextAnalysis.nbArgmax(scored, "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(got == Map(1L -> "a", 2L -> "a", 3L -> "y"))
+    // the selected score survives the -x round-trip bit-for-bit
+    val want = rows(windowArgmax(scored, "doc_id"))
+    assert(rows(TextAnalysis.nbArgmax(scored, "doc_id")
+      .select(col("doc_id"), col("n_tokens"), col("pred"),
+        col("score"))) == want)
+  }
+
+  test("nbMulticlassTokens end-to-end: duplicated class corpora tie to the first class") {
+    // classes "mm" and "aa" get IDENTICAL token streams, so every doc's
+    // two scores are exactly equal and pred must be the
+    // lexicographically-first class — the real-path tie case
+    val docs = (0 until 40).flatMap { i =>
+      val toks = Seq(s"tok${i % 5}", "common", s"w${i % 3}")
+      Seq((i.toLong * 2, "mm", toks), (i.toLong * 2 + 1, "aa", toks))
+    }.toDF("doc_id", "cls", "toks")
+    val out = TextAnalysis.nbMulticlassTokens(docs, "doc_id").collect()
+    assert(out.length == 80)
+    // both label classes have the same priors and token counts, so each
+    // doc's "aa" and "mm" scores are identical and "aa" must win
+    assert(out.forall(_.getString(2) == "aa"))
   }
 }
 
@@ -1455,6 +1522,105 @@ class IvfSuite extends AnyFunSuite {
     // the knee interpolation, clamped to [2, k]
     assert(Ivf.nprobeFor(0.0, 8) == 2 && Ivf.nprobeFor(1.0, 8) == 8)
     assert(Ivf.nprobeFor(0.5, 8) == 4 && Ivf.nprobeFor(0.26, 8) == 3)
+  }
+
+  test("topKFromStoreAuto serves with the store's persisted recommendation") {
+    val rnd = new java.util.Random(11)
+    val centers = Array.fill(4, 8)(rnd.nextGaussian())
+    val train = (0 until 160).map(i => (i.toLong,
+        centers(i % 4).map(x => (x + 0.05 * rnd.nextGaussian()).toFloat)))
+      .toDF("vec_id", "embedding")
+    val cents = Ivf.train(train, k = 4, iters = 3)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_ivf_auto").toString
+    Ivf.writeStore(train, path, cents)
+    val m = Ivf.readStoreMeta(spark, path).get
+    val queries = train.filter(col("vec_id") < 3)
+    val auto = Ivf.topKFromStoreAuto(spark, path, queries, 5, cents)
+      .select("query_id", "corpus_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val manual = Ivf.topKFromStore(spark, path, queries, 5, cents,
+        m.recommendedNprobe)
+      .select("query_id", "corpus_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(auto == manual,
+      "auto must serve exactly the persisted recommendation's result")
+    // a pre-sidecar store fails loudly with the remedy
+    val legacy = java.nio.file.Files
+      .createTempDirectory("graft_ivf_legacy").toString
+    Ivf.assign(train, cents).write
+      .mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy("ivf_bkt").parquet(legacy)
+    val e = intercept[RuntimeException] {
+      Ivf.topKFromStoreAuto(spark, legacy, queries, 5, cents)
+    }
+    assert(e.getMessage.contains("topKFromStore"))
+  }
+
+  test("nprobeFor clamps into [min(2,k), k] — k=1 returns 1, not 2 (ADVICE r13)") {
+    assert(Ivf.nprobeFor(1.0, 1) == 1)
+    assert(Ivf.nprobeFor(0.0, 8) == 2)
+    assert(Ivf.nprobeFor(1.0, 8) == 8)
+    assert(Ivf.nprobeFor(0.5, 8) == 4)
+  }
+
+  test("unexplainedVar fails loudly on an empty corpus (ADVICE r13)") {
+    val empty = Seq.empty[(Long, Array[Float])]
+      .toDF("vec_id", "embedding")
+    val e = intercept[RuntimeException] {
+      Ivf.unexplainedVar(empty, Array(Array(1.0, 0.0)))
+    }
+    assert(e.getMessage.contains("empty corpus"))
+  }
+
+  test("IVF store metadata: writeStore persists the serving recommendation, append re-derives it incrementally") {
+    val rnd = new java.util.Random(7)
+    // tightly clustered training corpus: 4 centers, sigma 0.05 — the
+    // coarse quantizer explains almost everything (uv ~ 0)
+    val centers = Array.fill(4, 8)(rnd.nextGaussian())
+    def around(c: Array[Double], sigma: Double) =
+      c.map(x => (x + sigma * rnd.nextGaussian()).toFloat)
+    val train = (0 until 200).map(i =>
+        (i.toLong, around(centers(i % 4), 0.05)))
+      .toDF("vec_id", "embedding")
+    val cents = Ivf.train(train, k = 4, iters = 3)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_ivf_meta").toString
+    Ivf.writeStore(train, path, cents)
+    val m0 = Ivf.readStoreMeta(spark, path).get
+    assert(m0.nRows == 200L && m0.k == 4)
+    assert(m0.unexplainedVar < 0.2, "clustered corpus must measure ~0")
+    assert(m0.recommendedNprobe == 2, "clustered corpus serves nprobe=2")
+    assert(m0.recommendedNprobe ==
+      Ivf.nprobeFor(m0.unexplainedVar, m0.k))
+    // the sidecar must be invisible to the data scan
+    val dataCols = spark.read.parquet(path).columns.toSet
+    assert(!dataCols.contains("recommended_nprobe"))
+    // append a batch the trained centroids DON'T explain (the mirrored
+    // clusters — far from every center, mean ≈ −trainMean): the
+    // recommendation must re-derive UP and the staleness cosine flip
+    val batch = (200 until 400).map(i =>
+        (i.toLong, around(centers(i % 4).map(-_), 0.05)))
+      .toDF("vec_id", "embedding")
+    Ivf.appendToStore(batch, path, cents)
+    val m1 = Ivf.readStoreMeta(spark, path).get
+    assert(m1.nRows == 400L)
+    assert(m1.unexplainedVar > m0.unexplainedVar,
+      "a poorly-explained batch must push unexplained_var up")
+    assert(m1.recommendedNprobe > m0.recommendedNprobe,
+      "the serving recommendation must re-derive on append")
+    // incremental exactness: the combined ratio is the sum of parts
+    assert(math.abs(m1.unexplainedVar -
+      m1.sumResid2 / m1.sumNorm2) < 1e-12)
+    assert(m1.sumNorm2 > m0.sumNorm2 && m1.sumResid2 > m0.sumResid2)
+    // staleness alarm: the training mean is fixed at build (no batch
+    // cosine yet); the far-isotropic append records a collapsed cosine
+    assert(m0.lastBatchCos.isEmpty)
+    assert(m0.trainMean.length == 8)
+    assert(m1.trainMean.toSeq == m0.trainMean.toSeq,
+      "append must not move the training mean")
+    assert(m1.lastBatchCos.isDefined && m1.lastBatchCos.get < -0.8,
+      "the mirrored batch must flip the staleness cosine")
   }
 }
 

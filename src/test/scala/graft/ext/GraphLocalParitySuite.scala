@@ -95,4 +95,49 @@ class GraphLocalParitySuite extends AnyFunSuite {
     assert(fast == run(0))
     assert(fast(99L).contains(0), "an isolated seed is at hop 0 of itself")
   }
+
+  test("graph fast-path admission: NULL endpoints and oversized/NULL seeds fall through to the distributed loop") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val sch = StructType(Seq(StructField("src", LongType, nullable = true),
+      StructField("dst", LongType, nullable = true)))
+    // a NULL endpoint: the distributed joins drop it; the local path
+    // must select AWAY rather than NPE (ADVICE r14)
+    val eNull = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, 2L), Row(2L, 3L),
+        Row(null, 5L), Row(3L, 1L))), sch)
+    // NOTE the distributed loop emits a (NULL, pr) row for the NULL
+    // endpoint (it survives the nodes union-distinct) — compare with
+    // Option keys; the guarded path must take the SAME (distributed)
+    // path and so agree exactly
+    def prMap(df: org.apache.spark.sql.DataFrame): Map[Option[Long], Double] =
+      df.collect().map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
+        r.getDouble(1))).toMap
+    val viaGuard = prMap(Graph.pageRank(eNull, "src", "dst", 3))
+    val distributed = prMap(Graph.pageRank(eNull, "src", "dst", 3,
+      localThreshold = 0))
+    assert(viaGuard.keySet == distributed.keySet)
+    viaGuard.foreach { case (k, v) =>
+      assert(math.abs(v - distributed(k)) < 1e-12) }
+    // seed set larger than the threshold: bfsHops must stay distributed
+    // (bounded seed pull) and still return the right hops
+    val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val manySeeds = (1L to 100L).toDF("node")
+    val hops = Graph.bfsHops(e, manySeeds, "src", "dst", "node", 2,
+        localThreshold = 50)
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) -1 else r.getInt(1))).toMap
+    assert(hops(1L) == 0 && hops(2L) == 0 && hops(3L) == 0)
+    // NULL seed node: labelPropagation falls through (the distributed
+    // join drops the NULL row) instead of NPE-ing on getLong
+    val seedSch = StructType(Seq(StructField("node", LongType, true),
+      StructField("lab", StringType, true)))
+    val nullSeed = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, "a"), Row(null, "b"))),
+      seedSch)
+    val lp = Graph.labelPropagation(e, nullSeed, "src", "dst", "node",
+      "lab", 2).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(lp(1L) == "a" && lp(2L) == "a" && lp(3L) == "a")
+  }
 }

@@ -870,17 +870,13 @@ class Round8OpsSuite extends AnyFunSuite {
   test("prCurve's only keyed shuffle is the per-score aggregate") {
     val df = (1L to 100L).map(i => (i * 0.01, (i % 2).toInt))
       .toDF("score", "label")
-    // guard OFF so the audit sees the op's own lazy plan; with the
-    // default-on exact gate the per-score collapse runs inside the gate's
-    // pin job and the result plan just reads the materialized table
-    spark.conf.set(graft.util.GridGuard.EnabledConf, "false")
-    try {
-      val plan = Eval.prCurve(df, "score", "label")
-        .queryExecution.executedPlan.toString
-      val keyed = "Exchange hashpartitioning".r.findAllIn(plan).size
-      assert(keyed == 1,
-        s"the corpus must collapse per-score before the sweep, got $keyed keyed exchanges:\n$plan")
-    } finally spark.conf.unset(graft.util.GridGuard.EnabledConf)
+    // the frame handed to the gate: the corpus collapses per score in
+    // one keyed shuffle, and the gate pins that table
+    val plan = Eval.prCurvePerScore(df, "score", "label")
+      .queryExecution.executedPlan.toString
+    val keyed = "Exchange hashpartitioning".r.findAllIn(plan).size
+    assert(keyed == 1,
+      s"the corpus must collapse per-score before the sweep, got $keyed keyed exchanges:\n$plan")
     val gated = Eval.prCurve(df, "score", "label")
       .queryExecution.executedPlan.toString
     assert(!"Exchange hashpartitioning".r.findAllIn(gated).hasNext,

@@ -127,12 +127,9 @@ class CheckpointsSuite extends AnyFunSuite {
         4, localThreshold = 0)),
       "connectedComponents" -> (() => Dedup.connectedComponents(
         edges.toDF("id_a", "id_b"), localThreshold = 0)),
-      "bpeSubwords" -> (() => {
-        spark.conf.set("graft.bpe.driver.max", "0")
-        try TextAnalysis.bpeSubwords(Seq("abab abc", "ababab cab",
-          "abc bcbc", "cab abab").toDF("text"), "text", 20)
-        finally spark.conf.unset("graft.bpe.driver.max")
-      }))
+      "bpeSubwords" -> (() => TextAnalysis.bpeSubwords(Seq("abab abc",
+        "ababab cab", "abc bcbc", "cab abab").toDF("text"), "text", 20,
+        localThreshold = 0)))
   }
 
   test("distributed iterative rounds leave 0 net persistent RDDs once their result is released") {
@@ -221,31 +218,34 @@ class CheckpointsSuite extends AnyFunSuite {
     assert(persistent == before)
   }
 
-  test("with the guard off, a nested scope over an outer scope's pin leaves that pin readable") {
-    spark.conf.set(GridGuard.EnabledConf, "false")
-    try {
-      val before = persistent
-      val out = Checkpoints.scoped { outer =>
-        val scored = outer.pin(nums.select(
-          ($"x" % 7).cast("double").as("v"), ($"x" % 2).as("y"),
-          array(($"x" % 3).cast("double"), lit(1.0)).as("e"),
-          ($"x" % 4).as("g")))
-        val mid = persistent
-        // guard off: each member's gate hands back a lazy frame over
-        // `scored`; the members' own scopes must not release it, and
-        // hand their pinned results up to this scope
-        val auc = Eval.aucRoc(scored, "v", "y")
-        val drift = Similarity.embeddingDriftBy(scored, "g", "e")
-        assert(mid.subsetOf(persistent), "the outer pin must survive")
-        assert(scored.count() == 100)
-        auc.crossJoin(drift.agg(count(lit(1)).as("slices")))
+  test("a nested scope over a lazy frame that reads an outer scope's pin leaves that pin readable") {
+    val before = persistent
+    val out = Checkpoints.scoped { outer =>
+      val scored = outer.pin(nums.select(
+        ($"x" % 7).cast("double").as("v"), ($"x" % 2).as("y"),
+        array(($"x" % 3).cast("double"), lit(1.0)).as("e"),
+        ($"x" % 4).as("g")))
+      val mid = persistent
+      // each nested body returns a lazy frame over `scored`; the nested
+      // scopes must not release it, and hand their pinned results (and
+      // the members' own) up to this scope
+      val perG = Checkpoints.scoped { inner =>
+        inner.pin(scored.select($"g")).count()
+        scored.groupBy($"g").agg(count(lit(1)).as("n"))
       }
-      val row = out.first()
-      assert(row.getLong(3) == 4L)
-      assert((persistent -- before).size == 1)
-      Checkpoints.release(out)
-      assert(persistent == before)
-    } finally spark.conf.unset(GridGuard.EnabledConf)
+      val pos = Checkpoints.owning(_ => scored.filter($"y" === 1))
+      val auc = Eval.aucRoc(scored, "v", "y")
+      val drift = Similarity.embeddingDriftBy(scored, "g", "e")
+      assert(mid.subsetOf(persistent), "the outer pin must survive")
+      assert(scored.count() == 100 && pos.count() == 50)
+      auc.crossJoin(drift.agg(count(lit(1)).as("slices")))
+        .crossJoin(perG.agg(sum($"n").as("rows")))
+    }
+    val row = out.first()
+    assert(row.getLong(3) == 4L && row.getLong(4) == 100L)
+    assert((persistent -- before).size == 1)
+    Checkpoints.release(out)
+    assert(persistent == before)
   }
 
   test("with graft.checkpoint.dir set, scope pins are reliable checkpoints and their files are gone after the scope") {
@@ -279,21 +279,15 @@ class CheckpointsSuite extends AnyFunSuite {
       "mutualInfo" -> (() => Eval.mutualInfo(df, "v", "w", 4)),
       "spearman" -> (() => Eval.spearman(df, "v", "w")),
       "bm25" -> (() => TextAnalysis.bm25(df, "id", "text", "gamma w3")))
-    def runAll(): Map[String, Seq[Seq[Any]]] = members.map { case (name, f) =>
+    members.foreach { case (name, f) =>
       val before = persistent
       val out = f()
-      val rows = out.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+      out.collect()
       assert(Checkpoints.isPin(out), s"$name must hand back a pinned result")
       Checkpoints.release(out)
       val leaked = persistent -- before
       assert(leaked.isEmpty, s"$name leaked persistent RDDs $leaked")
-      name -> rows
-    }.toMap
-    val on = runAll()
-    spark.conf.set(GridGuard.EnabledConf, "false")
-    val off = try runAll() finally spark.conf.unset(GridGuard.EnabledConf)
-    for ((name, _) <- members)
-      assert(off(name) == on(name), s"$name rows differ with the guard off")
+    }
   }
 
   // ---- reliable checkpoints: Eval pins, file reclamation, dir re-wiring --

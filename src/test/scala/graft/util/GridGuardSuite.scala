@@ -81,18 +81,20 @@ class GridGuardSuite extends AnyFunSuite {
     }
   }
 
-  test("guard passes rounded scores, and the opt-outs work") {
+  test("guard passes rounded scores, and a session that still sets graft.grid.guard=false gets the guard") {
     val rounded = rawDoubles(500).select($"g", round($"v", 1).as("v"))
     withCap(50) {
       // 11 distinct rounded values — under the cap, op runs to completion
       assert(Eval.ksTestBy(rounded, "g", "v").count() == 3)
-      // conf opt-out: same raw input as the firing case, guard skipped
-      spark.conf.set(GridGuard.EnabledConf, "false")
+      // the old opt-out key switches nothing: the same raw input as the
+      // firing case still fails
+      spark.conf.set("graft.grid.guard", "false")
       try {
-        val r = Eval.ksTest(rawDoubles(200).filter($"g" === "g0"),
-          rawDoubles(200), "v").collect().head
-        assert(r.getLong(0) > 0 && r.getLong(1) > 0)
-      } finally spark.conf.unset(GridGuard.EnabledConf)
+        val e = intercept[IllegalArgumentException](Eval.ksTest(
+          rawDoubles(200).filter($"g" === "g0"), rawDoubles(200), "v"))
+        assert(e.getMessage.contains("ksTest") &&
+          e.getMessage.contains("ROUNDED"), e.getMessage)
+      } finally spark.conf.unset("graft.grid.guard")
     }
     // default cap (10^6): rounded bench-grain scores never trip it
     assert(Eval.spearman(rounded.withColumn("v2", round($"v" * 2, 1)),
