@@ -14,7 +14,10 @@ object Harness {
   /** `local[cpus]` with shuffle partitions sized to the cores (local mode,
     * no remote executors, so small stages do not over-split), AQE on,
     * nanosecond parquet timestamps read as longs (normalized in
-    * [[Tables.load]]), UTC and no UI; logs at WARN. */
+    * [[Tables.load]]), UTC and no UI; logs at WARN, except two loggers
+    * raised to ERROR whose warnings every run repeats by design: the
+    * single-partition windows over bounded tables (`WindowExec`) and the
+    * lineage note of every local checkpoint (`MapPartitionsRDD`). */
   def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -25,6 +28,10 @@ object Harness {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Seq("org.apache.spark.sql.execution.window.WindowExec",
+      "org.apache.spark.rdd.MapPartitionsRDD").foreach(
+      org.apache.logging.log4j.core.config.Configurator.setLevel(_,
+        org.apache.logging.log4j.Level.ERROR))
     spark
   }
 

@@ -69,19 +69,13 @@ object Breakdown {
     // (q04: 6.1 s → one-buffer cost). Results are identical: the same
     // interpolation on the same buffer, element-projected back per alias.
     val colsSet = df.columns.toSet
-    def exactQuantile(r: SpecRow): Option[Double] = {
-      val op = r.op
-      if (op == "text" || r.weights.exists(colsSet.contains) ||
-        !colsSet.contains(r.variable)) None
-      else op match {
-        case "q1" | "q2" | "q3" =>
-          Some(("q1q2q3".indexOf(op) / 2 + 1) * 0.25)
-        case p if p.startsWith("p") && p.drop(1).nonEmpty &&
-            p.drop(1).forall(_.isDigit) =>
-          Some(p.drop(1).toDouble / 100.0)
+    def exactQuantile(r: SpecRow): Option[Double] =
+      if (r.weights.exists(colsSet.contains) || !colsSet.contains(r.variable))
+        None
+      else r.op match {
+        case Numbered("q" | "p", q) => Some(q)
         case _ => None
       }
-    }
     val fusable: Map[String, Map[Double, Int]] = aggs0
       .flatMap(r => exactQuantile(r).map(q => r.variable -> q))
       .groupBy(_._1).filter(_._2.size >= 2)
@@ -114,6 +108,24 @@ object Breakdown {
     // no keys: groupBy() is the global aggregate and byKeys is Nil
     (df.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
       .select(finalCols: _*), byKeys)
+  }
+
+  /** An op name with a number suffix, as (stem, number): the quantile of
+    * `q1`–`q3` (0.25–0.75) and `pNN` (NN/100), also behind the sketch
+    * stems `aq`/`ap`, and the bound N of `listN`. */
+  private object Numbered {
+    def unapply(op: String): Option[(String, Double)] = {
+      val stem = op.takeWhile(!_.isDigit)
+      val digits = op.drop(stem.length)
+      if (digits.isEmpty || !digits.forall(_.isDigit)) None
+      else stem match {
+        case "q" | "aq" if Seq("1", "2", "3").contains(digits) =>
+          Some((stem, digits.toInt * 0.25))
+        case "p" | "ap" => Some((stem, digits.toDouble / 100.0))
+        case "list" => Some((stem, digits.toInt.toDouble))
+        case _ => None
+      }
+    }
   }
 
   /** Group key with nulls (and NaN) rendered as −99, merging with literal
@@ -154,11 +166,10 @@ object Breakdown {
         // sorted distinct, comma-joined (deviation: reference is
         // first-appearance order, bm_breakdown.py:215-216)
         concat_ws(",", sort_array(collect_set(col(r.variable).cast(StringType))))
-      case l if l.startsWith("list") && l.drop(4).nonEmpty &&
-          l.drop(4).forall(_.isDigit) =>
+      case Numbered("list", n) =>
         // `listN`: bounded-state variant for high-cardinality groups —
         // smallest N distinct values + ",…" overflow marker
-        BoundedListAgg(col(r.variable), l.drop(4).toInt)
+        BoundedListAgg(col(r.variable), n.toInt)
       case "sum" if wts.nonEmpty =>
         // nansum(Π(x·w…)): null/NaN products contribute 0 (bm_breakdown.py:217-219)
         coalesce(sum(nanvl(x * wprod, lit(null).cast(DoubleType))), lit(0.0))
@@ -169,21 +180,14 @@ object Breakdown {
         val den = sum(when(x.isNotNull, w0).otherwise(lit(0.0)))
         val num = sum(when(x.isNotNull, x * w0).otherwise(lit(0.0)))
         when(den =!= 0.0, num / den)
-      case "q1" | "q2" | "q3" if wts.nonEmpty =>
-        val q = ("q1q2q3".indexOf(op) / 2 + 1) * 0.25
-        WeightedQuantile(x, wprod, q)
-      case "aq1" | "aq2" | "aq3" =>
+      case Numbered("q", q) if wts.nonEmpty => WeightedQuantile(x, wprod, q)
+      case Numbered("aq" | "ap", q) =>
         // beyond-reference: bounded-state quantile sketch for unbounded
-        // groups (ApproxWeightedQuantile Scaladoc); weightless → w ≡ 1
-        val q = ("q1q2q3".indexOf(op.drop(1)) / 2 + 1) * 0.25
+        // groups (ApproxWeightedQuantile Scaladoc); weightless → w ≡ 1.
+        // Spark's exact `percentile` buffers every group value, which is
+        // unbounded state at 100 TB; the sketch caps it at maxBins
+        // (lossless below that cardinality)
         ApproxWeightedQuantile(x, if (wts.nonEmpty) wprod else lit(1.0), q, 256)
-      case p if p.startsWith("ap") && p.drop(2).nonEmpty &&
-          p.drop(2).forall(_.isDigit) =>
-        // `apNN`: bounded-state percentile — Spark's exact `percentile`
-        // buffers every group value, which is unbounded state at 100 TB;
-        // the sketch caps it at maxBins (lossless below that cardinality)
-        ApproxWeightedQuantile(x, if (wts.nonEmpty) wprod else lit(1.0),
-          p.drop(2).toDouble / 100.0, 256)
       case "nunique" | "anunique" =>
         // beyond-reference: distinct count (pandas nunique drops NaN).
         // `nunique` is exact — count_distinct shuffles every distinct value,
@@ -204,13 +208,11 @@ object Breakdown {
       case "var" => var_samp(x) // pandas ddof=1
       case "std" => stddev_samp(x)
       case "sem" => stddev_samp(x) / sqrt(count(x)) // std/√n (ddof=1)
-      case "q1" | "q2" | "q3" =>
-        val q = ("q1q2q3".indexOf(op) / 2 + 1) * 0.25
-        percentile(x, lit(q)) // pandas linear interpolation ≡ Spark percentile
       case "major" => MajorAgg(col(r.variable), df.schema(r.variable).dataType)
-      case p if p.startsWith("p") && p.drop(1).nonEmpty &&
-          p.drop(1).forall(_.isDigit) =>
-        percentile(x, lit(p.drop(1).toDouble / 100.0)) // bm_breakdown.py:241-242
+      case Numbered("q" | "p", q) =>
+        // pandas linear interpolation ≡ Spark percentile
+        // (bm_breakdown.py:241-242); a weighted pNN ignores its weights
+        percentile(x, lit(q))
       case _ =>
         max(lit(null).cast(DoubleType)) // unknown op → null (v stays NaN)
     }

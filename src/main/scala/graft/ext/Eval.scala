@@ -233,9 +233,7 @@ object Eval {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = per
       .withColumn("cum", sum(col("n")).over(w))
-      .withColumn("avg_rank",
-        (col("cum") - col("n")).cast("double") +
-          (col("n") + lit(1L)).cast("double") / lit(2.0))
+      .withColumn("avg_rank", midRank(col("cum"), col("n")))
     val auc =
       (col("prs") -
         (col("n_pos").cast("double") * (col("n_pos") + lit(1L)).cast("double"))
@@ -373,9 +371,7 @@ object Eval {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = perScore
       .withColumn("cum", sum(col("n")).over(w))
-      .withColumn("avg_rank",
-        (col("cum") - col("n")).cast("double") +
-          (col("n") + lit(1L)).cast("double") / lit(2.0))
+      .withColumn("avg_rank", midRank(col("cum"), col("n")))
     ranked.agg(
         sum(col("npos").cast("double") * col("avg_rank")).as("pos_rank_sum"),
         sum(col("npos")).cast("long").as("n_pos"),
@@ -716,40 +712,13 @@ object Eval {
     * with zero total weight (vanishing probability beyond toy inputs)
     * yield NULL means and would shift the order-statistic indices —
     * inputs should carry ≥ ~50 rows.
-    * Returns one row: (n, mean, ci_lo, ci_hi). */
+    *
+    * It is [[bootstrapCIBy]]'s body keyed on no group: the same weights,
+    * fold and order statistics, every aggregate global. Returns one row,
+    * an empty input included: (n, mean, ci_lo, ci_hi). */
   def bootstrapCI(df: DataFrame, idCol: String, valCol: String,
-      reps: Int = 40, salt: String = "boot"): DataFrame = {
-    require(reps >= 4, s"reps $reps")
-    val base = df.select(col(idCol).as("_id"),
-        col(valCol).cast("double").as("_x"))
-      .filter(col("_x").isNotNull)
-    val bucket = conv(substring(md5(concat(lit(salt + ":"),
-        col("_rep").cast("string"), lit(":"), col("_id").cast("string"))),
-      1, 15), 16, 10).cast("long")
-    val w = PoissonThresholds.zipWithIndex.foldRight(
-        lit(PoissonThresholds.size): Column) { case ((t, k), acc) =>
-      when(bucket < t, lit(k)).otherwise(acc)
-    }
-    val perRep = base
-      .withColumn("_rep", explode(sequence(lit(0), lit(reps - 1))))
-      .withColumn("_w", w)
-      .groupBy(col("_rep"))
-      .agg(sum(col("_w") * col("_x")).as("_swx"),
-        sum(col("_w")).cast("double").as("_sw"))
-      .select(when(col("_sw") > 0, col("_swx") / col("_sw")).as("_m"))
-      .filter(col("_m").isNotNull)
-    val idxLo = math.max(1, math.floor(0.025 * reps).toInt)
-    val idxHi = math.ceil(0.975 * reps).toInt
-    val ranked = perRep.withColumn("_rn",
-      row_number().over(Window.orderBy(col("_m").asc)))
-    val ci = ranked.agg(
-      min(when(col("_rn") === idxLo, col("_m"))).as("_lo"),
-      min(when(col("_rn") === idxHi, col("_m"))).as("_hi"))
-    base.agg(count(lit(1)).as("n"), avg(col("_x")).as("_mean"))
-      .crossJoin(ci)
-      .select(col("n"), round(col("_mean"), 6).as("mean"),
-        round(col("_lo"), 6).as("ci_lo"), round(col("_hi"), 6).as("ci_hi"))
-  }
+      reps: Int = 40, salt: String = "boot"): DataFrame =
+    bootstrapOver(df, None, idCol, valCol, reps, salt)
 
   /** PAIRED BOOTSTRAP SIGNIFICANCE TEST on the difference of two
     * per-unit metrics — "did system B actually beat system A, or is the
@@ -765,21 +734,13 @@ object Eval {
     * one scan ×reps. Significant = the 95% CI excludes 0, evaluated on
     * the 6 dp-rounded endpoints the frame carries (engine-stable).
     * Feed per-unit metrics ROUNDED (the house grain discipline).
-    * Returns one row: (n, mean_delta, ci_lo, ci_hi, b_better, a_better,
+    * [[pairedBootstrapTestBy]] runs the same body per slice. Returns one
+    * row: (n, mean_delta, ci_lo, ci_hi, b_better, a_better,
     * significant). */
   def pairedBootstrapTest(df: DataFrame, idCol: String, aCol: String,
       bCol: String, reps: Int = 40,
-      salt: String = "pboot"): DataFrame = {
-    val deltas = df.select(col(idCol).as("_id"),
-      (col(bCol).cast("double") - col(aCol).cast("double")).as("_d"))
-    bootstrapCI(deltas, "_id", "_d", reps, salt)
-      .select(col("n"), col("mean").as("mean_delta"),
-        col("ci_lo"), col("ci_hi"),
-        when(col("ci_lo") > 0, 1).otherwise(0).as("b_better"),
-        when(col("ci_hi") < 0, 1).otherwise(0).as("a_better"),
-        when(col("ci_lo") > 0 || col("ci_hi") < 0, 1).otherwise(0)
-          .as("significant"))
-  }
+      salt: String = "pboot"): DataFrame =
+    pairedOver(df, None, idCol, aCol, bCol, reps, salt)
 
   /** [[pairedBootstrapTest]] PER SLICE — "WHICH cohort's B-vs-A delta
     * is real": the house by-slice composition applied to the paired
@@ -791,16 +752,25 @@ object Eval {
     * significant). */
   def pairedBootstrapTestBy(df: DataFrame, groupCol: String,
       idCol: String, aCol: String, bCol: String, reps: Int = 40,
-      salt: String = "pboot"): DataFrame = {
-    val deltas = df.select(col(groupCol).as("_g"), col(idCol).as("_id"),
-      (col(bCol).cast("double") - col(aCol).cast("double")).as("_d"))
-    bootstrapCIBy(deltas, "_g", "_id", "_d", reps, salt)
-      .select(col("_g").as(groupCol), col("n"),
+      salt: String = "pboot"): DataFrame =
+    pairedOver(df, Some(groupCol), idCol, aCol, bCol, reps, salt)
+
+  /** The paired test over [[bootstrapOver]]: the per-unit delta b − a,
+    * bootstrapped per `groupCol` slice or, with none, over the whole
+    * input, then the CI read as the three verdict flags. */
+  private def pairedOver(df: DataFrame, groupCol: Option[String],
+      idCol: String, aCol: String, bCol: String, reps: Int,
+      salt: String): DataFrame = {
+    val deltas = df.select(groupCol.map(g => col(g).as("_g")).toSeq ++
+      Seq(col(idCol).as("_id"),
+        (col(bCol).cast("double") - col(aCol).cast("double")).as("_d")): _*)
+    bootstrapOver(deltas, groupCol.map(_ => "_g"), "_id", "_d", reps, salt)
+      .select(groupCol.map(g => col("_g").as(g)).toSeq ++ Seq(col("n"),
         col("mean").as("mean_delta"), col("ci_lo"), col("ci_hi"),
         when(col("ci_lo") > 0, 1).otherwise(0).as("b_better"),
         when(col("ci_hi") < 0, 1).otherwise(0).as("a_better"),
         when(col("ci_lo") > 0 || col("ci_hi") < 0, 1).otherwise(0)
-          .as("significant"))
+          .as("significant")): _*)
   }
 
   /** [[bootstrapCI]] PER GROUP — error bars on each slice's mean ("is
@@ -810,10 +780,19 @@ object Eval {
     * keys on the group so parallelism grows with slice count.
     * Returns one row per group: (groupCol, n, mean, ci_lo, ci_hi). */
   def bootstrapCIBy(df: DataFrame, groupCol: String, idCol: String,
-      valCol: String, reps: Int = 40, salt: String = "boot"): DataFrame = {
+      valCol: String, reps: Int = 40, salt: String = "boot"): DataFrame =
+    bootstrapOver(df, Some(groupCol), idCol, valCol, reps, salt)
+
+  /** [[bootstrapCIBy]]'s one body: the Poisson-weight fold and the
+    * order-statistic CI keyed on `groupCol`, or — with none, as
+    * [[bootstrapCI]] — on no key at all, so every aggregate is global and
+    * an empty input still returns its one row (n = 0, NULL mean and CI). */
+  private def bootstrapOver(df: DataFrame, groupCol: Option[String],
+      idCol: String, valCol: String, reps: Int, salt: String): DataFrame = {
     require(reps >= 4, s"reps $reps")
-    val base = df.select(col(groupCol).as("_g"), col(idCol).as("_id"),
-        col(valCol).cast("double").as("_x"))
+    val g = groupCol.map(_ => col("_g")).toSeq
+    val base = df.select(groupCol.map(c => col(c).as("_g")).toSeq ++
+        Seq(col(idCol).as("_id"), col(valCol).cast("double").as("_x")): _*)
       .filter(col("_x").isNotNull)
     val bucket = conv(substring(md5(concat(lit(salt + ":"),
         col("_rep").cast("string"), lit(":"), col("_id").cast("string"))),
@@ -825,25 +804,26 @@ object Eval {
     val perRep = base
       .withColumn("_rep", explode(sequence(lit(0), lit(reps - 1))))
       .withColumn("_w", w)
-      .groupBy(col("_g"), col("_rep"))
+      .groupBy(g :+ col("_rep"): _*)
       .agg(sum(col("_w") * col("_x")).as("_swx"),
         sum(col("_w")).cast("double").as("_sw"))
-      .select(col("_g"),
-        when(col("_sw") > 0, col("_swx") / col("_sw")).as("_m"))
+      .select(g :+
+        when(col("_sw") > 0, col("_swx") / col("_sw")).as("_m"): _*)
       .filter(col("_m").isNotNull)
     val idxLo = math.max(1, math.floor(0.025 * reps).toInt)
     val idxHi = math.ceil(0.975 * reps).toInt
     val ranked = perRep.withColumn("_rn", row_number().over(
-      Window.partitionBy(col("_g")).orderBy(col("_m").asc)))
-    val ci = ranked.groupBy(col("_g")).agg(
+      Window.partitionBy(g: _*).orderBy(col("_m").asc)))
+    val ci = ranked.groupBy(g: _*).agg(
       min(when(col("_rn") === idxLo, col("_m"))).as("_lo"),
       min(when(col("_rn") === idxHi, col("_m"))).as("_hi"))
-    base.groupBy(col("_g"))
+    base.groupBy(g: _*)
       .agg(count(lit(1)).as("n"), avg(col("_x")).as("_mean"))
-      .join(ci, Seq("_g"))
-      .select(col("_g").as(groupCol), col("n"),
+      .join(ci, groupCol.map(_ => "_g").toSeq)
+      .select(groupCol.map(c => col("_g").as(c)).toSeq ++ Seq(col("n"),
         round(col("_mean"), 6).as("mean"),
-        round(col("_lo"), 6).as("ci_lo"), round(col("_hi"), 6).as("ci_hi"))
+        round(col("_lo"), 6).as("ci_lo"),
+        round(col("_hi"), 6).as("ci_hi")): _*)
   }
 
   /** KEY-SKEW REPORT: the pre-join diagnostic that decides between a
@@ -897,12 +877,12 @@ object Eval {
     * (Smirnov); `drifted` = 1 iff d > d_crit.
     *
     * Engine-stable by construction: at each distinct value the ECDF gap
-    * is |cna·n_b − cnb·n_a| / (n_a·n_b) — an exact INTEGER numerator, so
-    * the max is decided on integers and only the final two ratios touch
-    * doubles (both emitted with one fixed shape; overflow posture as
-    * [[cohenKappa]]: the cross-products exceed int64 past ~3·10⁹ rows per
-    * side — switch them to doubles at that scale, costing exactness of
-    * the argmax among near-ties, not of the counts).
+    * is [[ksGap]]'s exact INTEGER numerator over n_a·n_b, so the max is
+    * decided on integers and only [[ksVerdict]]'s two final ratios touch
+    * doubles — the closing arithmetic [[ksTestBy]] runs too (overflow
+    * posture as [[cohenKappa]]: the cross-products exceed int64 past
+    * ~3·10⁹ rows per side — switch them to doubles at that scale, costing
+    * exactness of the argmax among near-ties, not of the counts).
     *
     * Shape at 100 TB: one pass collapses both sides to the distinct-value
     * count table (granularity-bounded — feed ROUNDED scores, the rank-op
@@ -920,8 +900,9 @@ object Eval {
       pairPerValueRaw(a, b, valCol), "ksTest", valCol)))
 
   /** The two-sided per-distinct-value count table `(_v, ca, cb)` that
-    * [[ksTest]], [[rankSumTest]] and (bucketed) [[Outliers.psiDrift]]
-    * all collapse their inputs to — ONE tagged-union aggregation.
+    * [[ksTest]], [[rankSumTest]], [[Outliers.chiSquareDrift]] (per
+    * category) and (bucketed) [[Outliers.psiDrift]] all collapse their
+    * inputs to — ONE tagged-union aggregation.
     * [[Outliers.driftReport]] builds it once, gates it once, and feeds
     * every value-side member. Ungated and lazy — callers gate via
     * [[graft.util.GridGuard.gateTable]]. */
@@ -952,14 +933,27 @@ object Eval {
     // the final cumulative IS the side total — no second corpus pass
     val tot = cum.agg(max(col("cna")).as("n_a"), max(col("cnb")).as("n_b"))
     val dnum = cum.crossJoin(broadcast(tot))
-      .agg(max(abs(col("cna") * col("n_b") - col("cnb") * col("n_a")))
+      .agg(max(ksGap(col("cna"), col("cnb"), col("n_a"), col("n_b")))
         .as("_dnum"))
-    val nProd = col("n_a").cast("double") * col("n_b").cast("double")
-    val d = col("_dnum").cast("double") / nProd
-    val dCrit = lit(1.358) *
-      sqrt((col("n_a") + col("n_b")).cast("double") / nProd)
-    tot.crossJoin(dnum).select(col("n_a"), col("n_b"),
-      d.as("d"), dCrit.as("d_crit"),
+    tot.crossJoin(dnum).select(col("n_a") +: col("n_b") +:
+      ksVerdict(col("_dnum"), col("n_a"), col("n_b")): _*)
+  }
+
+  /** The KS gap at one value, shared by [[ksTest]] and [[ksTestBy]]: the
+    * exact integer numerator |cumA·nB − cumB·nA| of |F_a − F_b|, from
+    * each side's cumulative count and total. */
+  private def ksGap(cumA: Column, cumB: Column, nA: Column,
+      nB: Column): Column =
+    abs(cumA * nB - cumB * nA)
+
+  /** The KS verdict from the max [[ksGap]] `dnum` and the side totals,
+    * shared by [[ksTest]] and [[ksTestBy]]: `d`, the Smirnov 5% cut
+    * `d_crit` and `drifted`, each one fixed double shape. */
+  private def ksVerdict(dnum: Column, nA: Column, nB: Column): Seq[Column] = {
+    val nProd = nA.cast("double") * nB.cast("double")
+    val d = dnum.cast("double") / nProd
+    val dCrit = lit(1.358) * sqrt((nA + nB).cast("double") / nProd)
+    Seq(d.as("d"), dCrit.as("d_crit"),
       when(d > dCrit, 1).otherwise(0).as("drifted"))
   }
 
@@ -1017,18 +1011,13 @@ object Eval {
       .join(pg, Seq("_g", "_v"), "left")
       .withColumn("cuma", sum(coalesce(col("c"), lit(0L))).over(wgv))
     val perG = dense.crossJoin(broadcast(tot))
-      .withColumn("_gap", abs(col("cuma") * (col("n") - col("n_a")) -
-        (col("cumg") - col("cuma")) * col("n_a")))
+      .withColumn("_gap", ksGap(col("cuma"), col("cumg") - col("cuma"),
+        col("n_a"), col("n") - col("n_a")))
       .groupBy(col("_g"), col("n_a"), col("n"))
       .agg(max(col("_gap")).as("_dnum"))
     val nbCol = col("n") - col("n_a")
-    val nProd = col("n_a").cast("double") * nbCol.cast("double")
-    val d = col("_dnum").cast("double") / nProd
-    val dCrit = lit(1.358) *
-      sqrt((col("n_a") + nbCol).cast("double") / nProd)
-    perG.select(col("_g").as(groupCol), col("n_a"),
-      nbCol.as("n_b"), d.as("d"), dCrit.as("d_crit"),
-      when(d > dCrit, 1).otherwise(0).as("drifted"))
+    perG.select(col("_g").as(groupCol) +: col("n_a") +: nbCol.as("n_b") +:
+      ksVerdict(col("_dnum"), col("n_a"), nbCol): _*)
   }
 
   /** [[ksDriftWindowed]]'s baseline inputs from the reference slice:
@@ -1126,15 +1115,14 @@ object Eval {
     * two-sided 5% cut |z| > 1.96 (fixed literal, the 1.358 discipline).
     * z > 0 means side b's values rank HIGHER than side a's.
     *
-    * Engine-stable: every rank is an exact 0.5-multiple so U is exact in
-    * doubles (order-independent below 2⁵³); the tie term Σ(t³−t) is
-    * computed in DOUBLES from the first multiply (ADVICE r12) — exact
-    * while t³ < 2⁵³ (t ≲ 2·10⁶ rows tied on one value, i.e. everywhere
-    * int64 was exact) and degrading to ulp rounding, never a silent
-    * int64 wrap, beyond; the DuckDB oracles mirror the double form so
-    * parity holds at any scale. z and the flag are one fixed expression
-    * shape. All-tied input gives σ = 0 → NULL z (undefined, the
-    * [[cohenKappa]] convention).
+    * Engine-stable: every [[midRank]] is an exact 0.5-multiple so U is
+    * exact in doubles (order-independent below 2⁵³); the [[tieTerm]]
+    * Σ(t³−t) is in DOUBLES from the first multiply — exact while
+    * t³ < 2⁵³ (t ≲ 2·10⁶ rows tied on one value) and degrading to ulp
+    * rounding, never a silent int64 wrap, beyond. z and the flag are
+    * [[rankSumVerdict]]'s one fixed shape — the closing arithmetic
+    * [[rankSumTestBy]] runs too. All-tied input gives σ = 0 → NULL z
+    * (undefined, the [[cohenKappa]] convention).
     *
     * Shape at 100 TB: one pass collapses both sides to the per-distinct-
     * value count table (granularity-bounded, [[graft.util.GridGuard]]
@@ -1158,29 +1146,44 @@ object Eval {
     val ranked = per
       .withColumn("_nv", nv)
       .withColumn("_cum", sum(nv).over(w))
-      .withColumn("_avgrank",
-        (col("_cum") - col("_nv")).cast("double") +
-          (col("_nv") + lit(1L)).cast("double") / lit(2.0))
+      .withColumn("_avgrank", midRank(col("_cum"), col("_nv")))
     val agg = ranked.agg(
       sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
       sum(col("cb").cast("double") * col("_avgrank")).as("_rb"),
-      // tie term in DOUBLES from the first multiply (ADVICE r12): t³ in
-      // int64 silently wraps past ~2·10⁶ rows tied on ONE value under
-      // non-ANSI mode; the double form is exact below 2⁵³ and degrades
-      // to a rounded (never wrapped) σ beyond — mirrored in the DuckDB
-      // oracles so parity holds at any scale
-      sum(col("_nv").cast("double") * col("_nv") * col("_nv") - col("_nv"))
-        .as("_ties"))
-    val nA = col("n_a").cast("double")
-    val nB = col("n_b").cast("double")
+      sum(tieTerm(col("_nv"))).as("_ties"))
+    agg.select(col("n_a") +: col("n_b") +: rankSumVerdict(col("n_a"),
+      col("n_b"), col("_rb"), col("_ties")): _*)
+  }
+
+  /** The mid-rank of a value held `nv` times whose cumulative count (its
+    * own rows included) is `cum`, shared by [[rankSumTest]],
+    * [[rankSumTestBy]], the [[aucRoc]] pair and [[spearman]]'s rank
+    * tables: an exact 0.5-multiple in doubles. */
+  private def midRank(cum: Column, nv: Column): Column =
+    (cum - nv).cast("double") + (nv + lit(1L)).cast("double") / lit(2.0)
+
+  /** A value's tie term t³ − t for `nv` = t ties, in DOUBLES from the
+    * first multiply (ADVICE r12): t³ in int64 silently wraps past ~2·10⁶
+    * rows tied on ONE value under non-ANSI mode; the double form is exact
+    * below 2⁵³ and degrades to a rounded (never wrapped) σ beyond —
+    * mirrored in the DuckDB oracles so parity holds at any scale. */
+  private def tieTerm(nv: Column): Column =
+    nv.cast("double") * nv * nv - nv
+
+  /** The rank-sum verdict from the side totals, side b's mid-rank sum
+    * `rb` and the summed [[tieTerm]]s, shared by [[rankSumTest]] and
+    * [[rankSumTestBy]]: `u`, the tie-corrected `z` (NULL when σ = 0) and
+    * `drifted` at |z| > 1.96, each one fixed double shape. */
+  private def rankSumVerdict(nA0: Column, nB0: Column, rb: Column,
+      ties: Column): Seq[Column] = {
+    val nA = nA0.cast("double")
+    val nB = nB0.cast("double")
     val nT = nA + nB
-    val u = col("_rb") - nB * (nB + lit(1.0)) / lit(2.0)
+    val u = rb - nB * (nB + lit(1.0)) / lit(2.0)
     val sigma2 = nA * nB / lit(12.0) *
-      ((nT + lit(1.0)) - col("_ties").cast("double") /
-        (nT * (nT - lit(1.0))))
+      ((nT + lit(1.0)) - ties.cast("double") / (nT * (nT - lit(1.0))))
     val z = (u - nA * nB / lit(2.0)) / sqrt(sigma2)
-    agg.select(col("n_a"), col("n_b"), u.as("u"),
-      when(sigma2 > 0, z).as("z"),
+    Seq(u.as("u"), when(sigma2 > 0, z).as("z"),
       when(sigma2 > 0 && abs(z) > 1.96, 1).otherwise(0).as("drifted"))
   }
 
@@ -1226,30 +1229,17 @@ object Eval {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = gv
       .withColumn("_cum", sum(col("nv")).over(w))
-      .withColumn("_avgrank",
-        (col("_cum") - col("nv")).cast("double") +
-          (col("nv") + lit(1L)).cast("double") / lit(2.0))
+      .withColumn("_avgrank", midRank(col("_cum"), col("nv")))
     val glob = ranked.agg(sum(col("nv")).as("n"),
-      // double tie term from the first multiply (the rankSumTest note)
-      sum(col("nv").cast("double") * col("nv") * col("nv") - col("nv"))
-        .as("_ties"))
+      sum(tieTerm(col("nv"))).as("_ties"))
     val perG = pg.join(ranked.select(col("_v"), col("_avgrank")), Seq("_v"))
       .groupBy(col("_g"))
       .agg(sum(col("c")).as("n_g"),
         sum(col("c").cast("double") * col("_avgrank")).as("_rg"))
-    val nB = col("n_g").cast("double")
-    val nA = (col("n") - col("n_g")).cast("double")
-    val nT = nA + nB
-    val u = col("_rg") - nB * (nB + lit(1.0)) / lit(2.0)
-    val sigma2 = nA * nB / lit(12.0) *
-      ((nT + lit(1.0)) - col("_ties").cast("double") /
-        (nT * (nT - lit(1.0))))
-    val z = (u - nA * nB / lit(2.0)) / sqrt(sigma2)
-    perG.crossJoin(broadcast(glob)).select(
-      col("_g").as(groupCol), col("n_g"),
-      (col("n") - col("n_g")).as("n_rest"), u.as("u"),
-      when(sigma2 > 0, z).as("z"),
-      when(sigma2 > 0 && abs(z) > 1.96, 1).otherwise(0).as("drifted"))
+    val nRest = col("n") - col("n_g")
+    perG.crossJoin(broadcast(glob)).select(col("_g").as(groupCol) +:
+      col("n_g") +: nRest.as("n_rest") +: rankSumVerdict(nRest, col("n_g"),
+        col("_rg"), col("_ties")): _*)
   }
 
   /** MUTUAL INFORMATION between two score columns over ECDF-decile bins
@@ -1345,9 +1335,7 @@ object Eval {
       val w = Window.orderBy(col(c).asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       per.withColumn("_cum", sum(col("_n")).over(w))
-        .select(col(c),
-          ((col("_cum") - col("_n")).cast("double") +
-            (col("_n") + lit(1L)).cast("double") / lit(2.0)).as(out))
+        .select(col(c), midRank(col("_cum"), col("_n")).as(out))
     }
     val ranked = base
       .join(rankTable("a", "ra"), Seq("a"))

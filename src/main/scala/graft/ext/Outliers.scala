@@ -131,15 +131,26 @@ object Outliers {
     val session = base.sparkSession
     val all = session.range(nBuckets)
       .select(col("id").cast("int").as("bucket"))
-    val p = (col("n_base") + lit(0.5)) / lit(tb + 0.5 * nBuckets)
-    val q = (col("n_live") + lit(0.5)) / lit(tl + 0.5 * nBuckets)
     all.join(counts(base, "n_base"), Seq("bucket"), "left")
       .join(counts(live, "n_live"), Seq("bucket"), "left")
       .na.fill(0L, Seq("n_base", "n_live"))
-      .withColumn("p_base", p).withColumn("p_live", q)
-      .withColumn("psi", round((col("p_live") - col("p_base")) *
-        log(col("p_live") / col("p_base")), 6))
+      .withColumn("p_base", psiShare(col("n_base"), lit(tb), nBuckets))
+      .withColumn("p_live", psiShare(col("n_live"), lit(tl), nBuckets))
+      .withColumn("psi",
+        round(psiTerm(col("p_base"), col("p_live")), 6))
   }
+
+  /** The PSI family's +0.5-smoothed share of one side's bucket:
+    * (count + 0.5) / (total + k/2), so an empty bucket stays finite. */
+  private def psiShare(cnt: Column, total: Column,
+      nBuckets: Int): Column =
+    (cnt + lit(0.5)) / (total.cast("double") + lit(0.5 * nBuckets))
+
+  /** The PSI family's per-bucket term (p_live − p_base)·ln(p_live /
+    * p_base) ≥ 0 over two [[psiShare]]s; the members round it (or its
+    * sum) at 6 dp. */
+  private def psiTerm(pBase: Column, pLive: Column): Column =
+    (pLive - pBase) * log(pLive / pBase)
 
   /** The PSI family's one bucket expression: `nBuckets` fixed-width bins
     * over [lo, hi], outside values clamped into the edge bins. `greatest`
@@ -156,15 +167,14 @@ object Outliers {
     * don't apply: Pearson's χ² over the 2×k contingency table of
     * (slice, category) counts, `χ² = Σ (O − E)² / E` with
     * `E = rowTotal·catTotal / N` — all inputs exact integer counts, one
-    * fixed expression shape, so the unrounded statistic is
-    * engine-identical (overflow posture as [[Eval.cohenKappa]]: the
-    * rowTotal·catTotal product exceeds int64 past ~3·10⁹ rows — compute
-    * E in doubles from the start, which this does). The 5% critical
-    * value uses the Wilson–Hilferty closed form
+    * fixed expression shape ([[chiTerm]], E in doubles from the start),
+    * so the unrounded statistic is engine-identical. The 5% critical
+    * value ([[chiVerdict]]) uses the Wilson–Hilferty closed form
     * `dof·(1 − 2/(9·dof) + 1.6449·√(2/(9·dof)))³` (no inverse-CDF table
     * to ship; accurate to ~0.1% for dof ≥ 3, documented approximation —
     * the 1.358 discipline). Categories seen in either slice count;
     * dof = k − 1; k = 1 (single category) → NULL χ²/crit, drifted 0.
+    * [[chiSquareDriftBy]] runs the same term and verdict.
     *
     * Shape at 100 TB: both slices collapse map-side to category counts;
     * the category table is cardinality-bounded
@@ -177,39 +187,43 @@ object Outliers {
     // (the Eval.ksTest note — no separate pre-check pass; a free-text
     // column still fails loudly, now with the exact count)
     scoped(_ => chiSquareOnPc(graft.util.GridGuard.gateTable(
-      chiPerCategory(base, live, catCol), "chiSquareDrift", catCol)))
-
-  /** [[chiSquareDrift]]'s two-sided per-category count table `(_c, cb,
-    * cl)` — lazy and ungated; callers gate it themselves (the
-    * [[Eval.pairPerValueRaw]] convention). */
-  private[ext] def chiPerCategory(base: DataFrame, live: DataFrame,
-      catCol: String): DataFrame =
-    base.select(col(catCol).as("_c"),
-        lit(1L).as("_ib"), lit(0L).as("_il"))
-      .unionAll(live.select(col(catCol).as("_c"),
-        lit(0L).as("_ib"), lit(1L).as("_il")))
-      .filter(col("_c").isNotNull)
-      .groupBy(col("_c"))
-      .agg(sum(col("_ib")).as("cb"), sum(col("_il")).as("cl"))
+      Eval.pairPerValueRaw(base, live, catCol), "chiSquareDrift", catCol)))
 
   /** [[chiSquareDrift]]'s statistic from an already-gated per-category
-    * table — identical downstream arithmetic, lazy, does NOT release the
-    * caller's table (the [[Eval.ksTestOnPer]] contract). */
+    * table (the [[Eval.pairPerValueRaw]] shape: `ca` base, `cb` live) —
+    * lazy, does NOT release the caller's table (the [[Eval.ksTestOnPer]]
+    * contract). */
   private[ext] def chiSquareOnPc(per: DataFrame): DataFrame = {
     val agg = per.agg(
-      sum(col("cb")).as("n_base"), sum(col("cl")).as("n_live"),
+      sum(col("ca")).as("n_base"), sum(col("cb")).as("n_live"),
       count(lit(1)).as("k"))
     val nB = col("n_base").cast("double")
     val nL = col("n_live").cast("double")
     val nT = nB + nL
-    val cat = (col("cb") + col("cl")).cast("double")
-    def term(o: Column, rowTot: Column) = {
-      val e = rowTot * cat / nT
-      (o.cast("double") - e) * (o.cast("double") - e) / e
-    }
+    val cat = (col("ca") + col("cb")).cast("double")
     val chi2 = per.crossJoin(broadcast(agg))
-      .agg(sum(term(col("cb"), nB) + term(col("cl"), nL)).as("_chi2"))
-    val dof = (col("k") - lit(1L)).cast("double")
+      .agg(sum(chiTerm(col("ca"), nB, cat, nT) +
+        chiTerm(col("cb"), nL, cat, nT)).as("_chi2"))
+    agg.crossJoin(chi2).select(col("n_base") +: col("n_live") +: col("k") +:
+      chiVerdict(col("_chi2"), col("k")): _*)
+  }
+
+  /** One contingency cell's Pearson term (O − E)² / E, E = rowTot·cat/nT
+    * with every input a double from the start (the rowTot·cat product
+    * passes int64 past ~3·10⁹ rows), shared by [[chiSquareDrift]] and
+    * [[chiSquareDriftBy]]. */
+  private def chiTerm(o: Column, rowTot: Column, cat: Column,
+      nT: Column): Column = {
+    val e = rowTot * cat / nT
+    (o.cast("double") - e) * (o.cast("double") - e) / e
+  }
+
+  /** The χ² verdict from the summed [[chiTerm]]s and the category count
+    * `k`, shared by [[chiSquareDrift]] and [[chiSquareDriftBy]]: `chi2`,
+    * the Wilson–Hilferty 5% cut `chi2_crit` and `drifted`, all NULL / 0
+    * at k = 1. */
+  private def chiVerdict(chi2: Column, k: Column): Seq[Column] = {
+    val dof = (k - lit(1L)).cast("double")
     // divisor floored at 1: the k = 1 output is gated to NULL below, but
     // codegen subexpression elimination evaluates this shared expression
     // EAGERLY (outside the when), so dof = 0 must not fault under ANSI;
@@ -220,14 +234,10 @@ object Outliers {
     // χ² rounds at 6 dp (the psi/mi convention — the k-term sum is
     // accumulation-order dependent across engines); the flag compares the
     // ROUNDED values so it is a pure function of the emitted columns
-    val chi2R = round(col("_chi2"), 6)
+    val chi2R = round(chi2, 6)
     val whR = round(wh, 6)
-    agg.crossJoin(chi2).select(
-      col("n_base"), col("n_live"), col("k"),
-      when(col("k") > 1, chi2R).as("chi2"),
-      when(col("k") > 1, whR).as("chi2_crit"),
-      when(col("k") > 1 && chi2R > whR, 1).otherwise(0)
-        .as("drifted"))
+    Seq(when(k > 1, chi2R).as("chi2"), when(k > 1, whR).as("chi2_crit"),
+      when(k > 1 && chi2R > whR, 1).otherwise(0).as("drifted"))
   }
 
   /** [[chiSquareDrift]] PER SLICE — each slice's category mix against the
@@ -276,24 +286,13 @@ object Outliers {
     val nB = (col("n") - col("n_g")).cast("double")
     val nT = col("n").cast("double")
     val cat = col("nc").cast("double")
-    def term(o: Column, rowTot: Column) = {
-      val e = rowTot * cat / nT
-      (o.cast("double") - e) * (o.cast("double") - e) / e
-    }
     val perG = dense
       .groupBy(col("_g"), col("n_g"), col("n"), col("k"))
-      .agg(sum(term(col("ob"), nB) + term(col("ol"), nL)).as("_chi2"))
-    val dof = (col("k") - lit(1L)).cast("double")
-    val dofSafe = greatest(dof, lit(1.0))
-    val wh = dof * pow(lit(1.0) - lit(2.0) / (lit(9.0) * dofSafe) +
-      lit(1.6449) * sqrt(lit(2.0) / (lit(9.0) * dofSafe)), 3)
-    val chi2R = round(col("_chi2"), 6)
-    val whR = round(wh, 6)
-    perG.select(col("_g").as(groupCol), col("n_g"),
-      (col("n") - col("n_g")).as("n_rest"), col("k"),
-      when(col("k") > 1, chi2R).as("chi2"),
-      when(col("k") > 1, whR).as("chi2_crit"),
-      when(col("k") > 1 && chi2R > whR, 1).otherwise(0).as("drifted"))
+      .agg(sum(chiTerm(col("ob"), nB, cat, nT) +
+        chiTerm(col("ol"), nL, cat, nT)).as("_chi2"))
+    perG.select(col("_g").as(groupCol) +: col("n_g") +:
+      (col("n") - col("n_g")).as("n_rest") +: col("k") +:
+      chiVerdict(col("_chi2"), col("k")): _*)
   }
 
   /** [[psiDrift]] PER SLICE — each slice's binned value distribution vs
@@ -349,14 +348,12 @@ object Outliers {
       .crossJoin(broadcast(tot))
       .withColumn("own", coalesce(col("cnt"), lit(0L)))
       .withColumn("restc", coalesce(col("nb"), lit(0L)) - col("own"))
-    // the member's exact smoothing shapes: (count + 0.5) / (total + k/2)
-    val p = (col("restc") + lit(0.5)) /
-      ((col("n") - col("n_g")).cast("double") + lit(0.5 * nBuckets))
-    val q = (col("own") + lit(0.5)) /
-      (col("n_g").cast("double") + lit(0.5 * nBuckets))
+    // the member's exact smoothing and term shapes
+    val p = psiShare(col("restc"), col("n") - col("n_g"), nBuckets)
+    val q = psiShare(col("own"), col("n_g"), nBuckets)
     val perG = dense
       .select(col("_g"), col("n_g"), col("n"),
-        round((q - p) * log(q / p), 6).as("_term"))
+        round(psiTerm(p, q), 6).as("_term"))
       .groupBy(col("_g"), col("n_g"), col("n"))
       .agg(round(sum(col("_term")), 6).as("psi"))
     perG.select(col("_g").as(groupCol), col("n_g"),
@@ -427,7 +424,7 @@ object Outliers {
     // the chi lens's category table, gated exactly as the member gates
     // its own (same exact-count guard, same failure shape)
     val pc = graft.util.GridGuard.gateTable(
-      chiPerCategory(bp, lp, catCol), "driftReport", catCol)
+      Eval.pairPerValueRaw(bp, lp, catCol), "driftReport", catCol)
     val chi = chiSquareOnPc(pc)
       .select(lit("chi2").as("stat"), col("chi2").as("statistic"),
         col("chi2_crit").as("threshold"), col("drifted"))
@@ -439,8 +436,8 @@ object Outliers {
     * NULL-value count (`nullB`/`nullL`, bucketed through the same
     * [[psiBucket]] expression) — identical to [[psiDrift]]'s own bucket
     * aggregation on the raw rows — and every downstream expression (the
-    * +0.5 smoothing, the 6 dp per-term round, the 6 dp total) is the
-    * member's own shape verbatim, so the row equals
+    * [[psiShare]] smoothing, the 6 dp [[psiTerm]], the 6 dp total) is the
+    * member's own, so the row equals
     * `round(psiDrift(base, live).agg(sum(psi)), 6)` bit-for-bit
     * (DriftSuite pins it, NULL values included). */
   private def psiRowFromPer(per: DataFrame, tb: Long, tl: Long,
@@ -455,13 +452,11 @@ object Outliers {
       .agg(sum(col("ca")).as("n_base"), sum(col("cb")).as("n_live"))
     val all = per.sparkSession.range(nBuckets)
       .select(col("id").cast("int").as("bucket"))
-    val p = (col("n_base") + lit(0.5)) / lit(tb + 0.5 * nBuckets)
-    val q = (col("n_live") + lit(0.5)) / lit(tl + 0.5 * nBuckets)
+    val p = psiShare(col("n_base"), lit(tb), nBuckets)
+    val q = psiShare(col("n_live"), lit(tl), nBuckets)
     all.join(counts, Seq("bucket"), "left")
       .na.fill(0L, Seq("n_base", "n_live"))
-      .withColumn("p_base", p).withColumn("p_live", q)
-      .withColumn("psi", round((col("p_live") - col("p_base")) *
-        log(col("p_live") / col("p_base")), 6))
+      .withColumn("psi", round(psiTerm(p, q), 6))
       .agg(round(sum(col("psi")), 6).as("statistic"))
       .select(lit("psi").as("stat"), col("statistic"),
         lit(0.25).as("threshold"),
@@ -634,13 +629,9 @@ object Outliers {
       baseTotal: Long, nBuckets: Int, lo: Double, hi: Double): CellLens = {
     require(nBuckets > 0 && hi > lo && baseTotal > 0)
     val twRaw = (0 until nBuckets).map(k => col(s"_c$k")).reduce(_ + _)
-    val denomL = lit(0.5 * nBuckets)
-    val pDen = lit(baseTotal + 0.5 * nBuckets)
     val terms = (0 until nBuckets).map { k =>
-      val p = (lit(baseCounts.getOrElse(k, 0L)) + lit(0.5)) / pDen
-      val q = (col(s"_c$k") + lit(0.5)) /
-        (twRaw.cast("double") + denomL)
-      (q - p) * log(q / p)
+      psiTerm(psiShare(lit(baseCounts.getOrElse(k, 0L)), lit(baseTotal),
+        nBuckets), psiShare(col(s"_c$k"), twRaw, nBuckets))
     }
     CellLens(Seq("_b" -> psiBucket(col(valCol), nBuckets, lo, hi)),
       _ => (0 until nBuckets).map(k =>
@@ -762,14 +753,12 @@ object Outliers {
     val tw = live.groupBy(col("ws")).agg(sum(col("n_live")).as("tw"))
     val buckets = df.sparkSession.range(nBuckets)
       .select(col("id").cast("int").as("bucket"))
-    val p = (coalesce(col("n_base"), lit(0L)) + lit(0.5)) /
-      lit(tb + 0.5 * nBuckets)
-    val q = (coalesce(col("n_live"), lit(0L)) + lit(0.5)) /
-      (col("tw").cast("double") + lit(0.5 * nBuckets))
+    val p = psiShare(coalesce(col("n_base"), lit(0L)), lit(tb), nBuckets)
+    val q = psiShare(coalesce(col("n_live"), lit(0L)), col("tw"), nBuckets)
     tw.crossJoin(broadcast(buckets))
       .join(broadcast(baseCounts), Seq("bucket"), "left")
       .join(live, Seq("ws", "bucket"), "left")
-      .select(col("ws"), col("tw"), ((q - p) * log(q / p)).as("_term"))
+      .select(col("ws"), col("tw"), psiTerm(p, q).as("_term"))
       .groupBy(col("ws"), col("tw"))
       .agg(round(sum(col("_term")), 6).as("psi"))
       .select(col("ws"), col("tw").as("n"), col("psi"))

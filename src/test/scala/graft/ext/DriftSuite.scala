@@ -154,6 +154,26 @@ class DriftSuite extends AnyFunSuite {
     }
   }
 
+  test("psiDrift: identical slices score 0, shift scores positive, edges clamp") {
+    val base = (0 until 10).flatMap(b => Seq.fill(5)(b / 10.0 + 0.05))
+      .toDF("v")
+    // identical distribution → every bucket's psi is exactly 0
+    val same = Outliers.psiDrift(base, base, "v").orderBy("bucket").collect()
+    assert(same.length == 10)
+    assert(same.forall(r => r.getDouble(5) == 0.0))
+    assert(same.forall(r => r.getLong(1) == 5L && r.getLong(2) == 5L))
+    // live mass moved into the top bucket → that bucket drifts positive,
+    // and every bucket's psi term is non-negative by construction
+    val live = Seq.fill(50)(0.95).toDF("v")
+    val drift = Outliers.psiDrift(base, live, "v").orderBy("bucket").collect()
+    assert(drift(9).getDouble(5) > 0.5)
+    assert(drift.forall(r => r.getDouble(5) >= 0.0))
+    // out-of-range values clamp into the edge bins (counted, not lost)
+    val wild = Seq(-5.0, 99.0).toDF("v")
+    val clamped = Outliers.psiDrift(base, wild, "v").orderBy("bucket").collect()
+    assert(clamped(0).getLong(2) == 1L && clamped(9).getLong(2) == 1L)
+  }
+
   test("ksTest: hand-computed D on a small pair; zero on identical samples") {
     // a = [1,2,3], b = [2,3,3,4]: at v=2 the integer gap |2*4 - 1*3| = 5
     // is the max, so D = 5/12; d_crit = 1.358*sqrt(7/12) > D => no drift.
@@ -590,5 +610,65 @@ class DriftSuite extends AnyFunSuite {
       spark.conf.unset("graft.grid.guard")
       spark.conf.unset(GridGuard.MaxDistinctConf)
     }
+  }
+
+  test("pairwise drift members on an empty or an overlapping side") {
+    val df = (0 until 60).map(i =>
+      ("g" + (i % 3), (i % 10) / 10.0, if (i % 4 == 0) "x" else "y"))
+      .toDF("g", "v", "c")
+    val half = df.filter($"g" === "g0")
+    val none = df.filter(lit(false))
+    def row(f: => org.apache.spark.sql.DataFrame): Seq[Any] = {
+      val rows = f.collect()
+      assert(rows.length == 1, rows.mkString(", "))
+      rows.head.toSeq
+    }
+    def dividesByZero(f: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception](f.collect())
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+      assert(chain(e).exists(_.contains("DIVIDE_BY_ZERO")), chain(e))
+    }
+    // an empty side: KS and chi² divide by its zero count, and the
+    // report fails with them; rank-sum keeps its row (σ = 0: NULL z)
+    for ((a, b) <- Seq((df, none), (none, df))) {
+      dividesByZero(Eval.ksTest(a, b, "v"))
+      dividesByZero(Outliers.chiSquareDrift(a, b, "c"))
+      dividesByZero(Outliers.driftReport(a, b, "v", "c"))
+    }
+    assert(row(Eval.rankSumTest(df, none, "v")) == Seq(60L, 0L, 0.0, null, 0))
+    assert(row(Eval.rankSumTest(none, df, "v")) == Seq(0L, 60L, 0.0, null, 0))
+    // overlapping sides (GridGuardSuite's half ⊂ df): each row of the
+    // subset counts on both sides
+    assert(row(Eval.ksTest(half, df, "v")) ==
+      Seq(20L, 60L, 0.0, 0.35063409227664477, 0))
+    assert(row(Eval.rankSumTest(half, df, "v")) == Seq(20L, 60L, 600.0, 0.0, 0))
+    assert(row(Outliers.chiSquareDrift(half, df, "c")) ==
+      Seq(20L, 60L, 2L, 0.0, 3.746922, 0))
+    assert(Outliers.driftReport(half, df, "v", "c").collect().map(_.toSeq)
+      .toSeq == Seq(Seq("chi2", 0.0, 3.746922, 0),
+        Seq("ks", 0.0, 0.35063409227664477, 0), Seq("psi", 0.0, 0.25, 0),
+        Seq("rank_sum", 0.0, 1.96, 0)))
+  }
+
+  test("pairwise drift members when both sides are empty") {
+    val none = Seq((0.5, "x")).toDF("v", "c").filter(lit(false))
+    def row(f: => org.apache.spark.sql.DataFrame): Seq[Any] = {
+      val rows = f.collect()
+      assert(rows.length == 1, rows.mkString(", "))
+      rows.head.toSeq
+    }
+    // every member keeps its one row: NULL statistics, drifted 0 (the
+    // global aggregates over no values have a row; nothing divides)
+    assert(row(Eval.ksTest(none, none, "v")) == Seq(null, null, null, null, 0))
+    assert(row(Eval.rankSumTest(none, none, "v")) ==
+      Seq(null, null, null, null, 0))
+    assert(row(Outliers.chiSquareDrift(none, none, "c")) ==
+      Seq(null, null, 0L, null, null, 0))
+    // the report keeps its four rows; psi smooths two empty sides to 0
+    assert(Outliers.driftReport(none, none, "v", "c").collect()
+      .map(_.toSeq).toSeq == Seq(Seq("chi2", null, null, 0),
+        Seq("ks", null, null, 0), Seq("psi", 0.0, 0.25, 0),
+        Seq("rank_sum", null, 1.96, 0)))
   }
 }

@@ -530,28 +530,6 @@ class Round8OpsSuite extends AnyFunSuite {
       (2L, "gamma three"), (3L, "delta four")))
   }
 
-  // ---- psiDrift ----------------------------------------------------------
-
-  test("psiDrift: identical slices score 0, shift scores positive, edges clamp") {
-    val base = (0 until 10).flatMap(b => Seq.fill(5)(b / 10.0 + 0.05))
-      .toDF("v")
-    // identical distribution → every bucket's psi is exactly 0
-    val same = Outliers.psiDrift(base, base, "v").orderBy("bucket").collect()
-    assert(same.length == 10)
-    assert(same.forall(r => r.getDouble(5) == 0.0))
-    assert(same.forall(r => r.getLong(1) == 5L && r.getLong(2) == 5L))
-    // live mass moved into the top bucket → that bucket drifts positive,
-    // and every bucket's psi term is non-negative by construction
-    val live = Seq.fill(50)(0.95).toDF("v")
-    val drift = Outliers.psiDrift(base, live, "v").orderBy("bucket").collect()
-    assert(drift(9).getDouble(5) > 0.5)
-    assert(drift.forall(r => r.getDouble(5) >= 0.0))
-    // out-of-range values clamp into the edge bins (counted, not lost)
-    val wild = Seq(-5.0, 99.0).toDF("v")
-    val clamped = Outliers.psiDrift(base, wild, "v").orderBy("bucket").collect()
-    assert(clamped(0).getLong(2) == 1L && clamped(9).getLong(2) == 1L)
-  }
-
   // ---- minhashLshCross ---------------------------------------------------
 
   test("minhashLshCross == within-union LSH restricted to cross-side pairs") {
@@ -867,53 +845,6 @@ class Round8OpsSuite extends AnyFunSuite {
     assert(keyed == 1, s"expected 1 keyed exchange, got $keyed:\n$plan")
   }
 
-  test("prCurve's only keyed shuffle is the per-score aggregate") {
-    val df = (1L to 100L).map(i => (i * 0.01, (i % 2).toInt))
-      .toDF("score", "label")
-    // the frame handed to the gate: the corpus collapses per score in
-    // one keyed shuffle, and the gate pins that table
-    val plan = Eval.prCurvePerScore(df, "score", "label")
-      .queryExecution.executedPlan.toString
-    val keyed = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(keyed == 1,
-      s"the corpus must collapse per-score before the sweep, got $keyed keyed exchanges:\n$plan")
-    val gated = Eval.prCurve(df, "score", "label")
-      .queryExecution.executedPlan.toString
-    assert(!"Exchange hashpartitioning".r.findAllIn(gated).hasNext,
-      s"gated prCurve must read the pinned per-score table, not re-shuffle:\n$gated")
-  }
-
-  // ---- Eval: prCurve / aucRoc --------------------------------------------
-
-  test("prCurve replays the hand-computed threshold sweep") {
-    val df = Seq((0.9, 1), (0.8, 1), (0.8, 0), (0.5, 0), (0.3, 1))
-      .toDF("score", "label")
-    val got = Eval.prCurve(df, "score", "label")
-      .orderBy($"threshold".desc).collect()
-      .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4))).toSeq
-    assert(got == Seq(
-      (0.9, 1L, 0L, 1.0, 1.0 / 3.0),
-      (0.8, 2L, 1L, 2.0 / 3.0, 2.0 / 3.0),
-      (0.5, 2L, 2L, 2.0 / 4.0, 2.0 / 3.0),
-      (0.3, 3L, 2L, 3.0 / 5.0, 3.0 / 3.0)))
-  }
-
-  test("aucRoc is the exact Mann-Whitney statistic with half-credit ties") {
-    val df = Seq((0.9, 1), (0.8, 1), (0.8, 0), (0.5, 0), (0.3, 1))
-      .toDF("score", "label")
-    val r = Eval.aucRoc(df, "score", "label").collect()(0)
-    // pairs: 5 wins + 1 tie (0.8 vs 0.8) of 6 → (5 + 0.5)/6... counted:
-    // wins 3.5 of 6 comparisons (see ranks: 1 + 3.5 + 5 = 9.5)
-    assert(r.getDouble(0) == 3.5 / 6.0)
-    assert(r.getLong(1) == 3L && r.getLong(2) == 2L)
-    // perfect separation → exactly 1; all-tied scores → exactly 0.5
-    val perfect = Seq((0.9, 1), (0.8, 1), (0.2, 0)).toDF("score", "label")
-    assert(Eval.aucRoc(perfect, "score", "label").collect()(0).getDouble(0) == 1.0)
-    val tied = Seq((0.5, 1), (0.5, 0), (0.5, 1), (0.5, 0)).toDF("score", "label")
-    assert(Eval.aucRoc(tied, "score", "label").collect()(0).getDouble(0) == 0.5)
-  }
-
   // ---- winsorize / ecdf --------------------------------------------------
 
   test("winsorize clamps into the per-key interpolated percentile band") {
@@ -929,83 +860,6 @@ class Round8OpsSuite extends AnyFunSuite {
     assert(got(10L) == 10.0)
     // a single-value key clamps to itself
     assert(got(100L) == 1000.0)
-  }
-
-  test("classMetrics: hand-computed P/R/F1; never-predicted class gets NULLs") {
-    val df = Seq(("a", "a"), ("a", "b"), ("b", "b"), ("b", "b"), ("c", "a"))
-      .toDF("label", "pred")
-    val rows = Eval.classMetrics(df, "label", "pred")
-      .orderBy("cls").collect()
-    def m(i: Int) = (rows(i).getString(0), rows(i).getLong(1),
-      rows(i).getLong(2), rows(i).getLong(3))
-    assert(m(0) == ("a", 2L, 2L, 1L) && rows(0).getDouble(4) == 0.5 &&
-      rows(0).getDouble(5) == 0.5 && rows(0).getDouble(6) == 0.5)
-    assert(m(1) == ("b", 2L, 3L, 2L) && rows(1).getDouble(5) == 1.0 &&
-      rows(1).getDouble(6) == 0.8)
-    assert(m(2) == ("c", 1L, 0L, 0L) && rows(2).isNullAt(4) &&
-      rows(2).getDouble(5) == 0.0 && rows(2).isNullAt(6))
-  }
-
-  test("cohenKappa replays the chance-corrected agreement exactly") {
-    val df = Seq((1, 1), (1, 0), (0, 0), (0, 0)).toDF("a", "b")
-    val r = Eval.cohenKappa(df, "a", "b").collect()(0)
-    assert(r.getLong(0) == 4L && r.getDouble(1) == 0.75 &&
-      r.getDouble(2) == 0.5 && r.getDouble(3) == 0.5)
-    // perfect agreement → kappa 1; independence-shaped table → kappa 0
-    val perfect = Seq((1, 1), (0, 0)).toDF("a", "b")
-    assert(Eval.cohenKappa(perfect, "a", "b").collect()(0).getDouble(3) == 1.0)
-    val indep = Seq((1, 1), (1, 0), (0, 1), (0, 0)).toDF("a", "b")
-    assert(Eval.cohenKappa(indep, "a", "b").collect()(0).getDouble(3) == 0.0)
-  }
-
-  test("calibrationBins: sigmoid deciles, exact pos_rate, top-bin clamp") {
-    // logit 0 → p=0.5 (bin 5); big positive logits clamp into bin 9
-    val df = Seq((0.0, 1), (0.0, 0), (100.0, 1), (100.0, 1), (-100.0, 0))
-      .toDF("score", "label")
-    val rows = Eval.calibrationBins(df, "score", "label")
-      .orderBy("bin").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-    assert(rows.toSeq == Seq(
-      (0, 1L, 0.0, 0.0),        // p≈0 → bin 0, no positives
-      (5, 2L, 0.5, 0.5),        // the two logit-0 rows, one positive
-      (9, 2L, 1.0, 1.0)))       // p≈1 clamps to bin 9 (not bin 10)
-  }
-
-  test("aucRocBy slices == global aucRoc per slice; one-class slices NULL") {
-    val df = Seq(("x", 0.9, 1), ("x", 0.8, 0), ("x", 0.5, 1),
-      ("y", 0.7, 1), ("y", 0.6, 0), ("z", 0.5, 1), ("z", 0.4, 1))
-      .toDF("g", "score", "label")
-    val by = Eval.aucRocBy(df, "g", "score", "label").orderBy("g").collect()
-    val gx = Eval.aucRoc(df.filter($"g" === "x"), "score", "label")
-      .collect()(0).getDouble(0)
-    val gy = Eval.aucRoc(df.filter($"g" === "y"), "score", "label")
-      .collect()(0).getDouble(0)
-    assert(by(0).getDouble(1) == gx && by(1).getDouble(1) == gy)
-    assert(by(2).isNullAt(1)) // z has no negatives → undefined, not 0.5
-  }
-
-  test("aucRoc is invariant under the ecdf transform (monotone, tie-preserving)") {
-    val rnd = new scala.util.Random(23)
-    val df = (1 to 200).map(_ =>
-      (math.floor(rnd.nextDouble() * 20) / 20.0, rnd.nextInt(2)))
-      .toDF("score", "label")
-    val raw = Eval.aucRoc(df, "score", "label").collect()(0).getDouble(0)
-    val viaEcdf = Eval.aucRoc(
-      Eval.ecdf(df, "score"), "pct", "label").collect()(0).getDouble(0)
-    assert(raw == viaEcdf) // exact: identical rank structure
-  }
-
-  test("blend == the weighted left-assoc sum of each signal's ecdf rank") {
-    val df = Seq((1L, 1.0, 10.0), (2L, 2.0, 5.0), (3L, 3.0, 5.0))
-      .toDF("id", "a", "b")
-    val got = Eval.blend(df, Seq("a" -> 0.7, "b" -> 0.3))
-      .orderBy("id").collect().map(_.getDouble(3)).toSeq
-    // a ranks: 0.5/3, 1.5/3, 2.5/3; b: 10 → 2.5/3, the tied 5s → 1/3
-    val want = Seq(
-      0.7 * (0.5 / 3.0) + 0.3 * (2.5 / 3.0),
-      0.7 * (1.5 / 3.0) + 0.3 * (1.0 / 3.0),
-      0.7 * (2.5 / 3.0) + 0.3 * (1.0 / 3.0))
-    assert(got == want)
   }
 
   test("robustScale: modified z for all rows, NULL for zero-MAD keys") {
@@ -1253,55 +1107,6 @@ class Round8OpsSuite extends AnyFunSuite {
         windowDur = "10 minutes", maxHamming = 1)
       .collect().map(_.getLong(1)).toSet
     assert(got == Set(1L, 2L))
-  }
-
-  test("eval guards: degenerate inputs yield NULL, not an ANSI fault") {
-    // all-negative corpus → recall undefined on every prCurve row
-    val neg = Seq((0.9, 0), (0.5, 0)).toDF("score", "label")
-    val pr = Eval.prCurve(neg, "score", "label").collect()
-    assert(pr.forall(_.isNullAt(4)) && pr.forall(!_.isNullAt(3)))
-    // single-class corpus → AUC undefined
-    val auc = Eval.aucRoc(neg, "score", "label").collect()(0)
-    assert(auc.isNullAt(0) && auc.getLong(1) == 0L && auc.getLong(2) == 2L)
-    // constant, agreeing raters → p_e = 1 → kappa undefined
-    val const = Seq((1, 1), (1, 1)).toDF("a", "b")
-    val k = Eval.cohenKappa(const, "a", "b").collect()(0)
-    assert(k.getDouble(2) == 1.0 && k.isNullAt(3))
-  }
-
-  test("blendKeyed == blend bit-for-bit, including NULL-signal rows") {
-    val rnd = new scala.util.Random(7)
-    val df = (1L to 100L).map { i =>
-      (i,
-        if (i % 17 == 0) None else Some(math.floor(rnd.nextDouble() * 10) / 10.0),
-        Some(math.floor(rnd.nextDouble() * 5) / 5.0),
-        Some(rnd.nextInt(3).toDouble))
-    }.toDF("id", "a", "b", "c")
-    val ws = Seq("a" -> 0.5, "b" -> 0.2, "c" -> 0.3)
-    def m(d: org.apache.spark.sql.DataFrame) = d
-      .select("id", "a", "b", "c", "blended").collect()
-      .map(r => r.getLong(0) ->
-        (0 to 3).map(i => if (r.isNullAt(i + 1)) null
-          else r.getDouble(i + 1)).toSeq).toMap
-    assert(m(Eval.blendKeyed(df, "id", ws)) == m(Eval.blend(df, ws)))
-    // the shared-scan plan carries ONE corpus-keyed aggregate over the
-    // exploded signals plus the pivot — not one aggregate per signal
-    val plan = Eval.blendKeyed(df, "id", ws)
-      .queryExecution.optimizedPlan.toString
-    assert("Generate explode".r.findAllIn(plan).size <= 1)
-  }
-
-  test("blend keeps rows with a NULL signal (NULL blended), matching ecdf") {
-    val df = Seq((1L, Some(1.0), Some(10.0)), (2L, None, Some(5.0)),
-      (3L, Some(3.0), Some(5.0)))
-      .toDF("id", "a", "b")
-    val got = Eval.blend(df, Seq("a" -> 0.7, "b" -> 0.3))
-      .orderBy("id").collect()
-    assert(got.length == 3)            // row 2 survives
-    assert(got(1).isNullAt(3))         // with NULL blended
-    assert(!got(0).isNullAt(3) && !got(2).isNullAt(3))
-    // non-NULL ranks exclude the NULL row from N: a's table is over 2 rows
-    assert(got(0).getDouble(3) == 0.7 * (0.5 / 2.0) + 0.3 * (2.5 / 3.0))
   }
 
   test("kaplanMeier: hand-computed curve, censoring, terminal-death pin") {

@@ -977,38 +977,7 @@ class Round9OpsSuite extends AnyFunSuite {
     assert(moved.getAs[Double]("mean_cos") < 1.0)
   }
 
-  // ---- bootstrapCI -------------------------------------------------------
-
-  test("bootstrapCI: CI brackets the mean, is deterministic, and collapses on constant data") {
-    val df = (1L to 200L).map(i => (i, (i % 10).toDouble)).toDF("id", "x")
-    val r1 = Eval.bootstrapCI(df, "id", "x").head()
-    val r2 = Eval.bootstrapCI(df, "id", "x").head()
-    assert(r1.toSeq == r2.toSeq, "same salt → identical CI, always")
-    assert(r1.getAs[Long]("n") == 200L)
-    assert(r1.getAs[Double]("mean") == 4.5)
-    assert(r1.getAs[Double]("ci_lo") <= 4.5 && 4.5 <= r1.getAs[Double]("ci_hi"))
-    assert(r1.getAs[Double]("ci_lo") < r1.getAs[Double]("ci_hi"))
-    // a different salt reweights → a (generally) different CI
-    val r3 = Eval.bootstrapCI(df, "id", "x", salt = "other").head()
-    assert(r3.getAs[Double]("ci_lo") != r1.getAs[Double]("ci_lo") ||
-      r3.getAs[Double]("ci_hi") != r1.getAs[Double]("ci_hi"))
-    // constant data: every replicate mean is the constant
-    val c = Eval.bootstrapCI(
-      (1L to 100L).map((_, 7.0)).toDF("id", "x"), "id", "x").head()
-    assert(c.getAs[Double]("ci_lo") == 7.0 && c.getAs[Double]("ci_hi") == 7.0)
-  }
-
-  test("bootstrapCIBy slices agree with per-slice bootstrapCI") {
-    val df = (1L to 120L).map(i => (s"g${i % 2}", i, (i % 7).toDouble))
-      .toDF("g", "id", "x")
-    val sliced = Eval.bootstrapCIBy(df, "g", "id", "x")
-      .collect().map(r => r.getAs[String]("g") -> r.toSeq.drop(1)).toMap
-    for (g <- Seq("g0", "g1")) {
-      val solo = Eval.bootstrapCI(df.filter(col("g") === g), "id", "x")
-        .head().toSeq
-      assert(sliced(g) == solo, s"slice $g must equal the solo CI")
-    }
-  }
+  // ---- PoissonThresholds -------------------------------------------------
 
   test("PoissonThresholds: weights average ~1 over the bucket space") {
     val th = Eval.PoissonThresholds
