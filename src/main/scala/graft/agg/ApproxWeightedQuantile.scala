@@ -3,19 +3,16 @@ package graft.agg
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Bounded weighted histogram: at most `maxBins` (center, weight) bins kept
   * sorted by center. Inserting an existing center adds weight (lossless);
   * overflowing merges the closest adjacent pair into its weighted mean
   * (Ben-Haim & Tom-Tov streaming-histogram rule). */
 final class WQSketch(val maxBins: Int, var cs: Array[Double],
-    var ws: Array[Double], var n: Int) {
+    var ws: Array[Double], var n: Int) extends WeightedPairs {
 
   def add(v: Double, w: Double): Unit = {
     // binary search for v in cs[0, n)
@@ -73,25 +70,12 @@ case class ApproxWeightedQuantile(
     maxBins: Int = 256,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[WQSketch] with BinaryLike[Expression] {
+  extends WeightedQuantileAgg[WQSketch] {
 
   override def prettyName: String = "approx_weighted_quantile"
-  override def nullable: Boolean = true
-  override def dataType: DataType = DoubleType
 
   override def createAggregationBuffer(): WQSketch =
     new WQSketch(maxBins, new Array[Double](16), new Array[Double](16), 0)
-
-  override def update(buf: WQSketch, input: InternalRow): WQSketch = {
-    val v = left.eval(input)
-    val w = right.eval(input)
-    if (v != null && w != null) {
-      val vd = v.asInstanceOf[Double]
-      val wd = w.asInstanceOf[Double]
-      if (!vd.isNaN && !wd.isNaN) buf.add(vd, wd)
-    }
-    buf
-  }
 
   override def merge(a: WQSketch, b: WQSketch): WQSketch = {
     var i = 0
@@ -102,23 +86,7 @@ case class ApproxWeightedQuantile(
   override def eval(buf: WQSketch): Any = {
     val n = buf.n
     if (n == 0) return null
-    val ecdf = new Array[Double](n)
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += buf.ws(i); ecdf(i) = acc; i += 1 }
-    val p = q * (acc - 1.0)
-    def ssRight(key: Double): Int = {
-      var lo = 0; var hi = n
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (ecdf(mid) <= key) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
-    val lo = math.min(ssRight(p), n - 1)
-    val hi = math.min(ssRight(p + 1.0), n - 1)
-    val fHi = p - math.floor(p)
-    buf.cs(lo) * (1.0 - fHi) + buf.cs(hi) * fHi
+    WeightedQuantile.interpolate(n, q, buf.cs(_), buf.ws(_))
   }
 
   override def serialize(buf: WQSketch): Array[Byte] = {

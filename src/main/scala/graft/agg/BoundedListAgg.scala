@@ -1,7 +1,5 @@
 package graft.agg
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
@@ -76,27 +74,14 @@ case class BoundedListAgg(
     UTF8String.fromString(sb.toString)
   }
 
-  override def serialize(buf: java.util.TreeSet[UTF8String]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.forEach { v =>
-      val bytes = v.getBytes
-      out.writeInt(bytes.length); out.write(bytes)
-    }
-    out.flush(); bos.toByteArray
-  }
+  // `[n:int]([len:int][bytes])*`: the count-map aggregates' UTF-8 key
+  // codec over the ascending set, with no counts
+  override def serialize(buf: java.util.TreeSet[UTF8String]): Array[Byte] =
+    CountsAgg.Utf8Key.encodeKeys(buf.size, buf)
 
   override def deserialize(bytes: Array[Byte]): java.util.TreeSet[UTF8String] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
     val buf = new java.util.TreeSet[UTF8String]()
-    var i = 0
-    while (i < n) {
-      val len = in.readInt(); val b = new Array[Byte](len); in.readFully(b)
-      buf.add(UTF8String.fromBytes(b))
-      i += 1
-    }
+    CountsAgg.Utf8Key.decodeKeys(bytes)(buf.add)
     buf
   }
 

@@ -1,80 +1,54 @@
 package graft.agg
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
-/** Shared stateful kernel of the WINDOWED drift monitors
-  * ([[graft.ext.Eval.ksDriftWindowed]],
-  * [[graft.ext.Eval.rankSumDriftWindowed]]) — the [[VectorMeanAgg]]
-  * pattern: one aggregate whose buffer Structured Streaming can carry per
-  * window.
-  *
-  * Buffer = the group's per-distinct-value counts — bounded by score
-  * GRANULARITY, not event rate, and HARD-CAPPED at `cap` (the
-  * [[graft.util.GridGuard]] ceiling carried into streaming state: an
-  * unrounded score column fails loudly at the first over-cap update
-  * instead of growing per-window state without bound). The baseline is a
-  * driver-held table baked into the expression — granularity-bounded, so
-  * it ships to executors like any broadcast literal. Null inputs are
-  * skipped; an all-null group returns a null struct. */
-abstract class ValueCountsDriftAgg
-  extends TypedImperativeAggregate[mutable.HashMap[Double, Long]]
-  with UnaryLike[Expression] {
+/** What the windowed drift monitors share beyond their [[CountsAgg]]
+  * state: the numeric pair's over-cap remedy and baseline walk, and the
+  * 6 dp rounding of the category pair. Each monitor counts a group's
+  * distinct values — bounded by score GRANULARITY, not event rate —
+  * against a driver-held baseline baked into the expression
+  * (granularity-bounded, so it ships to executors like any broadcast
+  * literal); an all-null group returns a null struct. */
+private object DriftAggs {
 
-  def cap: Long
-  override def nullable: Boolean = true
+  /** The numeric monitors' over-cap remedy: an unrounded score column
+    * fails loudly at the first over-cap update. */
+  val OverCapValues: String = "values — feed ROUNDED scores (the " +
+    "graft.grid.maxDistinct discipline); unbounded granularity means " +
+    "unbounded per-window state"
 
-  override def createAggregationBuffer(): mutable.HashMap[Double, Long] =
-    mutable.HashMap.empty
+  /** The batch ops' 6 dp rounding (Spark round = HALF_UP via BigDecimal). */
+  def r6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  private def guard(m: mutable.HashMap[Double, Long]): Unit =
-    require(m.size <= cap,
-      s"$prettyName: over $cap distinct live values — feed ROUNDED " +
-        "scores (the graft.grid.maxDistinct discipline); unbounded " +
-        "granularity means unbounded per-window state")
-
-  override def update(buf: mutable.HashMap[Double, Long],
-      input: InternalRow): mutable.HashMap[Double, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val d = v.asInstanceOf[Double]
-      buf.update(d, buf.getOrElse(d, 0L) + 1L)
-      guard(buf)
+  /** Walks the union of a sorted baseline (values + CUMULATIVE counts) and
+    * the live counts' keys in ascending order, calling
+    * `step(baseCount, liveCount)` once per value — 0 on the side that
+    * lacks it. */
+  def walk(baseVals: Array[Double], baseCum: Array[Long],
+      live: mutable.HashMap[Double, Long])(step: (Long, Long) => Unit): Unit = {
+    val liveVals = live.keysIterator.toArray
+    java.util.Arrays.sort(liveVals)
+    var i = 0; var j = 0
+    while (i < baseVals.length || j < liveVals.length) {
+      val takeBase = j >= liveVals.length ||
+        (i < baseVals.length && baseVals(i) <= liveVals(j))
+      val takeLive = i >= baseVals.length ||
+        (j < liveVals.length && liveVals(j) <= baseVals(i))
+      var cb = 0L; var cl = 0L
+      if (takeBase) {
+        cb = baseCum(i) - (if (i == 0) 0L else baseCum(i - 1)); i += 1
+      }
+      if (takeLive) { cl = live(liveVals(j)); j += 1 }
+      step(cb, cl)
     }
-    buf
-  }
-
-  override def merge(a: mutable.HashMap[Double, Long],
-      b: mutable.HashMap[Double, Long]): mutable.HashMap[Double, Long] = {
-    b.foreach { case (v, c) => a.update(v, a.getOrElse(v, 0L) + c) }
-    guard(a)
-    a
-  }
-
-  override def serialize(buf: mutable.HashMap[Double, Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (v, c) => out.writeDouble(v); out.writeLong(c) }
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[Double, Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.HashMap.empty[Double, Long]
-    var i = 0
-    while (i < n) { buf.update(in.readDouble(), in.readLong()); i += 1 }
-    buf
   }
 }
 
@@ -85,20 +59,26 @@ abstract class ValueCountsDriftAgg
   * integer-exact gap arithmetic as [[graft.ext.Eval.ksTest]]
   * (max |cna·n_b − cnb·n_a|, doubles only in the final two ratios), so the
   * per-window result is bit-identical to `ksTest(baseline, windowSlice)` —
-  * suite-pinned. Output: (n_live, d, d_crit, drifted). */
+  * suite-pinned. State: the group's [[CountsAgg]] per-value counts,
+  * hard-capped at `cap` (the [[graft.util.GridGuard]] ceiling: an
+  * unrounded score column fails at the first over-cap update instead of
+  * growing per-window state without bound). Output: (n_live, d, d_crit,
+  * drifted). */
 case class KsDriftAgg(
     child: Expression,
     baseVals: Array[Double],
     baseCum: Array[Long],
-    cap: Long,
+    override val cap: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends ValueCountsDriftAgg {
+  extends CountsAgg[Double] {
 
   require(baseVals.length == baseCum.length && baseVals.nonEmpty,
     "ks_drift: empty or misaligned baseline")
 
   override def prettyName: String = "ks_drift"
+  override protected def layout = CountsAgg.DoubleKey
+  override protected def overCap: String = DriftAggs.OverCapValues
   override def dataType: DataType = StructType(Seq(
     StructField("n_live", LongType, nullable = false),
     StructField("d", DoubleType, nullable = false),
@@ -108,23 +88,14 @@ case class KsDriftAgg(
   override def eval(buf: mutable.HashMap[Double, Long]): Any = {
     if (buf.isEmpty) return null
     val nA = baseCum(baseCum.length - 1)
-    val liveVals = buf.keysIterator.toArray
-    java.util.Arrays.sort(liveVals)
     var nB = 0L
     buf.valuesIterator.foreach(nB += _)
-    // two-pointer walk over the union of jump points; at each, the gap
-    // numerator |cna·n_b − cnb·n_a| is exact integer arithmetic (the
-    // ksTest shape — overflow posture as there: int64-safe to ~3·10⁹
-    // rows per side)
-    var i = 0; var j = 0; var cnb = 0L; var dnum = 0L
-    while (i < baseVals.length || j < liveVals.length) {
-      val takeBase = j >= liveVals.length ||
-        (i < baseVals.length && baseVals(i) <= liveVals(j))
-      val takeLive = i >= baseVals.length ||
-        (j < liveVals.length && liveVals(j) <= baseVals(i))
-      if (takeBase) i += 1
-      if (takeLive) { cnb += buf(liveVals(j)); j += 1 }
-      val cna = if (i == 0) 0L else baseCum(i - 1)
+    // at each jump point of either step ECDF the gap numerator
+    // |cna·n_b − cnb·n_a| is exact integer arithmetic (the ksTest shape —
+    // overflow posture as there: int64-safe to ~3·10⁹ rows per side)
+    var cna = 0L; var cnb = 0L; var dnum = 0L
+    DriftAggs.walk(baseVals, baseCum, buf) { (cb, cl) =>
+      cna += cb; cnb += cl
       val gap = math.abs(cna * nB - cnb * nA)
       if (gap > dnum) dnum = gap
     }
@@ -171,15 +142,17 @@ case class RankSumDriftAgg(
     child: Expression,
     baseVals: Array[Double],
     baseCum: Array[Long],
-    cap: Long,
+    override val cap: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends ValueCountsDriftAgg {
+  extends CountsAgg[Double] {
 
   require(baseVals.length == baseCum.length && baseVals.nonEmpty,
     "rank_sum_drift: empty or misaligned baseline")
 
   override def prettyName: String = "rank_sum_drift"
+  override protected def layout = CountsAgg.DoubleKey
+  override protected def overCap: String = DriftAggs.OverCapValues
   override def dataType: DataType = StructType(Seq(
     StructField("n_live", LongType, nullable = false),
     StructField("u", DoubleType, nullable = false),
@@ -189,28 +162,18 @@ case class RankSumDriftAgg(
   override def eval(buf: mutable.HashMap[Double, Long]): Any = {
     if (buf.isEmpty) return null
     val nA = baseCum(baseCum.length - 1)
-    val liveVals = buf.keysIterator.toArray
-    java.util.Arrays.sort(liveVals)
     var nB = 0L
     buf.valuesIterator.foreach(nB += _)
     // tie term in DOUBLES (ADVICE r12, mirroring Eval.rankSumTest): t³
     // in int64 silently wraps past ~2·10⁶ rows tied on one value; the
     // double form is exact below 2⁵³ and degrades to rounding, not wrap
-    var i = 0; var j = 0; var cum = 0L; var rb = 0.0; var ties = 0.0
-    while (i < baseVals.length || j < liveVals.length) {
-      val takeBase = j >= liveVals.length ||
-        (i < baseVals.length && baseVals(i) <= liveVals(j))
-      val takeLive = i >= baseVals.length ||
-        (j < liveVals.length && liveVals(j) <= baseVals(i))
-      var nv = 0L; var cb = 0L
-      if (takeBase) {
-        nv += baseCum(i) - (if (i == 0) 0L else baseCum(i - 1)); i += 1
-      }
-      if (takeLive) { cb = buf(liveVals(j)); nv += cb; j += 1 }
+    var cum = 0L; var rb = 0.0; var ties = 0.0
+    DriftAggs.walk(baseVals, baseCum, buf) { (cb, cl) =>
+      val nv = cb + cl
       // batch shape: avgrank = (cum_through_v − nv) + (nv + 1)/2, an
       // exact 0.5-multiple; rb accumulates exact halves (order-free)
       val avgrank = cum.toDouble + (nv + 1L).toDouble / 2.0
-      rb += cb.toDouble * avgrank
+      rb += cl.toDouble * avgrank
       ties += nv.toDouble * nv * nv - nv
       cum += nv
     }
@@ -256,16 +219,17 @@ object RankSumDriftAgg {
 case class ChiSquareDriftAgg(
     child: Expression,
     baseCounts: Map[String, Long],
-    cap: Long,
+    override val cap: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
-  with UnaryLike[Expression] {
+  extends CountsAgg[String] {
 
   require(baseCounts.nonEmpty, "chi2_drift: empty baseline")
 
   override def prettyName: String = "chi2_drift"
-  override def nullable: Boolean = true
+  override protected def layout = CountsAgg.StringKey
+  override protected def overCap: String = "categories — a free-text " +
+    "column is not a category (the graft.grid.maxDistinct discipline)"
   override def dataType: DataType = StructType(Seq(
     StructField("n_live", LongType, nullable = false),
     StructField("k", LongType, nullable = false),
@@ -273,31 +237,8 @@ case class ChiSquareDriftAgg(
     StructField("chi2_crit", DoubleType, nullable = true),
     StructField("drifted", IntegerType, nullable = false)))
 
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty
-
-  private def guard(m: mutable.HashMap[String, Long]): Unit =
-    require(m.size <= cap,
-      s"chi2_drift: over $cap distinct live categories — a free-text " +
-        "column is not a category (the graft.grid.maxDistinct discipline)")
-
-  override def update(buf: mutable.HashMap[String, Long],
-      input: InternalRow): mutable.HashMap[String, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val c = v.toString
-      buf.update(c, buf.getOrElse(c, 0L) + 1L)
-      guard(buf)
-    }
-    buf
-  }
-
-  override def merge(a: mutable.HashMap[String, Long],
-      b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
-    b.foreach { case (v, c) => a.update(v, a.getOrElse(v, 0L) + c) }
-    guard(a)
-    a
-  }
+  override protected def observe(buf: mutable.HashMap[String, Long],
+      v: Any): Unit = add(buf, v.toString)
 
   override def eval(buf: mutable.HashMap[String, Long]): Any = {
     if (buf.isEmpty) return null
@@ -321,42 +262,8 @@ case class ChiSquareDriftAgg(
     val dof = (k - 1L).toDouble
     val wh = dof * math.pow(1.0 - 2.0 / (9.0 * dof) +
       1.6449 * math.sqrt(2.0 / (9.0 * dof)), 3)
-    // the batch op's 6 dp rounding (Spark round = HALF_UP via BigDecimal)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val (c6, w6) = (r6(chi2), r6(wh))
+    val (c6, w6) = (DriftAggs.r6(chi2), DriftAggs.r6(wh))
     InternalRow(nL0, k, c6, w6, if (c6 > w6) 1 else 0)
-  }
-
-  // length-prefixed UTF-8, NOT writeUTF (ADVICE r12): writeUTF throws
-  // UTFDataFormatException past 65,535 bytes, and the GridGuard cap
-  // bounds distinct COUNT, not string length — a long free-text value
-  // accepted by update() must not kill the task at state serialization
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (v, c) =>
-      val b = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out.writeInt(b.length); out.write(b); out.writeLong(c)
-    }
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.HashMap.empty[String, Long]
-    var i = 0
-    while (i < n) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      buf.update(new String(b, java.nio.charset.StandardCharsets.UTF_8),
-        in.readLong())
-      i += 1
-    }
-    buf
   }
 
   override def withNewMutableAggBufferOffset(o: Int): ChiSquareDriftAgg =
@@ -399,10 +306,12 @@ case class VocabDriftAgg(
     alpha: Double,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
-  with UnaryLike[Expression] {
+  extends CountsAgg[String] {
 
   require(baseCounts.nonEmpty, "vocab_drift: empty baseline vocabulary")
+  // alpha = 0 puts log(0) terms in eval whenever a category is empty on
+  // either side (an all-covering top-K leaves the OOV cell at 0)
+  require(alpha > 0, s"vocab_drift: smoothing alpha must be > 0, got $alpha")
   require(baseTotal >= baseCounts.valuesIterator.sum,
     "vocab_drift: baseTotal smaller than the top-K mass it must contain")
 
@@ -411,43 +320,28 @@ case class VocabDriftAgg(
   private val Oov = " "
 
   override def prettyName: String = "vocab_drift"
-  override def nullable: Boolean = true
+  override protected def layout = CountsAgg.StringKey
   override def dataType: DataType = StructType(Seq(
     StructField("n_live", LongType, nullable = false),
     StructField("kl_ab", DoubleType, nullable = false),
     StructField("kl_ba", DoubleType, nullable = false),
     StructField("js", DoubleType, nullable = false)))
 
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty
-
-  private def add(buf: mutable.HashMap[String, Long], tok0: String): Unit = {
-    val tok = if (baseCounts.contains(tok0)) tok0 else Oov
-    buf.update(tok, buf.getOrElse(tok, 0L) + 1L)
-  }
+  private def project(buf: mutable.HashMap[String, Long], tok: String): Unit =
+    add(buf, if (baseCounts.contains(tok)) tok else Oov)
 
   // accepts a single token (the exploded form) OR a whole token array
   // (the fused-gate form, where the row grain must stay one-per-document
   // so the sibling aggregates in the same grouping see each doc once)
-  override def update(buf: mutable.HashMap[String, Long],
-      input: InternalRow): mutable.HashMap[String, Long] = {
-    child.eval(input) match {
-      case null => ()
-      case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-        var i = 0
-        while (i < a.numElements()) {
-          if (!a.isNullAt(i)) add(buf, a.getUTF8String(i).toString)
-          i += 1
-        }
-      case v => add(buf, v.toString)
-    }
-    buf
-  }
-
-  override def merge(a: mutable.HashMap[String, Long],
-      b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
-    b.foreach { case (v, c) => a.update(v, a.getOrElse(v, 0L) + c) }
-    a
+  override protected def observe(buf: mutable.HashMap[String, Long],
+      v: Any): Unit = v match {
+    case a: ArrayData =>
+      var i = 0
+      while (i < a.numElements()) {
+        if (!a.isNullAt(i)) project(buf, a.getUTF8String(i).toString)
+        i += 1
+      }
+    case t => project(buf, t.toString)
   }
 
   override def eval(buf: mutable.HashMap[String, Long]): Any = {
@@ -472,37 +366,7 @@ case class VocabDriftAgg(
       js += pa * math.log(pa * 2.0 / (pa + pb)) / 2.0 +
         pb * math.log(pb * 2.0 / (pa + pb)) / 2.0
     }
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    InternalRow(nL, r6(klAb), r6(klBa), r6(js))
-  }
-
-  // the ChiSquareDriftAgg length-prefixed form: tokens are free text
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (v, c) =>
-      val b = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out.writeInt(b.length); out.write(b); out.writeLong(c)
-    }
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.HashMap.empty[String, Long]
-    var i = 0
-    while (i < n) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      buf.update(new String(b, java.nio.charset.StandardCharsets.UTF_8),
-        in.readLong())
-      i += 1
-    }
-    buf
+    InternalRow(nL, DriftAggs.r6(klAb), DriftAggs.r6(klBa), DriftAggs.r6(js))
   }
 
   override def withNewMutableAggBufferOffset(o: Int): VocabDriftAgg =

@@ -1,14 +1,9 @@
 package graft.agg
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,45 +18,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * whose non-null values are all "falsy" (empty string / 0 / NaN) yields
   * null, mirroring the `.any()` guard.
   *
-  * State is one (value → count) map per group — bounded by the distinct
-  * count of a categorical column, so safe at 100 TB scale. Supports
-  * StringType directly; numerics are cast to double by the Column helper.
+  * State is the shared [[CountsAgg]] (value → count) map per group —
+  * bounded by the distinct count of a categorical column, so safe at
+  * 100 TB scale. Supports StringType directly; numerics are cast to double
+  * by the Column helper.
   */
 case class MajorAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[Any, Long]]
-  with UnaryLike[Expression] {
-
-  private def isString = child.dataType == StringType
+  extends CountsAgg[Any] {
 
   override def prettyName: String = "major"
-  override def nullable: Boolean = true
   override def dataType: DataType = child.dataType
 
-  override def createAggregationBuffer(): mutable.HashMap[Any, Long] =
-    mutable.HashMap.empty
+  // string keys are UTF8Strings, any other child is cast to double
+  @transient override protected lazy val layout: CountsAgg.KeyLayout[Any] =
+    (if (child.dataType == StringType) CountsAgg.Utf8Key else CountsAgg.DoubleKey)
+      .asInstanceOf[CountsAgg.KeyLayout[Any]]
 
-  override def update(
-      buf: mutable.HashMap[Any, Long], input: InternalRow): mutable.HashMap[Any, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val key = v match {
-        case s: UTF8String => s.clone() // detach from the unsafe-row buffer
-        case d: java.lang.Double if d.isNaN => null // value_counts drops NaN
-        case other => other
-      }
-      if (key != null) buf.update(key, buf.getOrElse(key, 0L) + 1L)
+  override protected def observe(buf: mutable.HashMap[Any, Long], v: Any): Unit =
+    v match {
+      case d: java.lang.Double if d.isNaN => () // value_counts drops NaN
+      case k => add(buf, k)
     }
-    buf
-  }
-
-  override def merge(
-      a: mutable.HashMap[Any, Long], b: mutable.HashMap[Any, Long]): mutable.HashMap[Any, Long] = {
-    b.foreach { case (k, c) => a.update(k, a.getOrElse(k, 0L) + c) }
-    a
-  }
 
   override def eval(buf: mutable.HashMap[Any, Long]): Any = {
     if (buf.isEmpty) return null
@@ -85,37 +65,6 @@ case class MajorAgg(
     case (x: UTF8String, y: UTF8String) => x.compareTo(y) < 0
     case (x: java.lang.Double, y: java.lang.Double) => x < y
     case _ => false
-  }
-
-  override def serialize(buf: mutable.HashMap[Any, Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (k, c) =>
-      if (isString) {
-        val bytes = k.asInstanceOf[UTF8String].getBytes
-        out.writeInt(bytes.length); out.write(bytes)
-      } else out.writeDouble(k.asInstanceOf[Double])
-      out.writeLong(c)
-    }
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[Any, Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.HashMap.empty[Any, Long]
-    var i = 0
-    while (i < n) {
-      val k: Any =
-        if (isString) {
-          val len = in.readInt(); val b = new Array[Byte](len); in.readFully(b)
-          UTF8String.fromBytes(b)
-        } else java.lang.Double.valueOf(in.readDouble())
-      buf.update(k, in.readLong())
-      i += 1
-    }
-    buf
   }
 
   override def withNewMutableAggBufferOffset(o: Int): MajorAgg =

@@ -1,14 +1,9 @@
 package graft.agg
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -39,44 +34,33 @@ case class MisraGriesAgg(
     capacity: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[UTF8String, Long]]
-  with UnaryLike[Expression] {
+  extends CountsAgg[UTF8String] {
 
   require(capacity > 0, s"capacity must be positive, got $capacity")
 
   override def prettyName: String = "misra_gries"
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override protected def layout = CountsAgg.Utf8Key
 
-  override def createAggregationBuffer(): mutable.HashMap[UTF8String, Long] =
-    mutable.HashMap.empty
-
-  override def update(
-      buf: mutable.HashMap[UTF8String, Long],
-      input: InternalRow): mutable.HashMap[UTF8String, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val key = v.asInstanceOf[UTF8String]
-      buf.get(key) match {
-        case Some(c) => buf.update(key, c + 1L)
-        case None if buf.size < capacity =>
-          buf.update(key.clone(), 1L) // detach from the unsafe-row buffer
-        case None =>
-          // decrement-all sweep; evict exhausted counters
-          val dead = mutable.ArrayBuffer.empty[UTF8String]
-          buf.foreach { case (k, c) =>
-            if (c == 1L) dead += k else buf.update(k, c - 1L)
-          }
-          dead.foreach(buf.remove)
+  override protected def observe(
+      buf: mutable.HashMap[UTF8String, Long], v: Any): Unit = {
+    val key = v.asInstanceOf[UTF8String]
+    if (buf.size < capacity || buf.contains(key)) add(buf, key)
+    else {
+      // decrement-all sweep; evict exhausted counters
+      val dead = mutable.ArrayBuffer.empty[UTF8String]
+      buf.foreach { case (k, c) =>
+        if (c == 1L) dead += k else buf.update(k, c - 1L)
       }
+      dead.foreach(buf.remove)
     }
-    buf
   }
 
   override def merge(
       a: mutable.HashMap[UTF8String, Long],
       b: mutable.HashMap[UTF8String, Long]): mutable.HashMap[UTF8String, Long] = {
-    b.foreach { case (k, c) => a.update(k, a.getOrElse(k, 0L) + c) }
+    super.merge(a, b)
     if (a.size > capacity) {
       // subtract the (capacity+1)-th largest count, evict non-positives
       val counts = a.values.toArray
@@ -103,30 +87,6 @@ case class MisraGriesAgg(
       }
     })
     new GenericArrayData(arr.map(_._1.asInstanceOf[Any]))
-  }
-
-  override def serialize(buf: mutable.HashMap[UTF8String, Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (k, c) =>
-      val bytes = k.getBytes
-      out.writeInt(bytes.length); out.write(bytes); out.writeLong(c)
-    }
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[UTF8String, Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.HashMap.empty[UTF8String, Long]
-    var i = 0
-    while (i < n) {
-      val len = in.readInt(); val b = new Array[Byte](len); in.readFully(b)
-      buf.update(UTF8String.fromBytes(b), in.readLong())
-      i += 1
-    }
-    buf
   }
 
   override def withNewMutableAggBufferOffset(o: Int): MisraGriesAgg =

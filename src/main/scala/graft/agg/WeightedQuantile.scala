@@ -10,8 +10,37 @@ import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
+/** A (value, weight) pair sink: [[WQBuffer]] keeps every pair, the
+  * [[WQSketch]] a bounded histogram of them. */
+trait WeightedPairs {
+  def add(v: Double, w: Double): Unit
+}
+
+/** The two weighted quantiles' shared half: one null/NaN-masked
+  * `(value, weight)` update into the buffer — the reference masks NaN in
+  * either value or weight (bm_breakdown.py:147) — and a nullable double
+  * result. */
+abstract class WeightedQuantileAgg[B <: WeightedPairs]
+  extends TypedImperativeAggregate[B] with BinaryLike[Expression] {
+
+  override def nullable: Boolean = true
+  override def dataType: DataType = DoubleType
+
+  override def update(buf: B, input: InternalRow): B = {
+    val v = left.eval(input)
+    val w = right.eval(input)
+    if (v != null && w != null) {
+      val vd = v.asInstanceOf[Double]
+      val wd = w.asInstanceOf[Double]
+      if (!vd.isNaN && !wd.isNaN) buf.add(vd, wd)
+    }
+    buf
+  }
+}
+
 /** Growable (value, weight) pair buffer for [[WeightedQuantile]]. */
-final class WQBuffer(var vs: Array[Double], var ws: Array[Double], var n: Int) {
+final class WQBuffer(var vs: Array[Double], var ws: Array[Double], var n: Int)
+  extends WeightedPairs {
   def add(v: Double, w: Double): Unit = {
     if (n == vs.length) {
       val cap = math.max(16, vs.length * 2)
@@ -46,26 +75,12 @@ case class WeightedQuantile(
     q: Double,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[WQBuffer] with BinaryLike[Expression] {
+  extends WeightedQuantileAgg[WQBuffer] {
 
   override def prettyName: String = "weighted_quantile"
-  override def nullable: Boolean = true
-  override def dataType: DataType = DoubleType
 
   override def createAggregationBuffer(): WQBuffer =
     new WQBuffer(new Array[Double](16), new Array[Double](16), 0)
-
-  override def update(buf: WQBuffer, input: InternalRow): WQBuffer = {
-    val v = left.eval(input)
-    val w = right.eval(input)
-    if (v != null && w != null) {
-      val vd = v.asInstanceOf[Double]
-      val wd = w.asInstanceOf[Double]
-      // reference masks NaN in either value or weight (bm_breakdown.py:147)
-      if (!vd.isNaN && !wd.isNaN) buf.add(vd, wd)
-    }
-    buf
-  }
 
   override def merge(a: WQBuffer, b: WQBuffer): WQBuffer = {
     var i = 0
@@ -79,25 +94,7 @@ case class WeightedQuantile(
     // sort pairs by value (argsort, bm_breakdown.py:153-155); ties in value
     // are interchangeable for the result, so sort stability is irrelevant.
     val idx = Array.range(0, n).sortBy(buf.vs(_))
-    val ecdf = new Array[Double](n)
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += buf.ws(idx(i)); ecdf(i) = acc; i += 1 }
-    val p = q * (acc - 1.0) // p = q·(Σw − 1) (bm_breakdown.py:161)
-    // searchsorted side='right': first index where ecdf[i] > key
-    def ssRight(key: Double): Int = {
-      var lo = 0; var hi = n
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (ecdf(mid) <= key) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
-    // clamp lo defensively (reference relies on p < Σw for q ∈ [0,1], w ≥ 0)
-    val lo = math.min(ssRight(p), n - 1)
-    val hi = math.min(ssRight(p + 1.0), n - 1) // clamp (bm_breakdown.py:166)
-    val fHi = p - math.floor(p)
-    buf.vs(idx(lo)) * (1.0 - fHi) + buf.vs(idx(hi)) * fHi
+    WeightedQuantile.interpolate(n, q, i => buf.vs(idx(i)), i => buf.ws(idx(i)))
   }
 
   override def serialize(buf: WQBuffer): Array[Byte] = {
@@ -128,6 +125,33 @@ case class WeightedQuantile(
 }
 
 object WeightedQuantile {
+  /** The reference interpolation over `n` pairs in ascending value order:
+    * `ecdf = cumsum(w)`, position `p = q·(Σw − 1)` (bm_breakdown.py:161),
+    * `lo`/`hi` = searchsorted-right of `p` and `p + 1` clamped to n−1
+    * (bm_breakdown.py:166), then `v[lo]·(1−frac) + v[hi]·frac`. */
+  private[agg] def interpolate(n: Int, q: Double, value: Int => Double,
+      weight: Int => Double): Double = {
+    val ecdf = new Array[Double](n)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += weight(i); ecdf(i) = acc; i += 1 }
+    val p = q * (acc - 1.0)
+    // searchsorted side='right': first index where ecdf[i] > key
+    def ssRight(key: Double): Int = {
+      var lo = 0; var hi = n
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (ecdf(mid) <= key) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    // clamp lo defensively (reference relies on p < Σw for q ∈ [0,1], w ≥ 0)
+    val lo = math.min(ssRight(p), n - 1)
+    val hi = math.min(ssRight(p + 1.0), n - 1)
+    val fHi = p - math.floor(p)
+    value(lo) * (1.0 - fHi) + value(hi) * fHi
+  }
+
   /** Column-level API: `weightedQuantile($"grade", $"w", 0.5)`. */
   def apply(value: Column, weight: Column, q: Double): Column =
     ExpressionUtils.column(

@@ -456,6 +456,37 @@ class DriftSuite extends AnyFunSuite {
     (i.toLong, g, text)
   }.toDF("doc_id", "source", "text")
 
+  test("vocabDivergence: identical slices diverge zero, JS is symmetric and bounded") {
+    val a = Seq("alpha beta gamma", "beta beta delta").toDF("text")
+    val same = TextAnalysis.vocabDivergence(a, a, "text").head()
+    assert(same.getAs[Double]("kl_ab") == 0.0)
+    assert(same.getAs[Double]("kl_ba") == 0.0)
+    assert(same.getAs[Double]("js") == 0.0)
+    val b = Seq("epsilon zeta", "zeta eta").toDF("text")
+    val ab = TextAnalysis.vocabDivergence(a, b, "text").head()
+    val ba = TextAnalysis.vocabDivergence(b, a, "text").head()
+    assert(ab.getAs[Double]("js") == ba.getAs[Double]("js"),
+      "JS must be symmetric")
+    assert(ab.getAs[Double]("js") > 0.0 &&
+      ab.getAs[Double]("js") <= math.log(2.0) + 1e-9,
+      "JS of disjoint vocabularies is positive and <= ln 2")
+    assert(ab.getAs[Double]("kl_ab") == ba.getAs[Double]("kl_ba"))
+    assert(ab.getAs[Long]("vocab") == 7L) // union of 4 + 3 disjoint terms
+  }
+
+  test("vocabDivergence replays the hand-computed smoothed KL on a 2-term corpus") {
+    // A = {x:2, y:0}, B = {x:0, y:1}; alpha=0.5, V=2
+    // pa(x)=2.5/3, pa(y)=0.5/3; pb(x)=0.5/2, pb(y)=1.5/2
+    val a = Seq("x x").toDF("text")
+    val b = Seq("y").toDF("text")
+    val r = TextAnalysis.vocabDivergence(a, b, "text").head()
+    val (pax, pay, pbx, pby) = (2.5 / 3, 0.5 / 3, 0.5 / 2, 1.5 / 2)
+    val klAb = pax * math.log(pax / pbx) + pay * math.log(pay / pby)
+    assert(r.getAs[Double]("kl_ab") ==
+      BigDecimal(klAb).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    assert(r.getAs[Long]("n_a") == 2L && r.getAs[Long]("n_b") == 1L)
+  }
+
   test("vocabDivergenceBy rows equal vocabDivergence(own, rest) per slice") {
     val by = TextAnalysis.vocabDivergenceBy(corpus, "source", "text")
       .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
@@ -542,6 +573,28 @@ class DriftSuite extends AnyFunSuite {
     val byTime = out.toSeq.sortBy(_._1.getTime).map(_._2)
     assert(byTime.last._4 > 10 * byTime.head._4,
       "disjoint-vocabulary window must dominate the JS divergence")
+  }
+
+  test("windowed vocabulary monitors reject a non-positive or NaN alpha, naming it") {
+    // a baseline whose top-K covers its whole total leaves the OOV cell at
+    // 0, so at alpha = 0 that cell's smoothed shares are 0 and its log
+    // terms are not finite
+    val docs = Seq((1L, new Timestamp(1700000000000L), "a b", "en"),
+      (2L, new Timestamp(1700000060000L), "a c", "en"))
+      .toDF("doc_id", "ts", "text", "lang")
+    val (bc, bt) = TextAnalysis.vocabBaseline(docs, "text", topK = 5)
+    assert(bt == bc.values.sum, "top-K must cover the whole baseline")
+    for (alpha <- Seq(0.0, -0.5, Double.NaN)) {
+      val e1 = intercept[IllegalArgumentException](TextAnalysis
+        .vocabDivergenceWindowed(docs, "ts", "text", bc, bt, alpha = alpha)
+        .collect())
+      assert(e1.getMessage.contains("alpha"), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](TextAnalysis
+        .textGateWindowed(docs, "ts", "text", "lang", Array(0.5), Array(2L),
+          Map("en" -> 2L), bc, bt, alpha = alpha)
+        .collect())
+      assert(e2.getMessage.contains("alpha"), e2.getMessage)
+    }
   }
 
   test("vocabDivergenceWindowedBy: per-cell equals the unsliced twin on the slice substream, alarm localizes") {

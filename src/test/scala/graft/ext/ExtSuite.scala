@@ -517,6 +517,21 @@ class TextAnalysisSuite extends AnyFunSuite {
     // doc's "aa" and "mm" scores are identical and "aa" must win
     assert(out.forall(_.getString(2) == "aa"))
   }
+
+  test("heavyHitters equals the exact top-k on a Zipf-ish corpus") {
+    // token t_i appears ~ 200/i times; plenty of one-off noise tokens
+    val words = (1 to 40).flatMap(i => Seq.fill(200 / i)(s"t$i")) ++
+      (1 to 300).map(i => s"noise$i")
+    val docs = words.grouped(17).zipWithIndex
+      .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq
+      .toDF("doc_id", "text")
+    val got = TextAnalysis.heavyHitters(docs, "text", 10, capacity = 64)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val exact = docs.select(explode(TextAnalysis.wordTokens("text")).as("t"))
+      .groupBy("t").count().orderBy($"count".desc, $"t".asc).limit(10)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(got == exact)
+  }
 }
 
 class DedupSuite extends AnyFunSuite {

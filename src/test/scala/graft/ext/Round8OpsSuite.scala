@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.SparkTest
 
-/** Round-8 operators: domain cap, heavy hitters, bloom decontamination,
+/** Round-8 operators: domain cap, bloom decontamination,
   * snapshot diff, weighted sampling, robust outliers. */
 class Round8OpsSuite extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
@@ -73,34 +73,6 @@ class Round8OpsSuite extends AnyFunSuite {
       .select("id").as[Long].collect()
     assert(picked.count(_ <= 50L) >= 25, s"heavy stratum underdrawn: ${picked.toSeq}")
     assert(Sampling.weightedSampleK(df, "id", "w", 500).count() == 100)
-  }
-
-  // ---- heavyHitters / MisraGriesAgg --------------------------------------
-
-  test("heavyHitters equals the exact top-k on a Zipf-ish corpus") {
-    // token t_i appears ~ 200/i times; plenty of one-off noise tokens
-    val words = (1 to 40).flatMap(i => Seq.fill(200 / i)(s"t$i")) ++
-      (1 to 300).map(i => s"noise$i")
-    val docs = words.grouped(17).zipWithIndex
-      .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq
-      .toDF("doc_id", "text")
-    val got = TextAnalysis.heavyHitters(docs, "text", 10, capacity = 64)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val exact = docs.select(explode(TextAnalysis.wordTokens("text")).as("t"))
-      .groupBy("t").count().orderBy($"count".desc, $"t".asc).limit(10)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(got == exact)
-  }
-
-  test("MisraGries retains every value above the n/(c+1) frequency bound") {
-    // n = 1000; capacity 9 → guarantee threshold n/10 = 100
-    val stream = Seq.fill(300)("hot1") ++ Seq.fill(200)("hot2") ++
-      (1 to 500).map(i => s"cold$i")
-    val retained = stream.toDF("t")
-      .agg(graft.agg.MisraGriesAgg(col("t"), 9))
-      .head().getSeq[String](0).toSet
-    assert(retained.contains("hot1") && retained.contains("hot2"))
-    assert(retained.size <= 9)
   }
 
   test("TokenNgramHashes kernel == composed split/slice/xxhash64 chain, edges included") {

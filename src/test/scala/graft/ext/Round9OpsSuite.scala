@@ -5,44 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.SparkTest
 
-/** Round-9 operators: vocabulary divergence, token entropy, Zipf fit,
-  * simplified-silhouette cluster quality, reciprocal rank fusion. */
+/** Round-9 operators: token entropy, Zipf fit, simplified-silhouette
+  * cluster quality, reciprocal rank fusion. */
 class Round9OpsSuite extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
   import spark.implicits._
-
-  // ---- vocabDivergence ---------------------------------------------------
-
-  test("vocabDivergence: identical slices diverge zero, JS is symmetric and bounded") {
-    val a = Seq("alpha beta gamma", "beta beta delta").toDF("text")
-    val same = TextAnalysis.vocabDivergence(a, a, "text").head()
-    assert(same.getAs[Double]("kl_ab") == 0.0)
-    assert(same.getAs[Double]("kl_ba") == 0.0)
-    assert(same.getAs[Double]("js") == 0.0)
-    val b = Seq("epsilon zeta", "zeta eta").toDF("text")
-    val ab = TextAnalysis.vocabDivergence(a, b, "text").head()
-    val ba = TextAnalysis.vocabDivergence(b, a, "text").head()
-    assert(ab.getAs[Double]("js") == ba.getAs[Double]("js"),
-      "JS must be symmetric")
-    assert(ab.getAs[Double]("js") > 0.0 &&
-      ab.getAs[Double]("js") <= math.log(2.0) + 1e-9,
-      "JS of disjoint vocabularies is positive and <= ln 2")
-    assert(ab.getAs[Double]("kl_ab") == ba.getAs[Double]("kl_ba"))
-    assert(ab.getAs[Long]("vocab") == 7L) // union of 4 + 3 disjoint terms
-  }
-
-  test("vocabDivergence replays the hand-computed smoothed KL on a 2-term corpus") {
-    // A = {x:2, y:0}, B = {x:0, y:1}; alpha=0.5, V=2
-    // pa(x)=2.5/3, pa(y)=0.5/3; pb(x)=0.5/2, pb(y)=1.5/2
-    val a = Seq("x x").toDF("text")
-    val b = Seq("y").toDF("text")
-    val r = TextAnalysis.vocabDivergence(a, b, "text").head()
-    val (pax, pay, pbx, pby) = (2.5 / 3, 0.5 / 3, 0.5 / 2, 1.5 / 2)
-    val klAb = pax * math.log(pax / pbx) + pay * math.log(pay / pby)
-    assert(r.getAs[Double]("kl_ab") ==
-      BigDecimal(klAb).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    assert(r.getAs[Long]("n_a") == 2L && r.getAs[Long]("n_b") == 1L)
-  }
 
   // ---- tokenEntropy ------------------------------------------------------
 
