@@ -131,12 +131,16 @@ object Ivf {
   def topK(corpus: DataFrame, queries: DataFrame, kNN: Int,
       centroids: Array[Array[Double]], nprobe: Int,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val c = assign(corpus, centroids, vecCol)
-    val q = queries.withColumn("ivf_bkt",
-      explode(ProbeCentroids.column(
-        col(vecCol).cast("array<double>"), centroids, nprobe)))
-    Similarity.bucketTopK(c, q, kNN, "ivf_bkt", vecCol, idCol)
+    Similarity.bucketTopK(assign(corpus, centroids, vecCol),
+      probe(queries, centroids, nprobe, vecCol), kNN, "ivf_bkt", vecCol, idCol)
   }
+
+  /** Queries exploded to their `nprobe` nearest cells as `ivf_bkt` — the
+    * probe list every IVF and IVFPQ search joins its cells on. */
+  private[ext] def probe(queries: DataFrame, centroids: Array[Array[Double]],
+      nprobe: Int, vecCol: String): DataFrame =
+    queries.withColumn("ivf_bkt", explode(ProbeCentroids.column(
+      col(vecCol).cast("array<double>"), centroids, nprobe)))
 
   /** The store's serving metadata, persisted beside the cells (VERDICT
     * r13 task 6 — the serving rule as STORE STATE, not a re-measurement):
@@ -282,10 +286,7 @@ object Ivf {
       idCol: String = "vec_id"): DataFrame = {
     // cached store schema (r15): the serve path paid a footer-inference
     // job per call for a schema our own writer fixed at build time
-    val c = graft.util.StoreSchemas.read(spark, path)
-    val q = queries.withColumn("ivf_bkt",
-      explode(ProbeCentroids.column(
-        col(vecCol).cast("array<double>"), centroids, nprobe)))
-    Similarity.bucketTopK(c, q, kNN, "ivf_bkt", vecCol, idCol)
+    Similarity.bucketTopK(graft.util.StoreSchemas.read(spark, path),
+      probe(queries, centroids, nprobe, vecCol), kNN, "ivf_bkt", vecCol, idCol)
   }
 }

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NearestCentroid, PqAdc}
@@ -97,70 +96,49 @@ object Pq {
       idCol: String = "vec_id"): DataFrame = {
     val c = encode(corpus, cb, vecCol)
       .select(col(idCol).as("corpus_id"), col("pq_code"))
-    searchCodes(c, corpus, queries, k, cb, rerank, vecCol, idCol)
+    search(c, corpus, queries, queries, k, cb, rerank, vecCol, idCol)
   }
 
   /** The shared second half of every PQ search: ADC-rank the candidate
-    * (corpus_id, pq_code[, ivf_bkt]) rows against each query, cut to the
-    * top `rerank`, then exact-cosine re-rank only those rows' full
-    * vectors. The candidate side never carries vectors — at 100 TB the
-    * scan and its shuffle move m small ints per row. */
-  private[ext] def searchCodes(codes: DataFrame, corpus: DataFrame,
-      queries: DataFrame, k: Int, cb: Codebooks, rerank: Int,
-      vecCol: String, idCol: String): DataFrame = {
+    * (corpus_id, pq_code[, ivf_bkt]) rows against `probed` (the queries,
+    * or their per-cell rows when the codes carry `ivf_bkt`), cut to the top
+    * `rerank`, then exact-cosine re-rank only those rows' full vectors
+    * against the ORIGINAL `queries` ([[Similarity.rerank]]). The candidate
+    * side never carries vectors — at 100 TB the scan and its shuffle move
+    * m small ints per row. */
+  private def search(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
+      probed: DataFrame, k: Int, cb: Codebooks, rerank: Int, vecCol: String,
+      idCol: String): DataFrame = {
     require(rerank >= k, s"rerank $rerank < k $k")
-    rerankExact(
-      searchCodesCandidates(codes, queries, cb, rerank, vecCol, idCol),
-      corpus, queries, k, vecCol, idCol)
+    Similarity.rerank(candidates(codes, probed, cb, rerank, vecCol, idCol),
+      corpus, queryVecs(queries, vecCol, idCol), k, vecCol, idCol)
   }
+
+  /** Each query's vector once, as `(query_id, qvec)`: the flat ADC stage
+    * and the re-rank read the same frame, so the two share one exchange. */
+  private def queryVecs(queries: DataFrame, vecCol: String,
+      idCol: String): DataFrame =
+    Similarity.Queries.vectors(queries, idCol, col(vecCol))
+      .dropDuplicates("query_id")
 
   /** ADC candidate stage → (query_id, corpus_id) of the top `rerank` per
     * query. When both sides carry `ivf_bkt` the join is cell-pruned. */
-  private[ext] def searchCodesCandidates(codes: DataFrame, queries: DataFrame,
+  private def candidates(codes: DataFrame, queries: DataFrame,
       cb: Codebooks, rerank: Int, vecCol: String, idCol: String): DataFrame = {
     val probed = codes.columns.contains("ivf_bkt") &&
       queries.columns.contains("ivf_bkt")
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("corpus_id"))
     val joined =
       if (probed) // IVFPQ: cell-pruned code scan; one row per (query, cell)
-        codes.join(broadcast(queries.select(col(idCol).as("query_id"),
-            col(vecCol).cast("array<double>").as("qvec"), col("ivf_bkt"))
+        codes.join(broadcast(Similarity.Queries
+            .vectors(queries, idCol, col(vecCol), col("ivf_bkt"))
             .dropDuplicates("query_id", "ivf_bkt")),
           "ivf_bkt")
-      else codes.crossJoin(broadcast(
-        queries.select(col(idCol).as("query_id"),
-          col(vecCol).cast("array<double>").as("qvec"))
-          .dropDuplicates("query_id")))
-    joined
-      .filter(col("corpus_id") =!= col("query_id"))
-      .withColumn("adc", PqAdc.column(col("pq_code"), col("qvec"), cb.centroids))
-      .withColumn("crank", row_number().over(wAdc))
-      .filter(col("crank") <= rerank)
+      else codes.crossJoin(broadcast(queryVecs(queries, vecCol, idCol)))
+    Similarity.perQuery(joined
+        .filter(col("corpus_id") =!= col("query_id"))
+        .withColumn("adc", PqAdc.column(col("pq_code"), col("qvec"), cb.centroids)),
+        col("adc").asc, rerank, "crank")
       .select("query_id", "corpus_id")
-  }
-
-  /** Exact-cosine re-rank of the candidate pairs: full vectors join only
-    * for the surviving rows; `queries` must carry ORIGINAL vectors (the
-    * residual path hands candidates found via residual ADC here). */
-  private[ext] def rerankExact(cand: DataFrame, corpus: DataFrame,
-      queries: DataFrame, k: Int, vecCol: String, idCol: String): DataFrame = {
-    val cv = corpus.select(col(idCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", Similarity.norm(col("cvec")))
-    val qv = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qvec"))
-      .dropDuplicates("query_id")
-      .withColumn("qnorm", Similarity.norm(col("qvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cos"), 6).desc, col("corpus_id"))
-    cand.join(cv, "corpus_id").join(broadcast(qv), "query_id")
-      .withColumn("cos",
-        Similarity.dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"),
-        round(col("cos"), 6).as("cos"))
   }
 
   // ---- residual encoding (the full FAISS IVFPQ construction) ----------
@@ -207,23 +185,19 @@ object Pq {
       coarse: Array[Array[Double]], cb: Codebooks, rerank: Int,
       nprobe: Int, vecCol: String = "embedding",
       idCol: String = "vec_id"): DataFrame = {
-    require(rerank >= k, s"rerank $rerank < k $k")
     val codes = encodeResidual(corpus, coarse, cb, vecCol)
       .select(col(idCol).as("corpus_id"), col("ivf_bkt"), col("pq_code"))
-    val cand = searchCodesCandidates(codes,
-      probeResidualQueries(queries, coarse, nprobe, vecCol), cb, rerank,
+    search(codes, corpus, queries,
+      probeResidualQueries(queries, coarse, nprobe, vecCol), k, cb, rerank,
       vecCol, idCol)
-    rerankExact(cand, corpus, queries, k, vecCol, idCol)
   }
 
   /** Queries exploded to their `nprobe` nearest cells, the query vector
-    * replaced by its per-cell residual — searchCodes then ADC-ranks
+    * replaced by its per-cell residual — the ADC stage then ranks
     * residual-vs-residual with no further changes. */
   private def probeResidualQueries(queries: DataFrame,
       coarse: Array[Array[Double]], nprobe: Int, vecCol: String): DataFrame =
-    queries
-      .withColumn("ivf_bkt", explode(graft.functions.ProbeCentroids.column(
-        col(vecCol).cast("array<double>"), coarse, nprobe)))
+    Ivf.probe(queries, coarse, nprobe, vecCol)
       .withColumn(vecCol,
         residualFor(col(vecCol).cast("array<double>"), col("ivf_bkt"), coarse))
 
@@ -260,23 +234,16 @@ object Pq {
       rerank: Int, coarse: Option[Array[Array[Double]]] = None,
       nprobe: Int = 1, vecCol: String = "embedding",
       idCol: String = "vec_id", residual: Boolean = false): DataFrame = {
-    require(rerank >= k, s"rerank $rerank < k $k")
     require(!residual || coarse.isDefined,
       "residual search needs a coarse quantizer")
-    // cached store schema (r15, the Ivf.topKFromStore note)
-    val codes = graft.util.StoreSchemas.read(spark, path)
-    coarse match {
-      case None => searchCodes(codes, corpus, queries, k, cb, rerank, vecCol, idCol)
+    val probed = coarse match {
+      case None => queries
       case Some(cc) if residual =>
-        val cand = searchCodesCandidates(codes,
-          probeResidualQueries(queries, cc, nprobe, vecCol), cb, rerank,
-          vecCol, idCol)
-        rerankExact(cand, corpus, queries, k, vecCol, idCol)
-      case Some(cc) =>
-        val q = queries.withColumn("ivf_bkt",
-          explode(graft.functions.ProbeCentroids.column(
-            col(vecCol).cast("array<double>"), cc, nprobe)))
-        searchCodes(codes, corpus, q, k, cb, rerank, vecCol, idCol)
+        probeResidualQueries(queries, cc, nprobe, vecCol)
+      case Some(cc) => Ivf.probe(queries, cc, nprobe, vecCol)
     }
+    // cached store schema (r15, the Ivf.topKFromStore note)
+    search(graft.util.StoreSchemas.read(spark, path), corpus, queries, probed,
+      k, cb, rerank, vecCol, idCol)
   }
 }

@@ -29,59 +29,100 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** Cosine of two vectors; NULL when either is the zero vector, which has
+    * no direction (and whose bare division ANSI mode — Spark 4's default —
+    * turns into a job-killing `DIVIDE_BY_ZERO`). */
+  def cosine(a: Column, b: Column): Column = cosineOver(a, norm(a), b, norm(b))
+
+  // the one guarded cosine: every ranking, pair filter and cluster score in
+  // the vector-search family divides here, over norms computed once per row
+  private def cosineOver(a: Column, na: Column, b: Column, nb: Column): Column =
+    when(na * nb > 0, dot(a, b) / (na * nb))
+
+  /** One side of a cosine ranking: `(id, carried columns…, vec, norm)`,
+    * the vector cast to `array<double>` and its norm computed once per row
+    * (not once per pair). */
+  private[ext] final case class Side(id: String, vec: String, norm: String) {
+    /** The side's rows before the norm: `(id, carry…, vec)`. */
+    def vectors(df: DataFrame, idCol: String, v: Column,
+        carry: Column*): DataFrame =
+      df.select(((col(idCol).as(id) +: carry) :+
+        v.cast("array<double>").as(vec)): _*)
+    def withNorm(df: DataFrame): DataFrame =
+      df.withColumn(norm, Similarity.norm(col(vec)))
+    def of(df: DataFrame, idCol: String, v: Column, carry: Column*): DataFrame =
+      withNorm(vectors(df, idCol, v, carry: _*))
+  }
+  private val Corpus = Side("corpus_id", "cvec", "cnorm")
+  private[ext] val Queries = Side("query_id", "qvec", "qnorm")
+
+  /** `pairs` with the guarded cosine of side `c` against side `q` as `out`;
+    * a zero vector's NULL drops its pair from candidacy. */
+  private def scored(pairs: DataFrame, c: Side, q: Side, out: String): DataFrame =
+    pairs.withColumn(out,
+        cosineOver(col(c.vec), col(c.norm), col(q.vec), col(q.norm)))
+      .filter(col(out).isNotNull)
+
+  /** The per-query cut: number each query's rows by `order`, corpus id
+    * breaking ties, and keep the first `k` (a `WindowGroupLimit` partial
+    * top-k per partition). */
+  private[ext] def perQuery(df: DataFrame, order: Column, k: Int,
+      rankCol: String): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order, col("corpus_id"))))
+      .filter(col(rankCol) <= k)
+
+  /** The exact ranking every top-k here ends in: score the `(query,
+    * corpus)` pairs of full vectors, cut each query at `k` on the 6 dp
+    * cosine, and emit `(query_id, rank, corpus_id, carry…, cos)` with `cos`
+    * at 6 dp. */
+  private def rankExact(pairs: DataFrame, k: Int,
+      carry: Seq[String] = Nil): DataFrame =
+    perQuery(scored(pairs, Corpus, Queries, "cos"), round(col("cos"), 6).desc,
+      k, "rank")
+      .select(((Seq("query_id", "rank", "corpus_id") ++ carry).map(col) :+
+        round(col("cos"), 6).as("cos")): _*)
+
+  /** The verify half of every filter → verify search here (the JL
+    * shortlist, PQ and IVFPQ candidates): join full vectors to the
+    * candidate `(query_id, corpus_id, carry…)` rows and rank them exactly.
+    * `queryVecs` holds each query's ORIGINAL vector as `(query_id, qvec)`
+    * (`Queries.vectors`). */
+  private[ext] def rerank(cand: DataFrame, corpus: DataFrame,
+      queryVecs: DataFrame, k: Int, vecCol: String, idCol: String,
+      carry: Seq[String] = Nil): DataFrame =
+    rankExact(cand.join(Corpus.of(corpus, idCol, col(vecCol)), "corpus_id")
+      .join(broadcast(Queries.withNorm(queryVecs)), "query_id"), k, carry)
+
+  /** Every `(corpus, query)` pair of full vectors but a row with itself: a
+    * cross join against the broadcast queries, or an equi-join on the
+    * bucket when `bucketCol` is given. */
+  private def pairs(corpus: DataFrame, queries: DataFrame,
+      bucketCol: Option[String], vecCol: String, idCol: String): DataFrame = {
+    val bkt = bucketCol.map(b => col(b).as("bkt")).toSeq
+    val c = Corpus.of(corpus, idCol, col(vecCol), bkt: _*)
+    val q = broadcast(Queries.of(queries, idCol, col(vecCol), bkt: _*))
+    (if (bucketCol.isDefined) c.join(q, "bkt") else c.crossJoin(q))
+      .filter(col("corpus_id") =!= col("query_id"))
+  }
 
   /** Brute-force cosine top-k: for every query row (small set, broadcast),
     * the k nearest corpus rows. Norms are computed ONCE per vector in the
     * scan projection (not per pair); each pair costs a single dot product.
-    * Deterministic: ties break on corpus id. */
+    * Deterministic: ties break on corpus id; a zero vector is no
+    * candidate. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val c = corpus.select(col(idCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", norm(col("cvec")))
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qvec"))
-      .withColumn("qnorm", norm(col("qvec")))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("corpus_id") =!= col("query_id"))
-      // zero-norm guard: ANSI mode faults on divide-by-zero; a zero
-      // vector is excluded from candidacy instead (same in every top-k)
-      .withColumn("cos", when(col("cnorm") * col("qnorm") > 0,
-        dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm"))))
-      .filter(col("cos").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cos"), 6).desc, col("corpus_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"),
-        round(col("cos"), 6).as("cos"))
-  }
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    rankExact(pairs(corpus, queries, None, vecCol, idCol), k)
 
   /** Bucket-pruned (IVF-style) top-k: only corpus rows whose bucket matches
     * the query's bucket are scanned — on partitioned storage this is
-    * partition pruning, not a filter. */
+    * partition pruning, not a filter. [[bruteForceTopK]] with an equi-join
+    * for the cross join. */
   def bucketTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       bucketCol: String, vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val c = corpus.select(col(bucketCol).as("bkt"), col(idCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", norm(col("cvec")))
-    val q = queries.select(col(bucketCol).as("bkt"), col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qvec"))
-      .withColumn("qnorm", norm(col("qvec")))
-    val scored = c.join(broadcast(q), "bkt")
-      .filter(col("corpus_id") =!= col("query_id"))
-      .withColumn("cos", when(col("cnorm") * col("qnorm") > 0,
-        dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm"))))
-      .filter(col("cos").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cos"), 6).desc, col("corpus_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"),
-        round(col("cos"), 6).as("cos"))
-  }
+      idCol: String = "vec_id"): DataFrame =
+    rankExact(pairs(corpus, queries, Some(bucketCol), vecCol, idCol), k)
 
   /** Random-hyperplane LSH bucket for a vector: bit i = sign(v · h_i) with
     * deterministic pseudo-random hyperplanes h_i[d] = ((1 + (i*31 + d*17)
@@ -98,16 +139,17 @@ object Similarity {
     graft.functions.HyperplaneBucket.column(vec.cast("array<double>"), bits)
 
   /** Embedding-based near-duplicate pairs: all pairs above a cosine
-    * threshold inside each bucket (shuffle on bucket keys only). */
+    * threshold inside each bucket (shuffle on bucket keys only). A zero
+    * vector pairs with nothing (its cosine is NULL). */
   def embeddingNearDups(df: DataFrame, minCos: Double, bucketCol: String,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val t = df.select(col(bucketCol).as("bkt"), col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", norm(col("v")))
+    val t = Side("id", "v", "n")
+      .of(df, idCol, col(vecCol), col(bucketCol).as("bkt"))
     t.as("l").join(t.as("r"),
         col("l.bkt") === col("r.bkt") && col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        round(dot(col("l.v"), col("r.v")) / (col("l.n") * col("r.n")), 6).as("cos"))
+        round(cosineOver(col("l.v"), col("l.n"), col("r.v"), col("r.n")), 6)
+          .as("cos"))
       .filter(col("cos") >= minCos)
   }
 
@@ -183,38 +225,35 @@ object Similarity {
     * prune the scan itself. */
   def projectedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       outDim: Int, shortlist: Int, vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
-    val c = withProjVec(corpus, outDim, vecCol)
-      .select(col(idCol).as("corpus_id"), col("projv").as("cp"))
-    val q = withProjVec(queries, outDim, vecCol)
-      .select(col(idCol).as("query_id"), col("projv").as("qp"),
-        col(vecCol).cast("array<double>").as("qvec"))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("corpus_id"))
-    val short = c.crossJoin(broadcast(q.select("query_id", "qp")))
-      .filter(col("corpus_id") =!= col("query_id"))
-      .withColumn("pcos", when(norm(col("cp")) * norm(col("qp")) > 0,
-        dot(col("cp"), col("qp")) / (norm(col("cp")) * norm(col("qp")))))
-      .filter(col("pcos").isNotNull)
-      .select(col("query_id"), col("corpus_id"), col("pcos"))
-      .withColumn("prank", row_number().over(ws))
-      .filter(col("prank") <= shortlist)
-      .select("query_id", "corpus_id")
-    val cv = corpus.select(col(idCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", norm(col("cvec")))
-    val we = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cos"), 6).desc, col("corpus_id"))
-    short.join(cv, "corpus_id")
-      .join(broadcast(q.select(col("query_id"), col("qvec"),
-        norm(col("qvec")).as("qnorm"))), "query_id")
-      .withColumn("cos", when(col("cnorm") * col("qnorm") > 0,
-        dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm"))))
-      .filter(col("cos").isNotNull)
-      .withColumn("rank", row_number().over(we))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"),
-        round(col("cos"), 6).as("cos"))
+      idCol: String = "vec_id"): DataFrame =
+    shortlistTopK(corpus, queries, k, outDim, shortlist,
+      col("corpus_id") =!= col("query_id"), None, vecCol, idCol)
+
+  /** The project → shortlist → re-rank body of [[projectedTopK]] and
+    * [[hardNegatives]]: rank the pairs that pass `keep` in the
+    * `outDim`-dim JL space (on the UNROUNDED projected cosine), keep each
+    * query's `shortlist` best, and [[rerank]] only those at full width.
+    * `label`, when given, rides from each side as `neg_label` (corpus) and
+    * `qlabel` (query) for `keep` to compare; `neg_label` reaches the
+    * output. */
+  private def shortlistTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+      outDim: Int, shortlist: Int, keep: Column, label: Option[String],
+      vecCol: String, idCol: String): DataFrame = {
+    val cp = Side("corpus_id", "cp", "cpn")
+    val qp = Side("query_id", "qp", "qpn")
+    val c = cp.of(withProjVec(corpus, outDim, vecCol), idCol, col("projv"),
+      label.map(l => col(l).as("neg_label")).toSeq: _*)
+    val q = qp.of(withProjVec(queries, outDim, vecCol), idCol, col("projv"),
+      label.map(l => col(l).as("qlabel")).toSeq: _*)
+    val carry = label.map(_ => "neg_label").toSeq
+    val keys = ("query_id" +: "corpus_id" +: carry).map(col)
+    val short = perQuery(
+        scored(c.crossJoin(broadcast(q)).filter(keep), cp, qp, "pcos")
+          .select(keys :+ col("pcos"): _*),
+        col("pcos").desc, shortlist, "prank")
+      .select(keys: _*)
+    rerank(short, corpus, Queries.vectors(queries, idCol, col(vecCol)), k,
+      vecCol, idCol, carry)
   }
 
   /** Embedding CLUSTER MAP: assign every vector to its nearest of `k`
@@ -249,12 +288,9 @@ object Similarity {
       .withColumn("cluster",
         graft.functions.NearestCentroid.column(col("v"), centroids))
       .join(broadcast(cdf), "cluster")
-      // zero vectors have no direction: their cosine is undefined, so they
-      // count toward n but not toward the coherence mean (NULL skips avg —
-      // and ANSI mode would otherwise fault the whole job on one zero row)
-      .withColumn("cos2", when(dot(col("v"), col("v")) > 0 &&
-          dot(col("c"), col("c")) > 0,
-        cosine(col("v"), col("c"))))
+      // a zero vector's NULL cosine counts toward n but not toward the
+      // coherence mean (NULL skips avg)
+      .withColumn("cos2", cosine(col("v"), col("c")))
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n"),
         round(avg(col("cos2")), 6).as("mean_cos"))
@@ -278,42 +314,9 @@ object Similarity {
     * shortlist survivors only. `shortlist ≥ corpus` makes it exact. */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int,
       outDim: Int, shortlist: Int, labelCol: String = "label",
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val c = withProjVec(corpus, outDim, vecCol)
-      .select(col(idCol).as("corpus_id"), col("projv").as("cp"),
-        col(labelCol).as("neg_label"))
-    val q = withProjVec(queries, outDim, vecCol)
-      .select(col(idCol).as("query_id"), col("projv").as("qp"),
-        col(labelCol).as("qlabel"),
-        col(vecCol).cast("array<double>").as("qvec"))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("corpus_id"))
-    val short = c.crossJoin(broadcast(q.select("query_id", "qp", "qlabel")))
-      .filter(col("neg_label") =!= col("qlabel"))
-      .withColumn("pcos", when(norm(col("cp")) * norm(col("qp")) > 0,
-        dot(col("cp"), col("qp")) / (norm(col("cp")) * norm(col("qp")))))
-      .filter(col("pcos").isNotNull)
-      .select(col("query_id"), col("corpus_id"), col("neg_label"),
-        col("pcos"))
-      .withColumn("prank", row_number().over(ws))
-      .filter(col("prank") <= shortlist)
-      .select("query_id", "corpus_id", "neg_label")
-    val cv = corpus.select(col(idCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", norm(col("cvec")))
-    val we = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cos"), 6).desc, col("corpus_id"))
-    short.join(cv, "corpus_id")
-      .join(broadcast(q.select(col("query_id"), col("qvec"),
-        norm(col("qvec")).as("qnorm"))), "query_id")
-      .withColumn("cos", when(col("cnorm") * col("qnorm") > 0,
-        dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm"))))
-      .filter(col("cos").isNotNull)
-      .withColumn("rank", row_number().over(we))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"),
-        col("neg_label"), round(col("cos"), 6).as("cos"))
-  }
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    shortlistTopK(corpus, queries, k, outDim, shortlist,
+      col("neg_label") =!= col("qlabel"), Some(labelCol), vecCol, idCol)
 
   /** MMR (Maximal Marginal Relevance, Carbonell & Goldstein 1998) DIVERSE
     * top-k: greedily select `k` of the query's `candidates` most-relevant
@@ -340,24 +343,10 @@ object Similarity {
       idCol: String = "vec_id"): DataFrame = {
     val session = corpus.sparkSession
     import session.implicits._
-    val c = corpus.select(col(idCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", norm(col("cvec")))
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qvec"))
-      .withColumn("qnorm", norm(col("qvec")))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("rel"), 6).desc, col("corpus_id"))
-    val cand = c.crossJoin(broadcast(q))
-      .filter(col("corpus_id") =!= col("query_id"))
-      // a zero vector has no direction: its cosine would divide by zero
-      // (an ANSI-mode fault) — guard the division and exclude the row
-      // from candidacy rather than let one bad vector kill the job
-      .withColumn("rel", when(col("cnorm") * col("qnorm") > 0,
-        dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm"))))
-      .filter(col("rel").isNotNull)
-      .withColumn("crank", row_number().over(ws))
-      .filter(col("crank") <= candidates)
+    val cand = perQuery(
+        scored(pairs(corpus, queries, None, vecCol, idCol), Corpus, Queries,
+          "rel"),
+        round(col("rel"), 6).desc, candidates, "crank")
       .select(col("query_id"), col("corpus_id"), col("rel"), col("cvec"))
       .as[(Long, Long, Double, Seq[Double])]
     val oneMinus = 1.0 - lambda
@@ -451,9 +440,7 @@ object Similarity {
       .withColumn("cluster",
         graft.functions.NearestCentroid.column(col("v"), centroids))
       .join(broadcast(cdf), "cluster")
-      .withColumn("cos", when(dot(col("v"), col("v")) > 0 &&
-          dot(col("c"), col("c")) > 0,
-        round(cosine(col("v"), col("c")), 6)))
+      .withColumn("cos", round(cosine(col("v"), col("c")), 6))
       .withColumn("rnk", row_number().over(wr))
       .withColumn("n", count(lit(1)).over(wn))
       .withColumn("drop_flag",
@@ -574,11 +561,7 @@ object Similarity {
     * best-first, top `topN`. */
   def rrfFuse(runA: DataFrame, runB: DataFrame, idCol: String,
       scoreCol: String = "score", k: Int = 60, topN: Int = 10): DataFrame = {
-    def ranked(df: DataFrame, rn: String) =
-      df.select(col(idCol), round(col(scoreCol), 6).as("_s"))
-        .withColumn(rn, row_number().over(
-          Window.orderBy(col("_s").desc, col(idCol))))
-        .select(col(idCol), col(rn))
+    def ranked(df: DataFrame, rn: String) = rankRun(df, Nil, idCol, scoreCol, rn)
     ranked(runA, "rank_a").join(ranked(runB, "rank_b"), Seq(idCol), "full_outer")
       .withColumn("rrf", round(
         coalesce(lit(1.0) / (lit(k) + col("rank_a")), lit(0.0)) +
@@ -601,11 +584,7 @@ object Similarity {
       idCol: String, scoreCol: String = "score", k: Int = 60,
       topN: Int = 10): DataFrame = {
     def ranked(df: DataFrame, rn: String) =
-      df.select(col(queryCol), col(idCol), round(col(scoreCol), 6).as("_s"))
-        .withColumn(rn, row_number().over(
-          Window.partitionBy(col(queryCol))
-            .orderBy(col("_s").desc, col(idCol))))
-        .select(col(queryCol), col(idCol), col(rn))
+      rankRun(df, Seq(queryCol), idCol, scoreCol, rn)
     ranked(runA, "rank_a")
       .join(ranked(runB, "rank_b"), Seq(queryCol, idCol), "full_outer")
       .withColumn("rrf", round(
@@ -616,6 +595,17 @@ object Similarity {
           .orderBy(col("rrf").desc, col(idCol))))
       .filter(col("_rn") <= topN).drop("_rn")
   }
+
+  /** A retrieval run's rows as `(by…, idCol, rn)`, `rn` numbering each
+    * `by` group (the whole run when `by` is empty) on the 6 dp-rounded
+    * score, id tiebreak — the ranking [[rrfFuse]], [[rrfFuseBy]] and
+    * [[rbo]] share. */
+  private def rankRun(df: DataFrame, by: Seq[String], idCol: String,
+      scoreCol: String, rn: String): DataFrame =
+    df.select((by :+ idCol).map(col) :+ round(col(scoreCol), 6).as("_s"): _*)
+      .withColumn(rn, row_number().over(Window.partitionBy(by.map(col): _*)
+        .orderBy(col("_s").desc, col(idCol))))
+      .select((by :+ idCol :+ rn).map(col): _*)
 
   /** [[rbo]]'s per-rank suffix weights `w(m) = Σ_{k=m..depth} p^(k−1)/k`,
     * computed ONCE in fixed order on the driver — public so an external
@@ -651,11 +641,7 @@ object Similarity {
     require(p > 0 && p < 1, s"p $p")
     require(depth > 0, s"depth $depth")
     def ranked(df: DataFrame, rn: String) =
-      df.select(col(idCol), round(col(scoreCol), 6).as("_s"))
-        .withColumn(rn, row_number().over(
-          Window.orderBy(col("_s").desc, col(idCol))))
-        .filter(col(rn) <= depth)
-        .select(col(idCol), col(rn))
+      rankRun(df, Nil, idCol, scoreCol, rn).filter(col(rn) <= depth)
     val w = rboWeights(p, depth)
     val joined = ranked(runA, "rank_a")
       .join(ranked(runB, "rank_b"), Seq(idCol))

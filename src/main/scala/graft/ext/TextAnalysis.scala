@@ -362,7 +362,7 @@ object TextAnalysis {
     * et al. 2009): a dense `dim`-slot signed token-count vector per
     * document, from hashes alone — no trained model, so it is available
     * at curation time and bridges raw text into the embedding stack
-    * ([[Similarity.cosinePairs]]/[[Similarity.semanticDedup]] accept the
+    * ([[Similarity.embeddingNearDups]]/[[Similarity.semanticDedup]] accept the
     * assembled vectors). Token hash = the corpus-wide 60-bit md5 prefix
     * convention (cross-engine, same as minhash's base hash); slot =
     * h mod dim, sign = bit 8 of h.

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QueryShared._
@@ -9,6 +10,15 @@ import graft.util.Checkpoints.scoped
   *
   * Each entry is one [[Query]]; shared fixtures and oracle fragments live in [[QueryShared]]. */
 object QueriesSimilarity {
+
+  /** The two runs q133, q159 and q181 fuse or compare, as (doc_id,
+    * score): the q127 BM25 top-10 ("hash join filter") and the dense
+    * cosine top-10 for query vector 0. */
+  private def hybridRuns(emb: DataFrame,
+      docs: DataFrame): (DataFrame, DataFrame) =
+    (ext.TextAnalysis.bm25(docs, "doc_id", "text", "hash join filter"),
+      ext.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 10)
+        .select(col("corpus_id").as("doc_id"), col("cos").as("score")))
 
   private[graft] val queries: Seq[Query] = Seq(
 
@@ -28,16 +38,7 @@ object QueriesSimilarity {
       val emb = Tables.load(s, dir, "embeddings")
       ext.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 3), 10)
     }, Seq(col("query_id"), col("rank")),
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         scored AS (SELECT b.vec_id AS query_id, a.vec_id AS corpus_id,
-                      round($CosSql, 6) AS cos
-                    FROM e a, e b WHERE b.vec_id < 3 AND a.vec_id <> b.vec_id),
-         r AS (SELECT query_id, corpus_id, cos,
-                 CAST(row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos DESC, corpus_id) AS INT) AS rank
-               FROM scored)
-         SELECT query_id, rank, corpus_id, cos FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank"""),
+      BruteTopKSql),
 
 
     // ext: IVF ANN — k-means coarse quantizer, nprobe = k (all cells) so
@@ -51,16 +52,7 @@ object QueriesSimilarity {
     }, Seq(col("query_id"), col("rank")),
       // nprobe == k scans every IVF cell → exact brute-force top-k,
       // independent of where k-means put the centroids
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         scored AS (SELECT b.vec_id AS query_id, a.vec_id AS corpus_id,
-                      round($CosSql, 6) AS cos
-                    FROM e a, e b WHERE b.vec_id < 3 AND a.vec_id <> b.vec_id),
-         r AS (SELECT query_id, corpus_id, cos,
-                 CAST(row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos DESC, corpus_id) AS INT) AS rank
-               FROM scored)
-         SELECT query_id, rank, corpus_id, cos FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank"""),
+      BruteTopKSql),
 
 
     // ext: product quantization with a full re-rank budget — the PQ
@@ -73,16 +65,7 @@ object QueriesSimilarity {
       val cb = ext.Pq.train(emb, m = 8, ksub = 16, iters = 2)
       ext.Pq.topK(emb, emb.filter(col("vec_id") < 3), 10, cb, rerank = 10000)
     }, Seq(col("query_id"), col("rank")),
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         scored AS (SELECT b.vec_id AS query_id, a.vec_id AS corpus_id,
-                      round($CosSql, 6) AS cos
-                    FROM e a, e b WHERE b.vec_id < 3 AND a.vec_id <> b.vec_id),
-         r AS (SELECT query_id, corpus_id, cos,
-                 CAST(row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos DESC, corpus_id) AS INT) AS rank
-               FROM scored)
-         SELECT query_id, rank, corpus_id, cos FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank"""),
+      BruteTopKSql),
 
 
     // ext: residual IVFPQ (IVFADC) — codes quantize v − coarse_centroid.
@@ -99,16 +82,7 @@ object QueriesSimilarity {
     }, Seq(col("query_id"), col("rank")),
       // residual IVFPQ at nprobe = k_coarse and rerank >= |corpus| is exact,
       // so the oracle is the same brute-force top-k as q25/q51
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         scored AS (SELECT b.vec_id AS query_id, a.vec_id AS corpus_id,
-                      round($CosSql, 6) AS cos
-                    FROM e a, e b WHERE b.vec_id < 3 AND a.vec_id <> b.vec_id),
-         r AS (SELECT query_id, corpus_id, cos,
-                 CAST(row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos DESC, corpus_id) AS INT) AS rank
-               FROM scored)
-         SELECT query_id, rank, corpus_id, cos FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank"""),
+      BruteTopKSql),
 
 
     // ext: the ANN SERVING path — answer queries FROM a standing
@@ -132,16 +106,7 @@ object QueriesSimilarity {
       // store-served ANN at exactness budgets (nprobe = every cell, rerank =
       // whole corpus) == exact brute-force top-k, independent of k-means —
       // same oracle as q41
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         scored AS (SELECT b.vec_id AS query_id, a.vec_id AS corpus_id,
-                      round($CosSql, 6) AS cos
-                    FROM e a, e b WHERE b.vec_id < 3 AND a.vec_id <> b.vec_id),
-         r AS (SELECT query_id, corpus_id, cos,
-                 CAST(row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos DESC, corpus_id) AS INT) AS rank
-               FROM scored)
-         SELECT query_id, rank, corpus_id, cos FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank"""),
+      BruteTopKSql),
 
 
     // ext: embedding cluster map — 8 seed centroids (lowest vec_ids),
@@ -328,32 +293,10 @@ object QueriesSimilarity {
     Query("q127_bm25", (s, dir) =>
       ext.TextAnalysis.bm25(Tables.load(s, dir, "documents"),
         "doc_id", "text", "hash join filter"),
-      Seq(col("score").desc, col("doc_id")), {
-      // Lucene-form BM25; k1/b-derived literals interpolate from the SAME
-      // Scala doubles so the score arithmetic replays bit-for-bit
-      val (k1, b) = (1.2, 0.75)
-      s"""WITH d AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         dd AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl, toks
-                FROM d),
-         st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl
-                FROM dd),
-         h AS (SELECT doc_id, dl, unnest(toks) AS tok FROM dd),
-         hits AS (SELECT doc_id, dl, tok FROM h
-                  WHERE tok IN ('hash', 'join', 'filter')),
-         tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS DOUBLE) AS tf
-                FROM hits GROUP BY doc_id, dl, tok),
-         dft AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
-                 FROM hits GROUP BY tok),
-         sc AS (SELECT tf.doc_id,
-                  round(sum(ln(1.0 + (st.n - dft.df + 0.5)
-                      / (dft.df + 0.5)) *
-                    (tf.tf * ${k1 + 1.0}) /
-                    (tf.tf + $k1 * (${1.0 - b} + $b * tf.dl
-                      / st.avgdl))), 6) AS score
-                FROM tf JOIN dft USING (tok), st GROUP BY tf.doc_id)
+      Seq(col("score").desc, col("doc_id")),
+      s"""WITH $Bm25CtesSql
          SELECT doc_id, score FROM sc
-         ORDER BY score DESC, doc_id LIMIT 10"""
-    }),
+         ORDER BY score DESC, doc_id LIMIT 10"""),
 
 
     // ext: simplified-silhouette cluster quality over the label clusters —
@@ -394,49 +337,20 @@ object QueriesSimilarity {
     // ext: hybrid retrieval — reciprocal rank fusion of the q127 BM25 run
     // with a dense cosine top-10 (RAG's standard sparse+dense merge)
     Query("q133_hybrid_rrf", (s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val sparse = ext.TextAnalysis.bm25(
-        Tables.load(s, dir, "documents"), "doc_id", "text",
-        "hash join filter")
-      val dense = ext.Similarity
-        .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 10)
-        .select(col("corpus_id").as("doc_id"), col("cos").as("score"))
+      val (sparse, dense) = hybridRuns(Tables.load(s, dir, "embeddings"),
+        Tables.load(s, dir, "documents"))
       ext.Similarity.rrfFuse(sparse, dense, "doc_id")
-    }, Nil, {
+    }, Nil,
       // RRF = 1/(60+rank_sparse) + 1/(60+rank_dense) over the q127 BM25
       // top-10 and the dense cosine top-10 for query vector 0; both ranks
       // order by (6 dp score desc, id) so the fusion is engine-portable
-      val (k1, b) = (1.2, 0.75)
-      s"""WITH d AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         dd AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl, toks
-                FROM d),
-         st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl
-                FROM dd),
-         h AS (SELECT doc_id, dl, unnest(toks) AS tok FROM dd),
-         hits AS (SELECT doc_id, dl, tok FROM h
-                  WHERE tok IN ('hash', 'join', 'filter')),
-         tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS DOUBLE) AS tf
-                FROM hits GROUP BY doc_id, dl, tok),
-         dft AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
-                 FROM hits GROUP BY tok),
-         sc AS (SELECT tf.doc_id,
-                  round(sum(ln(1.0 + (st.n - dft.df + 0.5)
-                      / (dft.df + 0.5)) *
-                    (tf.tf * ${k1 + 1.0}) /
-                    (tf.tf + $k1 * (${1.0 - b} + $b * tf.dl
-                      / st.avgdl))), 6) AS score
-                FROM tf JOIN dft USING (tok), st GROUP BY tf.doc_id),
+      s"""WITH $Bm25CtesSql,
          bmtop AS (SELECT doc_id, score FROM sc
                    ORDER BY score DESC, doc_id LIMIT 10),
          ra AS (SELECT doc_id, CAST(row_number() OVER
                     (ORDER BY score DESC, doc_id) AS INT) AS rank_a
                 FROM bmtop),
-         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-         dn AS (SELECT a.vec_id AS doc_id, round($CosSql, 6) AS cos
-                FROM e a, e b WHERE b.vec_id = 0 AND a.vec_id <> 0),
-         dntop AS (SELECT doc_id, cos FROM dn
-                   ORDER BY cos DESC, doc_id LIMIT 10),
+         $DenseTop10CtesSql,
          rb AS (SELECT doc_id, CAST(row_number() OVER
                     (ORDER BY cos DESC, doc_id) AS INT) AS rank_b
                 FROM dntop),
@@ -445,8 +359,7 @@ object QueriesSimilarity {
          SELECT doc_id, rank_a, rank_b,
            round(coalesce(1.0 / (60 + rank_a), 0.0) +
                  coalesce(1.0 / (60 + rank_b), 0.0), 6) AS rrf
-         FROM f ORDER BY rrf DESC, doc_id LIMIT 10"""
-    }),
+         FROM f ORDER BY rrf DESC, doc_id LIMIT 10"""),
 
 
     // ext: int8 scalar quantization of the embedding store — per-dim
@@ -535,51 +448,22 @@ object QueriesSimilarity {
     // ext: rank-biased overlap of the q133 sparse/dense runs — the
     // run-COMPARISON audit next to RRF's run-merge; bounded inputs
     Query("q159_rbo", (s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val sparse = ext.TextAnalysis.bm25(
-        Tables.load(s, dir, "documents"), "doc_id", "text",
-        "hash join filter")
-      val dense = ext.Similarity
-        .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 10)
-        .select(col("corpus_id").as("doc_id"), col("cos").as("score"))
+      val (sparse, dense) = hybridRuns(Tables.load(s, dir, "embeddings"),
+        Tables.load(s, dir, "documents"))
       ext.Similarity.rbo(sparse, dense, "doc_id")
     }, Nil, {
       // q133's bm25 + dense rank CTEs, then the per-doc suffix-weight
       // regrouping; the weights interpolate rboWeights' exact doubles
-      val (k1, b) = (1.2, 0.75)
       val w = ext.Similarity.rboWeights(0.9, 10)
       val caseW = (1 to 10).map(m => s"WHEN $m THEN ${w(m - 1)}")
         .mkString("CASE greatest(ra.rank_a, rb.rank_b) ", " ", " END")
-      s"""WITH d AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         dd AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl, toks
-                FROM d),
-         st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl
-                FROM dd),
-         h AS (SELECT doc_id, dl, unnest(toks) AS tok FROM dd),
-         hits AS (SELECT doc_id, dl, tok FROM h
-                  WHERE tok IN ('hash', 'join', 'filter')),
-         tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS DOUBLE) AS tf
-                FROM hits GROUP BY doc_id, dl, tok),
-         dft AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
-                 FROM hits GROUP BY tok),
-         sc AS (SELECT tf.doc_id,
-                  round(sum(ln(1.0 + (st.n - dft.df + 0.5)
-                      / (dft.df + 0.5)) *
-                    (tf.tf * ${k1 + 1.0}) /
-                    (tf.tf + $k1 * (${1.0 - b} + $b * tf.dl
-                      / st.avgdl))), 6) AS score
-                FROM tf JOIN dft USING (tok), st GROUP BY tf.doc_id),
+      s"""WITH $Bm25CtesSql,
          bmtop AS (SELECT doc_id, score FROM sc
                    ORDER BY score DESC, doc_id LIMIT 10),
          ra AS (SELECT doc_id, CAST(row_number() OVER
                     (ORDER BY score DESC, doc_id) AS INT) AS rank_a
                 FROM bmtop),
-         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-         dn AS (SELECT a.vec_id AS doc_id, round($CosSql, 6) AS cos
-                FROM e a, e b WHERE b.vec_id = 0 AND a.vec_id <> 0),
-         dntop AS (SELECT doc_id, cos FROM dn
-                   ORDER BY cos DESC, doc_id LIMIT 10),
+         $DenseTop10CtesSql,
          rb AS (SELECT doc_id, CAST(row_number() OVER
                     (ORDER BY cos DESC, doc_id) AS INT) AS rank_b
                 FROM dntop),
@@ -734,18 +618,15 @@ object QueriesSimilarity {
       // reads it again) — bm25 hands back its topN already pinned, so the
       // corpus-scale BM25 scan runs once; dense/qrels are bounded but
       // re-read the same way, so they are pinned here
-      val sparse = ext.TextAnalysis.bm25(docs, "doc_id", "text",
-        "hash join filter")
-      val dense = sc.pin(ext.Similarity
-        .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 10)
-        .select(col("corpus_id").as("doc_id"), col("cos").as("score")))
+      val (sparse, denseRun) = hybridRuns(emb, docs)
+      val dense = sc.pin(denseRun)
       val fused = ext.Similarity.rrfFuse(sparse, dense, "doc_id")
         .select(col("doc_id"), col("rrf").as("score"))
       val qrels = sc.pin(emb.as("q").filter(col("q.vec_id") === 0)
         .join(emb.as("c"),
           col("q.label") === col("c.label") && col("c.vec_id") =!= 0)
         .select(col("c.vec_id").as("doc_id"), lit(0L).as("qid")))
-      def audit(run: org.apache.spark.sql.DataFrame, name: String) =
+      def audit(run: DataFrame, name: String) =
         ext.Eval.retrievalMetrics(run.withColumn("qid", lit(0L)),
             qrels, "qid", "doc_id", "score", 10)
           .select(lit(name).as("run"), col("n_rel"), col("hit_k"),
@@ -754,7 +635,6 @@ object QueriesSimilarity {
         .unionByName(audit(fused, "fused"))
     }, Seq(col("run")), {
       // q133's three runs + q149's metric arithmetic over one judgment set
-      val (k1, b) = (1.2, 0.75)
       val ln2 = ext.Eval.Ln2
       def metric(rel: String, name: String) =
         s"""SELECT '$name' AS run, nr.n_rel,
@@ -771,36 +651,13 @@ object QueriesSimilarity {
                  CASE WHEN qr.doc_id IS NOT NULL THEN 1 ELSE 0 END AS rel
                FROM $rel r LEFT JOIN qr ON qr.doc_id = r.doc_id) j, nr
          GROUP BY nr.n_rel"""
-      s"""WITH d AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         dd AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl, toks
-                FROM d),
-         st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl
-                FROM dd),
-         h AS (SELECT doc_id, dl, unnest(toks) AS tok FROM dd),
-         hits AS (SELECT doc_id, dl, tok FROM h
-                  WHERE tok IN ('hash', 'join', 'filter')),
-         tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS DOUBLE) AS tf
-                FROM hits GROUP BY doc_id, dl, tok),
-         dft AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
-                 FROM hits GROUP BY tok),
-         sc AS (SELECT tf.doc_id,
-                  round(sum(ln(1.0 + (st.n - dft.df + 0.5)
-                      / (dft.df + 0.5)) *
-                    (tf.tf * ${k1 + 1.0}) /
-                    (tf.tf + $k1 * (${1.0 - b} + $b * tf.dl
-                      / st.avgdl))), 6) AS score
-                FROM tf JOIN dft USING (tok), st GROUP BY tf.doc_id),
+      s"""WITH $Bm25CtesSql,
          bmtop AS (SELECT doc_id, score FROM sc
                    ORDER BY score DESC, doc_id LIMIT 10),
          ra AS (SELECT doc_id, CAST(row_number() OVER
                     (ORDER BY score DESC, doc_id) AS INT) AS rank
                 FROM bmtop),
-         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-         dn AS (SELECT a.vec_id AS doc_id, round($CosSql, 6) AS cos
-                FROM e a, e b WHERE b.vec_id = 0 AND a.vec_id <> 0),
-         dntop AS (SELECT doc_id, cos FROM dn
-                   ORDER BY cos DESC, doc_id LIMIT 10),
+         $DenseTop10CtesSql,
          rb AS (SELECT doc_id, CAST(row_number() OVER
                     (ORDER BY cos DESC, doc_id) AS INT) AS rank
                 FROM dntop),
@@ -836,7 +693,7 @@ object QueriesSimilarity {
     Query("q182_retrieval_multiquery", (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 8)
-      def run(frame: org.apache.spark.sql.DataFrame) =
+      def run(frame: DataFrame) =
         ext.Similarity.bruteForceTopK(frame,
             frame.filter(col("vec_id") < 8), 10)
           .select(col("query_id"), col("corpus_id"), col("cos").as("score"))

@@ -502,6 +502,61 @@ object QueryShared {
   private[graft] val CosSql =
     "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))"
 
+  /** Exact cosine top-10 of query vectors 0–2: the answer of every
+    * vector search run at exactness budgets (q25 brute force, q41 IVF at
+    * nprobe = k, q51 PQ, q52 residual IVFPQ and the q62 store at full
+    * re-rank budgets). */
+  private[graft] val BruteTopKSql =
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         scored AS (SELECT b.vec_id AS query_id, a.vec_id AS corpus_id,
+                      round($CosSql, 6) AS cos
+                    FROM e a, e b WHERE b.vec_id < 3 AND a.vec_id <> b.vec_id),
+         r AS (SELECT query_id, corpus_id, cos,
+                 CAST(row_number() OVER (PARTITION BY query_id
+                   ORDER BY cos DESC, corpus_id) AS INT) AS rank
+               FROM scored)
+         SELECT query_id, rank, corpus_id, cos FROM r
+         WHERE rank <= 10 ORDER BY query_id, rank"""
+
+  /** The Lucene-form BM25 CTE chain `d … sc` of the query "hash join
+    * filter" over `documents` (q127, q133, q159, q181): `sc` holds
+    * (doc_id, score at 6 dp). The k1/b-derived literals interpolate from
+    * Scala doubles equal to [[ext.TextAnalysis.bm25]]'s defaults, so the
+    * score arithmetic replays bit for bit. */
+  private[graft] val Bm25CtesSql: String = {
+    val (k1, b) = (1.2, 0.75)
+    s"""d AS (SELECT doc_id, $ToksSql AS toks FROM documents),
+         dd AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl, toks
+                FROM d),
+         st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl
+                FROM dd),
+         h AS (SELECT doc_id, dl, unnest(toks) AS tok FROM dd),
+         hits AS (SELECT doc_id, dl, tok FROM h
+                  WHERE tok IN ('hash', 'join', 'filter')),
+         tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS DOUBLE) AS tf
+                FROM hits GROUP BY doc_id, dl, tok),
+         dft AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
+                 FROM hits GROUP BY tok),
+         sc AS (SELECT tf.doc_id,
+                  round(sum(ln(1.0 + (st.n - dft.df + 0.5)
+                      / (dft.df + 0.5)) *
+                    (tf.tf * ${k1 + 1.0}) /
+                    (tf.tf + $k1 * (${1.0 - b} + $b * tf.dl
+                      / st.avgdl))), 6) AS score
+                FROM tf JOIN dft USING (tok), st GROUP BY tf.doc_id)"""
+  }
+
+  /** The dense run of the hybrid-retrieval queries (q133, q159, q181) as
+    * CTEs `e … dntop`: `dntop` holds the cosine top-10 (doc_id, cos at
+    * 6 dp) for query vector 0. */
+  private[graft] val DenseTop10CtesSql =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+               FROM embeddings),
+         dn AS (SELECT a.vec_id AS doc_id, round($CosSql, 6) AS cos
+                FROM e a, e b WHERE b.vec_id = 0 AND a.vec_id <> 0),
+         dntop AS (SELECT doc_id, cos FROM dn
+                   ORDER BY cos DESC, doc_id LIMIT 10)"""
+
   /** 60-bit SimHash sketch over a `toks` list column (q22, q44). */
   private[graft] val SimhashSketchSql =
     """CAST(coalesce(list_sum(list_transform(generate_series(0, 59), b ->

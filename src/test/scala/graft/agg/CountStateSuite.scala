@@ -1,8 +1,6 @@
 package graft.agg
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.BoundReference
@@ -157,23 +155,9 @@ class CountStateSuite extends AnyFunSuite {
     assert(retained.size <= 9)
   }
 
-  /** `src/main/scala` of this checkout (the ConfKeysSuite lookup). */
-  private def mainSources: Path = {
-    val starts = Seq(Paths.get(sys.props("user.dir")),
-      Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
-    starts.iterator
-      .flatMap(s => Iterator.iterate(s.toAbsolutePath)(_.getParent)
-        .takeWhile(_ != null))
-      .map(_.resolve("src/main/scala"))
-      .find(Files.isDirectory(_))
-      .getOrElse(fail(s"no src/main/scala above ${starts.mkString(", ")}"))
-  }
-
   test("only the shared count state and VectorMeanAgg write aggregate state streams") {
-    val agg = mainSources.resolve("graft/agg")
-    val list = Files.list(agg)
-    val files = try list.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally list.close()
+    val files = graft.SourceTree.scalaFiles(
+      graft.SourceTree.mainScala.resolve("graft/agg"))
     assert(files.size > 5, s"scanned too few sources: ${files.size}")
     val streams = files.filter { f =>
       val src = Files.readString(f)

@@ -724,4 +724,18 @@ class DriftSuite extends AnyFunSuite {
         Seq("ks", null, null, 0), Seq("psi", 0.0, 0.25, 0),
         Seq("rank_sum", null, 1.96, 0)))
   }
+
+  test("embeddingDrift: identical slices show cos 1 / l2 0; a shifted slice moves both") {
+    val a = (0L until 10L).map(i =>
+      (i, Array(1.0f, 2.0f, (i % 3).toFloat))).toDF("vec_id", "embedding")
+    val same = Similarity.embeddingDrift(a, a).head()
+    assert(same.getAs[Double]("mean_cos") == 1.0)
+    assert(same.getAs[Double]("mean_l2") == 0.0)
+    assert(same.getAs[Long]("n_base") == 10L)
+    val b = a.select(col("vec_id"),
+      transform(col("embedding"), x => x + lit(5.0f)).as("embedding"))
+    val moved = Similarity.embeddingDrift(a, b).head()
+    assert(moved.getAs[Double]("mean_l2") > 8.0)
+    assert(moved.getAs[Double]("mean_cos") < 1.0)
+  }
 }

@@ -532,6 +532,26 @@ class TextAnalysisSuite extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got == exact)
   }
+
+  test("bm25 replays the scoring formula; docs without query terms excluded") {
+    val df = Seq((1L, "hash join"), (2L, "hash hash hash scan scan scan"),
+      (3L, "other words entirely")).toDF("doc_id", "text")
+    val got = TextAnalysis.bm25(df, "doc_id", "text", "hash join")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    val (k1, b) = (1.2, 0.75)
+    val n = 3.0; val avgdl = (2.0 + 6.0 + 3.0) / 3.0
+    def idf(dfq: Double) = math.log(1.0 + (n - dfq + 0.5) / (dfq + 0.5))
+    def term(tf: Double, dfq: Double, dl: Double) =
+      idf(dfq) * (tf * (k1 + 1.0)) /
+        (tf + k1 * ((1.0 - b) + b * dl / avgdl))
+    def r6(x: Double) = BigDecimal(x)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(got.keySet == Set(1L, 2L)) // doc 3 matches nothing
+    assert(got(1L) == r6(term(1, 2, 2) + term(1, 1, 2)))
+    assert(got(2L) == r6(term(3, 2, 6)))
+    // the short doc holding the RARE term outranks the tf-stuffed one
+    assert(got(1L) > got(2L))
+  }
 }
 
 class DedupSuite extends AnyFunSuite {
@@ -840,6 +860,14 @@ class SimilaritySuite extends AnyFunSuite {
     (4L, Array(0.0f, 0.0f, 1.0f), 2)
   ).toDF("vec_id", "embedding", "label")
 
+  /** `vecs` plus two zero vectors (ids 5, 6) in label bucket 0. */
+  private lazy val withZeros = vecs.union(Seq(
+    (5L, Array(0.0f, 0.0f, 0.0f), 0),
+    (6L, Array(0.0f, 0.0f, 0.0f), 0)).toDF("vec_id", "embedding", "label"))
+
+  private def r6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   test("semanticDedup keeps min-id canonicals and all singletons") {
     // label buckets: {0,1} near-parallel (dup pair), {2,3} near-parallel,
     // {4} singleton — survivors are the min ids 0 and 2 plus the singleton
@@ -903,6 +931,445 @@ class SimilaritySuite extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     assert(withNull.select(Similarity.hyperplaneBucket($"embedding"))
       .collect()(0).getLong(0) == 0L)
+  }
+
+  test("clusterMap assigns to the nearest seed, seeds to themselves") {
+    // 2-d vectors around two well-separated seeds (ids 0 and 1)
+    val vecs = Seq(
+      (0L, Seq(0.0f, 0.0f)), (1L, Seq(10.0f, 10.0f)),
+      (2L, Seq(0.5f, 0.2f)), (3L, Seq(9.5f, 10.1f)), (4L, Seq(0.1f, 0.9f)))
+    val df = vecs.toDF("vec_id", "embedding")
+    val rows = Similarity.clusterMap(df, 2).orderBy("cluster").collect()
+    val got = rows.map(r => (r.getInt(0), r.getLong(1))).toSeq
+    assert(got == Seq((0, 3L), (1, 2L)))
+    // the zero seed centroid has no direction → its coherence is NULL
+    // (not a fault); the non-degenerate cluster's is a valid cosine
+    assert(rows(0).isNullAt(2))
+    val c1 = rows(1).getDouble(2)
+    assert(c1 >= -1.0 - 1e-9 && c1 <= 1.0 + 1e-9)
+  }
+
+  test("randomProjection replays dot(v, h_i)/sqrt(k) exactly") {
+    val vec = Array.tabulate(16)(d => (d * 0.25f) - 1.0f)
+    val df = Seq((7L, vec.toSeq)).toDF("vec_id", "embedding")
+    val got = Similarity.randomProjection(df, 4).collect()(0)
+    val scale = 1.0 / math.sqrt(4.0)
+    (0 until 4).foreach { i =>
+      val h = Similarity.jlPlane(i, 16)
+      var acc = 0.0
+      (0 until 16).foreach(d => acc += vec(d).toDouble * h(d))
+      assert(got.getDouble(1 + i) == acc * scale) // bit-exact, no tolerance
+    }
+  }
+
+  test("projectedTopK with shortlist >= corpus == brute force exactly") {
+    val rnd = new scala.util.Random(7)
+    // 4 well-separated clusters + noise: the structured case JL serves
+    // (uniform-random cosines are near-constant and NO shortlist helps)
+    val vecs = (0L until 40L).map { i =>
+      val c = (i % 4).toInt
+      (i, Seq.tabulate(16)(d =>
+        (if (d / 4 == c) 3.0f else 0.0f) + rnd.nextFloat() - 0.5f))
+    }
+    val df = vecs.toDF("vec_id", "embedding")
+    val queries = df.filter($"vec_id" < 2)
+    def collect(d: org.apache.spark.sql.DataFrame) = d
+      .orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+    val exact = collect(Similarity.bruteForceTopK(df, queries, 5))
+    assert(collect(Similarity.projectedTopK(df, queries, 5, 8, 40)) == exact)
+    // at a 12-candidate budget the projected shortlist still recalls most
+    // of the true top-5 (JL preserves relative distances approximately)
+    val budget = collect(Similarity.projectedTopK(df, queries, 5, 8, 12))
+    val recall = budget.map(x => (x._1, x._3)).toSet
+      .intersect(exact.map(x => (x._1, x._3)).toSet).size.toDouble / exact.size
+    assert(recall >= 0.6, s"JL shortlist recall $recall")
+  }
+
+  test("hardNegatives at full shortlist == label-filtered brute force") {
+    val rnd = new scala.util.Random(11)
+    val vecs = (0L until 40L).map { i =>
+      val c = (i % 4).toInt
+      (i, c, Seq.tabulate(16)(d =>
+        (if (d / 4 == c) 3.0f else 0.0f) + rnd.nextFloat() - 0.5f))
+    }
+    val df = vecs.toDF("vec_id", "label", "embedding")
+    val queries = df.filter($"vec_id" < 3)
+    val got = Similarity.hardNegatives(df, queries, 5, 8, 40)
+      .orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3),
+        r.getDouble(4))).toSeq
+    // naive replay: brute force then drop same-label rows, re-rank
+    val naive = Similarity.bruteForceTopK(df, queries, 40).collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
+      .groupBy(_._1).toSeq.flatMap { case (q, rows) =>
+        val qLabel = (q % 4).toInt
+        rows.filter { case (_, c, _) => (c % 4).toInt != qLabel }
+          .sortBy { case (_, c, cos) => (-cos, c) }.take(5).zipWithIndex
+          .map { case ((_, c, cos), i) => (q, i + 1, c, (c % 4).toInt, cos) }
+      }.sortBy(x => (x._1, x._2))
+    assert(got == naive)
+    // every mined negative really carries a different label
+    assert(got.forall { case (q, _, _, l, _) => l != (q % 4).toInt })
+  }
+
+  test("hardNegatives pre-filters: full k even when projected neighbors share the label") {
+    // anchor's own cluster (same label) dominates similarity; a
+    // post-filtered shortlist of 3 would return nothing cross-label
+    val vecs =
+      (0L until 10L).map(i => (i, 0, Seq.tabulate(8)(d => if (d < 4) 5.0f else 0.1f))) ++
+      (10L until 14L).map(i => (i, 1, Seq.tabulate(8)(d => if (d < 4) 0.1f else 5.0f)))
+    val df = vecs.toDF("vec_id", "label", "embedding")
+    val got = Similarity.hardNegatives(df, df.filter($"vec_id" === 0L),
+      4, 4, 3)
+    // shortlist 3 < same-label cluster size, yet all 3 survivors are
+    // cross-label (capped by the shortlist, never empty)
+    val rows = got.collect()
+    assert(rows.length == 3)
+    assert(rows.forall(_.getInt(3) == 1))
+  }
+
+  test("prototypicality ranks centroid-nearest first and flags ceil(frac*n)") {
+    // cluster 0 seed = id 0 at the origin-ish; cluster 1 seed = id 1
+    val vecs = Seq(
+      (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f)),
+      (2L, Seq(0.9f, 0.1f)), (3L, Seq(0.6f, 0.4f)),
+      (4L, Seq(0.1f, 0.9f)), (5L, Seq(0.4f, 0.6f)), (6L, Seq(0.2f, 0.8f)))
+    val df = vecs.toDF("vec_id", "embedding")
+    val rows = Similarity.prototypicality(df, 2, 0.5)
+      .orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getInt(3),
+        r.getLong(4), r.getInt(5)))
+    // ids 0,2,3 go to cluster 0; 1,4,5,6 to cluster 1 (nearest seed)
+    assert(rows.map(_._2).toSeq == Seq(0, 1, 0, 0, 1, 1, 1))
+    // seeds are their own centroids: cos 1, rank 1, flagged
+    assert(rows(0)._3 == 1.0 && rows(0)._4 == 1 && rows(0)._6 == 1)
+    assert(rows(1)._3 == 1.0 && rows(1)._4 == 1 && rows(1)._6 == 1)
+    // cluster sizes 3 and 4 → ceil(0.5*n) = 2 flagged in each
+    assert(rows.count(r => r._2 == 0 && r._6 == 1) == 2)
+    assert(rows.count(r => r._2 == 1 && r._6 == 1) == 2)
+    // within a cluster, rank order follows cosine-to-centroid descending
+    val c1 = rows.filter(_._2 == 1).sortBy(_._4)
+    assert(c1.map(_._3).toSeq == c1.map(_._3).sortBy(-(_: Double)).toSeq)
+  }
+
+  test("prototypicality shares ONE keyed exchange between rank and size windows") {
+    val df = (0L until 20L).map(i =>
+      (i, Seq.tabulate(4)(d => (i + d).toFloat))).toDF("vec_id", "embedding")
+    val plan = Similarity.prototypicality(df, 2, 0.25)
+      .queryExecution.executedPlan.toString
+    val keyed = "Exchange hashpartitioning".r.findAllIn(plan).size
+    assert(keyed == 1, s"expected 1 keyed exchange, got $keyed:\n$plan")
+  }
+
+  test("prototypicality ranks zero vectors last (NULL cosine sentinel)") {
+    val df = Seq(
+      (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 0.0f)), (2L, Seq(0.8f, 0.2f)))
+      .toDF("vec_id", "embedding")
+    // k=1: everything lands in cluster 0 (seed id 0)
+    val rows = Similarity.prototypicality(df, 1, 0.25)
+      .orderBy("rnk").collect()
+    assert(rows.map(_.getLong(0)).toSeq == Seq(0L, 2L, 1L))
+    assert(rows(2).isNullAt(2)) // the zero vector's cosine is NULL
+    // ceil(0.25*3) = 1 → only the seed is flagged
+    assert(rows.map(_.getInt(5)).toSeq == Seq(1, 0, 0))
+  }
+
+  test("mmrTopK with lambda=1 reduces to pure-relevance ranking") {
+    val rnd = new scala.util.Random(5)
+    val vecs = (0L until 30L).map { i =>
+      (i, Seq.tabulate(12)(_ => rnd.nextFloat() - 0.3f))
+    }
+    val df = vecs.toDF("vec_id", "embedding")
+    val queries = df.filter($"vec_id" < 2)
+    val mmr = Similarity.mmrTopK(df, queries, 5, 1.0, 20)
+      .orderBy("query_id", "mmr_rank").collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toSeq
+    val brute = Similarity.bruteForceTopK(df, queries, 5)
+      .orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toSeq
+    assert(mmr == brute)
+  }
+
+  test("mmrTopK diversifies: second pick escapes the near-duplicate cluster") {
+    // cluster X: three near-identical highly relevant vectors; cluster Y:
+    // one slightly less relevant but orthogonal-ish vector
+    val docs = Seq(
+      (100L, Seq(1.0f, 0.0f, 0.0f)),            // the query
+      (1L, Seq(0.99f, 0.10f, 0.00f)),           // X
+      (2L, Seq(0.99f, 0.11f, 0.00f)),           // X (near-dup of 1)
+      (3L, Seq(0.98f, 0.12f, 0.00f)),           // X (near-dup of 1)
+      (4L, Seq(0.80f, 0.00f, 0.60f)))           // Y (distinct direction)
+      .toDF("vec_id", "embedding")
+    val queries = docs.filter($"vec_id" === 100L)
+    val relOrder = Similarity.mmrTopK(docs, queries, 3, 1.0, 4)
+      .orderBy("mmr_rank").collect().map(_.getLong(2)).toSeq
+    assert(relOrder == Seq(1L, 2L, 3L)) // pure relevance: all from X
+    val diverse = Similarity.mmrTopK(docs, queries, 3, 0.5, 4)
+      .orderBy("mmr_rank").collect().map(_.getLong(2)).toSeq
+    assert(diverse.head == 1L)          // most relevant still first
+    assert(diverse(1) == 4L, s"second pick should diversify, got $diverse")
+  }
+
+  test("mmrTopK caps at the candidate-set size") {
+    val docs = Seq(
+      (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.9f, 0.1f)), (2L, Seq(0.8f, 0.2f)))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.mmrTopK(docs, docs.filter($"vec_id" === 0L),
+      10, 0.7, 2)
+    assert(got.count() == 2)
+  }
+
+  test("clusterQuality: separated clusters score near 1, merged clusters near 0") {
+    // two tight, far-apart clusters and one cluster duplicated on top of
+    // the first (its points are equidistant-ish -> low silhouette)
+    def v(x: Double, y: Double) = Array(x.toFloat, y.toFloat)
+    val rows = Seq(
+      (1L, 0, v(0, 0)), (2L, 0, v(0, 1)), (3L, 0, v(1, 0)),
+      (4L, 1, v(100, 100)), (5L, 1, v(100, 101)), (6L, 1, v(101, 100)),
+      (7L, 2, v(0.5, 0.5)), (8L, 2, v(0.4, 0.4)), (9L, 2, v(0.6, 0.3))
+    ).toDF("vec_id", "label", "embedding")
+    val got = Similarity.clusterQuality(rows, "label")
+      .orderBy("cluster").collect()
+    assert(got.map(_.getAs[Long]("n")).toSeq == Seq(3L, 3L, 3L))
+    // cluster 1 is 140 units from everything: silhouette ~ 1
+    assert(got(1).getAs[Double]("mean_silhouette") > 0.99)
+    // clusters 0 and 2 overlap: silhouette well below the separated one
+    assert(got(0).getAs[Double]("mean_silhouette") < 0.5)
+    assert(got(2).getAs[Double]("mean_silhouette") < 0.5)
+  }
+
+  test("clusterQuality a-distance: a point sitting on its centroid has a = 0") {
+    def v(x: Double) = Array(x.toFloat)
+    // cluster 0 is one point (its own centroid); cluster 1 far away
+    val rows = Seq((1L, 0, v(5)), (2L, 1, v(50)), (3L, 1, v(50)))
+      .toDF("vec_id", "label", "embedding")
+    val got = Similarity.clusterQuality(rows, "label")
+      .orderBy("cluster").collect()
+    assert(got(0).getAs[Double]("mean_a") == 0.0)
+    assert(got(0).getAs[Double]("mean_silhouette") == 1.0)
+    assert(got(1).getAs[Double]("mean_a") == 0.0)
+  }
+
+  test("rrfFuse replays hand-computed reciprocal ranks, one-sided docs included") {
+    val a = Seq((10L, 3.0), (20L, 2.0), (30L, 1.0)).toDF("id", "score")
+    val b = Seq((20L, 9.0), (40L, 8.0)).toDF("id", "score")
+    val got = Similarity.rrfFuse(a, b, "id", scoreCol = "score", k = 60)
+      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("rrf")))
+    def rrf(x: Double) = BigDecimal(x)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // 20 is rank 2 in A and rank 1 in B; 10 only A rank 1; 40 only B rank 2
+    assert(got.head == (20L, rrf(1.0 / 62 + 1.0 / 61)))
+    assert(got.toMap == Map(
+      20L -> rrf(1.0 / 62 + 1.0 / 61), 10L -> rrf(1.0 / 61),
+      30L -> rrf(1.0 / 63), 40L -> rrf(1.0 / 62)))
+    // fused order is score-desc with id tiebreak
+    assert(got.map(_._1).toSeq == Seq(20L, 10L, 40L, 30L))
+  }
+
+  test("rrfFuse ranks on the 6 dp-rounded score with id tiebreak") {
+    // scores equal after rounding: rank order falls back to id
+    val a = Seq((2L, 1.0000001), (1L, 1.0000004)).toDF("id", "score")
+    val b = spark.emptyDataFrame
+      .select(lit(0L).as("id"), lit(0.0).as("score")).limit(0)
+    val got = Similarity.rrfFuse(a, b, "id", scoreCol = "score")
+      .collect().map(_.getAs[Long]("id"))
+    assert(got.toSeq == Seq(1L, 2L))
+  }
+
+  test("rrfFuseBy fuses per query and matches single-query rrfFuse scores") {
+    val runA = Seq((1L, 10L, 0.9), (1L, 11L, 0.8),
+      (2L, 20L, 0.9), (2L, 21L, 0.8)).toDF("q", "d", "score")
+    val runB = Seq((1L, 11L, 0.9), (1L, 12L, 0.8),
+      (2L, 21L, 0.9)).toDF("q", "d", "score")
+    val fused = Similarity.rrfFuseBy(runA, runB, "q", "d")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        r.getAs[Double]("rrf")).toMap
+    // doc 11 in both runs for q1: 1/(60+2) + 1/(60+1)
+    assert(fused((1L, 11L)) ==
+      BigDecimal(1.0 / 62 + 1.0 / 61)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    // one-run docs get only that run's term
+    assert(fused((1L, 10L)) ==
+      BigDecimal(1.0 / 61).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+        .toDouble)
+    // per-query isolation: q2's ranks never see q1's rows
+    val single = Similarity.rrfFuse(runA.filter($"q" === 2L),
+      runB.filter($"q" === 2L), "d")
+      .collect().map(r => r.getAs[Long]("d") -> r.getAs[Double]("rrf")).toMap
+    assert(fused((2L, 21L)) == single(21L) && fused((2L, 20L)) == single(20L))
+  }
+
+  test("rbo: identical lists extrapolate to 1, disjoint to 0, partial overlap replays by hand") {
+    val a = (1L to 5L).map(i => (i, 10.0 - i)).toDF("id", "score")
+    val idSame = Similarity.rbo(a, a, "id", p = 0.9, depth = 5).head()
+    assert(idSame.getAs[Long]("overlap") == 5L)
+    assert(idSame.getAs[Double]("rbo") == r6(1.0 - math.pow(0.9, 5)),
+      "truncated RBO of identical prefixes carries exactly the prefix mass")
+    assert(idSame.getAs[Double]("rbo_ext") == 1.0)
+    val b = (11L to 15L).map(i => (i, 10.0 - i)).toDF("id", "score")
+    val disj = Similarity.rbo(a, b, "id", p = 0.9, depth = 5).head()
+    assert(disj.getAs[Long]("overlap") == 0L &&
+      disj.getAs[Double]("rbo") == 0.0 &&
+      disj.getAs[Double]("rbo_ext") == 0.0)
+    // same top doc only: doc 1 at rank 1 both sides → contribution w(1)
+    val c = (Seq((1L, 9.0)) ++ (12L to 15L).map(i => (i, 10.0 - i)))
+      .toDF("id", "score")
+    val one = Similarity.rbo(a, c, "id", p = 0.9, depth = 5).head()
+    val w = Similarity.rboWeights(0.9, 5)
+    assert(one.getAs[Long]("overlap") == 1L)
+    assert(one.getAs[Double]("rbo") == r6(0.09999999999999998 * w(0)))
+  }
+
+  test("rboWeights: w(m) strictly decreases and w(depth) is the bare tail term") {
+    val w = Similarity.rboWeights(0.9, 10)
+    assert(w.zip(w.tail).forall { case (x, y) => x > y })
+    assert(w(9) == math.pow(0.9, 9) / 10)
+  }
+
+  test("scalarQuantize: on-grid values reconstruct exactly, constants go to 0, range holds") {
+    // dim 0 spans [0, 255] with on-grid points (exact reconstruction);
+    // dim 1 is constant (lo == hi -> q = 0, xr = lo, zero error)
+    val rows = Seq(
+      (1L, Array(0.0f, 7.0f)),
+      (2L, Array(255.0f, 7.0f)),
+      (3L, Array(128.0f, 7.0f)))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.scalarQuantize(rows)
+      .orderBy("vec_id").collect()
+    assert(got.map(_.getAs[Double]("mse")).forall(_ == 0.0))
+    val qs = got.map(_.getSeq[Byte](1))
+    assert(qs(0) == Seq(-128.toByte, 0.toByte)) // 0 -> q=-128; const dim -> 0
+    assert(qs(1) == Seq(127.toByte, 0.toByte))  // 255 -> q=127
+    assert(qs(2) == Seq(0.toByte, 0.toByte))    // 128 -> round(128.0)=128 -> 0
+    assert(qs.flatten.forall(b => b >= -128 && b <= 127))
+  }
+
+  test("scalarQuantize MSE is bounded by the quantization step") {
+    // off-grid values: per-dim step = (hi-lo)/255, max err step/2
+    val rows = (0 until 50).map(i => (i.toLong, Array(i * 0.13f, -i * 0.07f)))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.scalarQuantize(rows).collect()
+    val step = math.pow(49 * 0.13f / 255.0 / 2.0, 2) +
+      math.pow(49 * 0.07f / 255.0 / 2.0, 2)
+    assert(got.map(_.getAs[Double]("mse")).forall(_ <= step),
+      "per-vector MSE exceeds the half-step bound")
+  }
+
+  test("pcaTopComponent recovers the dominant axis of an anisotropic cloud") {
+    // points (±3, 0) and (0, ±1): C = diag(4.5, 0.5); the eigengap is 9×
+    // per round, so 5 rounds leave tan(angle) = 9^-5 off the true e1
+    val df = Seq(
+      Array(3.0f, 0.0f), Array(-3.0f, 0.0f),
+      Array(0.0f, 1.0f), Array(0.0f, -1.0f)
+    ).map(Tuple1(_)).toDF("embedding")
+    val v = Similarity.pcaTopComponent(df, iters = 5)
+    assert(math.abs(v(0)) > 0.999999, s"v = ${v.toSeq}")
+    assert(math.abs(v(1)) < 2e-5)
+    assert(math.abs(v.map(z => z * z).sum - 1.0) < 1e-12, "unit norm")
+    val rep = Similarity.pcaVarianceReport(df, iters = 5).head()
+    assert(math.abs(rep.getAs[Double]("lambda") - 4.5) < 1e-6)
+    assert(rep.getAs[Double]("total_var") == 5.0)
+    assert(math.abs(rep.getAs[Double]("explained") - 0.9) < 1e-6)
+  }
+
+  test("pcaTopComponent centers: a shifted cloud gives the same direction") {
+    def cloud(dx: Float) = Seq(
+      Array(3.0f + dx, 0.0f), Array(-3.0f + dx, 0.0f),
+      Array(dx, 1.0f), Array(dx, -1.0f)
+    ).map(Tuple1(_)).toDF("embedding")
+    val v0 = Similarity.pcaTopComponent(cloud(0.0f), iters = 3)
+    val vShift = Similarity.pcaTopComponent(cloud(100.0f), iters = 3)
+    assert(v0.zip(vShift).forall { case (a, b) => math.abs(a - b) < 1e-9 },
+      "mean-centering makes the component translation-invariant")
+  }
+
+  test("pcaSecondComponent recovers the runner-up axis, orthogonal to the first") {
+    // variances 4.5 / 0.5 / ~0.005 on axes 1 / 2 / 3
+    val df = Seq(
+      Array(3.0f, 0.0f, 0.0f), Array(-3.0f, 0.0f, 0.0f),
+      Array(0.0f, 1.0f, 0.1f), Array(0.0f, -1.0f, -0.1f)
+    ).map(Tuple1(_)).toDF("embedding")
+    val v1 = Similarity.pcaTopComponent(df, iters = 6)
+    val v2 = Similarity.pcaSecondComponent(df, iters = 6)
+    assert(math.abs(v2.zip(v1).map { case (a, b) => a * b }.sum) < 1e-9,
+      "second component is orthogonal to the first")
+    assert(math.abs(v2.map(z => z * z).sum - 1.0) < 1e-12, "unit norm")
+    assert(math.abs(v2(1)) > 0.99, s"axis 2 dominates v2: ${v2.toSeq}")
+    assert(math.abs(v2(0)) < 1e-4)
+  }
+
+  test("embeddingOutliers ranks the planted outlier first and survives a constant dim") {
+    // 20 tight points + one far outlier; dim 3 is constant (σ = 0)
+    val rows = (1L to 20L).map(i =>
+      (i, Array((i % 5).toFloat, (i % 3).toFloat, 2.0f))) :+
+      (99L, Array(1000.0f, -1000.0f, 2.0f))
+    val df = rows.toDF("vec_id", "embedding")
+    val got = Similarity.embeddingOutliers(df, k = 3).collect()
+    assert(got.head.getLong(0) == 99L, "planted outlier scores highest")
+    assert(got.head.getDouble(1) > 10 * got(1).getDouble(1))
+    // constant dim contributes zero, not a division fault
+    assert(got.forall(r => !r.getDouble(1).isNaN))
+  }
+
+  test("pcaProject plans shuffle-free; embeddingOutliers cuts via TakeOrderedAndProject") {
+    val df = (1L to 8L).map(i => (i, Array(i.toFloat, (i % 3).toFloat)))
+      .toDF("vec_id", "embedding")
+    val p1 = Similarity.pcaProject(df, iters = 1)
+      .queryExecution.executedPlan.toString
+    assert(!p1.contains("Exchange"),
+      s"projection must be a narrow codegen map:\n$p1")
+    val p2 = Similarity.embeddingOutliers(df, k = 2)
+      .queryExecution.executedPlan.toString
+    assert(p2.contains("TakeOrderedAndProject"),
+      s"top-k must not globally sort:\n$p2")
+  }
+
+  test("pcaProject emits the centered dominant-axis coordinate per row") {
+    val df = Seq(
+      (1L, Array(3.0f, 0.0f)), (2L, Array(-3.0f, 0.0f)),
+      (3L, Array(0.0f, 1.0f)), (4L, Array(0.0f, -1.0f))
+    ).toDF("vec_id", "embedding")
+    val got = Similarity.pcaProject(df, iters = 5)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(math.abs(math.abs(got(1L)) - 3.0) < 1e-4)
+    assert(got(1L) == -got(2L), "symmetric cloud projects symmetrically")
+    assert(math.abs(got(3L)) < 1e-4 && math.abs(got(4L)) < 1e-4)
+  }
+
+  test("embeddingNearDups pairs no zero vector") {
+    // minCos -1 keeps every pair whose cosine is defined: in bucket 0 that
+    // is (0, 1) only — 5 and 6 are zero vectors, with each other or not
+    val pairs = Similarity.embeddingNearDups(withZeros, -1.0, "label")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs == Set((0L, 1L), (2L, 3L)))
+  }
+
+  test("semanticDedup keeps the zero-vector rows") {
+    val out = Similarity.semanticDedup(withZeros, 0.9, "label")
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(out == Set(0L, 2L, 4L, 5L, 6L))
+  }
+
+  test("one guarded cosine and one per-query cut in the graft/ext sources") {
+    // a Column cosine divided over two norms, and the per-query ranking
+    // window, each written once — in Similarity's shared kernel
+    val cosineDivision = """dot\(.*\)\s*/\s*\(.*\*""".r
+    val perQueryWindow = """Window\.partitionBy\(col\("query_id"\)\)""".r
+    val files = graft.SourceTree.scalaFiles(
+      graft.SourceTree.mainScala.resolve("graft/ext"))
+    assert(files.size > 10, s"scanned too few sources: ${files.size}")
+    def sites(re: scala.util.matching.Regex) = files.flatMap { f =>
+      java.nio.file.Files.readString(f).split('\n').toSeq.zipWithIndex.collect {
+        case (l, i) if re.findFirstIn(l).isDefined => s"${f.getFileName}:${i + 1}"
+      }
+    }
+    Seq(cosineDivision, perQueryWindow).foreach { re =>
+      val at = sites(re)
+      assert(at.size == 1 && at.head.startsWith("Similarity.scala:"),
+        s"${re.regex} in graft/ext: ${at.mkString(", ")}")
+    }
   }
 }
 
@@ -1636,6 +2103,52 @@ class IvfSuite extends AnyFunSuite {
       "append must not move the training mean")
     assert(m1.lastBatchCos.isDefined && m1.lastBatchCos.get < -0.8,
       "the mirrored batch must flip the staleness cosine")
+  }
+
+  test("appendToStore: incremental build serves exactly what a one-shot store serves") {
+    val emb = (0L until 40L).map { i =>
+      (i, Array(math.cos(i.toDouble).toFloat, math.sin(i.toDouble).toFloat,
+        (i % 7).toFloat), (i % 3).toInt)
+    }.toDF("vec_id", "embedding", "label")
+    val coarse = Ivf.train(emb, k = 4, iters = 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft_append_test")
+    val one = dir.resolve("one").toString
+    val inc = dir.resolve("inc").toString
+    Ivf.writeStore(emb, one, coarse)
+    Ivf.writeStore(emb.filter(col("vec_id") < 20), inc, coarse)
+    Ivf.appendToStore(emb.filter(col("vec_id") >= 20), inc, coarse)
+    val q = emb.filter(col("vec_id") < 2)
+    def serve(p: String) = Ivf.topKFromStore(spark, p, q, 5, coarse,
+        nprobe = 4)
+      .orderBy("query_id", "rank")
+      .collect().map(_.toSeq).toSeq
+    assert(serve(inc) == serve(one))
+  }
+
+  test("a zero vector is no candidate: PQ, residual IVFPQ and both store paths equal brute force at full budgets") {
+    val withZero = vecs.union(
+      Seq((40L, Array.fill(4)(0.0))).toDF("vec_id", "embedding"))
+    // the zero vector is both in the corpus and a query: it ranks nothing
+    // and nothing ranks it
+    val queries = withZero.filter(col("vec_id").isin(0L, 1L, 40L))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+    val exact = rows(Similarity.bruteForceTopK(withZero, queries, 5))
+    assert(exact.size == 10 && !exact.exists(r => r(0) == 40L || r(2) == 40L))
+    val cb = Pq.train(withZero, m = 2, ksub = 4, iters = 2)
+    assert(rows(Pq.topK(withZero, queries, 5, cb, rerank = 41)) == exact)
+    val coarse = Ivf.train(withZero, k = 2, iters = 2)
+    val cbr = Pq.trainResidual(withZero, coarse, m = 2, ksub = 4, iters = 2)
+    assert(rows(Pq.topKResidual(withZero, queries, 5, coarse, cbr,
+      rerank = 41, nprobe = 2)) == exact)
+    val dir = java.nio.file.Files.createTempDirectory("graft_pq_zero").toString
+    Pq.writeStore(withZero, s"$dir/flat", cb)
+    assert(rows(Pq.topKFromStore(spark, s"$dir/flat", withZero, queries, 5,
+      cb, rerank = 41)) == exact)
+    Pq.writeStore(withZero, s"$dir/res", cbr, Some(coarse), residual = true)
+    assert(rows(Pq.topKFromStore(spark, s"$dir/res", withZero, queries, 5,
+      cbr, rerank = 41, coarse = Some(coarse), nprobe = 2,
+      residual = true)) == exact)
   }
 }
 

@@ -358,23 +358,7 @@ class Round8OpsSuite extends AnyFunSuite {
     assert(got.forall(g => g._5 > 0 && java.lang.Double.isFinite(g._5)))
   }
 
-  // ---- clusterMap / nbQualityScore ---------------------------------------
-
-  test("clusterMap assigns to the nearest seed, seeds to themselves") {
-    // 2-d vectors around two well-separated seeds (ids 0 and 1)
-    val vecs = Seq(
-      (0L, Seq(0.0f, 0.0f)), (1L, Seq(10.0f, 10.0f)),
-      (2L, Seq(0.5f, 0.2f)), (3L, Seq(9.5f, 10.1f)), (4L, Seq(0.1f, 0.9f)))
-    val df = vecs.toDF("vec_id", "embedding")
-    val rows = Similarity.clusterMap(df, 2).orderBy("cluster").collect()
-    val got = rows.map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(got == Seq((0, 3L), (1, 2L)))
-    // the zero seed centroid has no direction → its coherence is NULL
-    // (not a fault); the non-degenerate cluster's is a valid cosine
-    assert(rows(0).isNullAt(2))
-    val c1 = rows(1).getDouble(2)
-    assert(c1 >= -1.0 - 1e-9 && c1 <= 1.0 + 1e-9)
-  }
+  // ---- nbQualityScore ----------------------------------------------------
 
   test("nbQualityScore replays the NB log-odds formula, empty docs get the prior") {
     val df = Seq(
@@ -411,44 +395,6 @@ class Round8OpsSuite extends AnyFunSuite {
     assert(got.toSeq == want)
     // the quality slice scores positive, the spam slice negative
     assert(got(0)._4 == 1 && got(2)._4 == 0)
-  }
-
-  test("randomProjection replays dot(v, h_i)/sqrt(k) exactly") {
-    val vec = Array.tabulate(16)(d => (d * 0.25f) - 1.0f)
-    val df = Seq((7L, vec.toSeq)).toDF("vec_id", "embedding")
-    val got = Similarity.randomProjection(df, 4).collect()(0)
-    val scale = 1.0 / math.sqrt(4.0)
-    (0 until 4).foreach { i =>
-      val h = Similarity.jlPlane(i, 16)
-      var acc = 0.0
-      (0 until 16).foreach(d => acc += vec(d).toDouble * h(d))
-      assert(got.getDouble(1 + i) == acc * scale) // bit-exact, no tolerance
-    }
-  }
-
-  test("projectedTopK with shortlist >= corpus == brute force exactly") {
-    val rnd = new scala.util.Random(7)
-    // 4 well-separated clusters + noise: the structured case JL serves
-    // (uniform-random cosines are near-constant and NO shortlist helps)
-    val vecs = (0L until 40L).map { i =>
-      val c = (i % 4).toInt
-      (i, Seq.tabulate(16)(d =>
-        (if (d / 4 == c) 3.0f else 0.0f) + rnd.nextFloat() - 0.5f))
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val queries = df.filter($"vec_id" < 2)
-    def collect(d: org.apache.spark.sql.DataFrame) = d
-      .orderBy("query_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    val exact = collect(Similarity.bruteForceTopK(df, queries, 5))
-    assert(collect(Similarity.projectedTopK(df, queries, 5, 8, 40)) == exact)
-    // at a 12-candidate budget the projected shortlist still recalls most
-    // of the true top-5 (JL preserves relative distances approximately)
-    val budget = collect(Similarity.projectedTopK(df, queries, 5, 8, 12))
-    val recall = budget.map(x => (x._1, x._3)).toSet
-      .intersect(exact.map(x => (x._1, x._3)).toSet).size.toDouble / exact.size
-    assert(recall >= 0.6, s"JL shortlist recall $recall")
   }
 
   test("randomProjection and nbScoreWith plan with no Exchange (narrow maps)") {
@@ -559,75 +505,6 @@ class Round8OpsSuite extends AnyFunSuite {
     val got = Dedup.minhashLshCross(docs, docs, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == Set((1L, 1L, 1.0), (2L, 2L, 1.0)))
-  }
-
-  // ---- hardNegatives / prototypicality -----------------------------------
-
-  test("hardNegatives at full shortlist == label-filtered brute force") {
-    val rnd = new scala.util.Random(11)
-    val vecs = (0L until 40L).map { i =>
-      val c = (i % 4).toInt
-      (i, c, Seq.tabulate(16)(d =>
-        (if (d / 4 == c) 3.0f else 0.0f) + rnd.nextFloat() - 0.5f))
-    }
-    val df = vecs.toDF("vec_id", "label", "embedding")
-    val queries = df.filter($"vec_id" < 3)
-    val got = Similarity.hardNegatives(df, queries, 5, 8, 40)
-      .orderBy("query_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3),
-        r.getDouble(4))).toSeq
-    // naive replay: brute force then drop same-label rows, re-rank
-    val naive = Similarity.bruteForceTopK(df, queries, 40).collect()
-      .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
-      .groupBy(_._1).toSeq.flatMap { case (q, rows) =>
-        val qLabel = (q % 4).toInt
-        rows.filter { case (_, c, _) => (c % 4).toInt != qLabel }
-          .sortBy { case (_, c, cos) => (-cos, c) }.take(5).zipWithIndex
-          .map { case ((_, c, cos), i) => (q, i + 1, c, (c % 4).toInt, cos) }
-      }.sortBy(x => (x._1, x._2))
-    assert(got == naive)
-    // every mined negative really carries a different label
-    assert(got.forall { case (q, _, _, l, _) => l != (q % 4).toInt })
-  }
-
-  test("hardNegatives pre-filters: full k even when projected neighbors share the label") {
-    // anchor's own cluster (same label) dominates similarity; a
-    // post-filtered shortlist of 3 would return nothing cross-label
-    val vecs =
-      (0L until 10L).map(i => (i, 0, Seq.tabulate(8)(d => if (d < 4) 5.0f else 0.1f))) ++
-      (10L until 14L).map(i => (i, 1, Seq.tabulate(8)(d => if (d < 4) 0.1f else 5.0f)))
-    val df = vecs.toDF("vec_id", "label", "embedding")
-    val got = Similarity.hardNegatives(df, df.filter($"vec_id" === 0L),
-      4, 4, 3)
-    // shortlist 3 < same-label cluster size, yet all 3 survivors are
-    // cross-label (capped by the shortlist, never empty)
-    val rows = got.collect()
-    assert(rows.length == 3)
-    assert(rows.forall(_.getInt(3) == 1))
-  }
-
-  test("prototypicality ranks centroid-nearest first and flags ceil(frac*n)") {
-    // cluster 0 seed = id 0 at the origin-ish; cluster 1 seed = id 1
-    val vecs = Seq(
-      (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f)),
-      (2L, Seq(0.9f, 0.1f)), (3L, Seq(0.6f, 0.4f)),
-      (4L, Seq(0.1f, 0.9f)), (5L, Seq(0.4f, 0.6f)), (6L, Seq(0.2f, 0.8f)))
-    val df = vecs.toDF("vec_id", "embedding")
-    val rows = Similarity.prototypicality(df, 2, 0.5)
-      .orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getInt(3),
-        r.getLong(4), r.getInt(5)))
-    // ids 0,2,3 go to cluster 0; 1,4,5,6 to cluster 1 (nearest seed)
-    assert(rows.map(_._2).toSeq == Seq(0, 1, 0, 0, 1, 1, 1))
-    // seeds are their own centroids: cos 1, rank 1, flagged
-    assert(rows(0)._3 == 1.0 && rows(0)._4 == 1 && rows(0)._6 == 1)
-    assert(rows(1)._3 == 1.0 && rows(1)._4 == 1 && rows(1)._6 == 1)
-    // cluster sizes 3 and 4 → ceil(0.5*n) = 2 flagged in each
-    assert(rows.count(r => r._2 == 0 && r._6 == 1) == 2)
-    assert(rows.count(r => r._2 == 1 && r._6 == 1) == 2)
-    // within a cluster, rank order follows cosine-to-centroid descending
-    val c1 = rows.filter(_._2 == 1).sortBy(_._4)
-    assert(c1.map(_._3).toSeq == c1.map(_._3).sortBy(-(_: Double)).toSeq)
   }
 
   // ---- containmentPairs --------------------------------------------------
@@ -808,15 +685,6 @@ class Round8OpsSuite extends AnyFunSuite {
       s"temperatureMixture must not shuffle:\n$plan")
   }
 
-  test("prototypicality shares ONE keyed exchange between rank and size windows") {
-    val df = (0L until 20L).map(i =>
-      (i, Seq.tabulate(4)(d => (i + d).toFloat))).toDF("vec_id", "embedding")
-    val plan = Similarity.prototypicality(df, 2, 0.25)
-      .queryExecution.executedPlan.toString
-    val keyed = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(keyed == 1, s"expected 1 keyed exchange, got $keyed:\n$plan")
-  }
-
   // ---- winsorize / ecdf --------------------------------------------------
 
   test("winsorize clamps into the per-key interpolated percentile band") {
@@ -923,73 +791,6 @@ class Round8OpsSuite extends AnyFunSuite {
     val k1 = Sampling.temperatureMixture(df, "src", 0.5, 0.3, "id", "m")
       .select("id").as[Long].collect().toSet
     assert(k1.subsetOf(k2), "raising k must only add documents")
-  }
-
-  // ---- mmrTopK -----------------------------------------------------------
-
-  test("mmrTopK with lambda=1 reduces to pure-relevance ranking") {
-    val rnd = new scala.util.Random(5)
-    val vecs = (0L until 30L).map { i =>
-      (i, Seq.tabulate(12)(_ => rnd.nextFloat() - 0.3f))
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val queries = df.filter($"vec_id" < 2)
-    val mmr = Similarity.mmrTopK(df, queries, 5, 1.0, 20)
-      .orderBy("query_id", "mmr_rank").collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSeq
-    val brute = Similarity.bruteForceTopK(df, queries, 5)
-      .orderBy("query_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSeq
-    assert(mmr == brute)
-  }
-
-  test("mmrTopK diversifies: second pick escapes the near-duplicate cluster") {
-    // cluster X: three near-identical highly relevant vectors; cluster Y:
-    // one slightly less relevant but orthogonal-ish vector
-    val docs = Seq(
-      (100L, Seq(1.0f, 0.0f, 0.0f)),            // the query
-      (1L, Seq(0.99f, 0.10f, 0.00f)),           // X
-      (2L, Seq(0.99f, 0.11f, 0.00f)),           // X (near-dup of 1)
-      (3L, Seq(0.98f, 0.12f, 0.00f)),           // X (near-dup of 1)
-      (4L, Seq(0.80f, 0.00f, 0.60f)))           // Y (distinct direction)
-      .toDF("vec_id", "embedding")
-    val queries = docs.filter($"vec_id" === 100L)
-    val relOrder = Similarity.mmrTopK(docs, queries, 3, 1.0, 4)
-      .orderBy("mmr_rank").collect().map(_.getLong(2)).toSeq
-    assert(relOrder == Seq(1L, 2L, 3L)) // pure relevance: all from X
-    val diverse = Similarity.mmrTopK(docs, queries, 3, 0.5, 4)
-      .orderBy("mmr_rank").collect().map(_.getLong(2)).toSeq
-    assert(diverse.head == 1L)          // most relevant still first
-    assert(diverse(1) == 4L, s"second pick should diversify, got $diverse")
-  }
-
-  test("mmrTopK caps at the candidate-set size") {
-    val docs = Seq(
-      (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.9f, 0.1f)), (2L, Seq(0.8f, 0.2f)))
-      .toDF("vec_id", "embedding")
-    val got = Similarity.mmrTopK(docs, docs.filter($"vec_id" === 0L),
-      10, 0.7, 2)
-    assert(got.count() == 2)
-  }
-
-  test("bm25 replays the scoring formula; docs without query terms excluded") {
-    val df = Seq((1L, "hash join"), (2L, "hash hash hash scan scan scan"),
-      (3L, "other words entirely")).toDF("doc_id", "text")
-    val got = TextAnalysis.bm25(df, "doc_id", "text", "hash join")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val (k1, b) = (1.2, 0.75)
-    val n = 3.0; val avgdl = (2.0 + 6.0 + 3.0) / 3.0
-    def idf(dfq: Double) = math.log(1.0 + (n - dfq + 0.5) / (dfq + 0.5))
-    def term(tf: Double, dfq: Double, dl: Double) =
-      idf(dfq) * (tf * (k1 + 1.0)) /
-        (tf + k1 * ((1.0 - b) + b * dl / avgdl))
-    def r6(x: Double) = BigDecimal(x)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(got.keySet == Set(1L, 2L)) // doc 3 matches nothing
-    assert(got(1L) == r6(term(1, 2, 2) + term(1, 1, 2)))
-    assert(got(2L) == r6(term(3, 2, 6)))
-    // the short doc holding the RARE term outranks the tf-stuffed one
-    assert(got(1L) > got(2L))
   }
 
   // ---- pmiCollocations / transitionMatrix --------------------------------
@@ -1124,18 +925,5 @@ class Round8OpsSuite extends AnyFunSuite {
       ("B", "A", 1L, 2L, 0.5),
       ("B", "B", 1L, 2L, 0.5)))
     // no cross-user adjacency: user 1's last event never chains to user 2
-  }
-
-  test("prototypicality ranks zero vectors last (NULL cosine sentinel)") {
-    val df = Seq(
-      (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 0.0f)), (2L, Seq(0.8f, 0.2f)))
-      .toDF("vec_id", "embedding")
-    // k=1: everything lands in cluster 0 (seed id 0)
-    val rows = Similarity.prototypicality(df, 1, 0.25)
-      .orderBy("rnk").collect()
-    assert(rows.map(_.getLong(0)).toSeq == Seq(0L, 2L, 1L))
-    assert(rows(2).isNullAt(2)) // the zero vector's cosine is NULL
-    // ceil(0.25*3) = 1 → only the seed is flagged
-    assert(rows.map(_.getInt(5)).toSeq == Seq(1, 0, 0))
   }
 }

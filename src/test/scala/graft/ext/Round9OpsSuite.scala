@@ -5,8 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.SparkTest
 
-/** Round-9 operators: token entropy, Zipf fit, simplified-silhouette
-  * cluster quality, reciprocal rank fusion. */
+/** Round-9 operators: token entropy, Zipf fit. */
 class Round9OpsSuite extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
   import spark.implicits._
@@ -82,57 +81,6 @@ class Round9OpsSuite extends AnyFunSuite {
         "src", "dst", 1)
     }
     assert(err.getMessage.contains("empty edge set"))
-  }
-
-  // ---- clusterQuality ----------------------------------------------------
-
-  test("clusterQuality: separated clusters score near 1, merged clusters near 0") {
-    // two tight, far-apart clusters and one cluster duplicated on top of
-    // the first (its points are equidistant-ish -> low silhouette)
-    def v(x: Double, y: Double) = Array(x.toFloat, y.toFloat)
-    val rows = Seq(
-      (1L, 0, v(0, 0)), (2L, 0, v(0, 1)), (3L, 0, v(1, 0)),
-      (4L, 1, v(100, 100)), (5L, 1, v(100, 101)), (6L, 1, v(101, 100)),
-      (7L, 2, v(0.5, 0.5)), (8L, 2, v(0.4, 0.4)), (9L, 2, v(0.6, 0.3))
-    ).toDF("vec_id", "label", "embedding")
-    val got = Similarity.clusterQuality(rows, "label")
-      .orderBy("cluster").collect()
-    assert(got.map(_.getAs[Long]("n")).toSeq == Seq(3L, 3L, 3L))
-    // cluster 1 is 140 units from everything: silhouette ~ 1
-    assert(got(1).getAs[Double]("mean_silhouette") > 0.99)
-    // clusters 0 and 2 overlap: silhouette well below the separated one
-    assert(got(0).getAs[Double]("mean_silhouette") < 0.5)
-    assert(got(2).getAs[Double]("mean_silhouette") < 0.5)
-  }
-
-  test("clusterQuality a-distance: a point sitting on its centroid has a = 0") {
-    def v(x: Double) = Array(x.toFloat)
-    // cluster 0 is one point (its own centroid); cluster 1 far away
-    val rows = Seq((1L, 0, v(5)), (2L, 1, v(50)), (3L, 1, v(50)))
-      .toDF("vec_id", "label", "embedding")
-    val got = Similarity.clusterQuality(rows, "label")
-      .orderBy("cluster").collect()
-    assert(got(0).getAs[Double]("mean_a") == 0.0)
-    assert(got(0).getAs[Double]("mean_silhouette") == 1.0)
-    assert(got(1).getAs[Double]("mean_a") == 0.0)
-  }
-
-  // ---- rrfFuse -----------------------------------------------------------
-
-  test("rrfFuse replays hand-computed reciprocal ranks, one-sided docs included") {
-    val a = Seq((10L, 3.0), (20L, 2.0), (30L, 1.0)).toDF("id", "score")
-    val b = Seq((20L, 9.0), (40L, 8.0)).toDF("id", "score")
-    val got = Similarity.rrfFuse(a, b, "id", scoreCol = "score", k = 60)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("rrf")))
-    def rrf(x: Double) = BigDecimal(x)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    // 20 is rank 2 in A and rank 1 in B; 10 only A rank 1; 40 only B rank 2
-    assert(got.head == (20L, rrf(1.0 / 62 + 1.0 / 61)))
-    assert(got.toMap == Map(
-      20L -> rrf(1.0 / 62 + 1.0 / 61), 10L -> rrf(1.0 / 61),
-      30L -> rrf(1.0 / 63), 40L -> rrf(1.0 / 62)))
-    // fused order is score-desc with id tiebreak
-    assert(got.map(_._1).toSeq == Seq(20L, 10L, 40L, 30L))
   }
 
   // ---- editDistanceVerify ------------------------------------------------
@@ -296,37 +244,6 @@ class Round9OpsSuite extends AnyFunSuite {
     assert(got(3L).isEmpty && got(4L).isEmpty)
   }
 
-  // ---- scalarQuantize ----------------------------------------------------
-
-  test("scalarQuantize: on-grid values reconstruct exactly, constants go to 0, range holds") {
-    // dim 0 spans [0, 255] with on-grid points (exact reconstruction);
-    // dim 1 is constant (lo == hi -> q = 0, xr = lo, zero error)
-    val rows = Seq(
-      (1L, Array(0.0f, 7.0f)),
-      (2L, Array(255.0f, 7.0f)),
-      (3L, Array(128.0f, 7.0f)))
-      .toDF("vec_id", "embedding")
-    val got = Similarity.scalarQuantize(rows)
-      .orderBy("vec_id").collect()
-    assert(got.map(_.getAs[Double]("mse")).forall(_ == 0.0))
-    val qs = got.map(_.getSeq[Byte](1))
-    assert(qs(0) == Seq(-128.toByte, 0.toByte)) // 0 -> q=-128; const dim -> 0
-    assert(qs(1) == Seq(127.toByte, 0.toByte))  // 255 -> q=127
-    assert(qs(2) == Seq(0.toByte, 0.toByte))    // 128 -> round(128.0)=128 -> 0
-    assert(qs.flatten.forall(b => b >= -128 && b <= 127))
-  }
-
-  test("scalarQuantize MSE is bounded by the quantization step") {
-    // off-grid values: per-dim step = (hi-lo)/255, max err step/2
-    val rows = (0 until 50).map(i => (i.toLong, Array(i * 0.13f, -i * 0.07f)))
-      .toDF("vec_id", "embedding")
-    val got = Similarity.scalarQuantize(rows).collect()
-    val step = math.pow(49 * 0.13f / 255.0 / 2.0, 2) +
-      math.pow(49 * 0.07f / 255.0 / 2.0, 2)
-    assert(got.map(_.getAs[Double]("mse")).forall(_ <= step),
-      "per-vector MSE exceeds the half-step bound")
-  }
-
   // ---- pageRank ----------------------------------------------------------
 
   test("pageRank replays a hand-computed chain with a dangling node, mass conserved") {
@@ -423,16 +340,6 @@ class Round9OpsSuite extends AnyFunSuite {
     assert(r.getDouble(1) == 0.5 && r.getInt(2) == 1) // sigma(0)=0.5 >= 0.5
   }
 
-  test("rrfFuse ranks on the 6 dp-rounded score with id tiebreak") {
-    // scores equal after rounding: rank order falls back to id
-    val a = Seq((2L, 1.0000001), (1L, 1.0000004)).toDF("id", "score")
-    val b = spark.emptyDataFrame
-      .select(lit(0L).as("id"), lit(0.0).as("score")).limit(0)
-    val got = Similarity.rrfFuse(a, b, "id", scoreCol = "score")
-      .collect().map(_.getAs[Long]("id"))
-    assert(got.toSeq == Seq(1L, 2L))
-  }
-
   // ---- retrievalMetrics --------------------------------------------------
 
   private def r6(x: Double): Double =
@@ -488,30 +395,7 @@ class Round9OpsSuite extends AnyFunSuite {
     assert(got.getAs[Double]("ndcg") == 1.0) // both slots rel, idcg = k slots
   }
 
-  // ---- rrfFuseBy / retrievalMetricsMacro ----------------------------------
-
-  test("rrfFuseBy fuses per query and matches single-query rrfFuse scores") {
-    val runA = Seq((1L, 10L, 0.9), (1L, 11L, 0.8),
-      (2L, 20L, 0.9), (2L, 21L, 0.8)).toDF("q", "d", "score")
-    val runB = Seq((1L, 11L, 0.9), (1L, 12L, 0.8),
-      (2L, 21L, 0.9)).toDF("q", "d", "score")
-    val fused = Similarity.rrfFuseBy(runA, runB, "q", "d")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
-        r.getAs[Double]("rrf")).toMap
-    // doc 11 in both runs for q1: 1/(60+2) + 1/(60+1)
-    assert(fused((1L, 11L)) ==
-      BigDecimal(1.0 / 62 + 1.0 / 61)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    // one-run docs get only that run's term
-    assert(fused((1L, 10L)) ==
-      BigDecimal(1.0 / 61).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble)
-    // per-query isolation: q2's ranks never see q1's rows
-    val single = Similarity.rrfFuse(runA.filter($"q" === 2L),
-      runB.filter($"q" === 2L), "d")
-      .collect().map(r => r.getAs[Long]("d") -> r.getAs[Double]("rrf")).toMap
-    assert(fused((2L, 21L)) == single(21L) && fused((2L, 20L)) == single(20L))
-  }
+  // ---- retrievalMetricsMacro ---------------------------------------------
 
   test("retrievalMetricsMacro appends a macro row over judged queries only") {
     val runs = Seq((1L, 10L, 0.9), (1L, 11L, 0.8),
@@ -777,35 +661,6 @@ class Round9OpsSuite extends AnyFunSuite {
     assert(got.forall(r => pool.contains(r._3)))
   }
 
-  // ---- rbo --------------------------------------------------------------
-
-  test("rbo: identical lists extrapolate to 1, disjoint to 0, partial overlap replays by hand") {
-    val a = (1L to 5L).map(i => (i, 10.0 - i)).toDF("id", "score")
-    val idSame = Similarity.rbo(a, a, "id", p = 0.9, depth = 5).head()
-    assert(idSame.getAs[Long]("overlap") == 5L)
-    assert(idSame.getAs[Double]("rbo") == r6(1.0 - math.pow(0.9, 5)),
-      "truncated RBO of identical prefixes carries exactly the prefix mass")
-    assert(idSame.getAs[Double]("rbo_ext") == 1.0)
-    val b = (11L to 15L).map(i => (i, 10.0 - i)).toDF("id", "score")
-    val disj = Similarity.rbo(a, b, "id", p = 0.9, depth = 5).head()
-    assert(disj.getAs[Long]("overlap") == 0L &&
-      disj.getAs[Double]("rbo") == 0.0 &&
-      disj.getAs[Double]("rbo_ext") == 0.0)
-    // same top doc only: doc 1 at rank 1 both sides → contribution w(1)
-    val c = (Seq((1L, 9.0)) ++ (12L to 15L).map(i => (i, 10.0 - i)))
-      .toDF("id", "score")
-    val one = Similarity.rbo(a, c, "id", p = 0.9, depth = 5).head()
-    val w = Similarity.rboWeights(0.9, 5)
-    assert(one.getAs[Long]("overlap") == 1L)
-    assert(one.getAs[Double]("rbo") == r6(0.09999999999999998 * w(0)))
-  }
-
-  test("rboWeights: w(m) strictly decreases and w(depth) is the bare tail term") {
-    val w = Similarity.rboWeights(0.9, 10)
-    assert(w.zip(w.tail).forall { case (x, y) => x > y })
-    assert(w(9) == math.pow(0.9, 9) / 10)
-  }
-
   // ---- spearman ----------------------------------------------------------
 
   test("spearman: monotone agreement 1, reversal -1, tie-heavy hand case, constant NULL") {
@@ -823,125 +678,6 @@ class Round9OpsSuite extends AnyFunSuite {
     val expect = (3 * sab - 6 * 6) /
       math.sqrt((3 * 13.5 - 36) * (3 * 14.0 - 36))
     assert(Eval.spearman(tied, "a", "b").head().getAs[Double]("rho") == expect)
-  }
-
-  // ---- pcaTopComponent ---------------------------------------------------
-
-  test("pcaTopComponent recovers the dominant axis of an anisotropic cloud") {
-    // points (±3, 0) and (0, ±1): C = diag(4.5, 0.5); the eigengap is 9×
-    // per round, so 5 rounds leave tan(angle) = 9^-5 off the true e1
-    val df = Seq(
-      Array(3.0f, 0.0f), Array(-3.0f, 0.0f),
-      Array(0.0f, 1.0f), Array(0.0f, -1.0f)
-    ).map(Tuple1(_)).toDF("embedding")
-    val v = Similarity.pcaTopComponent(df, iters = 5)
-    assert(math.abs(v(0)) > 0.999999, s"v = ${v.toSeq}")
-    assert(math.abs(v(1)) < 2e-5)
-    assert(math.abs(v.map(z => z * z).sum - 1.0) < 1e-12, "unit norm")
-    val rep = Similarity.pcaVarianceReport(df, iters = 5).head()
-    assert(math.abs(rep.getAs[Double]("lambda") - 4.5) < 1e-6)
-    assert(rep.getAs[Double]("total_var") == 5.0)
-    assert(math.abs(rep.getAs[Double]("explained") - 0.9) < 1e-6)
-  }
-
-  test("pcaTopComponent centers: a shifted cloud gives the same direction") {
-    def cloud(dx: Float) = Seq(
-      Array(3.0f + dx, 0.0f), Array(-3.0f + dx, 0.0f),
-      Array(dx, 1.0f), Array(dx, -1.0f)
-    ).map(Tuple1(_)).toDF("embedding")
-    val v0 = Similarity.pcaTopComponent(cloud(0.0f), iters = 3)
-    val vShift = Similarity.pcaTopComponent(cloud(100.0f), iters = 3)
-    assert(v0.zip(vShift).forall { case (a, b) => math.abs(a - b) < 1e-9 },
-      "mean-centering makes the component translation-invariant")
-  }
-
-  test("pcaSecondComponent recovers the runner-up axis, orthogonal to the first") {
-    // variances 4.5 / 0.5 / ~0.005 on axes 1 / 2 / 3
-    val df = Seq(
-      Array(3.0f, 0.0f, 0.0f), Array(-3.0f, 0.0f, 0.0f),
-      Array(0.0f, 1.0f, 0.1f), Array(0.0f, -1.0f, -0.1f)
-    ).map(Tuple1(_)).toDF("embedding")
-    val v1 = Similarity.pcaTopComponent(df, iters = 6)
-    val v2 = Similarity.pcaSecondComponent(df, iters = 6)
-    assert(math.abs(v2.zip(v1).map { case (a, b) => a * b }.sum) < 1e-9,
-      "second component is orthogonal to the first")
-    assert(math.abs(v2.map(z => z * z).sum - 1.0) < 1e-12, "unit norm")
-    assert(math.abs(v2(1)) > 0.99, s"axis 2 dominates v2: ${v2.toSeq}")
-    assert(math.abs(v2(0)) < 1e-4)
-  }
-
-  test("embeddingOutliers ranks the planted outlier first and survives a constant dim") {
-    // 20 tight points + one far outlier; dim 3 is constant (σ = 0)
-    val rows = (1L to 20L).map(i =>
-      (i, Array((i % 5).toFloat, (i % 3).toFloat, 2.0f))) :+
-      (99L, Array(1000.0f, -1000.0f, 2.0f))
-    val df = rows.toDF("vec_id", "embedding")
-    val got = Similarity.embeddingOutliers(df, k = 3).collect()
-    assert(got.head.getLong(0) == 99L, "planted outlier scores highest")
-    assert(got.head.getDouble(1) > 10 * got(1).getDouble(1))
-    // constant dim contributes zero, not a division fault
-    assert(got.forall(r => !r.getDouble(1).isNaN))
-  }
-
-  test("pcaProject plans shuffle-free; embeddingOutliers cuts via TakeOrderedAndProject") {
-    val df = (1L to 8L).map(i => (i, Array(i.toFloat, (i % 3).toFloat)))
-      .toDF("vec_id", "embedding")
-    val p1 = Similarity.pcaProject(df, iters = 1)
-      .queryExecution.executedPlan.toString
-    assert(!p1.contains("Exchange"),
-      s"projection must be a narrow codegen map:\n$p1")
-    val p2 = Similarity.embeddingOutliers(df, k = 2)
-      .queryExecution.executedPlan.toString
-    assert(p2.contains("TakeOrderedAndProject"),
-      s"top-k must not globally sort:\n$p2")
-  }
-
-  test("pcaProject emits the centered dominant-axis coordinate per row") {
-    val df = Seq(
-      (1L, Array(3.0f, 0.0f)), (2L, Array(-3.0f, 0.0f)),
-      (3L, Array(0.0f, 1.0f)), (4L, Array(0.0f, -1.0f))
-    ).toDF("vec_id", "embedding")
-    val got = Similarity.pcaProject(df, iters = 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(math.abs(math.abs(got(1L)) - 3.0) < 1e-4)
-    assert(got(1L) == -got(2L), "symmetric cloud projects symmetrically")
-    assert(math.abs(got(3L)) < 1e-4 && math.abs(got(4L)) < 1e-4)
-  }
-
-  // ---- appendToStore / embeddingDrift ------------------------------------
-
-  test("appendToStore: incremental build serves exactly what a one-shot store serves") {
-    val emb = (0L until 40L).map { i =>
-      (i, Array(math.cos(i.toDouble).toFloat, math.sin(i.toDouble).toFloat,
-        (i % 7).toFloat), (i % 3).toInt)
-    }.toDF("vec_id", "embedding", "label")
-    val coarse = Ivf.train(emb, k = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_append_test")
-    val one = dir.resolve("one").toString
-    val inc = dir.resolve("inc").toString
-    Ivf.writeStore(emb, one, coarse)
-    Ivf.writeStore(emb.filter(col("vec_id") < 20), inc, coarse)
-    Ivf.appendToStore(emb.filter(col("vec_id") >= 20), inc, coarse)
-    val q = emb.filter(col("vec_id") < 2)
-    def serve(p: String) = Ivf.topKFromStore(spark, p, q, 5, coarse,
-        nprobe = 4)
-      .orderBy("query_id", "rank")
-      .collect().map(_.toSeq).toSeq
-    assert(serve(inc) == serve(one))
-  }
-
-  test("embeddingDrift: identical slices show cos 1 / l2 0; a shifted slice moves both") {
-    val a = (0L until 10L).map(i =>
-      (i, Array(1.0f, 2.0f, (i % 3).toFloat))).toDF("vec_id", "embedding")
-    val same = Similarity.embeddingDrift(a, a).head()
-    assert(same.getAs[Double]("mean_cos") == 1.0)
-    assert(same.getAs[Double]("mean_l2") == 0.0)
-    assert(same.getAs[Long]("n_base") == 10L)
-    val b = a.select(col("vec_id"),
-      transform(col("embedding"), x => x + lit(5.0f)).as("embedding"))
-    val moved = Similarity.embeddingDrift(a, b).head()
-    assert(moved.getAs[Double]("mean_l2") > 8.0)
-    assert(moved.getAs[Double]("mean_cos") < 1.0)
   }
 
   // ---- PoissonThresholds -------------------------------------------------
