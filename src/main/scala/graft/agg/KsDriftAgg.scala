@@ -31,24 +31,30 @@ private object DriftAggs {
   /** Walks the union of a sorted baseline (values + CUMULATIVE counts) and
     * the live counts' keys in ascending order, calling
     * `step(baseCount, liveCount)` once per value — 0 on the side that
-    * lacks it. */
+    * lacks it. NaN is ONE value above all others, as in Spark's ordering
+    * and grouping (so the batch tests agree): `<=` is false both ways
+    * against NaN, and NaN ≠ NaN makes each live NaN its own map entry, so
+    * every NaN on either side folds into one last step. */
   def walk(baseVals: Array[Double], baseCum: Array[Long],
       live: mutable.HashMap[Double, Long])(step: (Long, Long) => Unit): Unit = {
-    val liveVals = live.keysIterator.toArray
+    val nb = baseVals.count(!_.isNaN) // sorted: a NaN value comes last
+    val liveVals = live.keysIterator.filterNot(_.isNaN).toArray
     java.util.Arrays.sort(liveVals)
+    def cumAt(i: Int) = if (i == 0) 0L else baseCum(i - 1)
     var i = 0; var j = 0
-    while (i < baseVals.length || j < liveVals.length) {
+    while (i < nb || j < liveVals.length) {
       val takeBase = j >= liveVals.length ||
-        (i < baseVals.length && baseVals(i) <= liveVals(j))
-      val takeLive = i >= baseVals.length ||
+        (i < nb && baseVals(i) <= liveVals(j))
+      val takeLive = i >= nb ||
         (j < liveVals.length && liveVals(j) <= baseVals(i))
       var cb = 0L; var cl = 0L
-      if (takeBase) {
-        cb = baseCum(i) - (if (i == 0) 0L else baseCum(i - 1)); i += 1
-      }
+      if (takeBase) { cb = baseCum(i) - cumAt(i); i += 1 }
       if (takeLive) { cl = live(liveVals(j)); j += 1 }
       step(cb, cl)
     }
+    val baseNaN = baseCum(baseCum.length - 1) - cumAt(nb)
+    val liveNaN = live.iterator.collect { case (v, c) if v.isNaN => c }.sum
+    if (baseNaN > 0 || liveNaN > 0) step(baseNaN, liveNaN)
   }
 }
 

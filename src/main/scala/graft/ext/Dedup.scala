@@ -10,11 +10,19 @@ import graft.functions.SetSimilarity
   * around its 100 TB shape:
   *
   *   - exact: hash-groupBy — one shuffle on a 128-bit digest;
-  *   - MinHash+LSH: per-row signature (shuffle-free map) → band-bucket
-  *     self-join (shuffle on band keys only, candidates ≪ n²) → verify;
-  *   - SimHash: per-row 64-bit sketch, near-dup = small Hamming distance;
-  *   - n-gram Jaccard: exact pairwise verify, used on LSH candidates (the
-  *     all-pairs variant exists for oracle-checkable small corpora only);
+  *   - near-duplicate pairs: ONE filter-then-verify candidate pipeline,
+  *     each step written once below. Every document maps shuffle-free to
+  *     bucket keys (MinHash bands, SimHash/perceptual-hash chunks, prefix
+  *     shingles, posting hashes); a hot-bucket cap drops spam buckets
+  *     wholesale; one equi-join on the keys yields distinct candidate
+  *     `(id_a, id_b)` pairs (candidates ≪ n²); the verify (exact Jaccard,
+  *     xor-popcount, containment, edit distance) reads each end's payload
+  *     back by id. A self-join's two sides shuffle on the same keys, so
+  *     ReuseExchange serves both from ONE map stage — pinned by DedupSuite.
+  *     The windowed survivors vote over the same buckets instead, with no
+  *     pair materialized;
+  *   - n-gram Jaccard all-pairs within a block: the exact reference the
+  *     prefix filter is tested against (oracle-checkable small corpora);
   *   - embedding cosine: see [[Similarity]].
   */
 object Dedup {
@@ -34,25 +42,110 @@ object Dedup {
   def hashParams(numHashes: Int): Seq[(Long, Long)] =
     (0 until numHashes).map(i => (2L * i + 3L, 5L * i + 7L))
 
+  // ---- the candidate pipeline, one helper per step ------------------------
+
+  private val BandKeys = Seq("band", "band_key")
+
+  /** `(lead…, doc_id, sh)`: each document's hashed, sorted shingle set. The
+    * caller's id expression passes through as given (the LSH store casts
+    * to long, the in-memory members keep the input type). */
+  private def shingled(df: DataFrame, textCol: String, id: Column,
+      lead: Column*): DataFrame =
+    df.select(lead :+ id.as("doc_id") :+
+      TextAnalysis.hashedShingles(textCol).as("sh"): _*)
+
+  /** `(lead…, doc_id, band, band_key)`: the MinHash band explode, one row
+    * per band. Per-document work (tokenize → shingle → hash → signature →
+    * band keys) is two native kernel calls
+    * ([[graft.functions.HashedShingles]], [[graft.functions.MinHashBandKeys]])
+    * inside whole-stage codegen — the SQL-lambda equivalent pays interpreted
+    * eval per shingle per hash function, ~50× more per row. */
+  private def bandedMinHash(df: DataFrame, textCol: String, id: Column,
+      numHashes: Int, bands: Int, lead: Column*): DataFrame = {
+    require(numHashes % bands == 0)
+    df.select(lead :+ id.as("doc_id") :+
+      posexplode(graft.functions.MinHashBandKeys.column(
+        TextAnalysis.hashedShingles(textCol), hashParams(numHashes), bands))
+        .as(BandKeys): _*)
+  }
+
+  /** Skew guard: a bucket with m members yields m² candidate pairs, and
+    * real corpora have boilerplate mega-buckets (empty pages, headers).
+    * Buckets holding more than `cap` rows, counted over all `sides`
+    * together, are dropped wholesale from every side — the standard LSH
+    * spam defense; their members still pair through their OTHER buckets.
+    * The hot set is by definition tiny → broadcast anti-join, no extra
+    * shuffle of the banded tables. `Int.MaxValue` turns the guard off. */
+  private def dropHot(sides: Seq[DataFrame], keys: Seq[String],
+      cap: Int): Seq[DataFrame] =
+    if (cap == Int.MaxValue) sides
+    else {
+      val hot = sides.reduce(_.unionByName(_)).groupBy(keys.map(col): _*)
+        .count().filter(col("count") > cap).select(keys.map(col): _*)
+      sides.map(_.join(broadcast(hot), keys, "left_anti"))
+    }
+
+  /** Candidate pairs: `l` and `r` rows with equal `keys`, as distinct
+    * `(id_a, id_b)` — the ids alone go through the distinct's shuffle
+    * (cheap long columns); the caller reads payloads back to verify. A
+    * self-join passes one frame twice with `ordered` (id_a < id_b); a
+    * cross join has no order rule. */
+  private def bucketPairs(l: DataFrame, r: DataFrame, keys: Seq[String],
+      ordered: Boolean): DataFrame = {
+    val on = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+    l.as("l")
+      .join(r.as("r"),
+        if (ordered) on && col("l.doc_id") < col("r.doc_id") else on)
+      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
+      .distinct()
+  }
+
+  /** `pairs` with column `v` of `t` (keyed by `doc_id`) attached to each
+    * end as `v_a` and `v_b` — one equi-join per end on the id. */
+  private def bothEnds(pairs: DataFrame, t: DataFrame, v: String): DataFrame =
+    pairs
+      .join(t.select(col("doc_id").as("id_a"), col(v).as(s"${v}_a")), "id_a")
+      .join(t.select(col("doc_id").as("id_b"), col(v).as(s"${v}_b")), "id_b")
+
+  /** Pigeonhole split of a 60-bit sketch into `maxHamming + 1` equal
+    * chunks — any pair within `maxHamming` bit flips agrees on at least
+    * one whole chunk. Returns (chunks, chunk mask, array of chunk values). */
+  private def sketchChunks(sk: Column, maxHamming: Int): (Int, Long, Column) = {
+    val chunks = maxHamming + 1
+    require(60 % chunks == 0, s"60 bits must split evenly into $chunks chunks")
+    val width = 60 / chunks
+    val mask = (1L << width) - 1L
+    (chunks, mask, array((0 until chunks).map { c =>
+      shiftright(sk, c * width).bitwiseAND(lit(mask))
+    }: _*))
+  }
+
+  /** The windowed "won every bucket" vote over `banded` (`_ts`, `doc_id`
+    * and the bucket `keys`): the min id wins each (window, bucket), and
+    * a document survives iff it won all `n` of its buckets. Two chained
+    * aggregations — the composition Structured Streaming supports in
+    * append mode. Output: (ws, doc_id). */
+  private def wonEveryBucket(banded: DataFrame, windowDur: String,
+      keys: Seq[String], n: Int): DataFrame =
+    banded
+      .groupBy(window(col("_ts"), windowDur).as("w") +: keys.map(col): _*)
+      .agg(min(col("doc_id")).as("doc_id"))
+      .groupBy(col("w"), col("doc_id"))
+      .agg(count(lit(1)).as("_n_won"))
+      .filter(col("_n_won") === lit(n))
+      .select(col("w").getField("start").as("ws"), col("doc_id"))
+
+  // ---- members -------------------------------------------------------------
 
   /** MinHash + LSH banding: returns candidate duplicate pairs
     * (id_a < id_b) with their verified n-gram Jaccard similarity.
-    * bands × rowsPerBand = numHashes; candidate iff some band matches.
-    *
-    * Per-document work (tokenize → shingle → hash → signature → band keys)
-    * is two native kernel calls ([[graft.functions.HashedShingles]],
-    * [[graft.functions.MinHashBandKeys]]) inside whole-stage codegen — the
-    * SQL-lambda equivalent pays interpreted eval per shingle per hash
-    * function, ~50× more per row. */
+    * bands × rowsPerBand = numHashes; candidate iff some band matches. */
   def minhashLsh(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 16, bands: Int = 4, minJaccard: Double = 0.0,
-      maxBandBucket: Int = Int.MaxValue): DataFrame = {
-    val cand = minhashCandidates(df, textCol, idCol, numHashes, bands,
-      maxBandBucket)
-    val sh = df.select(col(idCol).as("doc_id"),
-      TextAnalysis.hashedShingles(textCol).as("sh"))
-    verifyPairs(cand, sh, minJaccard)
-  }
+      maxBandBucket: Int = Int.MaxValue): DataFrame =
+    verifyPairs(
+      minhashCandidates(df, textCol, idCol, numHashes, bands, maxBandBucket),
+      shingled(df, textCol, col(idCol)), minJaccard)
 
   /** One-pass candidate verify: each (id_a, id_b) pair explodes into its
     * two member rows, the shingle table joins ONCE on doc_id, and the pair
@@ -92,45 +185,19 @@ object Dedup {
     * candidate VOLUME separately from wall time (a super-linear probe ratio
     * is only attributable once pair counts are known).
     *
-    * The banded table feeds both sides of the self-join — but both sides
-    * shuffle on the SAME keys (band, band_key), so their exchanges
-    * canonicalize identically and Catalyst's ReuseExchange serves the
-    * self-join from ONE map stage: the shingle+minhash kernels run over
-    * the corpus once, with no persist/checkpoint pinning blocks for the
-    * session's lifetime (the r6 localCheckpoint here leaked a
-    * corpus-proportional table on every call). The skew-guard counting
-    * pass, when enabled, is the one extra kernel pass. */
+    * The banded table feeds both sides of the self-join from one map stage
+    * (ReuseExchange): the shingle+minhash kernels run over the corpus
+    * once, with no persist/checkpoint pinning blocks for the session's
+    * lifetime (the r6 localCheckpoint here leaked a corpus-proportional
+    * table on every call). The skew-guard counting pass, when enabled, is
+    * the one extra kernel pass. */
   def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 16, bands: Int = 4,
       maxBandBucket: Int = Int.MaxValue): DataFrame = {
-    require(numHashes % bands == 0)
-    val bandKeys = graft.functions.MinHashBandKeys.column(
-      TextAnalysis.hashedShingles(textCol), hashParams(numHashes), bands)
-    val banded0 = df.select(col(idCol).as("doc_id"),
-      posexplode(bandKeys).as(Seq("band", "band_key")))
-    // Skew guard: a band bucket with m documents yields m² candidate pairs,
-    // and real corpora have boilerplate mega-buckets (empty pages, headers).
-    // Buckets above the cap are dropped wholesale — the standard LSH spam
-    // defense; their members still pair through their OTHER bands. The hot
-    // set is by definition tiny → broadcast anti-join, no extra shuffle of
-    // the banded table.
-    val banded =
-      if (maxBandBucket == Int.MaxValue) banded0
-      else {
-        val hot = banded0.groupBy(col("band"), col("band_key"))
-          .count().filter(col("count") > maxBandBucket)
-          .select("band", "band_key")
-        banded0.join(broadcast(hot), Seq("band", "band_key"), "left_anti")
-      }
-    // distinct on the id pair FIRST (cheap long columns through the
-    // shuffle), then the caller joins the shingle arrays back to verify
-    banded.as("l")
-      .join(banded.as("r"),
-        col("l.band") === col("r.band") &&
-        col("l.band_key") === col("r.band_key") &&
-        col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
+    val banded = dropHot(
+      Seq(bandedMinHash(df, textCol, col(idCol), numHashes, bands)),
+      BandKeys, maxBandBucket).head
+    bucketPairs(banded, banded, BandKeys, ordered = true)
   }
 
   /** Cross-corpus MinHash+LSH: near-duplicate pairs BETWEEN two corpora —
@@ -152,55 +219,33 @@ object Dedup {
   def minhashLshCross(newDf: DataFrame, refDf: DataFrame, textCol: String,
       idCol: String, numHashes: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.0, maxBandBucket: Int = Int.MaxValue)
-      : DataFrame = {
-    require(numHashes % bands == 0)
-    crossCore(
-      bandedRaw(newDf, textCol, idCol, numHashes, bands),
-      bandedRaw(refDf, textCol, idCol, numHashes, bands),
-      shingleRaw(newDf, textCol, idCol),
-      shingleRaw(refDf, textCol, idCol),
+      : DataFrame =
+    crossCore(lshTables(newDf, textCol, idCol, numHashes, bands),
+      lshTables(refDf, textCol, idCol, numHashes, bands),
       minJaccard, maxBandBucket)
-  }
 
   // the un-tagged per-corpus map stages (pure functions of the text):
   // (doc_id long, band, band_key) and (doc_id long, sh) — exactly what
   // [[writeLshStore]] persists and [[minhashLshCrossFromStore]] reloads
-  private def bandedRaw(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int, bands: Int): DataFrame =
-    df.select(col(idCol).cast("long").as("doc_id"),
-      posexplode(graft.functions.MinHashBandKeys.column(
-        TextAnalysis.hashedShingles(textCol), hashParams(numHashes), bands))
-        .as(Seq("band", "band_key")))
-  private def shingleRaw(df: DataFrame, textCol: String,
-      idCol: String): DataFrame =
-    df.select(col(idCol).cast("long").as("doc_id"),
-      TextAnalysis.hashedShingles(textCol).as("sh"))
+  private def lshTables(df: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
+    val id = col(idCol).cast("long")
+    (bandedMinHash(df, textCol, id, numHashes, bands),
+      shingled(df, textCol, id))
+  }
 
-  /** [[minhashLshCross]]'s join core over pre-built per-side banded and
-    * shingle tables. Ids tag with a side marker so the two corpora may
+  /** [[minhashLshCross]]'s join core over pre-built per-side (banded,
+    * shingle) tables. Ids tag with a side marker so the two corpora may
     * reuse id space (snapshots of the same collection usually do). */
-  private def crossCore(bandedNew: DataFrame, bandedRef: DataFrame,
-      shNew: DataFrame, shRef: DataFrame, minJaccard: Double,
+  private def crossCore(newSide: (DataFrame, DataFrame),
+      refSide: (DataFrame, DataFrame), minJaccard: Double,
       maxBandBucket: Int): DataFrame = {
     def tag(df: DataFrame, side: Int) = df.withColumn("doc_id",
       struct(lit(side).as("s"), col("doc_id").as("i")))
-    val (bn0, br0) = (tag(bandedNew, 0), tag(bandedRef, 1))
-    val (bn, br) =
-      if (maxBandBucket == Int.MaxValue) (bn0, br0)
-      else {
-        val hot = bn0.unionByName(br0).groupBy(col("band"), col("band_key"))
-          .count().filter(col("count") > maxBandBucket)
-          .select("band", "band_key")
-        (bn0.join(broadcast(hot), Seq("band", "band_key"), "left_anti"),
-          br0.join(broadcast(hot), Seq("band", "band_key"), "left_anti"))
-      }
-    val cand = bn.as("l")
-      .join(br.as("r"),
-        col("l.band") === col("r.band") &&
-        col("l.band_key") === col("r.band_key"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
-    verifyPairs(cand, tag(shNew, 0).unionByName(tag(shRef, 1)), minJaccard)
+    val Seq(bn, br) = dropHot(Seq(tag(newSide._1, 0), tag(refSide._1, 1)),
+      BandKeys, maxBandBucket)
+    verifyPairs(bucketPairs(bn, br, BandKeys, ordered = false),
+        tag(newSide._2, 0).unionByName(tag(refSide._2, 1)), minJaccard)
       .select(col("id_a.i").as("id_new"), col("id_b.i").as("id_ref"),
         col("jaccard"))
   }
@@ -213,14 +258,9 @@ object Dedup {
     * pays its own (small) map stage, the standing 100 TB corpus pays a
     * column-pruned scan. Layout: `path/banded` and `path/shingles`. */
   def writeLshStore(df: DataFrame, textCol: String, idCol: String,
-      path: String, numHashes: Int = 16, bands: Int = 4): Unit = {
-    bandedRaw(df, textCol, idCol, numHashes, bands)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/banded")
-    shingleRaw(df, textCol, idCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/shingles")
-  }
+      path: String, numHashes: Int = 16, bands: Int = 4): Unit =
+    saveLshTables(df, textCol, idCol, path, numHashes, bands,
+      org.apache.spark.sql.SaveMode.Overwrite)
 
   /** Append a delta batch's banded/shingle rows to an existing
     * [[writeLshStore]] index — the nightly state advance of an
@@ -233,13 +273,16 @@ object Dedup {
     * read-time filtering for O(delta) writes. Compact by rebuilding with
     * [[writeLshStore]] when stale volume warrants it. */
   def appendLshStore(delta: DataFrame, textCol: String, idCol: String,
-      path: String, numHashes: Int = 16, bands: Int = 4): Unit = {
-    bandedRaw(delta, textCol, idCol, numHashes, bands)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/banded")
-    shingleRaw(delta, textCol, idCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/shingles")
+      path: String, numHashes: Int = 16, bands: Int = 4): Unit =
+    saveLshTables(delta, textCol, idCol, path, numHashes, bands,
+      org.apache.spark.sql.SaveMode.Append)
+
+  private def saveLshTables(df: DataFrame, textCol: String, idCol: String,
+      path: String, numHashes: Int, bands: Int,
+      mode: org.apache.spark.sql.SaveMode): Unit = {
+    val (banded, sh) = lshTables(df, textCol, idCol, numHashes, bands)
+    banded.write.mode(mode).parquet(s"$path/banded")
+    sh.write.mode(mode).parquet(s"$path/shingles")
   }
 
   /** [[minhashLshCross]] with the reference side served from a
@@ -251,15 +294,11 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       textCol: String, idCol: String, numHashes: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.0, maxBandBucket: Int = Int.MaxValue)
-      : DataFrame = {
-    require(numHashes % bands == 0)
-    crossCore(
-      bandedRaw(newDf, textCol, idCol, numHashes, bands),
-      spark.read.parquet(s"$path/banded"),
-      shingleRaw(newDf, textCol, idCol),
-      spark.read.parquet(s"$path/shingles"),
+      : DataFrame =
+    crossCore(lshTables(newDf, textCol, idCol, numHashes, bands),
+      (spark.read.parquet(s"$path/banded"),
+        spark.read.parquet(s"$path/shingles")),
       minJaccard, maxBandBucket)
-  }
 
   /** Connected components over a duplicate-pair list → canonical id per
     * member (every node takes the minimum id reachable from it). Small
@@ -365,6 +404,14 @@ object Dedup {
     labels
   }
 
+  /** The ids a min-id dedup drops: every pair member whose
+    * [[connectedComponents]] canonical is another id, as column `idCol`. */
+  private[graft] def nonCanonicalIds(pairs: DataFrame,
+      idCol: String): DataFrame =
+    connectedComponents(pairs)
+      .filter(col("canonical_id") =!= col("doc_id"))
+      .select(col("doc_id").as(idCol))
+
   /** QUALITY-AWARE CANONICAL SELECTION: [[connectedComponents]] picks the
     * MIN-ID representative of each near-dup cluster — arbitrary. This
     * variant keeps the BEST row instead: within each component the
@@ -437,18 +484,13 @@ object Dedup {
     * ≤ S²-row collapse — pair-volume cost, never corpus. Returns
     * (slice_a, slice_b, n_pairs) with slice_a ≤ slice_b. */
   def crossSliceDupMatrix(df: DataFrame, idCol: String, sliceCol: String,
-      pairs: DataFrame): DataFrame = {
-    val s = df.select(col(idCol), col(sliceCol))
-    pairs
-      .join(s.select(col(idCol).as("id_a"), col(sliceCol).as("_sa")),
-        "id_a")
-      .join(s.select(col(idCol).as("id_b"), col(sliceCol).as("_sb")),
-        "id_b")
-      .select(least(col("_sa"), col("_sb")).as("slice_a"),
-        greatest(col("_sa"), col("_sb")).as("slice_b"))
+      pairs: DataFrame): DataFrame =
+    bothEnds(pairs,
+        df.select(col(idCol).as("doc_id"), col(sliceCol).as("_s")), "_s")
+      .select(least(col("_s_a"), col("_s_b")).as("slice_a"),
+        greatest(col("_s_a"), col("_s_b")).as("slice_b"))
       .groupBy(col("slice_a"), col("slice_b"))
       .agg(count(lit(1)).as("n_pairs"))
-  }
 
   /** Exact Jaccard of two distinct-element arrays. */
   def jaccardArr(a: Column, b: Column): Column =
@@ -461,8 +503,7 @@ object Dedup {
     * [[minhashLsh]]. */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
       blockCols: Seq[String], minJaccard: Double): DataFrame = {
-    val t = df.select(concat_ws("", blockCols.map(col): _*).as("blk"),
-      col(idCol).as("doc_id"), TextAnalysis.hashedShingles(textCol).as("sh"))
+    val t = blockedShingles(df, textCol, idCol, blockCols)
     // hashed+sorted shingles: the pair verify is a merge scan over long
     // arrays instead of a per-pair hash set over strings (SetSimilarity)
     t.as("l").join(t.as("r"),
@@ -492,13 +533,11 @@ object Dedup {
   def editDistanceVerify(cand: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, maxDist: Int): DataFrame = {
     require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
-    val t = docs.select(col(idCol), col(textCol))
-    cand
-      .join(t.select(col(idCol).as("id_a"), col(textCol).as("_ta")), "id_a")
-      .join(t.select(col(idCol).as("id_b"), col(textCol).as("_tb")), "id_b")
-      .filter(abs(length(col("_ta")) - length(col("_tb"))) <= maxDist)
+    bothEnds(cand,
+        docs.select(col(idCol).as("doc_id"), col(textCol).as("_t")), "_t")
+      .filter(abs(length(col("_t_a")) - length(col("_t_b"))) <= maxDist)
       .withColumn("edit_dist",
-        levenshtein(col("_ta"), col("_tb"), maxDist))
+        levenshtein(col("_t_a"), col("_t_b"), maxDist))
       .filter(col("edit_dist") >= 0)
       .select(col("id_a"), col("id_b"), col("edit_dist"))
   }
@@ -546,22 +585,11 @@ object Dedup {
     * per-bucket state. */
   def lshDedupSurvivors(df: DataFrame, textCol: String, idCol: String,
       tsCol: String = "ts", windowDur: String = "10 minutes",
-      numHashes: Int = 16, bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0)
-    val bandKeys = graft.functions.MinHashBandKeys.column(
-      TextAnalysis.hashedShingles(textCol), hashParams(numHashes), bands)
-    val banded = df.select(col(tsCol).as("_ts"), col(idCol).as("doc_id"),
-      posexplode(bandKeys).as(Seq("band", "band_key")))
-    val winners = banded
-      .groupBy(window(col("_ts"), windowDur).as("w"),
-        col("band"), col("band_key"))
-      .agg(min(col("doc_id")).as("doc_id"))
-    winners
-      .groupBy(col("w"), col("doc_id"))
-      .agg(count(lit(1)).as("_n_won"))
-      .filter(col("_n_won") === lit(bands))
-      .select(col("w").getField("start").as("ws"), col("doc_id"))
-  }
+      numHashes: Int = 16, bands: Int = 4): DataFrame =
+    wonEveryBucket(
+      bandedMinHash(df, textCol, col(idCol), numHashes, bands,
+        col(tsCol).as("_ts")),
+      windowDur, BandKeys, bands)
 
   /** Streaming twin of [[lshDedupSurvivors]]: the same chained-aggregation
     * plan under a watermark. Append mode emits a window's survivors once
@@ -604,15 +632,9 @@ object Dedup {
   def hammingDedupSurvivors(df: DataFrame, sketchCol: String,
       idCol: String, tsCol: String = "ts",
       windowDur: String = "10 minutes", maxHamming: Int = 1): DataFrame = {
-    val chunks = maxHamming + 1
-    require(60 % chunks == 0, s"60 bits must split evenly into $chunks chunks")
-    val width = 60 / chunks
-    val mask = (1L << width) - 1L
+    val (chunks, mask, chunkVals) = sketchChunks(col(sketchCol), maxHamming)
     val banded = df.select(col(tsCol).as("_ts"), col(idCol).as("doc_id"),
-      col(sketchCol).as("_sk"),
-      posexplode(array((0 until chunks).map { c =>
-        shiftright(col(sketchCol), c * width).bitwiseAND(lit(mask))
-      }: _*)).as(Seq("chunk", "cv")))
+      col(sketchCol).as("_sk"), posexplode(chunkVals).as(Seq("chunk", "cv")))
       // degenerate chunks carry no locality signal: key them by the
       // full sketch so only identical sketches collide there. The tag
       // keeps the two key schemes in disjoint spaces — a full sketch
@@ -623,14 +645,7 @@ object Dedup {
         when(col("cv") === 0L || col("cv") === lit(mask),
           struct(lit(1).as("deg"), col("_sk").as("v")))
           .otherwise(struct(lit(0).as("deg"), col("cv").as("v"))))
-    banded
-      .groupBy(window(col("_ts"), windowDur).as("w"),
-        col("chunk"), col("cv"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .groupBy(col("w"), col("doc_id"))
-      .agg(count(lit(1)).as("_n_won"))
-      .filter(col("_n_won") === lit(chunks))
-      .select(col("w").getField("start").as("ws"), col("doc_id"))
+    wonEveryBucket(banded, windowDur, Seq("chunk", "cv"), chunks)
   }
 
   /** Prefix-filtered n-gram Jaccard pairs (AllPairs/SSJoin candidate
@@ -662,18 +677,19 @@ object Dedup {
     * MEMORY_AND_DISK cache here leaked a corpus-scale table per call. */
   private def prefixStage(df: DataFrame, textCol: String, idCol: String,
       blockCols: Seq[String], minJaccard: Double): (DataFrame, DataFrame) = {
-    val t = df.select(concat_ws("", blockCols.map(col): _*).as("blk"),
-      col(idCol).as("doc_id"), TextAnalysis.hashedShingles(textCol).as("sh"))
+    val t = blockedShingles(df, textCol, idCol, blockCols)
     val prefixLen = size(col("sh")) - ceil(lit(minJaccard) * size(col("sh"))).cast("int") + 1
     val pref = t.select(col("blk"), col("doc_id"),
       explode(slice(col("sh"), lit(1), prefixLen)).as("ph"))
-    val cand = pref.as("l").join(pref.as("r"),
-        col("l.blk") === col("r.blk") && col("l.ph") === col("r.ph") &&
-        col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
-    (t, cand)
+    (t, bucketPairs(pref, pref, Seq("blk", "ph"), ordered = true))
   }
+
+  /** `(blk, doc_id, sh)`: the shingled table keyed by the concatenated
+    * blocking columns. */
+  private def blockedShingles(df: DataFrame, textCol: String, idCol: String,
+      blockCols: Seq[String]): DataFrame =
+    shingled(df, textCol, col(idCol),
+      concat_ws("", blockCols.map(col): _*).as("blk"))
 
   /** Benchmark decontamination: drop corpus documents sharing ANY word
     * n-gram with a benchmark/eval set — the standard guard against test-set
@@ -688,13 +704,30 @@ object Dedup {
     * out split" can be corpus-scale (AQE sort-merge joins it). Returns the
     * surviving corpus rows unchanged. */
   def decontaminate(corpus: DataFrame, bench: DataFrame, textCol: String,
-      idCol: String, n: Int = 3): DataFrame = {
-    val bsh = bench
-      .select(explode(TextAnalysis.hashedShingles(textCol, n)).as("sh"))
+      idCol: String, n: Int = 3): DataFrame =
+    dropContaminated(corpus, corpus, benchShingles(bench, textCol, n),
+      textCol, idCol, n)
+
+  /** The bench side of every decontamination member: its DISTINCT word
+    * n-gram hashes, column `sh`. */
+  private def benchShingles(bench: DataFrame, textCol: String,
+      n: Int): DataFrame =
+    bench.select(explode(TextAnalysis.hashedShingles(textCol, n)).as("sh"))
       .distinct()
-    val contaminated = corpus
+
+  /** `(idCol, sh)` for every corpus shingle that the bench set `bsh` holds. */
+  private def shingleHits(corpus: DataFrame, bsh: DataFrame, textCol: String,
+      idCol: String, n: Int): DataFrame =
+    corpus
       .select(col(idCol), explode(TextAnalysis.hashedShingles(textCol, n)).as("sh"))
       .join(bsh, "sh")
+
+  /** `corpus` minus every `candidates` document with a shingle hit — the
+    * one body of [[decontaminate]] (candidates = the corpus) and
+    * [[decontaminateBloom]] (candidates = the Bloom prefilter's). */
+  private def dropContaminated(corpus: DataFrame, candidates: DataFrame,
+      bsh: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
+    val contaminated = shingleHits(candidates, bsh, textCol, idCol, n)
       .select(col(idCol))
       .distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
@@ -707,16 +740,10 @@ object Dedup {
     * instead of collapsed into an anti-join; documents with zero hits do
     * not appear. Output: (idCol, n_hit). */
   def contaminationReport(corpus: DataFrame, bench: DataFrame,
-      textCol: String, idCol: String, n: Int = 3): DataFrame = {
-    val bsh = bench
-      .select(explode(TextAnalysis.hashedShingles(textCol, n)).as("sh"))
-      .distinct()
-    corpus
-      .select(col(idCol), explode(TextAnalysis.hashedShingles(textCol, n)).as("sh"))
-      .join(bsh, "sh")
+      textCol: String, idCol: String, n: Int = 3): DataFrame =
+    shingleHits(corpus, benchShingles(bench, textCol, n), textCol, idCol, n)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hit"))
-  }
 
   /** Decontamination fast path for benchmark sets that fit on the driver
     * (the common case — eval suites are MBs): the bench's distinct shingle
@@ -732,9 +759,7 @@ object Dedup {
   def decontaminateBroadcast(corpus: DataFrame, bench: DataFrame,
       textCol: String, idCol: String, n: Int = 3,
       maxBenchShingles: Int = 5000000): DataFrame = {
-    val sh = bench
-      .select(explode(TextAnalysis.hashedShingles(textCol, n)).as("sh"))
-      .distinct().limit(maxBenchShingles + 1)
+    val sh = benchShingles(bench, textCol, n).limit(maxBenchShingles + 1)
       .collect().map(_.getLong(0))
     if (sh.length > maxBenchShingles) {
       // the join shape is a stateful aggregation + anti-join — it cannot
@@ -776,20 +801,13 @@ object Dedup {
   def decontaminateBloom(corpus: DataFrame, bench: DataFrame,
       textCol: String, idCol: String, n: Int = 3,
       fpp: Double = 0.01): DataFrame = {
-    val bsh = bench
-      .select(explode(TextAnalysis.hashedShingles(textCol, n)).as("sh"))
-      .distinct()
+    val bsh = benchShingles(bench, textCol, n)
     val expected = math.max(bsh.count(), 1L)
     val bloom = bsh.stat.bloomFilter("sh", expected, fpp)
     val candidates = corpus.filter(coalesce(
       graft.functions.ArrayMightContainBloom.column(
         TextAnalysis.hashedShingles(textCol, n), bloom), lit(false)))
-    val contaminated = candidates
-      .select(col(idCol), explode(TextAnalysis.hashedShingles(textCol, n)).as("sh"))
-      .join(bsh, "sh")
-      .select(col(idCol))
-      .distinct()
-    corpus.join(contaminated, Seq(idCol), "left_anti")
+    dropContaminated(corpus, candidates, bsh, textCol, idCol, n)
   }
 
   /** Incremental corpus snapshot diff: classify every document id across
@@ -1011,23 +1029,12 @@ object Dedup {
     * (chunk, value, id). */
   def hammingNearDups(df: DataFrame, sketchCol: String, idCol: String,
       maxHamming: Int = 3): DataFrame = {
-    val chunks = maxHamming + 1
-    require(60 % chunks == 0, s"60 bits must split evenly into $chunks chunks")
-    val width = 60 / chunks
-    val mask = (1L << width) - 1L
     val t = df.select(col(idCol).as("doc_id"), col(sketchCol).as("sk"))
+    val (_, _, chunkVals) = sketchChunks(col("sk"), maxHamming)
     val banded = t.select(col("doc_id"),
-      posexplode(array((0 until chunks).map { c =>
-        shiftright(col("sk"), c * width).bitwiseAND(lit(mask))
-      }: _*)).as(Seq("chunk", "cv")))
-    val cand = banded.as("l").join(banded.as("r"),
-        col("l.chunk") === col("r.chunk") && col("l.cv") === col("r.cv") &&
-        col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
-    cand
-      .join(t.select(col("doc_id").as("id_a"), col("sk").as("sk_a")), "id_a")
-      .join(t.select(col("doc_id").as("id_b"), col("sk").as("sk_b")), "id_b")
+      posexplode(chunkVals).as(Seq("chunk", "cv")))
+    bothEnds(bucketPairs(banded, banded, Seq("chunk", "cv"), ordered = true),
+        t, "sk")
       .withColumn("hamming", hamming(col("sk_a"), col("sk_b")))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
@@ -1060,9 +1067,7 @@ object Dedup {
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
       minContainment: Double = 0.5, sampleK: Int = 8,
       maxPosting: Int = Int.MaxValue): DataFrame = {
-    val sh = df.select(col(idCol).as("doc_id"),
-      TextAnalysis.hashedShingles(textCol).as("sh"))
-    val cand = containmentCandidatesFrom(sh, sampleK, maxPosting)
+    val sh = shingled(df, textCol, col(idCol))
     // verify by joining the shingle table once per pair SIDE: on a
     // duplication-heavy corpus candidate pairs P ≫ documents, so the
     // dominant shuffle is the array-carrying pair rows — this shape moves
@@ -1071,9 +1076,7 @@ object Dedup {
     // array<long> values row by row. The shingle kernel re-evaluates per
     // join side (corpus-linear, no shuffle) — cheaper than pinning a
     // corpus-scale array column at 100 TB.
-    cand
-      .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
+    bothEnds(containmentCandidatesFrom(sh, sampleK, maxPosting), sh, "sh")
       .withColumn("inter",
         graft.functions.SetSimilarity.sortedIntersectSize(
           col("sh_a"), col("sh_b")).cast("long"))
@@ -1092,10 +1095,8 @@ object Dedup {
     * once the pair counts are known). */
   def containmentCandidates(df: DataFrame, textCol: String, idCol: String,
       sampleK: Int = 8, maxPosting: Int = Int.MaxValue): DataFrame =
-    containmentCandidatesFrom(
-      df.select(col(idCol).as("doc_id"),
-        TextAnalysis.hashedShingles(textCol).as("sh")),
-      sampleK, maxPosting)
+    containmentCandidatesFrom(shingled(df, textCol, col(idCol)), sampleK,
+      maxPosting)
 
   // one construction site for the shingled frame; note the posts/probes/
   // verify subtrees still evaluate it independently (lazy, no persist —
@@ -1104,14 +1105,9 @@ object Dedup {
   // than materializing a corpus-scale array column
   private def containmentCandidatesFrom(sh: DataFrame, sampleK: Int,
       maxPosting: Int): DataFrame = {
-    val posts0 = sh.select(col("doc_id"), explode(col("sh")).as("h"))
-    val posts =
-      if (maxPosting == Int.MaxValue) posts0
-      else {
-        val hot = posts0.groupBy(col("h")).count()
-          .filter(col("count") > maxPosting).select("h")
-        posts0.join(broadcast(hot), Seq("h"), "left_anti")
-      }
+    val posts = dropHot(
+      Seq(sh.select(col("doc_id"), explode(col("sh")).as("h"))), Seq("h"),
+      maxPosting).head
     // bottom-k probe: hashedShingles is sorted ascending, so the k
     // smallest hashes are a prefix slice — no extra sort
     val probes = sh.select(col("doc_id").as("probe_id"),

@@ -167,10 +167,7 @@ object Similarity {
   def semanticDedup(df: DataFrame, minCos: Double, bucketCol: String,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val pairs = embeddingNearDups(df, minCos, bucketCol, vecCol, idCol)
-    val dropIds = Dedup.connectedComponents(pairs)
-      .filter(col("doc_id") =!= col("canonical_id"))
-      .select(col("doc_id").as(idCol))
-    df.join(dropIds, Seq(idCol), "left_anti")
+    df.join(Dedup.nonCanonicalIds(pairs, idCol), Seq(idCol), "left_anti")
   }
 
   /** Johnson–Lindenstrauss RANDOM PROJECTION: compress `vecCol` to
@@ -188,7 +185,7 @@ object Similarity {
     * Output: (idCol, proj0 … proj{outDim−1}). */
   def randomProjection(df: DataFrame, outDim: Int,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
-    withProjVec(df, outDim, vecCol).select(
+    projector(df, outDim, vecCol)(df).select(
       (col(idCol) +: (0 until outDim).map(i =>
         element_at(col("projv"), i + 1).as(s"proj$i"))): _*)
 
@@ -196,14 +193,15 @@ object Similarity {
   def jlPlane(i: Int, dim: Int): Array[Double] =
     Array.tabulate(dim)(d => (1.0 + ((i * 31 + d * 17) % 61)) - 30.5)
 
-  // the projected vector as ONE array column (single formula site for
-  // randomProjection and projectedTopK)
-  private def withProjVec(df: DataFrame, outDim: Int,
-      vecCol: String): DataFrame = {
-    val dim = df.select(size(col(vecCol))).first().getInt(0)
+  // adds the projected vector as ONE array column, `projv` (single
+  // formula site for randomProjection and projectedTopK); the input width
+  // is read from `widthOf` once per call — one Spark job
+  private def projector(widthOf: DataFrame, outDim: Int,
+      vecCol: String): DataFrame => DataFrame = {
+    val dim = widthOf.select(size(col(vecCol))).first().getInt(0)
     val scale = 1.0 / math.sqrt(outDim.toDouble)
     val v = col(vecCol).cast("array<double>")
-    df.withColumn("projv", array((0 until outDim).map(i =>
+    _.withColumn("projv", array((0 until outDim).map(i =>
       dot(v, lit(jlPlane(i, dim))) * scale): _*))
   }
 
@@ -241,9 +239,12 @@ object Similarity {
       vecCol: String, idCol: String): DataFrame = {
     val cp = Side("corpus_id", "cp", "cpn")
     val qp = Side("query_id", "qp", "qpn")
-    val c = cp.of(withProjVec(corpus, outDim, vecCol), idCol, col("projv"),
+    // queries share the corpus's vector width (the full-width re-rank
+    // compares them), so one width read serves both projections
+    val proj = projector(corpus, outDim, vecCol)
+    val c = cp.of(proj(corpus), idCol, col("projv"),
       label.map(l => col(l).as("neg_label")).toSeq: _*)
-    val q = qp.of(withProjVec(queries, outDim, vecCol), idCol, col("projv"),
+    val q = qp.of(proj(queries), idCol, col("projv"),
       label.map(l => col(l).as("qlabel")).toSeq: _*)
     val carry = label.map(_ => "neg_label").toSeq
     val keys = ("query_id" +: "corpus_id" +: carry).map(col)

@@ -60,9 +60,6 @@ object CorpusCuration {
       maxBandBucket: Int): DataFrame = owning { sc =>
     val pairs = Dedup.minhashLsh(df, textCol, idCol, numHashes = 16,
       bands = 4, minJaccard = minJaccard, maxBandBucket = maxBandBucket)
-    val dropIds = Dedup.connectedComponents(pairs)
-      .filter(col("canonical_id") =!= col("doc_id"))
-      .select(col("doc_id").as(idCol))
     // PIN the narrow feature table before the gate (r14): the gate is a
     // filter on a DERIVED column, and Catalyst pushes it below every
     // row-preserving operator down to the scan — which (a) re-evaluates
@@ -76,7 +73,8 @@ object CorpusCuration {
     // rows — bytes-per-row bounded at any corpus scale (the q160-lesson
     // pin shape). The result reads the pin, so the caller owns it and
     // frees it with `Checkpoints.release` on the result.
-    sc.pin(curationFeatures(df.join(dropIds, Seq(idCol), "left_anti"),
+    sc.pin(curationFeatures(
+        df.join(Dedup.nonCanonicalIds(pairs, idCol), Seq(idCol), "left_anti"),
         textCol, idCol))
       .filter(col("quality") >= minQuality)
   }
@@ -329,10 +327,8 @@ object CorpusCuration {
         maxBandBucket = maxBandBucket)
       .select(col("id_a").cast("long").as("id_a"),
         col("id_b").cast("long").as("id_b"), col("jaccard"))
-    val dropIds = Dedup.connectedComponents(
-        pairsStd.unionByName(pairsCross).unionByName(pairsDelta))
-      .filter(col("canonical_id") =!= col("doc_id"))
-      .select(col("doc_id").as(idCol))
+    val dropIds = Dedup.nonCanonicalIds(
+      pairsStd.unionByName(pairsCross).unionByName(pairsDelta), idCol)
     incrementalFeatures(oldCorpus,
         spark.read.parquet(s"$statePath/features"), newCorpus, textCol,
         idCol)(curationFeatures(_, textCol, idCol))

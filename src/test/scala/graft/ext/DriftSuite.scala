@@ -386,6 +386,36 @@ class DriftSuite extends AnyFunSuite {
     assert(shifted(3) == 1 && shifted(2).asInstanceOf[Double] > 1.96)
   }
 
+  test("windowed KS and rank-sum count NaN as one value above all others, as ksTest and rankSumTest do") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val day = Timestamp.valueOf("2024-01-01 12:00:00")
+    // one NaN reached while baseline values remain (the merge walk used to
+    // stall there, neither side <= NaN), and two NaNs (NaN != NaN, so each
+    // is its own count-map entry); both against a baseline without and
+    // with a NaN of its own
+    val windows = Seq(Seq(0.5, Double.NaN),
+      Seq(0.5, Double.NaN, 3.0, Double.NaN))
+    val baselines = Seq(Seq(0.5, 1.0, 1.0, 2.0), Seq(0.5, Double.NaN, 1.0))
+    for (b <- baselines; w <- windows) {
+      val base = b.toDF("v")
+      val live = w.map(v => (day, v)).toDF("ts", "v")
+      val (bv, bc) = Eval.ksBaseline(base, "v")
+      TimeLimits.failAfter(60.seconds) {
+        val ks = Eval.ksDriftWindowed(live, "ts", "v", bv, bc)
+          .collect().head.toSeq.drop(1)
+        val ksRef = Eval.ksTest(base, live, "v").collect().head.toSeq.drop(1)
+        assert(ks == ksRef, s"baseline $b, window $w")
+        val rs = Eval.rankSumDriftWindowed(live, "ts", "v", bv, bc)
+          .collect().head.toSeq.drop(1)
+        val rsRef = Eval.rankSumTest(base, live, "v")
+          .collect().head.toSeq.drop(1)
+        assert(rs == rsRef, s"baseline $b, window $w")
+      }
+    }
+  }
+
   test("chiSquareDriftWindowedBy cells equal chiSquareDrift at the 6dp grain") {
     val base = (Seq.fill(30)("x") ++ Seq.fill(20)("y")).toDF("c")
     // slice "a" keeps the baseline mix; slice "b" inverts on day 2

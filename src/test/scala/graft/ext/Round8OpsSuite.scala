@@ -148,38 +148,7 @@ class Round8OpsSuite extends AnyFunSuite {
     assert(got == composed)
   }
 
-  // ---- decontaminateBloom ------------------------------------------------
-
-  test("decontaminateBloom equals the exact join shape, null text surviving") {
-    val corpus = Seq(
-      (1L, "alpha beta gamma delta epsilon"),
-      (2L, "zeta eta theta iota kappa"),
-      (3L, "alpha beta gamma something else"), // shares a 3-gram with bench
-      (4L, null.asInstanceOf[String]),
-      (5L, "totally clean text here indeed")).toDF("doc_id", "text")
-    val bench = Seq((100L, "alpha beta gamma")).toDF("doc_id", "text")
-    val got = Dedup.decontaminateBloom(corpus, bench, "text", "doc_id")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    val want = Dedup.decontaminate(corpus, bench, "text", "doc_id")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(got == want)
-    assert(got == Seq(2L, 4L, 5L)) // 1 and 3 share the bench 3-gram; null survives
-  }
-
   // ---- snapshotDiff ------------------------------------------------------
-
-  test("snapshotDiff classifies added/removed/changed/unchanged, null text included") {
-    val old = Seq(
-      (1L, "same"), (2L, "before"), (3L, "gone"),
-      (5L, null.asInstanceOf[String])).toDF("id", "text")
-    val cur = Seq(
-      (1L, "same"), (2L, "after"), (4L, "fresh"),
-      (5L, null.asInstanceOf[String])).toDF("id", "text")
-    val got = Dedup.snapshotDiff(old, cur, "id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(got == Map(1L -> "unchanged", 2L -> "changed", 3L -> "removed",
-      4L -> "added", 5L -> "unchanged"))
-  }
 
   test("incrementalFeatures == full recompute, touching only the delta") {
     def features(c: org.apache.spark.sql.DataFrame) =
@@ -434,140 +403,7 @@ class Round8OpsSuite extends AnyFunSuite {
       rows(TextAnalysis.nbScoreWith(live, model, "doc_id", "text")))
   }
 
-  test("dedupParagraphs strips hot paragraphs, keeps order, canonicalizes gaps") {
-    val boiler = "subscribe to our newsletter"
-    val df = Seq(
-      (1L, s"alpha one\n\n$boiler\n\n\nbeta two"),
-      (2L, s"$boiler\n\ngamma three"),
-      (3L, s"delta four\n\n$boiler")).toDF("doc_id", "text")
-    val got = Dedup.dedupParagraphs(df, "text", "doc_id")
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
-    // the 3x paragraph is stripped everywhere; survivors keep document
-    // order; the \n\n\n run canonicalizes to the \n\n joiner
-    assert(got.toSeq == Seq((1L, "alpha one\n\nbeta two"),
-      (2L, "gamma three"), (3L, "delta four")))
-  }
-
-  // ---- minhashLshCross ---------------------------------------------------
-
-  test("minhashLshCross == within-union LSH restricted to cross-side pairs") {
-    val newDf = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "completely different text about spark engines"),
-      (3L, "the quick brown fox jumps over the lazy cat")
-    ).toDF("doc_id", "text")
-    val refDf = Seq(
-      (11L, "the quick brown fox jumps over the lazy dog today"),
-      (12L, "unrelated reference corpus document entirely"),
-      (13L, "completely different text about spark engines and scale")
-    ).toDF("doc_id", "text")
-    val got = Dedup.minhashLshCross(newDf, refDf, "text", "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // same banding over the union: cross pairs are exactly the union's
-    // pairs with one member per side (new ids < ref ids here, so id_a=new)
-    val newIds = Set(1L, 2L, 3L)
-    val want = Dedup.minhashLsh(newDf.unionByName(refDf), "text", "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .filter(p => newIds(p._1) && !newIds(p._2)).toSet
-    assert(got == want)
-    assert(got.nonEmpty) // the fox and spark docs must pair across sides
-  }
-
-  test("minhashLshCrossFromStore == the inline shape (same pairs, same jaccard)") {
-    val newDf = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "completely different text about spark engines")
-    ).toDF("doc_id", "text")
-    val refDf = Seq(
-      (11L, "the quick brown fox jumps over the lazy dog today"),
-      (12L, "unrelated reference corpus document entirely")
-    ).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("graft_lsh_store")
-      .toString
-    Dedup.writeLshStore(refDf, "text", "doc_id", path)
-    def collect(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fromStore = collect(
-      Dedup.minhashLshCrossFromStore(newDf, spark, path, "text", "doc_id"))
-    val inline = collect(
-      Dedup.minhashLshCross(newDf, refDf, "text", "doc_id"))
-    assert(fromStore == inline)
-    assert(fromStore.nonEmpty)
-  }
-
-  test("minhashLshCross keeps overlapping id spaces apart (snapshot ids)") {
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "one two three four five six seven eight nine")
-    ).toDF("doc_id", "text")
-    // same table on both sides: every doc pairs with ITSELF across sides
-    // at jaccard 1.0, and never within a side
-    val got = Dedup.minhashLshCross(docs, docs, "text", "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == Set((1L, 1L, 1.0), (2L, 2L, 1.0)))
-  }
-
   // ---- containmentPairs --------------------------------------------------
-
-  test("containmentPairs finds the near-superset MinHash-Jaccard misses") {
-    val extra = (1 to 16).map(i => s"x$i").mkString(" ")
-    val docs = Seq(
-      (1L, "a b c d e f"),
-      (2L, s"a b c d e f $extra"),
-      (3L, "p q r s t u")).toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(docs, "text", "doc_id", 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getDouble(5), r.getDouble(6))).toSeq
-    // doc 1 (4 shingles) is wholly inside doc 2 (20 shingles)
-    assert(got == Seq((1L, 2L, 4L, 20L, 4L, 1.0, 0.2)))
-    // the same pair's Jaccard is 0.2 — invisible to the 0.3 LSH gate
-    val lsh = Dedup.minhashLsh(docs, "text", "doc_id", minJaccard = 0.3)
-      .collect()
-    assert(!lsh.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
-  }
-
-  test("containmentPairs with sampleK >= all shingles == exhaustive all-pairs") {
-    val rnd = new scala.util.Random(3)
-    // overlapping windows of one shared token stream: containment-rich
-    val base = (0 until 40).map(i => s"w$i")
-    val docs = (1L to 12L).map { i =>
-      val start = rnd.nextInt(30)
-      val len = 6 + rnd.nextInt(12)
-      (i, base.slice(start, (start + len) min base.size).mkString(" "))
-    }.toDF("doc_id", "text")
-    def collect(d: org.apache.spark.sql.DataFrame) = d
-      .orderBy("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSeq
-    val sampled = collect(
-      Dedup.containmentPairs(docs, "text", "doc_id", 0.3, sampleK = 1000))
-    // exhaustive reference: every pair through the exact verify
-    val sh = docs.select($"doc_id",
-      TextAnalysis.hashedShingles("text").as("sh"))
-    val naive = sh.as("a").join(sh.as("b"),
-        $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"),
-        graft.functions.SetSimilarity.sortedIntersectSize(
-          $"a.sh", $"b.sh").cast("long").as("inter"),
-        size($"a.sh").cast("double").as("na"),
-        size($"b.sh").cast("double").as("nb"))
-      .filter(greatest($"inter" / $"na", $"inter" / $"nb") >= 0.3)
-    val want = collect(naive.select($"id_a", $"id_b", lit(0L).as("p"),
-      lit(0L).as("q"), $"inter"))
-    assert(sampled == want && sampled.nonEmpty)
-  }
-
-  test("containmentPairs survives a hot-posting cap (pair found via other samples)") {
-    // 'h h h' is a boilerplate shingle shared by every doc; cap drops it
-    val docs = Seq(
-      (1L, "h h h a b c d e"),
-      (2L, "h h h a b c d e z1 z2 z3 z4 z5 z6 z7 z8"),
-      (3L, "h h h p q r s"),
-      (4L, "h h h m n o k")).toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(docs, "text", "doc_id", 0.6,
-        maxPosting = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got.contains((1L, 2L)))
-  }
 
   test("NULL/zero/empty edges degrade, never crash or fabricate values") {
     // mmrTopK: a zero corpus vector is excluded, not an encoder fault
@@ -820,66 +656,6 @@ class Round8OpsSuite extends AnyFunSuite {
     val got = TextAnalysis.pmiCollocations(docs, "text", minCount = 2L)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(got.toSeq == Seq(("a", "b", 2L))) // (c,d) has c12=1 → pruned
-  }
-
-  test("aHash replays the analytic raster; hammingNearDups pairs by distance") {
-    val docs = Seq(1L, 2L, 3L).toDF("doc_id")
-    val media = Multimodal.synthesizeImages(docs, "doc_id")
-    val got = Multimodal.aHash(media).orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    def expected(id: Long): Long = {
-      val w = id % 13 + 3; val h = id % 7 + 2
-      val ps = (0 until 60).map { k =>
-        (id * 31 + ((k % 10) * w / 10) * 7 + ((k / 10) * h / 6) * 13) % 256 }
-      val tot = ps.sum
-      ps.zipWithIndex.foldLeft(0L) { case (acc, (p, k)) =>
-        if (p * 60 > tot) acc | (1L << k) else acc }
-    }
-    assert(got == Seq(1L, 2L, 3L).map(i => (i, expected(i))))
-    // generalized pigeonhole banding over hand sketches
-    val sk = Seq((1L, 0L), (2L, 3L), (3L, 7L), (4L, 0xF0F0F0L))
-      .toDF("id", "sk")
-    val pairs = Dedup.hammingNearDups(sk, "sk", "id", 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // d(1,2)=2 and d(2,3)=1 pass; d(1,3)=3 is a candidate (two chunks
-    // agree) but the exact verify rejects it; 4 is far from everything
-    assert(pairs == Set((1L, 2L), (2L, 3L)))
-  }
-
-  test("hammingDedupSurvivors: near-dups drop, degenerate chunks can't mass-delete") {
-    import java.sql.Timestamp
-    def ts(s: Long) = new Timestamp(s * 1000L)
-    val base = (0xAAAAAL << 40) | (0xBBBBBL << 20) | 0xCCCCCL
-    val rows = Seq(
-      (1L, ts(10), base),        // canonical
-      (2L, ts(20), base ^ 3L),   // 2 flips in chunk 0 → loses chunks 1,2
-      (3L, ts(30), (0x11111L << 40) | (0x22222L << 20) | 0x33333L),
-      // 4 and 5 are NOT near-dups (hamming 3) but share all-zero high
-      // chunks — the degenerate-chunk guard must keep BOTH (the old
-      // chunk-value key would have falsely deleted 5)
-      (4L, ts(40), 0L), (5L, ts(50), 7L)
-    ).toDF("id", "ts", "ahash")
-    val got = Dedup.hammingDedupSurvivors(rows, "ahash", "id",
-        windowDur = "10 minutes", maxHamming = 2)
-      .collect().map(_.getLong(1)).toSet
-    assert(got == Set(1L, 3L, 4L, 5L))
-  }
-
-  test("hammingDedupSurvivors: degenerate full-sketch keys can't collide with ordinary chunk values") {
-    import java.sql.Timestamp
-    def ts(s: Long) = new Timestamp(s * 1000L)
-    // maxHamming=1 → two 30-bit chunks. X's high chunk is all-zero, so its
-    // degenerate key is the full sketch 5 — numerically equal to Y's
-    // ORDINARY high-chunk value 5. Hamming(X, Y) = 4, far from dup; an
-    // untagged key space would bucket them together at chunk 1 and
-    // falsely delete Y.
-    val x = 5L
-    val y = (5L << 30) | 9L
-    val rows = Seq((1L, ts(10), x), (2L, ts(20), y)).toDF("id", "ts", "ahash")
-    val got = Dedup.hammingDedupSurvivors(rows, "ahash", "id",
-        windowDur = "10 minutes", maxHamming = 1)
-      .collect().map(_.getLong(1)).toSet
-    assert(got == Set(1L, 2L))
   }
 
   test("kaplanMeier: hand-computed curve, censoring, terminal-death pin") {

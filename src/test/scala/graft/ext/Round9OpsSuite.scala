@@ -83,27 +83,6 @@ class Round9OpsSuite extends AnyFunSuite {
     assert(err.getMessage.contains("empty edge set"))
   }
 
-  // ---- editDistanceVerify ------------------------------------------------
-
-  test("editDistanceVerify keeps pairs within maxDist and reports the exact distance") {
-    val docs = Seq(
-      (1L, "the quick brown fox"),
-      (2L, "the quick brown fix"),   // 1 edit from doc 1
-      (3L, "completely different text entirely"),
-      (4L, "the quick brown fox jumps")) // 6 edits from doc 1
-      .toDF("doc_id", "text")
-    val cand = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("id_a", "id_b")
-    val got = Dedup.editDistanceVerify(cand, docs, "doc_id", "text", 5)
-      .orderBy("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    // (1,3) dies on the length prefilter (|19-34| > 5); (1,4) on distance
-    assert(got.toSeq == Seq((1L, 2L, 1)))
-    val loose = Dedup.editDistanceVerify(cand, docs, "doc_id", "text", 10)
-      .orderBy("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(loose.toSeq == Seq((1L, 2L, 1), (1L, 4L, 6)))
-  }
-
   // ---- Cms ---------------------------------------------------------------
 
   test("CMS estimates are exact at ample width and never undercount when narrow") {
@@ -514,39 +493,6 @@ class Round9OpsSuite extends AnyFunSuite {
         Seq(4L).toDF("group_id"), "group_id", Seq(0.5, 0.25, 0.25), "t")
       .head().getAs[Int]("split")
     assert(rows(4L)._2 == plain)
-  }
-
-  test("dupRateBySlice and crossSliceDupMatrix replay a hand-built two-source graph") {
-    // srcA: docs 1,2,3 with 1-2 dup; srcB: docs 4,5 with 4-5 dup and 2-4
-    // crossing sources
-    val docs = Seq((1L, "A"), (2L, "A"), (3L, "A"), (4L, "B"), (5L, "B"))
-      .toDF("doc_id", "src")
-    val pairs = Seq((1L, 2L), (4L, 5L), (2L, 4L)).toDF("id_a", "id_b")
-    val rates = Dedup.dupRateBySlice(docs, "doc_id", "src", pairs)
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    // component {1,2,4,5} canonical 1: dups are 2 (in A) and 4,5 (in B)
-    assert(rates("A") == ((3L, 1L, 1.0 / 3)))
-    assert(rates("B") == ((2L, 2L, 1.0)))
-    val m = Dedup.crossSliceDupMatrix(docs, "doc_id", "src", pairs)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
-    assert(m == Map(("A", "A") -> 1L, ("B", "B") -> 1L, ("A", "B") -> 1L))
-  }
-
-  // ---- canonicalByScore --------------------------------------------------
-
-  test("canonicalByScore keeps the max-score member per component, id tiebreak, singletons survive") {
-    val docs = Seq((1L, 0.2), (2L, 0.9), (3L, 0.9), (4L, 0.5))
-      .toDF("doc_id", "q")
-    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val got = Dedup.canonicalByScore(docs, "doc_id", pairs, "q")
-      .collect().map(r => r.getAs[Long]("doc_id") ->
-        (r.getAs[Long]("rep_id"), r.getAs[Int]("keep"))).toMap
-    // component {1,2,3}: 2 and 3 tie at 0.9 → min id 2 wins
-    assert(Seq(1L, 2L, 3L).map(got(_)._1).distinct == Seq(2L))
-    assert(got(2L)._2 == 1 && got(1L)._2 == 0 && got(3L)._2 == 0)
-    assert(got(4L) == (4L, 1), "singleton is its own representative")
   }
 
   // ---- timeDecayedValue --------------------------------------------------
