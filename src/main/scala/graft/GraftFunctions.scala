@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DoubleType, StringType}
 
 import graft.agg.{ApproxWeightedQuantile, MajorAgg, WeightedQuantile}
@@ -17,23 +18,32 @@ object GraftFunctions {
     * child expression round-trips through the Column API, so every
     * Column-form operator in [[graft.ext.TextAnalysis]] registers without
     * a parallel catalyst-node implementation. */
-  private def columnFn(
-      e: org.apache.spark.sql.catalyst.expressions.Expression)(
-      f: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    val b = org.apache.spark.sql.graftbridge.Bridge
-    b.expressionEager(f(b.column(e)))
-  }
+  private def columnFn(e: Expression)(f: Column => Column): Expression =
+    Bridge.expressionEager(f(Bridge.column(e)))
+
+  /** [[columnFn]] for a two-argument Column form. */
+  private def columnFn2(a: Expression, b: Expression)(f: (Column, Column) => Column): Expression =
+    Bridge.expressionEager(f(Bridge.column(a), Bridge.column(b)))
 
   /** Literal numeric argument (the quantile q) → double. */
-  private def literalDouble(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Double =
+  private def literalDouble(e: Expression): Double =
     e.eval() match {
       case d: java.lang.Double => d.doubleValue()
       case d: java.math.BigDecimal => d.doubleValue()
       case d: org.apache.spark.sql.types.Decimal => d.toDouble
       case n: java.lang.Number => n.doubleValue()
       case other => throw new IllegalArgumentException(s"q must be a literal, got $other")
+    }
+
+  /** Literal integer argument `i` (0-based) of SQL function `fn`, or
+    * `default` when the call omits it. A column argument fails here, naming
+    * the function — not later inside Spark's own eval. */
+  private def literalInt(fn: String, exprs: Seq[Expression], i: Int, default: Int = 0): Int =
+    if (exprs.length <= i) default
+    else Some(exprs(i)).filter(_.foldable).map(_.eval()) match {
+      case Some(n: java.lang.Number) => n.intValue()
+      case _ => throw new IllegalArgumentException(
+        s"$fn: argument ${i + 1} must be a literal integer, got ${exprs(i).sql}")
     }
 
   def register(spark: SparkSession): Unit = {
@@ -46,40 +56,30 @@ object GraftFunctions {
     registry.createOrReplaceTempFunction("approx_weighted_quantile", exprs => {
       require(exprs.length == 3 || exprs.length == 4,
         "approx_weighted_quantile(value, weight, q[, maxBins])")
-      val maxBins =
-        if (exprs.length == 4) exprs(3).eval().asInstanceOf[Number].intValue()
-        else 256
-      ApproxWeightedQuantile(Cast(exprs(0), DoubleType),
-        Cast(exprs(1), DoubleType), literalDouble(exprs(2)), maxBins)
+      ApproxWeightedQuantile(Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType),
+        literalDouble(exprs(2)), literalInt("approx_weighted_quantile", exprs, 3, 256))
     }, "built-in")
     registry.createOrReplaceTempFunction("hashed_shingles", exprs => {
       require(exprs.length == 1 || exprs.length == 2,
         "hashed_shingles(text[, n])")
-      val n =
-        if (exprs.length == 2) exprs(1).eval().asInstanceOf[Number].intValue()
-        else 3
-      graft.functions.HashedShingles(exprs.head, n)
+      val n = literalInt("hashed_shingles", exprs, 1, 3)
+      columnFn(exprs.head)(graft.functions.HashedShingles.column(_, n))
     }, "built-in")
     registry.createOrReplaceTempFunction("simhash", exprs => {
       require(exprs.length == 1, "simhash(text)")
-      graft.functions.SimHashSketch(exprs.head)
+      columnFn(exprs.head)(graft.functions.SimHashSketch.column)
     }, "built-in")
     registry.createOrReplaceTempFunction("sorted_intersect_size", exprs => {
       require(exprs.length == 2, "sorted_intersect_size(a, b)")
-      graft.functions.SortedIntersectSize(exprs(0), exprs(1))
+      columnFn2(exprs(0), exprs(1))(graft.functions.SetSimilarity.sortedIntersectSize)
     }, "built-in")
     registry.createOrReplaceTempFunction("jaccard_sorted", exprs => {
       require(exprs.length == 2, "jaccard_sorted(a, b)")
-      import org.apache.spark.sql.catalyst.expressions.{Add, Divide, Size, Subtract}
-      val inter = Cast(graft.functions.SortedIntersectSize(exprs(0), exprs(1)), DoubleType)
-      val union = Subtract(
-        Add(Cast(Size(exprs(0)), DoubleType), Cast(Size(exprs(1)), DoubleType)),
-        inter)
-      Divide(inter, union)
+      columnFn2(exprs(0), exprs(1))(graft.functions.SetSimilarity.jaccardSorted)
     }, "built-in")
     registry.createOrReplaceTempFunction("redact_pii", exprs => {
       require(exprs.length == 1, "redact_pii(text)")
-      import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RegExpReplace}
+      import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpReplace}
       // same pattern list as TextAnalysis.redactPii — one source of truth
       graft.ext.TextAnalysis.PiiPatterns.foldLeft(exprs.head: Expression) {
         case (e, (re, tag)) => RegExpReplace(e, Literal(re), Literal(tag))
@@ -87,12 +87,11 @@ object GraftFunctions {
     }, "built-in")
     registry.createOrReplaceTempFunction("vec_dot", exprs => {
       require(exprs.length == 2, "vec_dot(a, b)")
-      graft.functions.DotProduct(exprs(0), exprs(1))
+      columnFn2(exprs(0), exprs(1))(graft.functions.DotProduct.column)
     }, "built-in")
     registry.createOrReplaceTempFunction("bounded_list", exprs => {
       require(exprs.length == 2, "bounded_list(value, cap)")
-      val cap = exprs(1).eval().asInstanceOf[Number].intValue()
-      graft.agg.BoundedListAgg(Cast(exprs(0), StringType), cap)
+      graft.agg.BoundedListAgg(Cast(exprs(0), StringType), literalInt("bounded_list", exprs, 1))
     }, "built-in")
     // text-analysis surface: the Column-form operators lifted to SQL
     registry.createOrReplaceTempFunction("token_count", exprs => {
@@ -121,19 +120,15 @@ object GraftFunctions {
     }, "built-in")
     registry.createOrReplaceTempFunction("fingerprint", exprs => {
       require(exprs.length == 1 || exprs.length == 2, "fingerprint(t[, n])")
-      val n =
-        if (exprs.length == 2) exprs(1).eval().asInstanceOf[Number].intValue()
-        else 8
+      val n = literalInt("fingerprint", exprs, 1, 8)
       columnFn(exprs.head)(graft.ext.TextAnalysis.fingerprint(_, n))
     }, "built-in")
     registry.createOrReplaceTempFunction("hyperplane_bucket", exprs => {
       require(exprs.length == 1 || exprs.length == 2,
         "hyperplane_bucket(vec[, bits])")
-      val bits =
-        if (exprs.length == 2) exprs(1).eval().asInstanceOf[Number].intValue()
-        else 8
-      graft.functions.HyperplaneBucket(
-        Cast(exprs.head, org.apache.spark.sql.types.ArrayType(DoubleType)), bits)
+      val bits = literalInt("hyperplane_bucket", exprs, 1, 8)
+      columnFn(exprs.head)(v =>
+        graft.functions.HyperplaneBucket.column(v.cast("array<double>"), bits))
     }, "built-in")
     registry.createOrReplaceTempFunction("vector_mean", exprs => {
       require(exprs.length == 1, "vector_mean(vec)")
@@ -164,39 +159,33 @@ object GraftFunctions {
     registry.createOrReplaceTempFunction("dup_shingle_fraction", exprs => {
       require(exprs.length == 1 || exprs.length == 2,
         "dup_shingle_fraction(t[, n])")
-      val n =
-        if (exprs.length == 2) exprs(1).eval().asInstanceOf[Number].intValue()
-        else 3
+      val n = literalInt("dup_shingle_fraction", exprs, 1, 3)
       columnFn(exprs.head)(graft.ext.TextAnalysis.dupShingleFraction(_, n))
     }, "built-in")
     registry.createOrReplaceTempFunction("min_md5_ngram", exprs => {
       require(exprs.length == 1 || exprs.length == 2, "min_md5_ngram(text[, n])")
-      val n =
-        if (exprs.length == 2) exprs(1).eval().asInstanceOf[Number].intValue()
-        else 8
-      graft.functions.MinMd5Ngram(exprs.head, n)
+      val n = literalInt("min_md5_ngram", exprs, 1, 8)
+      columnFn(exprs.head)(graft.functions.MinMd5Ngram.column(_, n))
     }, "built-in")
     registry.createOrReplaceTempFunction("token_ngram_hashes", exprs => {
       require(exprs.length == 2, "token_ngram_hashes(text, k)")
-      graft.functions.TokenNgramHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())
+      val k = literalInt("token_ngram_hashes", exprs, 1)
+      columnFn(exprs.head)(graft.functions.TokenNgramHashes.column(_, k))
     }, "built-in")
     registry.createOrReplaceTempFunction("dsir_slots", exprs => {
       require(exprs.length == 2, "dsir_slots(text, buckets)")
-      graft.functions.DsirSlots(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())
+      val buckets = literalInt("dsir_slots", exprs, 1)
+      columnFn(exprs.head)(graft.functions.DsirSlots.column(_, buckets))
     }, "built-in")
     registry.createOrReplaceTempFunction("bigram_hashes", exprs => {
       require(exprs.length == 1, "bigram_hashes(text)")
-      graft.functions.BigramHashes(exprs.head)
+      columnFn(exprs.head)(graft.functions.BigramHashes.column)
     }, "built-in")
     registry.createOrReplaceTempFunction("misra_gries", exprs => {
       require(exprs.length == 1 || exprs.length == 2,
         "misra_gries(value[, capacity])")
-      val cap =
-        if (exprs.length == 2) exprs(1).eval().asInstanceOf[Number].intValue()
-        else 4096
-      graft.agg.MisraGriesAgg(Cast(exprs.head, StringType), cap)
+      graft.agg.MisraGriesAgg(Cast(exprs.head, StringType),
+        literalInt("misra_gries", exprs, 1, 4096))
     }, "built-in")
     registry.createOrReplaceTempFunction("major", exprs => {
       require(exprs.length == 1, "major(value)")

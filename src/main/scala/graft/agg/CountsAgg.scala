@@ -24,7 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * its own semantics: which keys a non-null input value counts under
   * (`observe`; by default the value itself) and `eval`. Null inputs are
   * never counted. A new key is detached from the input row once, when it
-  * is first inserted; later updates of the key only bump its count. */
+  * is first inserted; later updates of the key only bump its count. Every
+  * NaN counts under one entry (see [[CountsAgg.key]]). */
 abstract class CountsAgg[K]
   extends TypedImperativeAggregate[mutable.HashMap[K, Long]]
   with UnaryLike[Expression] {
@@ -50,7 +51,8 @@ abstract class CountsAgg[K]
     add(buf, v.asInstanceOf[K])
 
   /** Adds one to `k`'s count. */
-  protected final def add(buf: mutable.HashMap[K, Long], k: K): Unit = {
+  protected final def add(buf: mutable.HashMap[K, Long], v: K): Unit = {
+    val k = CountsAgg.key(v)
     val c = buf.getOrElse(k, 0L)
     if (c == 0L) {
       buf.update(layout.detach(k), 1L)
@@ -84,6 +86,19 @@ abstract class CountsAgg[K]
 
 object CountsAgg {
 
+  private val NaNKey: java.lang.Double = java.lang.Double.valueOf(Double.NaN)
+
+  /** The map key `k` counts under: every NaN becomes one shared boxed
+    * instance. The map compares keys with `==`, under which NaN ≠ NaN, so
+    * each fresh NaN would open an entry of its own; `==` on boxed keys
+    * tests identity first, so one instance is one entry. Keys enter a
+    * state only through `add` and `decode`, which both apply this, so
+    * `merge` meets the same instance on both sides. */
+  private[agg] def key[K](k: K): K = k match {
+    case d: java.lang.Double if d.isNaN => NaNKey.asInstanceOf[K]
+    case _ => k
+  }
+
   /** A key's bytes in the serialized state, and how a key read from an
     * input row is detached before the buffer keeps it. */
   sealed abstract class KeyLayout[K] {
@@ -99,7 +114,7 @@ object CountsAgg {
 
     final def decode(bytes: Array[Byte]): mutable.HashMap[K, Long] = {
       val m = mutable.HashMap.empty[K, Long]
-      unframe(bytes) { in => m.update(read(in), in.readLong()) }
+      unframe(bytes) { in => m.update(key(read(in)), in.readLong()) }
       m
     }
 

@@ -33,8 +33,8 @@ private object DriftAggs {
     * `step(baseCount, liveCount)` once per value — 0 on the side that
     * lacks it. NaN is ONE value above all others, as in Spark's ordering
     * and grouping (so the batch tests agree): `<=` is false both ways
-    * against NaN, and NaN ≠ NaN makes each live NaN its own map entry, so
-    * every NaN on either side folds into one last step. */
+    * against NaN, so every NaN on either side (the live counts hold them
+    * under one entry) folds into one last step. */
   def walk(baseVals: Array[Double], baseCum: Array[Long],
       live: mutable.HashMap[Double, Long])(step: (Long, Long) => Unit): Unit = {
     val nb = baseVals.count(!_.isNaN) // sorted: a NaN value comes last

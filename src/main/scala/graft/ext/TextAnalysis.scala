@@ -126,7 +126,7 @@ object TextAnalysis {
       textCol: String, addK: Double = 1.0): org.apache.spark.sql.DataFrame = {
     // hash-only bigram stream via the native kernel (one tokenize + one
     // chained XXH64 pair per position); bit-identical to exploding
-    // struct(w1, w2) and hashing per row — Round8OpsSuite pins it
+    // struct(w1, w2) and hashing per row — KernelSuite pins it
     val bg = df.select(col(idCol),
       explode(graft.functions.BigramHashes.column(col(textCol))).as("b"))
       .select(col(idCol), col("b.w1h").as("w1h"), col("b.bh").as("bh"))
@@ -739,7 +739,7 @@ object TextAnalysis {
     // one kernel scan per document replaces the uni/bi explode-union of
     // feature STRINGS + interpreted md5/conv/pmod per feature — slots are
     // computed before the explode, so only ints flow through the plan
-    // (bit-identical; pinned by Round8OpsSuite)
+    // (bit-identical; pinned by KernelSuite)
     val feats = df.select(col(idCol).as("doc_id"), isTarget.as("tgt"),
       explode(graft.functions.DsirSlots.column(col(textCol), buckets))
         .as("slot"))
@@ -1079,15 +1079,6 @@ object TextAnalysis {
     NbModel(vocab, w, math.log(np.toDouble / nn.toDouble))
   }
 
-  /** Score rows against a pre-trained [[NbModel]]: one narrow codegen
-    * lookup-sum per row ([[graft.functions.TokenWeightSum]]) — no join,
-    * no shuffle, so `data` may be a STREAMING DataFrame (ingest-time
-    * quality gating against a batch-trained classifier, the standard
-    * deploy shape). On the training corpus itself this equals
-    * [[nbQualityScore]] (pinned in Round8OpsSuite); on NEW data the two
-    * differ only in bookkeeping: unseen tokens weigh 0 here and n_tokens
-    * counts ALL tokens, while the join shape would drop unseen tokens
-    * from both. Output: (idCol, n_tokens, score, pred). */
   /** The [[NbModel]] score as a bare COLUMN (6 dp-rounded, same value as
     * [[nbScoreWith]]'s `score`) — for inline narrow gates in composed
     * pipelines, batch or streaming. */
@@ -1100,6 +1091,15 @@ object TextAnalysis {
     round(lit(model.prior) + graft.functions.TokenWeightSum.column(
       toksCol, model.vocab.zip(model.weights)), 6)
 
+  /** Score rows against a pre-trained [[NbModel]]: one narrow codegen
+    * lookup-sum per row ([[graft.functions.TokenWeightSum]]) — no join,
+    * no shuffle, so `data` may be a STREAMING DataFrame (ingest-time
+    * quality gating against a batch-trained classifier, the standard
+    * deploy shape). On the training corpus itself this equals
+    * [[nbQualityScore]] (pinned in Round8OpsSuite); on NEW data the two
+    * differ only in bookkeeping: unseen tokens weigh 0 here and n_tokens
+    * counts ALL tokens, while the join shape would drop unseen tokens
+    * from both. Output: (idCol, n_tokens, score, pred). */
   def nbScoreWith(data: org.apache.spark.sql.DataFrame, model: NbModel,
       idCol: String, textCol: String): org.apache.spark.sql.DataFrame =
     data.select(col(idCol), wordTokens(textCol).as("_toks"))

@@ -3,18 +3,18 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Interpreted/codegen kernel behind [[ArrayMightContainBloom]]. */
-object BloomKernel {
+/** The kernel behind [[ArrayMightContainBloom]]: the filter itself rides
+  * the plan (`BloomFilter` compares by value — hash count, seed and bits —
+  * so plans carrying equal filters compare equal) and ships once with the
+  * task. */
+case class BloomKernel(bf: BloomFilter) {
   /** True iff ANY element of the long array might be in the filter.
     * No false negatives: a true member always answers true. */
-  def mightContainAny(arr: ArrayData, bf: BloomFilter): Boolean = {
+  def mightContainAny(arr: ArrayData): Boolean = {
     val n = arr.numElements()
     var i = 0
     while (i < n) {
@@ -23,9 +23,6 @@ object BloomKernel {
     }
     false
   }
-
-  def deserialize(bits: Array[Byte]): BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(bits))
 }
 
 /** `array_might_contain_bloom(array<bigint>)`: true iff any element MIGHT
@@ -37,37 +34,13 @@ object BloomKernel {
   * One-sided error only: false positives possible, false NEGATIVES never —
   * which is exactly the contract a prefilter needs (see
   * [[graft.ext.Dedup.decontaminateBloom]]: bloom prunes, an exact join
-  * confirms, the composition is exact). The serialized filter rides the
-  * expression as a `Seq[Byte]` (primitive-backed `ArraySeq.ofByte`, value
-  * equality for Catalyst transforms); the deserialized filter is a lazy
-  * transient, shipped once per executor via the codegen reference array. */
-case class ArrayMightContainBloom(child: Expression, bits: Seq[Byte])
-  extends UnaryExpression {
-
-  @transient private lazy val bf: BloomFilter =
-    BloomKernel.deserialize(bits.toArray)
-
-  override def prettyName: String = "array_might_contain_bloom"
-  override def dataType: DataType = BooleanType
-
-  override def nullSafeEval(arr: Any): Any =
-    BloomKernel.mightContainAny(arr.asInstanceOf[ArrayData], bf)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloom", bf, classOf[BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.BloomKernel.mightContainAny($arr, $ref);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): ArrayMightContainBloom =
-    copy(child = c)
-}
-
+  * confirms, the composition is exact). */
 object ArrayMightContainBloom {
   def column(arr: Column, bf: BloomFilter): Column = {
     val bos = new ByteArrayOutputStream()
-    bf.writeTo(bos)
-    ExpressionUtils.column(ArrayMightContainBloom(
-      ExpressionUtils.expression(arr), bos.toByteArray.toSeq))
+    bf.writeTo(bos) // a private copy: later puts into `bf` do not reach the plan
+    val copy = BloomFilter.readFrom(new ByteArrayInputStream(bos.toByteArray))
+    Kernel.column("array_might_contain_bloom", BloomKernel(copy), "mightContainAny",
+      BooleanType)(arr)
   }
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Asymmetric-distance computation for product quantization: squared L2
   * between a FULL query vector and the RECONSTRUCTION of a PQ code
@@ -16,12 +13,13 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * The point of PQ at 100 TB is not FLOPs — it is that the corpus side of
   * the candidate scan carries m small ints (≈ m bytes semantically)
   * instead of `dim` doubles: ~50–100× less storage/shuffle per vector.
+  * The codebooks are compared by reference, like [[CentroidKernel]]'s.
   */
-object PqKernel {
+case class PqKernel(codebooks: Array[Array[Array[Double]]]) {
   /** cb(s)(k) is the dsub-dim centroid k of subspace s; code length m must
     * equal cb.length and the query dim must equal m·dsub, else null. */
-  def adc(code: ArrayData, q: ArrayData,
-      cb: Array[Array[Array[Double]]]): java.lang.Double = {
+  def adc(code: ArrayData, q: ArrayData): java.lang.Double = {
+    val cb = codebooks
     val m = cb.length
     if (code.numElements() != m || m == 0) return null
     val dsub = cb(0)(0).length
@@ -46,38 +44,8 @@ object PqKernel {
   }
 }
 
-case class PqAdc(left: Expression, right: Expression,
-    codebooks: Array[Array[Array[Double]]])
-  extends BinaryExpression {
-
-  override def prettyName: String = "pq_adc"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(code: Any, q: Any): Any =
-    PqKernel.adc(code.asInstanceOf[ArrayData], q.asInstanceOf[ArrayData],
-      codebooks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCodebooks", codebooks, "double[][][]")
-    nullSafeCodeGen(ctx, ev, (code, q) => {
-      val boxed = ctx.freshName("graftAdc")
-      s"""
-         java.lang.Double $boxed = graft.functions.PqKernel.adc($code, $q, $ref);
-         if ($boxed == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $boxed.doubleValue(); }
-       """
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): PqAdc = copy(left = l, right = r)
-}
-
 object PqAdc {
-  def column(code: Column, query: Column,
-      codebooks: Array[Array[Array[Double]]]): Column =
-    ExpressionUtils.column(PqAdc(
-      ExpressionUtils.expression(code), ExpressionUtils.expression(query),
-      codebooks))
+  def column(code: Column, query: Column, codebooks: Array[Array[Array[Double]]]): Column =
+    Kernel.column("pq_adc", PqKernel(codebooks), "adc", DoubleType, mayReturnNull = true)(
+      code, query)
 }

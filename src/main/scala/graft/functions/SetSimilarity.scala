@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.IntegerType
 
 /** Set-similarity kernels for the dedup verify path.
   *
@@ -17,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * pair verify into a single allocation-free merge scan, and the candidate
   * join ships compact long arrays instead of string arrays.
   */
-object SetKernel {
+object SetKernel extends Serializable {
   /** Intersection size of two ascending long arrays (merge scan). */
   def intersectSize(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements(); val nb = b.numElements()
@@ -32,31 +29,12 @@ object SetKernel {
   }
 }
 
-/** `sorted_intersect_size(a, b)`: merge-scan intersection count of two
-  * ascending `array<bigint>` columns. Stays inside whole-stage codegen via
-  * a static kernel call (no ScalaUDF boundary, no per-call hash set).
-  */
-case class SortedIntersectSize(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def prettyName: String = "sorted_intersect_size"
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SetKernel.intersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SetKernel.intersectSize($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): SortedIntersectSize = copy(left = l, right = r)
-}
-
 object SetSimilarity {
+  /** `sorted_intersect_size(a, b)`: merge-scan intersection count of two
+    * ascending `array<bigint>` columns — one kernel call inside whole-stage
+    * codegen (no ScalaUDF boundary, no per-call hash set). */
   def sortedIntersectSize(a: Column, b: Column): Column =
-    ExpressionUtils.column(SortedIntersectSize(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    Kernel.column("sorted_intersect_size", SetKernel, "intersectSize", IntegerType)(a, b)
 
   /** Jaccard of two sorted distinct-element long arrays:
     * |a∩b| / (|a| + |b| − |a∩b|). Catalyst CSE evaluates the merge scan

@@ -3,14 +3,14 @@ package graft.functions
 import java.security.MessageDigest
 import java.util.Locale
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass kernel for the dedup shingle pipeline.
@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     computed here as the big-endian first 8 digest bytes >>> 4;
   *   - distinct + ascending sort.
   */
-object ShingleKernel {
+object ShingleKernel extends Serializable {
   private val md = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
@@ -95,33 +95,16 @@ object ShingleKernel {
 
 /** `hashed_shingles(text, n)`: sorted distinct 60-bit hashes of word
   * n-gram shingles (see [[ShingleKernel]]). */
-case class HashedShingles(child: Expression, n: Int)
-  extends UnaryExpression {
-
-  override def prettyName: String = "hashed_shingles"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any =
-    ShingleKernel.hashedShingles(t.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.ShingleKernel.hashedShingles($t, $n);")
-
-  override protected def withNewChildInternal(c: Expression): HashedShingles =
-    copy(child = c)
-}
-
 object HashedShingles {
-  def column(text: Column, n: Int): Column =
-    ExpressionUtils.column(HashedShingles(ExpressionUtils.expression(text), n))
+  def column(text: Column, n: Int): Column = Kernel.column("hashed_shingles", ShingleKernel,
+    "hashedShingles", ArrayType(LongType, containsNull = false))(text, lit(n))
 }
 
 /** Kernel for [[MinMd5Ngram]]: one MessageDigest reused across positions,
   * min kept as the raw 16-byte digest (unsigned byte-wise order ≡
   * lexicographic order of the lowercase-hex rendering, because the hex
   * alphabet 0-9a-f is ascending in ASCII), hex-encoded once at the end. */
-object FingerprintKernel {
+object FingerprintKernel extends Serializable {
   private val HexChars = "0123456789abcdef".toCharArray
 
   def minMd5Ngram(s: UTF8String, n: Int): UTF8String = {
@@ -175,33 +158,18 @@ object FingerprintKernel {
   *
   * Bit-identical to the SQL chain
   * `array_min(transform(sequence(1, greatest(length(t)-(n-1), 1)),
-  * i => md5(substr(t, i, n))))` (pinned by Round8OpsSuite), but ~10×
+  * i => md5(substr(t, i, n))))` (pinned by KernelSuite), but ~10×
   * cheaper: the composed form materializes a position array, a substring
   * string, an md5 call AND a 32-char hex string per position through
   * interpreted higher-order-function eval; the kernel runs one digest
   * instance down the document and hex-encodes exactly once. Texts shorter
   * than n (empty included) hash their whole content, matching
   * `substr`'s clamping. */
-case class MinMd5Ngram(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"n must be positive, got $n")
-
-  override def prettyName: String = "min_md5_ngram"
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-
-  override def nullSafeEval(t: Any): Any =
-    FingerprintKernel.minMd5Ngram(t.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.FingerprintKernel.minMd5Ngram($t, $n);")
-
-  override protected def withNewChildInternal(c: Expression): MinMd5Ngram =
-    copy(child = c)
-}
-
 object MinMd5Ngram {
-  def column(text: Column, n: Int): Column =
-    ExpressionUtils.column(MinMd5Ngram(ExpressionUtils.expression(text), n))
+  def column(text: Column, n: Int): Column = {
+    require(n > 0, s"n must be positive, got $n")
+    Kernel.column("min_md5_ngram", FingerprintKernel, "minMd5Ngram", StringType)(text, lit(n))
+  }
 }
 
 /** Kernel for [[TokenNgramHashes]]. Tokenization replicates
@@ -210,7 +178,7 @@ object MinMd5Ngram {
   * with limit −1 (trailing empties kept) — so positions match the
   * composed form byte-for-byte; the hash is the same XXH64/seed-42 that
   * `xxhash64(string)` computes. */
-object NgramHashKernel {
+object NgramHashKernel extends Serializable {
   private val Ws = java.util.regex.Pattern.compile("\\s+")
 
   def positionalHashes(s: UTF8String, k: Int): ArrayData = {
@@ -250,26 +218,12 @@ object NgramHashKernel {
   * the hot inner map of the duplicated-span detector
   * ([[graft.ext.Dedup.duplicatedSpans]]), which runs it over every token
   * position of the corpus. */
-case class TokenNgramHashes(child: Expression, k: Int) extends UnaryExpression {
-  require(k > 0, s"k must be positive, got $k")
-
-  override def prettyName: String = "token_ngram_hashes"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any =
-    NgramHashKernel.positionalHashes(t.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.NgramHashKernel.positionalHashes($t, $k);")
-
-  override protected def withNewChildInternal(c: Expression): TokenNgramHashes =
-    copy(child = c)
-}
-
 object TokenNgramHashes {
-  def column(text: Column, k: Int): Column =
-    ExpressionUtils.column(TokenNgramHashes(ExpressionUtils.expression(text), k))
+  def column(text: Column, k: Int): Column = {
+    require(k > 0, s"k must be positive, got $k")
+    Kernel.column("token_ngram_hashes", NgramHashKernel, "positionalHashes",
+      ArrayType(LongType, containsNull = false))(text, lit(k))
+  }
 }
 
 /** `dsir_slots(text, buckets)`: the DSIR hashed feature stream — every
@@ -278,28 +232,18 @@ object TokenNgramHashes {
   * (duplicates preserved; the slot COUNTS are the feature vector).
   * Bit-identical to exploding `wordTokens` ∪ adjacent-bigram concats
   * through `pmod(conv(substr(md5(f),1,15),16,10), buckets)` (pinned by
-  * Round8OpsSuite) — but one scan, one digest instance, and no feature
+  * KernelSuite) — but one scan, one digest instance, and no feature
   * STRINGS ever materialize in the plan. Documents with no tokens yield
   * an empty array (explode drops them, matching the composed form). */
-case class DsirSlots(child: Expression, buckets: Int) extends UnaryExpression {
-  require(buckets > 0, s"buckets must be positive, got $buckets")
-
-  override def prettyName: String = "dsir_slots"
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any =
-    DsirSlotKernel.slots(t.asInstanceOf[UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.DsirSlotKernel.slots($t, $buckets);")
-
-  override protected def withNewChildInternal(c: Expression): DsirSlots =
-    copy(child = c)
+object DsirSlots {
+  def column(text: Column, buckets: Int): Column = {
+    require(buckets > 0, s"buckets must be positive, got $buckets")
+    Kernel.column("dsir_slots", DsirSlotKernel, "slots",
+      ArrayType(IntegerType, containsNull = false))(text, lit(buckets))
+  }
 }
 
-object DsirSlotKernel {
+object DsirSlotKernel extends Serializable {
   def slots(text: UTF8String, buckets: Int): ArrayData = {
     val toks = ShingleKernel.tokens(text.toString)
     val n = toks.length
@@ -322,35 +266,24 @@ object DsirSlotKernel {
   }
 }
 
-object DsirSlots {
-  def column(text: Column, buckets: Int): Column =
-    ExpressionUtils.column(DsirSlots(ExpressionUtils.expression(text), buckets))
-}
-
 /** `bigram_hashes(text)`: per adjacent word-token bigram, the struct
   * (w1h = xxhash64(w1), bh = xxhash64(w1, w2)) in document order — the
   * hash-only bigram stream of the corpus LM
   * ([[graft.ext.TextAnalysis.lmScore]]). Bit-identical to exploding
   * `struct(w1, w2)` and hashing per row (xxhash64's multi-argument
-  * chaining: bh seeds w2's hash with w1's — pinned by Round8OpsSuite),
+  * chaining: bh seeds w2's hash with w1's — pinned by KernelSuite),
   * minus the per-position lambda, struct-of-strings, and two expression
   * evals. Texts with < 2 tokens yield an empty array. */
-case class BigramHashes(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "bigram_hashes"
-  override def dataType: DataType = BigramHashes.Schema
+object BigramHashes {
+  val Schema: ArrayType = ArrayType(
+    StructType(Seq(StructField("w1h", LongType, nullable = false),
+      StructField("bh", LongType, nullable = false))), containsNull = false)
 
-  override def nullSafeEval(t: Any): Any =
-    BigramHashKernel.bigrams(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.BigramHashKernel.bigrams($t);")
-
-  override protected def withNewChildInternal(c: Expression): BigramHashes =
-    copy(child = c)
+  def column(text: Column): Column =
+    Kernel.column("bigram_hashes", BigramHashKernel, "bigrams", Schema)(text)
 }
 
-object BigramHashKernel {
+object BigramHashKernel extends Serializable {
   import org.apache.spark.sql.catalyst.expressions.XXH64
 
   def bigrams(text: UTF8String): ArrayData = {
@@ -373,23 +306,13 @@ object BigramHashKernel {
   }
 }
 
-object BigramHashes {
-  import org.apache.spark.sql.types.{LongType => SLong, StructField, StructType}
-  val Schema: DataType = ArrayType(
-    StructType(Seq(StructField("w1h", SLong, nullable = false),
-      StructField("bh", SLong, nullable = false))), containsNull = false)
-
-  def column(text: Column): Column =
-    ExpressionUtils.column(BigramHashes(ExpressionUtils.expression(text)))
-}
-
 /** 60-bit SimHash sketch computed natively: tokenize (same scanner as
   * [[ShingleKernel.tokens]]), distinct tokens, one md5-derived 60-bit hash
   * per token, ±1 per-bit vote, sign fold. Bit-identical to the SQL
   * `aggregate(zip_with(...))` chain in [[graft.ext.Dedup.simhash]]'s
   * documentation (hash bit b lands at sketch position 59−b), which paid
   * one interpreted md5 re-evaluation PER BIT per token. */
-object SimHashKernel {
+object SimHashKernel extends Serializable {
   def sketch(text: UTF8String): Long = {
     val toks = ShingleKernel.tokens(text.toString)
     val seen = new java.util.HashSet[String](toks.length * 2)
@@ -414,24 +337,9 @@ object SimHashKernel {
   }
 }
 
-case class SimHashSketch(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "simhash_sketch"
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(t: Any): Any =
-    SimHashKernel.sketch(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.SimHashKernel.sketch($t);")
-
-  override protected def withNewChildInternal(c: Expression): SimHashSketch =
-    copy(child = c)
-}
-
 object SimHashSketch {
   def column(text: Column): Column =
-    ExpressionUtils.column(SimHashSketch(ExpressionUtils.expression(text)))
+    Kernel.column("simhash_sketch", SimHashKernel, "sketch", LongType)(text)
 }
 
 /** MinHash band keys computed natively from a hashed-shingle array.
@@ -439,13 +347,19 @@ object SimHashSketch {
   * For each hash function i: `sig_i = min over h of ((a_i·(h mod p) + b_i)
   * mod p)`; band key b = comma-joined decimal `sig` values of its
   * `numHashes/bands` rows. One static call per document replaces
-  * `numHashes` interpreted `array_min(transform(...))` lambda scans.
+  * `numHashes` interpreted `array_min(transform(...))` lambda scans. The
+  * hash parameters ride the plan as Seqs (value equality: two plans with
+  * the same parameters compare equal) with primitive mirrors built once.
   */
-object MinHashKernel {
-  val Prime = 1000000007L
+case class MinHashKernel(a: Seq[Long], b: Seq[Long], bands: Int) {
+  require(a.length == b.length && a.length % bands == 0)
+  private val aArr = Kernel.unwrap(a)
+  private val bArr = Kernel.unwrap(b)
+  import MinHashKernel.Prime
 
-  def bandKeys(hv: ArrayData, a: Array[Long], b: Array[Long],
-      bands: Int): ArrayData = {
+  def bandKeys(hv: ArrayData): ArrayData = {
+    val a = aArr
+    val b = bArr
     val k = a.length
     val sig = new Array[Long](k)
     java.util.Arrays.fill(sig, Long.MaxValue)
@@ -480,48 +394,32 @@ object MinHashKernel {
   }
 }
 
-/** `minhash_band_keys(hashedShingles)`: array of `bands` band-key strings. */
-case class MinHashBandKeys(child: Expression, a: Seq[Long], b: Seq[Long],
-    bands: Int)
-  extends UnaryExpression {
-
-  require(a.length == b.length && a.length % bands == 0)
-  @transient private lazy val aArr = a.toArray
-  @transient private lazy val bArr = b.toArray
-
-  override def prettyName: String = "minhash_band_keys"
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-
-  override def nullSafeEval(hv: Any): Any =
-    MinHashKernel.bandKeys(hv.asInstanceOf[ArrayData], aArr, bArr, bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("mhA", aArr, "long[]")
-    val bRef = ctx.addReferenceObj("mhB", bArr, "long[]")
-    nullSafeCodeGen(ctx, ev, hv =>
-      s"${ev.value} = graft.functions.MinHashKernel.bandKeys($hv, $aRef, $bRef, $bands);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): MinHashBandKeys =
-    copy(child = c)
+object MinHashKernel {
+  val Prime = 1000000007L
 }
 
+/** `minhash_band_keys(hashedShingles)`: array of `bands` band-key strings. */
 object MinHashBandKeys {
-  def column(hashedShingles: Column, params: Seq[(Long, Long)],
-      bands: Int): Column =
-    ExpressionUtils.column(MinHashBandKeys(
-      ExpressionUtils.expression(hashedShingles),
-      params.map(_._1), params.map(_._2), bands))
+  def column(hashedShingles: Column, params: Seq[(Long, Long)], bands: Int): Column =
+    Kernel.column("minhash_band_keys", MinHashKernel(params.map(_._1), params.map(_._2), bands),
+      "bandKeys", ArrayType(StringType, containsNull = false))(hashedShingles)
 }
 
 /** Membership scan for a driver-built sorted long set: does any element of
   * the child array appear in it? One binary search per element, the set
   * shipped once per executor as a codegen reference object — the kernel
   * behind [[graft.ext.Dedup.decontaminateBroadcast]]'s per-row filter
-  * (no join, no shuffle, streaming-safe). */
-object LongSetKernel {
-  def overlaps(arr: ArrayData, sorted: Array[Long]): Boolean = {
+  * (no join, no shuffle, streaming-safe). The set rides the plan as a Seq
+  * (value equality for Catalyst transforms), sorted on the driver and
+  * wrapped without a copy (`ArraySeq.ofLong`, primitive-backed, so no
+  * boxing); the kernel searches the wrapped array itself, which ships
+  * once inside the Seq. Equality walks the elements, which bounds how
+  * large a set should ride a plan (the decontamination cap defaults to
+  * 5M). */
+case class LongSetKernel(set: Seq[Long]) {
+  private val sorted = Kernel.unwrap(set)
+
+  def overlaps(arr: ArrayData): Boolean = {
     val n = arr.numElements()
     var i = 0
     while (i < n) {
@@ -534,38 +432,14 @@ object LongSetKernel {
 }
 
 /** `array_overlaps_set(array<long>)`: true iff any element is in the
-  * fixed sorted set. The set rides the expression as a Seq (value
-  * equality for Catalyst transforms) with a lazy primitive mirror —
-  * `Array[Long].toSeq` yields `ArraySeq.ofLong`, primitive-backed, so no
-  * boxing; equality walks the elements, which bounds how large a set
-  * should ride a plan (the decontamination cap defaults to 5M). */
-case class ArrayOverlapsSet(child: Expression, set: Seq[Long])
-  extends UnaryExpression {
-
-  @transient private lazy val sorted: Array[Long] = {
-    val a = set.toArray; java.util.Arrays.sort(a); a
-  }
-
-  override def prettyName: String = "array_overlaps_set"
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-
-  override def nullSafeEval(arr: Any): Any =
-    LongSetKernel.overlaps(arr.asInstanceOf[ArrayData], sorted)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("overlapSet", sorted, "long[]")
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.LongSetKernel.overlaps($arr, $ref);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): ArrayOverlapsSet =
-    copy(child = c)
-}
-
+  * fixed sorted set ([[LongSetKernel]]). */
 object ArrayOverlapsSet {
-  def column(arr: Column, set: Array[Long]): Column =
-    ExpressionUtils.column(ArrayOverlapsSet(
-      ExpressionUtils.expression(arr), set.toSeq))
+  def column(arr: Column, set: Array[Long]): Column = {
+    val sorted = set.clone()
+    java.util.Arrays.sort(sorted)
+    Kernel.column("array_overlaps_set", LongSetKernel(ArraySeq.unsafeWrapArray(sorted)),
+      "overlaps", BooleanType)(arr)
+  }
 }
 
 /** Weighted-vocabulary lookup-sum for a driver-built sorted (token,
@@ -573,9 +447,15 @@ object ArrayOverlapsSet {
   * unknown tokens contributing 0. One binary search per token, the
   * vocabulary shipped once per executor as codegen reference objects —
   * the kernel behind [[graft.ext.TextAnalysis.nbScoreWith]]'s per-row
-  * classifier scoring (no join, no shuffle, streaming-safe). */
-object TokenWeightKernel {
-  def sum(arr: ArrayData, keys: Array[UTF8String], w: Array[Double]): Double = {
+  * classifier scoring (no join, no shuffle, streaming-safe). Vocab and
+  * weights ride the plan as Seqs (value equality for Catalyst transforms),
+  * encoded and sorted on the driver and wrapped without a copy; the kernel
+  * searches the wrapped arrays themselves. */
+case class TokenWeightKernel(vocab: Seq[UTF8String], weights: Seq[Double]) {
+  private val keys = Kernel.unwrap(vocab)
+  private val w = Kernel.unwrap(weights)
+
+  def sum(arr: ArrayData): Double = {
     var s = 0.0
     val n = arr.numElements()
     var i = 0
@@ -597,43 +477,15 @@ object TokenWeightKernel {
 }
 
 /** `token_weight_sum(array<string>)`: Σ weight over the fixed sorted
-  * vocabulary, 0 for unknown tokens. Vocab and weights ride the
-  * expression as Seqs (value equality for Catalyst transforms) with lazy
-  * array mirrors; the companion sorts the pairs once at construction. */
-case class TokenWeightSum(child: Expression, vocab: Seq[String],
-    weights: Seq[Double])
-  extends UnaryExpression {
-
-  @transient private lazy val keysArr: Array[UTF8String] =
-    vocab.iterator.map(UTF8String.fromString).toArray
-  @transient private lazy val wArr: Array[Double] = weights.toArray
-
-  override def prettyName: String = "token_weight_sum"
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-
-  override def nullSafeEval(arr: Any): Any =
-    TokenWeightKernel.sum(arr.asInstanceOf[ArrayData], keysArr, wArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kRef = ctx.addReferenceObj("twsKeys", keysArr,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    val wRef = ctx.addReferenceObj("twsWeights", wArr, "double[]")
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.TokenWeightKernel.sum($arr, $kRef, $wRef);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): TokenWeightSum =
-    copy(child = c)
-}
-
+  * vocabulary, 0 for unknown tokens ([[TokenWeightKernel]]). */
 object TokenWeightSum {
   /** `pairs` need not be sorted; UTF8String (binary) order is applied
     * here so the kernel's binary search sees a consistent key order. */
   def column(tokens: Column, pairs: Array[(String, Double)]): Column = {
-    val sorted = pairs.sortBy(p => UTF8String.fromString(p._1))
-    ExpressionUtils.column(TokenWeightSum(
-      ExpressionUtils.expression(tokens),
-      sorted.map(_._1).toSeq, sorted.map(_._2).toSeq))
+    val sorted = pairs.map(p => (UTF8String.fromString(p._1), p._2)).sortBy(_._1)
+    val kernel = TokenWeightKernel(ArraySeq.unsafeWrapArray(sorted.map(_._1)),
+      ArraySeq.unsafeWrapArray(sorted.map(_._2)))
+    Kernel.column("token_weight_sum", kernel, "sum", DoubleType)(tokens)
   }
 }
 
@@ -644,7 +496,7 @@ object TokenWeightSum {
   * waiting on finalization. Deterministic: zlib's DEFLATE output for a
   * fixed input/level/strategy is stable across JDK releases (the
   * algorithm is pinned by RFC 1951 greedy matching at each level). */
-object CompressKernel {
+object CompressKernel extends Serializable {
   def deflateRatio(t: UTF8String): Double = {
     val bytes = t.getBytes
     if (bytes.length == 0) return 1.0
@@ -667,23 +519,7 @@ object CompressKernel {
   * convention). No SQL-expressible oracle exists (zlib is not a DuckDB
   * builtin) — the kernel is suite-pinned against known-entropy inputs
   * instead. */
-case class DeflateRatio(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "deflate_ratio"
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-
-  override def nullSafeEval(t: Any): Any =
-    CompressKernel.deflateRatio(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.CompressKernel.deflateRatio($t);")
-
-  override protected def withNewChildInternal(c: Expression): DeflateRatio =
-    copy(child = c)
-}
-
 object DeflateRatio {
   def column(text: Column): Column =
-    ExpressionUtils.column(DeflateRatio(ExpressionUtils.expression(text)))
+    Kernel.column("deflate_ratio", CompressKernel, "deflateRatio", DoubleType)(text)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
 
 /** Native dot product over two `array<double>` columns.
   *
@@ -18,7 +16,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * call this once per candidate PAIR, which is where the interpreted
   * overhead multiplies.
   */
-object VectorKernel {
+object VectorKernel extends Serializable {
   /** Sentinel-free boxed result: null mirrors the lambda-chain null. */
   def dot(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
@@ -34,44 +32,20 @@ object VectorKernel {
   }
 }
 
-case class DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def prettyName: String = "vec_dot"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("graftDot")
-      s"""
-         java.lang.Double $boxed = graft.functions.VectorKernel.dot($a, $b);
-         if ($boxed == null) { ${ev.isNull} = true; }
-         else { ${ev.value} = $boxed.doubleValue(); }
-       """
-    })
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): DotProduct = copy(left = l, right = r)
-}
-
 object DotProduct {
   def column(a: Column, b: Column): Column =
-    ExpressionUtils.column(DotProduct(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    Kernel.column("vec_dot", VectorKernel, "dot", DoubleType, mayReturnNull = true)(a, b)
 }
 
 /** Argmin-squared-L2 assignment of a vector to the nearest of k centroids
   * (ties break toward the smaller index). The centroid matrix rides the
   * serialized expression once per stage — KB-scale for any sane k·dim —
   * and each row costs one static k·dim scan inside whole-stage codegen:
-  * the IVF coarse quantizer as a map, no shuffle, no UDF.
+  * the IVF coarse quantizer as a map, no shuffle, no UDF. The matrix is
+  * compared by reference, so two plans built from one array compare equal.
   */
-object CentroidKernel {
-  def nearest(v: ArrayData, centroids: Array[Array[Double]]): Int = {
+case class CentroidKernel(centroids: Array[Array[Double]]) {
+  def nearest(v: ArrayData): Int = {
     val dim = v.numElements()
     var best = -1
     var bestD = Double.MaxValue
@@ -95,8 +69,7 @@ object CentroidKernel {
 
   /** First `nprobe` centroid indices by ascending squared L2 (selection
     * scan — k is small). Ties break toward the smaller index. */
-  def probes(v: ArrayData, centroids: Array[Array[Double]],
-      nprobe: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  def probes(v: ArrayData, nprobe: Int): ArrayData = {
     val k = centroids.length
     val dim = v.numElements()
     val d = new Array[Double](k)
@@ -134,59 +107,17 @@ object CentroidKernel {
   }
 }
 
-case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
-  extends UnaryExpression {
-
-  override def prettyName: String = "nearest_centroid"
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override def nullSafeEval(v: Any): Any =
-    CentroidKernel.nearest(v.asInstanceOf[ArrayData], centroids)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.CentroidKernel.nearest($v, $ref);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): NearestCentroid =
-    copy(child = c)
-}
-
 object NearestCentroid {
-  def column(vec: Column, centroids: Array[Array[Double]]): Column =
-    ExpressionUtils.column(NearestCentroid(
-      ExpressionUtils.expression(vec), centroids))
+  def column(vec: Column, centroids: Array[Array[Double]]): Column = Kernel.column(
+    "nearest_centroid", CentroidKernel(centroids), "nearest", IntegerType)(vec)
 }
 
 /** The `nprobe` nearest centroid indices for a query vector, ascending by
   * squared L2 (ties toward the smaller index) — the IVF probe list. */
-case class ProbeCentroids(child: Expression, centroids: Array[Array[Double]],
-    nprobe: Int)
-  extends UnaryExpression {
-
-  override def prettyName: String = "probe_centroids"
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    CentroidKernel.probes(v.asInstanceOf[ArrayData], centroids, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.CentroidKernel.probes($v, $ref, $nprobe);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): ProbeCentroids =
-    copy(child = c)
-}
-
 object ProbeCentroids {
   def column(vec: Column, centroids: Array[Array[Double]], nprobe: Int): Column =
-    ExpressionUtils.column(ProbeCentroids(
-      ExpressionUtils.expression(vec), centroids, nprobe))
+    Kernel.column("probe_centroids", CentroidKernel(centroids), "probes",
+      ArrayType(IntegerType, containsNull = false))(vec, lit(nprobe))
 }
 
 /** Random-hyperplane LSH bucket: bit i = sign(v · h_i) with the
@@ -205,7 +136,7 @@ object ProbeCentroids {
   * wholly-NULL input vector returns NULL (the standard null-propagating
   * Expression contract) where the lambda chain returned bucket 0.
   */
-object HyperplaneKernel {
+object HyperplaneKernel extends Serializable {
   def bucket(v: ArrayData, bits: Int): Long = {
     val n = v.numElements()
     var i = 0
@@ -228,25 +159,7 @@ object HyperplaneKernel {
   }
 }
 
-case class HyperplaneBucket(child: Expression, bits: Int)
-  extends UnaryExpression {
-
-  override def prettyName: String = "hyperplane_bucket"
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def nullSafeEval(v: Any): Any =
-    HyperplaneKernel.bucket(v.asInstanceOf[ArrayData], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.HyperplaneKernel.bucket($v, $bits);")
-
-  override protected def withNewChildInternal(c: Expression): HyperplaneBucket =
-    copy(child = c)
-}
-
 object HyperplaneBucket {
   def column(vec: Column, bits: Int): Column =
-    ExpressionUtils.column(HyperplaneBucket(
-      ExpressionUtils.expression(vec), bits))
+    Kernel.column("hyperplane_bucket", HyperplaneKernel, "bucket", LongType)(vec, lit(bits))
 }

@@ -1,12 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.Kernel
 
 /** Range join against a small band table (the grade-shell / binning shape:
   * every fact row lands in the band whose `[lo, hi)` interval contains its
@@ -16,9 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * BroadcastNestedLoopJoin — O(bands) comparisons per row and a join node
   * in the plan. For the overwhelmingly common case (bands sorted,
   * non-overlapping, known up front) the join disappears entirely: the
-  * band table rides a codegen expression as a sorted array and each row
-  * pays one binary search, staying inside whole-stage codegen. Rows
-  * outside every band get null (≡ the range join's non-match).
+  * band table rides a [[graft.functions.Kernel]] call as a sorted array
+  * and each row pays one binary search, staying inside whole-stage
+  * codegen. Rows outside every band get null (≡ the range join's
+  * non-match).
   */
 final class BandKernel(val los: Array[Double], val his: Array[Double],
     val names: Array[UTF8String]) extends Serializable {
@@ -33,33 +33,12 @@ final class BandKernel(val los: Array[Double], val his: Array[Double],
     val c = lo - 1
     if (c >= 0 && v < his(c)) c else -1
   }
-}
 
-case class BandLookup(child: Expression, kernel: BandKernel)
-  extends UnaryExpression {
-
-  override def prettyName: String = "band_lookup"
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(v: Any): Any = {
-    val i = kernel.find(v.asInstanceOf[Double])
-    if (i < 0) null else kernel.names(i)
+  /** The name of the band containing v, null when none. */
+  def lookup(v: Double): UTF8String = {
+    val i = find(v)
+    if (i < 0) null else names(i)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bandKernel", kernel, classOf[BandKernel].getName)
-    val idx = ctx.freshName("graftBand")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         int $idx = $ref.find($v);
-         if ($idx < 0) { ${ev.isNull} = true; }
-         else { ${ev.value} = $ref.names()[$idx]; }
-       """)
-  }
-
-  override protected def withNewChildInternal(c: Expression): BandLookup =
-    copy(child = c)
 }
 
 object BandJoin {
@@ -76,8 +55,8 @@ object BandJoin {
     val kernel = new BandKernel(sorted.map(_._2).toArray,
       sorted.map(_._3).toArray,
       sorted.map(b => UTF8String.fromString(b._1)).toArray)
-    ExpressionUtils.column(BandLookup(
-      ExpressionUtils.expression(value.cast("double")), kernel))
+    Kernel.column("band_lookup", kernel, "lookup", StringType, mayReturnNull = true)(
+      value.cast("double"))
   }
 
   /** General range join for a DataFrame band table (possibly overlapping

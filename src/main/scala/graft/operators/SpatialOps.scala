@@ -180,7 +180,7 @@ object FlagRegions {
   def apply(spark: SparkSession, df: DataFrame, meshes: Seq[TriMesh],
       flagVar: String = "region", xCol: String = "x", yCol: String = "y",
       zCol: String = "z", footprint2d: Boolean = false): DataFrame =
-    // native codegen Expression — stays inside whole-stage codegen
+    // one kernel call per cell inside whole-stage codegen
     // (operators.RegionFlagExpr); the meshes are broadcast once per call
     df.withColumn(flagVar, RegionFlagExpr.column(df.sparkSession.sparkContext,
       col(xCol).cast("double"), col(yCol).cast("double"),
@@ -249,7 +249,7 @@ object MineDepletion {
     if (subBlocks > 0)
       require(cellSizeXY._1 > 0 && cellSizeXY._2 > 0,
         "subBlocks kernel needs cellSizeXY")
-    // native codegen Expression (operators.MineExpr)
+    // one kernel call per cell (operators.MineExpr)
     df.withColumn(out, MineExpr.column(df.sparkSession.sparkContext,
       col(xCol).cast("double"), col(yCol).cast("double"),
       col(zCol).cast("double"), includes, excludes, dz, subBlocks,
@@ -265,7 +265,7 @@ object Elevation {
   // `df`'s own session (same pattern as MineDepletion)
   def apply(df: DataFrame, mesh: TriMesh,
       out: String = "elevation", xCol: String = "x", yCol: String = "y"): DataFrame =
-    // native codegen Expression (operators.ElevationExpr) — same pattern as
+    // one kernel call per row (operators.ElevationExpr) — same pattern as
     // RegionFlagExpr/MineExpr, no ScalaUDF boundary in the fused scan
     df.withColumn(out, ElevationExpr.column(df.sparkSession.sparkContext,
       col(xCol).cast("double"), col(yCol).cast("double"), mesh))
@@ -276,7 +276,7 @@ object Elevation {
   * vertical ray through (x, y). The hits share the point's x and y, so
   * the norm reduces to `|z − surfaceZ(x, y)|`; null when the ray misses
   * the mesh footprint (the reference leaves its null fill in place).
-  * Composes the [[ElevationExpr]] codegen kernel with `abs` — one fused
+  * Composes the [[ElevationExpr]] kernel with `abs` — one fused
   * shuffle-free scan, the mesh ships once as a broadcast. */
 object Tridist {
   def apply(df: DataFrame, mesh: TriMesh, out: String = "tridist",

@@ -235,9 +235,6 @@ object QueryShared {
   private[graft] def baseHashSql(s: String): String =
     s"CAST(CAST(concat('0x', substr(md5($s), 1, 15)) AS UBIGINT) % ${ext.Dedup.Prime} AS BIGINT)"
 
-  /** DuckDB replica of [[ext.TextAnalysis.nbQualityScore]] on the
-    * src0/src1 slice label — shared by q99 (the classifier itself) and
-    * the q113/q114 eval operators that sweep/rank its scores. */
   /** Shared analytic-waveform replay for the audio-codec oracles (q178
     * WAV, q183 FLAC): both synthesizers write s(t) = (id*31 + t*7) mod
     * 2048 - 1024, n = ((id mod 5)+1)*80 mono samples at 8 kHz, so the
@@ -259,6 +256,9 @@ object QueryShared {
          round(rms, 6) AS rms
        FROM s ORDER BY id"""
 
+  /** DuckDB replica of [[ext.TextAnalysis.nbQualityScore]] on the
+    * src0/src1 slice label — shared by q99 (the classifier itself) and
+    * the q113/q114 eval operators that sweep/rank its scores. */
   private[graft] lazy val NbScoredSql: String =
     s"""WITH d AS (SELECT doc_id,
              CASE WHEN source IN ('src0', 'src1') THEN 1 ELSE 0 END AS pos,
@@ -288,8 +288,6 @@ object QueryShared {
              coalesce(sc.sw, 0), 6) > 0 THEN 1 ELSE 0 END AS pred
          FROM d LEFT JOIN sc USING (doc_id), nd"""
 
-  /** DuckDB replica of [[ext.TextAnalysis.nbMulticlass]] on the lang
-    * label (no ORDER BY) - shared by q112 and the q119 eval. */
   /** [[NbMulticlassSql]]'s CTE prefix through `sc` (per-(doc, class)
     * scores) — shared with the q173 label-issue oracle. */
   private[graft] lazy val NbMulticlassCtesSql: String =
@@ -321,6 +319,8 @@ object QueryShared {
                 FROM pd CROSS JOIN cl
                 LEFT JOIN s ON s.doc_id = pd.doc_id AND s.cls = cl.cls)"""
 
+  /** DuckDB replica of [[ext.TextAnalysis.nbMulticlass]] on the lang
+    * label (no ORDER BY) - shared by q112 and the q119 eval. */
   private[graft] lazy val NbMulticlassSql: String =
     s"""$NbMulticlassCtesSql,
          r AS (SELECT doc_id, n_tokens, cls, score,

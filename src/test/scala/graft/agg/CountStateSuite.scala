@@ -111,6 +111,26 @@ class CountStateSuite extends AnyFunSuite {
       "a union at the cap is allowed")
   }
 
+  test("NaN is one value in the count state: five NaNs and two numbers fit a cap of 3") {
+    val nan = Double.NaN
+    val aggs = Seq(
+      KsDriftAgg(ref(DoubleType), baseVals, baseCum, 3) ->
+        KsDriftAgg(ref(DoubleType), baseVals, baseCum, 100),
+      RankSumDriftAgg(ref(DoubleType), baseVals, baseCum, 3) ->
+        RankSumDriftAgg(ref(DoubleType), baseVals, baseCum, 100))
+    for ((capped, uncapped) <- aggs) {
+      def run(agg: CountsAgg[Double]) = {
+        val a = feed(agg, 1.0, nan, nan, nan)
+        val b = agg.deserialize(agg.serialize(feed(agg, nan, 2.0, nan)))
+        agg.merge(a, b)
+      }
+      val state = run(capped)
+      assert(state.size == 3 && state.count(_._1.isNaN) == 1, state)
+      assert(state.collectFirst { case (k, c) if k.isNaN => c } == Some(5L))
+      assert(capped.eval(state) == uncapped.eval(run(uncapped)), capped.prettyName)
+    }
+  }
+
   test("golden bytes: [n:int]([key][count:long])* with a double or a [len:int] UTF-8 key") {
     // double key: 1.5 = 3ff8…, −0.25 = bfd0…, 2.0 = 4000…
     val ks = KsDriftAgg(ref(DoubleType), baseVals, baseCum, 10)

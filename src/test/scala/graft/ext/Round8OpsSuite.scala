@@ -94,60 +94,6 @@ class Round8OpsSuite extends AnyFunSuite {
     assert(got == composed)
   }
 
-  test("BigramHashes kernel == composed struct-explode xxhash64 chain") {
-    val texts = Seq("the quick brown fox", "one", "", "a a a", "Mixed CASE 42!")
-    val df = texts.toDF("t")
-    val got = df.select($"t",
-      explode(graft.functions.BigramHashes.column($"t")).as("b"))
-      .select($"t", $"b.w1h", $"b.bh")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1).view.mapValues(_.map(x => (x._2, x._3)).toSeq).toMap
-    val ts = TextAnalysis.wordTokens("t")
-    val composed = df.filter(size(ts) >= 2)
-      .select($"t", explode(transform(sequence(lit(2), size(ts)),
-        g => struct(element_at(ts, g - 1).as("w1"), element_at(ts, g).as("w2"))))
-        .as("b"))
-      .select($"t", xxhash64($"b.w1"), xxhash64($"b.w1", $"b.w2"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1).view.mapValues(_.map(x => (x._2, x._3)).toSeq).toMap
-    assert(got == composed)
-  }
-
-  test("DsirSlots kernel == composed uni+bigram md5-slot chain") {
-    val texts = Seq("The quick brown-fox 42 jumps", "single", "", "!!!",
-      "a b a b a")
-    val df = texts.toDF("t")
-    val buckets = 64
-    val got = df.select(graft.functions.DsirSlots.column($"t", buckets).as("s"))
-      .as[Seq[Int]].collect().toSeq.map(_.sorted)
-    val ts = TextAnalysis.wordTokens("t")
-    val uni = df.select($"t", explode(ts).as("f"))
-    val bi = df.filter(size(ts) >= 2).select($"t",
-      explode(transform(sequence(lit(2), size(ts)), g =>
-        concat(element_at(ts, g - 1), lit(" "), element_at(ts, g)))).as("f"))
-    val composedRows = uni.unionByName(bi)
-      .select($"t", pmod(
-        expr("CAST(conv(substring(md5(f),1,15),16,10) AS BIGINT)"),
-        lit(buckets)).cast("int").as("slot"))
-      .collect().map(r => (r.getString(0), r.getInt(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
-    val composed = texts.map(t => composedRows.getOrElse(t, Seq.empty))
-    assert(got == composed)
-  }
-
-  test("MinMd5Ngram kernel == composed md5/substr formula, edges included") {
-    val texts = Seq("the quick brown fox jumps over the lazy dog",
-      "exactly8", "short", "", "åccénted ünicode tèxt here",
-      "aaaaaaaaaaaaaaaaaaaa")
-    val df = texts.toDF("t")
-    val got = df.select(TextAnalysis.fingerprint("t").as("fp"))
-      .as[String].collect().toSeq
-    val composed = df.select(array_min(transform(
-      sequence(lit(1), greatest(length($"t") - 7, lit(1))),
-      i => md5($"t".substr(i, lit(8))))).as("fp")).as[String].collect().toSeq
-    assert(got == composed)
-  }
-
   // ---- snapshotDiff ------------------------------------------------------
 
   test("incrementalFeatures == full recompute, touching only the delta") {

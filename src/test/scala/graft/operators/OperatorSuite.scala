@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.SparkTest
+import graft.functions.Kernel
 import graft.model.{GridSchema, TriMesh}
 import graft.sources.BlockModelStore
 
@@ -311,10 +312,9 @@ class GeomExpressionsSuite extends AnyFunSuite {
       Elevation(grid, hf))
       .flatMap(_.queryExecution.executedPlan.collect { case p => p.expressions }.flatten)
       .flatMap(_.collect {
-        case e @ (_: MineExpr | _: RegionFlagExpr | _: ElevationExpr) => e
+        case e: Kernel if Set("mine_fraction", "region_flag", "surface_elevation")(e.name) => e
       })
-    assert(exprs.map(_.getClass) ==
-      Seq(classOf[MineExpr], classOf[RegionFlagExpr], classOf[ElevationExpr]))
+    assert(exprs.map(_.prettyName) == Seq("mine_fraction", "region_flag", "surface_elevation"))
     val ser = SparkEnv.get.closureSerializer.newInstance()
     exprs.foreach { e =>
       val bytes = ser.serialize(e).remaining()
